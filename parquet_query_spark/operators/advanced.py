@@ -221,15 +221,15 @@ ORDER BY o_custkey
 )
 def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HAVING — post-aggregation predicate."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_custkey, COUNT(*) AS n_orders, round(SUM(o_totalprice), 2) AS total
-        FROM orders
+        FROM {orders}
         GROUP BY o_custkey
         HAVING COUNT(*) >= 15 AND SUM(o_totalprice) > 3000000
         ORDER BY o_custkey
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -343,16 +343,16 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (beyond ROLLUP/CUBE): four chosen granularities
     in one shuffle; GROUPING() disambiguates real NULL keys from subtotal
     rows — identical SQL both dialects."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT c_mktsegment, n_name,
                GROUPING(c_mktsegment) AS g_seg, GROUPING(n_name) AS g_nat,
                COUNT(*) AS n_customers, round(SUM(c_acctbal), 2) AS total_balance
-        FROM customer JOIN nation ON c_nationkey = n_nationkey
+        FROM {customer} JOIN {nation} ON c_nationkey = n_nationkey
         GROUP BY GROUPING SETS ((c_mktsegment, n_name), (c_mktsegment), (n_name), ())
         ORDER BY g_seg, g_nat, c_mktsegment NULLS FIRST, n_name NULLS FIRST
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 

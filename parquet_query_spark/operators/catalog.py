@@ -9,6 +9,16 @@ Every implemented operator registers here as a :class:`QuerySpec`:
   documents embeddings).  ``None`` marks a genuinely non-SQL-expressible
   operator (the driver then records a weaker rows-only check).
 
+Binding rule: an operator reads its tables as the DataFrames
+:func:`views` returns for ITS ``sf_dir``.  SQL-text operators name them as
+``{table}`` placeholders and call ``spark.sql(text, **views(spark, sf_dir))``;
+PySpark binds each referenced frame under a throwaway name and drops it
+after analysis.  Nothing is registered in the session, so two sf_dirs
+interleave safely on one session and the user's own views are never
+replaced.  The text is a format string, so literal braces in it are
+doubled; where one text serves both engines, the oracle is rendered with
+:func:`bare_names`.
+
 Determinism contract for oracle-checked queries (the driver hash-compares
 values): every floating-point aggregate is rounded; every LIMIT/top-k has a
 total order (unique tie-break key); column names are identical on both sides.
@@ -16,13 +26,15 @@ total order (unique tie-break key); column names are identical on both sides.
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_query_spark.sources.registry import register_testdata_views
+from parquet_query_spark.sources.registry import TESTDATA_TABLES, load_table
 
 
 @dataclass
@@ -69,24 +81,27 @@ def ordered_once(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(*[F.col(k) for k in keys]).orderBy(*keys)
 
 
-_VIEW_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-_ACTIVE_DIR: dict[int, str] = {}
-
-
+@functools.cache
 def views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load + register the driver tables for this sf_dir.
+    """Load the driver tables under ``sf_dir`` as DataFrames, by table name.
 
-    Memoized per (session, dir) — re-registering re-reads 10 parquet footers
-    per query.  SQL-text queries resolve against the session's CURRENT temp
-    views, so switching dirs must re-register even on a cache hit."""
-    key = (id(spark), sf_dir)
-    if key not in _VIEW_CACHE or _ACTIVE_DIR.get(id(spark)) != sf_dir:
-        out = register_testdata_views(spark, sf_dir)
-        if not out:
-            raise FileNotFoundError(f"no driver parquet tables found in {sf_dir!r}")
-        _VIEW_CACHE[key] = out
-        _ACTIVE_DIR[id(spark)] = sf_dir
-    return _VIEW_CACHE[key]
+    No side effect: nothing is registered in the session (see the module's
+    binding rule).  Memoized per (session, dir) — loading re-reads 10
+    parquet footers and may restage a table."""
+    out = {
+        name: load_table(spark, sf_dir, name)
+        for name in TESTDATA_TABLES
+        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet"))
+    }
+    if not out:
+        raise FileNotFoundError(f"no driver parquet tables found in {sf_dir!r}")
+    return out
+
+
+def bare_names(text: str) -> str:
+    """A ``{table}``-placeholder SQL text with the placeholders rendered as
+    the bare table names — the DuckDB oracle's spelling of the same text."""
+    return text.format(**{t: t for t in TESTDATA_TABLES})
 
 
 _LOADED = False

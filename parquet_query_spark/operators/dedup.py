@@ -237,9 +237,10 @@ def _hashed_set(col) -> F.Column:
 # higher-order-function tree on EVERY call — measured 0.157 s to build
 # `banded` vs 0.040 s for one spark.sql() over the identical CTE chain
 # (rows verified identical, including the xxhash64 band keys).  The
-# catalog registers `documents` as a temp view via views(), so the SQL
-# resolves against the caller's sf_dir.  Expressions are the same SQL
-# fragments the column builders use; the physical plan is unchanged.
+# text names the corpus as the `{documents}` placeholder; callers bind
+# their sf_dir's frame with spark.sql(text, **views(spark, sf_dir)).
+# Expressions are the same SQL fragments the column builders use; the
+# physical plan is unchanged.
 
 _SPARK_SHINGLES_SQL = """
 array_distinct(
@@ -254,11 +255,11 @@ array_distinct(
 
 
 def _sh_cte() -> str:
-    """CTEs producing sh(doc_id, shingles) from the documents temp view —
+    """CTEs producing sh(doc_id, shingles) from the bound documents frame —
     tokenization in its own projection (same one-split-per-doc guarantee
     as _with_shingles)."""
     return f"""toksrc AS (
-  SELECT doc_id, split(trim(text), '\\\\s+') AS toks FROM documents
+  SELECT doc_id, split(trim(text), '\\\\s+') AS toks FROM {{documents}}
 ),
 sh AS (
   SELECT doc_id, {_SPARK_SHINGLES_SQL} AS shingles FROM toksrc
@@ -303,15 +304,6 @@ def _band_md5_select() -> str:
     )
 
 
-def _shh_sql() -> str:
-    """documents → hashed int64 shingle sets (the _hashed_set twin)."""
-    return f"""
-WITH {_sh_cte()}
-SELECT doc_id, array_distinct(transform(shingles, x -> xxhash64(x))) AS shingles
-FROM sh
-"""
-
-
 @query(
     "dedup_minhash_signatures",
     oracle=f"""
@@ -341,11 +333,10 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, 4×16-byte bands) tuples shuffle."""
     from parquet_query_spark.operators.catalog import ordered_once
 
-    views(spark, sf_dir)  # registers the documents temp view
     # one spark.sql analysis instead of four chained selects (r13 — see
     # _banded_sql); ordered_once: the global sort's range-sampling pass
     # would otherwise run the whole shingle→md5→minhash chain twice (r13)
-    bands = spark.sql(_banded_sql(_band_md5_select()))
+    bands = spark.sql(_banded_sql(_band_md5_select()), **views(spark, sf_dir))
     return ordered_once(bands, "doc_id")
 
 
@@ -534,9 +525,9 @@ def _lsh_candidate_pairs_with_shingles(
     with both shingle sets re-attached as xxhash64 int64 SETS; the shared
     kernel under the verified-pairs, containment, and cluster operators.
     Built via ONE spark.sql analysis (see _lsh_pair_ctes)."""
-    views(spark, sf_dir)  # registers the documents temp view
     return spark.sql(
-        f"WITH {_lsh_pair_ctes(spark)}\nSELECT doc_a, doc_b, sh_a, sh_b FROM attached"
+        f"WITH {_lsh_pair_ctes(spark)}\nSELECT doc_a, doc_b, sh_a, sh_b FROM attached",
+        **views(spark, sf_dir),
     )
 
 
@@ -555,7 +546,6 @@ def _lsh_verified_pairs(
     That trade is correct — filtering inside the join materializes only
     passing pairs — and codegen-level subexpression elimination dedups the
     repeated subtree within the predicate itself."""
-    views(spark, sf_dir)  # registers the documents temp view
     return spark.sql(
         f"""WITH {_lsh_pair_ctes(spark)},
 scored AS (
@@ -567,7 +557,8 @@ SELECT doc_a, doc_b,
        inter_sz / (size(sh_a) + size(sh_b) - inter_sz) AS jaccard
 FROM scored
 WHERE inter_sz / (size(sh_a) + size(sh_b) - inter_sz)
-      >= CAST({threshold!r} AS DOUBLE)"""
+      >= CAST({threshold!r} AS DOUBLE)""",
+        **views(spark, sf_dir),
     )
 
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_query_spark.operators.catalog import query, views
+from parquet_query_spark.operators.catalog import bare_names, query, views
 
 
 @query(
@@ -24,16 +24,16 @@ ORDER BY p.p_partkey
 def subq_correlated_min_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery (TPC-H Q2 shape) — Catalyst decorrelates
     it into an aggregate + join; never a per-row re-execution."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT p.p_partkey, p.p_brand, round(p.p_retailprice, 2) AS price
-        FROM part p
+        FROM {part} p
         WHERE p.p_retailprice = (
-          SELECT MIN(p2.p_retailprice) FROM part p2 WHERE p2.p_brand = p.p_brand
+          SELECT MIN(p2.p_retailprice) FROM {part} p2 WHERE p2.p_brand = p.p_brand
         )
         ORDER BY p.p_partkey
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -80,16 +80,16 @@ ORDER BY l_orderkey, l_linenumber, measure
 )
 def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT (wide→long) — identical SQL in both dialects."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT l_orderkey, l_linenumber, measure, round(val, 2) AS val
         FROM (
           SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount
-          FROM lineitem WHERE l_orderkey < 100
+          FROM {lineitem} WHERE l_orderkey < 100
         ) UNPIVOT (val FOR measure IN (l_quantity, l_extendedprice, l_discount))
         ORDER BY l_orderkey, l_linenumber, measure
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -109,17 +109,17 @@ ORDER BY t.grade
 def values_inline_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inline VALUES relation joined to a table (B2 family — constant
     relations; broadcast for free)."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT t.grade, COUNT(*) AS n_customers
-        FROM customer
+        FROM {customer}
         JOIN (VALUES ('AUTOMOBILE', 'A'), ('BUILDING', 'B'), ('FURNITURE', 'F'),
                      ('HOUSEHOLD', 'H'), ('MACHINERY', 'M')) AS t(seg, grade)
           ON c_mktsegment = t.seg
         GROUP BY t.grade
         ORDER BY t.grade
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -184,19 +184,19 @@ def lateral_top2_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataF
     Catalyst rewrites the lateral into a ranked window over a single join
     (DomainJoin decorrelation), so it stays one shuffle — not a re-executed
     subquery per outer row."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT n_name, c.c_name, round(c.c_acctbal, 2) AS acctbal
-        FROM nation, LATERAL (
+        FROM {nation}, LATERAL (
           SELECT c_name, c_acctbal
-          FROM customer
+          FROM {customer}
           WHERE c_nationkey = n_nationkey
           ORDER BY c_acctbal DESC, c_name
           LIMIT 2
         ) c
         ORDER BY n_name, acctbal DESC, c_name
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -208,7 +208,7 @@ WITH RECURSIVE months(m) AS (
 )
 SELECT CAST(m AS TIMESTAMP) AS m, COUNT(o_orderkey) AS n_orders
 FROM months
-LEFT JOIN orders
+LEFT JOIN {orders}
   ON year(o_orderdate) * 100 + month(o_orderdate) = year(m) * 100 + month(m)
 GROUP BY m
 ORDER BY m
@@ -217,7 +217,7 @@ ORDER BY m
 
 @query(
     "recursive_cte_month_series",
-    oracle=_RECURSIVE_MONTHS_SQL,
+    oracle=bare_names(_RECURSIVE_MONTHS_SQL),
     tags=("cte", "recursive"),
 )
 def recursive_cte_month_series(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -226,8 +226,7 @@ def recursive_cte_month_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     Identical SQL text on both engines (Spark 4 recursion <-> DuckDB);
     month equality via integer year*100+month since date_trunc return
     types differ across dialects."""
-    views(spark, sf_dir)
-    return spark.sql(_RECURSIVE_MONTHS_SQL)
+    return spark.sql(_RECURSIVE_MONTHS_SQL, **views(spark, sf_dir))
 
 
 _PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]

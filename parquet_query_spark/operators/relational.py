@@ -458,14 +458,14 @@ ORDER BY o_orderkey
 )
 def subq_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery (computed once, broadcast into the predicate)."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_orderkey, round(o_totalprice, 2) AS totalprice
-        FROM orders
-        WHERE o_totalprice > 1.7 * (SELECT AVG(o_totalprice) FROM orders)
+        FROM {orders}
+        WHERE o_totalprice > 1.7 * (SELECT AVG(o_totalprice) FROM {orders})
         ORDER BY o_orderkey
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -483,16 +483,16 @@ ORDER BY o_orderkey
 )
 def subq_in_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN (aggregated subquery) — decorrelated to a semi join by Catalyst."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_orderkey, round(o_totalprice, 2) AS totalprice
-        FROM orders
+        FROM {orders}
         WHERE o_orderkey IN (
-          SELECT l_orderkey FROM lineitem GROUP BY l_orderkey HAVING SUM(l_quantity) > 150
+          SELECT l_orderkey FROM {lineitem} GROUP BY l_orderkey HAVING SUM(l_quantity) > 150
         )
         ORDER BY o_orderkey
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -516,11 +516,10 @@ FROM banded GROUP BY band ORDER BY band
 )
 def cte_ltv_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chained CTEs + CASE banding."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         WITH spend AS (
-          SELECT o_custkey, SUM(o_totalprice) AS total FROM orders GROUP BY o_custkey
+          SELECT o_custkey, SUM(o_totalprice) AS total FROM {orders} GROUP BY o_custkey
         ),
         banded AS (
           SELECT o_custkey,
@@ -531,7 +530,8 @@ def cte_ltv_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT band, COUNT(*) AS n_customers
         FROM banded GROUP BY band ORDER BY band
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -681,14 +681,14 @@ ORDER BY segment
 )
 def groupby_output_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B21 — GROUP BY a SELECT alias (both dialects resolve it)."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT upper(c_mktsegment) AS segment, COUNT(*) AS n
-        FROM customer
+        FROM {customer}
         GROUP BY segment
         ORDER BY segment
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -761,24 +761,24 @@ ORDER BY flag
 def setop_all_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT ALL / EXCEPT ALL (bag semantics — multiplicities preserved
     via the generated row-count window, not a distinct)."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT flag, COUNT(*) AS n FROM (
           SELECT 'intersect_all' AS flag, k FROM (
-            SELECT o_custkey AS k FROM orders WHERE o_orderstatus = 'F'
+            SELECT o_custkey AS k FROM {orders} WHERE o_orderstatus = 'F'
             INTERSECT ALL
-            SELECT o_custkey AS k FROM orders WHERE o_orderpriority = '1-URGENT'
+            SELECT o_custkey AS k FROM {orders} WHERE o_orderpriority = '1-URGENT'
           ) a
           UNION ALL
           SELECT 'except_all' AS flag, k FROM (
-            SELECT o_custkey AS k FROM orders WHERE o_orderstatus = 'F'
+            SELECT o_custkey AS k FROM {orders} WHERE o_orderstatus = 'F'
             EXCEPT ALL
-            SELECT o_custkey AS k FROM orders WHERE o_orderpriority = '1-URGENT'
+            SELECT o_custkey AS k FROM {orders} WHERE o_orderpriority = '1-URGENT'
           ) b
         ) GROUP BY flag
         ORDER BY flag
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -804,7 +804,6 @@ def scalar_string_functions2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second string-function sweep: padding, split_part, reverse, repeat,
     translate, levenshtein, position, left/right — identical names and
     semantics in both dialects."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT p_partkey,
@@ -817,9 +816,10 @@ def scalar_string_functions2(spark: SparkSession, sf_dir: str) -> DataFrame:
                position('#' IN p_brand)                 AS hash_pos,
                left(p_name, 4)                          AS name_l4,
                right(p_name, 4)                         AS name_r4
-        FROM part
+        FROM {part}
         ORDER BY p_partkey
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -852,7 +852,6 @@ def scalar_math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     names in DuckDB (floor/ceil return DOUBLE there, BIGINT here — pinned
     by explicit casts; width_bucket has no DuckDB builtin, so the oracle
     emulates its bucket arithmetic)."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT l_orderkey, l_linenumber,
@@ -868,10 +867,11 @@ def scalar_math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
                greatest(l_discount, l_tax)                  AS rate_hi,
                least(l_discount, l_tax)                     AS rate_lo,
                width_bucket(l_quantity, 0, 50, 5)           AS qty_bucket
-        FROM lineitem
+        FROM {lineitem}
         WHERE l_orderkey < 200
         ORDER BY l_orderkey, l_linenumber
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 

@@ -342,7 +342,6 @@ def dedup_band_tuning_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     1−(1−s^r)^b at representative Jaccard levels, plus the ~(1/b)^(1/r)
     threshold.  This is the table you consult before picking the band
     layout for a corpus-scale dedup run; pure literal compute, no scan."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         WITH cfg AS (

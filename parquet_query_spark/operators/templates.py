@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from parquet_query_spark.operators.catalog import query, views
+from parquet_query_spark.operators.catalog import bare_names, query, views
 
 # anchor chosen inside the data's date range; '30 days before' still has rows
 _T1 = """
@@ -31,7 +31,7 @@ SELECT
   round(SUM(o_totalprice), 2)         AS total_custo,
   MIN(o_orderdate)                    AS periodo_inicio,
   MAX(o_orderdate)                    AS periodo_fim
-FROM orders
+FROM {orders}
 WHERE o_orderdate >= TIMESTAMP '2001-08-01' - INTERVAL '30' DAY
 GROUP BY account_id
 ORDER BY total_custo DESC, account_id
@@ -42,7 +42,7 @@ SELECT
   COALESCE(NULLIF(o_orderpriority, ''), o_orderstatus) AS service_name,
   COUNT(*)                                             AS total_linhas,
   round(SUM(o_totalprice), 2)                          AS total_custo
-FROM orders
+FROM {orders}
 WHERE o_orderdate >= TIMESTAMP '2001-08-01' - INTERVAL '90' DAY
   AND o_orderstatus <> 'P'
 GROUP BY service_name
@@ -55,7 +55,7 @@ SELECT
   CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS mes,
   COUNT(*)                         AS total_linhas,
   round(SUM(o_totalprice), 2)      AS total_custo
-FROM orders
+FROM {orders}
 WHERE o_orderdate >= TIMESTAMP '2001-08-01' - INTERVAL '90' DAY
   AND o_orderstatus <> 'P'
 GROUP BY mes
@@ -68,7 +68,7 @@ SELECT
   COALESCE(NULLIF(o_orderpriority, ''), o_orderstatus) AS service_name,
   CAST(date_trunc('month', o_orderdate) AS TIMESTAMP)  AS mes,
   round(SUM(o_totalprice), 2)                          AS custo
-FROM orders
+FROM {orders}
 WHERE CAST(o_custkey AS STRING) = '42'
   AND o_orderdate BETWEEN TIMESTAMP '1997-01-01' AND TIMESTAMP '1999-12-31'
   AND o_orderstatus <> 'P'
@@ -83,8 +83,8 @@ SELECT
   CAST(CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(18,6))), 2) AS DECIMAL(18,2)) AS DOUBLE) AS sp_commitment,
   CAST(CAST(round(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DECIMAL(18,2)) AS DOUBLE) AS sp_effective_cost,
   CAST(CAST(round(SUM(CAST(CASE WHEN l_returnflag = 'R' THEN l_extendedprice ELSE 0 END AS DECIMAL(18,6))), 2) AS DECIMAL(18,2)) AS DOUBLE) AS sp_usage_save
-FROM orders
-JOIN lineitem ON l_orderkey = o_orderkey
+FROM {orders}
+JOIN {lineitem} ON l_orderkey = o_orderkey
 WHERE o_orderdate >= TIMESTAMP '2001-05-01' - INTERVAL '90' DAY
   AND l_shipdate IS NOT NULL
 GROUP BY account_id, mes
@@ -98,8 +98,8 @@ SELECT
   CAST(CAST(round(SUM(CAST(CASE WHEN l_returnflag = 'A' THEN l_extendedprice ELSE 0 END AS DECIMAL(18,6))), 2) AS DECIMAL(18,2)) AS DOUBLE) AS ri_cost,
   CAST(CAST(round(SUM(CAST(CASE WHEN l_returnflag = 'N' THEN l_extendedprice * (1 - l_discount) ELSE 0 END AS DECIMAL(18,6))), 2) AS DECIMAL(18,2)) AS DOUBLE) AS ri_usage_cost,
   CAST(CAST(round(SUM(CAST(l_tax * l_extendedprice AS DECIMAL(18,6))), 2) AS DECIMAL(18,2)) AS DOUBLE) AS unused_ri
-FROM orders
-JOIN lineitem ON l_orderkey = o_orderkey
+FROM {orders}
+JOIN {lineitem} ON l_orderkey = o_orderkey
 WHERE o_orderdate >= TIMESTAMP '2001-05-01' - INTERVAL '90' DAY
   AND l_returnflag IS NOT NULL
 GROUP BY account_id, mes
@@ -117,10 +117,9 @@ _TEMPLATES = {
 
 
 def _make(name: str, sql: str):
-    @query(name, oracle=sql, tags=("template",))
+    @query(name, oracle=bare_names(sql), tags=("template",))
     def _fn(spark: SparkSession, sf_dir: str, _sql=sql) -> DataFrame:
-        views(spark, sf_dir)
-        return spark.sql(_sql)
+        return spark.sql(_sql, **views(spark, sf_dir))
 
     _fn.__doc__ = f"Reference template query (see module docstring): {name}"
     _fn.__name__ = name

@@ -566,17 +566,17 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst decorrelates into (per-part avg aggregate) joined back to
     lineitem — the aggregate side collapses to one row per part BEFORE the
     join, so the extra pass over lineitem shuffles only (partkey, avg)."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT round(SUM(l_extendedprice) / 7.0, 2) AS avg_yearly
-        FROM lineitem
-        JOIN part ON p_partkey = l_partkey
+        FROM {lineitem}
+        JOIN {part} ON p_partkey = l_partkey
         WHERE p_brand = 'Brand#11'
           AND l_quantity < (
-            SELECT 0.5 * AVG(l2.l_quantity) FROM lineitem l2 WHERE l2.l_partkey = l_partkey
+            SELECT 0.5 * AVG(l2.l_quantity) FROM {lineitem} l2 WHERE l2.l_partkey = l_partkey
           )
-        """
+        """,
+        **views(spark, sf_dir),
     )
 
 
@@ -598,17 +598,17 @@ ORDER BY c_mktsegment
 def q22_dormant_high_balance_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: uncorrelated scalar subquery (broadcast as a
     literal-like single-row side) + NOT EXISTS anti join."""
-    views(spark, sf_dir)
     return spark.sql(
         """
         SELECT c_mktsegment, COUNT(*) AS n_cust, round(SUM(c_acctbal), 2) AS total_bal
-        FROM customer c
+        FROM {customer} c
         WHERE c.c_acctbal > (
-                SELECT AVG(c2.c_acctbal) FROM customer c2 WHERE c2.c_acctbal > 0
+                SELECT AVG(c2.c_acctbal) FROM {customer} c2 WHERE c2.c_acctbal > 0
               )
-          AND NOT EXISTS (SELECT 1 FROM orders o
+          AND NOT EXISTS (SELECT 1 FROM {orders} o
                   WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
         GROUP BY c_mktsegment
         ORDER BY c_mktsegment
-        """
+        """,
+        **views(spark, sf_dir),
     )

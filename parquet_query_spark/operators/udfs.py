@@ -38,10 +38,10 @@ def udf_registered_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     invoked from SQL text — proving the full register->SQL->Arrow->pandas
     round trip.  (For this particular count a builtin expression would be
     faster; the point is the extension surface.)"""
-    views(spark, sf_dir)
     spark.udf.register("token_count", token_count_udf)
     return spark.sql(
-        "SELECT doc_id, token_count(text) AS n_tok FROM documents ORDER BY doc_id"
+        "SELECT doc_id, token_count(text) AS n_tok FROM {documents} ORDER BY doc_id",
+        **views(spark, sf_dir),
     )
 
 

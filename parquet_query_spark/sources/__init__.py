@@ -5,7 +5,6 @@ from parquet_query_spark.sources.registry import (
     load_table,
     reader_for,
     register_folder,
-    register_testdata_views,
     TESTDATA_TABLES,
 )
 
@@ -16,6 +15,5 @@ __all__ = [
     "load_table",
     "reader_for",
     "register_folder",
-    "register_testdata_views",
     "TESTDATA_TABLES",
 ]

@@ -266,20 +266,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c, t in df.dtypes:
         if t == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if os.environ.get("SPARK_GRAFT_NO_STAGE") != "1" and _needs_restage(path):
+    if _needs_restage(path):
         df = _restage(spark, df, sf_dir, name)
     return df
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every driver table as a temp view named by table name."""
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
-            df = load_table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out
 
 
 def view_name_for_path(path: str, taken: set[str] | None = None) -> str:

@@ -36,9 +36,10 @@ def file_example_sql(path: str) -> str:
 
 
 def _builtin_templates() -> dict[str, str]:
+    from parquet_query_spark.operators.catalog import bare_names
     from parquet_query_spark.operators.templates import _TEMPLATES
 
-    return {name: sql.strip() + "\n" for name, sql in _TEMPLATES.items()}
+    return {name: bare_names(sql).strip() + "\n" for name, sql in _TEMPLATES.items()}
 
 
 class TabStore:

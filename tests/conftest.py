@@ -23,6 +23,12 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def views(spark, sf_dir):
-    from parquet_query_spark.sources.registry import register_testdata_views
+    """The driver tables as DataFrames, also registered as session temp
+    views under their bare names for tests that query them in SQL text
+    (the catalog operators themselves register nothing)."""
+    from parquet_query_spark.operators.catalog import views as load_views
 
-    return register_testdata_views(spark, sf_dir)
+    frames = load_views(spark, sf_dir)
+    for name, df in frames.items():
+        df.createOrReplaceTempView(name)
+    return frames

@@ -27,6 +27,7 @@ def test_tab_store_categories_roundtrip(tmp_path):
     name = reloaded.names("templates")["templates"][0]
     sql, cat = reloaded.open(name)
     assert cat == "scripts"
+    assert "FROM orders" in sql and "{" not in sql  # bare names, as a user types them
     assert name in reloaded.names("scripts")["scripts"]
     assert name in reloaded.names("templates")["templates"]
 

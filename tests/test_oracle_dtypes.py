@@ -25,6 +25,7 @@ DOUBLE/FLOAT while Spark declares it integral — the driver canonicalizes
 ``3`` vs ``3.0`` differently, so such a pair can never hash-match.
 """
 
+import functools
 import os
 
 import pytest
@@ -51,15 +52,23 @@ def con():
     c.close()
 
 
-def _described_types(con, sql: str) -> dict[str, str]:
-    rows = con.execute(f"DESCRIBE {sql}").fetchall()
-    return {r[0]: r[1] for r in rows}
+@pytest.fixture(scope="module")
+def described(con):
+    """``DESCRIBE`` each operator's oracle once on the module's connection:
+    name → {column: DuckDB type}."""
+
+    @functools.cache
+    def types(name: str) -> dict[str, str]:
+        rows = con.execute(f"DESCRIBE {CATALOG[name].oracle}").fetchall()
+        return {r[0]: r[1] for r in rows}
+
+    return types
 
 
 @pytest.mark.parametrize("name", ORACLED)
-def test_oracle_declares_no_hugeint(con, name):
+def test_oracle_declares_no_hugeint(described, name):
     """SUM(int) must be CAST to BIGINT in every oracle (plan-level check)."""
-    types = _described_types(con, CATALOG[name].oracle)
+    types = described(name)
     huge = {c: t for c, t in types.items() if "HUGEINT" in t.upper()}
     assert not huge, (
         f"{name}: oracle columns {huge} are HUGEINT — pandas renders these "
@@ -69,7 +78,7 @@ def test_oracle_declares_no_hugeint(con, name):
 
 
 @pytest.mark.parametrize("name", ORACLED)
-def test_oracle_df_keeps_integers_integral(con, name):
+def test_oracle_df_keeps_integers_integral(con, described, name):
     """Integral DuckDB columns must survive the pandas conversion intact.
 
     NULL-bearing integer columns are exempt: pandas promotes those to
@@ -81,7 +90,7 @@ def test_oracle_df_keeps_integers_integral(con, name):
     side — mismatches, and the DESCRIBE test above catches it at the
     source."""
     spec = CATALOG[name]
-    types = _described_types(con, spec.oracle)
+    types = described(name)
     pdf = con.execute(spec.oracle).df()
     bad = {
         c: (types[c], str(pdf[c].dtype))
@@ -97,7 +106,7 @@ def test_oracle_df_keeps_integers_integral(con, name):
     )
 
 
-def test_spark_integral_columns_not_float_in_oracle(spark, con):
+def test_spark_integral_columns_not_float_in_oracle(spark, described):
     """Cross-engine dtype sweep: for every oracled query, a column Spark
     declares integral must not be declared floating by DuckDB (and vice
     versa a float column must not be integral) — ``3`` vs ``3.0``
@@ -115,7 +124,7 @@ def test_spark_integral_columns_not_float_in_oracle(spark, con):
         except Exception as e:  # pragma: no cover - surfaced as a failure
             mismatches[name] = f"schema build failed: {e}"
             continue
-        d_types = _described_types(con, spec.oracle)
+        d_types = described(name)
         for c, st in s_types.items():
             dt = d_types.get(c, "").upper()
             if not dt:

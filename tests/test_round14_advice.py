@@ -82,7 +82,8 @@ def test_state_partitions_adaptive_sizing(spark, monkeypatch):
     monkeypatch.setattr(SO, "_LAST_SOURCE_BYTES", 0)
     assert SO._state_partitions(spark) == cpus          # tiny corpus: full parallelism
     monkeypatch.setattr(SO, "_LAST_SOURCE_BYTES", 9 << 30)
-    assert SO._state_partitions(spark) == max(cpus, 145)  # ~64 MB per partition
+    # ~64 MB per partition, still under the 32*cpus clamp on small boxes
+    assert SO._state_partitions(spark) == min(max(cpus, 145), 32 * cpus)
     monkeypatch.setattr(SO, "_LAST_SOURCE_BYTES", 1 << 50)
     assert SO._state_partitions(spark) == 32 * cpus     # upper clamp
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", "7")

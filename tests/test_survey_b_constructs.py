@@ -10,7 +10,6 @@ driver's sf0.001 tables.
 import pytest
 
 from parquet_query_spark.engine import Engine
-from parquet_query_spark.operators.catalog import views
 from parquet_query_spark.workbench.quoting import spark_identifier
 from parquet_query_spark.workbench.statements import split_statements
 
@@ -23,8 +22,8 @@ def eng(spark):
 
 
 @pytest.fixture(scope="module", autouse=True)
-def _views(spark):
-    views(spark, SF)
+def _views(views):
+    """Bare table names (``FROM region``) resolve to the conftest views."""
 
 
 def one(spark, sql):
