@@ -34,7 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_query_spark.sources.registry import TESTDATA_TABLES, load_table
+from parquet_query_spark.sources.registry import TESTDATA_TABLES, concurrent_reads, load_table
 
 
 @dataclass
@@ -86,16 +86,16 @@ def views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load the driver tables under ``sf_dir`` as DataFrames, by table name.
 
     No side effect: nothing is registered in the session (see the module's
-    binding rule).  Memoized per (session, dir) — loading re-reads 10
-    parquet footers and may restage a table."""
-    out = {
-        name: load_table(spark, sf_dir, name)
-        for name in TESTDATA_TABLES
-        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet"))
-    }
-    if not out:
+    binding rule).  Memoized per (session, dir) — loading runs one
+    schema-inference job per table and may restage a table.  The tables
+    load concurrently, one ``load_table`` call each on the registry's
+    shared pool (``sources.registry.concurrent_reads``), under the
+    caller's job group."""
+    names = [n for n in TESTDATA_TABLES if os.path.exists(os.path.join(sf_dir, f"{n}.parquet"))]
+    if not names:
         raise FileNotFoundError(f"no driver parquet tables found in {sf_dir!r}")
-    return out
+    loads = [functools.partial(load_table, spark, sf_dir, n) for n in names]
+    return dict(zip(names, concurrent_reads(spark, loads)))
 
 
 def bare_names(text: str) -> str:

@@ -5,8 +5,12 @@ the folder import must register the four and skip the decoy, and the union
 view must merge multiple parquet files with schema evolution.
 """
 
+import contextlib
 import json
 import os
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -87,14 +91,14 @@ def test_restage_fixes_fat_row_groups(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from parquet_query_spark.sources.registry import _needs_restage, load_table
+    from parquet_query_spark.sources.registry import _needs_restage, _parquet_footer, load_table
 
     n = 30_000
     tbl = pa.table({"doc_id": list(range(n)), "text": ["word " * 10] * n})
     path = tmp_path / "documents.parquet"
     pq.write_table(tbl, path, row_group_size=n // 3 + 1)  # 3 fat groups
     assert pq.ParquetFile(path).metadata.num_row_groups <= 3
-    assert _needs_restage(str(path))
+    assert _needs_restage(_parquet_footer(str(path)))
     df = load_table(spark, str(tmp_path), "documents")
     assert df.rdd.getNumPartitions() >= 16
     assert df.count() == n
@@ -104,9 +108,136 @@ def test_tiny_tables_not_restaged(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from parquet_query_spark.sources.registry import _needs_restage
+    from parquet_query_spark.sources.registry import _needs_restage, _parquet_footer
 
     tbl = pa.table({"k": [1, 2, 3]})
     path = tmp_path / "region.parquet"
     pq.write_table(tbl, path)
-    assert not _needs_restage(str(path))
+    assert not _needs_restage(_parquet_footer(str(path)))
+
+
+@contextlib.contextmanager
+def job_group(spark, gid):
+    """Run the body under Spark job group ``gid``; yields the list of the
+    group's job ids, filled in on exit."""
+    sc = spark.sparkContext
+    jobs: list[int] = []
+    sc.setJobGroup(gid, gid)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_nanos_parquet_read_once(spark, tmp_path):
+    """A TIMESTAMP(NANOS) file costs one schema-inference job, not a read
+    that is thrown away plus a second one, and reads back as micros."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = 1_700_000_000_123_456_789
+    tbl = pa.table({"ts": pa.array([ns], pa.timestamp("ns")), "k": [1]})
+    pq.write_table(tbl, tmp_path / "ts.parquet", version="2.6")
+    assert str(pq.read_schema(tmp_path / "ts.parquet").field("ts").type) == "timestamp[ns]"
+    with job_group(spark, "pqs-test-nanos-once") as jobs:
+        eng = Engine.open(str(tmp_path), spark=spark)
+    assert len(jobs) == 1
+    df = eng.registry["ts.parquet"]
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert df.selectExpr("unix_micros(ts) AS us").first().us == ns // 1000
+
+
+def test_stage_path_root_initialised_once(monkeypatch, tmp_path):
+    """Concurrent loads share one staging root: the first-use mkdtemp runs
+    once however many threads race to it."""
+    import tempfile
+
+    from parquet_query_spark.sources import registry
+
+    calls = []
+
+    def slow_mkdtemp(prefix=""):
+        calls.append(prefix)
+        time.sleep(0.05)
+        return str(tmp_path / f"root{len(calls)}")
+
+    monkeypatch.setattr(registry, "_staging_root", None)
+    monkeypatch.setattr(tempfile, "mkdtemp", slow_mkdtemp)
+    n = 8
+    barrier = threading.Barrier(n)
+
+    def stage(i):
+        barrier.wait(timeout=60)
+        return registry._stage_path(str(tmp_path / "sf"), f"t{i}")
+
+    with ThreadPoolExecutor(n) as ex:
+        paths = list(ex.map(stage, range(n), timeout=60))
+    assert len(calls) == 1
+    assert {os.path.dirname(os.path.dirname(p)) for p in paths} == {registry._staging_root}
+
+
+def test_colliding_view_names_keep_their_own_rows(spark, tmp_path):
+    """``a/b.parquet`` and ``a_b.parquet`` sanitize to the same view name;
+    each path literal and each registered view still reads its own file."""
+    import pandas as pd
+
+    from parquet_query_spark.sources.registry import assign_view_names
+
+    (tmp_path / "a").mkdir()
+    pd.DataFrame({"id": [1, 2]}).to_parquet(tmp_path / "a" / "b.parquet", index=False)
+    pd.DataFrame({"id": [10, 20, 30]}).to_parquet(tmp_path / "a_b.parquet", index=False)
+    eng = Engine.open(str(tmp_path), table_name="both", spark=spark)
+    names = assign_view_names(f.path for f in collect_files(str(tmp_path)))
+    assert len(set(names.values())) == 2
+    expected = {"a/b.parquet": [["2", "3"]], "a_b.parquet": [["3", "60"]]}
+    for path, rows in expected.items():
+        sql = "SELECT count(*) AS n, sum(id) AS s FROM {}"
+        assert eng.run(sql.format(f"'{path}'")).rows == rows, path
+        assert eng.run(sql.format(names[path])).rows == rows, names[path]
+    assert eng.run("SELECT count(*) AS n FROM both").rows == [["5"]]
+
+
+def test_corrupt_parquet_fails_open(spark, tmp_path):
+    """One unreadable ``.parquet`` among good files makes ``Engine.open``
+    raise (promptly, not by hanging) rather than return a partial registry."""
+    import pandas as pd
+
+    pd.DataFrame({"id": [1]}).to_parquet(tmp_path / "a.parquet", index=False)
+    (tmp_path / "b.parquet").write_bytes(b"PAR1 this is not a parquet file")
+    pd.DataFrame({"id": [2]}).to_parquet(tmp_path / "c.parquet", index=False)
+    with ThreadPoolExecutor(1) as ex:
+        fut = ex.submit(Engine.open, str(tmp_path), "u", spark)
+        with pytest.raises(Exception, match="b.parquet"):
+            fut.result(timeout=300)
+
+
+def test_open_jobs_run_under_callers_job_group(spark, fixture_dir):
+    """Schema-inference jobs launched on the registration pool count under
+    the caller's job group: at least one job per file."""
+    with job_group(spark, "pqs-test-open-group") as jobs:
+        Engine.open(fixture_dir, table_name="unioned", spark=spark)
+    assert len(jobs) >= len(collect_files(fixture_dir))
+
+
+def test_repeated_open_pins_no_new_jvm_threads(spark, fixture_dir):
+    """Registration reuses one shared pool: ten opens add at most the pool's
+    size in py4j-serving JVM threads (one per pinned Python thread).
+    Spark's own cached pools (block-manager-*) grow independently of
+    registration, so the count is of threads running py4j code."""
+    from parquet_query_spark.sources.registry import _POOL_SIZE
+
+    jvm = spark._jvm
+
+    def py4j_threads():
+        stacks = jvm.java.lang.Thread.getAllStackTraces()
+        return sum(
+            any(f.getClassName().startswith("py4j.") for f in stacks.get(t))
+            for t in stacks.keySet().toArray()
+        )
+
+    Engine.open(fixture_dir, table_name="unioned", spark=spark)
+    first = py4j_threads()
+    for _ in range(9):
+        Engine.open(fixture_dir, table_name="unioned", spark=spark)
+    assert py4j_threads() - first <= _POOL_SIZE
