@@ -14,6 +14,7 @@ plus a separate ``count()``, so a 100 TB result never lands on the driver.
 from __future__ import annotations
 
 import re
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.errors import AnalysisException
@@ -43,8 +44,6 @@ _CREATE_TABLE_AS = re.compile(
     r"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+"
     r"(IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[A-Za-z_]\w*)\s+AS\s+(\S[\s\S]*)$"
 )
-# Unique staging-table names for the OR REPLACE snapshot-then-swap path.
-_CTAS_SWAP_SEQ = 0
 from parquet_query_spark.workbench.formatting import format_cell
 from parquet_query_spark.workbench.summarize import (
     summarize,
@@ -369,9 +368,9 @@ class Engine:
                 # then drop + catalog-rename; a failed body never touches
                 # the target.
                 q = f"`{name.replace('`', '``')}`"
-                global _CTAS_SWAP_SEQ
-                _CTAS_SWAP_SEQ += 1
-                tmp = f"__ctas_swap_{_CTAS_SWAP_SEQ}"
+                # a fresh name per statement: a per-process counter would
+                # reuse the warehouse dir a process that died mid-swap left
+                tmp = f"__ctas_swap_{uuid.uuid4().hex}"
                 df.write.saveAsTable(tmp)
                 # Swap via rename-to-backup, NOT drop-then-rename (r12
                 # VERDICT #2): the old DROP+RENAME had a window where a

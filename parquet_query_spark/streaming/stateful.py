@@ -12,8 +12,6 @@ nothing accumulates on the driver).
 from __future__ import annotations
 
 import bisect
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,7 +19,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from parquet_query_spark.operators.catalog import query
-from parquet_query_spark.streaming.streaming_ops import _events_stream
+from parquet_query_spark.streaming.streaming_ops import _events_stream, _run_to_table
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -80,8 +78,6 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    from parquet_query_spark.streaming.streaming_ops import _run_to_table
-
     name = _run_to_table(totals, "stateful", mode="update")
     # last emission per user wins (update mode may emit once per micro-batch)
     from pyspark.sql import Window as W
@@ -109,51 +105,15 @@ ORDER BY event_type
 def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch: the exactly-once custom-sink shape.
 
-    Each micro-batch DataFrame is written transactionally by epoch (here:
-    overwrite-by-epoch into a temp parquet dir keyed on batch id — the same
-    idempotence pattern used for JDBC/object-store sinks)."""
-    import os
-    import shutil
-
-    # fixed scratch path (delete-then-write): repeated runs reuse one
-    # directory instead of leaking a mkdtemp copy per invocation; the
-    # output parquet must outlive this call (the returned DF reads it
-    # lazily), so only the checkpoint is removed eagerly
-    out_dir = os.path.join(tempfile.gettempdir(), "pqs_febatch_epochs")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    stream = _events_stream(spark, sf_dir)
-    counts = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_feb_")
-    from parquet_query_spark.streaming.streaming_ops import (
-        _record_num_batches,
-        _state_partitions,
+    ``_run_to_table``'s sink is this shape: in complete mode each
+    micro-batch overwrites the output directory as a whole, so a replayed
+    batch rewrites its output instead of adding to it — the same
+    idempotence pattern used for JDBC/object-store sinks."""
+    counts = _events_stream(spark, sf_dir).groupBy("event_type").agg(
+        F.count("*").alias("n")
     )
-
-    # same adaptive state-partition sizing as _run_to_table (r14)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
-    try:
-        q = (
-            counts.writeStream.outputMode("complete")
-            .foreachBatch(write_epoch)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        _record_num_batches(q)
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    # read back the last epoch (idempotent overwrite semantics)
-    import glob
-
-    epochs = sorted(glob.glob(f"{out_dir}/epoch=*"), key=lambda p: int(p.rsplit("=", 1)[1]))
-    return spark.read.parquet(epochs[-1]).orderBy("event_type")
+    name = _run_to_table(counts, "feb")
+    return spark.table(name).orderBy("event_type")
 
 
 _EWMA_TAPS = 16
@@ -336,8 +296,6 @@ def streaming_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the smoothed value continuing the sequence; draining the static file
     in one batch therefore reproduces the batch operator exactly, which is
     the oracle."""
-    from parquet_query_spark.streaming.streaming_ops import _run_to_table
-
     stream = _events_stream(spark, sf_dir)
     bars = (
         stream.select("event_type", "ts", "value")
@@ -493,8 +451,6 @@ def streaming_bot_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     burst while it is happening instead of in tomorrow's batch.  The
     pure-integer CV inequality means the drained single-batch run is
     bit-identical to the batch operator, which is the oracle."""
-    from parquet_query_spark.streaming.streaming_ops import _run_to_table
-
     stream = _events_stream(spark, sf_dir)
     flags = (
         # microsecond conversion stays JVM-side: the state fn runs once

@@ -14,11 +14,15 @@ On a real cluster the same code points at Kafka + a checkpoint location.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from parquet_query_spark.operators.catalog import query
 from parquet_query_spark.sources.registry import load_table
@@ -35,21 +39,16 @@ _STREAM_READ_OPTIONS: dict[str, str] = {}
 # processed — lets tests assert state actually crossed a batch boundary.
 LAST_NUM_BATCHES: int = 0
 
-# Files-sink output dirs created by _run_to_table — removed at interpreter
-# exit (the temp views read them lazily, so they must outlive the drive;
-# without this every files-sink invocation leaked a parquet dir, ADVICE
-# r12).
+# Sink output dirs created by _run_to_table — removed at interpreter exit
+# (the temp views read them lazily, so they must outlive the drive;
+# without this every drive leaked a parquet dir, ADVICE r12).
 _SINK_DIRS: list[str] = []
 
 
 def _cleanup_sink_dirs() -> None:
-    import shutil
-
     while _SINK_DIRS:
         shutil.rmtree(_SINK_DIRS.pop(), ignore_errors=True)
 
-
-import atexit  # noqa: E402
 
 atexit.register(_cleanup_sink_dirs)
 
@@ -74,8 +73,6 @@ def _file_stream(spark: SparkSession, sf_dir: str, filename: str) -> DataFrame:
     files — with ``maxFilesPerTrigger=1`` the parts arrive one micro-batch
     at a time in modification-time order, which is how the multi-batch
     tests drive order-sensitive state across batch boundaries."""
-    import os
-
     global _LAST_SOURCE_BYTES
     path = f"{sf_dir}/{filename}"
     try:
@@ -112,14 +109,7 @@ def _state_partitions(spark: SparkSession) -> int:
     key cardinality is bounded by rows, and rows track bytes for a fixed
     schema — clamped to [cores, 32×cores] so tiny corpora keep full
     parallelism and huge ones stay within sane instance counts per box
-    (a cluster deployment scales the clamp with its core count).
-    ``SPARK_GRAFT_STREAM_STATE_PARTS`` overrides, for rehearsals pinning
-    a uniform config across tiers."""
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-    if env:
-        return int(env)
+    (a cluster deployment scales the clamp with its core count)."""
     cpus = spark.sparkContext.defaultParallelism
     by_bytes = _LAST_SOURCE_BYTES // (64 << 20) + 1
     return int(max(cpus, min(32 * cpus, by_bytes)))
@@ -139,127 +129,79 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_to_table(result: DataFrame, name_prefix: str, mode: str = "complete") -> str:
-    """Drive the streaming query over the static file to completion.
+    """Drive the streaming query over the static source to completion and
+    register its output as the temp view whose name is returned.
 
-    The checkpoint directory is removed after the query stops — the
-    memory-sink table holds the results, and leaving one ckpt dir per
-    invocation leaks disk across repeated bench/correctness runs.
+    This is the one streaming drive, and it has one sink: foreachBatch
+    into parquet files.  Emitted rows never gather on the driver, so the
+    sink holds up at scale; the memory sink it replaced shipped >1 GB of
+    update-mode task results into ``spark.driver.maxResultSize`` at the
+    r12 rehearsal's 512× tier, and this sink halved the 64× wall
+    (28.2 → 12.7 s, BASELINE.md r12).  At sf0.01 it costs ~0.1–0.2 s per
+    drive over the memory sink (4-vCPU VM, local[4], warm session, median
+    of 8 drives per process, two processes per side: 1.13–1.29 vs
+    0.98–1.08 s for ``streaming_tumbling_counts``, 1.46–1.60 vs
+    1.36–1.43 s for ``streaming_stateful_user_totals``).
 
-    Sink selection (r12): the default memory sink materializes every
-    emitted row ON THE DRIVER — the right harness for oracle-sized runs,
-    but a scaling wall, not an engine property: at the key-cardinality
-    rehearsal's 512x tier session_window's update stream shipped >1 GB of
-    task results into spark.driver.maxResultSize.  Set
-    ``SPARK_GRAFT_STREAM_SINK=files`` to route emissions through
-    foreachBatch into parquet instead (append for update mode, overwrite
-    for complete — per-batch full results would duplicate under append),
-    registered as a temp view over the files: the production shape, rows
-    never gather on the driver.  Result-identical for single-batch drives
-    and pinned against the memory sink in tests."""
-    import os
-    import shutil
+    Complete mode re-emits the full result every batch, so each batch
+    overwrites the whole directory.  Update and append emissions are
+    per-batch deltas, so each batch overwrites its own
+    ``pqs_sink_batch=<id>`` directory and a checkpoint-recovery replay of
+    a batch rewrites its output instead of adding rows twice.  The key is
+    obscure so no result column collides with the partition-discovery
+    column, and has no leading underscore, because Spark's path filter
+    hides such directories.  The output is read back with the result's
+    known schema (``_read_sink``).
 
+    The query name is unique per drive (progress listeners key drives by
+    it).  The checkpoint is removed and the query stopped whether or not
+    the drive fails; the output directory outlives the drive, because the
+    view reads it lazily, and is removed at interpreter exit."""
+    global LAST_NUM_BATCHES
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
+    session = result.sparkSession
+    schema = result.schema
+    out_dir = tempfile.mkdtemp(prefix=f"sink_{name}_")
+    _SINK_DIRS.append(out_dir)
+
+    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        target = out_dir
+        if mode != "complete":
+            target = os.path.join(out_dir, f"pqs_sink_batch={batch_id}")
+        batch_df.write.mode("overwrite").parquet(target)
+
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     # Adaptive state partitioning (r14): the count is frozen into the new
     # checkpoint at first batch, so set it just for this drive and restore
     # after — batch queries in the same session keep the session setting.
-    session = result.sparkSession
     prev_parts = session.conf.get("spark.sql.shuffle.partitions")
     session.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(session)))
     try:
-        if os.environ.get("SPARK_GRAFT_STREAM_SINK", "memory") == "files":
-            spark = session
-            schema = result.schema
-            out_dir = tempfile.mkdtemp(prefix=f"sink_{name}_")
-            # The temp view reads these files lazily, so the dir can't be
-            # deleted here — register it for removal at interpreter exit
-            # instead of leaking one parquet dir per invocation (ADVICE r12).
-            _SINK_DIRS.append(out_dir)
-
-            def _write_batch(batch_df, batch_id):
-                if mode == "complete":
-                    # complete mode re-emits the full result every batch —
-                    # whole-dir overwrite is naturally replay-idempotent
-                    batch_df.write.mode("overwrite").parquet(out_dir)
-                else:
-                    # update/append emissions are per-batch deltas: key each
-                    # batch to its own pqs_sink_batch=<id> partition dir and
-                    # OVERWRITE it, so a checkpoint-recovery replay of a
-                    # micro-batch rewrites its own output instead of
-                    # appending duplicate rows (ADVICE r12 — foreachBatch
-                    # idempotency contract).  The dir key is deliberately
-                    # obscure so a result column can't collide with the
-                    # partition-discovery column (ADVICE r13; NOT a leading
-                    # underscore — Spark's path filter hides those dirs).
-                    batch_df.write.mode("overwrite").parquet(
-                        os.path.join(out_dir, f"pqs_sink_batch={batch_id}")
-                    )
-
-            q = (
-                result.writeStream.outputMode(mode)
-                .foreachBatch(_write_batch)
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.processAllAvailable()
-            _record_num_batches(q)
-            q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
-            if not any(
-                f.endswith(".parquet")
-                for _, _, files in os.walk(out_dir)
-                for f in files
-            ):
-                # Empty-output fallback goes into its OWN partition dir in
-                # the per-batch modes: flat files mixed with
-                # pqs_sink_batch=<id> dirs (possible when a micro-batch
-                # wrote only _SUCCESS) would fail partition discovery with
-                # 'Conflicting directory structures' (ADVICE r13).
-                target = (
-                    out_dir
-                    if mode == "complete"
-                    else os.path.join(out_dir, "pqs_sink_batch=-1")
-                )
-                spark.createDataFrame([], schema).write.mode("overwrite").parquet(target)
-            # select() drops the pqs_sink_batch=<id> discovery column when
-            # present, so the view schema is identical in both modes (and
-            # to the memory sink, which the row-identity tests pin).
-            spark.read.parquet(out_dir).select(
-                *[f.name for f in schema.fields]
-            ).createOrReplaceTempView(name)
-            return name
         q = (
             result.writeStream.outputMode(mode)
-            .format("memory")
+            .foreachBatch(_write_batch)
             .queryName(name)
             .option("checkpointLocation", ckpt)
             .start()
         )
-        q.processAllAvailable()
-        _record_num_batches(q)
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-        return name
+        try:
+            q.processAllAvailable()
+            LAST_NUM_BATCHES = sum(1 for p in q.recentProgress if p.numInputRows > 0)
+        finally:
+            q.stop()
     finally:
         session.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    _read_sink(session, schema, out_dir).createOrReplaceTempView(name)
+    return name
 
 
-def _record_num_batches(q) -> None:
-    """Set LAST_NUM_BATCHES from a drained query's progress — every
-    streaming drive (including the custom-sink ops that don't go through
-    _run_to_table) records it, so the multi-batch tests' boundary
-    assertion never reads a stale value from a previous op."""
-
-    def _rows(p):  # dict in some PySpark versions, object in others
-        try:
-            return p["numInputRows"]
-        except TypeError:
-            return getattr(p, "numInputRows", 0)
-
-    global LAST_NUM_BATCHES
-    LAST_NUM_BATCHES = sum(1 for p in q.recentProgress if _rows(p) > 0)
+def _read_sink(spark: SparkSession, schema: StructType, out_dir: str) -> DataFrame:
+    """``_run_to_table``'s output directory as a DataFrame of ``schema``:
+    no inference job, an empty directory (or batch directories holding
+    only ``_SUCCESS``) reads as no rows, and the select drops the
+    ``pqs_sink_batch`` discovery column."""
+    return spark.read.schema(schema).parquet(out_dir).select(*schema.names)
 
 
 @query(

@@ -3,13 +3,10 @@
 1. CTAS OR REPLACE swaps via rename-to-backup: a RENAME failure after the
    target was moved aside restores the original instead of losing both
    copies (r12 VERDICT #2).
-2. Files-sink micro-batches write to per-batch dirs with overwrite, so a
-   checkpoint-recovery replay of a batch is idempotent (ADVICE r12), and
-   sink dirs are tracked for removal at interpreter exit (ADVICE r12).
-3. _km_assign_np centroid broadcasts are tracked and unpersisted when
+2. _km_assign_np centroid broadcasts are tracked and unpersisted when
    superseded — the Lloyd loop no longer accumulates one K×dim broadcast
    per iteration per catalog run (ADVICE r12).
-4. A zero-norm (degenerate) centroid loses the scan-side cell argmax
+3. A zero-norm (degenerate) centroid loses the scan-side cell argmax
    (NULL cosine coalesced to -1) instead of winning it via NULL-first
    struct sort (ADVICE r12).
 """
@@ -78,52 +75,35 @@ def test_ctas_or_replace_still_swaps_cleanly(engine):
     engine.exec(f"DROP TABLE {n}")
 
 
-# ── 2. files sink: per-batch overwrite is replay-idempotent ──────────────
-
-
-def test_files_sink_batch_replay_is_idempotent(spark, tmp_path):
-    """Re-running a micro-batch write with the same batch_id must not
-    duplicate rows — the foreachBatch writer owns a batch=<id> dir and
-    overwrites it wholesale (the contract checkpoint recovery assumes)."""
+def test_ctas_or_replace_ignores_stale_staging_dirs(engine):
+    """A process that died mid-swap leaves ``__ctas_swap_<n>`` directories
+    in the warehouse.  Staging names must not be derived from a counter
+    that restarts in every process, or the next OR REPLACE fails with
+    LOCATION_ALREADY_EXISTS and the target keeps its old rows."""
     import os
+    import shutil
+    from urllib.parse import urlparse
 
-    from parquet_query_spark.streaming import streaming_ops as so
-
-    out_dir = str(tmp_path / "sink")
-    os.makedirs(out_dir)
-
-    # reproduce the update-mode branch of _write_batch
-    def write_batch(batch_df, batch_id):
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
-
-    df = spark.range(5).withColumnRenamed("id", "v")
-    write_batch(df, 0)
-    write_batch(df, 0)  # replay of the SAME batch id
-    write_batch(df, 1)
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 10  # 5 (batch 0, once) + 5 (batch 1) — no dupes
-    # _run_to_table drops the discovery column via select(schema names)
-    assert sorted(got.select("v").columns) == ["v"]
-    # and the sink-dir registry exists for exit-time cleanup
-    assert isinstance(so._SINK_DIRS, list)
+    warehouse = urlparse(engine.spark.conf.get("spark.sql.warehouse.dir")).path
+    # the names such a counter gives a process's first 200 swaps
+    stale = [os.path.join(warehouse, f"__ctas_swap_{i}") for i in range(1, 201)]
+    stale = [d for d in stale if not os.path.exists(d)]  # remove only ours
+    n = "__r13_swapstale"
+    engine.exec(f"DROP TABLE IF EXISTS {n}")
+    try:
+        for d in stale:  # Spark only refuses a non-empty location
+            os.makedirs(d, exist_ok=True)
+            open(os.path.join(d, "part-00000.parquet"), "wb").close()
+        engine.sql(f"CREATE TABLE {n} AS SELECT 1 AS x")
+        engine.sql(f"CREATE OR REPLACE TABLE {n} AS SELECT 2 AS x")
+        assert [r[0] for r in engine.sql(f"SELECT x FROM {n}").collect()] == [2]
+    finally:
+        for d in stale:
+            shutil.rmtree(d, ignore_errors=True)
+        engine.exec(f"DROP TABLE IF EXISTS {n}")
 
 
-def test_files_sink_registers_dirs_for_cleanup(spark, monkeypatch):
-    import os
-
-    from parquet_query_spark.operators.catalog import load_all
-    from parquet_query_spark.streaming import streaming_ops as so
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SINK", "files")
-    before = len(so._SINK_DIRS)
-    load_all()["streaming_tumbling_counts"].fn(spark, "/root/testdata/sf0.001")
-    assert len(so._SINK_DIRS) == before + 1
-    assert os.path.isdir(so._SINK_DIRS[-1])
-
-
-# ── 3. centroid broadcasts are released when superseded ─────────────────
+# ── 2. centroid broadcasts are released when superseded ─────────────────
 
 
 def test_km_broadcast_pool_bounded(spark):
@@ -146,7 +126,7 @@ def test_km_broadcast_pool_bounded(spark):
         S._KM_SMALL_N = orig
 
 
-# ── 4. degenerate centroid loses the cell argmax ─────────────────────────
+# ── 3. degenerate centroid loses the cell argmax ─────────────────────────
 
 
 def test_assign_cells_degenerate_centroid_loses(spark):

@@ -73,44 +73,6 @@ def test_km_k_eff_is_capped():
     assert S._KM_MAX_K * (S._DIM + 2) * 8 < (1 << 30)
 
 
-def test_state_partitions_adaptive_sizing(spark, monkeypatch):
-    """VERDICT r13 #5: streaming state partitions size from source bytes,
-    clamped to [cores, 32*cores], env knob wins."""
-    from parquet_query_spark.streaming import streaming_ops as SO
-
-    cpus = spark.sparkContext.defaultParallelism
-    monkeypatch.setattr(SO, "_LAST_SOURCE_BYTES", 0)
-    assert SO._state_partitions(spark) == cpus          # tiny corpus: full parallelism
-    monkeypatch.setattr(SO, "_LAST_SOURCE_BYTES", 9 << 30)
-    # ~64 MB per partition, still under the 32*cpus clamp on small boxes
-    assert SO._state_partitions(spark) == min(max(cpus, 145), 32 * cpus)
-    monkeypatch.setattr(SO, "_LAST_SOURCE_BYTES", 1 << 50)
-    assert SO._state_partitions(spark) == 32 * cpus     # upper clamp
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", "7")
-    assert SO._state_partitions(spark) == 7             # override wins
-
-
-def test_files_sink_empty_fallback_coexists_with_batch_dirs(spark, tmp_path, monkeypatch):
-    """ADVICE r13: the empty-output fallback must not mix flat parquet
-    with per-batch partition dirs (partition discovery would fail with
-    'Conflicting directory structures')."""
-    import os
-
-    from pyspark.sql import types as T
-
-    out_dir = str(tmp_path / "sink")
-    schema = T.StructType([T.StructField("k", T.LongType())])
-    # simulate a replayed micro-batch that left only a batch dir with no rows
-    os.makedirs(os.path.join(out_dir, "pqs_sink_batch=0"))
-    spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "pqs_sink_batch=-1")
-    )
-    # discovery over the mixed dirs must succeed and select() must drop
-    # the partition column, as _run_to_table does
-    got = spark.read.parquet(out_dir).select("k")
-    assert got.collect() == []
-
-
 def test_zero_norm_document_assigns_lowest_label(spark):
     """ADVICE r13, adjudicated: a zero-norm DOCUMENT has undefined cosine
     against every centroid, so the assignment degenerates to the lowest

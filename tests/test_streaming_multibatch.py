@@ -176,16 +176,3 @@ def test_ewma_late_old_hour_sorted_insert(spark, tmp_path):
     report = compare(spark, root, out, spec.oracle)
     assert streaming_ops.LAST_NUM_BATCHES >= 2
     assert report["match"], report
-
-
-@pytest.mark.parametrize("op", ["streaming_session_windows", "streaming_bot_cadence"])
-def test_files_sink_matches_memory_sink(spark, op, monkeypatch):
-    """SPARK_GRAFT_STREAM_SINK=files (r12: foreachBatch -> parquet, the
-    production sink shape that keeps emitted rows off the driver) must be
-    row-identical to the default memory sink — one update-mode op per
-    stateful family, sf0.001 single-batch drive."""
-    spec = CATALOG[op]
-    mem = {tuple(r) for r in spec.fn(spark, SF_SRC).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SINK", "files")
-    files = {tuple(r) for r in spec.fn(spark, SF_SRC).collect()}
-    assert files == mem
