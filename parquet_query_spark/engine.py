@@ -13,15 +13,23 @@ plus a separate ``count()``, so a 100 TB result never lands on the driver.
 
 from __future__ import annotations
 
+import hashlib
+import os
 import re
 import uuid
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from parquet_query_spark.session import get_spark
-from parquet_query_spark.sources.registry import register_folder
+from parquet_query_spark.sources.registry import (
+    parquet_glob,
+    read_parquet,
+    reader_for,
+    register_folder,
+)
 from parquet_query_spark.workbench.csv_sink import export_csv, write_csv_distributed
 from parquet_query_spark.workbench.dialect import (
     _code_mask,
@@ -178,6 +186,8 @@ class Engine:
         # CREATE MACRO session objects (workbench/macros.py)
         self.macros: dict = {}
         self.prepared: dict = {}
+        # path-literal scan views (_path_view), by the files they cover
+        self._path_views: dict[tuple, str] = {}
 
     @classmethod
     def open(
@@ -190,6 +200,51 @@ class Engine:
         eng.registry = register_folder(eng.spark, folder, table_name)
         eng.table_name = table_name
         return eng
+
+    def _path_view(self, abs_path: str, fmt: str) -> str | None:
+        """The temp view a path literal that names no registered file reads
+        through, or None to keep Spark's own ``format.`path``` scan.
+
+        A parquet literal (a file or a ``*``/``?`` glob) reads its files
+        with their footer schemas; a csv/json file reads with DuckDB-style
+        sniffed options (header, delimiter, json array form), which a bare
+        ``csv.`path``` scan lacks.  The view is registered once per distinct
+        file set — keyed by each file's (path, mtime_ns, size), so a
+        rewritten or added file gets a new view — and cached on this
+        engine, so a repeated statement, and each fallback variant of it,
+        pays no schema inference.  The name is a digest of that key: two
+        engines on one session register the same files under the same name
+        and never each other's."""
+        if fmt == "parquet":
+            files = parquet_glob(abs_path)
+        else:
+            files = [abs_path] if os.path.isfile(abs_path) else None
+        if not files:
+            return None
+
+        def stamp(path: str) -> tuple[str, int, int]:
+            st = os.stat(path)
+            return path, st.st_mtime_ns, st.st_size
+
+        try:
+            key = (fmt, *map(stamp, files))
+        except OSError:  # removed since it was listed
+            return None
+        view = self._path_views.get(key)
+        if view is None:
+            view = "__path_scan_" + hashlib.sha1(repr(key).encode()).hexdigest()[:16]
+            if fmt != "parquet":
+                df = reader_for(self.spark, abs_path, sniff=True)
+            else:
+                try:
+                    df = read_parquet(self.spark, files)
+                except Py4JJavaError:
+                    # an unreadable footer, incompatible files: Spark's
+                    # own scan reports it, as it always has
+                    return None
+            df.createOrReplaceTempView(view)
+            self._path_views[key] = view
+        return view
 
     # A7 — materializing execute
     def _order_by_all_tail(self, statement: str) -> DataFrame | None:
@@ -489,7 +544,7 @@ class Engine:
         primary = rewrite_duckdb_dialect(statement)
         try:
             return self.spark.sql(
-                rewrite_path_tables(primary, self.root, registered, self.spark)
+                rewrite_path_tables(primary, self.root, registered, self._path_view)
             )
         except AnalysisException:
             # QUALIFY has two valid shapes (alias-visible vs base-column-
@@ -499,7 +554,7 @@ class Engine:
             for alt in rewrite_duckdb_dialect_fallbacks(statement):
                 try:
                     return self.spark.sql(
-                        rewrite_path_tables(alt, self.root, registered, self.spark)
+                        rewrite_path_tables(alt, self.root, registered, self._path_view)
                     )
                 except AnalysisException:
                     pass

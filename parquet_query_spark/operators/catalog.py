@@ -86,11 +86,12 @@ def views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load the driver tables under ``sf_dir`` as DataFrames, by table name.
 
     No side effect: nothing is registered in the session (see the module's
-    binding rule).  Memoized per (session, dir) — loading runs one
-    schema-inference job per table and may restage a table.  The tables
-    load concurrently, one ``load_table`` call each on the registry's
-    shared pool (``sources.registry.concurrent_reads``), under the
-    caller's job group."""
+    binding rule).  Memoized per (session, dir) — loading reads every
+    table's parquet footers on the driver (no schema-inference job) and
+    may restage a table, which writes a copy.  The tables load
+    concurrently, one ``load_table`` call each on the registry's shared
+    pool (``sources.registry.concurrent_reads``), under the caller's job
+    group."""
     names = [n for n in TESTDATA_TABLES if os.path.exists(os.path.join(sf_dir, f"{n}.parquet"))]
     if not names:
         raise FileNotFoundError(f"no driver parquet tables found in {sf_dir!r}")

@@ -16,35 +16,51 @@ Reference behavior being re-expressed (see SURVEY.md §2.A):
   ``UNION ALL`` plan — a single FileScan keeps partition planning and
   pushdown intact at 100k-file scale.
 
-Concurrency rule.  Building a DataFrame over a file runs one Spark
-schema-inference job per file (two per CSV, one more for the union), and
-each job pays 70-90 ms of scheduling latency even on a warm context.  The
-jobs are independent, so ``register_folder`` and ``catalog.views`` run them
+Schemas and concurrency.  A parquet file's schema comes from its footer,
+read on the driver and converted by Spark's own code
+(``ParquetFileFormat.readSchemaFromFooter`` with a
+``ParquetToSparkSchemaConverter`` built from the session's SQLConf — what
+Spark's schema-inference job runs on an executor), and the file is read
+with ``spark.read.schema(s)``: parquet registration launches no job.  CSV
+and JSON types depend on the data, so building a DataFrame over one still
+runs Spark's schema-inference job (two per CSV), and each job pays 70-90
+ms of scheduling latency even on a warm context.  The reads are
+independent, so ``register_folder`` and ``catalog.views`` run them
 concurrently through :func:`concurrent_reads` on ONE process-wide pool
-(``_POOL``).  Never create a pool per call: in pinned-thread mode every new
-Python thread opens its own py4j connection, served by its own JVM thread,
-so a pool per call pays up to 16 thread starts and connections on every
-registration, while the shared pool opens them once and keeps the JVM
-thread count bounded.  Pool tasks must not submit to the pool themselves —
-a task waiting on the pool it runs on can deadlock it.  Temp-view
-registration stays on the calling thread, in file order.
+(``_POOL``); parquet reads go there too, as their footer reads and
+analysis are py4j round trips that overlap.  Never create a pool per
+call: in pinned-thread mode every new Python thread opens its own py4j
+connection, served by its own JVM thread, so a pool per call pays up to
+16 thread starts and connections on every registration, while the
+shared pool opens them once and keeps the JVM thread count bounded.  Pool
+tasks must not submit to the pool themselves — a task waiting on the
+pool it runs on can deadlock it.  Temp-view registration stays on the
+calling thread, in file order.
 """
 
 from __future__ import annotations
 
 import functools
+import glob
+import json
 import os
+import re
 import tempfile
 import threading
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from types import SimpleNamespace
+from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
 SUPPORTED_SUFFIXES = (".parquet", ".csv", ".json", ".ndjson")
+
+T = TypeVar("T")
 
 #: the driver's synthetic tables (TESTDATA.md)
 TESTDATA_TABLES = (
@@ -61,11 +77,12 @@ TESTDATA_TABLES = (
 )
 
 
-#: Inference jobs are latency-bound, not CPU-bound: each is one tiny task
-#: behind 70-90 ms of job scheduling, so overlap pays beyond the core count,
-#: and more so on a cluster, where there are more executors to run the tasks
-#: and more files.  Warm registration of a 16-file folder + union on
-#: local[4] (4 vCPU): 1.47-1.76 s in sequence, 0.57-0.75 s at 4 threads,
+#: Inference jobs (CSV/JSON) are latency-bound, not CPU-bound: each is one
+#: tiny task behind 70-90 ms of job scheduling, so overlap pays beyond the
+#: core count, and more so on a cluster, where there are more executors to
+#: run the tasks and more files.  Warm registration of a 16-file folder +
+#: union on local[4] (4 vCPU), when every parquet file still ran an
+#: inference job: 1.47-1.76 s in sequence, 0.57-0.75 s at 4 threads,
 #: 0.55-0.62 s at 8, 0.56-0.61 s at 16.  16 is a fixed cap, not a tuning
 #: knob: it bounds the JVM threads the pool pins and the jobs one
 #: registration puts in front of the scheduler at once.
@@ -73,7 +90,7 @@ _POOL_SIZE = 16
 _POOL = ThreadPoolExecutor(max_workers=_POOL_SIZE, thread_name_prefix="pqs-source-read")
 
 
-def concurrent_reads(spark: SparkSession, reads: list[Callable[[], DataFrame]]) -> list[DataFrame]:
+def concurrent_reads(spark: SparkSession, reads: list[Callable[[], T]]) -> list[T]:
     """Call each zero-argument callable in ``reads`` on the shared pool and
     return the results in order; the first failing read (in order) raises.
 
@@ -168,7 +185,7 @@ def reader_for(spark: SparkSession, path: str, sniff: bool = False):
     """
     lower = path.lower()
     if lower.endswith(".parquet"):
-        return spark.read.parquet(path)
+        return read_parquet(spark, [path])
     if lower.endswith(".csv"):
         # multiLine + doubled-quote escape: RFC-4180 embedded newlines parse
         # correctly (DuckDB parity).  Note: multiLine makes a CSV file
@@ -198,26 +215,85 @@ def reader_for(spark: SparkSession, path: str, sniff: bool = False):
     raise ValueError(f"unsupported source format: {path}")
 
 
-def _parquet_footer(abs_path: str):
-    """The file's footer metadata (schema and row groups), read once with
-    pyarrow; None when pyarrow cannot read it (the Spark read then reports
-    the error)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    try:
-        with pq.ParquetFile(abs_path) as pf:
-            return pf.metadata
-    except (OSError, pa.ArrowException):
-        return None
+#: A top-level TIMESTAMP(NANOS) column in the text of a parquet
+#: ``MessageType`` (top-level fields are the lines indented two spaces).
+_NANOS_FIELD = re.compile(
+    r"^  \w+ int64 (.+) \(TIMESTAMP\(NANOS,(?:true|false)\)\)(?: = \d+)?;$", re.M
+)
 
 
-def _nanos_ts_columns(footer) -> list[str]:
-    """Columns stored as Parquet TIMESTAMP(NANOS)."""
-    if footer is None:
-        return []
-    schema = footer.schema.to_arrow_schema()
-    return [name for name, typ in zip(schema.names, schema.types) if str(typ) == "timestamp[ns]"]
+@functools.cache
+def _jvm_api(jvm) -> SimpleNamespace:
+    """The JVM entry points the footer step calls, looked up once per
+    gateway: every py4j package or class hop is a reflection round trip,
+    ~35 per file uncached.  Measured on the 13-file workbench folder
+    (local[4], 4 vCPU, warm): pooled footer reads 88 ms → 27 ms,
+    ``Engine.open`` median 0.381 s → 0.343 s over 16 alternating opens."""
+    spark_parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    return SimpleNamespace(
+        Path=jvm.org.apache.hadoop.fs.Path,
+        Footer=jvm.org.apache.parquet.hadoop.Footer,
+        read_footer=jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter,
+        NO_FILTER=jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER,
+        Converter=spark_parquet.ParquetToSparkSchemaConverter,
+        schema_from_footer=spark_parquet.ParquetFileFormat.readSchemaFromFooter,
+    )
+
+
+@dataclass(frozen=True)
+class ParquetFooter:
+    """One parquet file's footer as the driver reads it."""
+
+    path: str
+    schema: Any  # JVM StructType: Spark's schema for the file
+    nanos: tuple[str, ...]  # top-level TIMESTAMP(NANOS) columns
+    meta: Any  # JVM ParquetMetadata (row groups)
+
+
+def _parquet_footer(spark: SparkSession, abs_path: str) -> ParquetFooter:
+    """Read one file's footer on the driver and convert its schema exactly
+    as Spark's schema-inference job does on an executor: the Spark row
+    metadata key when the file carries one, else the parquet schema through
+    a converter built from the session's SQLConf (INT96, NTZ, binary-as-
+    string and nanos-as-long all follow the session).  Raises, naming the
+    file, when it is not a readable parquet file."""
+    api = _jvm_api(spark._jvm)
+    path = api.Path(abs_path)
+    meta = api.read_footer(spark._jsc.hadoopConfiguration(), path, api.NO_FILTER)
+    nanos = tuple(_NANOS_FIELD.findall(meta.getFileMetaData().getSchema().toString()))
+    if nanos:
+        # read as int64 nanos (converted by _fix_nanos); the converter
+        # below and the scan both take the flag from the session conf
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    converter = api.Converter(spark._jsparkSession.sessionState().conf())
+    schema = api.schema_from_footer(api.Footer(path, meta), converter)
+    return ParquetFooter(abs_path, schema, nanos, meta)
+
+
+def _parquet_parts(abs_path: str) -> list[str]:
+    """The data files behind a parquet path: the file itself, or a
+    directory's files (recursively, sorted), skipping the ``_``/``.``
+    names Spark's listing skips (``_SUCCESS``, ``.crc`` files)."""
+    if not os.path.isdir(abs_path):
+        return [abs_path]
+    parts = []
+    for dirpath, dirnames, filenames in os.walk(abs_path):
+        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        parts.extend(os.path.join(dirpath, n) for n in filenames if not n.startswith(("_", ".")))
+    return sorted(parts)
+
+
+def _merged_schema(spark: SparkSession, footers: list[ParquetFooter]) -> StructType:
+    """The footers' schemas merged in sorted path order with
+    ``StructType.merge`` under the session's case sensitivity — the merge a
+    ``mergeSchema`` inference job makes — and made nullable, as Spark makes
+    every file source's schema.  Incompatible types raise."""
+    footers = sorted(footers, key=lambda f: f.path)
+    case_sensitive = spark._jsparkSession.sessionState().conf().caseSensitiveAnalysis()
+    merged = footers[0].schema
+    for footer in footers[1:]:
+        merged = merged.merge(footer.schema, case_sensitive)
+    return StructType.fromJson(json.loads(merged.toNullable().json()))
 
 
 def _fix_nanos(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -231,16 +307,40 @@ def _fix_nanos(df: DataFrame, cols: list[str]) -> DataFrame:
     return df
 
 
-def _read_parquet(spark: SparkSession, abs_path: str, footer) -> DataFrame:
-    """One ``spark.read.parquet`` (one inference job) with TIMESTAMP(NANOS)
-    columns read as int64 nanos and converted."""
-    ns_cols = _nanos_ts_columns(footer)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return _fix_nanos(spark.read.parquet(abs_path), ns_cols)
+def _read_parquet(spark: SparkSession, paths: list[str], footers: list[ParquetFooter]) -> DataFrame:
+    """Read ``paths`` with the schema their ``footers`` give (no inference
+    job), TIMESTAMP(NANOS) columns converted.  Where the files' schemas
+    agree that is Spark's inferred schema; where they differ it is the
+    ``mergeSchema`` one, not an arbitrary file's."""
+    df = spark.read.schema(_merged_schema(spark, footers)).parquet(*paths)
+    return _fix_nanos(df, list(dict.fromkeys(c for f in footers for c in f.nanos)))
 
 
-def _needs_restage(footer) -> bool:
+def read_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Read parquet files or directories of part files without a
+    schema-inference job (see the module's schema rule)."""
+    footers = [_parquet_footer(spark, p) for path in paths for p in _parquet_parts(path)]
+    return _read_parquet(spark, paths, footers)
+
+
+#: glob syntax whose Hadoop and Python meanings differ (``[^..]``,
+#: ``{a,b}``, escapes): such literals keep Spark's own path scan
+_UNPORTABLE_GLOB = re.compile(r"[\[\]{}\\]")
+
+
+def parquet_glob(abs_path: str) -> list[str] | None:
+    """The files a parquet path literal names, sorted: the file itself or a
+    ``*``/``?`` glob's matches.  None when the listing is not that simple —
+    no match, a directory, a ``_``/``.`` name Spark's listing would skip,
+    or glob syntax beyond ``*``/``?`` — so the caller keeps Spark's scan."""
+    if _UNPORTABLE_GLOB.search(abs_path):
+        return None
+    files = sorted(glob.glob(abs_path)) if any(c in abs_path for c in "*?") else [abs_path]
+    ok = all(os.path.isfile(p) and not os.path.basename(p).startswith(("_", ".")) for p in files)
+    return files if files and ok else None
+
+
+def _needs_restage(footer: ParquetFooter) -> bool:
     """True when the file's row-group layout under-parallelizes the scan:
     fewer groups than the stage width AND enough rows per group that
     splitting pays.  Spark's parquet scan unit is the row group, so a
@@ -248,9 +348,11 @@ def _needs_restage(footer) -> bool:
     cores of 32 (observed: minhash signatures 149 s at 64× vs 18 s after
     restage).  Real 100 TB tables have thousands of groups; this repairs
     badly-laid-out small inputs only."""
-    if footer is None or footer.num_row_groups >= _STAGE_PARTITIONS:
+    groups = footer.meta.getBlocks()
+    n = groups.size()
+    if n >= _STAGE_PARTITIONS:
         return False
-    return (footer.num_rows / max(footer.num_row_groups, 1)) >= _STAGE_MIN_ROWS
+    return sum(g.getRowCount() for g in groups) / max(n, 1) >= _STAGE_MIN_ROWS
 
 
 _STAGE_PARTITIONS = 32
@@ -293,19 +395,22 @@ def _restage(spark: SparkSession, df: DataFrame, sf_dir: str, name: str) -> Data
     rewrite at ingest, then every subsequent query scans in parallel.
     The staged copy holds identical rows (only layout changes; repairs
     above are already applied); it is per-process, under the system temp
-    dir, and reused across queries in the session."""
+    dir, and reused across queries in the session.  The copy is read back
+    with ``df``'s schema, which it was written with: no inference job."""
     out = _stage_path(sf_dir, name)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         df.repartition(_STAGE_PARTITIONS).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return spark.read.schema(df.schema).parquet(out)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver table; transparently repairs nanosecond timestamps
-    and restages single-row-group files for scan parallelism."""
+    """Load one driver table — ``<name>.parquet``, a file or a directory of
+    part files — with its schema from the footers (no inference job);
+    transparently repairs nanosecond timestamps and restages a file whose
+    row groups under-parallelize the scan."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    footer = _parquet_footer(path)
-    df = _read_parquet(spark, path, footer)
+    footers = [_parquet_footer(spark, p) for p in _parquet_parts(path)]
+    df = _read_parquet(spark, [path], footers)
     # Parquet TIMESTAMP with isAdjustedToUTC=false surfaces as
     # TIMESTAMP_NTZ, which Spark refuses to cast to numeric types (several
     # operators do epoch arithmetic on ts).  The session timezone is pinned
@@ -314,7 +419,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c, t in df.dtypes:
         if t == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if _needs_restage(footer):
+    # a directory's parts are laid out by its writer; only a lone file is
+    # restaged
+    if os.path.isfile(path) and _needs_restage(footers[0]):
         df = _restage(spark, df, sf_dir, name)
     return df
 
@@ -377,29 +484,30 @@ def register_folder(
     """
     files = collect_files(root)
     names = assign_view_names(f.path for f in files)
-    parquet_paths = [f.abs_path for f in files if f.path.lower().endswith(".parquet")]
 
-    def read(abs_path: str) -> DataFrame:
+    def read(abs_path: str) -> tuple[DataFrame, ParquetFooter | None]:
         if abs_path.lower().endswith(".parquet"):
-            return _read_parquet(spark, abs_path, _parquet_footer(abs_path))
-        return reader_for(spark, abs_path)
+            footer = _parquet_footer(spark, abs_path)
+            return _read_parquet(spark, [abs_path], [footer]), footer
+        return reader_for(spark, abs_path), None
 
-    reads = [functools.partial(read, f.abs_path) for f in files]
-    if table_name is not None and parquet_paths:
-        reads.append(lambda: spark.read.option("mergeSchema", True).parquet(*parquet_paths))
-    frames = concurrent_reads(spark, reads)
+    reads = concurrent_reads(spark, [functools.partial(read, f.abs_path) for f in files])
 
     registry: dict[str, DataFrame] = {}
-    for f, df in zip(files, frames):
+    for f, (df, _) in zip(files, reads):
         df.createOrReplaceTempView(names[f.path])
         registry[f.path] = df
 
     if table_name is not None:
-        if not parquet_paths:
+        footers = [footer for _, footer in reads if footer is not None]
+        if not footers:
             # reference: createOrReplaceParquetView errors with no parquets
             # (src/App.tsx:318-321)
             raise ValueError("Nenhum arquivo .parquet importado")
-        union = frames[-1]
+        # the per-file schemas merged, as a mergeSchema read would infer
+        # them; nanos columns stay int64 here, as that read gives them
+        paths = sorted(f.path for f in footers)
+        union = spark.read.schema(_merged_schema(spark, footers)).parquet(*paths)
         from parquet_query_spark.workbench.quoting import spark_identifier
 
         union.createOrReplaceTempView(spark_identifier(table_name))

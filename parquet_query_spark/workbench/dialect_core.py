@@ -5,6 +5,7 @@ pipeline and the full design docstring)."""
 from __future__ import annotations
 
 import contextvars
+import functools
 import re
 
 
@@ -14,7 +15,16 @@ import re
 def _code_mask(sql: str) -> list[bool]:
     """True for characters that are plain SQL code — outside single-quoted
     strings, double-quoted / backtick-quoted identifiers, and comments.
-    Quote/comment delimiter characters themselves count as non-code."""
+    Quote/comment delimiter characters themselves count as non-code.
+
+    Memoized by text, as the rewrite passes ask again for text they have
+    not changed (a scan loop re-masks its text after every candidate); the
+    caller gets its own copy, which it may mutate."""
+    return list(_code_mask_of(sql))
+
+
+@functools.lru_cache(maxsize=256)
+def _code_mask_of(sql: str) -> tuple[bool, ...]:
     n = len(sql)
     mask = [True] * n
     i = 0
@@ -72,7 +82,7 @@ def _code_mask(sql: str) -> list[bool]:
             mask[i] = False
             state = "bq"
         i += 1
-    return mask
+    return tuple(mask)
 
 
 def _comment_mask(sql: str) -> list[bool]:

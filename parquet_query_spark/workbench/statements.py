@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
 from dataclasses import dataclass
 
 
@@ -132,19 +133,11 @@ _FORMAT_BY_SUFFIX = {
 _TABLE_REF_KEYWORD = re.compile(r"(?:\bfrom\b|\bjoin\b)\s*$", re.IGNORECASE)
 
 
-# Sniffed per-file temp views for path-literal CSV/JSON scans (r12):
-# keyed by (session, abs_path, mtime_ns, size) so a re-written file
-# (COPY ... TO the same path) re-registers instead of serving a stale
-# view, and a second SparkSession never reads another session's view.
-_PATH_VIEW_CACHE: dict[tuple, str] = {}
-_PATH_VIEW_SEQ = 0
-
-
 def _spark_path_ref(
     path: str,
     root: str | None,
     registered: dict[str, str] | None,
-    spark=None,
+    path_view: Callable[[str, str], str | None] | None = None,
 ) -> str | None:
     if registered and path in registered:
         # imported file: its per-file view carries the right reader options
@@ -157,22 +150,8 @@ def _spark_path_ref(
     if fmt is None:
         return None
     abs_path = path if os.path.isabs(path) else os.path.join(root or ".", path)
-    if fmt != "parquet" and spark is not None and os.path.isfile(abs_path):
-        # csv/json path scans need READER OPTIONS DuckDB auto-detects
-        # (header, delimiter, inferred types, json array form) — a bare
-        # ``csv.`path``` reads headerless _c0 strings (fuzz v7 probe).
-        # Register a sniffed per-file temp view and reference it.
-        st = os.stat(abs_path)
-        key = (id(spark), abs_path, st.st_mtime_ns, st.st_size)
-        view = _PATH_VIEW_CACHE.get(key)
-        if view is None:
-            from parquet_query_spark.sources.registry import reader_for
-
-            global _PATH_VIEW_SEQ
-            _PATH_VIEW_SEQ += 1
-            view = f"__path_scan_{_PATH_VIEW_SEQ}"
-            reader_for(spark, abs_path, sniff=True).createOrReplaceTempView(view)
-            _PATH_VIEW_CACHE[key] = view
+    view = path_view(abs_path, fmt) if path_view is not None else None
+    if view is not None:
         return f"`{view}`"
     escaped = abs_path.replace("`", "``")
     return f"{fmt}.`{escaped}`"
@@ -182,15 +161,17 @@ def rewrite_path_tables(
     sql: str,
     root: str | None = None,
     registered: dict[str, str] | None = None,
-    spark=None,
+    path_view: Callable[[str, str], str | None] | None = None,
 ) -> str:
     """Rewrite ``FROM 'file.parquet'`` → ``FROM parquet.`/abs/file.parquet```.
 
     Lexer-aware: only single-quoted literals in table position (immediately
     after FROM/JOIN, outside comments/other strings) are rewritten, and only
     when the literal looks like a supported data file (A3 suffix set).
-    With a ``spark`` session, csv/json paths resolve through sniffed
-    per-file temp views instead of bare format-path scans (r12).
+    A literal that names no ``registered`` file goes to ``path_view(abs_path,
+    fmt)`` (``Engine._path_view``): the temp view it returns is referenced
+    instead of a bare ``format.`path``` scan, which stays the fallback when
+    it returns None.
     """
     out: list[str] = []
     i = 0
@@ -245,7 +226,7 @@ def rewrite_path_tables(
                     j += 1
             literal = "".join(content)
             ref = (
-                _spark_path_ref(literal, root, registered, spark)
+                _spark_path_ref(literal, root, registered, path_view)
                 if _TABLE_REF_KEYWORD.search("".join(out))
                 else None
             )

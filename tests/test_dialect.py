@@ -2095,3 +2095,19 @@ def test_flatten_drops_null_sublists():
     )
     # fixpoint-stable: rewriting the output again is a no-op
     assert rewrite_duckdb_dialect(out) == out
+
+
+def test_code_mask_memo_hands_out_copies():
+    """The code mask is memoized by text, and each caller gets its own
+    copy: a caller that marks spans non-code (prepared.py's dollar quotes)
+    must not change the mask the next caller sees."""
+    from parquet_query_spark.workbench.dialect_core import _code_mask
+
+    sql = "SELECT 'a;b' AS s, x -- note\nFROM t"
+    first = _code_mask(sql)
+    expected = list(first)
+    first[:] = [False] * len(first)
+    again = _code_mask(sql)
+    assert again == expected
+    assert again is not first
+    assert again[sql.index("x")] and not again[sql.index(";")]

@@ -3,7 +3,7 @@
 A bare ``csv.`path``` scan read headerless _c0 STRINGS where DuckDB
 sniffs delimiter/header/types — found by the v7 pre-campaign probe on
 ``COPY ... TO`` round-trips.  Path literals outside the engine root now
-resolve through sniffed per-file temp views (statements._spark_path_ref),
+resolve through sniffed per-file temp views (Engine._path_view),
 keyed by (path, mtime, size) so an overwritten file re-registers.
 """
 

@@ -98,7 +98,7 @@ def test_restage_fixes_fat_row_groups(spark, tmp_path):
     path = tmp_path / "documents.parquet"
     pq.write_table(tbl, path, row_group_size=n // 3 + 1)  # 3 fat groups
     assert pq.ParquetFile(path).metadata.num_row_groups <= 3
-    assert _needs_restage(_parquet_footer(str(path)))
+    assert _needs_restage(_parquet_footer(spark, str(path)))
     df = load_table(spark, str(tmp_path), "documents")
     assert df.rdd.getNumPartitions() >= 16
     assert df.count() == n
@@ -113,7 +113,7 @@ def test_tiny_tables_not_restaged(spark, tmp_path):
     tbl = pa.table({"k": [1, 2, 3]})
     path = tmp_path / "region.parquet"
     pq.write_table(tbl, path)
-    assert not _needs_restage(_parquet_footer(str(path)))
+    assert not _needs_restage(_parquet_footer(spark, str(path)))
 
 
 @contextlib.contextmanager
@@ -131,8 +131,8 @@ def job_group(spark, gid):
 
 
 def test_nanos_parquet_read_once(spark, tmp_path):
-    """A TIMESTAMP(NANOS) file costs one schema-inference job, not a read
-    that is thrown away plus a second one, and reads back as micros."""
+    """A TIMESTAMP(NANOS) file costs no job (its schema comes from the
+    footer on the driver) and reads back as micros."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -142,7 +142,7 @@ def test_nanos_parquet_read_once(spark, tmp_path):
     assert str(pq.read_schema(tmp_path / "ts.parquet").field("ts").type) == "timestamp[ns]"
     with job_group(spark, "pqs-test-nanos-once") as jobs:
         eng = Engine.open(str(tmp_path), spark=spark)
-    assert len(jobs) == 1
+    assert len(jobs) == 0
     df = eng.registry["ts.parquet"]
     assert dict(df.dtypes)["ts"] == "timestamp"
     assert df.selectExpr("unix_micros(ts) AS us").first().us == ns // 1000
@@ -214,10 +214,13 @@ def test_corrupt_parquet_fails_open(spark, tmp_path):
 
 def test_open_jobs_run_under_callers_job_group(spark, fixture_dir):
     """Schema-inference jobs launched on the registration pool count under
-    the caller's job group: at least one job per file."""
+    the caller's job group: at least one job per CSV/JSON file (parquet
+    files run none)."""
     with job_group(spark, "pqs-test-open-group") as jobs:
         Engine.open(fixture_dir, table_name="unioned", spark=spark)
-    assert len(jobs) >= len(collect_files(fixture_dir))
+    non_parquet = [f for f in collect_files(fixture_dir) if not f.path.endswith(".parquet")]
+    assert non_parquet
+    assert len(jobs) >= len(non_parquet)
 
 
 def test_repeated_open_pins_no_new_jvm_threads(spark, fixture_dir):
@@ -241,3 +244,66 @@ def test_repeated_open_pins_no_new_jvm_threads(spark, fixture_dir):
     for _ in range(9):
         Engine.open(fixture_dir, table_name="unioned", spark=spark)
     assert py4j_threads() - first <= _POOL_SIZE
+
+
+def test_parquet_only_open_runs_no_job(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for i in range(3):
+        pq.write_table(pa.table({"id": [i], f"c{i}": [str(i)]}), tmp_path / f"f{i}.parquet")
+    with job_group(spark, "pqs-test-open-no-job") as jobs:
+        eng = Engine.open(str(tmp_path), table_name="u", spark=spark)
+    assert jobs == []
+    assert eng.run("SELECT count(*) AS n FROM u").rows == [["3"]]
+
+
+def test_glob_literal_infers_once_and_sees_new_files(spark, tmp_path):
+    """A parquet glob literal that names no registered file resolves
+    through a view cached per file set: analysing it three times runs at
+    most one job, and a file added to the directory shows up next run."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    (tmp_path / "g").mkdir()
+    pq.write_table(pa.table({"id": [1, 2]}), tmp_path / "g" / "a.parquet")
+    eng = Engine(spark=spark, root=str(tmp_path))
+    stmt = "SELECT count(*) AS n, sum(id) AS s FROM 'g/*.parquet'"
+    with job_group(spark, "pqs-test-glob-views") as jobs:
+        for _ in range(3):
+            eng.sql(stmt)
+    assert len(jobs) <= 1
+    assert eng.run(stmt).rows == [["2", "3"]]
+    pq.write_table(pa.table({"id": [10]}), tmp_path / "g" / "b.parquet")
+    assert eng.run(stmt).rows == [["3", "13"]]
+
+
+def test_path_views_belong_to_their_engine(spark, tmp_path):
+    """Engines on one session, or on sessions sharing a context, each read
+    their own files through the same relative literal."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for i, root in enumerate(("r1", "r2")):
+        (tmp_path / root / "g").mkdir(parents=True)
+        pq.write_table(pa.table({"id": list(range(i + 1))}), tmp_path / root / "g" / "a.parquet")
+    stmt = "SELECT count(*) AS n FROM 'g/*.parquet'"
+    e1 = Engine(spark=spark, root=str(tmp_path / "r1"))
+    e2 = Engine(spark=spark, root=str(tmp_path / "r2"))
+    e3 = Engine(spark=spark.newSession(), root=str(tmp_path / "r1"))
+    assert [e.run(stmt).rows for e in (e1, e2, e3, e1)] == [[["1"]], [["2"]], [["1"]], [["1"]]]
+
+
+def test_unmergeable_glob_literal_keeps_sparks_scan(spark, tmp_path):
+    """A glob whose files' schemas cannot merge (INT vs STRING) gets no
+    footer view; the literal stays Spark's own path scan, which infers
+    from one file as it always has."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    (tmp_path / "g").mkdir()
+    pq.write_table(pa.table({"id": [1]}), tmp_path / "g" / "a.parquet")
+    pq.write_table(pa.table({"id": ["one"]}), tmp_path / "g" / "b.parquet")
+    eng = Engine(spark=spark, root=str(tmp_path))
+    assert eng._path_view(str(tmp_path / "g" / "*.parquet"), "parquet") is None
+    assert eng.sql("SELECT * FROM 'g/*.parquet'").columns == ["id"]
