@@ -1881,7 +1881,7 @@ def main() -> int:
             if cls in ("value_mismatch", "spark_error_only"):
                 # intentional-difference triage over the comment-stripped
                 # sequence (macro bodies can host e.g. #9 UBIGINT negation)
-                from parquet_query_spark.workbench.dialect import (
+                from parquet_query_spark.workbench.dialect_core import (
                     _unquote_function_names,
                     strip_comments,
                 )
@@ -1920,7 +1920,7 @@ def main() -> int:
             # match against comment-stripped text: a mutated comment
             # between the operator and its operand must not hide a
             # documented intentional difference (wave-22 seed 6189)
-            from parquet_query_spark.workbench.dialect import (
+            from parquet_query_spark.workbench.dialect_core import (
                 _unquote_function_names,
                 strip_comments,
             )

@@ -32,10 +32,10 @@ from parquet_query_spark.sources.registry import (
 )
 from parquet_query_spark.workbench.csv_sink import export_csv, write_csv_distributed
 from parquet_query_spark.workbench.dialect import (
-    _code_mask,
     rewrite_duckdb_dialect,
     rewrite_duckdb_dialect_fallbacks,
 )
+from parquet_query_spark.workbench.dialect_core import _code_mask
 
 _ORDER_ALL_TAIL = re.compile(
     r"\bORDER\s+BY\s+ALL"
@@ -351,7 +351,7 @@ class Engine:
         # either defeats the match (silent wrong answer: ^ left as XOR) or
         # corrupts the splice (r8 mutation-fuzz findings).  Stripping is
         # safe — comments are semantically neutral in both engines.
-        from parquet_query_spark.workbench.dialect import (
+        from parquet_query_spark.workbench.dialect_core import (
             _unquote_function_names,
             strip_comments,
         )

@@ -1,8 +1,10 @@
 """Advanced aggregate/window/array coverage (SURVEY §2.C long tail).
 
-Statistical moments, arg-min/max, ordered string aggregation, exact median,
-higher-order array functions, n-gram frequency top-k, HAVING, value-window
-functions, distribution ranks, and batch sliding windows.
+Statistical moments, arg-min/max, ordered string aggregation, exact and
+weighted median, higher-order array functions, n-gram frequency top-k,
+HAVING, value-window functions, distribution ranks, batch sliding windows
+and rolling medians; column, correlation and value-histogram profiles,
+data-quality rule sweeps, and mergeable bottom-k sampling.
 """
 
 from __future__ import annotations
@@ -669,3 +671,437 @@ def agg_exact_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("o_orderpriority")
     )
+
+
+@query(
+    "agg_weighted_median",
+    oracle="""
+WITH pp AS (  -- collapse ties first so the cumsum is deterministic
+  SELECT l_returnflag AS flag, l_extendedprice AS price,
+         SUM(l_quantity) AS w
+  FROM lineitem GROUP BY 1, 2
+),
+cum AS (
+  SELECT flag, price, w,
+         SUM(w) OVER (PARTITION BY flag ORDER BY price) AS cw,
+         SUM(w) OVER (PARTITION BY flag) AS tw
+  FROM pp
+)
+SELECT flag, round(MIN(price), 2) AS weighted_median,
+       CAST(MIN(tw) AS BIGINT) AS total_weight
+FROM cum WHERE cw >= tw / 2
+GROUP BY flag
+ORDER BY flag
+""",
+    tags=("agg",),
+)
+def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted median (price weighted by quantity) per return flag.
+
+    Exactness: quantities are integral doubles, so every SUM here is
+    exact in float64 regardless of reduction order — no decimal needed.
+    Ties collapse in a pre-aggregation so the running sum is a function
+    of (flag, price), not of row order.  The per-flag window sorts only
+    the collapsed (flag, price) domain."""
+    v = views(spark, sf_dir)
+    pp = v["lineitem"].groupBy(
+        F.col("l_returnflag").alias("flag"),
+        F.col("l_extendedprice").alias("price"),
+    ).agg(F.sum("l_quantity").alias("w"))
+    wc = W.partitionBy("flag").orderBy("price")
+    wt = W.partitionBy("flag")
+    cum = pp.select(
+        "flag",
+        "price",
+        F.sum("w").over(wc).alias("cw"),
+        F.sum("w").over(wt).alias("tw"),
+    )
+    return (
+        cum.where(F.col("cw") >= F.col("tw") / 2)
+        .groupBy("flag")
+        .agg(
+            F.round(F.min("price"), 2).alias("weighted_median"),
+            F.min("tw").cast("bigint").alias("total_weight"),
+        )
+        .orderBy("flag")
+    )
+
+
+# Pearson r is scale-invariant, so each measure is quantized to integer
+# units first (quantity is integral; price → cents; discount/tax → bp).
+# Every co-moment sum then accumulates in BIGINT — exact and
+# reduction-order-independent — EXCEPT Σprice_cents² which exceeds int64
+# range at sf0.1 volumes (playbook: cents² overflows BIGINT) and uses
+# decimal(38,0)/HUGEINT.  One decimal aggregate instead of twelve: the
+# all-decimal first cut measured 14.0 s at 8× vs 0.57 s at sf0.1 —
+# Spark's decimal sum is the non-vectorized path; this version is
+# integer-vectorized except the single unavoidable column.
+# SQL-string expressions valid in BOTH dialects; the Spark side wraps
+# them in F.expr lazily (building Columns at module import would require
+# an active SparkContext before the catalog ever runs).
+_CORR_COLS = {
+    "qty": "CAST(l_quantity AS BIGINT)",
+    "price": "CAST(round(l_extendedprice * 100) AS BIGINT)",
+    "disc": "CAST(round(l_discount * 100) AS BIGINT)",
+    "tax": "CAST(round(l_tax * 100) AS BIGINT)",
+}
+
+
+_CORR_PAIRS = [("qty", "price"), ("qty", "disc"), ("price", "tax"), ("disc", "tax")]
+
+
+# the one square that overflows int64 at scale
+_DECIMAL_SQUARES = {"price"}
+
+
+def _corr_formula_sql(x: str, y: str) -> str:
+    def sq(c):
+        e = f"{_CORR_COLS[c]} * {_CORR_COLS[c]}"
+        if c in _DECIMAL_SQUARES:
+            return f"CAST(SUM(CAST({e} AS DECIMAL(38,0))) AS DOUBLE)"
+        return f"CAST(SUM({e}) AS DOUBLE)"
+
+    xs, ys = _CORR_COLS[x], _CORR_COLS[y]
+    return f"""round(
+      (count(*)::DOUBLE * CAST(SUM({xs} * {ys}) AS DOUBLE)
+        - CAST(SUM({xs}) AS DOUBLE) * CAST(SUM({ys}) AS DOUBLE))
+      / sqrt(
+          (count(*)::DOUBLE * {sq(x)}
+            - CAST(SUM({xs}) AS DOUBLE) * CAST(SUM({xs}) AS DOUBLE))
+          * (count(*)::DOUBLE * {sq(y)}
+            - CAST(SUM({ys}) AS DOUBLE) * CAST(SUM({ys}) AS DOUBLE))), 6)"""
+
+
+def _corr_formula(x: str, y: str):
+    def sq(c):
+        e = F.expr(_CORR_COLS[c]) * F.expr(_CORR_COLS[c])
+        if c in _DECIMAL_SQUARES:
+            return F.sum(e.cast("decimal(38,0)")).cast("double")
+        return F.sum(e).cast("double")
+
+    xc, yc = F.expr(_CORR_COLS[x]), F.expr(_CORR_COLS[y])
+    n = F.count(F.lit(1)).cast("double")
+    sx, sy = F.sum(xc).cast("double"), F.sum(yc).cast("double")
+    sxy = F.sum(xc * yc).cast("double")
+    return F.round(
+        (n * sxy - sx * sy) / F.sqrt((n * sq(x) - sx * sx) * (n * sq(y) - sy * sy)),
+        6,
+    )
+
+
+@query(
+    "profile_numeric_correlations",
+    oracle="SELECT "
+    + ", ".join(
+        f"{_corr_formula_sql(x, y)} AS corr_{x}_{y}" for x, y in _CORR_PAIRS
+    )
+    + " FROM lineitem",
+    tags=("profile", "agg"),
+)
+def profile_numeric_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-pass pairwise Pearson correlation profile of the lineitem
+    measures.  Integer-quantized co-moment sums (exact, order-free)
+    instead of the built-in corr() — float corr drifts in the last
+    digits under parallel reduction; these sums cannot.  The final
+    ratio mirrors the oracle's expression shape exactly, so both
+    engines run the identical IEEE operation sequence.  Single
+    aggregation, no shuffle beyond the 1-row reduce."""
+    v = views(spark, sf_dir)
+    return v["lineitem"].agg(
+        *[_corr_formula(x, y).alias(f"corr_{x}_{y}") for x, y in _CORR_PAIRS]
+    )
+
+
+def _bottom_k_oracle() -> str:
+    from parquet_query_spark.functions.xxh64_sql import MASK56, hash_long_sql
+
+    h = hash_long_sql("o_orderkey")
+    return f"""
+WITH keyed AS (
+  SELECT o_orderkey, CAST(({h}) & {MASK56} AS BIGINT) AS draw
+  FROM orders
+)
+SELECT CAST(row_number() OVER (ORDER BY draw) AS BIGINT) AS sample_rank,
+       o_orderkey, draw
+FROM keyed
+ORDER BY draw
+LIMIT 100
+"""
+
+
+@query(
+    "sample_bottom_k_mergeable",
+    oracle=_bottom_k_oracle(),
+    tags=("sample",),
+)
+def sample_bottom_k_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic mergeable uniform sample: bottom-k by xxhash64 key.
+
+    The classic distributed sampling trick — each partition keeps its k
+    smallest hash draws, merging keeps the k smallest of the union, and
+    the result is a uniform k-sample of the whole dataset that is (a)
+    identical regardless of partitioning/arrival order and (b) unions
+    correctly across shards/days (sample(A ∪ B) = bottom_k(sample(A) ∪
+    sample(B))).  Spark plans the orderBy+limit as TakeOrdered — exactly
+    the per-partition top-k + merge, no global sort.  Oracle reproduces
+    Spark's xxhash64 bit-for-bit in pure SQL (functions/xxh64_sql.py);
+    both sides mask to 56 bits where u64/i64 agree."""
+    from parquet_query_spark.functions.xxh64_sql import MASK56
+
+    v = views(spark, sf_dir)
+    keyed = v["orders"].select(
+        "o_orderkey",
+        F.expr(f"xxhash64(o_orderkey) & {MASK56}").alias("draw"),
+    )
+    w = W.orderBy("draw")
+    return (
+        keyed.orderBy("draw")
+        .limit(100)
+        .select(
+            F.row_number().over(w).cast("bigint").alias("sample_rank"),
+            "o_orderkey",
+            "draw",
+        )
+        .orderBy("draw")
+    )
+
+
+@query(
+    "window_rolling_median_revenue",
+    oracle="""
+WITH daily AS (
+  SELECT CAST(l_shipdate AS DATE) AS day,
+         CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) * 2
+           AS rev_cents2
+  FROM lineitem GROUP BY 1
+)
+SELECT day, round(rev_cents2 / 200.0, 2) AS revenue,
+       ((CAST(median(rev_cents2) OVER (
+           ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW
+         ) AS BIGINT) + 1) // 2) / 100.0 AS rolling_median_7d
+FROM daily
+ORDER BY day
+""",
+    tags=("window",),
+)
+def window_rolling_median_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact 7-row rolling median of daily revenue.  Spark has no median
+    window aggregate, so the frame is materialized per row with
+    collect_list OVER the same frame and the median read from the sorted
+    array — correct because the frame is bounded (7 elements), which is
+    precisely when exact rolling medians are tractable at scale.  Revenue
+    is accumulated in DOUBLED integer cents so the even-frame
+    interpolation (a+b)/2 is itself an exact integer K (in half-cents);
+    the 2-dp rounding is then done in INTEGER space — round(K/200, 2) ≡
+    ((K+1) // 2)/100 for positive K — because a double division puts
+    half-cent medians exactly on the .005 boundary where Spark
+    (shortest-decimal HALF_UP) and DuckDB (raw-binary multiply-round)
+    disagree.  The window runs on the day-bounded series, not raw rows."""
+    v = views(spark, sf_dir)
+    daily = v["lineitem"].groupBy(
+        F.col("l_shipdate").cast("date").alias("day")
+    ).agg(
+        (
+            F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint")).cast(
+                "bigint"
+            )
+            * 2
+        ).alias("rev_cents2")
+    )
+    w = W.orderBy("day").rowsBetween(-6, 0)
+    frame = F.array_sort(F.collect_list("rev_cents2").over(w))
+    n = F.size(frame)
+    mid = ((n + 1) / 2).cast("int")
+    half = (n / 2).cast("int")
+    median2 = F.when(
+        n % 2 == 1, F.element_at(frame, mid).cast("double")
+    ).otherwise(
+        (F.element_at(frame, half) + F.element_at(frame, half + 1)) / 2.0
+    )
+    return (
+        daily.select(
+            "day",
+            F.round(F.col("rev_cents2") / 200.0, 2).alias("revenue"),
+            (
+                F.floor((median2.cast("bigint") + 1) / 2).cast("bigint") / 100.0
+            ).alias("rolling_median_7d"),
+        )
+        .orderBy("day")
+    )
+
+
+_PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
+
+
+@query(
+    "profile_orders_columns",
+    oracle="""
+SELECT 'o_orderkey' AS col, COUNT(*) AS n_rows, COUNT(o_orderkey) AS n_non_null,
+       COUNT(DISTINCT o_orderkey) AS n_distinct FROM orders
+UNION ALL
+SELECT 'o_custkey', COUNT(*), COUNT(o_custkey), COUNT(DISTINCT o_custkey) FROM orders
+UNION ALL
+SELECT 'o_orderstatus', COUNT(*), COUNT(o_orderstatus), COUNT(DISTINCT o_orderstatus) FROM orders
+UNION ALL
+SELECT 'o_totalprice', COUNT(*), COUNT(o_totalprice), COUNT(DISTINCT o_totalprice) FROM orders
+UNION ALL
+SELECT 'o_orderpriority', COUNT(*), COUNT(o_orderpriority), COUNT(DISTINCT o_orderpriority) FROM orders
+ORDER BY col
+""",
+    tags=("profile", "aggregate"),
+)
+def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Column profiling (null counts + exact distinct per column) built
+    programmatically from the schema — the data-quality pass that gates a
+    training pipeline.
+
+    One scan computes all columns' stats together (vs the oracle's
+    per-column UNION ALL — same result, N scans); at 100 TB swap
+    countDistinct for approx_count_distinct and it becomes a single
+    map-side sketch pass."""
+    o = views(spark, sf_dir)["orders"]
+    per_col = [
+        F.struct(
+            F.lit(c).alias("col"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count(F.col(c)).alias("n_non_null"),
+            F.countDistinct(F.col(c)).alias("n_distinct"),
+        ).alias(c)
+        for c in _PROFILE_COLS
+    ]
+    wide = o.agg(*per_col)
+    return (
+        wide.select(F.explode(F.array(*[F.col(c) for c in _PROFILE_COLS])).alias("s"))
+        .select("s.col", "s.n_rows", "s.n_non_null", "s.n_distinct")
+        .orderBy("col")
+    )
+
+
+@query(
+    "profile_value_histogram",
+    oracle="""
+WITH b AS (SELECT MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi FROM orders)
+SELECT LEAST(CAST(floor((o_totalprice - lo)
+                        / (GREATEST(hi - lo, 1e-12) / 20.0)) AS BIGINT), 19)
+         AS bucket,
+       COUNT(*) AS n
+FROM orders CROSS JOIN b
+GROUP BY bucket
+ORDER BY bucket
+""",
+    tags=("profiling", "histogram"),
+)
+def profile_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equi-width 20-bucket histogram of a numeric column — the data
+    profiler's distribution sketch (and the stats a cost-based optimizer
+    collects).  Bucket edges derive from a one-row min/max aggregate
+    broadcast back over the scan; the top edge folds into the last bucket.
+
+    Scale shape: two passes (bounds, then bucketed count), each a
+    map-side-combinable aggregation; the histogram itself is 20 rows no
+    matter the input size.  Both engines evaluate the identical bucket
+    expression on identical doubles, so edges land identically."""
+    v = views(spark, sf_dir)
+    o = v["orders"]
+    b = o.agg(
+        F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
+    )
+    # greatest(hi - lo, eps): a constant column otherwise makes the bucket
+    # width 0 and double div-by-zero differs across engines (Spark NULL vs
+    # DuckDB inf) — with the guard every value lands in bucket 0 on both.
+    width = F.greatest(F.col("hi") - F.col("lo"), F.lit(1e-12)) / 20.0
+    bucket = F.least(
+        F.floor((F.col("o_totalprice") - F.col("lo")) / width).cast("bigint"),
+        F.lit(19).cast("bigint"),
+    )
+    return (
+        o.crossJoin(F.broadcast(b))
+        .select(bucket.alias("bucket"))
+        .groupBy("bucket")
+        .agg(F.count("*").alias("n"))
+        .orderBy("bucket")
+    )
+
+
+@query(
+    "dq_rule_violations",
+    oracle="""
+SELECT 'orders_null_priority' AS rule,
+       CAST(COUNT(*) AS BIGINT) AS n_violations,
+       CAST(MIN(o_orderkey) AS BIGINT) AS example_key
+FROM orders WHERE o_orderpriority IS NULL
+UNION ALL
+SELECT 'orders_nonpositive_price',
+       CAST(COUNT(*) AS BIGINT), CAST(MIN(o_orderkey) AS BIGINT)
+FROM orders WHERE o_totalprice <= 0
+UNION ALL
+SELECT 'lineitem_discount_range',
+       CAST(COUNT(*) AS BIGINT), CAST(MIN(l_orderkey) AS BIGINT)
+FROM lineitem WHERE l_discount < 0 OR l_discount > 0.5
+UNION ALL
+SELECT 'lineitem_ship_before_order',
+       CAST(COUNT(*) AS BIGINT), CAST(MIN(l.l_orderkey) AS BIGINT)
+FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+WHERE l.l_shipdate < o.o_orderdate
+UNION ALL
+SELECT 'lineitem_orphan_orderkey',
+       CAST(COUNT(*) AS BIGINT), CAST(MIN(l.l_orderkey) AS BIGINT)
+FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
+WHERE o.o_orderkey IS NULL
+UNION ALL
+SELECT 'customer_dup_names',
+       CAST(COUNT(*) AS BIGINT), CAST(MIN(k) AS BIGINT)
+FROM (
+  SELECT MIN(c_custkey) AS k
+  FROM customer GROUP BY c_name HAVING COUNT(*) > 1
+)
+ORDER BY rule
+""",
+    tags=("quality", "aggregate", "join"),
+)
+def dq_rule_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Declarative data-quality rule sweep (the Deequ/great-expectations
+    shape): six constraint classes — null check, range check, value
+    bound, cross-table temporal sanity, referential orphans, uniqueness
+    — each reported as (rule, violation count, example key).  Zero
+    counts stay in the report: "checked and clean" is the deliverable.
+
+    Scale shape: each rule is one scan-side filter or one keyed
+    join/anti-join rollup; the report is |rules| rows.  At 100 TB the
+    rules share scans via a single pass per table (Catalyst reuses the
+    cached scan across the union branches)."""
+    v = views(spark, sf_dir)
+    o, l, c = v["orders"], v["lineitem"], v["customer"]
+
+    def rule(name, df, key):
+        return df.agg(
+            F.lit(name).alias("rule"),
+            F.count("*").cast("bigint").alias("n_violations"),
+            F.min(key).cast("bigint").alias("example_key"),
+        )
+
+    ship_before = (
+        l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .where(F.col("l_shipdate") < F.col("o_orderdate"))
+    )
+    orphans = l.join(o, F.col("l_orderkey") == F.col("o_orderkey"), "left_anti")
+    dup_names = (
+        c.groupBy("c_name")
+        .agg(F.count("*").alias("cnt"), F.min("c_custkey").alias("k"))
+        .where(F.col("cnt") > 1)
+    )
+    report = (
+        rule("orders_null_priority", o.where(F.col("o_orderpriority").isNull()), "o_orderkey")
+        .unionByName(rule("orders_nonpositive_price", o.where(F.col("o_totalprice") <= 0), "o_orderkey"))
+        .unionByName(
+            rule(
+                "lineitem_discount_range",
+                l.where((F.col("l_discount") < 0) | (F.col("l_discount") > 0.5)),
+                "l_orderkey",
+            )
+        )
+        .unionByName(rule("lineitem_ship_before_order", ship_before, "l_orderkey"))
+        .unionByName(rule("lineitem_orphan_orderkey", orphans, "l_orderkey"))
+        .unionByName(rule("customer_dup_names", dup_names, "k"))
+    )
+    return report.orderBy("rule")

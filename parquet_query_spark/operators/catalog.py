@@ -19,6 +19,18 @@ replaced.  The text is a format string, so literal braces in it are
 doubled; where one text serves both engines, the oracle is rendered with
 :func:`bare_names`.
 
+Placement rule: an operator lives in the module of its domain, and the
+headings of the README's "Operator catalog" section are the domain list.
+Relational spans ``tpch.py``/``tpch_full.py`` (the TPC-H shapes),
+``relational.py`` (joins, windows, set ops, subqueries and SQL constructs,
+business analytics over the TPC-H tables), ``advanced.py`` (aggregate and
+window long tail, profiles, sampling) and ``templates.py``; every other
+domain has one module (``temporal.py``, ``scale_patterns.py``,
+``events_ops.py``, ``text.py``, ``dedup.py``, ``similarity.py``,
+``multimodal.py``, ``udfs.py``, ``sink_queries.py``, ``pipeline.py``,
+``graph.py``, and the ``streaming`` package).  A name registers once:
+:func:`query` raises on a name already in the catalog.
+
 Determinism contract for oracle-checked queries (the driver hash-compares
 values): every floating-point aggregate is rounded; every LIMIT/top-k has a
 total order (unique tie-break key); column names are identical on both sides.
@@ -50,9 +62,12 @@ CATALOG: dict[str, QuerySpec] = {}
 
 
 def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Register an operator implementation in the catalog."""
+    """Register an operator implementation in the catalog; a name that is
+    already registered raises ``ValueError``."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in CATALOG:
+            raise ValueError(f"operator {name!r} is already registered")
         CATALOG[name] = QuerySpec(name, fn, oracle, tuple(tags), fn.__doc__ or "")
         return fn
 
@@ -105,38 +120,29 @@ def bare_names(text: str) -> str:
     return text.format(**{t: t for t in TESTDATA_TABLES})
 
 
-_LOADED = False
-
-
 def load_all() -> dict[str, QuerySpec]:
     """Import every operator module so the catalog is fully populated."""
-    global _LOADED
-    if not _LOADED:
-        from parquet_query_spark.operators import (  # noqa: F401
-            tpch,
-            tpch_full,
-            relational,
-            advanced,
-            templates,
-            events_ops,
-            text,
-            dedup,
-            similarity,
-            multimodal,
-            misc,
-            pipeline,
-            temporal,
-            scale_patterns,
-            sink_queries,
-            udfs,
-            graph,
-            round7,
-            round8,
-        )
-        from parquet_query_spark.streaming import (  # noqa: F401
-            stateful,
-            streaming_ops,
-        )
+    from parquet_query_spark.operators import (  # noqa: F401
+        tpch,
+        tpch_full,
+        relational,
+        advanced,
+        templates,
+        events_ops,
+        text,
+        dedup,
+        similarity,
+        multimodal,
+        pipeline,
+        temporal,
+        scale_patterns,
+        sink_queries,
+        udfs,
+        graph,
+    )
+    from parquet_query_spark.streaming import (  # noqa: F401
+        stateful,
+        streaming_ops,
+    )
 
-        _LOADED = True
     return CATALOG

@@ -2505,3 +2505,43 @@ def dedup_cluster_size_distribution(spark: SparkSession, sf_dir: str) -> DataFra
         )
     )
     return singles.unionByName(hist).orderBy("component_size")
+
+
+@query(
+    "dedup_band_tuning_table",
+    oracle="""
+WITH cfg AS (
+  SELECT * FROM (VALUES (64, 1), (32, 2), (16, 4), (8, 8), (4, 16), (2, 32), (1, 64))
+       AS t(bands, rows_per_band)
+),
+sims AS (SELECT CAST(unnest([0.5, 0.7, 0.8, 0.9, 0.95]) AS DOUBLE) AS s)
+SELECT bands, rows_per_band,
+       round(pow(1.0 / bands, 1.0 / rows_per_band), 3) AS approx_threshold,
+       s AS jaccard,
+       round(1.0 - pow(1.0 - pow(s, rows_per_band), bands), 4) AS p_candidate
+FROM cfg, sims
+ORDER BY bands DESC, s
+""",
+    tags=("dedup",),
+)
+def dedup_band_tuning_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH banding design table for a 64-hash MinHash signature: for each
+    (bands, rows) factorization, the S-curve candidate probability
+    1−(1−s^r)^b at representative Jaccard levels, plus the ~(1/b)^(1/r)
+    threshold.  This is the table you consult before picking the band
+    layout for a corpus-scale dedup run; pure literal compute, no scan."""
+    return spark.sql(
+        """
+        WITH cfg AS (
+          SELECT * FROM VALUES (64, 1), (32, 2), (16, 4), (8, 8), (4, 16),
+                               (2, 32), (1, 64) AS t(bands, rows_per_band)
+        ),
+        sims AS (SELECT explode(array(0.5D, 0.7D, 0.8D, 0.9D, 0.95D)) AS s)
+        SELECT bands, rows_per_band,
+               round(power(1.0 / bands, 1.0 / rows_per_band), 3) AS approx_threshold,
+               s AS jaccard,
+               round(1.0 - power(1.0 - power(s, rows_per_band), bands), 4) AS p_candidate
+        FROM cfg CROSS JOIN sims
+        ORDER BY bands DESC, s
+        """
+    )

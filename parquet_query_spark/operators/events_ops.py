@@ -2862,3 +2862,451 @@ def events_alert_flap_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("day")
     )
+
+
+@query(
+    "events_sliding_distinct_users",
+    oracle="""
+WITH uh AS (
+  SELECT DISTINCT user_id, date_trunc('hour', ts) AS hour FROM events
+),
+expanded AS (
+  SELECT user_id, hour + to_hours(CAST(off AS BIGINT)) AS target
+  FROM uh, (SELECT unnest(range(0, 24)) AS off)
+),
+bounds AS (SELECT max(date_trunc('hour', ts)) AS hmax FROM events)
+SELECT CAST(target AS TIMESTAMP) AS window_end,
+       count(DISTINCT user_id)::BIGINT AS users_24h
+FROM expanded, bounds
+WHERE target <= hmax
+GROUP BY target
+ORDER BY target
+""",
+    tags=("events", "window"),
+)
+def events_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing-24h distinct users, evaluated at every hour.
+
+    Exact sliding COUNT(DISTINCT) does not decompose into window frames,
+    so: collapse to distinct (user, hour) map-side, explode each pair
+    into the 24 target hours it can serve (bounded fan-out — output is
+    hours×users, never events×24), then a plain grouped distinct.  The
+    shuffle carries the collapsed pair set, not raw events."""
+    v = views(spark, sf_dir)
+    uh = v["events"].select(
+        "user_id", F.date_trunc("hour", "ts").alias("hour")
+    ).distinct()
+    hmax = v["events"].agg(F.max(F.date_trunc("hour", "ts")).alias("hmax"))
+    expanded = uh.select(
+        "user_id",
+        F.explode(F.sequence(F.lit(0), F.lit(23))).alias("off"),
+        "hour",
+    ).select(
+        "user_id",
+        (F.col("hour") + F.make_interval(hours=F.col("off"))).alias("target"),
+    )
+    return (
+        expanded.join(F.broadcast(hmax), F.col("target") <= F.col("hmax"))
+        .groupBy(F.col("target").alias("window_end"))
+        .agg(F.count_distinct("user_id").cast("bigint").alias("users_24h"))
+        .orderBy("window_end")
+    )
+
+
+@query(
+    "events_burstiness_fano",
+    oracle="""
+WITH per_hour AS (
+  SELECT user_id, date_trunc('hour', ts) AS hour, count(*)::DOUBLE AS c
+  FROM events GROUP BY 1, 2
+),
+per_user AS (
+  SELECT user_id,
+         SUM(c) AS total,
+         SUM(c * c) AS sumsq,
+         ((epoch_us(max(hour)) // 1000000 - epoch_us(min(hour)) // 1000000)
+          / 3600 + 1)::DOUBLE AS span_hours
+  FROM per_hour GROUP BY user_id
+)
+SELECT user_id, CAST(total AS BIGINT) AS n_events,
+       CAST(span_hours AS BIGINT) AS span_hours,
+       round(((sumsq / span_hours) - (total / span_hours) * (total / span_hours))
+             / (total / span_hours), 4) AS fano
+FROM per_user
+WHERE total >= 50
+ORDER BY fano DESC, user_id
+LIMIT 20
+""",
+    tags=("events", "agg"),
+)
+def events_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user burstiness: Fano factor (variance/mean) of the hourly
+    event-count series over the user's active span, zero hours included
+    analytically (via span length) instead of materializing a gap-filled
+    series.  Fano ≈ 1 is Poisson; ≫1 flags bursty/bot-like cadence.
+
+    Exactness: hourly counts are integers, so total/sumsq/span are exact
+    doubles and the variance identity is evaluated in fixed expression
+    order — bit-identical across engines.  Two map-side-combined rollups,
+    one slim (user) shuffle, top-k merge."""
+    v = views(spark, sf_dir)
+    per_hour = v["events"].groupBy(
+        "user_id", F.date_trunc("hour", "ts").alias("hour")
+    ).agg(F.count("*").cast("double").alias("c"))
+    per_user = per_hour.groupBy("user_id").agg(
+        F.sum("c").alias("total"),
+        F.sum(F.col("c") * F.col("c")).alias("sumsq"),
+        (
+            (
+                F.max("hour").cast("long") - F.min("hour").cast("long")
+            ) / 3600 + 1
+        ).cast("double").alias("span_hours"),
+    )
+    mean = F.col("total") / F.col("span_hours")
+    fano = F.round(
+        ((F.col("sumsq") / F.col("span_hours")) - mean * mean) / mean, 4
+    )
+    return (
+        per_user.where(F.col("total") >= 50)
+        .select(
+            "user_id",
+            F.col("total").cast("bigint").alias("n_events"),
+            F.col("span_hours").cast("bigint").alias("span_hours"),
+            fano.alias("fano"),
+        )
+        .orderBy(F.desc("fano"), F.asc("user_id"))
+        .limit(20)
+    )
+
+
+@query(
+    "events_trend_mann_kendall",
+    oracle="""
+WITH daily AS (
+  SELECT event_type, CAST(ts AS DATE) AS day, count(*)::BIGINT AS c
+  FROM events GROUP BY 1, 2
+),
+idx AS (
+  SELECT event_type, c,
+         row_number() OVER (PARTITION BY event_type ORDER BY day) AS i
+  FROM daily
+),
+pairs AS (
+  SELECT a.event_type,
+         CAST(sign(b.c - a.c) AS BIGINT) AS sgn,
+         (b.c - a.c) / CAST(b.i - a.i AS DOUBLE) AS slope
+  FROM idx a JOIN idx b
+    ON a.event_type = b.event_type AND a.i < b.i
+),
+stat AS (
+  SELECT event_type, CAST(SUM(sgn) AS BIGINT) AS s_stat,
+         round(quantile_cont(slope, 0.5), 6) AS theil_sen_slope
+  FROM pairs GROUP BY event_type
+),
+ties AS (
+  SELECT event_type,
+         CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term,
+         CAST(SUM(t) AS BIGINT) AS n
+  FROM (SELECT event_type, c, count(*)::BIGINT AS t FROM daily GROUP BY 1, 2)
+  GROUP BY event_type
+),
+z AS (
+  SELECT s.event_type, s.s_stat, s.theil_sen_slope, t.n,
+         t.n * (t.n - 1) * (2 * t.n + 5) - t.tie_term AS var18,
+         round(CASE
+           WHEN s.s_stat > 0 THEN (s.s_stat - 1) / sqrt((t.n * (t.n - 1) * (2 * t.n + 5) - t.tie_term) / 18.0)
+           WHEN s.s_stat < 0 THEN (s.s_stat + 1) / sqrt((t.n * (t.n - 1) * (2 * t.n + 5) - t.tie_term) / 18.0)
+           ELSE 0.0 END, 4) AS z_mk
+  FROM stat s JOIN ties t ON s.event_type = t.event_type
+)
+SELECT event_type, n AS n_days, s_stat, CAST(var18 AS BIGINT) AS var18,
+       z_mk, theil_sen_slope,
+       CASE WHEN z_mk > 1.96 THEN 'rising'
+            WHEN z_mk < -1.96 THEN 'falling'
+            ELSE 'none' END AS trend
+FROM z
+ORDER BY event_type
+""",
+    tags=("events", "stats"),
+)
+def events_trend_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mann-Kendall monotonic-trend test + Theil-Sen slope per event type
+    over the daily volume series — the nonparametric "is this metric
+    actually trending" primitive behind alert tuning (no normality or
+    linearity assumption, robust to the outlier days the z-score ops
+    flag).
+
+    Exactness: S and the tie-corrected 18·Var(S) are pure BIGINT
+    arithmetic; floats appear only in the final z / slope, rounded to
+    fixed dp in both engines.  The Theil-Sen median interpolates over
+    pairwise-slope doubles that are bit-identical per engine (integer
+    count deltas over integer index gaps).
+
+    Scale shape: the daily rollup is the only data-volume pass (map-side
+    combined).  Everything after runs on the calendar-bounded series —
+    the i<j pair join is types × days² (5 × ~435 here), broadcast both
+    sides, so a 100 TB events table changes only the first rollup."""
+    v = views(spark, sf_dir)
+    daily = (
+        v["events"]
+        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
+        .agg(F.count("*").cast("bigint").alias("c"))
+    )
+    idx = daily.select(
+        "event_type",
+        "c",
+        F.row_number()
+        .over(W.partitionBy("event_type").orderBy("day"))
+        .alias("i"),
+    ).localCheckpoint(eager=False)
+    a, b = idx.alias("a"), idx.alias("b")
+    pairs = F.broadcast(a).join(
+        F.broadcast(b),
+        (F.col("a.event_type") == F.col("b.event_type"))
+        & (F.col("a.i") < F.col("b.i")),
+    )
+    stat = pairs.groupBy(F.col("a.event_type").alias("event_type")).agg(
+        F.sum(F.signum(F.col("b.c") - F.col("a.c")).cast("bigint"))
+        .cast("bigint")
+        .alias("s_stat"),
+        F.round(
+            F.expr("percentile((b.c - a.c) / CAST(b.i - a.i AS DOUBLE), 0.5)"), 6
+        ).alias("theil_sen_slope"),
+    )
+    ties = (
+        daily.groupBy("event_type", "c")
+        .agg(F.count("*").cast("bigint").alias("t"))
+        .groupBy("event_type")
+        .agg(
+            F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5))
+            .cast("bigint")
+            .alias("tie_term"),
+            F.sum("t").cast("bigint").alias("n"),
+        )
+    )
+    var18 = (
+        F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5) - F.col("tie_term")
+    )
+    z_raw = F.when(
+        F.col("s_stat") > 0,
+        (F.col("s_stat") - 1) / F.sqrt(F.col("var18") / 18.0),
+    ).when(
+        F.col("s_stat") < 0,
+        (F.col("s_stat") + 1) / F.sqrt(F.col("var18") / 18.0),
+    ).otherwise(F.lit(0.0))
+    return (
+        stat.join(F.broadcast(ties), "event_type")
+        .withColumn("var18", var18.cast("bigint"))
+        .withColumn("z_mk", F.round(z_raw, 4))
+        .select(
+            "event_type",
+            F.col("n").alias("n_days"),
+            "s_stat",
+            "var18",
+            "z_mk",
+            "theil_sen_slope",
+            F.when(F.col("z_mk") > 1.96, "rising")
+            .when(F.col("z_mk") < -1.96, "falling")
+            .otherwise("none")
+            .alias("trend"),
+        )
+        .orderBy("event_type")
+    )
+
+
+@query(
+    "events_kl_drift_daily",
+    oracle="""
+WITH c AS (
+  SELECT CAST(ts AS DATE) AS day, event_type, CAST(COUNT(*) AS BIGINT) AS c
+  FROM events GROUP BY 1, 2
+),
+grid AS (
+  SELECT d.day, t.event_type, coalesce(c.c, 0) AS c
+  FROM (SELECT DISTINCT day FROM c) d
+  CROSS JOIN (SELECT DISTINCT event_type FROM c) t
+  LEFT JOIN c ON c.day = d.day AND c.event_type = t.event_type
+),
+probs AS (
+  SELECT day, event_type,
+         CAST(c + 1 AS DOUBLE)
+           / (SUM(c) OVER (PARTITION BY day) + COUNT(*) OVER (PARTITION BY day))
+           AS p
+  FROM grid
+)
+SELECT a.day,
+       round(SUM(a.p * ln(a.p / b.p)), 4) AS kl_nats
+FROM probs a
+JOIN probs b ON b.day = a.day - INTERVAL 1 DAY AND b.event_type = a.event_type
+GROUP BY a.day
+ORDER BY a.day
+""",
+    tags=("events", "drift", "aggregate"),
+)
+def events_kl_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-over-day KL divergence of the event-type mix — the
+    distribution-drift alarm a streaming ingest pipeline runs on every
+    slice key.  Add-one smoothing over the full day x type grid keeps
+    both distributions strictly positive, so the divergence is finite
+    even when a type disappears for a day.
+
+    Determinism: exact BIGINT counts feed identical doubles into the
+    same ln terms; one round at 4dp absorbs summation-order ulps (same
+    contract as text_js_divergence_by_source).
+
+    Scale shape: the (day, type) count is one map-side-combined
+    aggregation; the grid is |days| x |types| (tiny — both dimensions
+    are bounded); the prev-day self-join runs on the grid, not the
+    events."""
+    v = views(spark, sf_dir)
+    c = (
+        v["events"]
+        .select(F.col("ts").cast("date").alias("day"), "event_type")
+        .groupBy("day", "event_type")
+        .agg(F.count("*").cast("bigint").alias("c"))
+    )
+    days = c.select("day").distinct()
+    types = c.select("event_type").distinct()
+    grid = (
+        days.crossJoin(F.broadcast(types))
+        .join(c, ["day", "event_type"], "left")
+        .select("day", "event_type", F.coalesce(F.col("c"), F.lit(0)).alias("c"))
+    )
+    wd = W.partitionBy("day")
+    probs = grid.select(
+        "day",
+        "event_type",
+        (
+            (F.col("c") + 1).cast("double")
+            / (F.sum("c").over(wd) + F.count("*").over(wd))
+        ).alias("p"),
+    )
+    a = probs.alias("a")
+    # the grid is |days| x |types| — broadcast the prev-day side so the
+    # self-join never sort-merges (both sides are bounded, not data-sized)
+    b = F.broadcast(probs.alias("b"))
+    return (
+        a.join(
+            b,
+            (F.col("b.day") == F.date_sub(F.col("a.day"), 1))
+            & (F.col("b.event_type") == F.col("a.event_type")),
+        )
+        .groupBy(F.col("a.day").alias("day"))
+        .agg(
+            F.round(F.sum(F.col("a.p") * F.log(F.col("a.p") / F.col("b.p"))), 4).alias(
+                "kl_nats"
+            )
+        )
+        .orderBy("day")
+    )
+
+
+@query(
+    "events_markov_entropy_rate",
+    oracle="""
+WITH seq AS (
+  SELECT event_type,
+         LAG(event_type) OVER (PARTITION BY user_id
+                               ORDER BY ts, event_id) AS prev_type
+  FROM events
+),
+c AS (
+  SELECT prev_type, event_type AS next_type, CAST(COUNT(*) AS BIGINT) AS n
+  FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2
+),
+rowtot AS (
+  SELECT prev_type, CAST(SUM(n) AS BIGINT) AS nt FROM c GROUP BY prev_type
+),
+alltot AS (SELECT CAST(SUM(n) AS BIGINT) AS g FROM c),
+h AS (
+  SELECT c.prev_type, rowtot.nt,
+         SUM(- (CAST(c.n AS DOUBLE) / rowtot.nt)
+             * log2(CAST(c.n AS DOUBLE) / rowtot.nt)) AS hbits
+  FROM c JOIN rowtot ON rowtot.prev_type = c.prev_type
+  GROUP BY c.prev_type, rowtot.nt
+)
+SELECT h.prev_type,
+       h.nt AS n_from,
+       round(CAST(h.nt AS DOUBLE) / alltot.g, 4) AS stationary_share,
+       round(h.hbits, 4) AS cond_entropy_bits,
+       round((CAST(h.nt AS DOUBLE) / alltot.g) * h.hbits, 4)
+         AS rate_contrib_bits
+FROM h CROSS JOIN alltot
+ORDER BY h.prev_type
+""",
+    tags=("events", "stats"),
+)
+def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Entropy rate of the per-user event stream under its own first-order
+    Markov model: conditional next-event entropy per source state plus
+    its stationary-weighted contribution (summing the last column gives
+    the chain's entropy rate in bits/event).  Low-entropy states =
+    predictable flows (funnels, bots); the per-state decomposition says
+    WHERE the predictability lives — the sequence-compressibility signal
+    behind behavioral anomaly scoring.
+
+    Determinism: every probability is a ratio of exact BIGINT transition
+    counts — identical doubles into log2 on both engines, one final
+    round per column (same contract as events_hourly_entropy).
+
+    Scale shape: one user_id window shuffle orders the streams; all the
+    entropy math runs on the |types|^2 transition matrix."""
+    v = views(spark, sf_dir)
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = v["events"].select(
+        "event_type", F.lag("event_type").over(w).alias("prev_type")
+    )
+    c = (
+        seq.where(F.col("prev_type").isNotNull())
+        .groupBy("prev_type", F.col("event_type").alias("next_type"))
+        .agg(F.count("*").cast("bigint").alias("n"))
+    )
+    rowtot = c.groupBy("prev_type").agg(F.sum("n").cast("bigint").alias("nt"))
+    alltot = c.agg(F.sum("n").cast("bigint").alias("g"))
+    p = F.col("n").cast("double") / F.col("nt")
+    h = (
+        c.join(F.broadcast(rowtot), "prev_type")
+        .groupBy("prev_type", "nt")
+        .agg(F.sum(-p * F.log2(p)).alias("hbits"))
+    )
+    share = F.col("nt").cast("double") / F.col("g")
+    return (
+        h.crossJoin(F.broadcast(alltot))
+        .select(
+            "prev_type",
+            F.col("nt").alias("n_from"),
+            F.round(share, 4).alias("stationary_share"),
+            F.round(F.col("hbits"), 4).alias("cond_entropy_bits"),
+            F.round(share * F.col("hbits"), 4).alias("rate_contrib_bits"),
+        )
+        .orderBy("prev_type")
+    )
+
+
+@query(
+    "events_from_json_struct",
+    oracle="""
+SELECT event_id,
+       CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_val,
+       CASE WHEN CAST(json_extract_string(props, '$.k') AS INTEGER) >= 50
+            THEN 'high' ELSE 'low' END AS k_band
+FROM events
+ORDER BY event_id
+""",
+    tags=("events", "json"),
+)
+def events_from_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Schema-full JSON parsing (`from_json`) — unlike get_json_object this
+    yields a typed struct column usable downstream without re-parsing."""
+    v = views(spark, sf_dir)
+    parsed = F.from_json("props", "k INT")
+    return (
+        v["events"]
+        .select("event_id", parsed.alias("p"))
+        .select(
+            "event_id",
+            F.col("p.k").alias("k_val"),
+            F.when(F.col("p.k") >= 50, "high").otherwise("low").alias("k_band"),
+        )
+        .orderBy("event_id")
+    )

@@ -621,3 +621,51 @@ def multimodal_aspect_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("format")
     )
+
+
+@query(
+    "multimodal_exact_dupes_by_hash",
+    oracle="""
+WITH params AS (
+  SELECT doc_id,
+         CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'gif' END AS fmt,
+         64 + ((ascii(substr(text, 1, 1)) % 256) * 7 + strlen(text)) % 1856 AS w,
+         64 + ((ascii(substr(text, 1, 1)) % 256) * 13 + strlen(text) * 3) % 1016 AS h
+  FROM documents
+)
+SELECT min(doc_id) AS keeper, count(*)::BIGINT AS n_copies, fmt
+FROM params
+GROUP BY fmt, w, h
+HAVING count(*) > 1
+ORDER BY keeper
+""",
+    tags=("multimodal", "dedup", "pandas-udf"),
+)
+def multimodal_exact_dupes_by_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact binary dedup of media payloads by content digest.
+
+    The Spark side hashes the ACTUAL synthesized container bytes
+    (sha2-256 over the binary column) and clusters on the digest — the
+    pattern for byte-identical image/audio dedup over a lake, where the
+    digest shuffles (32 bytes) instead of payloads (MBs).  The oracle
+    cannot hash bytes it never materializes; it predicts the clusters
+    analytically from the payload-synthesis parameters (format cycle +
+    content-derived dimensions — multimodal.py:71), so a green row
+    proves the byte-level clustering matches the content identity."""
+    media = media_payloads(spark, sf_dir)
+    fmt = (
+        F.when(F.col("doc_id") % 3 == 0, "png")
+        .when(F.col("doc_id") % 3 == 1, "jpeg")
+        .otherwise("gif")
+    )
+    return (
+        media.select("doc_id", fmt.alias("fmt"), F.sha2("payload", 256).alias("digest"))
+        .groupBy("digest", "fmt")
+        .agg(
+            F.min("doc_id").alias("keeper"),
+            F.count("*").cast("bigint").alias("n_copies"),
+        )
+        .where(F.col("n_copies") > 1)
+        .select("keeper", "n_copies", "fmt")
+        .orderBy("keeper")
+    )

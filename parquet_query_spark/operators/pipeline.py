@@ -732,3 +732,323 @@ def pipeline_holdout_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("split", "lang")
     )
+
+
+@query(
+    "pipeline_curriculum_order",
+    oracle=r"""
+WITH scored AS (
+  SELECT doc_id,
+         round(
+           0.5 * (len(list_distinct(string_split_regex(trim(text), '\s+')))::DOUBLE
+                  / len(string_split_regex(trim(text), '\s+')))
+           + 0.5 * least(len(string_split_regex(trim(text), '\s+'))::DOUBLE / 500.0, 1.0),
+           6) AS score,
+         len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens
+  FROM documents
+),
+tiled AS (
+  SELECT doc_id, score, n_tokens,
+         ntile(10) OVER (ORDER BY score DESC, doc_id) AS decile
+  FROM scored
+)
+SELECT decile,
+       CASE WHEN decile <= 3 THEN 'phase1_high'
+            WHEN decile <= 7 THEN 'phase2_mid'
+            ELSE 'phase3_tail' END AS phase,
+       count(*)::BIGINT AS n_docs,
+       CAST(SUM(n_tokens) AS BIGINT) AS phase_tokens,
+       round(CAST(SUM(CAST(score AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS avg_score,
+       round(MIN(score), 6) AS min_score,
+       round(MAX(score), 6) AS max_score
+FROM tiled
+GROUP BY decile
+ORDER BY decile
+""",
+    tags=("pipeline", "text"),
+)
+def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Curriculum assignment for training: score every document
+    (lexical-diversity + length), NTILE into quality deciles, map deciles
+    to curriculum phases, and report token budget per decile.
+
+    Determinism: the per-doc score is rounded to 6 dp before ranking
+    (NTILE ties broken by doc_id), and the group average accumulates in
+    decimal(18,6) so reduction order cannot flip the rounded output.
+    Scale: scoring is scan-side; NTILE sorts (score, doc_id) pairs only."""
+    v = views(spark, sf_dir)
+    toks = F.split(F.trim(F.col("text")), r"\s+")
+    n_tok = F.size(toks)
+    score = F.round(
+        0.5 * (F.size(F.array_distinct(toks)).cast("double") / n_tok)
+        + 0.5 * F.least(n_tok.cast("double") / 500.0, F.lit(1.0)),
+        6,
+    )
+    scored = v["documents"].select(
+        "doc_id", score.alias("score"), n_tok.cast("bigint").alias("n_tokens")
+    )
+    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+    tiled = scored.withColumn("decile", F.ntile(10).over(w))
+    phase = (
+        F.when(F.col("decile") <= 3, "phase1_high")
+        .when(F.col("decile") <= 7, "phase2_mid")
+        .otherwise("phase3_tail")
+    )
+    return (
+        tiled.groupBy("decile")
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum("n_tokens").cast("bigint").alias("phase_tokens"),
+            F.round(
+                F.sum(F.col("score").cast("decimal(18,6)")).cast("double")
+                / F.count("*"),
+                6,
+            ).alias("avg_score"),
+            F.round(F.min("score"), 6).alias("min_score"),
+            F.round(F.max("score"), 6).alias("max_score"),
+        )
+        .select("decile", phase.alias("phase"), "n_docs", "phase_tokens",
+                "avg_score", "min_score", "max_score")
+        .orderBy("decile")
+    )
+
+
+@query(
+    "pipeline_mix_rebalance_delta",
+    oracle=r"""
+WITH src AS (
+  SELECT source,
+         count(*)::BIGINT AS n_docs,
+         CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS tokens
+  FROM documents GROUP BY source
+),
+tot AS (SELECT CAST(SUM(tokens) AS BIGINT) AS t, CAST(SUM(CAST(floor(sqrt(tokens) * 1000000) AS BIGINT)) AS BIGINT) AS rsum FROM src)
+SELECT source, n_docs, tokens,
+       CAST(tokens * 10000 // t AS BIGINT) AS current_bp,
+       CAST(CAST(floor(sqrt(tokens) * 1000000) AS BIGINT) * 10000 // rsum AS BIGINT) AS target_bp,
+       CAST((CAST(floor(sqrt(tokens) * 1000000) AS BIGINT) * 10000 // rsum) * t // 10000
+            - tokens AS BIGINT) AS token_delta,
+       CAST(((CAST(floor(sqrt(tokens) * 1000000) AS BIGINT) * 10000 // rsum) * t // 10000
+            - tokens) // greatest(tokens // n_docs, 1) AS BIGINT) AS doc_delta
+FROM src, tot
+ORDER BY source
+""",
+    tags=("pipeline",),
+)
+def pipeline_mix_rebalance_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mixture-rebalance worksheet: given the τ=0.5 temperature-scaled
+    target mixture (weights ∝ √tokens — the standard multilingual-LM
+    upsampling curve), how many tokens/documents to add (+) or remove
+    (−) per source to hit it.  Complements pipeline_source_mixing (which
+    reports weights) by emitting the actionable delta.
+
+    Exactness: √tokens is quantized to integer micro-units BEFORE the
+    normalizing sum, then every share/delta is floor-divided integer
+    arithmetic — no float reduction anywhere, so both engines agree to
+    the last digit.  One scan, source-bounded rollup."""
+    v = views(spark, sf_dir)
+    src = v["documents"].groupBy("source").agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum(F.size(F.split(F.trim(F.col("text")), r"\s+")))
+        .cast("bigint")
+        .alias("tokens"),
+    )
+    r = F.floor(F.sqrt(F.col("tokens")) * 1000000).cast("bigint")
+    keyed = src.withColumn("r", r)
+    tot = keyed.agg(
+        F.sum("tokens").cast("bigint").alias("t"),
+        F.sum("r").cast("bigint").alias("rsum"),
+    )
+    out = keyed.crossJoin(F.broadcast(tot))
+    target_bp = F.expr("r * 10000 DIV rsum")
+    token_delta = F.expr("(r * 10000 DIV rsum) * t DIV 10000 - tokens")
+    return (
+        out.select(
+            "source",
+            "n_docs",
+            "tokens",
+            F.expr("tokens * 10000 DIV t").cast("bigint").alias("current_bp"),
+            target_bp.cast("bigint").alias("target_bp"),
+            token_delta.cast("bigint").alias("token_delta"),
+            F.expr(
+                "((r * 10000 DIV rsum) * t DIV 10000 - tokens) "
+                "DIV greatest(tokens DIV n_docs, 1)"
+            ).cast("bigint").alias("doc_delta"),
+        )
+        .orderBy("source")
+    )
+
+
+_ANNEAL_BUDGET = 1_000_000  # tokens; 90% phase-1 uniform, 10% anneal
+
+
+@query(
+    "pipeline_annealing_mix",
+    oracle=f"""
+WITH per_source AS (
+  SELECT source,
+         CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(length(trim(text)) - length(replace(trim(text), ' ', '')) + 1)
+              AS BIGINT) AS tokens,
+         CAST(SUM(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS BIGINT) AS n_long
+  FROM documents GROUP BY source
+),
+weighted AS (
+  SELECT *,
+         0.5 + CAST(n_long AS DOUBLE) / n_docs AS quality_w
+  FROM per_source
+),
+tot AS (
+  SELECT CAST(SUM(tokens) AS BIGINT) AS t_all,
+         SUM(tokens * quality_w) AS t_weighted
+  FROM weighted
+)
+SELECT source, tokens,
+       round(CAST(n_long AS DOUBLE) / n_docs, 4) AS frac_long,
+       CAST(round({_ANNEAL_BUDGET} * 0.9 * tokens / t_all) AS BIGINT)
+         AS phase1_tokens,
+       CAST(round({_ANNEAL_BUDGET} * 0.1 * tokens * quality_w / t_weighted) AS BIGINT)
+         AS phase2_tokens,
+       round({_ANNEAL_BUDGET} * 0.1 * quality_w / t_weighted, 6) AS phase2_epochs
+FROM weighted CROSS JOIN tot
+ORDER BY source
+""",
+    tags=("pipeline", "mixing"),
+)
+def pipeline_annealing_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-phase training-mix schedule (pretrain + anneal): phase 1
+    allocates 90% of the token budget proportional to each source's raw
+    token share; phase 2 (the anneal) re-weights by a quality factor
+    (0.5 + fraction of long documents), upsampling high-quality sources
+    — the schedule shape used by data-mixture annealing recipes.
+    phase2_epochs = passes over the source the anneal allocation
+    implies (sampling rate sanity check: >1 means repetition).
+
+    Scale shape: one map-side-combined per-source aggregation; the
+    budget math runs on |sources| rows against a broadcast 1-row total."""
+    v = views(spark, sf_dir)
+    toks = (
+        F.length(F.trim(F.col("text")))
+        - F.length(F.replace(F.trim(F.col("text")), F.lit(" "), F.lit("")))
+        + 1
+    )
+    per_source = v["documents"].groupBy("source").agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum(toks).cast("bigint").alias("tokens"),
+        F.sum(F.when(F.col("n_chars") >= 300, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_long"),
+    )
+    weighted = per_source.withColumn(
+        "quality_w", F.lit(0.5) + F.col("n_long").cast("double") / F.col("n_docs")
+    )
+    tot = weighted.agg(
+        F.sum("tokens").cast("bigint").alias("t_all"),
+        F.sum(F.col("tokens") * F.col("quality_w")).alias("t_weighted"),
+    )
+    b = float(_ANNEAL_BUDGET)
+    return (
+        weighted.crossJoin(F.broadcast(tot))
+        .select(
+            "source",
+            "tokens",
+            F.round(F.col("n_long").cast("double") / F.col("n_docs"), 4).alias(
+                "frac_long"
+            ),
+            F.round(b * 0.9 * F.col("tokens") / F.col("t_all"))
+            .cast("bigint")
+            .alias("phase1_tokens"),
+            F.round(b * 0.1 * F.col("tokens") * F.col("quality_w") / F.col("t_weighted"))
+            .cast("bigint")
+            .alias("phase2_tokens"),
+            F.round(b * 0.1 * F.col("quality_w") / F.col("t_weighted"), 6).alias(
+                "phase2_epochs"
+            ),
+        )
+        .orderBy("source")
+    )
+
+
+_SHUF_MOD = 2147483647  # 2^31 - 1 (Park-Miller modulus)
+
+
+_SHUF_MULT = 48271
+
+
+_SHUF_EPOCH = 8191
+
+
+_N_SHARDS = 16
+
+
+@query(
+    "pipeline_epoch_shuffle_blocks",
+    oracle=f"""
+WITH keyed AS (
+  SELECT e.epoch, d.doc_id,
+         (d.doc_id * {_SHUF_MULT} + e.epoch * {_SHUF_EPOCH}) % {_SHUF_MOD} AS k
+  FROM documents d
+  CROSS JOIN (SELECT unnest([0, 1, 2]) AS epoch) e
+),
+placed AS (
+  SELECT epoch, doc_id, k % {_N_SHARDS} AS shard,
+         ROW_NUMBER() OVER (PARTITION BY epoch, k % {_N_SHARDS}
+                            ORDER BY k, doc_id) AS pos
+  FROM keyed
+)
+SELECT CAST(epoch AS BIGINT) AS epoch, CAST(shard AS BIGINT) AS shard,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(pos * doc_id) AS BIGINT) AS order_checksum
+FROM placed GROUP BY epoch, shard ORDER BY epoch, shard
+""",
+    tags=("pipeline", "shuffle"),
+)
+def pipeline_epoch_shuffle_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic per-epoch corpus shuffle: every (doc, epoch) gets a
+    Park-Miller-style key (doc_id * 48271 + epoch * 8191 mod 2^31-1),
+    docs land in key-mod-16 shards and are ordered by key within the
+    shard — the reshuffle-per-epoch a dataloader needs, reproducible
+    from (doc_id, epoch) alone with no stored permutation.  The
+    order_checksum (sum of position x doc_id) pins the exact within-
+    shard order cross-engine, and differs across epochs (the point).
+
+    Scale shape: keys are scan-side integer arithmetic (no overflow:
+    doc_id * 48271 fits BIGINT to ~1.9e14 docs); the only window
+    partitions by (epoch, shard) — at production scale shard count
+    scales with the corpus, keeping partitions executor-sized."""
+    v = views(spark, sf_dir)
+    epochs = spark.range(3).select(F.col("id").alias("epoch"))
+    keyed = (
+        v["documents"]
+        .select("doc_id")
+        .crossJoin(F.broadcast(epochs))
+        .select(
+            "epoch",
+            "doc_id",
+            (
+                (F.col("doc_id") * _SHUF_MULT + F.col("epoch") * _SHUF_EPOCH)
+                % _SHUF_MOD
+            ).alias("k"),
+        )
+    )
+    placed = keyed.select(
+        "epoch", "doc_id", "k", (F.col("k") % _N_SHARDS).alias("shard")
+    ).withColumn(
+        "pos",
+        F.row_number().over(
+            Window.partitionBy("epoch", "shard").orderBy("k", "doc_id")
+        ),
+    )
+    return (
+        placed.groupBy(
+            F.col("epoch").cast("bigint").alias("epoch"),
+            F.col("shard").cast("bigint").alias("shard"),
+        )
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum(F.col("pos") * F.col("doc_id")).cast("bigint").alias(
+                "order_checksum"
+            ),
+        )
+        .orderBy("epoch", "shard")
+    )

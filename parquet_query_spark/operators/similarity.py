@@ -16,7 +16,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from parquet_query_spark.operators.catalog import query, views
@@ -40,12 +40,51 @@ def _norm(a: str) -> F.Column:
     return F.sqrt(F.expr(f"aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + v * v)"))
 
 
+# Pair math over the ``qv``/``ev`` vector columns as SQL text, one spelling
+# per engine.  Distances are ROUNDED to 6dp before any ranking or ratio so
+# both engines rank identical values.
+
+_SPARK_SQDIST = (
+    "round(aggregate(zip_with(qv, ev, (x, y) -> "
+    "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
+    "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v), 6)"
+)
+
+_DUCKDB_SQDIST = """
+round(list_sum(list_transform(list_zip(qv, ev), p ->
+  (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
+  * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))), 6)
+"""
+
+_SPARK_COSINE = (
+    "round(aggregate(zip_with(qv, ev, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+    "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) "
+    "/ (sqrt(aggregate(qv, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))) "
+    "* sqrt(aggregate(ev, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))), 6)"
+)
+
 _DUCKDB_COSINE = """
 round(
   list_sum(list_transform(list_zip(qv, ev), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
   / (sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
      * sqrt(list_sum(list_transform(ev, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
 """
+
+
+def _fan_out(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned to ``defaultParallelism`` when it has fewer
+    partitions, else ``df`` itself.
+
+    Pair scoring is compute-bound.  At 100 TB the corpus scan arrives
+    with far more splits than cores, but a small corpus file arrives
+    row-group-bounded (8 splits for the 33 MB 64x file) and leaves 3/4
+    of the machine idle on the dominant stage.  Fan out only in that
+    case, so the zero-shuffle shape is what a real cluster runs — the
+    vector shuffle this adds is negligible next to the per-pair math."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
 
 
 @query(
@@ -74,8 +113,6 @@ def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ranking happens on the *rounded* score with neighbor_id tie-break so the
     result is a total order (cross-engine deterministic)."""
-    from pyspark.sql import Window as W
-
     v = views(spark, sf_dir)
     emb = v["embeddings"]
     q = (
@@ -83,16 +120,9 @@ def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("qid"), _as_double("embedding").alias("qv"))
     )
     e = emb.select(F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("ev"))
-    # Pair scoring is compute-bound.  At 100 TB the corpus scan arrives
-    # with far more splits than cores, but a small corpus file arrives
-    # row-group-bounded (8 splits for the 33 MB 64x file) and leaves 3/4
-    # of the machine idle on the dominant stage.  Fan out only in that
-    # case — the corpus-vector shuffle this adds is negligible next to
-    # the per-pair scoring math, and the result is partition-invariant
-    # (the per-partition top-K union always contains the global top-K).
-    target = spark.sparkContext.defaultParallelism
-    if e.rdd.getNumPartitions() < target:
-        e = e.repartition(target)
+    # The result is partition-invariant (the per-partition top-K union
+    # always contains the global top-K), so the fan-out is safe here.
+    e = _fan_out(e)
     scored = (
         e.crossJoin(F.broadcast(q))
         .where(F.col("neighbor_id") != F.col("qid"))
@@ -280,8 +310,6 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking in pure SQL (the left-fold list_sum form matches Spark's
     aggregate() summation order — same pattern the green knn oracle
     uses), making the full ANN path hash-verifiable."""
-    from pyspark.sql import Window as W
-
     v = views(spark, sf_dir)
     planes = _lsh_planes(16, _DIM)
     plane_lits = F.array(
@@ -476,7 +504,7 @@ def _assign_cells_scanside(emb: DataFrame, cent_rows) -> DataFrame:
     # order), and swapping in a worse-than-any-real sentinel + max-cid
     # tie-break would silently diverge from the window form and the
     # oracle's rank semantics.  Pinned in
-    # tests/test_round14_advice.py::test_zero_norm_document_assigns_lowest_label.
+    # tests/test_similarity_ops.py::test_zero_norm_document_assigns_lowest_label.
     best = F.expr(
         """
         array_sort(transform(_cents, ct -> named_struct(
@@ -490,15 +518,7 @@ def _assign_cells_scanside(emb: DataFrame, cent_rows) -> DataFrame:
           'lab', ct.cid)))[0].lab
         """
     )
-    # Small-corpus fan-out (the knn_bruteforce pattern): at 100 TB the scan
-    # arrives with far more splits than cores, but a row-group-bounded
-    # local file would leave most of the machine idle on the fold + the
-    # downstream scoring stage.  Only fires when starved, so the zero-
-    # shuffle shape is what a real cluster runs.
-    target = emb.sparkSession.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < target:
-        emb = emb.repartition(target)
-    return emb.withColumn("_cents", _km_cent_lit(cent_rows)).select(
+    return _fan_out(emb).withColumn("_cents", _km_cent_lit(cent_rows)).select(
         "vec_id", "ev", best.alias("c_label")
     )
 
@@ -572,8 +592,6 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantize identically); production would k-means them — the plan shape is
     unchanged.  Cell assignment is a broadcast join, candidate scoring
     shuffles only on cell id."""
-    from pyspark.sql import Window as W
-
     v = views(spark, sf_dir)
     emb = v["embeddings"].select(
         "vec_id", "label", _as_double("embedding").alias("ev")
@@ -1540,8 +1558,6 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     LUT entries are floored to integer micro-units so the ADC sum is an
     exact BIGINT on both engines — the whole approximate pipeline is
     hash-verifiable, argmins included."""
-    from pyspark.sql import Window as W
-
     v = views(spark, sf_dir)
     emb = v["embeddings"].select(
         "vec_id", "label", _as_double("embedding").alias("ev")
@@ -2447,8 +2463,6 @@ def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the eval slice is FIXED (200 vectors — all-pairs there
     is 40k scored rows, eval-suite-bounded, not corpus-bounded); the
     per-qid ranking partitions on qid."""
-    from pyspark.sql import Window as W
-
     v = views(spark, sf_dir)
     sub = v["embeddings"].where(F.col("vec_id") < 200).select(
         "vec_id", "label", _as_double("embedding").alias("v")
@@ -2506,4 +2520,467 @@ def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("accuracy_bp"),
         )
         .orderBy("label")
+    )
+
+
+def _nprobe_sweep_oracle() -> str:
+    cos_ec = _DUCKDB_COSINE_RAW.format(a="e.ev", b="c.cv")
+    cos_qc = _DUCKDB_COSINE_RAW.format(a="q.qv", b="c.cv")
+    cos_cand = _DUCKDB_COSINE_RAW.format(a="p.qv", b="p.ev")
+    cos_truth = _DUCKDB_COSINE_RAW.format(a="q.qv", b="e.ev")
+    return f"""
+WITH cent_elems AS (
+  SELECT label, i, round(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS v
+  FROM embeddings, (SELECT unnest(range(1, 65)) AS i)
+  GROUP BY label, i
+),
+cent AS (SELECT label, list(v ORDER BY i) AS cv FROM cent_elems GROUP BY label),
+corpus AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
+  FROM embeddings
+),
+assigned AS (
+  SELECT vec_id, ev, c_label FROM (
+    SELECT e.vec_id, e.ev, c.label AS c_label,
+           ROW_NUMBER() OVER (PARTITION BY e.vec_id
+             ORDER BY {cos_ec} DESC, c.label) AS rn
+    FROM corpus e CROSS JOIN cent c
+  ) WHERE rn = 1
+),
+queries AS (SELECT vec_id AS qid, ev AS qv FROM corpus WHERE vec_id < {N_IVF_QUERIES}),
+probe_rank AS (
+  SELECT q.qid, q.qv, c.label AS c_label,
+         ROW_NUMBER() OVER (PARTITION BY q.qid
+           ORDER BY {cos_qc} DESC, c.label) AS probe_rn
+  FROM queries q CROSS JOIN cent c
+),
+truth AS (
+  SELECT qid, neighbor_id FROM (
+    SELECT q.qid, e.vec_id AS neighbor_id,
+           ROW_NUMBER() OVER (PARTITION BY q.qid
+             ORDER BY {cos_truth} DESC, e.vec_id) AS rnk
+    FROM queries q CROSS JOIN corpus e
+    WHERE e.vec_id <> q.qid
+  ) WHERE rnk <= 5
+),
+sweep AS (SELECT unnest(range(1, 4)) AS nprobe),
+cand AS (
+  SELECT s.nprobe, p.qid, p.qv, a.vec_id AS neighbor_id, a.ev
+  FROM sweep s
+  JOIN probe_rank p ON p.probe_rn <= s.nprobe
+  JOIN assigned a ON a.c_label = p.c_label
+  WHERE a.vec_id <> p.qid
+),
+approx AS (
+  SELECT nprobe, qid, neighbor_id FROM (
+    SELECT p.nprobe, p.qid, p.neighbor_id,
+           ROW_NUMBER() OVER (PARTITION BY p.nprobe, p.qid
+             ORDER BY {cos_cand} DESC, p.neighbor_id) AS rnk
+    FROM cand p
+  ) WHERE rnk <= 5
+),
+hits AS (
+  SELECT a.nprobe, count(*) AS n_hits
+  FROM approx a JOIN truth t ON t.qid = a.qid AND t.neighbor_id = a.neighbor_id
+  GROUP BY a.nprobe
+),
+scanned AS (
+  SELECT nprobe, count(*) AS n_scanned FROM cand GROUP BY nprobe
+),
+sizes AS (SELECT count(*)::BIGINT AS corpus_n FROM corpus)
+SELECT CAST(s.nprobe AS INTEGER) AS nprobe,
+       CAST(COALESCE(h.n_hits, 0) * 10000 // ({N_IVF_QUERIES} * 5) AS BIGINT) AS recall_bp,
+       CAST(sc.n_scanned * 10000 // ({N_IVF_QUERIES} * z.corpus_n) AS BIGINT) AS scanned_bp
+FROM sweep s
+LEFT JOIN hits h ON h.nprobe = s.nprobe
+JOIN scanned sc ON sc.nprobe = s.nprobe
+CROSS JOIN sizes z
+ORDER BY nprobe
+"""
+
+
+@query(
+    "embedding_ivf_nprobe_sweep",
+    oracle=_nprobe_sweep_oracle(),
+    tags=("similarity", "ann", "qa"),
+)
+def embedding_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The IVF tuning curve: recall@5 vs corpus-scanned fraction at
+    nprobe ∈ {1,2,3} — the table consulted before picking nprobe for an
+    ANN deployment (more probed cells = higher recall, more scan).
+
+    Plan shape: ONE cell-assignment pass over the corpus (broadcast
+    centroids), ONE probe ranking per query, then the sweep explodes
+    only the (nprobe, probed-cell) pairs — the corpus is never
+    rescanned per nprobe level.  Exact ground truth comes from the
+    brute-force kernel on the bounded query slice.  Recall and scan
+    share are floor-divided integer basis points (order-free)."""
+    v = views(spark, sf_dir)
+    emb = v["embeddings"].select("vec_id", "label", _as_double("embedding").alias("ev"))
+    cent = (
+        emb.select("label", F.posexplode("ev").alias("pos", "val"))
+        .groupBy("label", "pos")
+        .agg(F.round(F.avg("val"), 6).alias("v"))
+        .groupBy("label")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "v"))), lambda s: s["v"]
+            ).alias("cv")
+        )
+        .select(F.col("label").alias("c_label"), "cv")
+    )
+    cos_ec = F.round(_dot("ev", "cv") / (_norm("ev") * _norm("cv")), 6)
+    w_assign = W.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("c_label"))
+    assigned = (
+        emb.crossJoin(F.broadcast(cent))
+        .select("vec_id", "ev", "c_label", cos_ec.alias("sim"))
+        .withColumn("rn", F.row_number().over(w_assign))
+        .where(F.col("rn") == 1)
+        .select("vec_id", "ev", "c_label")
+    )
+    q = emb.where(F.col("vec_id") < N_IVF_QUERIES).select(
+        F.col("vec_id").alias("qid"), F.col("ev").alias("qv")
+    )
+    cos_qc = F.round(_dot("qv", "cv") / (_norm("qv") * _norm("cv")), 6)
+    w_probe = W.partitionBy("qid").orderBy(F.desc("sim"), F.asc("c_label"))
+    probe_rank = (
+        q.crossJoin(F.broadcast(cent))
+        .select("qid", "qv", "c_label", cos_qc.alias("sim"))
+        .withColumn("probe_rn", F.row_number().over(w_probe))
+        .select("qid", "qv", "c_label", "probe_rn")
+    )
+    cos_qe = F.round(_dot("qv", "ev") / (_norm("qv") * _norm("ev")), 6)
+    w_truth = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    truth = (
+        emb.crossJoin(F.broadcast(q))
+        .where(F.col("vec_id") != F.col("qid"))
+        .select("qid", F.col("vec_id").alias("neighbor_id"), cos_qe.alias("cosine"))
+        .withColumn("rnk", F.row_number().over(w_truth))
+        .where(F.col("rnk") <= 5)
+        .select("qid", "neighbor_id")
+    )
+    sweep = spark.range(1, 4).select(F.col("id").cast("int").alias("nprobe"))
+    cand = (
+        assigned.join(
+            F.broadcast(
+                probe_rank.crossJoin(sweep).where(F.col("probe_rn") <= F.col("nprobe"))
+            ),
+            "c_label",
+        )
+        .where(F.col("vec_id") != F.col("qid"))
+        .select("nprobe", "qid", "qv", F.col("vec_id").alias("neighbor_id"), "ev")
+    )
+    w_rank = W.partitionBy("nprobe", "qid").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    approx = (
+        cand.select("nprobe", "qid", "neighbor_id", cos_qe.alias("cosine"))
+        .withColumn("rnk", F.row_number().over(w_rank))
+        .where(F.col("rnk") <= 5)
+        .select("nprobe", "qid", "neighbor_id")
+    )
+    # truth/hits/scanned are all query-slice-bounded (≤ queries×5×nprobe
+    # rows) — broadcast them so no SortMergeJoin survives (VERDICT r7 #6)
+    hits = approx.join(F.broadcast(truth), ["qid", "neighbor_id"]).groupBy(
+        "nprobe"
+    ).agg(F.count("*").alias("n_hits"))
+    scanned = cand.groupBy("nprobe").agg(F.count("*").alias("n_scanned"))
+    corpus_n = emb.agg(F.count("*").cast("bigint").alias("corpus_n"))
+    return (
+        sweep.join(F.broadcast(hits), "nprobe", "left")
+        .join(F.broadcast(scanned), "nprobe")
+        .crossJoin(F.broadcast(corpus_n))
+        .select(
+            "nprobe",
+            F.expr(
+                f"CAST(coalesce(n_hits, 0) * 10000 DIV ({N_IVF_QUERIES} * 5) AS BIGINT)"
+            ).alias("recall_bp"),
+            F.expr(
+                f"CAST(n_scanned * 10000 DIV ({N_IVF_QUERIES} * corpus_n) AS BIGINT)"
+            ).alias("scanned_bp"),
+        )
+        .orderBy("nprobe")
+    )
+
+
+@query(
+    "embedding_intrinsic_dim_twonn",
+    oracle=f"""
+WITH q AS (
+  SELECT vec_id AS qid, embedding AS qv, label
+  FROM embeddings WHERE vec_id % 10 = 0 AND vec_id < 5000
+),
+pairs AS (
+  SELECT q.qid, q.label, e.vec_id AS nid, {_DUCKDB_SQDIST} AS d
+  FROM q CROSS JOIN (SELECT vec_id, embedding AS ev FROM embeddings) e
+  WHERE e.vec_id <> q.qid
+),
+ranked AS (
+  SELECT qid, label, d,
+         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d, nid) AS rnk
+  FROM pairs WHERE d > 0
+),
+two AS (
+  SELECT qid, label,
+         MIN(CASE WHEN rnk = 1 THEN d END) AS d1,
+         MIN(CASE WHEN rnk = 2 THEN d END) AS d2
+  FROM ranked WHERE rnk <= 2 GROUP BY qid, label
+)
+SELECT label,
+       CAST(COUNT(*) AS BIGINT) AS n_points,
+       round(SUM(0.5 * ln(d2 / d1)), 4) AS sum_log_ratio,
+       round(COUNT(*) / nullif(SUM(0.5 * ln(d2 / d1)), 0), 2) AS intrinsic_dim
+FROM two WHERE d2 IS NOT NULL
+GROUP BY label ORDER BY label
+""",
+    tags=("embedding", "similarity", "profile"),
+)
+def embedding_intrinsic_dim_twonn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TwoNN intrinsic-dimension estimate per label (Facco et al. 2017):
+    for each sampled point the ratio of its 2nd to 1st nearest-neighbor
+    distance mu = d2/d1 follows a Pareto with shape = the data's
+    intrinsic dimension, so id = n / sum(ln mu).  Squared distances are
+    used (ln ratio halved) to skip the sqrt.  Low-ID labels are
+    structured (near-duplicates, templated text); embedding curation
+    uses this to pick compression/index parameters.
+
+    Determinism: distances round to 6dp before ranking and the ratio;
+    zero-distance duplicates are discarded (standard TwoNN), points
+    without two distinct-distance neighbors drop out.
+
+    Scale shape: deterministic BOUNDED query sample (`vec_id % 10` capped
+    at 500 points — the estimator converges on a fixed-size sample, so
+    cost stays O(sample x corpus), one corpus scan, never quadratic)
+    against a full corpus scan — same guarded fan-out + two-phase bounded
+    top-k as knn_bruteforce (similarity.py:95); production would swap the
+    exact scan for IVF candidates (ann_ivf_cosine) without touching the
+    estimator."""
+    v = views(spark, sf_dir)
+    emb = v["embeddings"]
+    q = emb.where((F.col("vec_id") % 10 == 0) & (F.col("vec_id") < 5000)).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"), "label"
+    )
+    e = _fan_out(emb.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("ev")))
+    pairs = (
+        e.crossJoin(F.broadcast(q))
+        .where(F.col("nid") != F.col("qid"))
+        .select("qid", "label", "nid", F.expr(_SPARK_SQDIST).alias("d"))
+        .where(F.col("d") > 0)
+    )
+    # two-phase bounded top-k: per-partition top-2 first, then global
+    pid = F.spark_partition_id().alias("pid")
+    w_part = W.partitionBy("qid", "pid").orderBy("d", "nid")
+    partial = (
+        pairs.select("qid", "label", "nid", "d", pid)
+        .withColumn("prnk", F.row_number().over(w_part))
+        .where(F.col("prnk") <= 2)
+    )
+    w = W.partitionBy("qid").orderBy("d", "nid")
+    two = (
+        partial.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= 2)
+        .groupBy("qid", "label")
+        .agg(
+            F.min(F.when(F.col("rnk") == 1, F.col("d"))).alias("d1"),
+            F.min(F.when(F.col("rnk") == 2, F.col("d"))).alias("d2"),
+        )
+        .where(F.col("d2").isNotNull())
+    )
+    log_ratio = 0.5 * F.log(F.col("d2") / F.col("d1"))
+    return (
+        two.groupBy("label")
+        .agg(
+            F.count("*").cast("bigint").alias("n_points"),
+            F.round(F.sum(log_ratio), 4).alias("sum_log_ratio"),
+            F.round(
+                F.count("*") / F.nullif(F.sum(log_ratio), F.lit(0.0)), 2
+            ).alias("intrinsic_dim"),
+        )
+        .orderBy("label")
+    )
+
+
+@query(
+    "embedding_hubness_kocc",
+    oracle=f"""
+WITH q AS (
+  SELECT vec_id AS qid, embedding AS qv
+  FROM embeddings WHERE vec_id % 10 = 0 AND vec_id < 5000
+),
+scored AS (
+  SELECT q.qid, e.vec_id AS nid, {_DUCKDB_COSINE} AS cosine
+  FROM q CROSS JOIN (SELECT vec_id, embedding AS ev FROM embeddings) e
+  WHERE e.vec_id <> q.qid
+),
+top5 AS (
+  SELECT qid, nid FROM (
+    SELECT qid, nid,
+           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rnk
+    FROM scored
+  ) WHERE rnk <= 5
+),
+kocc AS (
+  SELECT nid, CAST(COUNT(*) AS BIGINT) AS k_occurrences
+  FROM top5 GROUP BY nid
+),
+by_vec AS (
+  SELECT e.label, coalesce(k.k_occurrences, 0) AS kocc
+  FROM embeddings e LEFT JOIN kocc k ON e.vec_id = k.nid
+)
+SELECT label,
+       CAST(COUNT(*) AS BIGINT) AS n_vectors,
+       CAST(SUM(CASE WHEN kocc = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_antihubs,
+       CAST(MAX(kocc) AS BIGINT) AS max_kocc,
+       round(AVG(CAST(kocc AS DOUBLE)), 4) AS avg_kocc
+FROM by_vec GROUP BY label ORDER BY label
+""",
+    tags=("embedding", "similarity", "profile"),
+)
+def embedding_hubness_kocc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-occurrence hubness profile per label: how often each vector
+    appears in the top-5 neighbor lists of the sampled query set.  High
+    max_kocc = hub vectors that dominate retrieval (a known
+    high-dimensional pathology that biases near-dup mining and RAG
+    retrieval); n_antihubs = vectors never retrieved.
+
+    Scale shape: identical pair-scoring skeleton to the TwoNN operator
+    (guarded fan-out, bounded two-phase top-k); the k-occurrence count is
+    a hash aggregation on vec_id, and the final join back to labels is
+    corpus-scan-shaped."""
+    v = views(spark, sf_dir)
+    emb = v["embeddings"]
+    q = emb.where((F.col("vec_id") % 10 == 0) & (F.col("vec_id") < 5000)).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+    e = _fan_out(emb.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("ev")))
+    scored = (
+        e.crossJoin(F.broadcast(q))
+        .where(F.col("nid") != F.col("qid"))
+        .select("qid", "nid", F.expr(_SPARK_COSINE).alias("cosine"))
+    )
+    pid = F.spark_partition_id().alias("pid")
+    w_part = W.partitionBy("qid", "pid").orderBy(F.desc("cosine"), F.asc("nid"))
+    partial = (
+        scored.select("qid", "nid", "cosine", pid)
+        .withColumn("prnk", F.row_number().over(w_part))
+        .where(F.col("prnk") <= 5)
+    )
+    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
+    top5 = (
+        partial.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= 5)
+        .select("qid", "nid")
+    )
+    kocc = top5.groupBy("nid").agg(F.count("*").cast("bigint").alias("k_occurrences"))
+    by_vec = emb.join(kocc, emb["vec_id"] == kocc["nid"], "left").select(
+        "label", F.coalesce(F.col("k_occurrences"), F.lit(0)).alias("kocc")
+    )
+    return (
+        by_vec.groupBy("label")
+        .agg(
+            F.count("*").cast("bigint").alias("n_vectors"),
+            F.sum(F.when(F.col("kocc") == 0, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_antihubs"),
+            F.max("kocc").cast("bigint").alias("max_kocc"),
+            F.round(F.avg(F.col("kocc").cast("double")), 4).alias("avg_kocc"),
+        )
+        .orderBy("label")
+    )
+
+
+def _silhouette_oracle() -> str:
+    u = _KM_UPDATES
+    return f"""
+WITH {_km_oracle_ctes()},
+two AS (
+  SELECT vec_id, cid, dist2, rnk FROM (
+    SELECT vec_id, cid, dist2,
+           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist2, cid) AS rnk
+    FROM s{u}
+  ) WHERE rnk <= 2
+),
+pt AS (
+  SELECT t1.vec_id, t1.cid AS cluster,
+         round((sqrt(t2.dist2) - sqrt(t1.dist2))
+               / greatest(greatest(sqrt(t1.dist2), sqrt(t2.dist2)), 1e-12),
+               4) AS sil
+  FROM (SELECT * FROM two WHERE rnk = 1) t1
+  JOIN (SELECT * FROM two WHERE rnk = 2) t2 USING (vec_id)
+)
+SELECT CAST(cluster AS BIGINT) AS cluster,
+       CAST(COUNT(*) AS BIGINT) AS n_members,
+       round(AVG(sil), 4) AS mean_silhouette,
+       round(MIN(sil), 4) AS worst_silhouette
+FROM pt GROUP BY cluster ORDER BY cluster
+"""
+
+
+@query(
+    "embedding_kmeans_silhouette",
+    oracle=_silhouette_oracle(),
+    tags=("similarity", "clustering", "profile"),
+)
+def embedding_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Centroid-based (simplified/medoid-free) silhouette per k-means
+    cluster: for each point a = distance to its own centroid, b =
+    distance to the nearest OTHER centroid, s = (b - a) / max(a, b) —
+    the clustering-QA score that says which IVF cells are well-separated
+    and which should be split/merged, without the O(n^2) pairwise
+    silhouette.
+
+    Reuses the exact deterministic Lloyd state of kmeans_embeddings
+    (similarity.py: same init, same update count), so the clusters
+    scored here are literally the catalog's clusters.
+
+    Scale shape: centroids are K x dim literals folded scan-side (no
+    join, no shuffle — same trick as _km_assign); the only aggregation
+    is the K-row rollup.  The one driver transfer is the K x dim
+    centroid collect per Lloyd round, identical to kmeans_embeddings."""
+    v = views(spark, sf_dir)
+    emb = v["embeddings"].select("vec_id", _as_double("embedding").alias("ev"))
+    cents = sorted(
+        (r.cid, list(r.c))
+        for r in emb.where(F.col("vec_id") < _KM_K)
+        .select(F.col("vec_id").alias("cid"), F.col("ev").alias("c"))
+        .collect()
+    )
+    assign = _km_assign(emb, cents)
+    for _ in range(_KM_UPDATES):
+        cents = _km_update_rows(assign)
+        assign = _km_assign(emb, cents)
+    # per-point distances to the two nearest FINAL centroids, scan-side
+    best2 = F.expr(
+        """
+        slice(array_sort(transform(_cents, ct -> named_struct(
+          'dist2', round(aggregate(zip_with(ev, ct.c, (x, y) -> (x - y) * (x - y)),
+                                   CAST(0.0 AS DOUBLE), (a, v) -> a + v), 6),
+          'cid', ct.cid))), 1, 2)
+        """
+    )
+    pt = (
+        emb.withColumn("_cents", _km_cent_lit(cents))
+        .withColumn("_b2", best2)
+        .select(
+            F.col("_b2")[0]["cid"].alias("cluster"),
+            F.sqrt(F.col("_b2")[0]["dist2"]).alias("a"),
+            F.sqrt(F.col("_b2")[1]["dist2"]).alias("b"),
+        )
+        .select(
+            "cluster",
+            F.round(
+                (F.col("b") - F.col("a"))
+                / F.greatest(F.greatest(F.col("a"), F.col("b")), F.lit(1e-12)),
+                4,
+            ).alias("sil"),
+        )
+    )
+    return (
+        pt.groupBy(F.col("cluster").cast("bigint").alias("cluster"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_members"),
+            F.round(F.avg("sil"), 4).alias("mean_silhouette"),
+            F.round(F.min("sil"), 4).alias("worst_silhouette"),
+        )
+        .orderBy("cluster")
     )

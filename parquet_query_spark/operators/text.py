@@ -8,7 +8,7 @@ suite).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from parquet_query_spark.operators.catalog import ordered_once, query, views
@@ -16,6 +16,9 @@ from parquet_query_spark.operators.catalog import ordered_once, query, views
 # token pattern: letter runs | digit runs | single non-space symbol (BPE-ish
 # pre-tokenization, cf. GPT-2's regex family)
 _TOKEN_PAT = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+
+# word tokenizer of the distribution operators: lower-cased alphanumeric runs
+_TOKEN_RE = "[^a-z0-9]+"
 
 _STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "a"],
@@ -808,8 +811,6 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, rounded once.  Scale shape: one token-keyed map-side-combined
     count, one TakeOrdered top-1000 (never a global sort), and a
     single-row reduce."""
-    from pyspark.sql import Window as W
-
     v = views(spark, sf_dir)
     toks = v["documents"].select(
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok")
@@ -1621,10 +1622,10 @@ def text_code_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_js_divergence_by_source",
-    oracle="""
+    oracle=f"""
 WITH w AS (
   SELECT source, unnest(list_filter(
-           string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS word
+           string_split_regex(lower(text), '{_TOKEN_RE}'), x -> x <> '')) AS word
   FROM documents
 ),
 vocab AS (
@@ -1682,7 +1683,7 @@ def text_js_divergence_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(
             F.filter(
-                F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
+                F.split(F.lower(F.col("text")), _TOKEN_RE),
                 lambda x: x != "",
             )
         ).alias("word"),
@@ -1726,4 +1727,409 @@ def text_js_divergence_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("js_divergence_nats"),
         )
         .orderBy("source")
+    )
+
+
+@query(
+    "scalar_regex_functions",
+    oracle=r"""
+SELECT doc_id,
+       regexp_extract(text, '[a-z]+') AS first_word,
+       regexp_extract(text, '([a-z]+) ([a-z]+)', 2) AS second_word,
+       regexp_replace(text, '[aeiou]', '_', 'g') AS devoweled_prefix,
+       regexp_matches(text, 'agg|scan') AS mentions_op,
+       len(regexp_extract_all(text, '\b[a-z]{5,}\b')) AS long_words,
+       len(string_split_regex(text, '\s+')) AS n_tokens
+FROM (SELECT doc_id, substr(text, 1, 80) AS text FROM documents)
+ORDER BY doc_id
+""",
+    tags=("scalar",),
+)
+def scalar_regex_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Regex-function parity sweep: extract (group 0 and group n), global
+    replace (DuckDB needs the 'g' flag; Spark replaces globally by
+    default), rlike, match counting, and regex split — all on a bounded
+    80-char prefix so the row stays cheap scan-side codegen."""
+    v = views(spark, sf_dir)
+    t = F.substring("text", 1, 80)
+    return (
+        v["documents"]
+        .select("doc_id", t.alias("text"))
+        .select(
+            "doc_id",
+            F.regexp_extract("text", "[a-z]+", 0).alias("first_word"),
+            F.regexp_extract("text", "([a-z]+) ([a-z]+)", 2).alias("second_word"),
+            F.regexp_replace("text", "[aeiou]", "_").alias("devoweled_prefix"),
+            F.col("text").rlike("agg|scan").alias("mentions_op"),
+            F.regexp_count("text", F.lit(r"\b[a-z]{5,}\b")).alias("long_words"),
+            F.size(F.split("text", r"\s+")).alias("n_tokens"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+@query(
+    "text_c4_quality_filters",
+    oracle=r"""
+WITH scored AS (
+  SELECT source,
+         CASE WHEN NOT regexp_matches(text, '[.!?]\s*$') THEN 1 ELSE 0 END AS f_no_terminal_punct,
+         CASE WHEN len(string_split_regex(trim(text), '\s+')) < 50 THEN 1 ELSE 0 END AS f_too_short,
+         CASE WHEN CAST(length(replace(text, ' ', '')) AS DOUBLE)
+                   / len(string_split_regex(trim(text), '\s+')) NOT BETWEEN 3 AND 10
+              THEN 1 ELSE 0 END AS f_word_len,
+         CASE WHEN contains(text, '{') THEN 1 ELSE 0 END AS f_brace,
+         CASE WHEN contains(lower(text), 'lorem ipsum') THEN 1 ELSE 0 END AS f_lorem
+  FROM documents
+)
+SELECT source, count(*)::BIGINT AS n_docs,
+       CAST(SUM(f_no_terminal_punct) AS BIGINT) AS no_terminal_punct,
+       CAST(SUM(f_too_short) AS BIGINT) AS too_short,
+       CAST(SUM(f_word_len) AS BIGINT) AS bad_word_len,
+       CAST(SUM(f_brace) AS BIGINT) AS has_brace,
+       CAST(SUM(f_lorem) AS BIGINT) AS has_lorem,
+       round(AVG(CASE WHEN f_no_terminal_punct + f_too_short + f_word_len
+                          + f_brace + f_lorem = 0 THEN 1.0 ELSE 0.0 END), 4) AS pass_rate
+FROM scored
+GROUP BY source
+ORDER BY source
+""",
+    tags=("text", "pipeline"),
+)
+def text_c4_quality_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4-style heuristic filter census per source: terminal punctuation,
+    minimum word count, mean word length in [3,10], curly braces
+    (code/markup tell), 'lorem ipsum' boilerplate.  One scan, all rules
+    share the tokenization; per-source rollup is bounded by the source
+    vocabulary.  (C4: Raffel et al. 2020, §2.2 heuristics.)"""
+    v = views(spark, sf_dir)
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    awl = F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))).cast("double") / F.size(words)
+    d = v["documents"].select(
+        "source",
+        (~F.col("text").rlike(r"[.!?]\s*$")).cast("int").alias("f_no_terminal_punct"),
+        (F.size(words) < 50).cast("int").alias("f_too_short"),
+        (~awl.between(3, 10)).cast("int").alias("f_word_len"),
+        F.col("text").contains("{").cast("int").alias("f_brace"),
+        F.lower(F.col("text")).contains("lorem ipsum").cast("int").alias("f_lorem"),
+    )
+    total_flags = (
+        F.col("f_no_terminal_punct") + F.col("f_too_short") + F.col("f_word_len")
+        + F.col("f_brace") + F.col("f_lorem")
+    )
+    return (
+        d.groupBy("source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum("f_no_terminal_punct").cast("bigint").alias("no_terminal_punct"),
+            F.sum("f_too_short").cast("bigint").alias("too_short"),
+            F.sum("f_word_len").cast("bigint").alias("bad_word_len"),
+            F.sum("f_brace").cast("bigint").alias("has_brace"),
+            F.sum("f_lorem").cast("bigint").alias("has_lorem"),
+            F.round(F.avg(F.when(total_flags == 0, 1.0).otherwise(0.0)), 4).alias(
+                "pass_rate"
+            ),
+        )
+        .orderBy("source")
+    )
+
+
+@query(
+    "vocab_coverage_curve",
+    oracle=r"""
+WITH tok AS (
+  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
+  FROM documents
+),
+counts AS (SELECT token, count(*)::DOUBLE AS c FROM tok GROUP BY token),
+totals AS (SELECT SUM(c) AS total, count(*)::BIGINT AS vocab FROM counts),
+ranked AS (
+  SELECT c, row_number() OVER (ORDER BY c DESC, token) AS rnk FROM counts
+),
+cum AS (
+  SELECT rnk, SUM(c) OVER (ORDER BY rnk) AS cum_c FROM ranked WHERE rnk <= 1000
+)
+SELECT CAST(rnk AS INTEGER) AS top_n,
+       round(cum_c / total, 4) AS coverage,
+       vocab AS vocab_size,
+       CAST(total AS BIGINT) AS total_tokens
+FROM cum, totals
+WHERE rnk IN (10, 100, 1000)
+ORDER BY rnk
+""",
+    tags=("text", "pipeline"),
+)
+def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer-design curve: what fraction of all token occurrences the
+    top-{10,100,1000} vocabulary entries cover.  Token counting is a
+    map-side-combined rollup over the exploded corpus; only the top-1000
+    (via TakeOrdered, no global sort) enter the cumulative window, so
+    the single-partition cumsum is bounded at 1000 rows regardless of
+    corpus size.  Counts are integers — sums exact in float64."""
+    v = views(spark, sf_dir)
+    counts = (
+        v["documents"]
+        .select(F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token"))
+        .groupBy("token")
+        .agg(F.count("*").cast("double").alias("c"))
+    )
+    totals = counts.agg(
+        F.sum("c").alias("total"), F.count("*").cast("bigint").alias("vocab")
+    )
+    top = counts.orderBy(F.desc("c"), F.asc("token")).limit(1000)
+    w_rank = W.orderBy(F.desc("c"), F.asc("token"))
+    w_cum = W.orderBy("rnk").rowsBetween(W.unboundedPreceding, 0)
+    ranked = top.withColumn("rnk", F.row_number().over(w_rank))
+    cum = ranked.withColumn("cum_c", F.sum("c").over(w_cum))
+    return (
+        cum.where(F.col("rnk").isin(10, 100, 1000))
+        .crossJoin(F.broadcast(totals))
+        .select(
+            F.col("rnk").cast("int").alias("top_n"),
+            F.round(F.col("cum_c") / F.col("total"), 4).alias("coverage"),
+            F.col("vocab").alias("vocab_size"),
+            F.col("total").cast("bigint").alias("total_tokens"),
+        )
+        .orderBy("top_n")
+    )
+
+
+@query(
+    "text_zipf_law_fit",
+    oracle=r"""
+WITH tok AS (
+  SELECT source, unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
+  FROM documents
+),
+counts AS (
+  SELECT source, token, count(*)::BIGINT AS c FROM tok GROUP BY 1, 2
+),
+ranked AS (
+  SELECT source, c,
+         row_number() OVER (PARTITION BY source ORDER BY c DESC, token) AS rnk
+  FROM counts
+),
+terms AS (
+  SELECT source,
+         CAST(round(ln(rnk) * 1e9) AS BIGINT) AS x,
+         CAST(round(ln(c) * 1e9) AS BIGINT) AS y,
+         CAST(round(ln(rnk) * ln(c) * 1e9) AS BIGINT) AS xy,
+         CAST(round(ln(rnk) * ln(rnk) * 1e9) AS BIGINT) AS x2,
+         CAST(round(ln(c) * ln(c) * 1e9) AS BIGINT) AS y2
+  FROM ranked WHERE rnk <= 100
+),
+sums AS (
+  SELECT source, count(*)::HUGEINT AS k,
+         CAST(SUM(x) AS HUGEINT) AS sx, CAST(SUM(y) AS HUGEINT) AS sy,
+         CAST(SUM(xy) AS HUGEINT) AS sxy, CAST(SUM(x2) AS HUGEINT) AS sx2,
+         CAST(SUM(y2) AS HUGEINT) AS sy2
+  FROM terms GROUP BY source
+)
+SELECT source, CAST(k AS BIGINT) AS n_terms,
+       round(CAST(-(1e9 * k * sxy - sx * sy) AS DOUBLE)
+             / CAST(1e9 * k * sx2 - sx * sx AS DOUBLE), 6) AS zipf_slope,
+       round(CAST((1e9 * k * sxy - sx * sy) AS DOUBLE)
+             * CAST((1e9 * k * sxy - sx * sy) AS DOUBLE)
+             / (CAST(1e9 * k * sx2 - sx * sx AS DOUBLE)
+                * CAST(1e9 * k * sy2 - sy * sy AS DOUBLE)), 6) AS zipf_r2
+FROM sums
+ORDER BY source
+""",
+    tags=("text", "pipeline"),
+)
+def text_zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source Zipf-law fit: log-log OLS slope + R² over the top-100
+    token frequencies — natural text sits near slope ~1 with high R²;
+    machine-generated or templated sources drift off it, making this a
+    corpus-composition screen next to the language-mix and code-detection
+    ops.
+
+    Determinism discipline (the events_hourly_entropy pattern): every
+    per-term log product is nano-quantized to BIGINT BEFORE the sums, so
+    aggregation order cannot move a bit; the five sums then feed one
+    closed-form slope/R² per source in decimal(38,0) (HUGEINT on the
+    oracle side — sx·sy overflows 64-bit), rounded to 6 dp.
+
+    Scale shape: the token explode + (source, token) rollup is the only
+    corpus-sized stage (map-side combined); the per-source rank window
+    runs over the vocabulary-bounded count table and everything after is
+    ≤100 rows per source."""
+    v = views(spark, sf_dir)
+    counts = (
+        v["documents"]
+        .select(
+            "source",
+            F.explode(
+                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+            ).alias("token"),
+        )
+        .groupBy("source", "token")
+        .agg(F.count("*").cast("bigint").alias("c"))
+    )
+    ranked = counts.select(
+        "source",
+        "c",
+        F.row_number()
+        .over(W.partitionBy("source").orderBy(F.desc("c"), F.asc("token")))
+        .alias("rnk"),
+    ).where(F.col("rnk") <= 100)
+    lx, ly = F.log(F.col("rnk").cast("double")), F.log(F.col("c").cast("double"))
+    nano = lambda e: F.round(e * 1e9, 0).cast("bigint")  # noqa: E731
+    terms = ranked.select(
+        "source",
+        nano(lx).alias("x"),
+        nano(ly).alias("y"),
+        nano(lx * ly).alias("xy"),
+        nano(lx * lx).alias("x2"),
+        nano(ly * ly).alias("y2"),
+    )
+    dec = "decimal(38,0)"
+    sums = terms.groupBy("source").agg(
+        F.count("*").cast(dec).alias("k"),
+        F.sum("x").cast(dec).alias("sx"),
+        F.sum("y").cast(dec).alias("sy"),
+        F.sum("xy").cast(dec).alias("sxy"),
+        F.sum("x2").cast(dec).alias("sx2"),
+        F.sum("y2").cast(dec).alias("sy2"),
+    )
+    giga = F.lit(1000000000).cast(dec)
+    num = (giga * F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
+        "double"
+    )
+    den_x = (giga * F.col("k") * F.col("sx2") - F.col("sx") * F.col("sx")).cast(
+        "double"
+    )
+    den_y = (giga * F.col("k") * F.col("sy2") - F.col("sy") * F.col("sy")).cast(
+        "double"
+    )
+    return sums.select(
+        "source",
+        F.col("k").cast("bigint").alias("n_terms"),
+        F.round(-num / den_x, 6).alias("zipf_slope"),
+        F.round(num * num / (den_x * den_y), 6).alias("zipf_r2"),
+    ).orderBy("source")
+
+
+@query(
+    "docs_length_band_profile",
+    oracle="""
+WITH banded AS (
+  SELECT source, n_chars,
+         length(trim(text)) - length(replace(trim(text), ' ', '')) + 1 AS toks,
+         NTILE(10) OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS band
+  FROM documents
+)
+SELECT source, CAST(band AS BIGINT) AS band,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(MIN(n_chars) AS BIGINT) AS min_chars,
+       CAST(MAX(n_chars) AS BIGINT) AS max_chars,
+       round(AVG(CAST(toks AS DOUBLE)), 2) AS avg_tokens
+FROM banded GROUP BY source, band ORDER BY source, band
+""",
+    tags=("text", "profile"),
+)
+def docs_length_band_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source decile bands over document length (NTILE on n_chars
+    with doc_id tie-break) with per-band size and token stats — the
+    length histogram a packing/curriculum stage consumes to pick
+    sequence-length buckets.
+
+    Scale shape: the only window partitions by source (bounded
+    cardinality, each partition sorts its own slice); token counts are a
+    scan-side expression (space count over the single-space synthetic
+    text), never a Python row path."""
+    v = views(spark, sf_dir)
+    toks = (
+        F.length(F.trim(F.col("text")))
+        - F.length(F.replace(F.trim(F.col("text")), F.lit(" "), F.lit("")))
+        + 1
+    )
+    w = W.partitionBy("source").orderBy("n_chars", "doc_id")
+    banded = v["documents"].select(
+        "source",
+        "n_chars",
+        toks.alias("toks"),
+        F.ntile(10).over(w).alias("band"),
+    )
+    return (
+        banded.groupBy("source", F.col("band").cast("bigint").alias("band"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.min("n_chars").cast("bigint").alias("min_chars"),
+            F.max("n_chars").cast("bigint").alias("max_chars"),
+            F.round(F.avg(F.col("toks").cast("double")), 2).alias("avg_tokens"),
+        )
+        .orderBy("source", "band")
+    )
+
+
+@query(
+    "text_term_burstiness",
+    oracle=f"""
+WITH w AS (
+  SELECT doc_id, unnest(list_filter(
+           string_split_regex(lower(text), '{_TOKEN_RE}'), x -> x <> '')) AS word
+  FROM documents
+),
+stats AS (
+  SELECT word,
+         CAST(COUNT(*) AS BIGINT) AS cf,
+         CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
+  FROM w GROUP BY word
+),
+d AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents)
+SELECT word, cf, df,
+       round(n_docs * (1 - exp(-CAST(cf AS DOUBLE) / n_docs)), 2)
+         AS poisson_df,
+       round(CAST(cf AS DOUBLE) / df, 4) AS burstiness
+FROM stats CROSS JOIN d
+ORDER BY cf DESC, word LIMIT 20
+""",
+    tags=("text", "profile"),
+)
+def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Church-Gale term burstiness for the top-20 terms: observed doc
+    frequency vs the Poisson expectation D*(1-exp(-cf/D)) given the
+    collection frequency.  Bursty terms (df far below poisson_df,
+    burstiness = cf/df high) concentrate in few documents — topical
+    words; non-bursty terms spread evenly — function words.  Quality
+    filters use this to separate boilerplate vocab from content vocab.
+
+    Determinism: cf/df are exact BIGINT counts; exp/div run on identical
+    doubles in both engines with one final round; top-20 orders by
+    (cf DESC, word) — a total order.
+
+    Scale shape: the word stats are one map-side-combined aggregation
+    over the exploded token stream (COUNT DISTINCT doc_id is a two-level
+    hash agg on (word, doc_id) first); the top-20 is a
+    TakeOrderedAndProject, never a global sort."""
+    v = views(spark, sf_dir)
+    w = v["documents"].select(
+        "doc_id",
+        F.explode(
+            F.filter(
+                F.split(F.lower(F.col("text")), _TOKEN_RE), lambda x: x != ""
+            )
+        ).alias("word"),
+    )
+    stats = w.groupBy("word").agg(
+        F.count("*").cast("bigint").alias("cf"),
+        F.countDistinct("doc_id").cast("bigint").alias("df"),
+    )
+    d = v["documents"].agg(F.count("*").cast("bigint").alias("n_docs"))
+    return (
+        stats.crossJoin(F.broadcast(d))
+        .select(
+            "word",
+            "cf",
+            "df",
+            F.round(
+                F.col("n_docs")
+                * (1 - F.exp(-F.col("cf").cast("double") / F.col("n_docs"))),
+                2,
+            ).alias("poisson_df"),
+            F.round(F.col("cf").cast("double") / F.col("df"), 4).alias("burstiness"),
+        )
+        .orderBy(F.desc("cf"), F.asc("word"))
+        .limit(20)
     )

@@ -19,8 +19,11 @@ Scale notes (100 TB design intent, tested on local[N]):
 from __future__ import annotations
 
 import os
+import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULTS: dict[str, str] = {
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
@@ -59,6 +62,21 @@ _DEFAULTS: dict[str, str] = {
     # single quotes on both engines.
     "spark.sql.ansi.doubleQuotedIdentifiers": "true",
 }
+
+
+@contextmanager
+def temp_view(df: DataFrame, prefix: str) -> Iterator[str]:
+    """Register ``df`` as a temp view under a fresh ``__<prefix>_<uuid>``
+    name for one statement, and drop it on exit.  The statement must be
+    analysed inside the block; the analysed plan holds the view's plan,
+    so the result stays valid once the view is gone (eager analysis is
+    gated by :func:`assert_eager_analysis`)."""
+    view = f"__{prefix}_{uuid.uuid4().hex}"
+    df.createOrReplaceTempView(view)
+    try:
+        yield view
+    finally:
+        df.sparkSession.catalog.dropTempView(view)
 
 
 def assert_eager_analysis(spark: SparkSession) -> None:

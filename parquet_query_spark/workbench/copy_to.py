@@ -178,4 +178,6 @@ def run_copy(engine, statement: str) -> DataFrame:
             _write(df, path, fmt, opts)
         finally:
             df.unpersist()
-    return engine.spark.createDataFrame([(n,)], "Count bigint")
+    # an inline relation: previewing it runs no job (a createDataFrame
+    # row is RDD-backed and runs two)
+    return engine.spark.sql(f"SELECT * FROM VALUES (CAST({int(n)} AS BIGINT)) AS t(Count)")

@@ -248,311 +248,59 @@ this list is the triage ground truth for fuzz_dialect.py divergences):
 
 from __future__ import annotations
 
-import contextvars
 import re
 
+# The shim's passes live in three sibling modules — dialect_core (lexing,
+# statement rewrites, bracket syntax), dialect_macros (function renames +
+# _FN_MACROS expression macros), dialect_typing (operator/literal pack +
+# numeric typing passes).  This module keeps the public pipeline
+# (rewrite_duckdb_dialect and its fallbacks) and imports only the names it
+# uses; callers import every other name from its defining module.
 
-
-# Split in r9: the shim's passes live in three sibling modules —
-# dialect_core (lexing, statement rewrites, bracket syntax),
-# dialect_macros (function renames + _FN_MACROS expression macros),
-# dialect_typing (operator/literal pack + numeric typing passes).
-# This module keeps the public pipeline (rewrite_duckdb_dialect and
-# its fallbacks) and re-exports every moved name so existing imports
-# (tests, fuzzer, engine) are unaffected.
-
-from parquet_query_spark.workbench.dialect_core import (  # noqa: F401
+from parquet_query_spark.workbench.dialect_core import (
     _code_mask,
-    _comment_mask,
-    _DOLLAR_TAG,
     strip_comments,
-    _RESERVED_BARE,
     _unquote_function_names,
-    _depths,
-    _keyword_matches,
-    _DYN_INTERVAL,
-    _DYN_INTERVAL_UNIT,
     _rewrite_dynamic_interval,
-    _IDENT,
-    _WINDOW_DEF,
-    _WINDOW_DEF_CONT,
-    _OVER_REF,
     _rewrite_named_window_case,
     _rewrite_exclude,
-    _STRF_TO_JAVA,
-    strftime_format_to_java,
-    _split_call_args,
-    _SQ_LITERAL,
     _rewrite_strftime,
     _rewrite_strptime,
-    _QUALIFY_TAIL,
-    _qualify_parts,
     _rewrite_qualify,
     _rewrite_qualify_inject,
-    _ASOF_HELPER,
-    AsofRewriteError,
-    _ASOF_KW,
-    _ASOF_RTABLE,
-    _ASOF_CLAUSE_END,
-    _ASOF_INEQ,
-    _split_top_and,
     _rewrite_asof_join,
-    _READ_FN,
-    _READ_ARG,
     _rewrite_read_functions,
-    _DESCRIBE_SELECT,
-    _DESCRIBE_FROM,
     _rewrite_describe,
-    _PRAGMA,
     _rewrite_pragma,
-    _CREATE_VIEW,
     _rewrite_create_view,
-    _UNPIVOT_STMT,
-    _unpivot_label,
     _rewrite_unpivot,
     _rewrite_from_first,
-    _paren_depth_at,
-    _DISTINCT_ON,
-    _top_level_split,
     _rewrite_distinct_on,
     _BRACKET_NONLITERAL_KEYWORDS,
     _subscript_base_heads,
-    _BRACKET_NEVER_CALL_KEYWORDS,
-    _IDX_CHAIN_END,
-    _bracket_close,
-    _split_top_colon,
-    _rewrite_comprehension,
     _STRING_SUBSCRIPTS,
     _ARRAYISH_BASE,
-    _str_slice,
     _rewrite_array_type_suffix,
     _rewrite_brackets,
-    _USING_SAMPLE,
-    _table_ref_before,
     _rewrite_using_sample,
-    _INTERVAL_ARG,
-    _series_empty,
-    _series_body,
 )
-from parquet_query_spark.workbench.dialect_macros import (  # noqa: F401
-    _FN_MAP,
-    _FN_CALL,
+from parquet_query_spark.workbench.dialect_macros import (
     _rewrite_function_names,
-    _D,
-    _vec_dot,
-    _vec_norm2,
-    _macro_cosine,
-    _macro_cosine_distance,
-    _macro_inner_product,
-    _macro_distance,
-    _macro_list_unique,
-    _macro_list_has_all,
-    _UINT,
-    _NAMED_ARG,
-    _macro_struct_pack,
-    _macro_list_slice,
-    _list_nn,
-    _list_sum_expr,
-    _macro_list_sum,
-    _macro_list_avg,
-    _macro_list_aggregate,
-    _macro_list_reduce,
-    _DATE_UNITS,
-    _unit_literal,
-    _macro_sha256,
-    _macro_to_base,
-    _macro_log10_single,
-    _macro_trim2,
-    _trim_side,
-    _macro_dayname,
-    _macro_monthname,
-    _macro_isodow,
-    _macro_yearweek,
-    _macro_date_diff,
-    _macro_date_sub3,
-    _macro_trunc1,
-    _macro_isfinite,
-    _macro_isinf,
-    _macro_list_prepend,
-    _DEC_LITERAL,
-    _macro_least_greatest_double,
-    _IGNORE_NULLS_TAIL,
-    _macro_ignore_nulls_inside,
-    _macro_product,
-    _one_arg,
-    _macro_century,
-    _macro_decade,
-    _macro_era,
-    _macro_julian,
-    _macro_to_interval,
-    _macro_jaccard,
-    _macro_hamming,
-    _macro_parse_path,
-    _macro_parse_dirname,
-    _macro_parse_filename,
-    _macro_date_add_interval,
-    _macro_struct_insert,
-    _macro_list_bool,
-    _macro_list_grade_up,
-    _macro_list_select,
-    _macro_list_where,
-    _macro_list_sort,
-    _macro_array_sort_direction,
-    _macro_list_reverse_sort,
-    _macro_list_any_value,
-    _macro_list_count,
-    _macro_scalar_series,
-    _macro_string_agg_ordered,
-    _strip_order_arg,
-    _strip_agg_order,
-    _macro_avg_double,
-    _macro_quantile_disc,
-    _SAMPLE_MOMENT,
-    _rewrite_sample_moments,
-    _macro_skewness,
-    _macro_kurtosis,
-    _macro_struct_extract,
-    _json_path_literal,
-    _macro_json_extract,
-    _macro_json_valid,
-    _pattern_group_index,
-    _java_named_groups,
-    _macro_regexp_extract2,
-    _macro_regexp_matches_flags,
-    _macro_even,
-    _macro_gcd,
-    _macro_lcm,
-    _macro_xor,
-    _macro_signbit,
-    _LANCZOS,
-    _lanczos_ag,
-    _lngamma_pos,
-    _macro_lgamma,
-    _macro_gamma,
-    _macro_arg_minmax,
-    _macro_fdiv,
-    _macro_fmod,
-    _macro_kahan_sum,
-    _macro_current_schema,
-    _macro_current_database,
-    _macro_list_resize,
-    _format_bytes_scaled,
-    _macro_format_bytes,
-    _macro_format_decimal_bytes,
-    _histogram_sql,
-    _macro_histogram,
-    _macro_entropy,
-    _macro_epoch_ns,
-    _macro_encode1,
-    _macro_decode1,
-    _macro_regexp_extract_all2,
-    _conv_backrefs,
-    _replace_first_emit,
-    _inline_regex_flags,
-    _macro_regexp_replace_flags,
-    _macro_regexp_full_match,
-    _macro_regexp_escape,
-    _TB_ORIGIN_US,
-    _INTERVAL_LIT,
-    _UNIT_US,
-    _macro_time_bucket,
-    _macro_epoch,
-    _EPOCH_FROM,
-    _macro_extract_epoch,
-    _AGG_ORDER_KEY,
-    _macro_array_agg_ordered,
-    _ordered_first_last,
-    _macro_map_extract,
-    _FORMAT_BRACES,
-    _macro_format,
-    _macro_array_to_string,
-    _macro_list_distinct,
-    _macro_list_contains,
-    _macro_list_concat,
-    _FN_MACROS,
-    _MACRO_CALL,
     _rewrite_fn_macros,
 )
-from parquet_query_spark.workbench.dialect_typing import (  # noqa: F401
+from parquet_query_spark.workbench.dialect_typing import (
     _rewrite_arrayish_pipe_concat,
     _rewrite_dollar_strings,
     _rewrite_literal_backslashes,
-    _NUM_UNDERSCORE,
     _rewrite_numeric_underscores,
-    _BARE_VARCHAR,
-    _JSON_CAST,
-    _BLOB_CAST,
-    _UNSIGNED_CAST,
-    _UNSIGNED_MAP,
-    _rewrite_bare_varchar,
-    _looks_like_cast,
-    _CAST_INT_TYPES,
-    _CAST_CALL_RE,
-    _COLON_INT_RE,
-    _paren_close,
-    _split_top_as,
-    _DUCKTYPE_WRAP_FN,
-    _ducktype_wrap_arg,
-    _int_cast_emit,
     _rewrite_int_casts,
-    _rewrite_intdiv,
-    _left_operand_start,
-    _right_operand_end,
-    _rewrite_caret_at,
-    _POW_OP,
-    _rewrite_power,
-    _SIMILAR_TO,
-    _rewrite_similar_to,
-    _TILDE_OP,
-    _rewrite_tilde_regex,
-    _brace_close,
-    _split_entries,
-    _split_entry_colon,
-    _MAP_KW_TAIL,
     _rewrite_brace_literals,
-    _SERIES_TVF,
-    _rewrite_series_tvf,
-    _DOT_CALL,
-    _DOT_CALL_SKIP,
     _rewrite_dot_chain,
-    _MAX_DOT_CHAIN,
-    _HOF_NAMES,
-    _JSON_ARROW,
-    _enclosing_call_name,
-    _rewrite_json_arrows,
-    _ORDER_TERMINATOR,
-    _NULLS_EXPLICIT,
-    _DESC_TAIL,
-    _ALL_KEY,
-    _rewrite_order_by_nulls,
-    _WINDOWISH,
-    _CLAUSE_KEYWORDS,
-    _full_left_operand,
-    _full_right_operand,
-    _CONCAT_CALL,
     _rewrite_concat_skip_nulls,
-    _DIVMOD_OP,
-    _INTS_LIST,
-    _strip_outer_parens,
-    _CASE_KW,
-    _case_parts,
-    _COND_KEYWORDS,
-    _split_top_arith,
-    _leaf_int_cond,
-    _DUCKTYPE_FN,
-    _DUCKTYPE_CAST,
-    _duckdb_round,
     _rewrite_ducktype_numerics,
-    _flatten_leading_mul_groups,
     _rewrite_divmod_null,
-    _WINDOW_FILTER,
-    _has_top_comma,
     _rewrite_window_filter,
-    _DISTINCT_WIN,
     _rewrite_count_distinct_window,
-    _GLOB_OP,
-    _glob_to_regex,
-    _rewrite_glob,
     _rewrite_ops_pack,
 )
 

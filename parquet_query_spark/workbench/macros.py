@@ -24,10 +24,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from parquet_query_spark.workbench.dialect import (
-    _code_mask,
-    _split_call_args,
-)
+from parquet_query_spark.workbench.dialect_core import _code_mask, _split_call_args
 
 _CREATE_MACRO = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?MACRO\s+"

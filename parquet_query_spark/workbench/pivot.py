@@ -21,7 +21,8 @@ from __future__ import annotations
 
 import re
 
-from parquet_query_spark.workbench.dialect import (
+from parquet_query_spark.session import temp_view
+from parquet_query_spark.workbench.dialect_core import (
     _code_mask,
     _keyword_matches,
     _split_call_args,
@@ -285,20 +286,11 @@ def run_pivot(engine, statement: str, raw_statement: str | None = None):
             if c.lower() not in gset:
                 out = out.withColumnRenamed(c, f"{c}_{alias}")
     if p["tail"]:
-        # Unique per-invocation view name: a fixed name would let two
-        # concurrent/nested PIVOTs on one session clobber each other
-        # between createOrReplaceTempView and the follow-up sql().
-        global _PIVOT_VIEW_SEQ
-        _PIVOT_VIEW_SEQ += 1
-        view = f"__pivot_result_{_PIVOT_VIEW_SEQ}"
-        out.createOrReplaceTempView(view)
         # engine.sql, not spark.sql: the tail may carry dialect surface
         # (ORDER BY ALL, renamed functions) that raw Spark rejects
-        out = engine.sql(f"SELECT * FROM {view} {p['tail']}")
+        with temp_view(out, "pivot_result") as view:
+            out = engine.sql(f"SELECT * FROM {view} {p['tail']}")
     return out
-
-
-_PIVOT_VIEW_SEQ = 0
 
 
 # ── COLUMNS(...) expansion ──────────────────────────────────────────────
@@ -486,9 +478,7 @@ def expand_columns(engine, statement: str) -> str:
             # the predicate is DuckDB-dialect text (SIMILAR TO, ~, ^@,
             # method chaining, ...) — run it through the shim before
             # Spark parses it (r8 statement-fuzz seeds 2447/2484)
-            from parquet_query_spark.workbench.dialect import (
-                rewrite_duckdb_dialect,
-            )
+            from parquet_query_spark.workbench.dialect import rewrite_duckdb_dialect
 
             rows = engine.spark.sql(
                 rewrite_duckdb_dialect(

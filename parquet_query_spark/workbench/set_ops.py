@@ -11,8 +11,8 @@ SELECT 1 AS a, 2 AS b`` → columns ``b, a``, one row after dedup).
 
 A top-level ``ORDER BY`` / ``LIMIT`` / ``OFFSET`` tail after the last
 branch belongs to the whole union (standard SQL reading); it is cut off
-and applied over the combined result through a per-invocation unique temp
-view (monotonic counter — the ADVICE r6 fixed-name clobber lesson).
+and applied over the combined result through a temp view with a fresh
+name, dropped once the tail is analysed (``session.temp_view``).
 
 Mixed top-level set ops fold LEFT in statement order, dispatching BY
 NAME vs positional per separator (probed: ``SELECT 1 AS a UNION BY NAME
@@ -29,16 +29,12 @@ in the branch.
 
 from __future__ import annotations
 
-import itertools
 import re
 
 from pyspark.sql import DataFrame
 
-from parquet_query_spark.workbench.dialect import (
-    _code_mask,
-    _depths,
-    _keyword_matches,
-)
+from parquet_query_spark.session import temp_view
+from parquet_query_spark.workbench.dialect_core import _code_mask, _depths, _keyword_matches
 
 _UNION_BY_NAME = r"\bUNION\s+(ALL\s+)?BY\s+NAME\b"
 # Every separator at UNION's precedence level (INTERSECT binds tighter
@@ -47,8 +43,6 @@ _SET_SEP = (
     r"\b(?P<op>UNION|EXCEPT)\b(?P<all>\s+ALL\b)?(?P<byname>\s+BY\s+NAME\b)?"
 )
 _TAIL_KW = r"\bORDER\s+BY\b|\bLIMIT\b|\bOFFSET\b"
-
-_view_counter = itertools.count()
 
 INSERT_BY_NAME = re.compile(
     r"^\s*INSERT\s+INTO\s+([A-Za-z_][\w.]*)\s+BY\s+NAME\b(.*)$",
@@ -62,16 +56,13 @@ def run_insert_by_name(engine, sql: str) -> DataFrame:
     fills with NULL (probed).  Spark's column-list INSERT has exactly
     those semantics, so the query runs through ``Engine.sql`` (keeping
     every dialect construct) and lands via
-    ``INSERT INTO t (cols) SELECT * FROM <unique temp view>``."""
+    ``INSERT INTO t (cols) SELECT * FROM <temp view>``."""
     m = INSERT_BY_NAME.match(sql)
     table, query = m.group(1), m.group(2).strip().rstrip(";")
     df = engine.sql(query)
-    view = f"__insert_by_name_{next(_view_counter)}"
-    df.createOrReplaceTempView(view)
     cols = ", ".join(f"`{c}`" for c in df.columns)
-    return engine.spark.sql(
-        f"INSERT INTO {table} ({cols}) SELECT * FROM {view}"
-    )
+    with temp_view(df, "insert_by_name") as view:
+        return engine.spark.sql(f"INSERT INTO {table} ({cols}) SELECT * FROM {view}")
 
 
 def _top_level_matches(sql: str, pattern: str) -> list[re.Match]:
@@ -143,9 +134,8 @@ def run_union_by_name(engine, sql: str) -> DataFrame:
             if not is_all:
                 combined = combined.distinct()
     if tail:
-        view = f"__union_by_name_{next(_view_counter)}"
-        combined.createOrReplaceTempView(view)
         # through engine.sql so the tail gets the dialect treatment too
         # (NULLS LAST alignment, function renames, ...)
-        return engine.sql(f"SELECT * FROM {view} {tail}")
+        with temp_view(combined, "union_by_name") as view:
+            return engine.sql(f"SELECT * FROM {view} {tail}")
     return combined

@@ -32,3 +32,20 @@ def views(spark, sf_dir):
     for name, df in frames.items():
         df.createOrReplaceTempView(name)
     return frames
+
+
+@pytest.fixture(scope="session")
+def catalog():
+    from parquet_query_spark.operators.catalog import load_all
+
+    return load_all()
+
+
+@pytest.fixture(scope="session")
+def engine(sf_dir):
+    """An ``Engine`` over ``sf_dir``; test files that need their own
+    engine define a module-level ``engine`` fixture, which takes
+    precedence."""
+    from parquet_query_spark.engine import Engine
+
+    return Engine.open(sf_dir, table_name="alldata")

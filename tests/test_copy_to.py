@@ -94,3 +94,20 @@ def test_copy_count_matches_written_nondeterministic(engine, tmp_path):
         f"SELECT count(*) FROM read_csv('{out_csv}', header=true)"
     ).fetchone()
     assert n == 41 and back[0] == 41
+
+
+def test_copy_count_preview_runs_no_job(engine, tmp_path):
+    """The one-row ``Count`` result is an inline relation: previewing it
+    runs no Spark job (the write itself runs inside ``engine.sql``)."""
+    out = str(tmp_path / "nation.parquet")
+    df = engine.sql(f"COPY (SELECT n_nationkey FROM 'nation.parquet') TO '{out}'")
+    sc = engine.spark.sparkContext
+    gid = "copy-count-preview"
+    sc.setJobGroup(gid, gid)
+    try:
+        rows = df.limit(200).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [tuple(r) for r in rows] == [(25,)]
+    assert df.columns == ["Count"]
+    assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []

@@ -1,8 +1,10 @@
-"""Property tests for dedup operators on crafted corpora.
+"""Property tests for dedup operators.
 
 The oracle suite proves Spark↔DuckDB agreement; these prove the operators
-actually FIND duplicates: injected exact copies and near-duplicates must
-surface with the right scores.
+actually FIND duplicates: injected exact copies and near-duplicates in
+crafted corpora must surface with the right scores.  The tests at the end
+check invariants over the test tables that the oracle hash-compare can't
+express (bounds, idempotence, monotone curves).
 """
 
 import os
@@ -13,6 +15,10 @@ import pytest
 from parquet_query_spark.operators.catalog import load_all
 
 CATALOG = load_all()
+
+# the invariants below are stated over the sf0.01 tables (more rows than
+# the default ``sf_dir``)
+SF = "/root/testdata/sf0.01"
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches the "
@@ -198,3 +204,34 @@ def test_band_join_tiling_containment_and_pipeline_agree(spark, hot_band_dir, mo
         tiled = sorted(map(tuple, fn(spark, hot_band_dir).collect()))
         monkeypatch.undo()
         assert tiled == base, name
+
+
+def test_containment_dominates_jaccard(catalog, spark, sf_dir):
+    for r in catalog["dedup_minhash_containment"].fn(spark, sf_dir).collect():
+        assert r["cont_a_in_b"] >= r["jaccard"] - 1e-9
+        assert r["cont_b_in_a"] >= r["jaccard"] - 1e-9
+        assert r["relation"] in ("near_dup", "containment", "overlap")
+
+
+def test_incremental_minhash_equals_full_recompute(catalog, spark):
+    inc = (
+        catalog["incremental_minhash_update"]
+        .fn(spark, SF)
+        .drop("provenance")
+        .collect()
+    )
+    full = catalog["dedup_minhash_signatures"].fn(spark, SF).collect()
+    assert [tuple(r) for r in inc] == [tuple(r) for r in full]
+
+
+def test_band_tuning_scurve_monotone(catalog, spark):
+    rows = catalog["dedup_band_tuning_table"].fn(spark, SF).collect()
+    assert len(rows) == 35  # 7 factorizations × 5 similarity levels
+    # p_candidate rises with jaccard for a fixed layout
+    from collections import defaultdict
+
+    by_layout = defaultdict(list)
+    for r in sorted(rows, key=lambda r: (r.bands, r.jaccard)):
+        by_layout[(r.bands, r.rows_per_band)].append(r.p_candidate)
+    for ps in by_layout.values():
+        assert ps == sorted(ps)

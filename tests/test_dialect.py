@@ -10,10 +10,8 @@ keep working untouched.
 
 import pytest
 
-from parquet_query_spark.workbench.dialect import (
-    rewrite_duckdb_dialect,
-    strftime_format_to_java,
-)
+from parquet_query_spark.workbench.dialect import rewrite_duckdb_dialect
+from parquet_query_spark.workbench.dialect_core import strftime_format_to_java
 
 
 # ── pure-string rewrites ─────────────────────────────────────────────────
@@ -200,7 +198,7 @@ def test_plain_sql_unchanged():
 
 
 def test_strip_comments_string_and_dollar_aware():
-    from parquet_query_spark.workbench.dialect import strip_comments
+    from parquet_query_spark.workbench.dialect_core import strip_comments
 
     # comment markers inside string literals survive untouched
     assert strip_comments("SELECT '--x' AS a, '/*y*/' AS b") == (
@@ -600,7 +598,7 @@ def test_asof_explicit_select_list_not_wrapped():
 
 
 def test_asof_unsupported_forms_raise():
-    from parquet_query_spark.workbench.dialect import AsofRewriteError
+    from parquet_query_spark.workbench.dialect_core import AsofRewriteError
 
     for bad in [
         "SELECT * FROM a ASOF JOIN (SELECT 1) b ON a.t >= b.t",

@@ -104,7 +104,7 @@ def test_residual_7_sample_rng_and_alias(engine):
 def test_residual_8_asof_unsupported_raises():
     """#8: unsupported ASOF shapes raise AsofRewriteError (error over
     wrong results)."""
-    from parquet_query_spark.workbench.dialect import AsofRewriteError
+    from parquet_query_spark.workbench.dialect_core import AsofRewriteError
 
     with pytest.raises(AsofRewriteError):
         rewrite_duckdb_dialect(

@@ -75,3 +75,20 @@ def test_latest_green_rounds_reads_committed_files():
     assert latest.get("agg_weighted_median", 0) >= 7
     # r1-only ops must carry their r1 stamp, not be dropped
     assert latest.get("q1_pricing_summary") >= 1
+
+
+def test_query_rejects_duplicate_name():
+    """A second ``@query`` under a registered name raises instead of
+    silently replacing the first registration."""
+    import pytest
+
+    from parquet_query_spark.operators.catalog import query
+
+    first = CATALOG["q1_pricing_summary"]
+    with pytest.raises(ValueError, match="q1_pricing_summary"):
+
+        @query("q1_pricing_summary", oracle="SELECT 1")
+        def q1_pricing_summary(spark, sf_dir):  # pragma: no cover
+            raise AssertionError
+
+    assert CATALOG["q1_pricing_summary"] is first
