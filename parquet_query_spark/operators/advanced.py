@@ -467,7 +467,6 @@ def window_range_frame_weekly_revenue(spark: SparkSession, sf_dir: str) -> DataF
     """RANGE window frame (value-based, not row-based): trailing-7-day
     revenue per customer.  Day numbers make the frame numeric so the exact
     same frame definition runs on both engines."""
-    from pyspark.sql import Window as W
 
     o = views(spark, sf_dir)["orders"].withColumn(
         "day_no", F.datediff(F.col("o_orderdate"), F.lit("1995-01-01").cast("date"))

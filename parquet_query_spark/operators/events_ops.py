@@ -584,7 +584,6 @@ def events_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus per-day totals cumulated on the tiny day relation and broadcast
     back as offsets.  Identical result, no single-partition stage; the
     global window survives only in the oracle."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
     pts = v["events"].select(
@@ -602,14 +601,14 @@ def events_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = F.date_trunc("day", F.col("t")).alias("b")
     keyed = per_t.select("t", "d", day)
     w_in = (
-        W2.partitionBy("b")
+        W.partitionBy("b")
         .orderBy("t")
-        .rowsBetween(W2.unboundedPreceding, W2.currentRow)
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     in_sum = keyed.withColumn("in_sum", F.sum("d").over(w_in))
     bucket_tot = keyed.groupBy("b").agg(F.sum("d").alias("tot"))
     w_b = (
-        W2.orderBy("b").rowsBetween(W2.unboundedPreceding, -1)
+        W.orderBy("b").rowsBetween(W.unboundedPreceding, -1)
     )
     offsets = bucket_tot.withColumn(
         "off", F.coalesce(F.sum("tot").over(w_b), F.lit(0))
@@ -1042,7 +1041,6 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-stable across engines.  All shuffles downstream of the hourly
     rollup carry only (type, hour) rows — the map-side combine does the
     heavy reduction before anything moves."""
-    from pyspark.sql import Window as W
 
     v = views(spark, sf_dir)
     # (No explicit repartition here — see events_ewma_hourly: shuffling
@@ -1128,7 +1126,6 @@ def events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-bucket running max partitioned by arrival bucket, plus
     per-bucket maxima cumulated on the tiny bucket relation and broadcast
     back; the global window survives only in the oracle."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
     base = v["events"].select(
@@ -1138,13 +1135,13 @@ def events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_id") / 10000).cast("bigint").alias("b"),
     )
     w_in = (
-        W2.partitionBy("b")
+        W.partitionBy("b")
         .orderBy("event_id")
-        .rowsBetween(W2.unboundedPreceding, -1)
+        .rowsBetween(W.unboundedPreceding, -1)
     )
     in_max = base.withColumn("in_hwm", F.max("ts_us").over(w_in))
     bucket_max = base.groupBy("b").agg(F.max("ts_us").alias("bmax"))
-    w_b = W2.orderBy("b").rowsBetween(W2.unboundedPreceding, -1)
+    w_b = W.orderBy("b").rowsBetween(W.unboundedPreceding, -1)
     offsets = bucket_max.withColumn("off", F.max("bmax").over(w_b)).select("b", "off")
     late_us = F.when(
         F.greatest(F.col("in_hwm"), F.col("off")).isNull()
@@ -1211,7 +1208,6 @@ def events_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFram
     division of signed values rounds differently across engines; the two
     exact sums let any consumer derive it), MAE divides two non-negative
     BIGINTs."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
     hourly = (
@@ -1219,7 +1215,7 @@ def events_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFram
         .groupBy("event_type", F.date_trunc("hour", "ts").alias("hour_ts"))
         .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("cents"))
     )
-    w = W2.partitionBy("event_type").orderBy("hour_ts")
+    w = W.partitionBy("event_type").orderBy("hour_ts")
     fc = hourly.withColumn("forecast", F.lag("cents", 168).over(w)).where(
         F.col("forecast").isNotNull()
     )
@@ -1381,7 +1377,6 @@ def events_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted ascending: both sums are exact BIGINTs (the rank window and
     per-user rollup share the event_type-keyed shuffle) and the final
     expression is a fixed-order IEEE computation rounded once."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
     per_user = (
@@ -1389,7 +1384,7 @@ def events_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "user_id")
         .agg(F.count("*").cast("bigint").alias("cnt"))
     )
-    w = W2.partitionBy("event_type").orderBy("cnt", "user_id")
+    w = W.partitionBy("event_type").orderBy("cnt", "user_id")
     ranked = per_user.withColumn("rnk", F.row_number().over(w))
     s = ranked.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_users"),
@@ -1447,10 +1442,9 @@ def events_bot_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One user-keyed shuffle serves the LAG window and the moment sums;
     the ≥5-gap floor keeps the statistic meaningful."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
-    w = W2.partitionBy("user_id").orderBy("ts", "event_id")
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = v["events"].select(
         "user_id",
         (
@@ -1605,11 +1599,10 @@ def events_session_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: sessionize and the transition LAG share one user-keyed
     shuffle; the model is type×type (≤25 rows) and broadcast; top-20 is
     TakeOrdered."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
-    w = W2.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(W2.unboundedPreceding, W2.currentRow)
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
     is_new = F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0)
     sess = (
@@ -1617,7 +1610,7 @@ def events_session_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "ts", "event_id", "event_type", is_new.alias("is_new"))
         .withColumn("session_id", F.sum("is_new").over(run))
     )
-    w_s = W2.partitionBy("user_id", "session_id").orderBy("ts", "event_id")
+    w_s = W.partitionBy("user_id", "session_id").orderBy("ts", "event_id")
     trans = sess.select(
         "user_id",
         "session_id",
@@ -1927,7 +1920,6 @@ def events_error_rate_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (aggregation output, not raw events), so the single ordered window
     over it is bounded — unlike a raw-event global window, which is the
     anti-pattern the late-arrival audit decomposes away."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
     hourly = (
@@ -1940,7 +1932,7 @@ def events_error_rate_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_err"),
         )
     )
-    w = W2.orderBy("hour_ts").rowsBetween(-24, -1)
+    w = W.orderBy("hour_ts").rowsBetween(-24, -1)
     trailed = hourly.select(
         "hour_ts",
         "n_all",
@@ -1996,7 +1988,6 @@ def events_volume_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame
     primitives.  Five exact BIGINT sums over integer counts, one IEEE
     division rounded once (the zipf/elasticity discipline); the ordered
     window runs over the bounded hourly rollup."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
     hourly = (
@@ -2004,7 +1995,7 @@ def events_volume_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy(F.date_trunc("hour", "ts").alias("hour_ts"))
         .agg(F.count("*").cast("bigint").alias("n"))
     )
-    w = W2.orderBy("hour_ts")
+    w = W.orderBy("hour_ts")
     pairs = hourly.select(
         F.col("n").alias("y"), F.lag("n", 24).over(w).alias("x")
     ).where(F.col("x").isNotNull())
@@ -2070,7 +2061,6 @@ def events_heavy_hitter_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (week, user) rollup; consecutive weeks compare with one slim
     self-join of 20-row sets; Jaccard is exact-integer (|A|=|B|=20 ⇒
     union = 40 − shared)."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
     weekly = (
@@ -2078,11 +2068,11 @@ def events_heavy_hitter_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.date_trunc("week", "ts").cast("date").alias("wk"), "user_id")
         .agg(F.count("*").cast("bigint").alias("n"))
     )
-    w = W2.partitionBy("wk").orderBy(F.desc("n"), "user_id")
+    w = W.partitionBy("wk").orderBy(F.desc("n"), "user_id")
     top = weekly.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= 20)
     wks = top.select("wk").distinct()
     seq = wks.select(
-        "wk", F.lag("wk").over(W2.orderBy("wk")).alias("prev_wk")
+        "wk", F.lag("wk").over(W.orderBy("wk")).alias("prev_wk")
     ).where(F.col("prev_wk").isNotNull())
     a = top.select(F.col("wk").alias("a_wk"), F.col("user_id").alias("a_uid"))
     b = top.select(F.col("wk").alias("b_wk"), F.col("user_id").alias("b_uid"))
@@ -2148,11 +2138,10 @@ def events_session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel; the entry event resolves via arg_min on the zero-padded
     (timestamp, id) key so ties are deterministic; rates are
     floor-divided integer basis points."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
-    w = W2.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(W2.unboundedPreceding, W2.currentRow)
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
     is_new = F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0)
     sess = (
@@ -2237,11 +2226,10 @@ def events_type_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same Apriori shape as orders_basket_pairs: per-session distinct-type
     arrays (≤5 elements), scan-side pair expansion, type marginals
     broadcast; lift divides exact BIGINTs once."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
-    w = W2.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(W2.unboundedPreceding, W2.currentRow)
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
     is_new = F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0)
     sess = (
@@ -2324,7 +2312,6 @@ def events_adoption_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     forecasting.  The ordered window runs over the per-DAY rollup (one
     row per day — bounded, unlike a raw-event global window); all
     arithmetic is exact integers."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
     firsts = (
@@ -2334,7 +2321,7 @@ def events_adoption_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     daily = firsts.groupBy("first_day").agg(F.count("*").cast("bigint").alias("n_new"))
     tot = daily.agg(F.sum("n_new").cast("bigint").alias("total"))
-    w = W2.orderBy("first_day").rowsBetween(W2.unboundedPreceding, 0)
+    w = W.orderBy("first_day").rowsBetween(W.unboundedPreceding, 0)
     return (
         daily.crossJoin(F.broadcast(tot))
         .select(
@@ -2398,11 +2385,10 @@ def events_session_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel's one user-keyed shuffle; away-time is an exact floor-divided
     minute integer and the percentiles use the shared floor-quantized
     interpolation."""
-    from pyspark.sql import Window as W2
 
     v = views(spark, sf_dir)
-    w = W2.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(W2.unboundedPreceding, W2.currentRow)
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
     is_new = F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0)
     sess = (
@@ -2413,7 +2399,7 @@ def events_session_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = sess.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("s_start"), F.max("ts").alias("s_end")
     )
-    w_s = W2.partitionBy("user_id").orderBy("session_id")
+    w_s = W.partitionBy("user_id").orderBy("session_id")
     # sessions are disjoint (a >30 min gap separates them), so the away
     # time is strictly positive and truncating division == floor division
     inter = bounds.select(
@@ -2470,7 +2456,6 @@ def events_peak_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the window runs over a series whose length is time-, not
     volume-, bound; single unpartitioned window over that tiny series is
     deliberate (documented same as source mixing)."""
-    from pyspark.sql import Window as W
 
     v = views(spark, sf_dir)
     h = v["events"].groupBy(
@@ -2541,7 +2526,6 @@ def events_user_active_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; the row_number window is per-user (keyed shuffle, no
     global sort); the island rollup is two more map-side-combined
     groupings on the same user partitioning."""
-    from pyspark.sql import Window as W
 
     v = views(spark, sf_dir)
     days = (
@@ -2602,7 +2586,6 @@ def events_outage_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     minutes (time-bounded series, corpus-size-independent), and only
     that series flows through the unpartitioned lag window — the same
     bounded-series justification as the hourly anomaly ops."""
-    from pyspark.sql import Window as W
 
     v = views(spark, sf_dir)
     m = v["events"].select(F.date_trunc("minute", "ts").alias("minute")).distinct()
@@ -2667,7 +2650,6 @@ def events_spike_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: both rollups map-side combine onto hour(-type) keys; the
     join is hour-keyed against the tiny spike set."""
-    from pyspark.sql import Window as W
 
     v = views(spark, sf_dir)
     h = v["events"].groupBy(
@@ -2750,7 +2732,6 @@ def events_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the event volume collapses map-side to hourly
     (n, n_err) pairs; both burn windows run over that time-bounded
     series."""
-    from pyspark.sql import Window as W
 
     v = views(spark, sf_dir)
     h = v["events"].groupBy(
@@ -2826,7 +2807,6 @@ def events_alert_flap_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: hourly state map-side combines; the lag window and day
     rollup run over the bounded hour series."""
-    from pyspark.sql import Window as W
 
     v = views(spark, sf_dir)
     h = v["events"].groupBy(

@@ -43,7 +43,9 @@ from parquet_query_spark.operators.dedup import (
 _SCALE = 1_000_000_000  # rank nano-units
 _N_ITER = 5
 
-_GRAPH_CTES = f"""{_DUCKDB_LSH_PAIR_CTES},
+#: the verified near-dup pairs and their edges in both directions — the
+#: prefix every graph oracle starts from
+_EDGE_CTES = f"""{_DUCKDB_LSH_PAIR_CTES},
 verified AS (
   SELECT doc_a, doc_b FROM pairs
   WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
@@ -53,7 +55,9 @@ edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM verified
   UNION ALL
   SELECT doc_b AS src, doc_a AS dst FROM verified
-),
+)"""
+
+_GRAPH_CTES = f"""{_EDGE_CTES},
 deg AS (
   SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY 1
 )"""
@@ -286,17 +290,7 @@ _LPA_ROUNDS = 3
 
 
 def _lpa_oracle() -> str:
-    graph_ctes = f"""{_DUCKDB_LSH_PAIR_CTES},
-verified AS (
-  SELECT doc_a, doc_b FROM pairs
-  WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-        / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM verified
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM verified
-),
+    graph_ctes = f"""{_EDGE_CTES},
 nodes AS (SELECT DISTINCT src AS doc_id FROM edges)"""
     rounds = ["l0 AS (SELECT doc_id, doc_id AS label FROM nodes)"]
     for i in range(1, _LPA_ROUNDS + 1):

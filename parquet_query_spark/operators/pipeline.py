@@ -167,7 +167,6 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     fits an executor); the per-bin rollup re-uses the same partitioning.
     bin_hash fingerprints bin contents order-sensitively so a re-run or a
     second engine can verify identical packing."""
-    from pyspark.sql import Window as W
 
     v = views(spark, sf_dir)
     t = v["documents"].select(
@@ -190,9 +189,9 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.concat_ws(" ", piece)).alias("chunk_hash"),
     )
     w = (
-        W.partitionBy("lang")
+        Window.partitionBy("lang")
         .orderBy("doc_id", "chunk_no")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     placed = sized.withColumn(
         "bin_id",
@@ -251,7 +250,6 @@ def pipeline_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     source per task.  The normalization terms are window aggregates over
     the per-SOURCE table (tens of rows), so the unpartitioned window is a
     one-task no-op, not a corpus-wide single-partition shuffle."""
-    from pyspark.sql import Window as W
 
     v = views(spark, sf_dir)
     per_source = (
@@ -264,7 +262,7 @@ def pipeline_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     raw_w = F.pow(F.col("n_tokens").cast("double"), 0.5)
-    w_all = W.partitionBy()
+    w_all = Window.partitionBy()
     weighted = per_source.select(
         "source",
         "n_docs",

@@ -386,7 +386,6 @@ def lineitem_rolling_revenue_zscore(spark: SparkSession, sf_dir: str) -> DataFra
 
     Scale shape: the fact scan rolls up map-side to one row per month;
     the window runs over a time-bounded series."""
-    from pyspark.sql import Window as W
 
     v = views(spark, sf_dir)
     m = (
@@ -403,7 +402,7 @@ def lineitem_rolling_revenue_zscore(spark: SparkSession, sf_dir: str) -> DataFra
         )
         .select("ship_month", (F.col("rev_e4").cast("double") / 10000.0).alias("revenue"))
     )
-    t = W.orderBy("ship_month").rowsBetween(-6, -1)
+    t = Window.orderBy("ship_month").rowsBetween(-6, -1)
     w = m.select(
         "ship_month",
         "revenue",

@@ -36,17 +36,41 @@ shared pool opens them once and keeps the JVM thread count bounded.  Pool
 tasks must not submit to the pool themselves — a task waiting on the
 pool it runs on can deadlock it.  Temp-view registration stays on the
 calling thread, in file order.
+
+Restage.  Spark scans parquet one row group per task, so a driver table
+file (``load_table``) with fewer row groups than the cluster has task
+slots leaves cores idle in every scan.  Such a file is rewritten once per
+process into ``width = min(slots, rows // _STAGE_MIN_ROWS)`` files, where
+``slots`` is ``defaultParallelism`` and ``rows`` comes from the footer
+already read; it is restaged only when ``width`` exceeds its row-group
+count.  The width follows the cluster: 4 files on 4 slots, 32 on 32 for
+any table of at least 32k rows, and ``rows // 1000`` for a smaller one,
+so no staged file is near-empty.  Measured with the repository
+benchmark's ``pipeline_batch`` (4 vCPU, ``local[4]``, sf0.01, ``lineitem``
+one 59,928-row group), 32 files → 4: set-up median 1.91 s → 1.22 s over
+10 alternating pairs (10/10 wins), ``registry.views_s`` 1.98 s → 1.14 s
+and first-pass Spark tasks 513 → 369, with jobs (92) unchanged.  The
+restage stays a Spark shuffle + write job.  A driver-side pyarrow
+re-split, which runs no job, was tried: it cut set-up further but made
+the first pass 6-44% slower over 3 pairs, because the restage jobs are
+what JIT-warm the parquet scan, shuffle and writer paths the first
+queries run.  The staging dir is a ``tempfile`` dir on the driver, so it
+is node-local: it serves ``local[N]`` sessions, whose driver and
+executors share one file system.
 """
 
 from __future__ import annotations
 
+import atexit
 import functools
 import glob
 import json
 import os
 import re
+import shutil
 import tempfile
 import threading
+import uuid
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -340,34 +364,51 @@ def parquet_glob(abs_path: str) -> list[str] | None:
     return files if files and ok else None
 
 
-def _needs_restage(footer: ParquetFooter) -> bool:
+def _stage_width(spark: SparkSession, footer: ParquetFooter) -> int:
+    """The restage width of a file: one staged file per task slot
+    (``defaultParallelism``), capped by its rows at ``_STAGE_MIN_ROWS``
+    per file (see the module's restage rule)."""
+    rows = sum(g.getRowCount() for g in footer.meta.getBlocks())
+    return min(spark.sparkContext.defaultParallelism, rows // _STAGE_MIN_ROWS)
+
+
+def _needs_restage(footer: ParquetFooter, width: int) -> bool:
     """True when the file's row-group layout under-parallelizes the scan:
-    fewer groups than the stage width AND enough rows per group that
-    splitting pays.  Spark's parquet scan unit is the row group, so a
-    320k-row file written as 3 fat groups runs scan-side compute on 3
-    cores of 32 (observed: minhash signatures 149 s at 64× vs 18 s after
-    restage).  Real 100 TB tables have thousands of groups; this repairs
-    badly-laid-out small inputs only."""
-    groups = footer.meta.getBlocks()
-    n = groups.size()
-    if n >= _STAGE_PARTITIONS:
-        return False
-    return sum(g.getRowCount() for g in groups) / max(n, 1) >= _STAGE_MIN_ROWS
+    fewer row groups than its restage ``width`` (:func:`_stage_width`).
+    Spark's parquet scan unit is the row group, so a 320k-row file written
+    as 3 fat groups runs scan-side compute on 3 cores of 32 (observed:
+    minhash signatures 149 s at 64× vs 18 s after restage).  The one rule
+    also covers thin groups: a file with fewer than ``_STAGE_MIN_ROWS``
+    rows per group has ``rows // _STAGE_MIN_ROWS`` below its group count,
+    so splitting it cannot pay.  Real 100 TB tables have thousands of
+    groups; this repairs badly laid-out small inputs only."""
+    return width > footer.meta.getBlocks().size()
 
 
-_STAGE_PARTITIONS = 32
+#: the fewest rows a staged file is given: below it a file's scan task
+#: costs more in scheduling than it saves in parallel compute
 _STAGE_MIN_ROWS = 1000
 _staging_root: str | None = None
 _staging_lock = threading.Lock()
 
 
-def _stage_path(sf_dir: str, name: str) -> str:
-    """Per-process staging directory for re-laid-out copies of one sf_dir.
+def _remove_staging_root() -> None:
+    if _staging_root is not None:
+        shutil.rmtree(_staging_root, ignore_errors=True)
+
+
+atexit.register(_remove_staging_root)
+
+
+def _stage_path(sf_dir: str, name: str, width: int) -> str:
+    """Per-process staging directory for re-laid-out copies of one sf_dir,
+    removed at interpreter exit.
 
     The leaf directory is keyed by the source file's (mtime_ns, size) so a
     regenerated input (the driver rewrites testdata between rounds)
     invalidates the staged copy instead of silently serving stale rows
-    from a long-lived session."""
+    from a long-lived session, and by the ``width`` it is laid out for, so
+    a session with another slot count never reuses it."""
     global _staging_root
     with _staging_lock:  # loads run concurrently (concurrent_reads)
         if _staging_root is None:
@@ -379,12 +420,12 @@ def _stage_path(sf_dir: str, name: str) -> str:
         fingerprint = f"{name}-{st.st_mtime_ns}-{st.st_size}"
     except OSError:
         fingerprint = name
-    return os.path.join(_staging_root, key, fingerprint)
+    return os.path.join(_staging_root, key, f"{fingerprint}-w{width}")
 
 
-def _restage(spark: SparkSession, df: DataFrame, sf_dir: str, name: str) -> DataFrame:
-    """Ingest-time re-layout: rewrite a pathological single-row-group input
-    into a multi-row-group copy and read THAT.
+def _restage(spark: SparkSession, df: DataFrame, sf_dir: str, name: str, width: int) -> DataFrame:
+    """Ingest-time re-layout: rewrite a badly laid-out input (fewer row
+    groups than its ``width``) into ``width`` files and read THAT.
 
     Spark's parquet scan parallelizes at row-group granularity — a table
     packed into one row group serializes every scan-side computation onto
@@ -393,13 +434,26 @@ def _restage(spark: SparkSession, df: DataFrame, sf_dir: str, name: str) -> Data
     input arrives badly laid out, the warehouse answer is the same one
     `maintenance_compact_small_files` applies in reverse: pay one layout
     rewrite at ingest, then every subsequent query scans in parallel.
-    The staged copy holds identical rows (only layout changes; repairs
-    above are already applied); it is per-process, under the system temp
-    dir, and reused across queries in the session.  The copy is read back
+
+    The rewrite is a Spark ``repartition(width)`` shuffle + write job (2
+    jobs, ``width`` write tasks), not a driver-side split: the set-up's
+    restage jobs are what JIT-warm the scan, shuffle and writer paths the
+    first queries use (see the module's restage rule).  The copy is
+    written under a unique ``<leaf>.<hex>`` name and renamed onto the
+    leaf, so a reader never sees a partial copy; when another load in the
+    process got there first, its copy is kept and this one removed.  The
+    staged copy holds identical rows (only layout changes; repairs above
+    are already applied); it is per-process, under the system temp dir,
+    and reused across queries in the session.  The copy is read back
     with ``df``'s schema, which it was written with: no inference job."""
-    out = _stage_path(sf_dir, name)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        df.repartition(_STAGE_PARTITIONS).write.mode("overwrite").parquet(out)
+    out = _stage_path(sf_dir, name, width)
+    if not os.path.isdir(out):
+        tmp = f"{out}.{uuid.uuid4().hex}"
+        df.repartition(width).write.parquet(tmp)
+        try:
+            os.rename(tmp, out)
+        except OSError:  # the leaf appeared meanwhile: keep that copy
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.read.schema(df.schema).parquet(out)
 
 
@@ -421,8 +475,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     # a directory's parts are laid out by its writer; only a lone file is
     # restaged
-    if os.path.isfile(path) and _needs_restage(footers[0]):
-        df = _restage(spark, df, sf_dir, name)
+    if os.path.isfile(path):
+        width = _stage_width(spark, footers[0])
+        if _needs_restage(footers[0], width):
+            df = _restage(spark, df, sf_dir, name, width)
     return df
 
 

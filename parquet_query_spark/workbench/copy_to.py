@@ -28,7 +28,8 @@ import re
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 _COPY_HEAD = re.compile(r"^\s*COPY\b", re.IGNORECASE)
 
@@ -160,24 +161,16 @@ def run_copy(engine, statement: str) -> DataFrame:
         quoted = src.startswith('"')
         name = src[1:-1].replace('""', '"') if quoted else src
         df = engine.sql(f'SELECT * FROM "{name}"' if quoted else f"SELECT * FROM {name}")
-    # ADVICE r7: count+write must not execute the source plan twice — a
-    # nondeterministic query (LIMIT without ORDER BY, USING SAMPLE) could
-    # report a Count disagreeing with the rows actually written, and the
-    # double execution doubles cost.  Parquet: write first, then count
-    # from the written footers (metadata-only read-back, no re-scan).
-    # CSV/JSON: read-back counts are fragile (headers, quoted newlines),
-    # so persist the frame — the plan executes once into the cache and
-    # both count and write read from it.
-    if fmt == "parquet":
-        _write(df, path, fmt, opts)
-        n = engine.spark.read.parquet(path).count()
-    else:
-        df.persist()
-        try:
-            n = df.count()
-            _write(df, path, fmt, opts)
-        finally:
-            df.unpersist()
+    # ADVICE r7: the Count must be the number of rows actually written,
+    # from ONE execution of the source plan — a nondeterministic query
+    # (LIMIT without ORDER BY, USING SAMPLE) executed twice could write
+    # one set of rows and count another, and a second execution doubles
+    # the cost.  The Observation counts the rows flowing into the writer
+    # during the write job itself, so the plan runs once and the Count is
+    # taken on exactly the rows written, whatever the format.
+    rows = Observation()
+    _write(df.observe(rows, F.count(F.lit(1)).alias("n")), path, fmt, opts)
+    n = rows.get["n"]
     # an inline relation: previewing it runs no job (a createDataFrame
     # row is RDD-backed and runs two)
     return engine.spark.sql(f"SELECT * FROM VALUES (CAST({int(n)} AS BIGINT)) AS t(Count)")

@@ -111,3 +111,35 @@ def test_copy_count_preview_runs_no_job(engine, tmp_path):
     assert [tuple(r) for r in rows] == [(25,)]
     assert df.columns == ["Count"]
     assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
+
+
+@pytest.mark.parametrize(
+    "target, opts",
+    [
+        ("nation.csv", ""),
+        ("nation.json", ""),
+        ("nation.parquet", ""),
+        ("nation_parts", " (FORMAT PARQUET, PER_THREAD_OUTPUT)"),
+    ],
+)
+def test_copy_runs_its_plan_once(engine, tmp_path, target, opts):
+    """A scan-only COPY runs exactly one Spark job whatever the format: the
+    write, which also counts the rows it writes."""
+    out = str(tmp_path / target)
+    sc = engine.spark.sparkContext
+    gid = f"copy-one-job-{target}"
+    sc.setJobGroup(gid, gid)
+    try:
+        r = engine.run(f"COPY (SELECT * FROM 'nation.parquet') TO '{out}'{opts}")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r.rows == [["25"]]
+    assert len(sc.statusTracker().getJobIdsForGroup(gid)) == 1
+
+
+@pytest.mark.parametrize("target", ["empty.csv", "empty.json", "empty.parquet"])
+def test_copy_empty_result_counts_zero(engine, tmp_path, target):
+    out = str(tmp_path / target)
+    r = engine.run(f"COPY (SELECT * FROM 'nation.parquet' WHERE n_nationkey < 0) TO '{out}'")
+    assert r.rows == [["0"]]
+    assert os.path.isfile(out)

@@ -11,6 +11,7 @@ import os
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import urlparse
 
 import pytest
 
@@ -84,6 +85,15 @@ def test_empty_buffer_raises_clean_error(spark):
         eng.run("   -- only a comment\n")
 
 
+def _write_rows(path, n, row_group_size=None):
+    """A parquet file of ``n`` int rows in groups of ``row_group_size``
+    rows (one group by default)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"k": list(range(n))}), path, row_group_size=row_group_size or n)
+
+
 def test_restage_fixes_fat_row_groups(spark, tmp_path):
     """A file with a few fat row groups must be restaged so scan-side
     compute parallelizes (the 64x regression: 3 row groups -> 3 of 32
@@ -91,16 +101,25 @@ def test_restage_fixes_fat_row_groups(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from parquet_query_spark.sources.registry import _needs_restage, _parquet_footer, load_table
+    from parquet_query_spark.sources.registry import (
+        _STAGE_MIN_ROWS,
+        _needs_restage,
+        _parquet_footer,
+        _stage_width,
+        load_table,
+    )
 
     n = 30_000
     tbl = pa.table({"doc_id": list(range(n)), "text": ["word " * 10] * n})
     path = tmp_path / "documents.parquet"
     pq.write_table(tbl, path, row_group_size=n // 3 + 1)  # 3 fat groups
     assert pq.ParquetFile(path).metadata.num_row_groups <= 3
-    assert _needs_restage(_parquet_footer(spark, str(path)))
+    footer = _parquet_footer(spark, str(path))
+    assert _needs_restage(footer, _stage_width(spark, footer))
     df = load_table(spark, str(tmp_path), "documents")
-    assert df.rdd.getNumPartitions() >= 16
+    assert df.rdd.getNumPartitions() == min(
+        spark.sparkContext.defaultParallelism, n // _STAGE_MIN_ROWS
+    )
     assert df.count() == n
 
 
@@ -108,12 +127,139 @@ def test_tiny_tables_not_restaged(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from parquet_query_spark.sources.registry import _needs_restage, _parquet_footer
+    from parquet_query_spark.sources.registry import _needs_restage, _parquet_footer, _stage_width
 
     tbl = pa.table({"k": [1, 2, 3]})
     path = tmp_path / "region.parquet"
     pq.write_table(tbl, path)
-    assert not _needs_restage(_parquet_footer(spark, str(path)))
+    footer = _parquet_footer(spark, str(path))
+    assert not _needs_restage(footer, _stage_width(spark, footer))
+
+
+def test_restage_width_is_the_slot_count(spark, tmp_path):
+    """A one-group file with at least ``slots × 1000`` rows restages into
+    exactly one file per task slot and scans in that many partitions."""
+    from parquet_query_spark.sources.registry import load_table
+
+    slots = spark.sparkContext.defaultParallelism
+    n = slots * 1000 + 500
+    _write_rows(tmp_path / "lineitem.parquet", n)
+    df = load_table(spark, str(tmp_path), "lineitem")
+    assert len(df.inputFiles()) == slots
+    assert df.rdd.getNumPartitions() == slots
+    assert df.count() == n
+
+
+def test_restage_width_capped_by_rows(spark, tmp_path):
+    """A one-group file with fewer than ``slots × 1000`` rows restages into
+    ``rows // 1000`` files, not one per slot."""
+    from parquet_query_spark.sources.registry import load_table
+
+    slots = spark.sparkContext.defaultParallelism
+    if slots < 3:
+        pytest.skip("needs at least 3 task slots")
+    n = (slots - 1) * 1000 + 500
+    _write_rows(tmp_path / "orders.parquet", n)
+    df = load_table(spark, str(tmp_path), "orders")
+    assert len(df.inputFiles()) == n // 1000 == slots - 1
+    assert sorted(r.k for r in df.collect()) == list(range(n))
+
+
+@pytest.mark.parametrize("layout", ["enough_groups", "thin_groups"])
+def test_not_restaged_when_groups_cover_the_width(spark, tmp_path, layout):
+    """A file with at least ``width`` row groups, or with fewer than 1000
+    rows per group, is read in place."""
+    from parquet_query_spark.sources.registry import (
+        _needs_restage,
+        _parquet_footer,
+        _stage_width,
+        load_table,
+    )
+
+    slots = spark.sparkContext.defaultParallelism
+    if layout == "enough_groups":
+        n, group = slots * 2000, 2000  # slots groups, width slots
+    else:
+        n, group = (slots + 1) * 900, 900  # slots + 1 groups, width ≤ slots
+    path = tmp_path / "customer.parquet"
+    _write_rows(path, n, row_group_size=group)
+    footer = _parquet_footer(spark, str(path))
+    width = _stage_width(spark, footer)
+    assert footer.meta.getBlocks().size() >= width
+    assert not _needs_restage(footer, width)
+    df = load_table(spark, str(tmp_path), "customer")
+    assert [os.path.basename(f) for f in df.inputFiles()] == ["customer.parquet"]
+
+
+def test_views_restage_runs_one_shuffle_and_write(spark, tmp_path):
+    """``catalog.views`` over a folder whose one table needs a restage runs
+    exactly 2 jobs (the shuffle map stage, then the write), and the write
+    stage has ``width`` tasks."""
+    from parquet_query_spark.operators.catalog import views
+
+    slots = spark.sparkContext.defaultParallelism
+    n = slots * 1000 + 500
+    _write_rows(tmp_path / "documents.parquet", n)
+    with job_group(spark, "pqs-test-views-restage") as jobs:
+        frames = views(spark, str(tmp_path))
+    assert len(jobs) == 2
+    tracker = spark.sparkContext.statusTracker()
+    stages = [tracker.getStageInfo(s) for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    assert max(s.numTasks for s in stages if s is not None) == slots
+    assert frames["documents"].count() == n
+
+
+def test_concurrent_restages_keep_one_copy(spark, tmp_path):
+    """Two loads restaging one table at once end with one readable staged
+    copy holding every row: the second rename finds the leaf and drops its
+    own copy."""
+    from parquet_query_spark.sources.registry import load_table
+
+    slots = spark.sparkContext.defaultParallelism
+    n = slots * 1000 + 500
+    _write_rows(tmp_path / "part.parquet", n)
+    barrier = threading.Barrier(2)
+
+    def load(_):
+        barrier.wait(timeout=60)
+        return load_table(spark, str(tmp_path), "part")
+
+    with ThreadPoolExecutor(2) as ex:
+        frames = list(ex.map(load, range(2), timeout=300))
+    leaves = {os.path.dirname(urlparse(f).path) for df in frames for f in df.inputFiles()}
+    assert len(leaves) == 1
+    (leaf,) = leaves
+    assert os.listdir(os.path.dirname(leaf)) == [os.path.basename(leaf)]
+    for df in frames:
+        assert sorted(r.k for r in df.collect()) == list(range(n))
+
+
+def test_staging_root_removed_at_exit(tmp_path):
+    """A process that restages a table leaves no ``pqs_ingest_stage_*``
+    dir in its temp dir once it exits."""
+    import subprocess
+    import sys
+
+    _write_rows(tmp_path / "documents.parquet", 3000)
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    code = (
+        "import os, sys\n"
+        "from parquet_query_spark.session import get_spark\n"
+        "from parquet_query_spark.sources.registry import load_table\n"
+        "df = load_table(get_spark('restage-exit', cpus=2), sys.argv[1], 'documents')\n"
+        "assert len(df.inputFiles()) == 2 and df.count() == 3000\n"
+        "print(sorted(os.listdir(os.environ['TMPDIR'])))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmpdir), PYTHONPATH=root, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(tmp_path)],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "pqs_ingest_stage_" in out.stdout
+    assert not [n for n in os.listdir(tmpdir) if n.startswith("pqs_ingest_stage_")]
 
 
 @contextlib.contextmanager
@@ -169,7 +315,7 @@ def test_stage_path_root_initialised_once(monkeypatch, tmp_path):
 
     def stage(i):
         barrier.wait(timeout=60)
-        return registry._stage_path(str(tmp_path / "sf"), f"t{i}")
+        return registry._stage_path(str(tmp_path / "sf"), f"t{i}", 4)
 
     with ThreadPoolExecutor(n) as ex:
         paths = list(ex.map(stage, range(n), timeout=60))
