@@ -25,7 +25,6 @@ SELECT l_returnflag,
        round(covar_samp(l_quantity, l_extendedprice), 4) AS qty_price_covar
 FROM lineitem
 GROUP BY l_returnflag
-ORDER BY l_returnflag
 """,
     tags=("aggregate", "stats"),
 )
@@ -41,7 +40,6 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("qty_price_corr"),
             F.round(F.covar_samp("l_quantity", "l_extendedprice"), 4).alias("qty_price_covar"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -54,7 +52,6 @@ SELECT o_orderstatus,
        max(o_orderkey)               AS max_orderkey
 FROM orders
 GROUP BY o_orderstatus
-ORDER BY o_orderstatus
 """,
     tags=("aggregate",),
 )
@@ -70,7 +67,6 @@ def agg_argminmax(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min_by("o_custkey", "o_orderkey").alias("first_cust"),
             F.max("o_orderkey").alias("max_orderkey"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -81,7 +77,6 @@ SELECT c_mktsegment,
        string_agg(DISTINCT n_name, ',' ORDER BY n_name) AS nations
 FROM customer JOIN nation ON c_nationkey = n_nationkey
 GROUP BY c_mktsegment
-ORDER BY c_mktsegment
 """,
     tags=("aggregate",),
 )
@@ -97,7 +92,6 @@ def agg_ordered_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.array_join(F.array_sort(F.collect_set("n_name")), ",").alias("nations")
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -110,7 +104,6 @@ SELECT o_orderstatus,
        floor(quantile_cont(o_totalprice, 0.75) * 10000 + 0.5) / 10000 AS p75
 FROM orders
 GROUP BY o_orderstatus
-ORDER BY o_orderstatus
 """,
     tags=("aggregate", "stats"),
 )
@@ -129,7 +122,6 @@ def agg_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.floor(F.percentile("o_totalprice", F.lit(0.25)) * 10000 + 0.5) / 10000).alias("p25"),
             (F.floor(F.percentile("o_totalprice", F.lit(0.75)) * 10000 + 0.5) / 10000).alias("p75"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -146,7 +138,6 @@ SELECT vec_id,
        round(CAST(list_sum(list_transform(embedding, x -> CASE WHEN x > 0
              THEN CAST(x AS DOUBLE) ELSE 0.0 END)) AS DOUBLE), 4)        AS pos_sum
 FROM embeddings
-ORDER BY vec_id
 """,
     tags=("array", "scalar"),
 )
@@ -180,7 +171,6 @@ def array_higher_order_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("pos_sum"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -217,7 +207,6 @@ SELECT o_custkey, COUNT(*) AS n_orders, round(SUM(o_totalprice), 2) AS total
 FROM orders
 GROUP BY o_custkey
 HAVING COUNT(*) >= 15 AND SUM(o_totalprice) > 3000000
-ORDER BY o_custkey
 """,
     tags=("aggregate",),
 )
@@ -229,7 +218,6 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM {orders}
         GROUP BY o_custkey
         HAVING COUNT(*) >= 15 AND SUM(o_totalprice) > 3000000
-        ORDER BY o_custkey
         """,
         **views(spark, sf_dir),
     )
@@ -246,7 +234,6 @@ SELECT o_custkey, o_orderkey,
        nth_value(o_orderkey, 2) OVER w AS second_order
 FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-ORDER BY o_custkey, o_orderkey
 """,
     tags=("window",),
 )
@@ -265,7 +252,6 @@ def window_first_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.last("o_orderkey").over(w_full).alias("last_order"),
             F.nth_value("o_orderkey", 2).over(w).alias("second_order"),
         )
-        .orderBy("o_custkey", "o_orderkey")
     )
 
 
@@ -278,7 +264,6 @@ SELECT o_orderkey, o_orderstatus,
        dense_rank() OVER w             AS drank
 FROM orders
 WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice)
-ORDER BY o_orderkey
 """,
     tags=("window",),
 )
@@ -296,7 +281,6 @@ def window_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.cume_dist().over(w), 6).alias("cume"),
             F.dense_rank().over(w).alias("drank"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -311,7 +295,6 @@ WITH assigned AS (
 SELECT window_start, event_type, COUNT(*) AS n
 FROM assigned
 GROUP BY window_start, event_type
-ORDER BY window_start, event_type
 """,
     tags=("events", "window"),
 )
@@ -325,7 +308,6 @@ def events_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "2 hours", "1 hour"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("window_start"), "event_type", "n")
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -337,7 +319,6 @@ SELECT c_mktsegment, n_name,
        COUNT(*) AS n_customers, round(SUM(c_acctbal), 2) AS total_balance
 FROM customer JOIN nation ON c_nationkey = n_nationkey
 GROUP BY GROUPING SETS ((c_mktsegment, n_name), (c_mktsegment), (n_name), ())
-ORDER BY g_seg, g_nat, c_mktsegment NULLS FIRST, n_name NULLS FIRST
 """,
     tags=("aggregate", "groupingsets"),
 )
@@ -352,7 +333,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(*) AS n_customers, round(SUM(c_acctbal), 2) AS total_balance
         FROM {customer} JOIN {nation} ON c_nationkey = n_nationkey
         GROUP BY GROUPING SETS ((c_mktsegment, n_name), (c_mktsegment), (n_name), ())
-        ORDER BY g_seg, g_nat, c_mktsegment NULLS FIRST, n_name NULLS FIRST
         """,
         **views(spark, sf_dir),
     )
@@ -368,7 +348,6 @@ SELECT l_returnflag,
        floor(quantile_cont(l_extendedprice, 0.95) * 100 + 0.5) / 100 AS p95
 FROM lineitem
 GROUP BY l_returnflag
-ORDER BY l_returnflag
 """,
     tags=("aggregate", "quantile"),
 )
@@ -391,7 +370,6 @@ def agg_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             q(0.75).alias("p75"),
             q(0.95).alias("p95"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -414,7 +392,6 @@ SELECT l_returnflag,
           <= 0.05 * quantile_cont(l_extendedprice, 0.95))::INTEGER AS ap95_within_5pct
 FROM lineitem
 GROUP BY l_returnflag
-ORDER BY l_returnflag
 """,
     tags=("aggregate", "quantile", "approx"),
 )
@@ -445,7 +422,6 @@ def agg_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             flag(0.75, "ap75_within_5pct"),
             flag(0.95, "ap95_within_5pct"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -459,7 +435,6 @@ SELECT o_custkey, o_orderkey, day_no,
 FROM (SELECT o_custkey, o_orderkey, o_totalprice,
              datediff('day', DATE '1995-01-01', o_orderdate) AS day_no
       FROM orders)
-ORDER BY o_custkey, day_no, o_orderkey
 """,
     tags=("window", "rangeframe"),
 )
@@ -479,7 +454,6 @@ def window_range_frame_weekly_revenue(spark: SparkSession, sf_dir: str) -> DataF
             "day_no",
             F.round(F.sum("o_totalprice").over(w), 2).alias("rev_7d"),
         )
-        .orderBy("o_custkey", "day_no", "o_orderkey")
     )
 
 
@@ -496,7 +470,6 @@ SELECT r_regionkey,
        array_to_string([r_regionkey, 9], '-')                                AS joined,
        array_to_string(range(1, r_regionkey + 2), ',')                       AS upto
 FROM region
-ORDER BY r_regionkey
 """,
     tags=("scalar", "nested"),
 )
@@ -541,7 +514,6 @@ def array_functions2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join(F.array(F.col("r_regionkey"), F.lit(9)), "-").alias("joined"),
             F.array_join(F.sequence(F.lit(1), F.col("r_regionkey") + 1), ",").alias("upto"),
         )
-        .orderBy("r_regionkey")
     )
 
 
@@ -557,7 +529,6 @@ SELECT o_orderkey,
        CAST(bit_count(o_orderkey) AS INTEGER) AS popcount
 FROM orders
 WHERE o_orderkey < 200
-ORDER BY o_orderkey
 """,
     tags=("scalar",),
 )
@@ -580,7 +551,6 @@ def scalar_bitwise_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("shiftright(o_orderkey, 2)").cast("bigint").alias("shr2"),
             F.expr("bit_count(o_orderkey)").cast("int").alias("popcount"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -599,7 +569,6 @@ SELECT o_orderkey,
        strftime(o_orderdate, '%Y-%m')                        AS ym
 FROM orders
 WHERE o_orderkey <= 2000
-ORDER BY o_orderkey
 """,
     tags=("scalar", "temporal"),
 )
@@ -625,7 +594,6 @@ def scalar_datetime_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.datediff(d, F.lit("1995-01-01")).cast("bigint").alias("days_since_95"),
             F.date_format(d, "yyyy-MM").alias("ym"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -644,7 +612,6 @@ SELECT o_orderpriority,
        CAST(SUM(n) AS BIGINT) AS total_n
 FROM c
 GROUP BY o_orderpriority
-ORDER BY o_orderpriority
 """,
     tags=("aggregate",),
 )
@@ -668,7 +635,6 @@ def agg_exact_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n").cast("bigint").alias("mode_n"),
             F.sum("n").cast("bigint").alias("total_n"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -690,7 +656,6 @@ SELECT flag, round(MIN(price), 2) AS weighted_median,
        CAST(MIN(tw) AS BIGINT) AS total_weight
 FROM cum WHERE cw >= tw / 2
 GROUP BY flag
-ORDER BY flag
 """,
     tags=("agg",),
 )
@@ -722,7 +687,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("price"), 2).alias("weighted_median"),
             F.min("tw").cast("bigint").alias("total_weight"),
         )
-        .orderBy("flag")
     )
 
 
@@ -861,7 +825,6 @@ def sample_bottom_k_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "draw",
         )
-        .orderBy("draw")
     )
 
 
@@ -879,7 +842,6 @@ SELECT day, round(rev_cents2 / 200.0, 2) AS revenue,
            ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW
          ) AS BIGINT) + 1) // 2) / 100.0 AS rolling_median_7d
 FROM daily
-ORDER BY day
 """,
     tags=("window",),
 )
@@ -925,7 +887,6 @@ def window_rolling_median_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.floor((median2.cast("bigint") + 1) / 2).cast("bigint") / 100.0
             ).alias("rolling_median_7d"),
         )
-        .orderBy("day")
     )
 
 
@@ -945,7 +906,6 @@ UNION ALL
 SELECT 'o_totalprice', COUNT(*), COUNT(o_totalprice), COUNT(DISTINCT o_totalprice) FROM orders
 UNION ALL
 SELECT 'o_orderpriority', COUNT(*), COUNT(o_orderpriority), COUNT(DISTINCT o_orderpriority) FROM orders
-ORDER BY col
 """,
     tags=("profile", "aggregate"),
 )
@@ -972,7 +932,6 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         wide.select(F.explode(F.array(*[F.col(c) for c in _PROFILE_COLS])).alias("s"))
         .select("s.col", "s.n_rows", "s.n_non_null", "s.n_distinct")
-        .orderBy("col")
     )
 
 
@@ -986,7 +945,6 @@ SELECT LEAST(CAST(floor((o_totalprice - lo)
        COUNT(*) AS n
 FROM orders CROSS JOIN b
 GROUP BY bucket
-ORDER BY bucket
 """,
     tags=("profiling", "histogram"),
 )
@@ -1018,7 +976,6 @@ def profile_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(bucket.alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").alias("n"))
-        .orderBy("bucket")
     )
 
 
@@ -1054,7 +1011,6 @@ FROM (
   SELECT MIN(c_custkey) AS k
   FROM customer GROUP BY c_name HAVING COUNT(*) > 1
 )
-ORDER BY rule
 """,
     tags=("quality", "aggregate", "join"),
 )
@@ -1103,4 +1059,4 @@ def dq_rule_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(rule("lineitem_orphan_orderkey", orphans, "l_orderkey"))
         .unionByName(rule("customer_dup_names", dup_names, "k"))
     )
-    return report.orderBy("rule")
+    return report

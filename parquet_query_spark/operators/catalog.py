@@ -34,6 +34,19 @@ domain has one module (``temporal.py``, ``scale_patterns.py``,
 Determinism contract for oracle-checked queries (the driver hash-compares
 values): every floating-point aggregate is rounded; every LIMIT/top-k has a
 total order (unique tie-break key); column names are identical on both sides.
+
+Order rule: an operator's answer is a multiset of rows, so it ends in no
+global sort.  The DuckDB oracle comparison (``oracle.canon_rows``) and the
+benchmark digest both compare rows without regard to order, while a final
+``orderBy`` costs a range-sampling job, a range exchange and a sort stage
+(and the sampling job computes the child a second time).  A sort stays
+only where order is part of the answer: one that feeds a ``LIMIT``
+(planned as ``TakeOrderedAndProject``), one inside a window or an ordered
+aggregate, and the ``template``-tagged operators, which keep the
+reference's verbatim SQL.  The oracle follows the same rule: it drops its
+final ``ORDER BY`` unless a ``LIMIT`` reads it.  The parity tests assert
+that no other operator's physical plan holds a ``rangepartitioning``
+exchange.
 """
 
 from __future__ import annotations
@@ -44,7 +57,6 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from parquet_query_spark.sources.registry import TESTDATA_TABLES, concurrent_reads, load_table
 
@@ -72,28 +84,6 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
         return fn
 
     return deco
-
-
-def ordered_once(df: DataFrame, *keys: str) -> DataFrame:
-    """``df.orderBy(*keys)`` with the expensive child computed ONCE.
-
-    A global sort range-partitions its input, and the RangePartitioner's
-    bound-sampling job computes the ENTIRE child plan a first time before
-    the shuffle map tasks compute it again — so a query shaped
-    ``scan → expensive projection → orderBy`` (regex/hash expression
-    chains, mapInPandas kernels) pays the projection twice (guide §1.2:
-    remove unnecessary passes; measured r13: dedup_simhash 0.86 → 0.62 s
-    at sf0.1 — the whole Python/Arrow signature pass was running twice).
-
-    Hash-repartitioning on the sort key first inserts a materialization
-    point: the heavy child is computed once into the hash exchange, AQE
-    materializes that stage, and both the sampling job and the range
-    shuffle read the (slim) materialized rows.  The extra exchange moves
-    only the projected output — at 100 TB that is orders of magnitude
-    smaller than re-scanning and re-hashing the corpus.  The final
-    ordering is identical: rows end range-partitioned and sorted by
-    ``keys`` either way."""
-    return df.repartition(*[F.col(k) for k in keys]).orderBy(*keys)
 
 
 @functools.cache

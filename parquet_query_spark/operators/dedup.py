@@ -55,7 +55,6 @@ SELECT md5(text) AS text_hash,
        MIN(doc_id) AS keeper_id
 FROM documents
 GROUP BY md5(text)
-ORDER BY text_hash
 """,
     tags=("dedup", "bench"),
 )
@@ -66,7 +65,6 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         v["documents"]
         .groupBy(F.md5(F.col("text")).alias("text_hash"))
         .agg(F.count("*").alias("n_copies"), F.min("doc_id").alias("keeper_id"))
-        .orderBy("text_hash")
     )
 
 
@@ -80,7 +78,6 @@ FROM (
   FROM documents
 ) t
 WHERE rn = 1
-ORDER BY doc_id
 """,
     tags=("dedup",),
 )
@@ -96,7 +93,6 @@ def dedup_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("doc_id", "lang", "source")
-        .orderBy("doc_id")
     )
 
 
@@ -321,7 +317,6 @@ mh AS (
 SELECT doc_id,
        {_band_cols_duckdb()}
 FROM mh
-ORDER BY doc_id
 """,
     tags=("dedup", "minhash", "bench"),
 )
@@ -331,13 +326,9 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     Entirely scan-side builtin expressions: shingle → md5-per-seed →
     array_min → band md5.  At 100 TB this is the map phase; only the
     (doc_id, 4×16-byte bands) tuples shuffle."""
-    from parquet_query_spark.operators.catalog import ordered_once
-
     # one spark.sql analysis instead of four chained selects (r13 — see
-    # _banded_sql); ordered_once: the global sort's range-sampling pass
-    # would otherwise run the whole shingle→md5→minhash chain twice (r13)
-    bands = spark.sql(_banded_sql(_band_md5_select()), **views(spark, sf_dir))
-    return ordered_once(bands, "doc_id")
+    # _banded_sql)
+    return spark.sql(_banded_sql(_band_md5_select()), **views(spark, sf_dir))
 
 
 # Shared oracle CTE chain: documents → shingles → minhash → bands → LSH
@@ -383,7 +374,6 @@ SELECT doc_a, doc_b,
 FROM pairs
 WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
       / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
-ORDER BY doc_a, doc_b
 """,
     tags=("dedup", "minhash", "bench"),
 )
@@ -408,7 +398,6 @@ def dedup_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _lsh_verified_pairs(spark, sf_dir, threshold=0.2)
         .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -573,7 +562,6 @@ SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              / (len(a.shingles) + len(b.shingles)
                 - len(list_intersect(a.shingles, b.shingles))), 4) AS jaccard
 FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-ORDER BY doc_a, doc_b
 """,
     tags=("dedup",),
 )
@@ -596,10 +584,7 @@ def dedup_ngram_jaccard_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("inter_sz", F.size(F.array_intersect("sh_a", "sh_b")).cast("double"))
     )
     jac = F.col("inter_sz") / (F.size("sh_a") + F.size("sh_b") - F.col("inter_sz"))
-    return (
-        scored.select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
+    return scored.select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
 
 
 # SimHash signature definition (shared by the Spark worker and the DuckDB
@@ -744,7 +729,7 @@ def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_simhash",
     oracle=f"""
 WITH {_DUCKDB_SIMHASH_SIG_CTES}
-SELECT doc_id, simhash FROM sigs ORDER BY doc_id
+SELECT doc_id, simhash FROM sigs
 """,
     tags=("dedup", "simhash", "pandas-udf", "bench"),
 )
@@ -756,11 +741,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL (unnest tokens → per-bit ±1 sums → power-of-two recombination),
     making this hash-verifiable end-to-end — property tests additionally
     cover perturbation behavior in tests/test_dedup_ops.py."""
-    from parquet_query_spark.operators.catalog import ordered_once
-
-    # ordered_once: without the barrier the range-sampling pass re-runs
-    # the whole Python/Arrow signature pass (measured 0.86 → 0.62 s, r13)
-    return ordered_once(_simhash_signatures(spark, sf_dir), "doc_id")
+    return _simhash_signatures(spark, sf_dir)
 
 
 SIMHASH_BANDS = 4  # 4 × 16-bit bands over the 64-bit signature
@@ -785,7 +766,6 @@ cand AS (
 SELECT doc_a, doc_b, bit_count(xor(sig_a, sig_b))::INTEGER AS hamming
 FROM cand
 WHERE bit_count(xor(sig_a, sig_b)) <= {SIMHASH_MAX_HAMMING}
-ORDER BY doc_a, doc_b
 """,
     tags=("dedup", "simhash", "pandas-udf", "bench"),
 )
@@ -850,7 +830,6 @@ def dedup_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
         .dropDuplicates(["doc_a", "doc_b"])
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -880,7 +859,6 @@ reach(root, node) AS (
 SELECT doc_id, component_id,
        COUNT(*) OVER (PARTITION BY component_id) AS component_size
 FROM (SELECT root AS doc_id, MIN(node) AS component_id FROM reach GROUP BY root)
-ORDER BY doc_id
 """,
     tags=("dedup", "iterative"),
 )
@@ -937,7 +915,6 @@ reach(root, node) AS (
 SELECT doc_id, component_id,
        COUNT(*) OVER (PARTITION BY component_id) AS component_size
 FROM (SELECT root AS doc_id, MIN(node) AS component_id FROM reach GROUP BY root)
-ORDER BY doc_id
 """,
     tags=("dedup", "minhash", "iterative", "bench"),
 )
@@ -991,7 +968,6 @@ SELECT d.doc_id, d.lang, d.source,
 FROM documents d
 LEFT JOIN comp c ON d.doc_id = c.doc_id
 WHERE c.doc_id IS NULL OR c.component_id = d.doc_id
-ORDER BY d.doc_id
 """,
     tags=("dedup", "minhash", "iterative"),
 )
@@ -1023,7 +999,6 @@ def dedup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.col("component_id").isNotNull().cast("int").alias("was_clustered"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1166,13 +1141,9 @@ def _components_output(pairs: DataFrame) -> DataFrame:
 
     edges = _both_directions(pairs)
     labels = _min_label_components(edges)
-    return (
-        labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("component_id"))
-        .withColumn(
-            "component_size", F.count("*").over(W.partitionBy("component_id"))
-        )
-        .orderBy("doc_id")
-    )
+    return labels.select(
+        F.col("node").alias("doc_id"), F.col("lbl").alias("component_id")
+    ).withColumn("component_size", F.count("*").over(W.partitionBy("component_id")))
 
 
 @query(
@@ -1208,7 +1179,6 @@ ranked AS (
 )
 SELECT component_id, doc_id AS keeper_id, n_words AS keeper_words
 FROM ranked WHERE rn = 1
-ORDER BY component_id
 """,
     tags=("dedup", "minhash", "iterative"),
 )
@@ -1252,7 +1222,6 @@ def dedup_cluster_best_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("keeper_id"),
             F.col("n_words").alias("keeper_words"),
         )
-        .orderBy("component_id")
     )
 
 
@@ -1282,7 +1251,6 @@ SELECT doc_id,
 FROM hits
 WHERE shared >= 3
 GROUP BY doc_id
-ORDER BY doc_id
 """,
     tags=("dedup", "decontamination"),
 )
@@ -1325,7 +1293,6 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("shared").alias("max_shared"),
             F.min("bench_id").alias("worst_bench_id"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1352,7 +1319,6 @@ SELECT g.doc_id,
        CASE WHEN CAST(COUNT(c.gram_h) AS DOUBLE) / COUNT(*) > 0.5 THEN 1 ELSE 0 END AS flagged
 FROM g LEFT JOIN common c ON g.gram_h = c.gram_h
 GROUP BY g.doc_id
-ORDER BY g.doc_id
 """,
     tags=("dedup", "text", "pipeline"),
 )
@@ -1397,7 +1363,6 @@ def dedup_common_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.coalesce(frac, F.lit(0.0)), 4).alias("common_span_frac"),
             F.when(F.coalesce(frac, F.lit(0.0)) > 0.5, 1).otherwise(0).alias("flagged"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1421,7 +1386,6 @@ mh AS (
 SELECT doc_id,
        {_band_cols_duckdb()}
 FROM mh
-ORDER BY doc_id
 """
 
 
@@ -1450,7 +1414,7 @@ def dedup_minhash_signatures_fast(spark: SparkSession, sf_dir: str) -> DataFrame
         ).alias("h12"),
     )
     mh = h.select("doc_id", *_minhash_cols_spark())
-    return mh.select("doc_id", *_band_cols_spark()).orderBy("doc_id")
+    return mh.select("doc_id", *_band_cols_spark())
 
 
 @query(
@@ -1471,7 +1435,6 @@ deg AS (SELECT doc_id, COUNT(*) AS degree FROM und GROUP BY doc_id)
 SELECT degree, COUNT(*) AS n_docs
 FROM deg
 GROUP BY degree
-ORDER BY degree
 """,
     tags=("dedup", "graph", "profiling"),
 )
@@ -1495,7 +1458,6 @@ def neardup_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         deg.groupBy("degree")
         .agg(F.count("*").alias("n_docs"))
-        .orderBy("degree")
     )
 
 
@@ -1534,7 +1496,6 @@ scored AS (
 SELECT doc_a, doc_b, round(jac, 4) AS jaccard
 FROM scored
 WHERE jac >= 0.5
-ORDER BY doc_a, doc_b
 """,
     tags=("dedup", "fuzzy", "join"),
 )
@@ -1675,7 +1636,7 @@ def fuzzy_join_rarest_token(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_rep = a_rep.repartition(n_part, "block_key", "ca", "cb")
     b_rep = b_rep.repartition(n_part, "block_key", "ca", "cb")
     pairs_hot = _jac_pairs(a_rep, b_rep)
-    return pairs_small.unionByName(pairs_hot).orderBy("doc_a", "doc_b")
+    return pairs_small.unionByName(pairs_hot)
 
 
 @query(
@@ -1774,7 +1735,6 @@ FROM verified
 JOIN documents da ON da.doc_id = doc_a
 JOIN documents db ON db.doc_id = doc_b
 GROUP BY 1, 2
-ORDER BY source_a, source_b
 """,
     tags=("dedup", "profiling"),
 )
@@ -1810,7 +1770,6 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("source_a", "source_b")
         .agg(F.count("*").alias("n_pairs"))
-        .orderBy("source_a", "source_b")
     )
 
 
@@ -1837,7 +1796,6 @@ SELECT doc_a, doc_b,
        END AS relation
 FROM scored
 WHERE inter_sz / sz_a >= 0.5 OR inter_sz / sz_b >= 0.5
-ORDER BY doc_a, doc_b
 """,
     tags=("dedup", "minhash"),
 )
@@ -1882,7 +1840,6 @@ def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise("overlap")
             .alias("relation"),
         )
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -1969,7 +1926,6 @@ SELECT cohort,
        CAST(SUM(punct_pm) // COUNT(*) AS BIGINT) AS mean_punct_pm
 FROM classed
 GROUP BY cohort
-ORDER BY cohort
 """,
     tags=("dedup", "pipeline", "qa", "iterative"),
 )
@@ -2021,7 +1977,6 @@ def pipeline_dedup_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("SUM(n_words) DIV COUNT(*)").cast("bigint").alias("mean_words"),
             F.expr("SUM(punct_pm) DIV COUNT(*)").cast("bigint").alias("mean_punct_pm"),
         )
-        .orderBy("cohort")
     )
 
 
@@ -2048,7 +2003,6 @@ SELECT df_bucket,
        CAST(MAX(doc_freq) AS BIGINT) AS max_doc_freq
 FROM bucketed
 GROUP BY df_bucket
-ORDER BY df_bucket
 """,
     tags=("dedup", "text", "qa", "aggregate"),
 )
@@ -2082,7 +2036,6 @@ def dedup_shingle_df_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("doc_freq").cast("bigint").alias("occurrence_mass"),
             F.max("doc_freq").cast("bigint").alias("max_doc_freq"),
         )
-        .orderBy("df_bucket")
     )
 
 
@@ -2149,7 +2102,6 @@ SELECT d.source,
 FROM documents d LEFT JOIN hit h ON d.doc_id = h.doc_id
 WHERE d.doc_id >= 20
 GROUP BY d.source
-ORDER BY d.source
 """,
     tags=("text", "dedup", "decontamination"),
 )
@@ -2194,7 +2146,6 @@ def text_contamination_hit_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("hit_rate_bp"),
         )
-        .orderBy("source")
     )
 
 
@@ -2216,7 +2167,6 @@ SELECT doc_id,
        {_band_cols_duckdb()},
        CASE WHEN doc_id % 13 = 0 THEN 'recomputed' ELSE 'carried' END AS provenance
 FROM mh
-ORDER BY doc_id
 """,
     tags=("dedup", "minhash", "incremental"),
 )
@@ -2233,7 +2183,7 @@ def incremental_minhash_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the delta path scans only the changed partition
     (filter pushed to the scan); the carried path is a signature-table
     scan with no text parsing at all.  Union is partition-local (no
-    shuffle); the presentation sort is the only exchange."""
+    shuffle), so the plan has no exchange."""
     v = views(spark, sf_dir)
 
     def signatures(df):
@@ -2250,7 +2200,7 @@ def incremental_minhash_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried = signatures(docs.where(~changed)).withColumn(
         "provenance", F.lit("carried")
     )
-    return carried.unionByName(recomputed).orderBy("doc_id")
+    return carried.unionByName(recomputed)
 
 
 @query(
@@ -2277,7 +2227,6 @@ SELECT CAST(round(abs(CAST(n_match AS DOUBLE) / 16 - exact_j) * 16) AS BIGINT)
        round(avg(CAST(n_match AS DOUBLE) / 16), 4) AS mean_estimated_jaccard
 FROM scored
 GROUP BY abs_err_16ths
-ORDER BY abs_err_16ths
 """,
     tags=("dedup", "minhash", "quality"),
 )
@@ -2333,7 +2282,6 @@ def dedup_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame
             F.round(F.avg("exact_j"), 4).alias("mean_exact_jaccard"),
             F.round(F.avg(est), 4).alias("mean_estimated_jaccard"),
         )
-        .orderBy("abs_err_16ths")
     )
 
 
@@ -2364,7 +2312,6 @@ SELECT t.is_text_dup, e.is_emb_dup,
        CAST(MIN(t.doc_id) AS BIGINT) AS example_doc
 FROM tdup t JOIN edup e ON t.doc_id = e.doc_id
 GROUP BY t.is_text_dup, e.is_emb_dup
-ORDER BY is_text_dup, is_emb_dup
 """,
     tags=("dedup", "embedding", "quality"),
 )
@@ -2419,7 +2366,6 @@ def dedup_modality_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_docs"),
             F.min("doc_id").cast("bigint").alias("example_doc"),
         )
-        .orderBy("is_text_dup", "is_emb_dup")
     )
 
 
@@ -2464,7 +2410,6 @@ SELECT * FROM (
   UNION ALL
   SELECT component_size, n_components, n_docs FROM hist
 )
-ORDER BY component_size
 """,
     tags=("dedup", "minhash", "iterative", "quality"),
 )
@@ -2504,7 +2449,7 @@ def dedup_cluster_size_distribution(spark: SparkSession, sf_dir: str) -> DataFra
             .alias("n_docs"),
         )
     )
-    return singles.unionByName(hist).orderBy("component_size")
+    return singles.unionByName(hist)
 
 
 @query(
@@ -2520,7 +2465,6 @@ SELECT bands, rows_per_band,
        s AS jaccard,
        round(1.0 - pow(1.0 - pow(s, rows_per_band), bands), 4) AS p_candidate
 FROM cfg, sims
-ORDER BY bands DESC, s
 """,
     tags=("dedup",),
 )
@@ -2542,6 +2486,5 @@ def dedup_band_tuning_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                s AS jaccard,
                round(1.0 - power(1.0 - power(s, rows_per_band), bands), 4) AS p_candidate
         FROM cfg CROSS JOIN sims
-        ORDER BY bands DESC, s
         """
     )

@@ -23,7 +23,6 @@ SELECT event_id, event_type,
        CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val
 FROM events
 WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) >= 90
-ORDER BY event_id
 """,
     tags=("events", "json"),
 )
@@ -36,7 +35,6 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         v["events"]
         .select("event_id", "event_type", k.alias("k_val"))
         .where(F.col("k_val") >= 90)
-        .orderBy("event_id")
     )
 
 
@@ -52,7 +50,6 @@ SELECT date_trunc('hour', ts) AS hour_start, event_type,
        round(MAX(value), 2) AS max_value
 FROM events
 GROUP BY hour_start, event_type
-ORDER BY hour_start, event_type
 """,
     tags=("events", "aggregate"),
 )
@@ -79,7 +76,6 @@ def events_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("value"), 2).alias("min_value"),
             F.round(F.max("value"), 2).alias("max_value"),
         )
-        .orderBy("hour_start", "event_type")
     )
 
 
@@ -89,7 +85,6 @@ def events_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT isodow(ts) - 1 AS weekday, hour(ts) AS hr, event_type, COUNT(*) AS n
 FROM events
 GROUP BY weekday, hr, event_type
-ORDER BY weekday, hr, event_type
 """,
     tags=("events", "aggregate"),
 )
@@ -105,7 +100,6 @@ def events_weekday_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         )
         .agg(F.count("*").alias("n"))
-        .orderBy("weekday", "hr", "event_type")
     )
 
 
@@ -133,7 +127,6 @@ SELECT user_id, session_id,
        COUNT(*) AS n_events
 FROM sessions
 GROUP BY user_id, session_id
-ORDER BY user_id, session_id
 """,
     tags=("events", "window", "session"),
 )
@@ -157,7 +150,6 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ts").alias("session_end"),
             F.count("*").alias("n_events"),
         )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -172,7 +164,6 @@ SELECT user_id,
        CAST(SUM(CASE WHEN event_type = 'view'     THEN 1 ELSE 0 END) AS BIGINT) AS view
 FROM events
 GROUP BY user_id
-ORDER BY user_id
 """,
     tags=("events", "pivot"),
 )
@@ -187,7 +178,6 @@ def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .pivot("event_type", types)
         .agg(F.count(F.lit(1)))
         .fillna(0, subset=types)
-        .orderBy("user_id")
     )
 
 
@@ -205,7 +195,6 @@ SELECT CAST(date_trunc('day', h) AS TIMESTAMP) AS day, event_type,
        CAST(SUM(cents) AS DOUBLE) / 100.0 AS total_value
 FROM hourly
 GROUP BY day, event_type
-ORDER BY day, event_type
 """,
     tags=("events", "aggregate", "rollup"),
 )
@@ -238,7 +227,6 @@ def events_two_level_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").alias("n_events"),
             (F.sum("cents").cast("double") / 100.0).alias("total_value"),
         )
-        .orderBy("day", "event_type")
     )
 
 
@@ -273,7 +261,6 @@ SELECT 2, 'click_after_view', n_click,
 UNION ALL
 SELECT 3, 'purchase_after_click', n_purchase,
        round(CAST(n_purchase AS DOUBLE) / n_view, 4) FROM n
-ORDER BY stage
 """,
     tags=("events", "funnel"),
 )
@@ -318,7 +305,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
              2, 'click_after_view',     n_click,    round(CAST(n_click AS DOUBLE) / n_view, 4),
              3, 'purchase_after_click', n_purchase, round(CAST(n_purchase AS DOUBLE) / n_view, 4)
            ) AS (stage, stage_name, n_users, conversion)"""
-    ).orderBy("stage")
+    )
 
 
 @query(
@@ -338,7 +325,6 @@ labeled AS (
 SELECT cohort_week, weeks_since, COUNT(DISTINCT user_id) AS active_users
 FROM labeled
 GROUP BY cohort_week, weeks_since
-ORDER BY cohort_week, weeks_since
 """,
     tags=("events", "window", "cohort"),
 )
@@ -373,7 +359,6 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         labeled.groupBy("cohort_week", "weeks_since")
         .agg(F.countDistinct("user_id").alias("active_users"))
-        .orderBy("cohort_week", "weeks_since")
     )
 
 
@@ -400,7 +385,6 @@ SELECT d.event_type,
             AS BIGINT) AS n_outliers
 FROM dev d JOIN mad m ON d.event_type = m.event_type
 GROUP BY d.event_type
-ORDER BY d.event_type
 """,
     tags=("events", "stats", "anomaly"),
 )
@@ -439,7 +423,6 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).otherwise(0)
             ).alias("n_outliers"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -458,7 +441,6 @@ SELECT prev_type, event_type AS next_type, COUNT(*) AS n,
 FROM seq
 WHERE prev_type IS NOT NULL
 GROUP BY prev_type, event_type
-ORDER BY prev_type, next_type
 """,
     tags=("events", "window", "markov"),
 )
@@ -488,7 +470,6 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts.withColumn(
             "p", F.round(F.col("n").cast("double") / F.sum("n").over(w_norm), 4)
         )
-        .orderBy("prev_type", "next_type")
     )
 
 
@@ -510,7 +491,6 @@ actual AS (
 )
 SELECT g.event_type, g.hour, COALESCE(a.n, 0) AS n
 FROM grid g LEFT JOIN actual a ON g.event_type = a.event_type AND g.hour = a.hour
-ORDER BY g.event_type, g.hour
 """,
     tags=("events", "timeseries", "gapfill"),
 )
@@ -548,7 +528,6 @@ def events_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hour",
             F.coalesce("n", F.lit(0).cast("bigint")).alias("n"),
         )
-        .orderBy("event_type", "hour")
     )
 
 
@@ -567,7 +546,7 @@ sweep AS (
   SELECT t, CAST(SUM(SUM(delta)) OVER (ORDER BY t) AS BIGINT) AS concurrent
   FROM pts GROUP BY t
 )
-SELECT t, concurrent FROM sweep ORDER BY t
+SELECT t, concurrent FROM sweep
 """,
     tags=("events", "timeseries", "sweepline"),
 )
@@ -619,7 +598,6 @@ def events_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "t",
             (F.col("in_sum") + F.col("off")).cast("bigint").alias("concurrent"),
         )
-        .orderBy("t")
     )
 
 
@@ -637,7 +615,6 @@ SELECT user_id, hour,
        CAST(SUM(CASE WHEN rn <= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
 FROM ranked
 GROUP BY user_id, hour
-ORDER BY user_id, hour
 """,
     tags=("events", "sampling", "ratelimit"),
 )
@@ -665,7 +642,6 @@ def events_rate_limited_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_seen"),
             F.sum(F.when(F.col("rn") <= 3, 1).otherwise(0)).alias("n_kept"),
         )
-        .orderBy("user_id", "hour")
     )
 
 
@@ -684,7 +660,6 @@ SELECT event_type,
        CAST(SUM(CAST(ROUND(value * 10000) AS BIGINT)) AS BIGINT) AS volume_e4
 FROM events
 GROUP BY 1, 2
-ORDER BY event_type, bar_hour
 """,
     tags=("aggregate", "events"),
 )
@@ -718,7 +693,6 @@ def events_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max_by("value", key), 4).alias("close"),
             F.sum(F.round(F.col("value") * 10000).cast("bigint")).alias("volume_e4"),
         )
-        .orderBy("event_type", "bar_hour")
     )
 
 
@@ -842,7 +816,6 @@ SELECT first_touch,
 FROM touched
 WHERE event_type = 'purchase'
 GROUP BY first_touch
-ORDER BY first_touch
 """,
     tags=("events", "window", "pipeline"),
 )
@@ -880,7 +853,6 @@ def events_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFram
             F.count("*").alias("n_purchases"),
             F.sum(F.round(F.col("value") * 10000).cast("bigint")).alias("attributed_e4"),
         )
-        .orderBy("first_touch")
     )
 
 
@@ -894,7 +866,6 @@ WITH full_agg AS (
   FROM events GROUP BY 1, 2
 )
 SELECT event_type, h, n, v_e4 FROM full_agg
-ORDER BY event_type, h
 """,
     tags=("aggregate", "pipeline", "scale"),
 )
@@ -927,7 +898,6 @@ def events_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.unionAll(delta)
         .groupBy("event_type", "h")
         .agg(F.sum("n").alias("n"), F.sum("v_e4").alias("v_e4"))
-        .orderBy("event_type", "h")
     )
 
 
@@ -948,7 +918,6 @@ SELECT e.event_type,
             AS BIGINT) AS winsorized_e4
 FROM events e JOIN b USING (event_type)
 GROUP BY e.event_type, p01, p99
-ORDER BY e.event_type
 """,
     tags=("events", "aggregate", "pipeline"),
 )
@@ -986,7 +955,6 @@ def events_value_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_clip_hi",
             "winsorized_e4",
         )
-        .orderBy("event_type")
     )
 
 
@@ -1024,7 +992,6 @@ FROM (
                                ORDER BY abs(cusum_micro) DESC, hour_ts) AS rn
   FROM cusum
 ) WHERE rn = 1
-ORDER BY event_type
 """,
     tags=("temporal", "window", "analytics"),
 )
@@ -1081,7 +1048,6 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.abs(F.col("cusum_micro")).cast("bigint").alias("max_abs_cusum_micro"),
             F.when(F.col("cusum_micro") < 0, "shift_up").otherwise("shift_down").alias("direction"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1108,7 +1074,6 @@ SELECT event_type,
             AS BIGINT) AS late_bp
 FROM lat
 GROUP BY event_type
-ORDER BY event_type
 """,
     tags=("events", "streaming", "qa"),
 )
@@ -1164,7 +1129,6 @@ def events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("late_bp"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1191,7 +1155,6 @@ SELECT event_type,
 FROM fc
 WHERE forecast IS NOT NULL
 GROUP BY event_type
-ORDER BY event_type
 """,
     tags=("temporal", "window", "analytics"),
 )
@@ -1231,7 +1194,6 @@ def events_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFram
             .cast("bigint")
             .alias("mae_cents"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1362,7 +1324,6 @@ SELECT event_type, n_users, total_events,
        round((2.0 * s1) / (n_users * total_events) - (n_users + 1.0) / n_users, 4)
          AS gini
 FROM s
-ORDER BY event_type
 """,
     tags=("events", "window", "analytics"),
 )
@@ -1400,7 +1361,7 @@ def events_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             - (F.col("n_users") + F.lit(1.0)) / F.col("n_users"),
             4,
         ).alias("gini"),
-    ).orderBy("event_type")
+    )
 
 
 @query(
@@ -1427,7 +1388,6 @@ SELECT user_id, n_gaps,
        CAST(sum_s // n_gaps AS BIGINT) AS mean_gap_s,
        CAST(100 * n_gaps * sumsq_s < 101 * sum_s * sum_s AS INTEGER) AS metronomic
 FROM s
-ORDER BY user_id
 """,
     tags=("events", "window", "qa", "analytics"),
 )
@@ -1471,7 +1431,7 @@ def events_bot_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("int")
         .alias("metronomic"),
-    ).orderBy("user_id")
+    )
 
 
 @query(
@@ -1492,7 +1452,6 @@ wau AS (
 SELECT CAST(dau.d AS TIMESTAMP) AS day, dau.dau, wau.wau,
        CAST(dau.dau * 10000 // wau.wau AS BIGINT) AS stickiness_bp
 FROM dau JOIN wau ON wau.d = dau.d
-ORDER BY day
 """,
     tags=("events", "aggregate", "analytics"),
 )
@@ -1534,7 +1493,6 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "wau",
             F.expr("dau * 10000 DIV wau").cast("bigint").alias("stickiness_bp"),
         )
-        .orderBy("day")
     )
 
 
@@ -1667,7 +1625,6 @@ SELECT hour_ts,
          AS dominant_type
 FROM terms
 GROUP BY hour_ts
-ORDER BY hour_ts
 """,
     tags=("events", "aggregate", "analytics"),
 )
@@ -1707,7 +1664,6 @@ def events_hourly_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("term_nano").cast("bigint").alias("entropy_nano"),
             F.max_by("event_type", key).alias("dominant_type"),
         )
-        .orderBy("hour_ts")
     )
 
 
@@ -1727,7 +1683,6 @@ SELECT d AS first_digit,
        CAST(floor(log10(1.0 + 1.0 / d) * 10000 + 0.5) AS BIGINT) AS benford_bp
 FROM digits CROSS JOIN s
 GROUP BY d
-ORDER BY d
 """,
     tags=("events", "aggregate", "qa", "analytics"),
 )
@@ -1764,7 +1719,6 @@ def events_benford_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("d").alias("first_digit"), "n", "observed_bp", "benford_bp"
         )
-        .orderBy("first_digit")
     )
 
 
@@ -1786,7 +1740,6 @@ SELECT CAST(d AS TIMESTAMP) AS day,
        CAST(COUNT(*) AS BIGINT) AS n_active
 FROM daily JOIN firsts f ON f.user_id = daily.user_id
 GROUP BY d
-ORDER BY day
 """,
     tags=("events", "aggregate", "analytics"),
 )
@@ -1823,7 +1776,6 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("d").cast("timestamp").alias("day"), "n_new", "n_returning", "n_active"
         )
-        .orderBy("day")
     )
 
 
@@ -1842,7 +1794,6 @@ SELECT event_type,
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_beyond_3x_p75
 FROM events
 GROUP BY event_type
-ORDER BY event_type
 """,
     tags=("events", "quantile", "aggregate"),
 )
@@ -1882,7 +1833,6 @@ def events_value_boxplot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         base.drop("_p75_raw")
         .join(tail, "event_type")
-        .orderBy("event_type")
     )
 
 
@@ -1907,7 +1857,6 @@ SELECT hour_ts, n_all, n_err, base_all, base_err,
                  THEN 1 ELSE 0 END AS INTEGER) AS alert
 FROM trailed
 WHERE base_all IS NOT NULL
-ORDER BY hour_ts
 """,
     tags=("events", "window", "qa", "analytics"),
 )
@@ -1947,7 +1896,6 @@ def events_error_rate_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         trailed.where(F.col("base_all").isNotNull())
         .select("hour_ts", "n_all", "n_err", "base_all", "base_err", alert.alias("alert"))
-        .orderBy("hour_ts")
     )
 
 
@@ -2048,7 +1996,6 @@ overlap AS (
 SELECT CAST(wk AS TIMESTAMP) AS week, n_shared,
        CAST(n_shared * 10000 // (40 - n_shared) AS BIGINT) AS jaccard_bp
 FROM overlap
-ORDER BY week
 """,
     tags=("events", "window", "analytics", "qa"),
 )
@@ -2090,7 +2037,7 @@ def events_heavy_hitter_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("wk").cast("timestamp").alias("week"),
         "n_shared",
         F.expr("n_shared * 10000 DIV (40 - n_shared)").cast("bigint").alias("jaccard_bp"),
-    ).orderBy("week")
+    )
 
 
 @query(
@@ -2126,7 +2073,6 @@ SELECT entry_type,
             AS BIGINT) AS bounce_bp
 FROM per_session
 GROUP BY entry_type
-ORDER BY entry_type
 """,
     tags=("events", "session", "analytics"),
 )
@@ -2171,7 +2117,6 @@ def events_session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("bounce_bp"),
         )
-        .orderBy("entry_type")
     )
 
 
@@ -2214,7 +2159,6 @@ FROM pair_n p
 JOIN type_n na ON na.typ = p.type_a
 JOIN type_n nb ON nb.typ = p.type_b
 CROSS JOIN n_sessions t
-ORDER BY p.type_a, p.type_b
 """,
     tags=("events", "session", "aggregate", "analytics"),
 )
@@ -2280,7 +2224,6 @@ def events_type_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("lift"),
         )
-        .orderBy("type_a", "type_b")
     )
 
 
@@ -2301,7 +2244,6 @@ SELECT CAST(first_day AS TIMESTAMP) AS day, n_new,
        CAST(SUM(n_new) OVER (ORDER BY first_day ROWS UNBOUNDED PRECEDING) * 10000
             // MAX(t.total) OVER () AS BIGINT) AS adoption_bp
 FROM daily CROSS JOIN tot t
-ORDER BY day
 """,
     tags=("events", "window", "analytics"),
 )
@@ -2335,7 +2277,6 @@ def events_adoption_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("adoption_bp"),
         )
-        .orderBy("day")
     )
 
 
@@ -2442,7 +2383,6 @@ FROM w
 WHERE base_n = 24
   AND n > prev_n AND n >= next_n
   AND CAST(n AS DOUBLE) >= 1.2 * base
-ORDER BY hour_start
 """,
     tags=("events", "window", "anomaly"),
 )
@@ -2485,7 +2425,6 @@ def events_peak_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
             "next_n",
             F.round("base", 2).alias("baseline"),
         )
-        .orderBy("hour_start")
     )
 
 
@@ -2513,7 +2452,6 @@ SELECT user_id,
 FROM streaks
 GROUP BY user_id
 HAVING MAX(len) >= 3
-ORDER BY longest_streak_days DESC, user_id
 """,
     tags=("events", "window", "analytics"),
 )
@@ -2552,7 +2490,6 @@ def events_user_active_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("streak_start").alias("first_active_day"),
         )
         .where(F.col("longest_streak_days") >= 3)
-        .orderBy(F.desc("longest_streak_days"), "user_id")
     )
 
 
@@ -2572,7 +2509,6 @@ SELECT prev_minute AS gap_start, minute AS gap_end,
          AS silent_minutes
 FROM g
 WHERE date_diff('minute', prev_minute, minute) > 5
-ORDER BY gap_start
 """,
     tags=("events", "window", "anomaly"),
 )
@@ -2602,7 +2538,6 @@ def events_outage_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("minute").alias("gap_end"),
             (gap_min - 1).cast("bigint").alias("silent_minutes"),
         )
-        .orderBy("gap_start")
     )
 
 
@@ -2638,7 +2573,6 @@ SELECT s.hour_start, s.n AS spike_n, round(s.base, 2) AS baseline,
        CAST(MAX(b.type_n) * 10000 // s.n AS BIGINT) AS top_type_share_bp
 FROM spikes s JOIN bytype b ON b.hour_start = s.hour_start
 GROUP BY s.hour_start, s.n, s.base
-ORDER BY s.hour_start
 """,
     tags=("events", "window", "anomaly"),
 )
@@ -2689,7 +2623,6 @@ def events_spike_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "top_type_n",
             "top_type_share_bp",
         )
-        .orderBy("hour_start")
     )
 
 
@@ -2719,7 +2652,6 @@ SELECT hour_start,
             THEN 1 ELSE 0 END AS page
 FROM w
 WHERE CAST(err_1h AS DOUBLE) / all_1h / 0.25 > 1.0
-ORDER BY hour_start
 """,
     tags=("events", "window", "anomaly"),
 )
@@ -2763,7 +2695,6 @@ def events_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .alias("page"),
         )
-        .orderBy("hour_start")
     )
 
 
@@ -2792,7 +2723,6 @@ SELECT day,
             THEN 1 ELSE 0 END AS is_flapping
 FROM t
 GROUP BY day
-ORDER BY day
 """,
     tags=("events", "window", "anomaly"),
 )
@@ -2840,7 +2770,6 @@ def events_alert_flap_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(flip).cast("bigint").alias("n_transitions"),
             F.when(F.sum(flip) >= 6, 1).otherwise(0).alias("is_flapping"),
         )
-        .orderBy("day")
     )
 
 
@@ -2860,7 +2789,6 @@ SELECT CAST(target AS TIMESTAMP) AS window_end,
 FROM expanded, bounds
 WHERE target <= hmax
 GROUP BY target
-ORDER BY target
 """,
     tags=("events", "window"),
 )
@@ -2889,7 +2817,6 @@ def events_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame
         expanded.join(F.broadcast(hmax), F.col("target") <= F.col("hmax"))
         .groupBy(F.col("target").alias("window_end"))
         .agg(F.count_distinct("user_id").cast("bigint").alias("users_24h"))
-        .orderBy("window_end")
     )
 
 
@@ -3005,7 +2932,6 @@ SELECT event_type, n AS n_days, s_stat, CAST(var18 AS BIGINT) AS var18,
             WHEN z_mk < -1.96 THEN 'falling'
             ELSE 'none' END AS trend
 FROM z
-ORDER BY event_type
 """,
     tags=("events", "stats"),
 )
@@ -3090,7 +3016,6 @@ def events_trend_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise("none")
             .alias("trend"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -3119,7 +3044,6 @@ SELECT a.day,
 FROM probs a
 JOIN probs b ON b.day = a.day - INTERVAL 1 DAY AND b.event_type = a.event_type
 GROUP BY a.day
-ORDER BY a.day
 """,
     tags=("events", "drift", "aggregate"),
 )
@@ -3177,7 +3101,6 @@ def events_kl_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "kl_nats"
             )
         )
-        .orderBy("day")
     )
 
 
@@ -3212,7 +3135,6 @@ SELECT h.prev_type,
        round((CAST(h.nt AS DOUBLE) / alltot.g) * h.hbits, 4)
          AS rate_contrib_bits
 FROM h CROSS JOIN alltot
-ORDER BY h.prev_type
 """,
     tags=("events", "stats"),
 )
@@ -3259,7 +3181,6 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("hbits"), 4).alias("cond_entropy_bits"),
             F.round(share * F.col("hbits"), 4).alias("rate_contrib_bits"),
         )
-        .orderBy("prev_type")
     )
 
 
@@ -3271,7 +3192,6 @@ SELECT event_id,
        CASE WHEN CAST(json_extract_string(props, '$.k') AS INTEGER) >= 50
             THEN 'high' ELSE 'low' END AS k_band
 FROM events
-ORDER BY event_id
 """,
     tags=("events", "json"),
 )
@@ -3288,5 +3208,4 @@ def events_from_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p.k").alias("k_val"),
             F.when(F.col("p.k") >= 50, "high").otherwise("low").alias("k_band"),
         )
-        .orderBy("event_id")
     )

@@ -230,7 +230,6 @@ def _kcore_oracle() -> str:
 WITH {_GRAPH_CTES},
 {','.join(parts)}
 SELECT round, n_nodes, n_edges FROM ({stats})
-ORDER BY round
 """
 
 
@@ -283,7 +282,7 @@ def neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = rounds[0]
     for df in rounds[1:]:
         out = out.unionByName(df)
-    return out.orderBy("round")
+    return out
 
 
 _LPA_ROUNDS = 3

@@ -143,7 +143,6 @@ SELECT doc_id,
        round(CAST(64 + ((ascii(substr(text, 1, 1)) % 256) * 7 + strlen(text)) % 1856 AS DOUBLE)
              / (64 + ((ascii(substr(text, 1, 1)) % 256) * 13 + strlen(text) * 3) % 1016), 4) AS aspect
 FROM documents
-ORDER BY doc_id
 """,
     tags=("multimodal", "pandas-udf"),
 )
@@ -156,7 +155,7 @@ def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle predicts format, exact byte size, and dimensions from the
     source text — a green row proves the parser read them from the bytes."""
     media = media_payloads(spark, sf_dir)
-    return media.mapInPandas(decode_meta_batches, META_SCHEMA).orderBy("doc_id")
+    return media.mapInPandas(decode_meta_batches, META_SCHEMA)
 
 
 @query(
@@ -177,7 +176,6 @@ SELECT doc_id,
        strlen(substr(text, CAST(frame_no * 192 + 1 AS BIGINT), 64))::INTEGER AS frame_bytes,
        md5(substr(text, CAST(frame_no * 192 + 1 AS BIGINT), 64)) AS frame_digest
 FROM k
-ORDER BY doc_id, frame_no
 """,
     tags=("multimodal", "pandas-udf"),
 )
@@ -223,7 +221,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v = views(spark, sf_dir)
     media = v["documents"].select("doc_id", "text")
-    return media.mapInPandas(sample_frames, schema).orderBy("doc_id", "frame_no")
+    return media.mapInPandas(sample_frames, schema)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -257,7 +255,6 @@ SELECT doc_id, w::INTEGER AS src_w, h::INTEGER AS src_h,
        greatest(1, floor(h * s))::INTEGER AS dst_h,
        (greatest(1, floor(w * s)) * greatest(1, floor(h * s)) * 3)::BIGINT AS dst_bytes
 FROM scaled
-ORDER BY doc_id
 """,
     tags=("multimodal", "pandas-udf"),
 )
@@ -288,7 +285,7 @@ def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     media = media_payloads(spark, sf_dir)
-    return media.mapInPandas(resize_batches, RESIZE_SCHEMA).orderBy("doc_id")
+    return media.mapInPandas(resize_batches, RESIZE_SCHEMA)
 
 
 # ── audio / video metadata (real WAV + MP4 container parsers) ───────────
@@ -322,7 +319,6 @@ SELECT doc_id, channels, sample_rate, bits, n_frames,
        (n_frames * 1000) // sample_rate AS duration_ms,
        (44 + n_frames * channels * 2)::BIGINT AS n_bytes
 FROM synth
-ORDER BY doc_id
 """,
     tags=("multimodal", "pandas-udf"),
 )
@@ -374,7 +370,6 @@ def multimodal_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         v["documents"]
         .select("doc_id", "text")
         .mapInPandas(audio_batches, AUDIO_SCHEMA)
-        .orderBy("doc_id")
     )
 
 
@@ -398,7 +393,6 @@ SELECT doc_id,
        (1000 + (strlen(text) * 13) % 59000)::BIGINT AS duration_ms,
        {MP4_STREAM_BYTES}::BIGINT AS n_bytes
 FROM documents
-ORDER BY doc_id
 """,
     tags=("multimodal", "pandas-udf"),
 )
@@ -437,7 +431,6 @@ def multimodal_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         v["documents"]
         .select("doc_id", "text")
         .mapInPandas(video_batches, VIDEO_SCHEMA)
-        .orderBy("doc_id")
     )
 
 
@@ -459,7 +452,6 @@ SELECT format,
        CAST(SUM(CAST(w AS BIGINT) * h) AS BIGINT) AS total_pixels
 FROM dims
 GROUP BY 1, 2
-ORDER BY format, orientation
 """,
     tags=("multimodal", "aggregate", "pandas-udf"),
 )
@@ -494,7 +486,6 @@ def multimodal_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("w").cast("int").alias("max_width"),
             F.sum(F.col("w").cast("bigint") * F.col("h")).cast("bigint").alias("total_pixels"),
         )
-        .orderBy("format", "orientation")
     )
 
 
@@ -509,7 +500,6 @@ SELECT CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'gif' END AS fo
             AS BIGINT) AS corrupt_bp
 FROM documents
 GROUP BY 1
-ORDER BY format
 """,
     tags=("multimodal", "qa", "pandas-udf"),
 )
@@ -559,7 +549,6 @@ def multimodal_corrupt_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("ok").cast("bigint").alias("n_parsed"),
             F.expr("SUM(1 - ok) * 10000 DIV COUNT(*)").cast("bigint").alias("corrupt_bp"),
         )
-        .orderBy("format")
     )
 
 
@@ -583,7 +572,6 @@ SELECT format,
             AS BIGINT) AS reject_bp
 FROM dims
 GROUP BY format
-ORDER BY format
 """,
     tags=("multimodal", "qa", "pandas-udf"),
 )
@@ -619,7 +607,6 @@ def multimodal_aspect_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("reject_bp"),
         )
-        .orderBy("format")
     )
 
 
@@ -637,7 +624,6 @@ SELECT min(doc_id) AS keeper, count(*)::BIGINT AS n_copies, fmt
 FROM params
 GROUP BY fmt, w, h
 HAVING count(*) > 1
-ORDER BY keeper
 """,
     tags=("multimodal", "dedup", "pandas-udf"),
 )
@@ -667,5 +653,4 @@ def multimodal_exact_dupes_by_hash(spark: SparkSession, sf_dir: str) -> DataFram
         )
         .where(F.col("n_copies") > 1)
         .select("keeper", "n_copies", "fmt")
-        .orderBy("keeper")
     )

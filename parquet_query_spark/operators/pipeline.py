@@ -36,7 +36,6 @@ kept AS (
 SELECT doc_id, source, n_words,
        round(CAST(n_punct AS DOUBLE) / n_chars, 4) AS punct_ratio
 FROM kept WHERE rn = 1
-ORDER BY doc_id
 """,
     tags=("pipeline", "dedup", "text"),
 )
@@ -75,7 +74,6 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "punct_ratio"
             ),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -91,7 +89,6 @@ t AS (SELECT quantile_cont(n_words, 0.10) AS thr FROM m)
 SELECT m.doc_id, m.lang, m.n_words
 FROM m CROSS JOIN t
 WHERE m.n_words >= t.thr
-ORDER BY m.doc_id
 """,
     tags=("pipeline", "text"),
 )
@@ -116,7 +113,6 @@ def pipeline_quality_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         m.crossJoin(F.broadcast(thr))
         .where(F.col("n_words") >= F.col("thr"))
         .select("doc_id", "lang", "n_words")
-        .orderBy("doc_id")
     )
 
 
@@ -151,7 +147,6 @@ SELECT lang, bin_id,
        md5(string_agg(chunk_hash, '' ORDER BY doc_id, chunk_no)) AS bin_hash
 FROM placed
 GROUP BY lang, bin_id
-ORDER BY lang, bin_id
 """,
     tags=("pipeline", "text"),
 )
@@ -208,7 +203,6 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("n_tokens") / 256.0, 4).alias("fill_ratio"),
             F.md5(F.concat_ws("", ordered_hashes)).alias("bin_hash"),
         )
-        .orderBy("lang", "bin_id")
     )
 
 
@@ -234,7 +228,6 @@ SELECT source, n_docs, n_tokens,
        round(raw_w / tot_w, 6)                                AS mix_weight,
        round((raw_w / tot_w) * tot_tokens / n_tokens, 4)      AS epochs
 FROM weighted
-ORDER BY source
 """,
     tags=("pipeline", "text"),
 )
@@ -280,7 +273,7 @@ def pipeline_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             (F.col("raw_w") / F.col("tot_w")) * F.col("tot_tokens") / F.col("n_tokens"), 4
         ).alias("epochs"),
-    ).orderBy("source")
+    )
 
 
 @query(
@@ -310,7 +303,6 @@ SELECT s.source,
        CAST(floor(s.n_docs * 10000.0 / t.tot_docs) AS BIGINT) AS share_bp,
        l.top_lang
 FROM per_source s CROSS JOIN tot t JOIN top_lang l ON s.source = l.source
-ORDER BY s.source
 """,
     tags=("pipeline", "profiling"),
 )
@@ -357,7 +349,6 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("share_bp"),
             "top_lang",
         )
-        .orderBy("source")
     )
 
 
@@ -391,7 +382,6 @@ SELECT doc_id, n_words,
          AND sym_ratio <= 0.1 AND stop_frac >= 0.02 AND distinct_frac >= 0.3
          AS keep
 FROM r
-ORDER BY doc_id
 """,
     tags=("pipeline", "quality", "filter"),
 )
@@ -404,7 +394,7 @@ def pipeline_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conjunction, so downstream audits see WHY a document fell.
 
     Scale shape: pure scan-side codegen expressions on one corpus pass —
-    no UDFs, no shuffle before the presentation sort; at 100 TB this
+    no UDFs, no shuffle; at 100 TB this
     filter is I/O-bound, which is the point (quality rules must not cost
     more than reading the data)."""
     v = views(spark, sf_dir)
@@ -450,7 +440,7 @@ def pipeline_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             rule_length & rule_word_length & rule_symbols & rule_stopwords & rule_diversity
         ).alias("keep"),
-    ).orderBy("doc_id")
+    )
 
 
 def _shard_oracle() -> str:
@@ -473,7 +463,6 @@ SELECT shard,
        CAST(bit_xor(h56) AS BIGINT) AS content_fingerprint
 FROM hashed
 GROUP BY shard
-ORDER BY shard
 """
 
 
@@ -508,7 +497,6 @@ def pipeline_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("doc_id").alias("max_doc_id"),
             F.expr("bit_xor(h56)").alias("content_fingerprint"),
         )
-        .orderBy("shard")
     )
 
 
@@ -550,7 +538,7 @@ SELECT * FROM (
   SELECT 2, 'quality', n2, c2, CAST(n2 * 10000 // n0 AS BIGINT) FROM s
   UNION ALL
   SELECT 3, 'exact_dedup', n3, c3, CAST(n3 * 10000 // n0 AS BIGINT) FROM s
-) ORDER BY stage_no
+)
 """,
     tags=("pipeline", "text", "quality"),
 )
@@ -621,7 +609,7 @@ def pipeline_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("r")
     ).select("r.*")
-    return stages.orderBy("stage_no")
+    return stages
 
 
 @query(
@@ -641,7 +629,6 @@ SELECT s.source, s.n_docs, s.n_tokens,
        CASE WHEN (1.0 / t.n_sources) * t.total / s.n_tokens > 3.0
             THEN 1 ELSE 0 END                                    AS overrepeat_risk
 FROM s, t
-ORDER BY source
 """,
     tags=("pipeline", "aggregate"),
 )
@@ -679,7 +666,6 @@ def pipeline_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(epochs, 3).alias("epochs_at_budget"),
             F.when(epochs > 3.0, 1).otherwise(0).alias("overrepeat_risk"),
         )
-        .orderBy("source")
     )
 
 
@@ -700,7 +686,6 @@ SELECT split, lang,
        CAST(SUM(n_chars) AS BIGINT) AS n_chars
 FROM tagged
 GROUP BY split, lang
-ORDER BY split, lang
 """,
     tags=("pipeline", "sample"),
 )
@@ -728,7 +713,6 @@ def pipeline_holdout_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("n_chars"),
         )
-        .orderBy("split", "lang")
     )
 
 
@@ -761,7 +745,6 @@ SELECT decile,
        round(MAX(score), 6) AS max_score
 FROM tiled
 GROUP BY decile
-ORDER BY decile
 """,
     tags=("pipeline", "text"),
 )
@@ -807,7 +790,6 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("decile", phase.alias("phase"), "n_docs", "phase_tokens",
                 "avg_score", "min_score", "max_score")
-        .orderBy("decile")
     )
 
 
@@ -829,7 +811,6 @@ SELECT source, n_docs, tokens,
        CAST(((CAST(floor(sqrt(tokens) * 1000000) AS BIGINT) * 10000 // rsum) * t // 10000
             - tokens) // greatest(tokens // n_docs, 1) AS BIGINT) AS doc_delta
 FROM src, tot
-ORDER BY source
 """,
     tags=("pipeline",),
 )
@@ -873,7 +854,6 @@ def pipeline_mix_rebalance_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "DIV greatest(tokens DIV n_docs, 1)"
             ).cast("bigint").alias("doc_delta"),
         )
-        .orderBy("source")
     )
 
 
@@ -909,7 +889,6 @@ SELECT source, tokens,
          AS phase2_tokens,
        round({_ANNEAL_BUDGET} * 0.1 * quality_w / t_weighted, 6) AS phase2_epochs
 FROM weighted CROSS JOIN tot
-ORDER BY source
 """,
     tags=("pipeline", "mixing"),
 )
@@ -963,7 +942,6 @@ def pipeline_annealing_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "phase2_epochs"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -997,7 +975,7 @@ placed AS (
 SELECT CAST(epoch AS BIGINT) AS epoch, CAST(shard AS BIGINT) AS shard,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(pos * doc_id) AS BIGINT) AS order_checksum
-FROM placed GROUP BY epoch, shard ORDER BY epoch, shard
+FROM placed GROUP BY epoch, shard
 """,
     tags=("pipeline", "shuffle"),
 )
@@ -1048,5 +1026,4 @@ def pipeline_epoch_shuffle_blocks(spark: SparkSession, sf_dir: str) -> DataFrame
                 "order_checksum"
             ),
         )
-        .orderBy("epoch", "shard")
     )

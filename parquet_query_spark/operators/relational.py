@@ -27,7 +27,6 @@ from parquet_query_spark.operators.catalog import bare_names, query, views
 SELECT c_custkey, c_name
 FROM customer
 WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 300000)
-ORDER BY c_custkey
 """,
     tags=("join",),
 )
@@ -40,7 +39,6 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         v["customer"]
         .join(big, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
     )
 
 
@@ -51,7 +49,6 @@ SELECT c_custkey, c_name
 FROM customer
 WHERE NOT EXISTS (SELECT 1 FROM orders
                   WHERE o_custkey = c_custkey AND o_totalprice > 400000)
-ORDER BY c_custkey
 """,
     tags=("join",),
 )
@@ -67,7 +64,6 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         v["customer"]
         .join(big, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
     )
 
 
@@ -78,7 +74,6 @@ SELECT c_custkey, COUNT(o_orderkey) AS n_orders,
        round(COALESCE(SUM(o_totalprice), 0), 2) AS total_spent
 FROM customer LEFT JOIN orders ON c_custkey = o_custkey
 GROUP BY c_custkey
-ORDER BY c_custkey
 """,
     tags=("join", "aggregate"),
 )
@@ -94,7 +89,6 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("o_orderkey").alias("n_orders"),
             F.round(F.coalesce(F.sum("o_totalprice"), F.lit(0.0)), 2).alias("total_spent"),
         )
-        .orderBy("c_custkey")
     )
 
 
@@ -107,7 +101,6 @@ SELECT COALESCE(cust_n.nk, supp_n.nk) AS nationkey,
        COALESCE(n_cust, 0) AS n_cust,
        COALESCE(n_supp, 0) AS n_supp
 FROM cust_n FULL OUTER JOIN supp_n ON cust_n.nk = supp_n.nk
-ORDER BY nationkey
 """,
     tags=("join", "cte"),
 )
@@ -124,7 +117,6 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
             F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
         )
-        .orderBy("nationkey")
     )
 
 
@@ -135,7 +127,6 @@ SELECT r_name, o_orderpriority, COUNT(*) AS n
 FROM region CROSS JOIN (SELECT DISTINCT o_orderpriority FROM orders) p
 CROSS JOIN (SELECT 1 AS one) d
 GROUP BY r_name, o_orderpriority
-ORDER BY r_name, o_orderpriority
 """,
     tags=("join",),
 )
@@ -148,7 +139,6 @@ def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
         v["region"].crossJoin(prios)
         .groupBy("r_name", "o_orderpriority")
         .agg(F.count("*").alias("n"))
-        .orderBy("r_name", "o_orderpriority")
     )
 
 
@@ -164,7 +154,6 @@ FROM (
   FROM orders
 ) t
 WHERE rn <= 3
-ORDER BY o_custkey, rn
 """,
     tags=("window", "topk"),
 )
@@ -178,7 +167,6 @@ def window_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= 3)
         .select("o_custkey", "o_orderkey", F.round("o_totalprice", 2).alias("totalprice"), "rn")
-        .orderBy("o_custkey", "rn")
     )
 
 
@@ -190,7 +178,6 @@ SELECT o_custkey, o_orderkey,
          PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_spend
 FROM orders
-ORDER BY o_custkey, o_orderkey
 """,
     tags=("window",),
 )
@@ -209,7 +196,6 @@ def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             F.round(F.sum("o_totalprice").over(w), 2).alias("running_spend"),
         )
-        .orderBy("o_custkey", "o_orderkey")
     )
 
 
@@ -223,7 +209,6 @@ SELECT o_custkey, o_orderkey,
        NTILE(4) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS quartile
 FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-ORDER BY o_custkey, o_orderkey
 """,
     tags=("window",),
 )
@@ -242,7 +227,6 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.rank().over(w_rank).alias("price_rank"),
             F.ntile(4).over(w).alias("quartile"),
         )
-        .orderBy("o_custkey", "o_orderkey")
     )
 
 
@@ -256,7 +240,6 @@ SELECT k, src FROM (
   UNION ALL
   SELECT c_custkey AS k, 'customer' AS src FROM customer WHERE c_acctbal > 9000
 ) t
-ORDER BY k, src
 """,
     tags=("setop",),
 )
@@ -269,7 +252,7 @@ def setop_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = v["customer"].where(F.col("c_acctbal") > 9000).select(
         F.col("c_custkey").alias("k"), F.lit("customer").alias("src")
     )
-    return a.unionByName(b).orderBy("k", "src")
+    return a.unionByName(b)
 
 
 @query(
@@ -286,7 +269,6 @@ SELECT k, 'only_building' AS tag FROM (
   EXCEPT
   SELECT o_custkey AS k FROM orders
 ) b
-ORDER BY tag, k
 """,
     tags=("setop",),
 )
@@ -302,7 +284,7 @@ def setop_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     any_order = v["orders"].select(F.col("o_custkey").alias("k"))
     both = building.intersect(finished).select("k", F.lit("both").alias("tag"))
     only = building.exceptAll(any_order).distinct().select("k", F.lit("only_building").alias("tag"))
-    return both.unionByName(only).orderBy("tag", "k")
+    return both.unionByName(only)
 
 
 # ---------------------------------------------------------------- grouping
@@ -315,7 +297,6 @@ FROM customer
 JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 GROUP BY ROLLUP (r_name, n_name)
-ORDER BY r_name NULLS FIRST, n_name NULLS FIRST
 """,
     tags=("aggregate", "rollup"),
 )
@@ -331,7 +312,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.rollup("r_name", "n_name")
         .agg(F.count("*").alias("n_customers"), F.round(F.sum("c_acctbal"), 2).alias("total_balance"))
-        .orderBy(F.col("r_name").asc_nulls_first(), F.col("n_name").asc_nulls_first())
     )
 
 
@@ -341,7 +321,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n, round(SUM(o_totalprice), 2) AS total
 FROM orders
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
-ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
 """,
     tags=("aggregate", "rollup"),
 )
@@ -352,10 +331,6 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         v["orders"]
         .cube("o_orderstatus", "o_orderpriority")
         .agg(F.count("*").alias("n"), F.round(F.sum("o_totalprice"), 2).alias("total"))
-        .orderBy(
-            F.col("o_orderstatus").asc_nulls_first(),
-            F.col("o_orderpriority").asc_nulls_first(),
-        )
     )
 
 
@@ -368,7 +343,6 @@ SELECT l_returnflag,
        CAST(SUM(CASE WHEN l_quantity > 25 THEN 1 ELSE 0 END) AS BIGINT) AS n_bulk_lines
 FROM lineitem
 GROUP BY l_returnflag
-ORDER BY l_returnflag
 """,
     tags=("aggregate",),
 )
@@ -383,7 +357,6 @@ def agg_distinct_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("l_suppkey").alias("n_suppliers"),
             F.sum(F.when(F.col("l_quantity") > 25, 1).otherwise(0)).alias("n_bulk_lines"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -405,7 +378,6 @@ SELECT l_returnflag,
           <= 0.05 * quantile_cont(l_extendedprice, 0.99))::INTEGER AS p99_within_5pct
 FROM lineitem
 GROUP BY l_returnflag
-ORDER BY l_returnflag
 """,
     tags=("aggregate", "approx"),
 )
@@ -444,7 +416,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             q_flag(0.95, "p95_within_5pct"),
             q_flag(0.99, "p99_within_5pct"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -456,7 +427,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT o_orderkey, round(o_totalprice, 2) AS totalprice
 FROM orders
 WHERE o_totalprice > 1.7 * (SELECT AVG(o_totalprice) FROM orders)
-ORDER BY o_orderkey
 """,
     tags=("subquery",),
 )
@@ -467,7 +437,6 @@ def subq_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_orderkey, round(o_totalprice, 2) AS totalprice
         FROM {orders}
         WHERE o_totalprice > 1.7 * (SELECT AVG(o_totalprice) FROM {orders})
-        ORDER BY o_orderkey
         """,
         **views(spark, sf_dir),
     )
@@ -481,7 +450,6 @@ FROM orders
 WHERE o_orderkey IN (
   SELECT l_orderkey FROM lineitem GROUP BY l_orderkey HAVING SUM(l_quantity) > 150
 )
-ORDER BY o_orderkey
 """,
     tags=("subquery",),
 )
@@ -494,7 +462,6 @@ def subq_in_having(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE o_orderkey IN (
           SELECT l_orderkey FROM {lineitem} GROUP BY l_orderkey HAVING SUM(l_quantity) > 150
         )
-        ORDER BY o_orderkey
         """,
         **views(spark, sf_dir),
     )
@@ -514,7 +481,7 @@ banded AS (
   FROM spend
 )
 SELECT band, COUNT(*) AS n_customers
-FROM banded GROUP BY band ORDER BY band
+FROM banded GROUP BY band
 """,
     tags=("cte", "aggregate"),
 )
@@ -533,7 +500,7 @@ def cte_ltv_band(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM spend
         )
         SELECT band, COUNT(*) AS n_customers
-        FROM banded GROUP BY band ORDER BY band
+        FROM banded GROUP BY band
         """,
         **views(spark, sf_dir),
     )
@@ -577,7 +544,6 @@ SELECT p_partkey,
        CASE WHEN p_type LIKE '%BRASS%' THEN 1 ELSE 0 END AS is_brass,
        regexp_extract(p_type, '([A-Z]+)$', 1)           AS last_word
 FROM part
-ORDER BY p_partkey
 """,
     tags=("scalar",),
 )
@@ -596,7 +562,7 @@ def scalar_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.trim(F.concat(F.lit(" "), F.col("p_brand"), F.lit(" "))).alias("brand_trim"),
         F.when(F.col("p_type").like("%BRASS%"), 1).otherwise(0).alias("is_brass"),
         F.regexp_extract("p_type", r"([A-Z]+)$", 1).alias("last_word"),
-    ).orderBy("p_partkey")
+    )
 
 
 @query(
@@ -611,7 +577,6 @@ SELECT o_orderkey,
        CAST(o_orderdate + INTERVAL '30' DAY AS TIMESTAMP) AS due_date
 FROM orders
 WHERE o_orderdate >= TIMESTAMP '2001-01-01'
-ORDER BY o_orderkey
 """,
     tags=("scalar", "date"),
 )
@@ -631,7 +596,6 @@ def scalar_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("quarter", "o_orderdate").alias("quarter_start"),
             (F.col("o_orderdate") + F.expr("INTERVAL 30 DAY")).alias("due_date"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -647,7 +611,6 @@ SELECT s_suppkey,
        round(greatest(s_acctbal, 0.0), 2) AS pos_bal,
        CAST(floor(s_acctbal / 1000) AS BIGINT) AS bal_k
 FROM supplier
-ORDER BY s_suppkey
 """,
     tags=("scalar",),
 )
@@ -669,7 +632,6 @@ def scalar_case_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.greatest("s_acctbal", F.lit(0.0)), 2).alias("pos_bal"),
             F.floor(F.col("s_acctbal") / 1000).alias("bal_k"),
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -679,7 +641,6 @@ def scalar_case_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT upper(c_mktsegment) AS segment, COUNT(*) AS n
 FROM customer
 GROUP BY segment
-ORDER BY segment
 """,
     tags=("aggregate", "dialect"),
 )
@@ -690,7 +651,6 @@ def groupby_output_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT upper(c_mktsegment) AS segment, COUNT(*) AS n
         FROM {customer}
         GROUP BY segment
-        ORDER BY segment
         """,
         **views(spark, sf_dir),
     )
@@ -702,7 +662,6 @@ def groupby_output_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT c_custkey, c_name, o_orderkey
 FROM orders RIGHT JOIN customer ON o_custkey = c_custkey
 WHERE c_custkey < 100
-ORDER BY c_custkey, o_orderkey NULLS FIRST
 """,
     tags=("join",),
 )
@@ -716,7 +675,6 @@ def join_right_outer_customer_orders(spark: SparkSession, sf_dir: str) -> DataFr
         .join(v["customer"], F.col("o_custkey") == F.col("c_custkey"), "right")
         .where(F.col("c_custkey") < 100)
         .select("c_custkey", "c_name", "o_orderkey")
-        .orderBy("c_custkey", F.asc_nulls_first("o_orderkey"))
     )
 
 
@@ -725,7 +683,6 @@ def join_right_outer_customer_orders(spark: SparkSession, sf_dir: str) -> DataFr
     oracle="""
 SELECT DISTINCT c_mktsegment, o_orderstatus
 FROM customer JOIN orders ON c_custkey = o_custkey
-ORDER BY c_mktsegment, o_orderstatus
 """,
     tags=("aggregate",),
 )
@@ -738,7 +695,6 @@ def distinct_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(v["orders"], F.col("c_custkey") == F.col("o_custkey"))
         .select("c_mktsegment", "o_orderstatus")
         .distinct()
-        .orderBy("c_mktsegment", "o_orderstatus")
     )
 
 
@@ -758,7 +714,6 @@ SELECT flag, COUNT(*) AS n FROM (
     SELECT o_custkey AS k FROM orders WHERE o_orderpriority = '1-URGENT'
   ) b
 ) GROUP BY flag
-ORDER BY flag
 """,
     tags=("setop",),
 )
@@ -780,7 +735,6 @@ def setop_all_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT o_custkey AS k FROM {orders} WHERE o_orderpriority = '1-URGENT'
           ) b
         ) GROUP BY flag
-        ORDER BY flag
         """,
         **views(spark, sf_dir),
     )
@@ -800,7 +754,6 @@ SELECT p_partkey,
        left(p_name, 4)                                AS name_l4,
        right(p_name, 4)                               AS name_r4
 FROM part
-ORDER BY p_partkey
 """,
     tags=("scalar",),
 )
@@ -821,7 +774,6 @@ def scalar_string_functions2(spark: SparkSession, sf_dir: str) -> DataFrame:
                left(p_name, 4)                          AS name_l4,
                right(p_name, 4)                         AS name_r4
         FROM {part}
-        ORDER BY p_partkey
         """,
         **views(spark, sf_dir),
     )
@@ -846,7 +798,6 @@ SELECT l_orderkey, l_linenumber,
             ELSE CAST(floor(l_quantity / 10) + 1 AS BIGINT) END AS qty_bucket
 FROM lineitem
 WHERE l_orderkey < 200
-ORDER BY l_orderkey, l_linenumber
 """,
     tags=("scalar",),
 )
@@ -873,7 +824,6 @@ def scalar_math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
                width_bucket(l_quantity, 0, 50, 5)           AS qty_bucket
         FROM {lineitem}
         WHERE l_orderkey < 200
-        ORDER BY l_orderkey, l_linenumber
         """,
         **views(spark, sf_dir),
     )
@@ -899,7 +849,6 @@ allr AS (
 SELECT * FROM per
 UNION ALL
 SELECT * FROM allr
-ORDER BY event_type
 """,
     tags=("aggregate", "approx", "scale"),
 )
@@ -945,7 +894,7 @@ def agg_hll_mergeable_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("est_within_5pct"),
         )
     )
-    return per_flags.unionAll(all_row).orderBy("event_type")
+    return per_flags.unionAll(all_row)
 
 
 # ---------------------------------------------------------------- constructs
@@ -958,7 +907,6 @@ FROM part p
 WHERE p.p_retailprice = (
   SELECT MIN(p2.p_retailprice) FROM part p2 WHERE p2.p_brand = p.p_brand
 )
-ORDER BY p.p_partkey
 """,
     tags=("subquery",),
 )
@@ -972,7 +920,6 @@ def subq_correlated_min_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE p.p_retailprice = (
           SELECT MIN(p2.p_retailprice) FROM {part} p2 WHERE p2.p_brand = p.p_brand
         )
-        ORDER BY p.p_partkey
         """,
         **views(spark, sf_dir),
     )
@@ -986,7 +933,6 @@ FROM (
   SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount
   FROM lineitem WHERE l_orderkey < 100
 ) UNPIVOT (val FOR measure IN (l_quantity, l_extendedprice, l_discount))
-ORDER BY l_orderkey, l_linenumber, measure
 """,
     tags=("reshape",),
 )
@@ -999,7 +945,6 @@ def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount
           FROM {lineitem} WHERE l_orderkey < 100
         ) UNPIVOT (val FOR measure IN (l_quantity, l_extendedprice, l_discount))
-        ORDER BY l_orderkey, l_linenumber, measure
         """,
         **views(spark, sf_dir),
     )
@@ -1014,7 +959,6 @@ JOIN (VALUES ('AUTOMOBILE', 'A'), ('BUILDING', 'B'), ('FURNITURE', 'F'),
              ('HOUSEHOLD', 'H'), ('MACHINERY', 'M')) AS t(seg, grade)
   ON c_mktsegment = t.seg
 GROUP BY t.grade
-ORDER BY t.grade
 """,
     tags=("scan",),
 )
@@ -1029,7 +973,6 @@ def values_inline_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ('HOUSEHOLD', 'H'), ('MACHINERY', 'M')) AS t(seg, grade)
           ON c_mktsegment = t.seg
         GROUP BY t.grade
-        ORDER BY t.grade
         """,
         **views(spark, sf_dir),
     )
@@ -1042,7 +985,6 @@ SELECT r_regionkey,
        to_json({'region': r_name, 'key_sq': r_regionkey * r_regionkey}) AS info,
        to_json(MAP(['name_len', 'key'], [length(r_name), r_regionkey])) AS metrics
 FROM region
-ORDER BY r_regionkey
 """,
     tags=("scalar", "nested"),
 )
@@ -1071,7 +1013,6 @@ def struct_and_map_constructors(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("metrics"),
         )
-        .orderBy("r_regionkey")
     )
 
 
@@ -1086,7 +1027,6 @@ FROM nation, LATERAL (
   ORDER BY c_acctbal DESC, c_name
   LIMIT 2
 ) c
-ORDER BY n_name, acctbal DESC, c_name
 """,
     tags=("join", "lateral"),
 )
@@ -1106,7 +1046,6 @@ def lateral_top2_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataF
           ORDER BY c_acctbal DESC, c_name
           LIMIT 2
         ) c
-        ORDER BY n_name, acctbal DESC, c_name
         """,
         **views(spark, sf_dir),
     )
@@ -1123,7 +1062,6 @@ FROM months
 LEFT JOIN {orders}
   ON year(o_orderdate) * 100 + month(o_orderdate) = year(m) * 100 + month(m)
 GROUP BY m
-ORDER BY m
 """
 
 
@@ -1162,7 +1100,6 @@ SELECT c.nk,
 FROM clicks c
 LEFT JOIN purch p ON c.nk IS NOT DISTINCT FROM p.nk
 GROUP BY c.nk
-ORDER BY c.nk NULLS LAST
 """,
     tags=("join", "semantics"),
 )
@@ -1204,7 +1141,6 @@ def join_null_safe_contrast(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_nullsafe_hits"),
         )
-        .orderBy(F.asc_nulls_last("nk"))
     )
 
 
@@ -1233,7 +1169,6 @@ monthly AS (
 SELECT CAST(month AS DATE) AS month, net_delta,
        CAST(SUM(net_delta) OVER (ORDER BY month) AS BIGINT) AS open_backlog
 FROM monthly
-ORDER BY month
 """,
     tags=("orders", "window"),
 )
@@ -1266,7 +1201,6 @@ def orders_backlog_burndown(spark: SparkSession, sf_dir: str) -> DataFrame:
             "net_delta",
             F.sum("net_delta").over(w).cast("bigint").alias("open_backlog"),
         )
-        .orderBy("month")
     )
 
 
@@ -1294,7 +1228,6 @@ SELECT yr, CAST(n AS BIGINT) AS n_lines,
        round(n_n / n, 4) AS share_n,
        round(n_r / n, 4) AS share_r
 FROM cells, tot
-ORDER BY yr
 """,
     tags=("lineitem", "agg"),
 )
@@ -1340,7 +1273,6 @@ def lineitem_returnflag_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame
             F.round(F.col("n_n") / F.col("n"), 4).alias("share_n"),
             F.round(F.col("n_r") / F.col("n"), 4).alias("share_r"),
         )
-        .orderBy("yr")
     )
 
 
@@ -1403,7 +1335,6 @@ SELECT segment, CAST(t_weeks AS BIGINT) AS t_weeks,
        CAST(cum_events AS BIGINT) AS cum_events,
        round(exp(cum_ln), 4) AS survival
 FROM best WHERE rn = 1
-ORDER BY segment, t_weeks
 """,
     tags=("orders", "stats"),
 )
@@ -1499,7 +1430,7 @@ def customers_repeat_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t_weeks").cast("bigint").alias("t_weeks"),
         F.col("cum_events").cast("bigint").alias("cum_events"),
         F.round(F.exp("cum_ln"), 4).alias("survival"),
-    ).orderBy("segment", "t_weeks")
+    )
 
 
 @query(
@@ -1530,7 +1461,6 @@ SELECT coalesce(s1.m1, 0) AS m_score_h1,
        CAST(COUNT(*) AS BIGINT) AS n_customers
 FROM s1 FULL OUTER JOIN s2 ON s1.o_custkey = s2.o_custkey
 GROUP BY 1, 2
-ORDER BY m_score_h1, m_score_h2
 """,
     tags=("analytics", "segmentation", "drift"),
 )
@@ -1575,7 +1505,6 @@ def orders_rfm_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("m_score_h1", "m_score_h2")
         .agg(F.count("*").cast("bigint").alias("n_customers"))
-        .orderBy("m_score_h1", "m_score_h2")
     )
 
 
@@ -1595,7 +1524,6 @@ SELECT o_custkey, recency_days, frequency, monetary_cents,
        CAST(NTILE(5) OVER (ORDER BY frequency DESC, o_custkey) AS INTEGER) AS f_score,
        CAST(NTILE(5) OVER (ORDER BY monetary_cents DESC, o_custkey) AS INTEGER) AS m_score
 FROM rfm
-ORDER BY o_custkey
 """,
     tags=("analytics", "window", "segmentation"),
 )
@@ -1639,7 +1567,7 @@ def customers_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(W.orderBy(F.desc("monetary_cents"), F.asc("o_custkey")))
         .cast("int")
         .alias("m_score"),
-    ).orderBy("o_custkey")
+    )
 
 
 @query(
@@ -1764,7 +1692,6 @@ SELECT s_nationkey,
        CAST(MAX(total_cents) AS BIGINT) AS total_cents
 FROM ranked
 GROUP BY s_nationkey
-ORDER BY s_nationkey
 """,
     tags=("window", "aggregate", "analytics"),
 )
@@ -1822,7 +1749,6 @@ def pareto_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("top1_share_bp"),
             F.max("total_cents").cast("bigint").alias("total_cents"),
         )
-        .orderBy("s_nationkey")
     )
 
 
@@ -1847,7 +1773,6 @@ SELECT o_custkey, prev_key AS first_orderkey, o_orderkey AS dup_orderkey,
        CAST(o_orderdate - prev_date AS BIGINT) AS gap_days
 FROM seq
 WHERE prev_date IS NOT NULL AND o_orderdate - prev_date <= 7
-ORDER BY o_custkey, dup_orderkey
 """,
     tags=("window", "analytics", "qa"),
 )
@@ -1888,7 +1813,6 @@ def orders_duplicate_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "price_cents",
             gap.cast("bigint").alias("gap_days"),
         )
-        .orderBy("o_custkey", "dup_orderkey")
     )
 
 
@@ -1905,7 +1829,6 @@ t AS (SELECT CAST(SUM(cents) AS BIGINT) AS total_cents FROM m)
 SELECT CAST(mon AS INTEGER) AS mon, n_orders, cents,
        CAST(cents * 12 * 10000 // total_cents AS BIGINT) AS seasonal_index_bp
 FROM m CROSS JOIN t
-ORDER BY mon
 """,
     tags=("aggregate", "temporal", "analytics"),
 )
@@ -1937,7 +1860,6 @@ def orders_monthly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "seasonal_index_bp"
             ),
         )
-        .orderBy("mon")
     )
 
 
@@ -1964,7 +1886,6 @@ SELECT l_returnflag, n,
                     * (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)), 4)
          AS discount_qty_corr
 FROM s
-ORDER BY l_returnflag
 """,
     tags=("aggregate", "analytics"),
 )
@@ -1998,9 +1919,7 @@ def lineitem_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         4,
     )
-    return s.select("l_returnflag", "n", corr.alias("discount_qty_corr")).orderBy(
-        "l_returnflag"
-    )
+    return s.select("l_returnflag", "n", corr.alias("discount_qty_corr"))
 
 
 @query(
@@ -2020,7 +1939,6 @@ SELECT o_orderpriority,
        CAST(MAX(lead_days) AS BIGINT) AS max_days
 FROM lt
 GROUP BY o_orderpriority
-ORDER BY o_orderpriority
 """,
     tags=("aggregate", "quantile", "analytics", "join"),
 )
@@ -2063,7 +1981,6 @@ def orders_fulfillment_lead_time(spark: SparkSession, sf_dir: str) -> DataFrame:
             q(0.95).alias("p95_days"),
             F.max("lead_days").cast("bigint").alias("max_days"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -2087,7 +2004,6 @@ SELECT n_name, CAST(yr AS INTEGER) AS yr, cents,
                  // LAG(cents) OVER (PARTITION BY n_name ORDER BY yr) END AS BIGINT)
          AS yoy_growth_bp
 FROM yearly
-ORDER BY n_name, yr
 """,
     tags=("window", "aggregate", "analytics", "join"),
 )
@@ -2130,7 +2046,7 @@ def revenue_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("prev_cents").isNull(), F.lit(None).cast("bigint"))
         .otherwise(F.expr("(cents - prev_cents) * 10000 DIV prev_cents").cast("bigint"))
         .alias("yoy_growth_bp"),
-    ).orderBy("n_name", "yr")
+    )
 
 
 @query(
@@ -2155,7 +2071,6 @@ SELECT CASE WHEN cents >= hi_rev AND n_suppliers <= lo_sup THEN 'a_critical'
        CAST(SUM(cents) AS BIGINT) AS cents_total
 FROM rev CROSS JOIN t
 GROUP BY 1
-ORDER BY risk_class
 """,
     tags=("aggregate", "analytics", "quantile"),
 )
@@ -2202,7 +2117,6 @@ def parts_supply_risk_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_parts"),
             F.sum("cents").cast("bigint").alias("cents_total"),
         )
-        .orderBy("risk_class")
     )
 
 
@@ -2225,7 +2139,6 @@ SELECT c_mktsegment,
 FROM seq
 WHERE gap_days IS NOT NULL
 GROUP BY c_mktsegment
-ORDER BY c_mktsegment
 """,
     tags=("window", "quantile", "analytics", "join"),
 )
@@ -2260,7 +2173,6 @@ def customer_interpurchase_time(spark: SparkSession, sf_dir: str) -> DataFrame:
             q(0.90).alias("p90_days"),
             F.max("gap_days").cast("bigint").alias("max_days"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -2282,7 +2194,6 @@ SELECT r.n_name,
          AS hhi_bp2
 FROM rev r JOIN tot t ON t.n_name = r.n_name
 GROUP BY r.n_name
-ORDER BY r.n_name
 """,
     tags=("aggregate", "analytics", "join"),
 )
@@ -2322,7 +2233,6 @@ def orders_customer_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_customers"),
             F.sum("share_sq").cast("bigint").alias("hhi_bp2"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -2347,7 +2257,6 @@ SELECT yr, qtr,
          AS last_week_share_bp
 FROM q
 GROUP BY yr, qtr
-ORDER BY yr, qtr
 """,
     tags=("aggregate", "temporal", "qa", "analytics"),
 )
@@ -2382,7 +2291,6 @@ def orders_quarter_end_loading(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("last_week_share_bp"),
         )
-        .orderBy("yr", "qtr")
     )
 
 
@@ -2406,7 +2314,6 @@ SELECT l_suppkey, n_months,
        CAST(sum_kd // n_months AS BIGINT) AS mean_month_kd,
        CAST(100 * n_months * sumsq_kd >= 125 * sum_kd * sum_kd AS INTEGER) AS volatile
 FROM s
-ORDER BY l_suppkey
 """,
     tags=("aggregate", "analytics", "qa"),
 )
@@ -2454,7 +2361,7 @@ def supplier_revenue_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("int")
         .alias("volatile"),
-    ).orderBy("l_suppkey")
+    )
 
 
 @query(
@@ -2481,7 +2388,6 @@ FROM obs o
 JOIN margins m ON m.segment = o.segment
 JOIN cols c ON c.priority = o.priority
 CROSS JOIN tot t
-ORDER BY o.segment, o.priority
 """,
     tags=("aggregate", "analytics", "join"),
 )
@@ -2525,7 +2431,6 @@ def orders_priority_segment_contingency(spark: SparkSession, sf_dir: str) -> Dat
             .cast("bigint")
             .alias("deviation_milli"),
         )
-        .orderBy("segment", "priority")
     )
 
 
@@ -2543,7 +2448,6 @@ SELECT p.p_brand,
             AS BIGINT) AS return_bp
 FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
 GROUP BY p.p_brand
-ORDER BY p.p_brand
 """,
     tags=("aggregate", "analytics", "join", "qa"),
 )
@@ -2575,7 +2479,6 @@ def lineitem_returns_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("return_bp"),
         )
-        .orderBy("p_brand")
     )
 
 
@@ -2606,7 +2509,6 @@ SELECT cohort_month, cohort_age,
          AS cumulative_revenue
 FROM cell
 WHERE cohort_age <= 11
-ORDER BY cohort_month, cohort_age
 """,
     tags=("window", "analytics", "aggregate"),
 )
@@ -2653,7 +2555,6 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("rev_cents").over(w).cast("double") / 100, 2
             ).alias("cumulative_revenue"),
         )
-        .orderBy("cohort_month", "cohort_age")
     )
 
 
@@ -2685,7 +2586,6 @@ SELECT s.suppkey, s.n,
             THEN 1 ELSE 0 END AS out_of_control
 FROM s, g
 WHERE s.n >= 30
-ORDER BY s.suppkey
 """,
     tags=("aggregate", "analytics", "anomaly"),
 )
@@ -2738,7 +2638,6 @@ def supplier_lead_time_control_chart(spark: SparkSession, sf_dir: str) -> DataFr
             z.alias("z"),
             F.when(F.abs(z) > 3.0, 1).otherwise(0).alias("out_of_control"),
         )
-        .orderBy("suppkey")
     )
 
 
@@ -2846,7 +2745,6 @@ SELECT nation, yr, round(CAST(rev_cents AS DOUBLE) / 100, 2) AS revenue,
        CAST(lag(rnk) OVER (PARTITION BY nation ORDER BY yr) - rnk AS BIGINT)
          AS rank_gain
 FROM ranked
-ORDER BY yr, rnk
 """,
     tags=("window", "join", "analytics"),
 )
@@ -2894,7 +2792,6 @@ def nation_revenue_rank_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("rank_gain"),
         )
-        .orderBy("yr", "rnk")
     )
 
 
@@ -2917,7 +2814,6 @@ SELECT o_orderpriority,
        CAST(MIN(o_orderkey) AS BIGINT) AS oldest_example
 FROM open_orders
 GROUP BY o_orderpriority, age_bucket
-ORDER BY o_orderpriority, age_bucket
 """,
     tags=("aggregate", "analytics"),
 )
@@ -2948,5 +2844,4 @@ def orders_open_order_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_orders"),
             F.min("o_orderkey").cast("bigint").alias("oldest_example"),
         )
-        .orderBy("o_orderpriority", "age_bucket")
     )

@@ -30,7 +30,6 @@ N_SALT = 8
 SELECT event_type, COUNT(*) AS n_events, round(SUM(value), 2) AS total_value
 FROM events
 GROUP BY event_type
-ORDER BY event_type
 """,
     tags=("aggregate", "skew"),
 )
@@ -52,7 +51,6 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").alias("n_events"),
             F.round(F.sum("s"), 2).alias("total_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -66,7 +64,6 @@ JOIN (VALUES ('click', 1.0), ('view', 0.5), ('purchase', 10.0),
              ('signup', 5.0), ('error', 0.0)) AS m(etype, weight)
   ON e.event_type = m.etype
 GROUP BY e.event_type, m.weight
-ORDER BY e.event_type
 """,
     tags=("join", "skew"),
 )
@@ -96,7 +93,6 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.round(F.sum(F.col("value") * F.col("weight")), 2).alias("weighted_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -108,7 +104,6 @@ SELECT event_type, COUNT(*) AS n_sampled,
 FROM events
 WHERE CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 4) AS INTEGER) % 100 < 10
 GROUP BY event_type
-ORDER BY event_type
 """,
     tags=("sample",),
 )
@@ -132,7 +127,6 @@ def sample_deterministic_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_sampled"),
             F.round(F.sum("value"), 2).alias("sampled_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -148,7 +142,6 @@ FROM (
   FROM documents
 ) t
 WHERE rn <= 25
-ORDER BY lang, rn
 """,
     tags=("sample", "pipeline"),
 )
@@ -170,7 +163,6 @@ def sample_stratified_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.select("doc_id", "lang", "source", F.row_number().over(w).alias("rn"))
         .where(F.col("rn") <= 25)
-        .orderBy("lang", "rn")
     )
 
 
@@ -266,7 +258,6 @@ SELECT o_custkey,
        o_totalprice AS state_price
 FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-ORDER BY o_custkey, valid_from, o_orderkey
 """,
     tags=("incremental", "scd", "window"),
 )
@@ -296,7 +287,6 @@ def orders_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("o_orderdate").over(w).isNull().alias("is_current"),
             F.col("o_totalprice").alias("state_price"),
         )
-        .orderBy("o_custkey", "valid_from", "o_orderkey")
     )
 
 
@@ -463,7 +453,6 @@ SELECT event_type,
        CAST(COUNT(DISTINCT CASE WHEN gone THEN user_id END) AS BIGINT) AS n_users_deleted
 FROM flagged
 GROUP BY event_type
-ORDER BY event_type
 """,
     tags=("pipeline", "warehouse", "join"),
 )
@@ -514,7 +503,6 @@ def warehouse_forget_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("deleted_cents", F.lit(0)).cast("bigint").alias("deleted_cents"),
             F.coalesce("n_users_deleted", F.lit(0)).cast("bigint").alias("n_users_deleted"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -564,7 +552,6 @@ est AS (
 SELECT user_id, exact_n, CAST(cms_n AS BIGINT) AS cms_n,
        CAST(cms_n - exact_n AS BIGINT) AS overcount
 FROM est
-ORDER BY exact_n DESC, user_id
 """
 
 
@@ -632,7 +619,6 @@ def agg_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cms_n",
             (F.col("cms_n") - F.col("exact_n")).cast("bigint").alias("overcount"),
         )
-        .orderBy(F.desc("exact_n"), "user_id")
     )
 
 
@@ -660,7 +646,6 @@ SELECT status, CAST(COUNT(*) AS BIGINT) AS n,
        CAST(MIN(o_orderkey) AS BIGINT) AS first_key,
        CAST(MAX(o_orderkey) AS BIGINT) AS last_key
 FROM d GROUP BY status
-ORDER BY status
 """,
     tags=("warehouse", "join"),
 )
@@ -704,7 +689,6 @@ def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("o_orderkey").cast("bigint").alias("first_key"),
             F.max("o_orderkey").cast("bigint").alias("last_key"),
         )
-        .orderBy("status")
     )
 
 
@@ -729,7 +713,6 @@ SELECT p.part_day, p.n_rows,
 FROM p, s
 WHERE CAST(p.n_rows AS DOUBLE) * s.n_parts / s.total_rows > 1.5
    OR p.n_rows = s.max_rows
-ORDER BY part_day
 """,
     tags=("warehouse", "aggregate", "skew"),
 )
@@ -762,5 +745,4 @@ def warehouse_partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFra
             F.round(skew, 3).alias("skew_factor"),
             F.when(skew > 2.0, 1).otherwise(0).alias("is_hot"),
         )
-        .orderBy("part_day")
     )

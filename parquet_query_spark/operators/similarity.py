@@ -104,7 +104,6 @@ WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 
      )
 SELECT qid, neighbor_id, cosine, rnk
 FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY qid, rnk
 """,
     tags=("similarity", "bench"),
 )
@@ -152,7 +151,6 @@ def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         partial.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= TOP_K)
-        .orderBy("qid", "rnk")
     )
 
 
@@ -166,7 +164,6 @@ SELECT label, COUNT(*) AS n,
        round(AVG(CAST(embedding[4] AS DOUBLE)), 6) AS c3
 FROM embeddings
 GROUP BY label
-ORDER BY label
 """,
     tags=("similarity", "aggregate"),
 )
@@ -186,7 +183,6 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i in range(4)
             ],
         )
-        .orderBy("label")
     )
 
 
@@ -198,7 +194,6 @@ SELECT vec_id, label,
        round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE))), 6)  AS comp_sum,
        round(list_max(list_transform(embedding, x -> CAST(x AS DOUBLE))), 6)  AS comp_max
 FROM embeddings
-ORDER BY vec_id
 """,
     tags=("similarity", "scalar"),
 )
@@ -215,7 +210,6 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr("aggregate(embedding, CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE))"), 6).alias("comp_sum"),
             F.round(F.array_max(d), 6).alias("comp_max"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -291,7 +285,6 @@ ranked AS (
 )
 SELECT qid, neighbor_id, cosine, rnk
 FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY qid, rnk
 """,
     tags=("similarity", "ann"),
 )
@@ -376,7 +369,6 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= TOP_K)
-        .orderBy("qid", "rnk")
     )
 
 
@@ -392,7 +384,6 @@ WITH pairs AS (
 SELECT id_a, id_b, {_DUCKDB_COSINE} AS cosine
 FROM pairs
 WHERE {_DUCKDB_COSINE} >= 0.3
-ORDER BY id_a, id_b
 """,
     tags=("similarity", "dedup"),
 )
@@ -412,7 +403,6 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", cos.alias("cosine"))
         .where(F.col("cosine") >= 0.3)
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -441,7 +431,6 @@ reach(root, node) AS (
 SELECT vec_id, component_id,
        COUNT(*) OVER (PARTITION BY component_id) AS component_size
 FROM (SELECT root AS vec_id, MIN(node) AS component_id FROM reach GROUP BY root)
-ORDER BY vec_id
 """,
     tags=("similarity", "dedup", "iterative"),
 )
@@ -577,7 +566,6 @@ SELECT qid, neighbor_id, cosine, rnk FROM (
          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, neighbor_id) AS rnk
   FROM scored
 ) WHERE rnk <= {IVF_TOP_K}
-ORDER BY qid, rnk
 """,
     tags=("similarity", "ann"),
 )
@@ -641,7 +629,6 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rnk", F.row_number().over(w_rank))
         .where(F.col("rnk") <= IVF_TOP_K)
-        .orderBy("qid", "rnk")
     )
 
 
@@ -675,7 +662,6 @@ SELECT vec_id,
             AS BIGINT) AS err_nano_sum
 FROM codes
 GROUP BY vec_id
-ORDER BY vec_id
 """,
     tags=("similarity", "quantize"),
 )
@@ -758,7 +744,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " CAST(0 AS BIGINT), (a, e) -> a + e)"
             ).alias("err_nano_sum"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -1113,7 +1098,6 @@ def _km_oracle_ctes() -> str:
 WITH {_km_oracle_ctes()}
 SELECT vec_id, cid AS cluster, dist2
 FROM a{_KM_UPDATES}
-ORDER BY vec_id
 """,
     tags=("similarity", "clustering"),
 )
@@ -1131,7 +1115,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     full iterative algorithm hash-verifiable against the unrolled-SQL
     oracle (left-fold summation order matches DuckDB's list_sum)."""
     assign = _km_final_assign(spark, sf_dir)
-    return assign.select("vec_id", F.col("cid").alias("cluster"), "dist2").orderBy("vec_id")
+    return assign.select("vec_id", F.col("cid").alias("cluster"), "dist2")
 
 
 @query(
@@ -1150,7 +1134,6 @@ dropped AS (SELECT DISTINCT id_b FROM pairs WHERE cosine >= {_SEMDEDUP_TAU})
 SELECT f.vec_id, f.cid AS cluster
 FROM a{_KM_UPDATES} f LEFT JOIN dropped d ON f.vec_id = d.id_b
 WHERE d.id_b IS NULL
-ORDER BY f.vec_id
 """,
     tags=("similarity", "dedup", "clustering"),
 )
@@ -1220,7 +1203,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             _km_final_assign(spark, sf_dir)
             .groupBy("cid")
             .applyInPandas(prune, "vec_id bigint, cluster int")
-            .orderBy("vec_id")
         )
 
     assign = (
@@ -1254,7 +1236,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         assign.join(dropped, assign["vec_id"] == dropped["id_b"], "left_anti")
         .select("vec_id", F.col("cid").alias("cluster"))
-        .orderBy("vec_id")
     )
 
 
@@ -1299,7 +1280,6 @@ SELECT vec_id,
        round({dist_chain}, 6) AS distortion
 FROM best
 GROUP BY vec_id
-ORDER BY vec_id
 """
 
 
@@ -1384,11 +1364,7 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [T.StructField(f"code_{m}", T.IntegerType()) for m in range(m_n)]
         + [T.StructField("distortion", T.DoubleType())]
     )
-    from parquet_query_spark.operators.catalog import ordered_once
-
-    # ordered_once: without the barrier the sort's range-sampling pass
-    # re-runs the whole numpy PQ encode a second time (r13)
-    return ordered_once(emb.mapInPandas(_encode, schema), "vec_id")
+    return emb.mapInPandas(_encode, schema)
 
 
 _RP_J = 8  # projected dimensions
@@ -1429,7 +1405,6 @@ terms AS (
 SELECT vec_id, CAST(j AS INTEGER) AS proj_dim, CAST(SUM(tu) AS BIGINT) AS proj_micro
 FROM terms
 GROUP BY vec_id, j
-ORDER BY vec_id, proj_dim
 """,
     tags=("similarity", "projection"),
 )
@@ -1443,7 +1418,7 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark never recomputes md5 per row — the oracle recomputes it in SQL
     to prove the matrix matches); each vector's 8 projections are a
     scan-side fold, then one 1→8 posexplode to long format.  No shuffle
-    before the output sort — 100 TB projects at scan cost.  Each term is
+    — 100 TB projects at scan cost.  Each term is
     quantized to integer micro-units BEFORE summing, so the cross-engine
     comparison is exact regardless of float summation order."""
     v = views(spark, sf_dir)
@@ -1463,7 +1438,6 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.withColumn("_signs", signs)
         .withColumn("_p", projs)
         .select("vec_id", F.posexplode("_p").alias("proj_dim", "proj_micro"))
-        .orderBy("vec_id", "proj_dim")
     )
 
 
@@ -1533,7 +1507,6 @@ SELECT qid, neighbor_id, approx_d2_micro, CAST(rnk AS INTEGER) AS rnk FROM (
                             ORDER BY approx_d2_micro, neighbor_id) AS rnk
   FROM adist
 ) WHERE rnk <= {IVF_TOP_K}
-ORDER BY qid, rnk
 """
 
 
@@ -1656,7 +1629,6 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rnk", F.row_number().over(w_rank))
         .where(F.col("rnk") <= IVF_TOP_K)
-        .orderBy("qid", "rnk")
     )
 
 
@@ -1676,7 +1648,6 @@ SELECT lang, label,
        round(CAST(SUM(norm_u) AS DOUBLE) / 1000000.0 / COUNT(*), 4) AS mean_norm
 FROM joined
 GROUP BY lang, label
-ORDER BY lang, label
 """,
     tags=("similarity", "pipeline", "join"),
 )
@@ -1710,7 +1681,6 @@ def crossmodal_lang_label_profile(spark: SparkSession, sf_dir: str) -> DataFrame
                 "mean_norm"
             ),
         )
-        .orderBy("lang", "label")
     )
 
 
@@ -1744,7 +1714,6 @@ WITH exact AS (SELECT qid, neighbor_id FROM ({exact_sql})),
 SELECT qid, n_exact, n_hits,
        CAST(floor(n_hits * 10000.0 / n_exact) AS BIGINT) AS recall_bp
 FROM (SELECT * FROM per UNION ALL SELECT * FROM total)
-ORDER BY qid
 """
 
 
@@ -1797,7 +1766,6 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("recall_bp"),
         )
-        .orderBy("qid")
     )
 
 
@@ -1868,7 +1836,6 @@ v{it} AS (
     sql += f"""
 SELECT i, CAST(floor((w / (SELECT m FROM m{last})) * 1000000.0 + 0.5) AS BIGINT) AS loading_micro
 FROM w{last}
-ORDER BY i
 """
     return sql
 
@@ -1936,7 +1903,7 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("loading_micro", T.LongType(), False),
         ]
     )
-    return spark.createDataFrame(out, schema).orderBy("i")
+    return spark.createDataFrame(out, schema)
 
 
 @query(
@@ -1961,7 +1928,6 @@ SELECT label, CAST(d AS INTEGER) AS prefix_dim,
        round(CAST(SUM(retained_u) AS DOUBLE) / 1000000.0 / COUNT(*), 4) AS mean_retained
 FROM ratios
 GROUP BY label, d
-ORDER BY label, prefix_dim
 """,
     tags=("similarity", "quantize", "qa"),
 )
@@ -2001,7 +1967,6 @@ def embedding_matryoshka_retention(spark: SparkSession, sf_dir: str) -> DataFram
                 F.sum("retained_u").cast("double") / 1000000.0 / F.count("*"), 4
             ).alias("mean_retained"),
         )
-        .orderBy("label", "prefix_dim")
     )
 
 
@@ -2124,7 +2089,6 @@ bucketed AS (
 SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_pairs
 FROM bucketed
 GROUP BY bucket
-ORDER BY bucket
 """,
     tags=("similarity", "qa", "aggregate"),
 )
@@ -2159,7 +2123,6 @@ def embedding_pair_distance_histogram(spark: SparkSession, sf_dir: str) -> DataF
         paired.select(bucket.alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").cast("bigint").alias("n_pairs"))
-        .orderBy("bucket")
     )
 
 
@@ -2266,7 +2229,6 @@ SELECT vec_id, label,
        round((l2 - mu) / sigma, 3) AS z
 FROM n, s
 WHERE abs(round((l2 - mu) / sigma, 3)) >= 2.0
-ORDER BY vec_id
 """,
     tags=("embedding", "quality"),
 )
@@ -2301,7 +2263,6 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             z.alias("z"),
         )
         .where(F.abs(F.col("z")) >= 2.0)
-        .orderBy("vec_id")
     )
 
 
@@ -2322,7 +2283,6 @@ SELECT a.label AS label_a, b.label AS label_b,
              / (sqrt(SUM(a.m * a.m)) * sqrt(SUM(b.m * b.m))), 6) AS centroid_cosine
 FROM c a JOIN c b ON a.i = b.i AND a.label < b.label
 GROUP BY a.label, b.label
-ORDER BY label_a, label_b
 """,
     tags=("embedding", "quality"),
 )
@@ -2356,7 +2316,6 @@ def embedding_label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFram
                 6,
             ).alias("centroid_cosine")
         )
-        .orderBy("label_a", "label_b")
     )
 
 
@@ -2376,7 +2335,6 @@ SELECT dim,
        CASE WHEN stddev_samp(x) < 0.01 THEN 1 ELSE 0 END AS is_dead
 FROM e
 GROUP BY dim
-ORDER BY dim
 """,
     tags=("embedding", "quality"),
 )
@@ -2401,7 +2359,6 @@ def embedding_dimension_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("x"), 4).alias("max_x"),
             F.when(F.stddev_samp("x") < 0.01, 1).otherwise(0).alias("is_dead"),
         )
-        .orderBy("dim")
     )
 
 
@@ -2448,7 +2405,6 @@ SELECT true_label AS label,
             // COUNT(*) AS BIGINT) AS accuracy_bp
 FROM pred
 GROUP BY true_label
-ORDER BY true_label
 """,
     tags=("embedding", "similarity", "quality"),
 )
@@ -2519,7 +2475,6 @@ def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("accuracy_bp"),
         )
-        .orderBy("label")
     )
 
 
@@ -2595,7 +2550,6 @@ FROM sweep s
 LEFT JOIN hits h ON h.nprobe = s.nprobe
 JOIN scanned sc ON sc.nprobe = s.nprobe
 CROSS JOIN sizes z
-ORDER BY nprobe
 """
 
 
@@ -2699,7 +2653,6 @@ def embedding_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"CAST(n_scanned * 10000 DIV ({N_IVF_QUERIES} * corpus_n) AS BIGINT)"
             ).alias("scanned_bp"),
         )
-        .orderBy("nprobe")
     )
 
 
@@ -2731,7 +2684,7 @@ SELECT label,
        round(SUM(0.5 * ln(d2 / d1)), 4) AS sum_log_ratio,
        round(COUNT(*) / nullif(SUM(0.5 * ln(d2 / d1)), 0), 2) AS intrinsic_dim
 FROM two WHERE d2 IS NOT NULL
-GROUP BY label ORDER BY label
+GROUP BY label
 """,
     tags=("embedding", "similarity", "profile"),
 )
@@ -2796,7 +2749,6 @@ def embedding_intrinsic_dim_twonn(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.count("*") / F.nullif(F.sum(log_ratio), F.lit(0.0)), 2
             ).alias("intrinsic_dim"),
         )
-        .orderBy("label")
     )
 
 
@@ -2832,7 +2784,7 @@ SELECT label,
        CAST(SUM(CASE WHEN kocc = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_antihubs,
        CAST(MAX(kocc) AS BIGINT) AS max_kocc,
        round(AVG(CAST(kocc AS DOUBLE)), 4) AS avg_kocc
-FROM by_vec GROUP BY label ORDER BY label
+FROM by_vec GROUP BY label
 """,
     tags=("embedding", "similarity", "profile"),
 )
@@ -2885,7 +2837,6 @@ def embedding_hubness_kocc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("kocc").cast("bigint").alias("max_kocc"),
             F.round(F.avg(F.col("kocc").cast("double")), 4).alias("avg_kocc"),
         )
-        .orderBy("label")
     )
 
 
@@ -2912,7 +2863,7 @@ SELECT CAST(cluster AS BIGINT) AS cluster,
        CAST(COUNT(*) AS BIGINT) AS n_members,
        round(AVG(sil), 4) AS mean_silhouette,
        round(MIN(sil), 4) AS worst_silhouette
-FROM pt GROUP BY cluster ORDER BY cluster
+FROM pt GROUP BY cluster
 """
 
 
@@ -2982,5 +2933,4 @@ def embedding_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("sil"), 4).alias("mean_silhouette"),
             F.round(F.min("sil"), 4).alias("worst_silhouette"),
         )
-        .orderBy("cluster")
     )

@@ -48,7 +48,6 @@ SELECT o_orderstatus,
 FROM orders
 WHERE o_orderstatus IN ('F', 'O')
 GROUP BY o_orderstatus
-ORDER BY o_orderstatus
 """,
     tags=("sink", "partition"),
 )
@@ -80,7 +79,6 @@ def sink_roundtrip_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100.0
             ).alias("total_price"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -93,7 +91,6 @@ SELECT o_orderpriority,
          AS total_price
 FROM orders JOIN lineitem ON l_orderkey = o_orderkey
 GROUP BY o_orderpriority
-ORDER BY o_orderpriority
 """,
     tags=("sink", "bucket", "join"),
 )
@@ -134,7 +131,6 @@ def sink_roundtrip_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100.0
             ).alias("total_price"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -151,7 +147,6 @@ SELECT l_returnflag,
 FROM lineitem
 WHERE l_shipdate >= DATE '1995-01-01'
 GROUP BY l_returnflag
-ORDER BY l_returnflag
 """,
     tags=("sink", "orc", "format"),
 )
@@ -182,7 +177,6 @@ def sink_roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100.0
             ).alias("total_price"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -201,7 +195,6 @@ SELECT o_orderstatus,
        {_COMPACT_TARGET} AS files_compacted
 FROM orders
 GROUP BY o_orderstatus
-ORDER BY o_orderstatus
 """,
     tags=("sink", "maintenance", "compaction"),
 )
@@ -244,7 +237,6 @@ def maintenance_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFra
         )
         .withColumn("files_small", F.lit(_n_files(small)))
         .withColumn("files_compacted", F.lit(_n_files(compacted)))
-        .orderBy("o_orderstatus")
     )
 
 

@@ -39,7 +39,6 @@ WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase
      )
 SELECT purchase_id, user_id, purchase_ts, view_id, view_ts
 FROM j WHERE rn = 1
-ORDER BY purchase_id
 """,
     tags=("join", "asof", "events"),
 )
@@ -77,7 +76,6 @@ def asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("last_view.event_id").alias("view_id"),
             F.col("last_view.ts").alias("view_ts"),
         )
-        .orderBy("purchase_id")
     )
 
 
@@ -92,7 +90,6 @@ FROM p LEFT JOIN e
   ON p.user_id = e.user_id
  AND e.ts > p.ts AND e.ts <= p.ts + INTERVAL '1' HOUR
 GROUP BY p.event_id, p.user_id
-ORDER BY purchase_id
 """,
     tags=("join", "range", "events"),
 )
@@ -120,7 +117,6 @@ def range_join_errors_after_purchase(spark: SparkSession, sf_dir: str) -> DataFr
         p.join(e, cond, "left")
         .groupBy("purchase_id", F.col("p_user").alias("user_id"))
         .agg(F.count("e_ts").alias("errors_within_1h"))
-        .orderBy("purchase_id")
     )
 
 
@@ -165,7 +161,6 @@ smoothed AS (
 SELECT event_type, hour_ts, cents,
        CAST(num * 1000000 // den AS BIGINT) AS ewma_micro
 FROM smoothed
-ORDER BY event_type, hour_ts
 """,
     tags=("temporal", "window", "aggregate"),
 )
@@ -218,7 +213,6 @@ def events_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents",
             F.expr("num * 1000000 DIV den").cast("bigint").alias("ewma_micro"),
         )
-        .orderBy("event_type", "hour_ts")
     )
 
 
@@ -233,7 +227,6 @@ FROM p LEFT JOIN e
   ON p.user_id = e.user_id
  AND e.ts > p.ts AND e.ts <= p.ts + INTERVAL '1' HOUR
 GROUP BY p.event_id, p.user_id
-ORDER BY purchase_id
 """,
     tags=("join", "range", "events", "bucketed"),
 )
@@ -286,7 +279,6 @@ def range_join_bucketed_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "errors_within_1h"
             )
         )
-        .orderBy("purchase_id")
     )
 
 
@@ -318,7 +310,6 @@ WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase
 SELECT lag_bucket, CAST(COUNT(*) AS BIGINT) AS n_conversions
 FROM bucketed
 GROUP BY lag_bucket
-ORDER BY lag_bucket
 """,
     tags=("events", "asof", "aggregate", "analytics"),
 )
@@ -347,7 +338,6 @@ def events_conversion_lag_histogram(spark: SparkSession, sf_dir: str) -> DataFra
         out.select(bucket.alias("lag_bucket"))
         .groupBy("lag_bucket")
         .agg(F.count("*").cast("bigint").alias("n_conversions"))
-        .orderBy("lag_bucket")
     )
 
 
@@ -373,7 +363,6 @@ SELECT ship_month, round(revenue, 2) AS revenue,
        round((revenue - mu) / sigma, 3) AS z
 FROM w
 WHERE n_win = 6 AND sigma > 0
-ORDER BY ship_month
 """,
     tags=("window", "temporal", "anomaly"),
 )
@@ -418,5 +407,4 @@ def lineitem_rolling_revenue_zscore(spark: SparkSession, sf_dir: str) -> DataFra
             F.round("mu", 2).alias("trailing_mean"),
             F.round((F.col("revenue") - F.col("mu")) / F.col("sigma"), 3).alias("z"),
         )
-        .orderBy("ship_month")
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from parquet_query_spark.operators.catalog import ordered_once, query, views
+from parquet_query_spark.operators.catalog import query, views
 
 # token pattern: letter runs | digit runs | single non-space symbol (BPE-ish
 # pre-tokenization, cf. GPT-2's regex family)
@@ -43,7 +43,6 @@ SELECT doc_id,
              / len(string_split_regex(trim(text), '\\s+')), 4) AS avg_word_len,
        length(text) - length(replace(text, 'e', ''))           AS n_letter_e
 FROM documents
-ORDER BY doc_id
 """,
     tags=("text", "bench"),
 )
@@ -81,9 +80,6 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"), F.lit("")))
             ).alias("n_letter_e"),
         )
-        # ordered_once: the sort's range-sampling pass would re-run every
-        # regex over every document a second time (r13)
-        .transform(lambda df: ordered_once(df, "doc_id"))
     )
 
 
@@ -105,7 +101,6 @@ SELECT doc_id, lang AS labeled_lang,
             ELSE 'fr' END AS predicted_lang,
        score_en, score_es, score_de, score_fr
 FROM scored
-ORDER BY doc_id
 """
 
 
@@ -147,7 +142,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score_es",
         "score_de",
         "score_fr",
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -168,7 +163,6 @@ SELECT doc_id, n_chars, n_words,
        CASE WHEN n_words >= 20 AND CAST(n_punct AS DOUBLE) / n_chars < 0.1
             THEN 1 ELSE 0 END                                  AS passes_filter
 FROM m
-ORDER BY doc_id
 """,
     tags=("text", "bench"),
 )
@@ -204,8 +198,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
         .alias("passes_filter"),
-        # ordered_once: don't pay the regex chain twice for range sampling
-    ).transform(lambda df: ordered_once(df, "doc_id"))
+    )
 
 
 @query(
@@ -215,7 +208,6 @@ SELECT doc_id,
        md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS norm_fingerprint,
        md5(text)                                                AS raw_fingerprint
 FROM documents
-ORDER BY doc_id
 """,
     tags=("text", "dedup"),
 )
@@ -231,7 +223,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(norm).alias("norm_fingerprint"),
             F.md5(F.col("text")).alias("raw_fingerprint"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -327,7 +318,6 @@ SELECT doc_id,
        round(MAX(CASE WHEN k = 5 THEN CAST(n_grams - n_distinct AS DOUBLE) / n_grams END), 4) AS dup_5gram_frac
 FROM per_doc
 GROUP BY doc_id
-ORDER BY doc_id
 """,
     tags=("text", "pipeline"),
 )
@@ -384,7 +374,6 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(pick(5, top_frac), 4).alias("top_5gram_frac"),
             F.round(pick(5, dup_frac), 4).alias("dup_5gram_frac"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -405,7 +394,6 @@ SELECT doc_id,
        len(list_slice(toks, chunk_no * 24 + 1, chunk_no * 24 + 32))::INTEGER AS n_chunk_tokens,
        md5(array_to_string(list_slice(toks, chunk_no * 24 + 1, chunk_no * 24 + 32), ' ')) AS chunk_hash
 FROM k
-ORDER BY doc_id, chunk_no
 """,
     tags=("text", "pipeline"),
 )
@@ -415,7 +403,7 @@ def text_chunk_for_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     content hash.
 
     The 1→N explode runs scan-side from builtin array expressions (no
-    Python, no shuffle until the presentation sort), which is what lets a
+    Python, no shuffle), which is what lets a
     100 TB corpus chunk at scan speed; a tokenizer UDF slots in where the
     whitespace split is."""
     v = views(spark, sf_dir)
@@ -437,7 +425,6 @@ def text_chunk_for_training(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(piece).alias("n_chunk_tokens"),
             F.md5(F.concat_ws(" ", piece)).alias("chunk_hash"),
         )
-        .orderBy("doc_id", "chunk_no")
     )
 
 
@@ -462,7 +449,6 @@ SELECT t.doc_id,
        END AS quality_bucket
 FROM toks t JOIN model m ON t.tok = m.tok CROSS JOIN total
 GROUP BY t.doc_id
-ORDER BY t.doc_id
 """,
     tags=("text", "pipeline", "quality"),
 )
@@ -503,7 +489,6 @@ def text_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise("high_entropy")
             .alias("quality_bucket"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -525,7 +510,6 @@ SELECT doc_id,
               OR len(regexp_extract_all(text, '{_PII_LONGNUM}')) > 0
             THEN 1 ELSE 0 END AS was_redacted
 FROM documents
-ORDER BY doc_id
 """,
     tags=("text", "pipeline"),
 )
@@ -535,7 +519,7 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     text so downstream stages can verify they consumed the scrubbed copy.
 
     Scale shape: pure per-row regexp expressions inside whole-stage codegen
-    — zero shuffles except the presentation sort; sweeps 100 TB at scan
+    — zero shuffles; sweeps 100 TB at scan
     speed.  Patterns are restricted to the RE2∩Java common subset so the
     DuckDB oracle is exact."""
     v = views(spark, sf_dir)
@@ -555,7 +539,6 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(redacted).alias("redacted_hash"),
             F.when((n_emails > 0) | (n_longnums > 0), 1).otherwise(0).alias("was_redacted"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -631,7 +614,6 @@ SELECT lang,
        round(CAST(SUM(n_non_ascii) AS DOUBLE) / SUM(n_chars), 6) AS non_ascii_ratio
 FROM per_doc
 GROUP BY lang
-ORDER BY lang
 """,
     tags=("text", "pipeline"),
 )
@@ -675,7 +657,6 @@ def text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_non_ascii").cast("double") / F.sum("n_chars"), 6
             ).alias("non_ascii_ratio"),
         )
-        .orderBy("lang")
     )
 
 
@@ -707,7 +688,6 @@ FROM bigr b
 JOIN bmodel m ON b.bg = m.bg
 JOIN umodel u ON u.tok = m.w1
 GROUP BY b.doc_id
-ORDER BY b.doc_id
 """,
     tags=("text", "pipeline", "quality"),
 )
@@ -759,7 +739,6 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise("surprising")
             .alias("quality_bucket"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -929,7 +908,6 @@ SELECT doc_id, n_words, n_sents, n_syll,
          ELSE 'hard'
        END AS band
 FROM m
-ORDER BY doc_id
 """,
     tags=("text", "quality"),
 )
@@ -942,7 +920,7 @@ def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines always bucket identically.
 
     Scale shape: three regexp counts + arithmetic, all scan-side codegen;
-    zero shuffles besides the presentation sort."""
+    zero shuffles."""
     v = views(spark, sf_dir)
     n_words = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
     n_sents = F.greatest(
@@ -979,7 +957,7 @@ def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(flesch >= 30, "medium")
         .otherwise("hard")
         .alias("band"),
-    ).orderBy("doc_id")
+    )
 
 
 def _lang_confusion_oracle() -> str:
@@ -1007,7 +985,6 @@ SELECT labeled_lang, predicted_lang,
          AS n_agree
 FROM pred
 GROUP BY labeled_lang, predicted_lang
-ORDER BY labeled_lang, predicted_lang
 """
 
 
@@ -1060,7 +1037,6 @@ def text_language_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_agree"),
         )
-        .orderBy("labeled_lang", "predicted_lang")
     )
 
 
@@ -1092,7 +1068,6 @@ toktot AS (
 )
 SELECT v.cp AS checkpoint, v.cutoff AS max_doc_id, t.tokens_total, v.vocab_size
 FROM vocab v JOIN toktot t ON t.cp = v.cp
-ORDER BY checkpoint
 """
 
 
@@ -1149,7 +1124,6 @@ def text_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tokens_total",
             "vocab_size",
         )
-        .orderBy("checkpoint")
     )
 
 
@@ -1172,7 +1146,6 @@ SELECT i.src_a, i.src_b, i.n_shared,
 FROM inter i
 JOIN vocab va ON va.source = i.src_a
 JOIN vocab vb ON vb.source = i.src_b
-ORDER BY src_a, src_b
 """,
     tags=("text", "dedup", "aggregate", "analytics"),
 )
@@ -1224,7 +1197,6 @@ def text_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("jaccard_bp"),
         )
-        .orderBy("src_a", "src_b")
     )
 
 
@@ -1247,7 +1219,6 @@ SELECT source,
                      THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS residue_bp
 FROM documents
 GROUP BY source
-ORDER BY source
 """,
     tags=("text", "qa", "quality"),
 )
@@ -1281,7 +1252,6 @@ def text_markup_residue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("residue_bp"),
         )
-        .orderBy("source")
     )
 
 
@@ -1298,7 +1268,6 @@ SELECT source,
          AS allcaps_bp
 FROM documents
 GROUP BY source
-ORDER BY source
 """,
     tags=("text", "qa", "quality"),
 )
@@ -1332,7 +1301,6 @@ def text_case_style_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("allcaps_bp"),
         )
-        .orderBy("source")
     )
 
 
@@ -1356,7 +1324,6 @@ SELECT doc_id, n_distinct,
        round(ln(CAST(total AS DOUBLE)) - clogc / total, 4) AS trigram_entropy_nats
 FROM d
 WHERE total > 0
-ORDER BY doc_id
 """,
     tags=("text", "quality"),
 )
@@ -1401,7 +1368,6 @@ def text_char_trigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("trigram_entropy_nats"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1441,7 +1407,6 @@ SELECT ingest_decile,
        CAST(SUM(n_novel) * 10000 // SUM(n_shingles) AS BIGINT) AS novelty_bp
 FROM decile
 GROUP BY ingest_decile
-ORDER BY ingest_decile
 """,
     tags=("text", "dedup", "quality"),
 )
@@ -1495,7 +1460,6 @@ def text_ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("novelty_bp"),
         )
-        .orderBy("ingest_decile")
     )
 
 
@@ -1515,7 +1479,6 @@ SELECT source,
          AS dominant_lang
 FROM cell
 GROUP BY source
-ORDER BY source
 """,
     tags=("text", "aggregate", "quality"),
 )
@@ -1550,7 +1513,6 @@ def text_lang_mix_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFra
                 "max_by(lang, concat_ws('|', lpad(CAST(c AS STRING), 12, '0'), lang))"
             ).alias("dominant_lang"),
         )
-        .orderBy("source")
     )
 
 
@@ -1574,7 +1536,6 @@ SELECT doc_id, source,
               OR n_indented_lines * 10 >= n_lines * 3
             THEN 1 ELSE 0 END AS looks_like_code
 FROM m
-ORDER BY doc_id
 """,
     tags=("text", "quality"),
 )
@@ -1585,8 +1546,7 @@ def text_code_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a prose corpus (or into a code corpus) before training.  Exact
     integer basis points keep the flag cross-engine deterministic.
 
-    Scale shape: pure scan-side counting, zero shuffles beyond the
-    presentation sort."""
+    Scale shape: pure scan-side counting, zero shuffles."""
     v = views(spark, sf_dir)
     n_codechars = F.length(
         F.regexp_replace(F.col("text"), r"[^{}();\[\]=<>]+", "")
@@ -1616,7 +1576,6 @@ def text_code_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .alias("looks_like_code"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1659,7 +1618,6 @@ SELECT source,
        round(0.5 * kl_p + 0.5 * (kl_q_seen + (1 - q_seen) * ln(2.0)), 4)
          AS js_divergence_nats
 FROM parts
-ORDER BY source
 """,
     tags=("text", "quality", "aggregate"),
 )
@@ -1726,7 +1684,6 @@ def text_js_divergence_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("js_divergence_nats"),
         )
-        .orderBy("source")
     )
 
 
@@ -1741,7 +1698,6 @@ SELECT doc_id,
        len(regexp_extract_all(text, '\b[a-z]{5,}\b')) AS long_words,
        len(string_split_regex(text, '\s+')) AS n_tokens
 FROM (SELECT doc_id, substr(text, 1, 80) AS text FROM documents)
-ORDER BY doc_id
 """,
     tags=("scalar",),
 )
@@ -1764,7 +1720,6 @@ def scalar_regex_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_count("text", F.lit(r"\b[a-z]{5,}\b")).alias("long_words"),
             F.size(F.split("text", r"\s+")).alias("n_tokens"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1792,7 +1747,6 @@ SELECT source, count(*)::BIGINT AS n_docs,
                           + f_brace + f_lorem = 0 THEN 1.0 ELSE 0.0 END), 4) AS pass_rate
 FROM scored
 GROUP BY source
-ORDER BY source
 """,
     tags=("text", "pipeline"),
 )
@@ -1830,7 +1784,6 @@ def text_c4_quality_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "pass_rate"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -1855,7 +1808,6 @@ SELECT CAST(rnk AS INTEGER) AS top_n,
        CAST(total AS BIGINT) AS total_tokens
 FROM cum, totals
 WHERE rnk IN (10, 100, 1000)
-ORDER BY rnk
 """,
     tags=("text", "pipeline"),
 )
@@ -1890,7 +1842,6 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vocab").alias("vocab_size"),
             F.col("total").cast("bigint").alias("total_tokens"),
         )
-        .orderBy("top_n")
     )
 
 
@@ -1933,7 +1884,6 @@ SELECT source, CAST(k AS BIGINT) AS n_terms,
              / (CAST(1e9 * k * sx2 - sx * sx AS DOUBLE)
                 * CAST(1e9 * k * sy2 - sy * sy AS DOUBLE)), 6) AS zipf_r2
 FROM sums
-ORDER BY source
 """,
     tags=("text", "pipeline"),
 )
@@ -2007,7 +1957,7 @@ def text_zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("k").cast("bigint").alias("n_terms"),
         F.round(-num / den_x, 6).alias("zipf_slope"),
         F.round(num * num / (den_x * den_y), 6).alias("zipf_r2"),
-    ).orderBy("source")
+    )
 
 
 @query(
@@ -2024,7 +1974,7 @@ SELECT source, CAST(band AS BIGINT) AS band,
        CAST(MIN(n_chars) AS BIGINT) AS min_chars,
        CAST(MAX(n_chars) AS BIGINT) AS max_chars,
        round(AVG(CAST(toks AS DOUBLE)), 2) AS avg_tokens
-FROM banded GROUP BY source, band ORDER BY source, band
+FROM banded GROUP BY source, band
 """,
     tags=("text", "profile"),
 )
@@ -2059,7 +2009,6 @@ def docs_length_band_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_chars").cast("bigint").alias("max_chars"),
             F.round(F.avg(F.col("toks").cast("double")), 2).alias("avg_tokens"),
         )
-        .orderBy("source", "band")
     )
 
 

@@ -39,7 +39,6 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
 """,
     tags=("aggregate", "bench"),
 )
@@ -60,7 +59,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -114,7 +112,6 @@ WHERE r_name = 'ASIA'
   AND o_orderdate >= TIMESTAMP '1996-01-01'
   AND o_orderdate <  TIMESTAMP '1997-01-01'
 GROUP BY n_name
-ORDER BY revenue DESC, n_name
 """,
     tags=("join", "aggregate", "bench"),
 )
@@ -152,7 +149,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("n_name")
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), "n_name")
     )
 
 
@@ -233,7 +229,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT l_orderkey, l_linenumber, round(l_extendedprice, 2) AS price
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '2001-10-01' AND l_quantity > 45
-ORDER BY l_orderkey, l_linenumber
 """,
     tags=("pushdown",),
 )
@@ -248,7 +243,6 @@ def pushdown_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") > 45)
         )
         .select("l_orderkey", "l_linenumber", F.round("l_extendedprice", 2).alias("price"))
-        .orderBy("l_orderkey", "l_linenumber")
     )
 
 
@@ -261,7 +255,6 @@ WHERE o.o_orderdate >= DATE '1996-01-01' AND o.o_orderdate < DATE '1996-07-01'
   AND EXISTS (SELECT 1 FROM lineitem l
               WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
 GROUP BY o_orderpriority
-ORDER BY o_orderpriority
 """,
     tags=("subquery", "join"),
 )
@@ -280,7 +273,6 @@ def q4_priority_with_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(returned, o["o_orderkey"] == returned["l_orderkey"], "left_semi")
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -294,7 +286,6 @@ SELECT CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 'high' ELSE 'low
             AS BIGINT) AS late_lines
 FROM orders JOIN lineitem ON l_orderkey = o_orderkey
 GROUP BY 1
-ORDER BY 1
 """,
     tags=("join", "aggregate"),
 )
@@ -314,7 +305,6 @@ def q12_late_shipments_by_priority(spark: SparkSession, sf_dir: str) -> DataFram
             F.count("*").alias("n_lines"),
             F.sum(F.when(late, 1).otherwise(0)).alias("late_lines"),
         )
-        .orderBy("priority_class")
     )
 
 
@@ -444,7 +434,6 @@ FROM (
       OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
     AND l_shipdate BETWEEN DATE '1996-01-01' AND DATE '1997-12-31'
 ) GROUP BY supp_nation, cust_nation, l_year
-ORDER BY supp_nation, cust_nation, l_year
 """,
     tags=("join", "aggregate"),
 )
@@ -480,7 +469,6 @@ def q7_volume_shipping_nation_pairs(spark: SparkSession, sf_dir: str) -> DataFra
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue")
         )
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -505,7 +493,6 @@ FROM (
   WHERE r_name = 'EUROPE' AND p_type = 'PROMO'
     AND o_orderdate BETWEEN DATE '1996-01-01' AND DATE '1997-12-31'
 ) GROUP BY o_year
-ORDER BY o_year
 """,
     tags=("join", "aggregate"),
 )
@@ -543,7 +530,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("mkt_share")
         )
-        .orderBy("o_year")
     )
 
 
@@ -591,7 +577,6 @@ WHERE c.c_acctbal > (
   AND NOT EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
 GROUP BY c_mktsegment
-ORDER BY c_mktsegment
 """,
     tags=("join", "subquery", "aggregate"),
 )
@@ -608,7 +593,6 @@ def q22_dormant_high_balance_customers(spark: SparkSession, sf_dir: str) -> Data
           AND NOT EXISTS (SELECT 1 FROM {orders} o
                   WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
         GROUP BY c_mktsegment
-        ORDER BY c_mktsegment
         """,
         **views(spark, sf_dir),
     )

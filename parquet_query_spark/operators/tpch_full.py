@@ -133,7 +133,6 @@ JOIN orders   ON o_orderkey = l_orderkey
 JOIN nation   ON s_nationkey = n_nationkey
 WHERE p_name LIKE '%red%'
 GROUP BY nation_name, o_year
-ORDER BY nation_name, o_year DESC
 """,
     tags=("join", "aggregate"),
 )
@@ -165,7 +164,6 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").alias("o_year"),
         )
         .agg(F.round(F.sum(profit), 2).alias("sum_profit"))
-        .orderBy("nation_name", F.desc("o_year"))
     )
 
 
@@ -185,7 +183,6 @@ WITH supval AS (
 SELECT partkey, round(value_cents / 100.0, 2) AS part_value
 FROM supval
 WHERE value_cents * 1000 > (SELECT CAST(SUM(value_cents) AS BIGINT) FROM supval)
-ORDER BY part_value DESC, partkey
 """,
     tags=("aggregate", "subquery"),
 )
@@ -217,7 +214,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         supval.crossJoin(F.broadcast(total))
         .where(F.col("value_cents") * 1000 > F.col("total_cents"))
         .select("partkey", F.round(F.col("value_cents") / 100.0, 2).alias("part_value"))
-        .orderBy(F.desc("part_value"), "partkey")
     )
 
 
@@ -232,7 +228,6 @@ FROM (
   GROUP BY c_custkey
 ) c_orders
 GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
 """,
     tags=("join", "aggregate"),
 )
@@ -255,7 +250,6 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     return (
         per_cust.groupBy("c_count")
         .agg(F.count("*").alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -275,7 +269,6 @@ SELECT s_suppkey, s_name,
 FROM supplier
 JOIN revenue ON s_suppkey = supplier_no
 WHERE total_revenue_cents = (SELECT MAX(total_revenue_cents) FROM revenue)
-ORDER BY s_suppkey
 """,
     tags=("aggregate", "subquery", "cte"),
 )
@@ -309,7 +302,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             F.round(F.col("total_revenue_cents") / 100.0, 2).alias("total_revenue"),
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -325,7 +317,6 @@ WHERE p_brand <> 'Brand#5'
   AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
   AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
 GROUP BY p_brand, p_type, p_size
-ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 """,
     tags=("join", "aggregate", "subquery"),
 )
@@ -351,7 +342,6 @@ def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
 
@@ -379,7 +369,6 @@ WHERE n_name = 'NATION_3'
     JOIN part_total USING (partkey)
     JOIN part ON p_partkey = partkey
     WHERE p_name LIKE '%bolt%' AND sup_qty * 2 > total_qty)
-ORDER BY s_suppkey
 """,
     tags=("join", "subquery", "aggregate"),
 )
@@ -419,10 +408,7 @@ def q20_dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("n_name") == "NATION_3")
         .select("s_suppkey", "s_name")
     )
-    return (
-        nat_sup.join(dominant, nat_sup.s_suppkey == dominant.suppkey, "left_semi")
-        .orderBy("s_suppkey")
-    )
+    return nat_sup.join(dominant, nat_sup.s_suppkey == dominant.suppkey, "left_semi")
 
 
 @query(

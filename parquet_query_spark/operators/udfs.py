@@ -29,7 +29,6 @@ def token_count_udf(text: pd.Series) -> pd.Series:
     oracle="""
 SELECT doc_id, len(regexp_extract_all(text, '[A-Za-z0-9]+')) AS n_tok
 FROM documents
-ORDER BY doc_id
 """,
     tags=("udf", "text"),
 )
@@ -40,7 +39,7 @@ def udf_registered_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     faster; the point is the extension surface.)"""
     spark.udf.register("token_count", token_count_udf)
     return spark.sql(
-        "SELECT doc_id, token_count(text) AS n_tok FROM {documents} ORDER BY doc_id",
+        "SELECT doc_id, token_count(text) AS n_tok FROM {documents}",
         **views(spark, sf_dir),
     )
 
@@ -77,7 +76,6 @@ SELECT event_id, event_type,
        round((value - AVG(value) OVER (PARTITION BY event_type))
              / stddev_samp(value) OVER (PARTITION BY event_type), 4) AS zscore
 FROM events
-ORDER BY event_id
 """,
     tags=("udf", "events"),
 )
@@ -95,5 +93,4 @@ def udf_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "event_type", "value")
         .groupBy("event_type")
         .applyInPandas(_zscore_group, _Z_SCHEMA)
-        .orderBy("event_id")
     )

@@ -2,8 +2,9 @@
 
 The reference's only sink is a driver-streamed CSV download
 (``/root/reference/src/arrow.ts:47-88``); the workbench layer ports that
-byte-for-byte (``workbench/csv_sink.py``).  This module is the *engine*
-sink surface:
+byte-for-byte (``workbench/csv_sink.py``), which also holds the one
+distributed CSV writer, ``write_csv_distributed``.  This module is the
+*engine* sink surface:
 
 * **Partitioned parquet** — `partitionBy(cols)` hive-style layout so later
   scans prune whole directories (PartitionFilters, not data filters).  The
@@ -43,12 +44,6 @@ def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Distributed ndjson sink (one JSON object per line — the same format
     the reader side ingests)."""
     df.write.mode(mode).json(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
-    """Distributed CSV sink (scale path; byte-parity single-file export
-    lives in workbench/csv_sink.py)."""
-    df.write.mode(mode).option("header", header).csv(path)
 
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:

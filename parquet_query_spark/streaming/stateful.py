@@ -56,7 +56,6 @@ def _track_user_totals(key, pdf_iter, state: GroupState):
 SELECT user_id, COUNT(*) AS n_events, round(SUM(value), 2) AS total_value
 FROM events
 GROUP BY user_id
-ORDER BY user_id
 """,
     tags=("streaming", "stateful", "pandas-udf"),
 )
@@ -88,7 +87,6 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
         emitted.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("user_id", "n_events", "total_value")
-        .orderBy("user_id")
     )
 
 
@@ -98,7 +96,6 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
 SELECT event_type, COUNT(*) AS n
 FROM events
 GROUP BY event_type
-ORDER BY event_type
 """,
     tags=("streaming", "sink"),
 )
@@ -113,7 +110,7 @@ def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n")
     )
     name = _run_to_table(counts, "feb")
-    return spark.table(name).orderBy("event_type")
+    return spark.table(name)
 
 
 _EWMA_TAPS = 16
@@ -332,7 +329,6 @@ def streaming_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("event_type", "hour_ts", "cents", "ewma_micro")
-        .orderBy("event_type", "hour_ts")
     )
 
 
@@ -488,7 +484,6 @@ def streaming_bot_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("user_id", "n_gaps", "mean_gap_s", "metronomic")
-        .orderBy("user_id")
     )
 
 

@@ -211,7 +211,6 @@ SELECT date_trunc('hour', ts) AS window_start, event_type,
        COUNT(*) AS n, round(SUM(value), 2) AS total_value
 FROM events
 GROUP BY window_start, event_type
-ORDER BY window_start, event_type
 """,
     tags=("streaming", "window"),
 )
@@ -234,7 +233,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = _run_to_table(agg, "tumbling")
-    return spark.table(name).orderBy("window_start", "event_type")
+    return spark.table(name)
 
 
 @query(
@@ -243,7 +242,6 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT event_type, COUNT(DISTINCT event_id) AS n_unique
 FROM events
 GROUP BY event_type
-ORDER BY event_type
 """,
     tags=("streaming", "dedup"),
 )
@@ -260,7 +258,7 @@ def streaming_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_unique"))
     )
     name = _run_to_table(deduped, "dedup")
-    return spark.table(name).orderBy("event_type")
+    return spark.table(name)
 
 
 @query(
@@ -283,7 +281,6 @@ sess AS (
 SELECT user_id, COUNT(DISTINCT session_id) AS n_sessions, COUNT(*) AS n_events
 FROM sess
 GROUP BY user_id
-ORDER BY user_id
 """,
     tags=("streaming", "session"),
 )
@@ -310,7 +307,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_sessions"),
             F.sum("n_events").alias("n_events"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -322,7 +318,6 @@ SELECT c.c_mktsegment AS segment, e.event_type,
 FROM events e
 JOIN customer c ON e.user_id = c.c_custkey
 GROUP BY segment, e.event_type
-ORDER BY segment, e.event_type
 """,
     tags=("streaming", "join"),
 )
@@ -344,7 +339,7 @@ def streaming_static_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
     )
     name = _run_to_table(agg, "stream_enrich")
-    return spark.table(name).orderBy("segment", "event_type")
+    return spark.table(name)
 
 
 @query(
@@ -357,7 +352,6 @@ FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase') p
 JOIN (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view') v
   ON p.user_id = v.user_id
  AND v.ts >= p.ts - INTERVAL '2' HOUR AND v.ts < p.ts
-ORDER BY purchase_id, view_id
 """,
     tags=("streaming", "join"),
 )
@@ -402,7 +396,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("gap_us"),
     )
     name = _run_to_table(joined, "ss_join", mode="append")
-    return spark.table(name).orderBy("purchase_id", "view_id")
+    return spark.table(name)
 
 
 @query(
@@ -410,7 +404,6 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
 SELECT DISTINCT md5(text) AS text_hash
 FROM documents
-ORDER BY text_hash
 """,
     tags=("streaming", "dedup", "pipeline"),
 )
@@ -429,7 +422,7 @@ def streaming_corpus_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         ["text_hash"]
     )
     name = _run_to_table(deduped, "ingest_dedup", mode="append")
-    return spark.table(name).orderBy("text_hash")
+    return spark.table(name)
 
 
 @query(
@@ -447,7 +440,6 @@ SELECT event_type,
        CAST(SUM(CAST(ROUND(value * 10000) AS BIGINT)) AS BIGINT) AS volume_e4
 FROM events
 GROUP BY 1, 2
-ORDER BY event_type, bar_hour
 """,
     tags=("streaming", "window", "aggregate"),
 )
@@ -487,7 +479,7 @@ def streaming_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = _run_to_table(agg, "ohlc")
-    return spark.table(name).orderBy("event_type", "bar_hour")
+    return spark.table(name)
 
 
 @query(
@@ -519,7 +511,6 @@ SELECT s.source,
 FROM sh s LEFT JOIN dirty d ON s.doc_id = d.doc_id
 WHERE s.doc_id >= 20
 GROUP BY s.source
-ORDER BY s.source
 """,
     tags=("streaming", "dedup", "decontamination"),
 )
@@ -582,5 +573,4 @@ def streaming_ingest_decontaminate(spark: SparkSession, sf_dir: str) -> DataFram
             .cast("bigint")
             .alias("n_rejected"),
         )
-        .orderBy("source")
     )

@@ -5,7 +5,9 @@ For every registered operator, build its DataFrame at
 $SPARK_GRAFT_AUDIT_SF_DIR (default sf0.001) and record the plan-shape
 metrics the 100 TB design contract cares about: hash-shuffle count,
 broadcast joins, sort-merge joins, whole-stage-codegen spans, Arrow
-Python stages, TakeOrdered usage.  The result is a table the review can
+Python stages, TakeOrdered usage, and range sorts (a ``rangepartitioning``
+exchange: a global sort, which the catalog's order rule allows only in
+the ``template`` operators).  The result is a table the review can
 scan for anti-patterns (a cartesian product, an unexpected sort-merge
 join, a shuffle where none should exist) without re-deriving 200 plans
 by hand.
@@ -34,7 +36,7 @@ def main() -> None:
         try:
             plan = physical_plan(spec.fn(spark, SF_DIR))
         except Exception as e:  # noqa: BLE001 — audit must cover the rest
-            rows.append((name, "ERROR", str(e).splitlines()[0][:60], "", "", "", ""))
+            rows.append((name, "ERROR", str(e).splitlines()[0][:60], "", "", "", "", ""))
             continue
         rows.append(
             (
@@ -47,6 +49,7 @@ def main() -> None:
                 + plan.count("ArrowEvalPython")
                 + plan.count("FlatMapGroupsInPandas"),
                 "yes" if "TakeOrderedAndProject" in plan else "",
+                plan.count("rangepartitioning"),
             )
         )
     with open("PLAN_AUDIT.md", "w") as f:
@@ -56,12 +59,13 @@ def main() -> None:
             "(plan construction only — streaming operators and eager\n"
             "driver-side operators execute their bounded collect step).\n\n"
             "| operator | hash shuffles | broadcast joins | sort-merge joins "
-            "| codegen spans | arrow py stages | top-k |\n"
-            "|---|---|---|---|---|---|---|\n"
+            "| codegen spans | arrow py stages | top-k | range sorts |\n"
+            "|---|---|---|---|---|---|---|---|\n"
         )
         for r in rows:
             f.write("| " + " | ".join(str(x) for x in r) + " |\n")
         n_ok = sum(1 for r in rows if r[1] != "ERROR")
+        ranged = sorted(r[0] for r in rows if r[1] != "ERROR" and r[7])
         # Staleness gate: the audit must cover the FULL catalog; a partial
         # run must never overwrite the file looking complete.
         assert len(rows) == len(catalog), (
@@ -73,7 +77,8 @@ def main() -> None:
             "(pair/edge/merge joins) and full-outer merges of small "
             "aggregates (full outer cannot broadcast); zero "
             "CartesianProduct nodes anywhere (the kNN query-set cross "
-            "join broadcasts).\n"
+            "join broadcasts); range sorts appear only in "
+            f"{', '.join(ranged) or 'no operator'}.\n"
         )
     print(f"wrote PLAN_AUDIT.md ({len(rows)} operators)")
 

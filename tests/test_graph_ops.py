@@ -10,7 +10,7 @@ SF = "/root/testdata/sf0.01"
 
 
 def test_kcore_trace_monotone(spark, sf_dir):
-    rows = neardup_kcore(spark, sf_dir).collect()
+    rows = sorted(neardup_kcore(spark, sf_dir).collect(), key=lambda r: r["round"])
     assert [r["round"] for r in rows] == list(range(6))
     for a, b in zip(rows, rows[1:]):
         assert b["n_nodes"] <= a["n_nodes"]

@@ -19,10 +19,9 @@ Spark query:
    declares integral may come back floating (catches e.g. NULL-induced
    int→float64 promotion, the other way pandas degrades integers).
 
-Plus one Spark-side sweep: each catalog query's *declared* schema (lazy,
-no execution) must not contain a column the oracle types as
-DOUBLE/FLOAT while Spark declares it integral — the driver canonicalizes
-``3`` vs ``3.0`` differently, so such a pair can never hash-match.
+The Spark-side dtype check (a column one engine declares integral and
+the other floating) runs in ``tests/test_oracle_parity.py`` on the
+DataFrame that test already builds, so no operator is built here.
 """
 
 import functools
@@ -42,7 +41,6 @@ _DUCK_INTEGRAL = {
     "TINYINT", "SMALLINT", "INTEGER", "BIGINT",
     "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT",
 }
-_SPARK_INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
 
 @pytest.fixture(scope="module")
@@ -105,32 +103,3 @@ def test_oracle_df_keeps_integers_integral(con, described, name):
         f"integer rendering"
     )
 
-
-def test_spark_integral_columns_not_float_in_oracle(spark, described):
-    """Cross-engine dtype sweep: for every oracled query, a column Spark
-    declares integral must not be declared floating by DuckDB (and vice
-    versa a float column must not be integral) — ``3`` vs ``3.0``
-    canonicalize differently, so these pairs can never hash-match.
-
-    Spark schemas come from the lazy plan (no job for most queries);
-    operators that materialize driver-side state (codebooks, centroids)
-    run tiny sf0.001 jobs.
-    """
-    mismatches = {}
-    for name in ORACLED:
-        spec = CATALOG[name]
-        try:
-            s_types = {f.name: f.dataType.simpleString() for f in spec.fn(spark, SF_DIR).schema.fields}
-        except Exception as e:  # pragma: no cover - surfaced as a failure
-            mismatches[name] = f"schema build failed: {e}"
-            continue
-        d_types = described(name)
-        for c, st in s_types.items():
-            dt = d_types.get(c, "").upper()
-            if not dt:
-                continue
-            if st in _SPARK_INTEGRAL and dt in ("DOUBLE", "FLOAT", "REAL"):
-                mismatches[f"{name}.{c}"] = f"spark {st} vs duckdb {dt}"
-            if st in ("double", "float") and dt in _DUCK_INTEGRAL:
-                mismatches[f"{name}.{c}"] = f"spark {st} vs duckdb {dt}"
-    assert not mismatches, f"cross-engine integral/float dtype conflicts: {mismatches}"

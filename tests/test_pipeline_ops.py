@@ -9,7 +9,7 @@ SF = "/root/testdata/sf0.01"
 
 
 def test_funnel_monotone_and_bounded(catalog, spark, sf_dir):
-    rows = catalog["pipeline_funnel_report"].fn(spark, sf_dir).collect()
+    rows = sorted(catalog["pipeline_funnel_report"].fn(spark, sf_dir).collect(), key=lambda r: r["stage_no"])
     assert [r["stage"] for r in rows] == ["raw", "lang_en", "quality", "exact_dedup"]
     for a, b in zip(rows, rows[1:]):
         assert b["n_docs"] <= a["n_docs"]
@@ -27,7 +27,7 @@ def test_token_budget_shares_sum_to_one(catalog, spark):
 
 
 def test_curriculum_deciles_partition_corpus(catalog, spark):
-    rows = catalog["pipeline_curriculum_order"].fn(spark, SF).collect()
+    rows = sorted(catalog["pipeline_curriculum_order"].fn(spark, SF).collect(), key=lambda r: r.decile)
     assert [r.decile for r in rows] == list(range(1, 11))
     assert sum(r.n_docs for r in rows) == 500
     # quality ordering: decile 1 has the highest scores

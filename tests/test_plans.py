@@ -49,8 +49,8 @@ def test_topk_uses_take_ordered(spark):
 def test_sessionize_single_shuffle_for_user(spark):
     plan = physical_plan(CATALOG["events_sessionize"].fn(spark, SF))
     # windows + groupBy all partition by user_id: two lag/cumsum windows and
-    # the session aggregation must NOT each add an Exchange; allow the one
-    # hashpartitioning(user_id) plus the final orderBy's rangepartitioning
+    # the session aggregation must NOT each add an Exchange; allow only the
+    # one hashpartitioning(user_id)
     hash_exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
     assert hash_exchanges == 1, plan
 
@@ -62,12 +62,10 @@ def test_semi_join_is_semi(spark):
 
 def test_minhash_signatures_single_compute_pass(spark):
     plan = physical_plan(CATALOG["dedup_minhash_signatures"].fn(spark, SF))
-    # signature computation is scan-side; the ONE hash exchange is the
-    # ordered_once barrier on doc_id (r13): it materializes the slim
-    # signature rows so the presentation sort's range-sampling job reads
-    # them instead of re-running the shingle→md5→minhash chain
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert re.search(r"Exchange hashpartitioning\(doc_id", plan), plan
+    # signature computation is scan-side and the output is unsorted: no
+    # exchange of any kind, so the shingle→md5→minhash chain runs once
+    assert plan.count("Exchange hashpartitioning") == 0, plan
+    assert "rangepartitioning" not in plan, plan
 
 
 def test_minhash_candidates_band_join_slim(spark):
@@ -163,8 +161,7 @@ def test_quantize_single_range_shuffle(spark):
 
 
 def test_chunking_is_scan_side(spark):
-    # the 1->N chunk explode must not shuffle: zero hash exchanges (the only
-    # exchange is the presentation orderBy's range partitioning)
+    # the 1->N chunk explode must not shuffle: zero hash exchanges
     plan = physical_plan(CATALOG["text_chunk_for_training"].fn(spark, SF))
     assert plan.count("Exchange hashpartitioning") == 0, plan
 
@@ -172,7 +169,7 @@ def test_chunking_is_scan_side(spark):
 def test_kmeans_assignment_is_scan_side(spark):
     # final assignment embeds the K collected centroids as literal arrays,
     # so the plan is a single corpus scan + per-row argmin: no join of any
-    # kind and no hash shuffle (the one Exchange is the presentation sort)
+    # kind and no hash shuffle
     plan = physical_plan(CATALOG["kmeans_embeddings"].fn(spark, SF))
     assert "Join" not in plan, plan
     assert "Exchange hashpartitioning" not in plan, plan
@@ -191,9 +188,9 @@ def test_common_spans_shuffles_hashes_not_text(spark):
 
 def test_pack_sequences_single_window_shuffle(spark):
     # placement window and per-bin rollup both key on lang: one hash
-    # exchange total (plus the presentation sort's range partitioning)
+    # exchange total
     plan = physical_plan(CATALOG["pipeline_pack_sequences"].fn(spark, SF))
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 2
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
 
 
 def test_vocab_top_pairs_uses_takeordered(spark):
@@ -217,18 +214,16 @@ def test_unigram_lm_model_join_broadcasts(spark):
 
 
 def test_pq_codes_scan_side(spark):
-    # PQ encoding is one corpus pass with a literal codebook; the ONE hash
-    # exchange is the ordered_once barrier on vec_id (r13), which keeps
-    # the presentation sort's range-sampling job from re-running the
-    # whole numpy encode pass
+    # PQ encoding is one corpus pass with a literal codebook and the output
+    # is unsorted: no exchange of any kind, so the numpy encode runs once
     plan = physical_plan(CATALOG["embedding_pq_codes"].fn(spark, SF))
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert re.search(r"Exchange hashpartitioning\(vec_id", plan), plan
+    assert plan.count("Exchange hashpartitioning") == 0, plan
+    assert "rangepartitioning" not in plan, plan
 
 
 def test_random_projection_scan_side(spark):
     # the sign matrix is a plan literal; projection folds + posexplode stay
-    # scan-side — zero hash exchanges before the output sort
+    # scan-side — zero hash exchanges
     plan = physical_plan(CATALOG["embedding_random_projection"].fn(spark, SF))
     assert "Exchange hashpartitioning" not in plan, plan
 
@@ -242,7 +237,7 @@ def test_retention_cohorts_broadcasts_user_labels(spark):
 
 def test_gopher_rules_scan_side(spark):
     # the quality-rule battery is pure codegen on one pass: zero hash
-    # exchanges (only the presentation orderBy range-partitions)
+    # exchanges
     plan = physical_plan(CATALOG["pipeline_gopher_rules"].fn(spark, SF))
     assert "Exchange hashpartitioning" not in plan, plan
 

@@ -59,7 +59,7 @@ def test_lead_time_percentile_ordering(catalog, spark, sf_dir):
 
 
 def test_yoy_growth_null_only_first_year(catalog, spark, sf_dir):
-    rows = catalog["revenue_yoy_growth"].fn(spark, sf_dir).collect()
+    rows = sorted(catalog["revenue_yoy_growth"].fn(spark, sf_dir).collect(), key=lambda r: r["yr"])
     by_nation = {}
     for r in rows:
         by_nation.setdefault(r["n_name"], []).append(r)
@@ -116,7 +116,7 @@ def test_mode_bounded_by_total(catalog, spark):
 
 
 def test_backlog_burndown_conserves_orders(catalog, spark):
-    rows = catalog["orders_backlog_burndown"].fn(spark, SF).collect()
+    rows = sorted(catalog["orders_backlog_burndown"].fn(spark, SF).collect(), key=lambda r: r.month)
     assert rows
     # deltas must conserve: backlog starts at first month's net and ends at 0
     assert rows[-1].open_backlog == 0

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from parquet_query_spark.sources import sinks
 from parquet_query_spark.sources.registry import load_table
+from parquet_query_spark.workbench.csv_sink import write_csv_distributed
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -67,7 +68,7 @@ def test_json_csv_round_trip(spark, tmp_path):
     region = load_table(spark, SF_DIR, "region")
     jout, cout = str(tmp_path / "r_json"), str(tmp_path / "r_csv")
     sinks.write_json(region, jout)
-    sinks.write_csv(region, cout)
+    write_csv_distributed(region, cout)
     jback = spark.read.json(jout)
     cback = spark.read.option("header", True).option("inferSchema", True).csv(cout)
     assert jback.count() == region.count()
@@ -95,16 +96,15 @@ def test_sink_roundtrip_queries_match_source(spark):
                 / 100.0
             ).alias("total_price"),
         )
-        .orderBy("o_orderstatus")
     )
-    assert part.collect() == direct.collect()
+    assert sorted(part.collect()) == sorted(direct.collect())
 
     bucketed = catalog["sink_roundtrip_bucketed_join"].fn(spark, SF_DIR)
     plan = _plan(bucketed)
     # the join of the two bucketed tables must not shuffle its inputs: no
     # hash-partitioning Exchange on either join key (the remaining
-    # Exchanges belong to the final groupBy/orderBy; a BroadcastExchange
-    # on the tiny-SF side is fine — broadcast is also shuffle-free)
+    # Exchanges belong to the final groupBy; a BroadcastExchange on the
+    # tiny-SF side is fine — broadcast is also shuffle-free)
     assert "hashpartitioning(o_orderkey" not in plan, plan
     assert "hashpartitioning(l_orderkey" not in plan, plan
     li = load_table(spark, SF_DIR, "lineitem")
@@ -118,9 +118,8 @@ def test_sink_roundtrip_queries_match_source(spark):
                 / 100.0
             ).alias("total_price"),
         )
-        .orderBy("o_orderpriority")
     )
-    assert bucketed.collect() == direct_join.collect()
+    assert sorted(bucketed.collect()) == sorted(direct_join.collect())
 
 
 def test_zorder_write_rowgroup_stats_are_tight(spark):
