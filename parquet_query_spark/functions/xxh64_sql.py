@@ -49,17 +49,6 @@ def _let(value: str, var: str, body: str) -> str:
     return f"list_transform([{value}], {var} -> {body})[1]"
 
 
-def _mul64(a: str, b: str) -> str:
-    """(a * b) mod 2^64 without overflowing INT128: 32-bit limb split —
-    a*b = al*bl + ((al*bh + ah*bl) << 32) (the bh*ah term is ≥ 2^64 and
-    drops out).  Binds both operands so they are evaluated once."""
-    prod = (
-        f"(xa % {_HI}) * (xb % {_HI}) + "
-        f"((((xa % {_HI}) * (xb // {_HI}) + (xa // {_HI}) * (xb % {_HI})) % {_HI}) << 32)"
-    )
-    return _let(f"{{'a': {a}, 'b': {b}}}", "xm", _let("xm.a", "xa", _let("xm.b", "xb", _m(prod))))
-
-
 def _mul64_const(a: str, c: int) -> str:
     """(a * constant) mod 2^64 — constant limbs folded at generation time."""
     cl, ch = c % _HI, c // _HI

@@ -515,7 +515,6 @@ def multimodal_corrupt_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: synthesize + corrupt + parse all happen in one
     mapInPandas pass; the rollup groups 3 formats map-side."""
-    from parquet_query_spark.functions.image_meta import ImageParseError
 
     def corrupt_and_parse(batches) -> Iterator:
         import pandas as pd

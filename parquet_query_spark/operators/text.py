@@ -13,10 +13,6 @@ from pyspark.sql import functions as F
 
 from parquet_query_spark.operators.catalog import query, views
 
-# token pattern: letter runs | digit runs | single non-space symbol (BPE-ish
-# pre-tokenization, cf. GPT-2's regex family)
-_TOKEN_PAT = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
 # word tokenizer of the distribution operators: lower-cased alphanumeric runs
 _TOKEN_RE = "[^a-z0-9]+"
 
@@ -1495,9 +1491,6 @@ def text_lang_mix_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFra
     v = views(spark, sf_dir)
     cell = v["documents"].groupBy("source", "lang").agg(
         F.count("*").cast("bigint").alias("c")
-    )
-    key = F.concat_ws(
-        "|", F.lpad(F.col("c").cast("string"), 12, "0"), F.col("lang")
     )
     return (
         cell.groupBy("source")

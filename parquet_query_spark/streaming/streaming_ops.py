@@ -25,7 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from parquet_query_spark.operators.catalog import query
-from parquet_query_spark.sources.registry import load_table
+from parquet_query_spark.sources.registry import load_table, read_parquet
+from parquet_query_spark.sources.registry import _merged_schema, _parquet_footer, _parquet_parts
 
 
 # Extra options applied to every streaming file source — tests set
@@ -34,10 +35,6 @@ from parquet_query_spark.sources.registry import load_table
 # (VERDICT r7 Next-round #3).  Empty in production: the per-round driver
 # drains each static file in however many batches the source picks.
 _STREAM_READ_OPTIONS: dict[str, str] = {}
-
-# Number of non-empty micro-batches the most recent _run_to_table drive
-# processed — lets tests assert state actually crossed a batch boundary.
-LAST_NUM_BATCHES: int = 0
 
 # Sink output dirs created by _run_to_table — removed at interpreter exit
 # (the temp views read them lazily, so they must outlive the drive;
@@ -52,52 +49,32 @@ def _cleanup_sink_dirs() -> None:
 
 atexit.register(_cleanup_sink_dirs)
 
-# Per-op total of late/out-of-order rows DROPPED at admission by the
-# stateful operators' bounded-state semantics on their most recent drive
-# (r12, VERDICT #5) — the observable counterpart of the r11 honest-drop
-# fixes, so an ingest operator can alarm on admission loss instead of
-# discovering it in a batch-twin diff.  Keyed by catalog op name.
-LAST_DROPPED_LATE: dict[str, int] = {}
 
-
-# Source bytes of the most recent _file_stream build — the cardinality
-# proxy _state_partitions sizes streaming state partitioning from (set
-# here because only the source builder knows the path; every streaming
-# op reads exactly one file source before driving it).
-_LAST_SOURCE_BYTES: int = 0
-
-
-def _file_stream(spark: SparkSession, sf_dir: str, filename: str) -> DataFrame:
-    """``{sf_dir}/{filename}`` as a file-source stream.  The path may be a
-    single parquet file (normal testdata layout) or a DIRECTORY of part
-    files — with ``maxFilesPerTrigger=1`` the parts arrive one micro-batch
-    at a time in modification-time order, which is how the multi-batch
-    tests drive order-sensitive state across batch boundaries."""
-    global _LAST_SOURCE_BYTES
+def _file_stream(spark: SparkSession, sf_dir: str, filename: str) -> tuple[DataFrame, int]:
+    """``{sf_dir}/{filename}`` as a file-source stream, with the source's
+    byte count (the input ``_state_partitions`` sizes the drive from).
+    The path may be a single parquet file (normal testdata layout) or a
+    DIRECTORY of part files — with ``maxFilesPerTrigger=1`` the parts
+    arrive one micro-batch at a time in modification-time order, which is
+    how the multi-batch tests drive order-sensitive state across batch
+    boundaries.  The schema is the parts' footers merged on the driver
+    (``sources.registry``), so building a stream runs no job."""
     path = f"{sf_dir}/{filename}"
-    try:
-        if os.path.isdir(path):
-            _LAST_SOURCE_BYTES = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-            )
-        else:
-            _LAST_SOURCE_BYTES = os.path.getsize(path)
-    except OSError:
-        _LAST_SOURCE_BYTES = 0
-    batch = spark.read.parquet(path)  # schema only
-    reader = spark.readStream.schema(batch.schema).format("parquet")
+    parts = _parquet_parts(path)
+    schema = _merged_schema(spark, [_parquet_footer(spark, p) for p in parts])
+    source_bytes = sum(os.path.getsize(p) for p in parts)
+    reader = spark.readStream.schema(schema).format("parquet")
     for k, val in _STREAM_READ_OPTIONS.items():
         reader = reader.option(k, val)
     if os.path.isdir(path):
-        return reader.load(path)
-    return reader.option("pathGlobFilter", filename).load(sf_dir)
+        return reader.load(path), source_bytes
+    return reader.option("pathGlobFilter", filename).load(sf_dir), source_bytes
 
 
-def _state_partitions(spark: SparkSession) -> int:
+def _state_partitions(spark: SparkSession, source_bytes: int) -> int:
     """Shuffle/state-store partition count for a streaming drive, sized
-    from the source bytes (r14, VERDICT r13 #5).
+    from ``source_bytes``, the byte count of the drive's file source
+    (r14, VERDICT r13 #5).
 
     A streaming query freezes ``spark.sql.shuffle.partitions`` into its
     checkpoint at first batch, and each state partition is a live state
@@ -111,13 +88,14 @@ def _state_partitions(spark: SparkSession) -> int:
     parallelism and huge ones stay within sane instance counts per box
     (a cluster deployment scales the clamp with its core count)."""
     cpus = spark.sparkContext.defaultParallelism
-    by_bytes = _LAST_SOURCE_BYTES // (64 << 20) + 1
+    by_bytes = source_bytes // (64 << 20) + 1
     return int(max(cpus, min(32 * cpus, by_bytes)))
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a stream, nanos repaired inside the stream plan."""
-    stream = _file_stream(spark, sf_dir, "events.parquet")
+def _events_stream(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """events.parquet as a stream, nanos repaired inside the stream plan,
+    with its source bytes (``_file_stream``)."""
+    stream, source_bytes = _file_stream(spark, sf_dir, "events.parquet")
     ts_type = dict(stream.dtypes).get("ts")
     if ts_type == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -125,12 +103,16 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # unadjusted-UTC parquet timestamps surface as NTZ, which watermarks
         # reject; session TZ is UTC so the cast is value-preserving
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return stream, source_bytes
 
 
-def _run_to_table(result: DataFrame, name_prefix: str, mode: str = "complete") -> str:
+def _run_to_table(
+    result: DataFrame, name_prefix: str, source_bytes: int, mode: str = "complete"
+) -> str:
     """Drive the streaming query over the static source to completion and
     register its output as the temp view whose name is returned.
+    ``source_bytes`` is the source's byte count from ``_file_stream``; it
+    sizes the drive's state partitioning (``_state_partitions``).
 
     This is the one streaming drive, and it has one sink: foreachBatch
     into parquet files.  Emitted rows never gather on the driver, so the
@@ -153,11 +135,12 @@ def _run_to_table(result: DataFrame, name_prefix: str, mode: str = "complete") -
     hides such directories.  The output is read back with the result's
     known schema (``_read_sink``).
 
-    The query name is unique per drive (progress listeners key drives by
-    it).  The checkpoint is removed and the query stopped whether or not
-    the drive fails; the output directory outlives the drive, because the
-    view reads it lazily, and is removed at interpreter exit."""
-    global LAST_NUM_BATCHES
+    The query name is unique per drive and names the sink view too; the
+    drive keeps no record of its own (listeners read its progress events
+    by that name).  The checkpoint is removed and the query stopped
+    whether or not the drive fails; the output directory outlives the
+    drive, because the view reads it lazily, and is removed at
+    interpreter exit."""
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
     session = result.sparkSession
     schema = result.schema
@@ -175,7 +158,7 @@ def _run_to_table(result: DataFrame, name_prefix: str, mode: str = "complete") -
     # checkpoint at first batch, so set it just for this drive and restore
     # after — batch queries in the same session keep the session setting.
     prev_parts = session.conf.get("spark.sql.shuffle.partitions")
-    session.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(session)))
+    session.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(session, source_bytes)))
     try:
         q = (
             result.writeStream.outputMode(mode)
@@ -186,7 +169,6 @@ def _run_to_table(result: DataFrame, name_prefix: str, mode: str = "complete") -
         )
         try:
             q.processAllAvailable()
-            LAST_NUM_BATCHES = sum(1 for p in q.recentProgress if p.numInputRows > 0)
         finally:
             q.stop()
     finally:
@@ -220,7 +202,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Epoch-aligned ``window('1 hour')`` starts coincide with
     ``date_trunc('hour')`` — which is exactly what the batch oracle
     computes, so this is a true streaming-vs-batch differential test."""
-    stream = _events_stream(spark, sf_dir)
+    stream, source_bytes = _events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -232,7 +214,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name = _run_to_table(agg, "tumbling")
+    name = _run_to_table(agg, "tumbling", source_bytes)
     return spark.table(name)
 
 
@@ -248,7 +230,7 @@ GROUP BY event_type
 def streaming_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup (`dropDuplicates` keyed state) then count —
     the streaming twin of exact dedup; watermark bounds the dedup state."""
-    stream = _events_stream(spark, sf_dir)
+    stream, source_bytes = _events_stream(spark, sf_dir)
     deduped = (
         stream.withWatermark("ts", "1 hour")
         .dropDuplicates(["event_id"])
@@ -257,7 +239,7 @@ def streaming_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         # allowed on streams, and count(*) is equivalent here
         .agg(F.count("*").alias("n_unique"))
     )
-    name = _run_to_table(deduped, "dedup")
+    name = _run_to_table(deduped, "dedup", source_bytes)
     return spark.table(name)
 
 
@@ -290,7 +272,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle is the batch lag+cumsum sessionization — the two formulations
     must agree on session counts.  Note Spark closes a session when the gap
     is >= the timeout, hence the oracle's ``>=``."""
-    stream = _events_stream(spark, sf_dir)
+    stream, source_bytes = _events_stream(spark, sf_dir)
     # ONE stateful operator in the stream (session_window agg); the per-user
     # rollup happens in batch on the materialized sessions — chaining two
     # stateful aggs behind one watermark is a streaming-correctness trap.
@@ -299,7 +281,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    name = _run_to_table(sessions, "sessions")
+    name = _run_to_table(sessions, "sessions", source_bytes)
     return (
         spark.table(name)
         .groupBy("user_id")
@@ -329,7 +311,7 @@ def streaming_static_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     picked up) and joins broadcast — the canonical streaming-enrichment
     pattern; no state is kept for the join itself, only for the windowless
     aggregation."""
-    stream = _events_stream(spark, sf_dir)
+    stream, source_bytes = _events_stream(spark, sf_dir)
     customer = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
@@ -338,7 +320,7 @@ def streaming_static_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("segment", "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
     )
-    name = _run_to_table(agg, "stream_enrich")
+    name = _run_to_table(agg, "stream_enrich", source_bytes)
     return spark.table(name)
 
 
@@ -364,9 +346,9 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the interval — the ONLY way a stream-stream join is bounded-memory at
     100 TB.  Inner join + append mode; the oracle is the identical batch
     join."""
+    purchases, source_bytes = _events_stream(spark, sf_dir)
     p = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
+        purchases.where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user"),
@@ -374,9 +356,11 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("p_ts", "1 hour")
     )
+    # both sides scan the one events source, so the drive is sized by its
+    # bytes, not by twice them
+    views_seen, _ = _events_stream(spark, sf_dir)
     v = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
+        views_seen.where(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
             F.col("user_id").alias("v_user"),
@@ -395,7 +379,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "view_id",
         (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("gap_us"),
     )
-    name = _run_to_table(joined, "ss_join", mode="append")
+    name = _run_to_table(joined, "ss_join", source_bytes, mode="append")
     return spark.table(name)
 
 
@@ -417,11 +401,11 @@ def streaming_corpus_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     an event-time column you'd add ``withWatermark`` so seen-key state
     ages out; the documents table has no timestamps, so state here is the
     full key set (bounded by corpus cardinality)."""
-    stream = _file_stream(spark, sf_dir, "documents.parquet")
+    stream, source_bytes = _file_stream(spark, sf_dir, "documents.parquet")
     deduped = stream.select(F.md5("text").alias("text_hash")).dropDuplicates(
         ["text_hash"]
     )
-    name = _run_to_table(deduped, "ingest_dedup", mode="append")
+    name = _run_to_table(deduped, "ingest_dedup", source_bytes, mode="append")
     return spark.table(name)
 
 
@@ -450,7 +434,7 @@ def streaming_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant memory and the watermark retires closed bars.  This is the
     live-metrics shape (candlestick feeds, SLO dashboards) of the batch
     downsampler, checked against the identical batch SQL oracle."""
-    stream = _events_stream(spark, sf_dir)
+    stream, source_bytes = _events_stream(spark, sf_dir)
     key = F.concat(
         F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
         F.lit("|"),
@@ -478,7 +462,7 @@ def streaming_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "volume_e4",
         )
     )
-    name = _run_to_table(agg, "ohlc")
+    name = _run_to_table(agg, "ohlc", source_bytes)
     return spark.table(name)
 
 
@@ -529,13 +513,13 @@ def streaming_ingest_decontaminate(spark: SparkSession, sf_dir: str) -> DataFram
     admit/reject rollup here is the monitoring view a gate would emit."""
     from parquet_query_spark.operators.dedup import _with_shingles
 
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    batch = read_parquet(spark, [f"{sf_dir}/documents.parquet"])
     bench = (
         _with_shingles(batch.where(F.col("doc_id") < 20))
         .select(F.explode("shingles").alias("shingle"))
         .agg(F.collect_set("shingle").alias("bench_shingles"))
     )
-    stream = _file_stream(spark, sf_dir, "documents.parquet")
+    stream, source_bytes = _file_stream(spark, sf_dir, "documents.parquet")
     shingle_expr = F.expr(
         """
         array_distinct(
@@ -560,7 +544,7 @@ def streaming_ingest_decontaminate(spark: SparkSession, sf_dir: str) -> DataFram
             F.arrays_overlap("shingles", "bench_shingles").alias("is_dirty"),
         )
     )
-    name = _run_to_table(screened, "ingest_decon", mode="append")
+    name = _run_to_table(screened, "ingest_decon", source_bytes, mode="append")
     return (
         spark.table(name)
         .groupBy("source")

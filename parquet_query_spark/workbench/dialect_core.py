@@ -758,7 +758,6 @@ _ASOF_CLAUSE_END = re.compile(
     r"|JOIN|LEFT|RIGHT|FULL|INNER|CROSS|ASOF)\b",
     re.IGNORECASE,
 )
-_ASOF_INEQ = re.compile(r"(<=|>=|<|>)")
 
 
 def _split_top_and(text: str) -> list[str]:

@@ -357,15 +357,6 @@ def _macro_isodow(args: list[str]) -> str | None:
     return f"(weekday(({args[0].strip()})) + 1)"
 
 
-def _macro_yearweek(args: list[str]) -> str | None:
-    # ISO week-year * 100 + ISO week (probed: yearweek('2021-01-01') =
-    # 202053)
-    if len(args) != 1:
-        return None
-    a = args[0].strip()
-    return f"(extract(YEAROFWEEK FROM ({a})) * 100 + weekofyear(({a})))"
-
-
 def _macro_date_diff(args: list[str]) -> str | None:
     # DuckDB date_diff counts UNIT BOUNDARIES crossed (probed:
     # date_diff('month', Jan 31, Feb 1) = 1) — truncate both ends, then

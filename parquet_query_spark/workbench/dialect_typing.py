@@ -4,7 +4,6 @@ out of dialect.py in r9."""
 
 from __future__ import annotations
 
-import contextvars
 import re
 
 from parquet_query_spark.workbench.dialect_core import (

@@ -25,7 +25,9 @@ from parquet_query_spark.session import temp_view
 from parquet_query_spark.workbench.dialect_core import (
     _code_mask,
     _keyword_matches,
+    _paren_depth_at,
     _split_call_args,
+    _top_level_split,
 )
 
 _PIVOT = re.compile(r"^\s*PIVOT\b", re.IGNORECASE)
@@ -34,24 +36,6 @@ _IDENT = r"[A-Za-z_][A-Za-z_0-9]*"
 
 def is_pivot_statement(statement: str) -> bool:
     return bool(_PIVOT.match(statement))
-
-
-def _top_level_split(text: str, mask: list[bool], sep: str = ",") -> list[str]:
-    parts: list[str] = []
-    depth = 0
-    start = 0
-    for i, ch in enumerate(text):
-        if not mask[i]:
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == sep and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    return [p for p in parts if p.strip()]
 
 
 def parse_pivot(statement: str) -> dict:
@@ -70,7 +54,7 @@ def parse_pivot(statement: str) -> dict:
         ms = [
             k
             for k in _keyword_matches(body, mask, pattern)
-            if _depth_at(body, mask, k.start()) == 0
+            if _paren_depth_at(body, mask, k.start()) == 0
         ]
         return ms[0] if ms else None
 
@@ -123,18 +107,6 @@ def parse_pivot(statement: str) -> dict:
         "group_by": group_by,
         "tail": tail,
     }
-
-
-def _depth_at(sql: str, mask: list[bool], pos: int) -> int:
-    depth = 0
-    for i in range(pos):
-        if not mask[i]:
-            continue
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-    return depth
 
 
 def _referenced_idents(expr: str) -> set[str]:
@@ -317,7 +289,7 @@ def _resolve_from_schema(engine, statement, mask, construct):
     Supports a single table, path literal, or parenthesized subquery."""
     fm = None
     for m in _keyword_matches(statement, mask, r"\bFROM\b"):
-        if _depth_at(statement, mask, m.start()) == 0:
+        if _paren_depth_at(statement, mask, m.start()) == 0:
             fm = m
             break
     if fm is None:
@@ -418,7 +390,7 @@ def expand_columns(engine, statement: str) -> str:
     sel = [
         k
         for k in _keyword_matches(statement, mask, r"\bSELECT\b")
-        if _depth_at(statement, mask, k.start()) == 0
+        if _paren_depth_at(statement, mask, k.start()) == 0
     ]
     if not sel:
         raise ValueError("COLUMNS(...) outside a SELECT list is unsupported")

@@ -4,13 +4,12 @@
 For every registered operator, build its DataFrame at
 $SPARK_GRAFT_AUDIT_SF_DIR (default sf0.001) and record the plan-shape
 metrics the 100 TB design contract cares about: hash-shuffle count,
-broadcast joins, sort-merge joins, whole-stage-codegen spans, Arrow
-Python stages, TakeOrdered usage, and range sorts (a ``rangepartitioning``
-exchange: a global sort, which the catalog's order rule allows only in
-the ``template`` operators).  The result is a table the review can
-scan for anti-patterns (a cartesian product, an unexpected sort-merge
-join, a shuffle where none should exist) without re-deriving 200 plans
-by hand.
+broadcast joins, sort-merge joins, Arrow Python stages, TakeOrdered
+usage, and range sorts (a ``rangepartitioning`` exchange: a global sort,
+which the catalog's order rule allows only in the ``template``
+operators).  The result is a table to scan for anti-patterns (a
+cartesian product, an unexpected sort-merge join, a shuffle where none
+should exist) without re-deriving 200 plans by hand.
 """
 
 from __future__ import annotations
@@ -36,7 +35,7 @@ def main() -> None:
         try:
             plan = physical_plan(spec.fn(spark, SF_DIR))
         except Exception as e:  # noqa: BLE001 — audit must cover the rest
-            rows.append((name, "ERROR", str(e).splitlines()[0][:60], "", "", "", "", ""))
+            rows.append((name, "ERROR", str(e).splitlines()[0][:60], "", "", "", ""))
             continue
         rows.append(
             (
@@ -44,7 +43,6 @@ def main() -> None:
                 len(re.findall(r"Exchange hashpartitioning", plan)),
                 plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin"),
                 plan.count("SortMergeJoin"),
-                plan.count("WholeStageCodegen"),
                 plan.count("MapInPandas")
                 + plan.count("ArrowEvalPython")
                 + plan.count("FlatMapGroupsInPandas"),
@@ -59,13 +57,13 @@ def main() -> None:
             "(plan construction only — streaming operators and eager\n"
             "driver-side operators execute their bounded collect step).\n\n"
             "| operator | hash shuffles | broadcast joins | sort-merge joins "
-            "| codegen spans | arrow py stages | top-k | range sorts |\n"
-            "|---|---|---|---|---|---|---|---|\n"
+            "| arrow py stages | top-k | range sorts |\n"
+            "|---|---|---|---|---|---|---|\n"
         )
         for r in rows:
             f.write("| " + " | ".join(str(x) for x in r) + " |\n")
         n_ok = sum(1 for r in rows if r[1] != "ERROR")
-        ranged = sorted(r[0] for r in rows if r[1] != "ERROR" and r[7])
+        ranged = sorted(r[0] for r in rows if r[1] != "ERROR" and r[6])
         # Staleness gate: the audit must cover the FULL catalog; a partial
         # run must never overwrite the file looking complete.
         assert len(rows) == len(catalog), (

@@ -49,3 +49,23 @@ def engine(sf_dir):
     from parquet_query_spark.engine import Engine
 
     return Engine.open(sf_dir, table_name="alldata")
+
+
+@pytest.fixture
+def stream_drive(spark):
+    """``() -> (query name, non-empty micro-batches)`` of the one streaming
+    drive the test ran, from the progress events on Spark's listener bus.
+    A drive's query name is its sink view's name."""
+    from parquet_query_spark.plans import StreamLog
+
+    log = StreamLog()
+    spark.streams.addListener(log)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def drive() -> tuple[str, int]:
+        bus.waitUntilEmpty()
+        ((name, rows),) = log.rows.items()
+        return name, sum(n > 0 for n in rows)
+
+    yield drive
+    spark.streams.removeListener(log)

@@ -7,6 +7,8 @@ import os
 import duckdb
 import pytest
 
+from parquet_query_spark.plans import stage_metrics
+
 
 @pytest.fixture(scope="module")
 def engine(sf_dir):
@@ -101,16 +103,10 @@ def test_copy_count_preview_runs_no_job(engine, tmp_path):
     runs no Spark job (the write itself runs inside ``engine.sql``)."""
     out = str(tmp_path / "nation.parquet")
     df = engine.sql(f"COPY (SELECT n_nationkey FROM 'nation.parquet') TO '{out}'")
-    sc = engine.spark.sparkContext
-    gid = "copy-count-preview"
-    sc.setJobGroup(gid, gid)
-    try:
-        rows = df.limit(200).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows, jobs, _ = stage_metrics(engine.spark, lambda: df.limit(200).collect())
     assert [tuple(r) for r in rows] == [(25,)]
     assert df.columns == ["Count"]
-    assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
+    assert jobs == []
 
 
 @pytest.mark.parametrize(
@@ -126,15 +122,10 @@ def test_copy_runs_its_plan_once(engine, tmp_path, target, opts):
     """A scan-only COPY runs exactly one Spark job whatever the format: the
     write, which also counts the rows it writes."""
     out = str(tmp_path / target)
-    sc = engine.spark.sparkContext
-    gid = f"copy-one-job-{target}"
-    sc.setJobGroup(gid, gid)
-    try:
-        r = engine.run(f"COPY (SELECT * FROM 'nation.parquet') TO '{out}'{opts}")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    stmt = f"COPY (SELECT * FROM 'nation.parquet') TO '{out}'{opts}"
+    r, jobs, _ = stage_metrics(engine.spark, lambda: engine.run(stmt))
     assert r.rows == [["25"]]
-    assert len(sc.statusTracker().getJobIdsForGroup(gid)) == 1
+    assert len(jobs) == 1
 
 
 @pytest.mark.parametrize("target", ["empty.csv", "empty.json", "empty.parquet"])

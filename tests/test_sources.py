@@ -5,7 +5,6 @@ the folder import must register the four and skip the decoy, and the union
 view must merge multiple parquet files with schema evolution.
 """
 
-import contextlib
 import json
 import os
 import threading
@@ -16,6 +15,7 @@ from urllib.parse import urlparse
 import pytest
 
 from parquet_query_spark.engine import Engine
+from parquet_query_spark.plans import stage_metrics
 from parquet_query_spark.sources.registry import collect_files, is_supported_file_path
 
 
@@ -200,12 +200,9 @@ def test_views_restage_runs_one_shuffle_and_write(spark, tmp_path):
     slots = spark.sparkContext.defaultParallelism
     n = slots * 1000 + 500
     _write_rows(tmp_path / "documents.parquet", n)
-    with job_group(spark, "pqs-test-views-restage") as jobs:
-        frames = views(spark, str(tmp_path))
+    frames, jobs, stages = stage_metrics(spark, lambda: views(spark, str(tmp_path)))
     assert len(jobs) == 2
-    tracker = spark.sparkContext.statusTracker()
-    stages = [tracker.getStageInfo(s) for j in jobs for s in tracker.getJobInfo(j).stageIds]
-    assert max(s.numTasks for s in stages if s is not None) == slots
+    assert max(s["tasks"] for s in stages) == slots
     assert frames["documents"].count() == n
 
 
@@ -262,20 +259,6 @@ def test_staging_root_removed_at_exit(tmp_path):
     assert not [n for n in os.listdir(tmpdir) if n.startswith("pqs_ingest_stage_")]
 
 
-@contextlib.contextmanager
-def job_group(spark, gid):
-    """Run the body under Spark job group ``gid``; yields the list of the
-    group's job ids, filled in on exit."""
-    sc = spark.sparkContext
-    jobs: list[int] = []
-    sc.setJobGroup(gid, gid)
-    try:
-        yield jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(gid))
-
-
 def test_nanos_parquet_read_once(spark, tmp_path):
     """A TIMESTAMP(NANOS) file costs no job (its schema comes from the
     footer on the driver) and reads back as micros."""
@@ -286,8 +269,7 @@ def test_nanos_parquet_read_once(spark, tmp_path):
     tbl = pa.table({"ts": pa.array([ns], pa.timestamp("ns")), "k": [1]})
     pq.write_table(tbl, tmp_path / "ts.parquet", version="2.6")
     assert str(pq.read_schema(tmp_path / "ts.parquet").field("ts").type) == "timestamp[ns]"
-    with job_group(spark, "pqs-test-nanos-once") as jobs:
-        eng = Engine.open(str(tmp_path), spark=spark)
+    eng, jobs, _ = stage_metrics(spark, lambda: Engine.open(str(tmp_path), spark=spark))
     assert len(jobs) == 0
     df = eng.registry["ts.parquet"]
     assert dict(df.dtypes)["ts"] == "timestamp"
@@ -362,8 +344,9 @@ def test_open_jobs_run_under_callers_job_group(spark, fixture_dir):
     """Schema-inference jobs launched on the registration pool count under
     the caller's job group: at least one job per CSV/JSON file (parquet
     files run none)."""
-    with job_group(spark, "pqs-test-open-group") as jobs:
-        Engine.open(fixture_dir, table_name="unioned", spark=spark)
+    _, jobs, _ = stage_metrics(
+        spark, lambda: Engine.open(fixture_dir, table_name="unioned", spark=spark)
+    )
     non_parquet = [f for f in collect_files(fixture_dir) if not f.path.endswith(".parquet")]
     assert non_parquet
     assert len(jobs) >= len(non_parquet)
@@ -398,8 +381,7 @@ def test_parquet_only_open_runs_no_job(spark, tmp_path):
 
     for i in range(3):
         pq.write_table(pa.table({"id": [i], f"c{i}": [str(i)]}), tmp_path / f"f{i}.parquet")
-    with job_group(spark, "pqs-test-open-no-job") as jobs:
-        eng = Engine.open(str(tmp_path), table_name="u", spark=spark)
+    eng, jobs, _ = stage_metrics(spark, lambda: Engine.open(str(tmp_path), table_name="u", spark=spark))
     assert jobs == []
     assert eng.run("SELECT count(*) AS n FROM u").rows == [["3"]]
 
@@ -415,9 +397,7 @@ def test_glob_literal_infers_once_and_sees_new_files(spark, tmp_path):
     pq.write_table(pa.table({"id": [1, 2]}), tmp_path / "g" / "a.parquet")
     eng = Engine(spark=spark, root=str(tmp_path))
     stmt = "SELECT count(*) AS n, sum(id) AS s FROM 'g/*.parquet'"
-    with job_group(spark, "pqs-test-glob-views") as jobs:
-        for _ in range(3):
-            eng.sql(stmt)
+    _, jobs, _ = stage_metrics(spark, lambda: [eng.sql(stmt) for _ in range(3)])
     assert len(jobs) <= 1
     assert eng.run(stmt).rows == [["2", "3"]]
     pq.write_table(pa.table({"id": [10]}), tmp_path / "g" / "b.parquet")

@@ -38,6 +38,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from parquet_query_spark.operators.catalog import load_all
 from parquet_query_spark.oracle import compare
@@ -52,6 +53,13 @@ def one_file_per_trigger():
     streaming_ops._STREAM_READ_OPTIONS["maxFilesPerTrigger"] = "1"
     yield
     streaming_ops._STREAM_READ_OPTIONS.clear()
+
+
+def _dropped_late(spark, view: str, key: str) -> int:
+    """The admission-loss total in a stateful drive's sink view:
+    ``dropped_late`` is cumulative per key, so the max per key, summed."""
+    per_key = spark.table(view).groupBy(key).agg(F.max("dropped_late").alias("d"))
+    return per_key.agg(F.coalesce(F.sum("d"), F.lit(0))).collect()[0][0]
 
 
 def _copy_side_tables(root: str, skip: str) -> None:
@@ -98,7 +106,7 @@ def _split_with_plants(root, schema, base, plants_late, plants_keep):
     return f0["ts"].max(), f1["ts"].max()
 
 
-def test_tumbling_complete_mode_keeps_too_late_rows(spark, tmp_path):
+def test_tumbling_complete_mode_keeps_too_late_rows(spark, tmp_path, stream_drive):
     """Complete-mode windowed agg: a row hours older than the watermark
     still merges into its (long-closed) window — complete mode never
     evicts state, so the drained result equals the batch oracle over ALL
@@ -119,12 +127,12 @@ def test_tumbling_complete_mode_keeps_too_late_rows(spark, tmp_path):
 
     spec = CATALOG["streaming_tumbling_counts"]
     df = spec.fn(spark, root)
-    assert streaming_ops.LAST_NUM_BATCHES >= 3
+    assert stream_drive()[1] >= 3
     report = compare(spark, root, df, spec.oracle)
     assert report["match"], report
 
 
-def test_session_windows_drop_and_keep_across_watermark(spark, tmp_path):
+def test_session_windows_drop_and_keep_across_watermark(spark, tmp_path, stream_drive):
     """Session windows (2h watermark): a planted session far below the
     watermark is DROPPED (its user never appears), while an out-of-order
     two-event session above the watermark is kept and merged.  The
@@ -151,7 +159,7 @@ def test_session_windows_drop_and_keep_across_watermark(spark, tmp_path):
 
     spec = CATALOG["streaming_session_windows"]
     df = spec.fn(spark, root)
-    assert streaming_ops.LAST_NUM_BATCHES >= 3
+    assert stream_drive()[1] >= 3
     rows = {r["user_id"]: (r["n_sessions"], r["n_events"]) for r in df.collect()}
     assert 9101 not in rows, "too-late session survived the watermark"
     assert rows.get(9102) == (1, 2), "within-lateness session lost or split"
@@ -170,7 +178,7 @@ def test_session_windows_drop_and_keep_across_watermark(spark, tmp_path):
     assert not compare(spark, root, df, spec.oracle)["match"]
 
 
-def test_stream_stream_join_drop_and_keep_across_watermark(spark, tmp_path):
+def test_stream_stream_join_drop_and_keep_across_watermark(spark, tmp_path, stream_drive):
     """Stream-stream interval join (1h watermarks both sides, global
     watermark = min): a planted view+purchase pair far below the global
     watermark is dropped on input (the pair never joins), while an
@@ -201,7 +209,7 @@ def test_stream_stream_join_drop_and_keep_across_watermark(spark, tmp_path):
 
     spec = CATALOG["streaming_stream_stream_join"]
     df = spec.fn(spark, root)
-    assert streaming_ops.LAST_NUM_BATCHES >= 3
+    assert stream_drive()[1] >= 3
     pairs = {(r["purchase_id"], r["view_id"]) for r in df.collect()}
     assert (100022, 100021) not in pairs, "too-late pair survived the watermark"
     assert (100024, 100023) in pairs, "within-lateness pair failed to join"
@@ -217,7 +225,7 @@ def test_stream_stream_join_drop_and_keep_across_watermark(spark, tmp_path):
     assert not compare(spark, root, df, spec.oracle)["match"]
 
 
-def test_ingest_decontaminate_order_insensitive(spark, tmp_path):
+def test_ingest_decontaminate_order_insensitive(spark, tmp_path, stream_drive):
     """The stateless ingest screen has no watermark: documents arriving in
     a fully interleaved (non-time, non-id) order across two batches admit
     and reject bit-identically to the batch oracle."""
@@ -232,12 +240,12 @@ def test_ingest_decontaminate_order_insensitive(spark, tmp_path):
     )
     spec = CATALOG["streaming_ingest_decontaminate"]
     out = spec.fn(spark, root)
-    assert streaming_ops.LAST_NUM_BATCHES >= 2
+    assert stream_drive()[1] >= 2
     report = compare(spark, root, out, spec.oracle)
     assert report["match"], report
 
 
-def test_dedup_by_key_admits_late_rows(spark, tmp_path):
+def test_dedup_by_key_admits_late_rows(spark, tmp_path, stream_drive):
     """streaming_dedup_by_key (dropDuplicates + 1h watermark): probed
     r10 — the watermark bounds the DEDUP STATE, it does not filter late
     input (numRowsDroppedByWatermark stays 0), so a new-keyed event
@@ -262,7 +270,7 @@ def test_dedup_by_key_admits_late_rows(spark, tmp_path):
 
     spec = CATALOG["streaming_dedup_by_key"]
     df = spec.fn(spark, root)
-    assert streaming_ops.LAST_NUM_BATCHES >= 3
+    assert stream_drive()[1] >= 3
     report = compare(spark, root, df, spec.oracle)
     assert report["match"], report
 
@@ -275,7 +283,7 @@ def test_dedup_by_key_admits_late_rows(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_stateful_user_totals_admits_late_rows(spark, tmp_path):
+def test_stateful_user_totals_admits_late_rows(spark, tmp_path, stream_drive):
     """streaming_stateful_user_totals (applyInPandasWithState, NoTimeout):
     count/sum state is arrival-order-INSENSITIVE, so rows arriving days
     below any would-be watermark still fold in and the drained result
@@ -296,12 +304,12 @@ def test_stateful_user_totals_admits_late_rows(spark, tmp_path):
 
     spec = CATALOG["streaming_stateful_user_totals"]
     df = spec.fn(spark, root)
-    assert streaming_ops.LAST_NUM_BATCHES >= 3
+    assert stream_drive()[1] >= 3
     report = compare(spark, root, df, spec.oracle)
     assert report["match"], report
 
 
-def test_hourly_ohlc_complete_mode_merges_late_rows(spark, tmp_path):
+def test_hourly_ohlc_complete_mode_merges_late_rows(spark, tmp_path, stream_drive):
     """streaming_hourly_ohlc (watermarked windowed agg, COMPLETE mode):
     complete mode never evicts window state, so a row arriving days after
     its bar closed still merges — here it rewrites the bar's OPEN and HIGH
@@ -324,7 +332,7 @@ def test_hourly_ohlc_complete_mode_merges_late_rows(spark, tmp_path):
 
     spec = CATALOG["streaming_hourly_ohlc"]
     df = spec.fn(spark, root)
-    assert streaming_ops.LAST_NUM_BATCHES >= 3
+    assert stream_drive()[1] >= 3
     report = compare(spark, root, df, spec.oracle)
     assert report["match"], report
     # sanity: without the late row the oracle disagrees (open/high moved)
@@ -343,7 +351,7 @@ def _view_bars_through_file1(base):
     return sorted(pd.to_datetime(sub["ts"]).dt.floor("h").unique())
 
 
-def test_ewma_late_bars_within_window_admitted_exactly(spark, tmp_path):
+def test_ewma_late_bars_within_window_admitted_exactly(spark, tmp_path, stream_drive):
     """streaming_ewma_hourly: the order-SENSITIVE ring.  A late bar
     inserted ≤16 positions from the ring tail (and a late contribution
     MERGED into such a bar) is re-emitted batch-exactly — retention is
@@ -380,11 +388,12 @@ def test_ewma_late_bars_within_window_admitted_exactly(spark, tmp_path):
 
     spec = CATALOG["streaming_ewma_hourly"]
     df = spec.fn(spark, root)
-    assert streaming_ops.LAST_NUM_BATCHES >= 3
+    name, batches = stream_drive()
+    assert batches >= 3
     report = compare(spark, root, df, spec.oracle)
     assert report["match"], report
     # both plants were admitted — the admission-loss counter reads zero
-    assert streaming_ops.LAST_DROPPED_LATE["streaming_ewma_hourly"] == 0
+    assert _dropped_late(spark, name, "event_type") == 0
     # sanity: the plants are not invisible — the no-plant oracle disagrees
     clean = str(tmp_path / "clean_ewma_keep")
     _copy_side_tables(clean, skip="events.parquet")
@@ -392,7 +401,7 @@ def test_ewma_late_bars_within_window_admitted_exactly(spark, tmp_path):
     assert not compare(spark, clean, df, spec.oracle)["match"]
 
 
-def test_ewma_too_late_bars_dropped(spark, tmp_path):
+def test_ewma_too_late_bars_dropped(spark, tmp_path, stream_drive):
     """streaming_ewma_hourly: a bar arriving ~20 positions below the ring
     tail cannot have its (or its successors') 16-tap windows rebuilt from
     bounded state — it is DROPPED (insert and merge alike) instead of the
@@ -429,10 +438,11 @@ def test_ewma_too_late_bars_dropped(spark, tmp_path):
 
     spec = CATALOG["streaming_ewma_hourly"]
     df = spec.fn(spark, root)
-    assert streaming_ops.LAST_NUM_BATCHES >= 3
+    name, batches = stream_drive()
+    assert batches >= 3
     # the two planted too-late contributions are dropped AND counted
     # (r12, VERDICT #5 — observability, not silence)
-    assert streaming_ops.LAST_DROPPED_LATE["streaming_ewma_hourly"] == 2
+    assert _dropped_late(spark, name, "event_type") == 2
     clean = str(tmp_path / "clean_ewma_drop")
     _copy_side_tables(clean, skip="events.parquet")
     _write_parts(os.path.join(clean, "events.parquet"), schema, [base])
@@ -441,7 +451,7 @@ def test_ewma_too_late_bars_dropped(spark, tmp_path):
     assert not compare(spark, root, df, spec.oracle)["match"]
 
 
-def test_bot_cadence_drops_out_of_order_keeps_in_order(spark, tmp_path):
+def test_bot_cadence_drops_out_of_order_keeps_in_order(spark, tmp_path, stream_drive):
     """streaming_bot_cadence: gap moments need monotone per-key event
     time — an out-of-order arrival would retro-split a historical gap,
     which O(1) state cannot express (the pre-r11 code diffed a NEGATIVE
@@ -466,9 +476,10 @@ def test_bot_cadence_drops_out_of_order_keeps_in_order(spark, tmp_path):
 
     spec = CATALOG["streaming_bot_cadence"]
     df = spec.fn(spark, root)
-    assert streaming_ops.LAST_NUM_BATCHES >= 3
+    name, batches = stream_drive()
+    assert batches >= 3
     # the planted out-of-order event is dropped AND counted (r12 #5)
-    assert streaming_ops.LAST_DROPPED_LATE["streaming_bot_cadence"] == 1
+    assert _dropped_late(spark, name, "user_id") == 1
     clean = str(tmp_path / "clean_cadence")
     _copy_side_tables(clean, skip="events.parquet")
     _write_parts(

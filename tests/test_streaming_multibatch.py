@@ -118,19 +118,34 @@ def one_file_per_trigger():
     streaming_ops._STREAM_READ_OPTIONS.clear()
 
 
+@pytest.mark.parametrize("layout", ["file", "parts"])
+@pytest.mark.parametrize("table", ["events", "documents"])
+def test_file_stream_schema_is_the_inferred_one(spark, sf_dir, split_sf, table, layout):
+    """The stream's schema, merged from the part footers on the driver,
+    is the one Spark's inference job gives, and its source bytes are the
+    parts' sizes."""
+    sf = split_sf if layout == "parts" else sf_dir
+    path = os.path.join(sf, f"{table}.parquet")
+    stream, source_bytes = streaming_ops._file_stream(spark, sf, f"{table}.parquet")
+    assert stream.schema == spark.read.parquet(path).schema
+    parts = [os.path.join(path, f) for f in os.listdir(path)] if layout == "parts" else [path]
+    assert source_bytes == sum(os.path.getsize(p) for p in parts)
+
+
 @pytest.mark.parametrize("name", MULTIBATCH_OPS)
-def test_multibatch_matches_batch_oracle(spark, split_sf, name):
+def test_multibatch_matches_batch_oracle(spark, split_sf, name, stream_drive):
     spec = CATALOG[name]
     df = spec.fn(spark, split_sf)
     report = compare(spark, split_sf, df, spec.oracle)
-    assert streaming_ops.LAST_NUM_BATCHES >= 2, (
-        f"{name} drained in {streaming_ops.LAST_NUM_BATCHES} batch(es) — "
+    batches = stream_drive()[1]
+    assert batches >= 2, (
+        f"{name} drained in {batches} batch(es) — "
         "state never crossed a micro-batch boundary"
     )
     assert report["match"], report
 
 
-def test_ewma_late_old_hour_sorted_insert(spark, tmp_path):
+def test_ewma_late_old_hour_sorted_insert(spark, tmp_path, stream_drive):
     """r9 ADVICE: an hour arriving in a LATER batch that is older than
     already-ringed bars (and not itself in the ring) used to be appended
     at the tail, leaving hours_us unsorted — subsequent merges and EWMA
@@ -174,5 +189,5 @@ def test_ewma_late_old_hour_sorted_insert(spark, tmp_path):
     spec = CATALOG["streaming_ewma_hourly"]
     out = spec.fn(spark, root)
     report = compare(spark, root, out, spec.oracle)
-    assert streaming_ops.LAST_NUM_BATCHES >= 2
+    assert stream_drive()[1] >= 2
     assert report["match"], report

@@ -3,8 +3,8 @@
 ``streaming_ops._run_to_table`` drives every streaming operator.  These
 pin its sink contract (per-batch overwrite is replay-idempotent, output
 dirs are tracked for removal at exit, the output reads back under the
-result's known schema), the adaptive state-partition sizing, and the
-failure path (the error reaches the caller; the checkpoint, the running
+result's known schema), the adaptive state-partition sizing, that a
+build runs no job on the caller's thread, and the failure path (the error reaches the caller; the checkpoint, the running
 query and the shuffle-partition setting are all cleaned up).
 """
 
@@ -53,17 +53,40 @@ def test_files_sink_registers_dirs_for_cleanup(spark, sf_dir):
     assert os.path.isdir(so._SINK_DIRS[-1])
 
 
-def test_state_partitions_adaptive_sizing(spark, monkeypatch):
+def test_state_partitions_adaptive_sizing(spark):
     """VERDICT r13 #5: streaming state partitions size from source bytes,
     clamped to [cores, 32*cores]."""
     cpus = spark.sparkContext.defaultParallelism
-    monkeypatch.setattr(so, "_LAST_SOURCE_BYTES", 0)
-    assert so._state_partitions(spark) == cpus          # tiny corpus: full parallelism
-    monkeypatch.setattr(so, "_LAST_SOURCE_BYTES", 9 << 30)
+    assert so._state_partitions(spark, 0) == cpus          # tiny corpus: full parallelism
     # ~64 MB per partition, still under the 32*cpus clamp on small boxes
-    assert so._state_partitions(spark) == min(max(cpus, 145), 32 * cpus)
-    monkeypatch.setattr(so, "_LAST_SOURCE_BYTES", 1 << 50)
-    assert so._state_partitions(spark) == 32 * cpus     # upper clamp
+    assert so._state_partitions(spark, 9 << 30) == min(max(cpus, 145), 32 * cpus)
+    assert so._state_partitions(spark, 1 << 50) == 32 * cpus     # upper clamp
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["streaming_tumbling_counts", "streaming_stateful_user_totals"]  # in the benchmark
+    + ["streaming_ewma_hourly", "streaming_bot_cadence"],  # late drops stay in the sink view
+)
+def test_build_runs_no_caller_job(spark, sf_dir, catalog, name):
+    """The source schema comes from the footers and the late-drop count
+    stays in the sink view, so a build's only jobs are the drive's, under
+    the streaming query's own job group."""
+
+    def caller_jobs(group: str, build) -> list[int]:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    # the counter sees a caller-thread job: a schema-inference read runs one
+    events = os.path.join(sf_dir, "events.parquet")
+    assert caller_jobs(f"infer-{name}", lambda: spark.read.parquet(events))
+    assert caller_jobs(f"build-{name}", lambda: catalog[name].fn(spark, sf_dir)) == []
 
 
 _SCHEMA = T.StructType(
@@ -115,12 +138,13 @@ def test_known_schema_read_back(spark, tmp_path, shape, rows):
 def test_drive_with_no_output_rows(spark, sf_dir, mode):
     """A drive that emits no rows yields an empty view with the result's
     columns, in whole-dir (complete) and per-batch (append) modes."""
-    stream = so._events_stream(spark, sf_dir).where(F.col("event_id") < 0)
+    stream, source_bytes = so._events_stream(spark, sf_dir)
+    stream = stream.where(F.col("event_id") < 0)
     if mode == "complete":
         stream = stream.groupBy("event_type").agg(F.count("*").alias("n"))
     else:
         stream = stream.select("event_id", "event_type")
-    got = spark.table(so._run_to_table(stream, "no_rows", mode=mode))
+    got = spark.table(so._run_to_table(stream, "no_rows", source_bytes, mode=mode))
     assert got.columns == list(stream.columns)
     assert got.collect() == []
 
@@ -132,7 +156,8 @@ def test_failed_drive_cleans_up(spark, sf_dir):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "7")  # != any drive's count
     try:
-        stream = so._events_stream(spark, sf_dir).select(
+        stream, source_bytes = so._events_stream(spark, sf_dir)
+        stream = stream.select(
             F.when(
                 F.col("event_id") % 5 == 3, F.raise_error(F.lit("drive-probe-fault"))
             )
@@ -140,7 +165,7 @@ def test_failed_drive_cleans_up(spark, sf_dir):
             .alias("event_id")
         )
         with pytest.raises(Exception, match="drive-probe-fault"):
-            so._run_to_table(stream, "failprobe", mode="append")
+            so._run_to_table(stream, "failprobe", source_bytes, mode="append")
         leaked = glob.glob(os.path.join(tempfile.gettempdir(), "ckpt_failprobe_*"))
         assert leaked == []
         assert spark.streams.active == []
