@@ -35,7 +35,7 @@ from parquet_query_spark.workbench.dialect import (
     rewrite_duckdb_dialect,
     rewrite_duckdb_dialect_fallbacks,
 )
-from parquet_query_spark.workbench.dialect_core import _code_mask
+from parquet_query_spark.workbench.dialect_core import _brackets, _code_mask
 
 _ORDER_ALL_TAIL = re.compile(
     r"\bORDER\s+BY\s+ALL"
@@ -256,15 +256,7 @@ class Engine:
         if m is None:
             return None
         mask = _code_mask(statement)
-        if not all(mask[m.start() : m.start() + 5]):
-            return None
-        depth = 0
-        for i in range(m.start()):
-            if mask[i] and statement[i] == "(":
-                depth += 1
-            elif mask[i] and statement[i] == ")":
-                depth -= 1
-        if depth != 0:
+        if not all(mask[m.start() : m.start() + 5]) or _brackets(statement).depth[m.start()]:
             return None
         head = statement[: m.start()].rstrip()
         if not head:

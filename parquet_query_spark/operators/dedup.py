@@ -936,11 +936,6 @@ def dedup_cluster_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _components_output(pairs)
 
 
-# round count of the most recent _min_label_components run (read by the
-# chain-topology convergence test)
-LAST_CC_ROUNDS = 0
-
-
 @query(
     "dedup_cluster_survivors",
     oracle=f"""
@@ -1016,7 +1011,6 @@ def _min_label_components(edges: DataFrame) -> DataFrame:
     labels are localCheckpoint-ed (truncates the iterative lineage AND lets
     the blocks be freed when the result is dropped — a .cache() here would
     pin executor storage until session end)."""
-    global LAST_CC_ROUNDS
     # Lazy localCheckpoint, not .cache() (r14): a cached plan is compiled
     # with AQE's final-stage coalescing DISABLED
     # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false
@@ -1057,9 +1051,7 @@ def _min_label_components(edges: DataFrame) -> DataFrame:
         .withColumnRenamed("src", "node")
         .localCheckpoint(eager=False)
     )
-    rounds = 0
     while True:
-        rounds += 1
         # Propagation as ONE aggregation (r14, VERDICT #2 / guide §2.4):
         # the old form computed nbr_min = min neighbor label per src and
         # then JOINED it back onto labels — a second node-keyed shuffle
@@ -1112,7 +1104,6 @@ def _min_label_components(edges: DataFrame) -> DataFrame:
             # no standalone checkpoint job per round (guide §1.2)
             .localCheckpoint(eager=False)
         )
-    LAST_CC_ROUNDS = rounds
     return labels
 
 

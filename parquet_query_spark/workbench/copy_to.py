@@ -31,6 +31,8 @@ import tempfile
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from parquet_query_spark.workbench.dialect_core import _split_top
+
 _COPY_HEAD = re.compile(r"^\s*COPY\b", re.IGNORECASE)
 
 
@@ -56,25 +58,7 @@ def _parse_options(text: str | None) -> dict[str, str]:
     opts: dict[str, str] = {}
     if not text:
         return opts
-    depth = 0
-    part, parts = [], []
-    in_str = False
-    for ch in text:
-        if ch == "'" and not in_str:
-            in_str = True
-        elif ch == "'" and in_str:
-            in_str = False
-        if ch == "(" and not in_str:
-            depth += 1
-        elif ch == ")" and not in_str:
-            depth -= 1
-        if ch == "," and depth == 0 and not in_str:
-            parts.append("".join(part))
-            part = []
-        else:
-            part.append(ch)
-    parts.append("".join(part))
-    for p in parts:
+    for p in _split_top(text):
         p = p.strip()
         if not p:
             continue

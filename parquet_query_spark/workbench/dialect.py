@@ -80,10 +80,14 @@ hits first:
   UNPIVOT.  (``COPY ... TO`` executes in ``workbench/copy_to.py``;
   PIVOT/SUMMARIZE/COLUMNS dispatch schema-aware in ``Engine.sql``.)
 
-Every rewrite is lexer-aware (single/double/backtick quotes, ``--`` and
-``/* */`` comments — the A6 lexer's rules) so occurrences inside strings,
-identifiers, or comments are never touched, mirroring how
-``statements.rewrite_path_tables`` treats path literals.
+Every rewrite is lexer-aware so occurrences inside strings, identifiers,
+or comments are never touched: one memoized lexer,
+``dialect_core._lex``, knows ``'…'`` strings, ``"…"`` and backtick
+identifiers (doubled-delimiter escapes), ``$tag$…$tag$`` strings and
+``--`` / ``/* */`` comments, and every pass — like
+``statements.rewrite_path_tables`` — reads its spans.  These are not the
+A6 splitter's rules (``statements._lex_segments`` knows neither backticks
+nor dollar strings, as in the reference).
 
 - Text normalization pack (r8, mutation-fuzz driven): comments are
   STRIPPED once at the ``Engine.sql`` funnel (``strip_comments`` —
@@ -306,8 +310,8 @@ from parquet_query_spark.workbench.dialect_typing import (
 
 # The pass pipeline, in application order.  Ordering constraints that
 # matter (each learned from a fuzz failure): dollar-strings/backslashes/
-# underscores run before ANY mask-based pass (the shared lexer doesn't
-# know those token forms); brace literals before brackets (MAP {..}['k']
+# underscores run first, so every later pass sees Spark's spelling of
+# strings and numbers; brace literals before brackets (MAP {..}['k']
 # needs the call form); dot-chain before brackets (subscripts glue to
 # their chained base); brackets before the ops pack (subscript groups
 # must already be calls when operands are captured); fn_macros before

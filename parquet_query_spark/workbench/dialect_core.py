@@ -7,139 +7,185 @@ from __future__ import annotations
 import contextvars
 import functools
 import re
+from collections.abc import Mapping
+from types import MappingProxyType
+from typing import NamedTuple
 
 
 # ── shared lexing ────────────────────────────────────────────────────────
+#
+# One lexer decides, for every pass, what is code and what is not: `_lex`
+# cuts a text into spans of code, ``'…'`` strings, ``"…"`` and backtick
+# identifiers, ``$tag$…$tag$`` strings and ``--`` / ``/* */`` comments.  The
+# code mask, the comment stripper, the dollar-string and backslash passes,
+# the identifier unquoting and the path-literal rewrite are views over its
+# spans, and `_brackets` builds the one bracket table from them.  Both are
+# memoized by text: the passes ask again for text they have not changed
+# (a scan loop re-masks its text after every candidate).
+
+CODE, STRING, QUOTED, BACKTICK, DOLLAR, COMMENT = "code", "'", '"', "`", "$", "comment"
+
+# Doubled delimiters escape inside all three quote kinds; a quote or block
+# comment left open runs to the end of the text.  A dollar string needs
+# its closing tag: an unclosed ``$tag$`` is code.
+_TOKEN = re.compile(
+    r"'(?:[^']+|'')*(?:'|\Z)"
+    r'|"(?:[^"]+|"")*(?:"|\Z)'
+    r"|`(?:[^`]+|``)*(?:`|\Z)"
+    r"|\$(?P<tag>[A-Za-z_][A-Za-z_0-9]*|)\$.*?\$(?P=tag)\$"
+    r"|--[^\n]*"
+    r"|/\*.*?(?:\*/|\Z)",
+    re.DOTALL,
+)
+_TOKEN_KIND = {"'": STRING, '"': QUOTED, "`": BACKTICK, "$": DOLLAR, "-": COMMENT, "/": COMMENT}
+
+
+@functools.lru_cache(maxsize=256)
+def _lex(sql: str) -> tuple[tuple[str, int, int], ...]:
+    """``(kind, start, end)`` spans covering ``sql`` in order.  A quoted
+    span includes its delimiters; a ``--`` comment stops before its
+    newline, which is code."""
+    spans: list[tuple[str, int, int]] = []
+    pos = 0
+    for m in _TOKEN.finditer(sql):
+        if m.start() > pos:
+            spans.append((CODE, pos, m.start()))
+        spans.append((_TOKEN_KIND[sql[m.start()]], m.start(), m.end()))
+        pos = m.end()
+    if pos < len(sql):
+        spans.append((CODE, pos, len(sql)))
+    return tuple(spans)
+
+
+def _map_tokens(sql: str, kind: str, fn) -> str:
+    """``sql`` with every span of ``kind`` replaced by ``fn(span text)``."""
+    return "".join(
+        fn(sql[s:e]) if k == kind else sql[s:e] for k, s, e in _lex(sql)
+    )
 
 
 def _code_mask(sql: str) -> list[bool]:
-    """True for characters that are plain SQL code — outside single-quoted
-    strings, double-quoted / backtick-quoted identifiers, and comments.
-    Quote/comment delimiter characters themselves count as non-code.
-
-    Memoized by text, as the rewrite passes ask again for text they have
-    not changed (a scan loop re-masks its text after every candidate); the
-    caller gets its own copy, which it may mutate."""
+    """True for characters that are plain SQL code — outside strings,
+    quoted identifiers and comments (their delimiters count as non-code).
+    The caller gets its own copy, which it may mutate."""
     return list(_code_mask_of(sql))
 
 
 @functools.lru_cache(maxsize=256)
 def _code_mask_of(sql: str) -> tuple[bool, ...]:
-    n = len(sql)
-    mask = [True] * n
-    i = 0
-    state = None  # None | 'sq' | 'dq' | 'bq' | 'line' | 'block'
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if state == "line":
-            mask[i] = False
-            if ch == "\n":
-                state = None
-                mask[i] = True
-        elif state == "block":
-            mask[i] = False
-            if ch == "*" and nxt == "/":
-                mask[i + 1] = False
-                i += 1
-                state = None
-        elif state == "sq":
-            mask[i] = False
-            if ch == "'" and nxt == "'":
-                mask[i + 1] = False
-                i += 1
-            elif ch == "'":
-                state = None
-        elif state == "dq":
-            mask[i] = False
-            if ch == '"' and nxt == '"':
-                mask[i + 1] = False
-                i += 1
-            elif ch == '"':
-                state = None
-        elif state == "bq":
-            mask[i] = False
-            if ch == "`" and nxt == "`":
-                mask[i + 1] = False
-                i += 1
-            elif ch == "`":
-                state = None
-        elif ch == "-" and nxt == "-":
-            mask[i] = mask[i + 1] = False
-            state = "line"
-            i += 1
-        elif ch == "/" and nxt == "*":
-            mask[i] = mask[i + 1] = False
-            state = "block"
-            i += 1
-        elif ch == "'":
-            mask[i] = False
-            state = "sq"
-        elif ch == '"':
-            mask[i] = False
-            state = "dq"
-        elif ch == "`":
-            mask[i] = False
-            state = "bq"
-        i += 1
+    mask: list[bool] = []
+    for kind, s, e in _lex(sql):
+        mask += [kind == CODE] * (e - s)
     return tuple(mask)
 
 
-def _comment_mask(sql: str) -> list[bool]:
-    """True only for characters inside comments (delimiters included) —
-    distinguishes trailing-comment junk from string-literal characters,
-    which `_code_mask` lumps together as non-code.  Needed where a pass
-    must skip comments but keep literals as part of an expression
-    (ADVICE r7: ``ORDER BY a -- note`` must not get NULLS LAST inserted
-    inside the comment)."""
-    n = len(sql)
-    cmask = [False] * n
-    i = 0
-    state = None  # None | 'sq' | 'dq' | 'bq' | 'line' | 'block'
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if state == "line":
-            if ch == "\n":
-                state = None
-            else:
-                cmask[i] = True
-        elif state == "block":
-            cmask[i] = True
-            if ch == "*" and nxt == "/":
-                cmask[i + 1] = True
-                i += 1
-                state = None
-        elif state in ("sq", "dq", "bq"):
-            q = {"sq": "'", "dq": '"', "bq": "`"}[state]
-            if ch == q and nxt == q:
-                i += 1
-            elif ch == q:
-                state = None
-        elif ch == "-" and nxt == "-":
-            cmask[i] = cmask[i + 1] = True
-            state = "line"
-            i += 1
-        elif ch == "/" and nxt == "*":
-            cmask[i] = cmask[i + 1] = True
-            state = "block"
-            i += 1
-        elif ch == "'":
-            state = "sq"
-        elif ch == '"':
-            state = "dq"
-        elif ch == "`":
-            state = "bq"
-        i += 1
-    return cmask
+class _Brackets(NamedTuple):
+    depth: tuple[int, ...]  # open brackets before each position, and at len(sql)
+    match: Mapping[int, int]  # opener -> closer and closer -> opener
 
 
-_DOLLAR_TAG = re.compile(r"\$([A-Za-z_][A-Za-z_0-9]*)?\$")
+_BRACKET_CHAR = re.compile(r"[()\[\]{}]")
+
+
+@functools.lru_cache(maxsize=256)
+def _brackets(sql: str) -> _Brackets:
+    """The bracket table of ``sql`` over code ``()``, ``[]`` and ``{}``
+    together.  A closer carries its opener's depth, so ``depth[i] == 0``
+    is top level for every kind of position.  A closer pairs with the
+    innermost open bracket whatever its kind; one with nothing open is
+    unmatched and takes the depth below zero, as a plain counter would."""
+    code = _code_mask_of(sql)
+    depth: list[int] = []
+    match: dict[int, int] = {}
+    stack: list[int] = []
+    d = pos = 0
+    for m in _BRACKET_CHAR.finditer(sql):
+        i = m.start()
+        if not code[i]:
+            continue
+        depth.extend([d] * (i - pos))
+        if sql[i] in "([{":
+            depth.append(d)
+            stack.append(i)
+            d += 1
+        else:
+            d -= 1
+            depth.append(d)
+            if stack:
+                j = stack.pop()
+                match[i], match[j] = j, i
+        pos = i + 1
+    depth.extend([d] * (len(sql) - pos + 1))
+    return _Brackets(tuple(depth), MappingProxyType(match))
+
+
+def _match(sql: str, i: int) -> int | None:
+    """The bracket paired with the one at ``i``, either way, or None."""
+    return _brackets(sql).match.get(i)
+
+
+def _enclosing(sql: str, pos: int) -> int | None:
+    """The innermost open bracket around ``pos``, or None."""
+    depth = _brackets(sql).depth
+    code = _code_mask_of(sql)
+    want = depth[pos] - 1
+    for k in range(pos - 1, -1, -1):
+        if depth[k] == want and code[k] and sql[k] in "([{":
+            return k
+    return None
+
+
+def _top_positions(text: str, sep: str) -> list[int]:
+    """Positions of code ``sep`` characters outside every bracket."""
+    code = _code_mask_of(text)
+    depth = _brackets(text).depth
+    return [
+        m.start()
+        for m in re.finditer(re.escape(sep), text)
+        if code[m.start()] and depth[m.start()] == 0
+    ]
+
+
+def _split_top(text: str, sep: str = ",") -> list[str]:
+    """``text`` cut at each top-level code ``sep`` (empty pieces kept)."""
+    parts, last = [], 0
+    for i in _top_positions(text, sep):
+        parts.append(text[last:i])
+        last = i + 1
+    parts.append(text[last:])
+    return parts
+
+
+def _top_colons(text: str) -> list[int]:
+    """Top-level ``:`` positions that are not half of a ``::`` cast."""
+    return [
+        i
+        for i in _top_positions(text, ":")
+        if text[i + 1 : i + 2] != ":" and text[i - 1 : i] != ":"
+    ]
+
+
+def _split_call_args(sql: str, open_paren: int) -> tuple[list[str], int] | None:
+    """Top-level comma-split of a call's arguments; returns (args, close_idx)."""
+    close = _match(sql, open_paren)
+    if close is None or close < open_paren:
+        return None
+    code = _code_mask_of(sql)
+    depth = _brackets(sql).depth
+    inner = depth[open_paren] + 1
+    args, start = [], open_paren + 1
+    i = sql.find(",", start, close)
+    while i != -1:
+        if code[i] and depth[i] == inner:
+            args.append(sql[start:i])
+            start = i + 1
+        i = sql.find(",", i + 1, close)
+    args.append(sql[start:close])
+    return args, close
 
 
 def strip_comments(sql: str) -> str:
-    """Replace every SQL comment with a single space (string-aware,
-    including dollar-quoted strings, which `_comment_mask` predates).
+    """Replace every SQL comment with a single space.
 
     Comments are semantically neutral in both DuckDB and Spark, but the
     ~30 regex rewrite passes tolerate only whitespace between tokens —
@@ -150,72 +196,7 @@ def strip_comments(sql: str) -> str:
     engine funnel fixes the entire class instead of hardening every pass."""
     if "--" not in sql and "/*" not in sql:
         return sql
-    out: list[str] = []
-    i, n = 0, len(sql)
-    state: str | None = None  # None | sq | dq | bq | line | block
-    dollar_tag: str | None = None
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if state == "line":
-            if ch == "\n":
-                state = None
-                out.append(ch)
-            i += 1
-            continue
-        if state == "block":
-            if ch == "*" and nxt == "/":
-                state = None
-                i += 2
-            else:
-                i += 1
-            continue
-        if state == "dollar":
-            out.append(ch)
-            if ch == "$" and sql.startswith(dollar_tag, i):
-                out.append(sql[i + 1 : i + len(dollar_tag)])
-                i += len(dollar_tag)
-                state, dollar_tag = None, None
-            else:
-                i += 1
-            continue
-        if state in ("sq", "dq", "bq"):
-            q = {"sq": "'", "dq": '"', "bq": "`"}[state]
-            out.append(ch)
-            if ch == q and nxt == q:
-                out.append(nxt)
-                i += 2
-                continue
-            if ch == q:
-                state = None
-            i += 1
-            continue
-        if ch == "-" and nxt == "-":
-            out.append(" ")
-            state = "line"
-            i += 2
-            continue
-        if ch == "/" and nxt == "*":
-            out.append(" ")
-            state = "block"
-            i += 2
-            continue
-        if ch == "$":
-            m = _DOLLAR_TAG.match(sql, i)
-            if m:
-                state, dollar_tag = "dollar", m.group(0)
-                out.append(m.group(0))
-                i = m.end()
-                continue
-        if ch == "'":
-            state = "sq"
-        elif ch == '"':
-            state = "dq"
-        elif ch == "`":
-            state = "bq"
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    return _map_tokens(sql, COMMENT, lambda _: " ")
 
 
 # Words whose bare spelling changes the parse — quoted identifiers with
@@ -252,97 +233,17 @@ def _unquote_function_names(sql: str) -> str:
     resolve via spark.sql.ansi.doubleQuotedIdentifiers."""
     if '"' not in sql:
         return sql
-    out: list[str] = []
-    i, n = 0, len(sql)
-    state: str | None = None  # None | sq | bq | dollar
-    dollar_tag: str | None = None
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if state == "dollar":
-            # inside a $tag$...$tag$ string: copy verbatim (quotes in the
-            # body are DATA — unquoting them silently corrupts literals)
-            out.append(ch)
-            if ch == "$" and sql.startswith(dollar_tag, i):
-                out.append(sql[i + 1 : i + len(dollar_tag)])
-                i += len(dollar_tag)
-                state, dollar_tag = None, None
-            else:
-                i += 1
-            continue
-        if state == "sq":
-            out.append(ch)
-            if ch == "'" and nxt == "'":
-                out.append(nxt)
-                i += 2
-                continue
-            if ch == "'":
-                state = None
-            i += 1
-            continue
-        if state == "bq":
-            out.append(ch)
-            if ch == "`" and nxt == "`":
-                out.append(nxt)
-                i += 2
-                continue
-            if ch == "`":
-                state = None
-            i += 1
-            continue
-        if ch == "'":
-            state = "sq"
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "`":
-            state = "bq"
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "$":
-            m = _DOLLAR_TAG.match(sql, i)
-            if m:
-                state, dollar_tag = "dollar", m.group(0)
-                out.append(m.group(0))
-                i = m.end()
-                continue
-        if ch == '"':
-            m = re.match(r'"([a-z_][a-z0-9_]*)"', sql[i:])
-            if m and m.group(1) not in _RESERVED_BARE:
-                out.append(m.group(1))
-                i = i + m.end()
-                continue
-            # a quoted identifier that needs its quotes (uppercase, spaces,
-            # "" escapes, reserved words): copy it verbatim
-            j = i + 1
-            while j < n:
-                if sql[j] == '"' and j + 1 < n and sql[j + 1] == '"':
-                    j += 2
-                    continue
-                if sql[j] == '"':
-                    j += 1
-                    break
-                j += 1
-            out.append(sql[i:j])
-            i = j
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+
+    def unquote(ident: str) -> str:
+        # a quoted identifier that needs its quotes (uppercase, spaces,
+        # "" escapes, reserved words) stays verbatim
+        m = _LOWER_IDENT.fullmatch(ident)
+        return m.group(1) if m and m.group(1) not in _RESERVED_BARE else ident
+
+    return _map_tokens(sql, QUOTED, unquote)
 
 
-def _depths(sql: str, mask: list[bool]) -> list[int]:
-    """Paren depth at each position (code parens only)."""
-    depths = []
-    d = 0
-    for i, ch in enumerate(sql):
-        if mask[i] and ch == ")":
-            d -= 1
-        depths.append(d)
-        if mask[i] and ch == "(":
-            d += 1
-    return depths
+_LOWER_IDENT = re.compile(r'"([a-z_][a-z0-9_]*)"')
 
 
 def _keyword_matches(sql: str, mask: list[bool], pattern: str) -> list[re.Match]:
@@ -381,16 +282,7 @@ def _rewrite_dynamic_interval(sql: str) -> str:
         if hit is None:
             return sql
         open_p = hit.end() - 1
-        depth = 0
-        close = None
-        for i in range(open_p, len(sql)):
-            if mask[i] and sql[i] == "(":
-                depth += 1
-            elif mask[i] and sql[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    close = i
-                    break
+        close = _match(sql, open_p)
         if close is None:
             return sql
         um = _DYN_INTERVAL_UNIT.match(sql, close + 1)
@@ -439,13 +331,13 @@ def _rewrite_named_window_case(sql: str) -> str:
     if "window" not in sql.lower() or "over" not in sql.lower():
         return sql
     mask = _code_mask(sql)
-    depths = _depths(sql, mask)
+    depths = _brackets(sql).depth
     defined: dict[str, str] = {}
     for m in _keyword_matches(sql, mask, _WINDOW_DEF.pattern):
         defined[m.group(1).lower()] = m.group(1)
         # continuation definitions: WINDOW w1 AS (...), w2 AS (...)
         close = m.end() - 1  # the '('
-        d0 = depths[close]  # _depths records the same value on the matching ')'
+        d0 = depths[close]  # a closer carries its opener's depth
         j = close + 1
         while j < len(sql):
             if mask[j] and sql[j] == ")" and depths[j] == d0:
@@ -561,28 +453,6 @@ def strftime_format_to_java(fmt: str) -> str:
     return "".join(out)
 
 
-def _split_call_args(sql: str, mask: list[bool], open_paren: int) -> tuple[list[str], int] | None:
-    """Top-level comma-split of a call's arguments; returns (args, close_idx)."""
-    depth = 0
-    args: list[str] = []
-    start = open_paren + 1
-    for i in range(open_paren, len(sql)):
-        if not mask[i]:
-            continue
-        ch = sql[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                args.append(sql[start:i])
-                return args, i
-        elif ch == "," and depth == 1:
-            args.append(sql[start:i])
-            start = i + 1
-    return None
-
-
 _SQ_LITERAL = re.compile(r"^\s*'((?:[^']|'')*)'\s*$")
 
 
@@ -591,7 +461,7 @@ def _rewrite_strftime(sql: str) -> str:
     out = sql
     for m in reversed(_keyword_matches(sql, mask, r"\bstrftime\s*\(")):
         open_paren = m.end() - 1
-        parsed = _split_call_args(sql, mask, open_paren)
+        parsed = _split_call_args(sql, open_paren)
         if parsed is None:
             continue
         args, close = parsed
@@ -619,7 +489,7 @@ def _rewrite_strptime(sql: str) -> str:
     out = sql
     for m in reversed(_keyword_matches(sql, mask, r"\bstrptime\s*\(")):
         open_paren = m.end() - 1
-        parsed = _split_call_args(sql, mask, open_paren)
+        parsed = _split_call_args(sql, open_paren)
         if parsed is None:
             continue
         args, close = parsed
@@ -648,7 +518,7 @@ def _qualify_parts(sql: str) -> tuple[str, str, str, str] | None:
     """Split ``<head> FROM <body> QUALIFY <pred> <tail>`` at top level.
     Returns (head, body, pred, tail) or None when no top-level QUALIFY."""
     mask = _code_mask(sql)
-    depths = _depths(sql, mask)
+    depths = _brackets(sql).depth
     quals = [
         m
         for m in _keyword_matches(sql, mask, r"\bQUALIFY\b")
@@ -762,7 +632,7 @@ _ASOF_CLAUSE_END = re.compile(
 
 def _split_top_and(text: str) -> list[str]:
     mask = _code_mask(text)
-    depths = _depths(text, mask)
+    depths = _brackets(text).depth
     parts, last = [], 0
     for m in re.finditer(r"\bAND\b", text, re.IGNORECASE):
         if all(mask[i] for i in range(m.start(), m.end())) and depths[m.start()] == 0:
@@ -774,7 +644,7 @@ def _split_top_and(text: str) -> list[str]:
 
 def _rewrite_asof_join(sql: str) -> str:
     mask = _code_mask(sql)
-    depths = _depths(sql, mask)
+    depths = _brackets(sql).depth
     hits = [
         m for m in _keyword_matches(sql, mask, _ASOF_KW.pattern) if depths[m.start()] == 0
     ]
@@ -801,7 +671,7 @@ def _rewrite_asof_join(sql: str) -> str:
         (
             e
             for e in _keyword_matches(sql[on_start:], _code_mask(sql[on_start:]), _ASOF_CLAUSE_END.pattern)
-            if _depths(sql[on_start:], _code_mask(sql[on_start:]))[e.start()] == 0
+            if _brackets(sql[on_start:]).depth[e.start()] == 0
         ),
         None,
     )
@@ -818,7 +688,7 @@ def _rewrite_asof_join(sql: str) -> str:
             o
             for o in re.finditer(r"(<=|>=|=|<|>)", term)
             if all(tmask[i] for i in range(o.start(), o.end()))
-            and _depths(term, tmask)[o.start()] == 0
+            and _brackets(term).depth[o.start()] == 0
         ]
         if len(ops) != 1:
             raise AsofRewriteError(f"unsupported ASOF ON term: {term.strip()!r}")
@@ -881,7 +751,7 @@ def _rewrite_asof_join(sql: str) -> str:
         (
             f
             for f in _keyword_matches(rewritten, smask, r"\bFROM\b")
-            if _depths(rewritten, smask)[f.start()] == 0
+            if _brackets(rewritten).depth[f.start()] == 0
         ),
         None,
     )
@@ -1050,16 +920,7 @@ def _rewrite_unpivot(sql: str) -> str:
         return sql
     src = m.group("src")
     tail = m.group("tail").strip()
-    cols_text = m.group("cols").strip()
-    cmask = _code_mask(cols_text)
-    depths = _depths(cols_text, cmask)
-    parts: list[str] = []
-    start = 0
-    for i, ch in enumerate(cols_text):
-        if cmask[i] and ch == "," and depths[i] == 0:
-            parts.append(cols_text[start:i])
-            start = i + 1
-    parts.append(cols_text[start:])
+    parts = _split_top(m.group("cols").strip())
     labeled = ", ".join(_unpivot_label(p) for p in parts)
     return (
         f"SELECT * FROM {src} UNPIVOT ({m.group('value')} "
@@ -1091,7 +952,7 @@ def _rewrite_from_first(sql: str) -> str:
         for m in _keyword_matches(
             body, mask, r"\b(?:UNION|INTERSECT|EXCEPT)\b"
         )
-        if _paren_depth_at(body, mask, m.start()) == 0
+        if _brackets(body).depth[m.start()] == 0
     ]
     if setop:
         cut = setop[0].start()
@@ -1109,7 +970,7 @@ def _rewrite_from_first(sql: str) -> str:
     sel = [
         m
         for m in _keyword_matches(body, mask, r"\bSELECT\b")
-        if _paren_depth_at(body, mask, m.start()) == 0
+        if _brackets(body).depth[m.start()] == 0
     ]
     if not sel:
         return f"SELECT * {body}"
@@ -1124,7 +985,7 @@ def _rewrite_from_first(sql: str) -> str:
             rmask,
             r"\b(?:WHERE|GROUP\s+BY|HAVING|QUALIFY|WINDOW|ORDER\s+BY|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT)\b",
         )
-        if _paren_depth_at(rest, rmask, t.start()) == 0
+        if _brackets(rest).depth[t.start()] == 0
     ]
     if tail:
         cut = tail[0].start()
@@ -1132,39 +993,9 @@ def _rewrite_from_first(sql: str) -> str:
     return f"SELECT {rest} {pre}"
 
 
-def _paren_depth_at(sql: str, mask: list[bool], pos: int) -> int:
-    depth = 0
-    for i in range(pos):
-        if not mask[i]:
-            continue
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-    return depth
-
-
 # ── DISTINCT ON → ranked window ─────────────────────────────────────────
 
 _DISTINCT_ON = re.compile(r"^\s*SELECT\s+DISTINCT\s+ON\s*\(", re.IGNORECASE)
-
-
-def _top_level_split(text: str, mask: list[bool], sep: str = ",") -> list[str]:
-    parts: list[str] = []
-    depth = 0
-    start = 0
-    for i, ch in enumerate(text):
-        if not mask[i]:
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == sep and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    return [p for p in parts if p.strip()]
 
 
 def _rewrite_distinct_on(sql: str) -> str:
@@ -1180,7 +1011,7 @@ def _rewrite_distinct_on(sql: str) -> str:
         return sql
     body = sql.strip().rstrip(";")
     mask = _code_mask(body)
-    parsed = _split_call_args(body, mask, m.end() - 1)
+    parsed = _split_call_args(body, m.end() - 1)
     if parsed is None:
         return sql
     keys, close = parsed
@@ -1188,7 +1019,7 @@ def _rewrite_distinct_on(sql: str) -> str:
 
     def top_kw(pattern, start=0):
         for k in _keyword_matches(body, mask, pattern):
-            if k.start() >= start and _paren_depth_at(body, mask, k.start()) == 0:
+            if k.start() >= start and _brackets(body).depth[k.start()] == 0:
                 return k
         return None
 
@@ -1204,12 +1035,7 @@ def _rewrite_distinct_on(sql: str) -> str:
 
     if ob is not None:
         ob_end = lim.start() if lim is not None and lim.start() > ob.end() else len(body)
-        items = [
-            i.strip()
-            for i in _top_level_split(
-                body[ob.end() : ob_end], _code_mask(body[ob.end() : ob_end])
-            )
-        ]
+        items = [i.strip() for i in _split_top(body[ob.end() : ob_end]) if i.strip()]
     else:
         items = list(keys)
 
@@ -1266,32 +1092,9 @@ _BRACKET_NEVER_CALL_KEYWORDS = _BRACKET_NONLITERAL_KEYWORDS - {"if", "array"}
 _IDX_CHAIN_END = re.compile(rf"({_IDENT}(?:\s*\.\s*{_IDENT})*)\s*$")
 
 
-def _bracket_close(sql: str, mask: list[bool], i: int) -> int | None:
-    depth = 0
-    for k in range(i, len(sql)):
-        if not mask[k]:
-            continue
-        if sql[k] == "[":
-            depth += 1
-        elif sql[k] == "]":
-            depth -= 1
-            if depth == 0:
-                return k
-    return None
-
-
 def _split_top_colon(text: str) -> list[str] | None:
     """Split on a single top-level ':' (slice form); None if not a slice."""
-    mask = _code_mask(text)
-    depths = _depths(text, mask)
-    cuts = [
-        i
-        for i, ch in enumerate(text)
-        if ch == ":" and mask[i] and depths[i] == 0
-        # '::' casts are not slice separators
-        and not (i + 1 < len(text) and text[i + 1] == ":")
-        and not (i > 0 and text[i - 1] == ":")
-    ]
+    cuts = _top_colons(text)
     if len(cuts) != 1:
         return None
     return [text[: cuts[0]], text[cuts[0] + 1 :]]
@@ -1299,7 +1102,7 @@ def _split_top_colon(text: str) -> list[str] | None:
 
 def _rewrite_comprehension(inner: str) -> str | None:
     mask = _code_mask(inner)
-    depths = _depths(inner, mask)
+    depths = _brackets(inner).depth
     fors = [
         m
         for m in _keyword_matches(inner, mask, r"\bFOR\b")
@@ -1315,7 +1118,7 @@ def _rewrite_comprehension(inner: str) -> str | None:
     var = rm.group(1)
     src = rest[rm.end() :]
     smask = _code_mask(src)
-    sdepths = _depths(src, smask)
+    sdepths = _brackets(src).depth
     ifs = [
         m
         for m in _keyword_matches(src, smask, r"\bIF\b")
@@ -1415,17 +1218,8 @@ def _subscript_base_heads(sql: str) -> set[str]:
         if j < 0:
             continue
         if sql[j] == ")":
-            depth = 0
-            k = j
-            while k >= 0:
-                if mask[k] and sql[k] == ")":
-                    depth += 1
-                elif mask[k] and sql[k] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
-            if depth != 0:
+            k = _match(sql, j)
+            if k is None:
                 continue
             m = re.search(r"([A-Za-z_][\w$.]*)\s*\Z", sql[:k])
             if m and m.group(1).lower() not in _BRACKET_NONLITERAL_KEYWORDS:
@@ -1513,7 +1307,7 @@ def _rewrite_brackets(sql: str) -> str:
                 out.append(ch)
                 i += 1
                 continue
-            j = _bracket_close(sql, mask, i)
+            j = _match(sql, i)
             if j is None or j >= end:
                 out.append(ch)
                 i += 1
@@ -1530,17 +1324,8 @@ def _rewrite_brackets(sql: str) -> str:
                 cut = im.start(1)
             elif prev == ")":
                 # extend back over the balanced (...) and a call name
-                depth = 0
-                k = len(stripped) - 1
-                while k >= 0:
-                    if stripped[k] == ")":
-                        depth += 1
-                    elif stripped[k] == "(":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    k -= 1
-                if depth == 0:
+                k = _match(stripped, len(stripped) - 1)
+                if k is not None:
                     nm = _IDX_CHAIN_END.search(stripped[:k])
                     if nm and nm.group(1).lower() not in _BRACKET_NEVER_CALL_KEYWORDS:
                         cut = nm.start(1)
@@ -1637,17 +1422,8 @@ def _table_ref_before(sql: str, mask: list[bool], pos: int):
     if j < 0:
         return None
     if mask[j] and sql[j] == ")":
-        depth = 0
-        k = j
-        while k >= 0:
-            if mask[k] and sql[k] == ")":
-                depth += 1
-            elif mask[k] and sql[k] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            k -= 1
-        if k < 0:
+        k = _match(sql, j)
+        if k is None:
             return None
         # attached table-function name, e.g. range(10)
         k2 = k - 1

@@ -6,8 +6,8 @@ from __future__ import annotations
 import re
 
 from parquet_query_spark.workbench.dialect_core import (
+    _brackets,
     _code_mask,
-    _depths,
     _series_body,
     _split_call_args,
 )
@@ -775,7 +775,7 @@ def _strip_order_arg(arg: str) -> str | None:
     """If ``arg`` carries a top-level in-aggregate ``ORDER BY`` clause,
     return the argument with the clause removed; else None."""
     mask = _code_mask(arg)
-    depths = _depths(arg, mask)
+    depths = _brackets(arg).depth
     for m in re.finditer(r"\bORDER\s+BY\b", arg, re.IGNORECASE):
         # only a TOP-LEVEL code ORDER BY is the in-aggregate clause —
         # one inside a string literal or a nested subquery is not
@@ -856,7 +856,7 @@ def _rewrite_sample_moments(sql: str) -> str:
         prev = sql[m.start() - 1] if m.start() > 0 else ""
         if prev in ".@:":
             continue
-        parsed = _split_call_args(sql, mask, m.end() - 1)
+        parsed = _split_call_args(sql, m.end() - 1)
         if parsed is None or len(parsed[0]) != 1:
             continue
         args, close = parsed
@@ -2025,7 +2025,7 @@ def _rewrite_fn_macros(sql: str) -> str:
             prev = sql[s - 1] if s > 0 else ""
             if prev in ".@:":
                 continue
-            parsed = _split_call_args(sql, mask, m.end() - 1)
+            parsed = _split_call_args(sql, m.end() - 1)
             if parsed is None:
                 continue
             args, close = parsed

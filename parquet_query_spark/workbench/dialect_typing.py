@@ -10,12 +10,20 @@ from parquet_query_spark.workbench.dialect_core import (
     _ARRAYISH_BASE,
     _BRACKET_NEVER_CALL_KEYWORDS,
     _BRACKET_NONLITERAL_KEYWORDS,
+    COMMENT,
+    DOLLAR,
+    STRING,
+    _brackets,
     _code_mask,
-    _comment_mask,
-    _depths,
+    _enclosing,
     _keyword_matches,
+    _lex,
+    _map_tokens,
+    _match,
     _series_body,
     _split_call_args,
+    _split_top,
+    _top_colons,
 )
 from parquet_query_spark.workbench.dialect_macros import (
     _rewrite_sample_moments,
@@ -27,8 +35,8 @@ from parquet_query_spark.workbench.dialect_macros import (
 # DuckDB operator spellings whose Spark readings are missing or — worse —
 # silently different:
 #   - ``$$...$$`` / ``$tag$...$tag$`` dollar-quoted strings → standard
-#     single-quoted literals (rewritten FIRST, before any mask-based pass,
-#     because the shared lexer doesn't know $-quoting).
+#     single-quoted literals (rewritten FIRST, so every later pass sees
+#     Spark's one string spelling).
 #   - ``1_000_000`` digit-group underscores → stripped (Spark rejects).
 #   - ``a // b`` → ``a div b`` here; the outermost division pass then
 #     turns every ``div`` chain into the zero-guarded typeof-dispatched
@@ -52,66 +60,15 @@ from parquet_query_spark.workbench.dialect_macros import (
 
 
 def _rewrite_dollar_strings(sql: str) -> str:
-    """``$$it's$$`` / ``$tag$...$tag$`` → ``'it''s'`` (own mini-lexer:
-    the shared mask doesn't know $-quoting, and a quote INSIDE a dollar
-    string must not flip the mask's string state)."""
+    """``$$it's$$`` / ``$tag$...$tag$`` → ``'it''s'``."""
     if "$" not in sql:
         return sql
-    out: list[str] = []
-    i, n = 0, len(sql)
-    state: str | None = None
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if state == "line":
-            out.append(ch)
-            if ch == "\n":
-                state = None
-            i += 1
-        elif state == "block":
-            out.append(ch)
-            if ch == "*" and nxt == "/":
-                out.append(nxt)
-                i += 1
-                state = None
-            i += 1
-        elif state in ("sq", "dq", "bq"):
-            q = {"sq": "'", "dq": '"', "bq": "`"}[state]
-            out.append(ch)
-            if ch == q and nxt == q:
-                out.append(nxt)
-                i += 1
-            elif ch == q:
-                state = None
-            i += 1
-        elif ch == "-" and nxt == "-":
-            out.append(ch)
-            out.append(nxt)
-            state = "line"
-            i += 2
-        elif ch == "/" and nxt == "*":
-            out.append(ch)
-            out.append(nxt)
-            state = "block"
-            i += 2
-        elif ch in "'\"`":
-            out.append(ch)
-            state = {"'": "sq", '"': "dq", "`": "bq"}[ch]
-            i += 1
-        elif ch == "$":
-            m = re.match(r"\$([A-Za-z_]\w*)?\$", sql[i:])
-            j = sql.find(m.group(0), i + len(m.group(0))) if m else -1
-            if m and j != -1:
-                content = sql[i + len(m.group(0)) : j]
-                out.append("'" + content.replace("'", "''") + "'")
-                i = j + len(m.group(0))
-            else:
-                out.append(ch)
-                i += 1
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
+
+    def single_quoted(token: str) -> str:
+        tag = token[: token.index("$", 1) + 1]
+        return "'" + token[len(tag) : -len(tag)].replace("'", "''") + "'"
+
+    return _map_tokens(sql, DOLLAR, single_quoted)
 
 
 def _rewrite_literal_backslashes(sql: str) -> str:
@@ -127,62 +84,7 @@ def _rewrite_literal_backslashes(sql: str) -> str:
     pass sees Spark-ready literals."""
     if "\\" not in sql:
         return sql
-    out: list[str] = []
-    state: str | None = None
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if state == "sq":
-            if ch == "\\":
-                out.append("\\\\")
-            else:
-                out.append(ch)
-                if ch == "'" and nxt == "'":
-                    out.append(nxt)
-                    i += 1
-                elif ch == "'":
-                    state = None
-            i += 1
-        elif state in ("dq", "bq"):
-            q = '"' if state == "dq" else "`"
-            out.append(ch)
-            if ch == q and nxt == q:
-                out.append(nxt)
-                i += 1
-            elif ch == q:
-                state = None
-            i += 1
-        elif state == "line":
-            out.append(ch)
-            if ch == "\n":
-                state = None
-            i += 1
-        elif state == "block":
-            out.append(ch)
-            if ch == "*" and nxt == "/":
-                out.append(nxt)
-                i += 1
-                state = None
-            i += 1
-        else:
-            out.append(ch)
-            if ch == "-" and nxt == "-":
-                out.append(nxt)
-                i += 1
-                state = "line"
-            elif ch == "/" and nxt == "*":
-                out.append(nxt)
-                i += 1
-                state = "block"
-            elif ch == "'":
-                state = "sq"
-            elif ch == '"':
-                state = "dq"
-            elif ch == "`":
-                state = "bq"
-            i += 1
-    return "".join(out)
+    return _map_tokens(sql, STRING, lambda lit: lit.replace("\\", "\\\\"))
 
 
 _NUM_UNDERSCORE = re.compile(
@@ -300,41 +202,33 @@ def _rewrite_bare_varchar(sql: str) -> str:
         (m.end() - 4, m.end(), "STRING")
         for m in _JSON_CAST.finditer(sql)
         if all(mask[i] for i in range(m.start(), m.end()))
-        and (m.group(1).startswith("::") or _looks_like_cast(sql, mask, m.start()))
+        and (m.group(1).startswith("::") or _looks_like_cast(sql, m.start()))
     ] + [
         (m.start(2), m.end(), "BINARY")
         for m in _BLOB_CAST.finditer(sql)
         if all(mask[i] for i in range(m.start(), m.end()))
-        and (m.group(1).startswith("::") or _looks_like_cast(sql, mask, m.start()))
+        and (m.group(1).startswith("::") or _looks_like_cast(sql, m.start()))
     ] + [
         (m.start(2), m.end(), _UNSIGNED_MAP[m.group(2).lower()])
         for m in _UNSIGNED_CAST.finditer(sql)
         if all(mask[i] for i in range(m.start(), m.end()))
-        and (m.group(1).startswith("::") or _looks_like_cast(sql, mask, m.start()))
+        and (m.group(1).startswith("::") or _looks_like_cast(sql, m.start()))
     ]
     for s_, e_, rep in sorted(repls, reverse=True):
         sql = sql[:s_] + rep + sql[e_:]
     return sql
 
 
-def _looks_like_cast(sql: str, mask: list[bool], pos: int) -> bool:
+def _looks_like_cast(sql: str, pos: int) -> bool:
     # ``AS JSON`` only counts inside a CAST/TRY_CAST call — an alias
     # named json must survive
-    depth = 0
-    for i in range(pos - 1, -1, -1):
-        if not mask[i]:
-            continue
-        if sql[i] == ")":
-            depth += 1
-        elif sql[i] == "(":
-            if depth == 0:
-                j = i - 1
-                k = j
-                while k >= 0 and (sql[k].isalnum() or sql[k] in "_$"):
-                    k -= 1
-                return sql[k + 1 : j + 1].lower() in ("cast", "try_cast")
-            depth -= 1
-    return False
+    i = _enclosing(sql, pos)
+    if i is None or sql[i] != "(":
+        return False
+    k = i - 1
+    while k >= 0 and (sql[k].isalnum() or sql[k] in "_$"):
+        k -= 1
+    return sql[k + 1 : i].lower() in ("cast", "try_cast")
 
 
 # ── CAST to integer: DuckDB ROUNDS, Spark truncates ─────────────────────
@@ -358,36 +252,14 @@ _COLON_INT_RE = re.compile(
 )
 
 
-def _paren_close(sql: str, mask: list[bool], i: int) -> int | None:
-    depth = 0
-    for k in range(i, len(sql)):
-        if not mask[k]:
-            continue
-        if sql[k] == "(":
-            depth += 1
-        elif sql[k] == ")":
-            depth -= 1
-            if depth == 0:
-                return k
-    return None
-
-
 def _split_top_as(text: str) -> tuple[str, str] | None:
     """Split ``operand AS type`` on the LAST top-level ``AS``."""
     mask = _code_mask(text)
-    depth = 0
+    depth = _brackets(text).depth
     best = None
     for m in re.finditer(r"(?<![\w$])AS(?![\w$])", text, re.IGNORECASE):
         i = m.start()
-        if not all(mask[i : i + 2]):
-            continue
-        d = 0
-        for k in range(i):
-            if mask[k] and text[k] in "([":
-                d += 1
-            elif mask[k] and text[k] in ")]":
-                d -= 1
-        if d == 0:
+        if all(mask[i : i + 2]) and depth[i] == 0:
             best = i
     if best is None:
         return None
@@ -422,9 +294,8 @@ def _ducktype_wrap_arg(x: str) -> str | None:
         return None
     if not re.match(r"CAST\s*\(", t, re.IGNORECASE):
         return None
-    mask = _code_mask(t)
     cast_open = t.index("(")
-    if _paren_close(t, mask, cast_open) != len(t) - 1:
+    if _match(t, cast_open) != len(t) - 1:
         return None
     split = _split_top_as(t[cast_open + 1 : -1])
     if split is None or split[1].strip().upper() != "DOUBLE":
@@ -433,23 +304,10 @@ def _ducktype_wrap_arg(x: str) -> str | None:
     m = _DUCKTYPE_WRAP_FN.match(inner)
     if not m:
         return None
-    imask = _code_mask(inner)
     iopen = inner.index("(", m.end() - 1)
-    if _paren_close(inner, imask, iopen) != len(inner) - 1:
+    if _match(inner, iopen) != len(inner) - 1:
         return None
-    args = inner[iopen + 1 : -1]
-    amask = _code_mask(args)
-    depth = 0
-    for i, ch in enumerate(args):
-        if not amask[i]:
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            return args[:i].strip()
-    return args.strip()
+    return _split_top(inner[iopen + 1 : -1])[0].strip()
 
 
 def _int_cast_emit(fn: str, x: str, T: str) -> str:
@@ -499,7 +357,7 @@ def _rewrite_int_casts(sql: str) -> str:
         )
         if m is None:
             break
-        close = _paren_close(out, mask, m.end() - 1)
+        close = _match(out, m.end() - 1)
         if close is None:
             pos = m.end()
             continue
@@ -591,16 +449,8 @@ def _left_operand_start(
     # postfix subscript groups (``x[1]``, ``f(x)[2]``) belong to the
     # operand — walk back over each balanced [..] and keep capturing
     while sql[i] == "]" and mask[i]:
-        depth = 0
-        while i >= 0:
-            if mask[i] and sql[i] == "]":
-                depth += 1
-            elif mask[i] and sql[i] == "[":
-                depth -= 1
-                if depth == 0:
-                    break
-            i -= 1
-        if depth != 0 or i == 0:
+        i = _match(sql, i)
+        if i is None or i == 0:
             return None
         i -= 1
         while i >= 0 and sql[i].isspace():
@@ -608,16 +458,8 @@ def _left_operand_start(
         if i < 0:
             return None
     if sql[i] == ")":
-        depth = 0
-        while i >= 0:
-            if mask[i] and sql[i] == ")":
-                depth += 1
-            elif mask[i] and sql[i] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            i -= 1
-        if depth != 0:
+        i = _match(sql, i)
+        if i is None:
             return None
         k = i - 1
         while k >= 0 and (sql[k].isalnum() or sql[k] in "_$."):
@@ -653,17 +495,8 @@ def _left_operand_start(
             # struct-field access on a parenthesized base —
             # ``({'a': 1}).a % 2`` — absorb the (...) group (and any
             # call-name chain) into the operand (fuzz r8 seed 198)
-            depth = 0
-            j = k
-            while j >= 0:
-                if mask[j] and sql[j] == ")":
-                    depth += 1
-                elif mask[j] and sql[j] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j -= 1
-            if depth != 0:
+            j = _match(sql, k)
+            if j is None:
                 return None
             k2 = j - 1
             while k2 >= 0 and (sql[k2].isalnum() or sql[k2] in "_$."):
@@ -716,7 +549,7 @@ def _left_operand_start(
     return start
 
 
-def _right_operand_end(sql: str, mask: list[bool], pos: int) -> int | None:
+def _right_operand_end(sql: str, pos: int) -> int | None:
     """End index (inclusive) of the tight operand starting at/after ``pos``:
     optional unary sign, then a ``(...)`` group, a call, or an
     identifier/number/string token."""
@@ -734,30 +567,10 @@ def _right_operand_end(sql: str, mask: list[bool], pos: int) -> int | None:
         m = re.match(r"'(?:[^']|'')*'", sql[i:])
         return i + m.end() - 1 if m else None
     if sql[i] == "(":
-        depth = 0
-        while i < n:
-            if mask[i] and sql[i] == "(":
-                depth += 1
-            elif mask[i] and sql[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    # struct-field access binds tighter than any operator:
-                    # ``10 // ({'a': k}).a`` — absorb trailing ``.ident``
-                    # chains into the operand (fuzz r8 seed 349)
-                    while (
-                        i + 1 < n
-                        and sql[i + 1] == "."
-                        and i + 2 < n
-                        and (sql[i + 2].isalpha() or sql[i + 2] in "_$")
-                    ):
-                        i += 2
-                        while i + 1 < n and (
-                            sql[i + 1].isalnum() or sql[i + 1] in "_$"
-                        ):
-                            i += 1
-                    return i
-            i += 1
-        return None
+        # struct-field access binds tighter than any operator:
+        # ``10 // ({'a': k}).a`` — absorb trailing ``.ident`` chains into
+        # the operand (fuzz r8 seed 349)
+        return _field_chain_end(sql, _match(sql, i))
     if sql[i].isalnum() or sql[i] in "_$":
         is_num = sql[i].isdigit()
         k = i
@@ -771,34 +584,30 @@ def _right_operand_end(sql: str, mask: list[bool], pos: int) -> int | None:
         while j < n and sql[j].isspace():
             j += 1
         if not is_num and j < n and sql[j] == "(":
-            depth = 0
-            while j < n:
-                if mask[j] and sql[j] == "(":
-                    depth += 1
-                elif mask[j] and sql[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        # same struct-field absorption as the paren-group
-                        # branch: ``k // map_extract(m, 'a')[1].p`` — by
-                        # this pass the subscript is already a call, so
-                        # the ``.p`` tail hangs off a CALL operand (fuzz
-                        # r10 statement seed 8330)
-                        while (
-                            j + 1 < n
-                            and sql[j + 1] == "."
-                            and j + 2 < n
-                            and (sql[j + 2].isalpha() or sql[j + 2] in "_$")
-                        ):
-                            j += 2
-                            while j + 1 < n and (
-                                sql[j + 1].isalnum() or sql[j + 1] in "_$"
-                            ):
-                                j += 1
-                        return j
-                j += 1
-            return None
+            # same struct-field absorption as the paren-group branch:
+            # ``k // map_extract(m, 'a')[1].p`` — by this pass the
+            # subscript is already a call, so the ``.p`` tail hangs off a
+            # CALL operand (fuzz r10 statement seed 8330)
+            return _field_chain_end(sql, _match(sql, j))
         return k - 1
     return None
+
+
+def _field_chain_end(sql: str, close: int | None) -> int | None:
+    """End of the ``.ident`` chain that follows the group closing at
+    ``close`` (``close`` itself when none follows)."""
+    if close is None:
+        return None
+    i, n = close, len(sql)
+    while (
+        i + 2 < n
+        and sql[i + 1] == "."
+        and (sql[i + 2].isalpha() or sql[i + 2] in "_$")
+    ):
+        i += 2
+        while i + 1 < n and (sql[i + 1].isalnum() or sql[i + 1] in "_$"):
+            i += 1
+    return i
 
 
 def _rewrite_caret_at(sql: str) -> str:
@@ -816,7 +625,7 @@ def _rewrite_caret_at(sql: str) -> str:
         if idx is None:
             return sql
         ls = _left_operand_start(sql, mask, idx)
-        rend = _right_operand_end(sql, mask, idx + 2)
+        rend = _right_operand_end(sql, idx + 2)
         if ls is None or rend is None:
             return sql
         left = sql[ls:idx].strip()
@@ -844,7 +653,7 @@ def _rewrite_power(sql: str) -> str:
         if m is None:
             return sql
         ls = _left_operand_start(sql, mask, m.start())
-        rend = _right_operand_end(sql, mask, m.end())
+        rend = _right_operand_end(sql, m.end())
         if ls is None or rend is None:
             return sql
         left = sql[ls : m.start()].strip()
@@ -892,7 +701,7 @@ def _rewrite_similar_to(sql: str) -> str:
             rep = f"{left} RLIKE '^(?:{lit.group(1)})$'"
             end = m.end() + lit.end()
         else:
-            rend = _right_operand_end(sql, mask, m.end())
+            rend = _right_operand_end(sql, m.end())
             if rend is None:
                 return sql
             while True:
@@ -900,7 +709,7 @@ def _rewrite_similar_to(sql: str) -> str:
                 while j < len(sql) and sql[j].isspace():
                     j += 1
                 if j + 1 < len(sql) and sql[j] == "|" and sql[j + 1] == "|" and mask[j]:
-                    nxt = _right_operand_end(sql, mask, j + 2)
+                    nxt = _right_operand_end(sql, j + 2)
                     if nxt is None:
                         break
                     rend = nxt
@@ -955,7 +764,7 @@ def _rewrite_tilde_regex(sql: str) -> str:
             rep = f"{left} RLIKE '^(?:{lit.group(1)})$'"
             end = m.end(1) + lit.end()
         else:
-            rend = _right_operand_end(sql, mask, m.end(1))
+            rend = _right_operand_end(sql, m.end(1))
             if rend is None:
                 return sql
             pat = sql[m.end(1) : rend + 1].strip()
@@ -969,59 +778,10 @@ def _rewrite_tilde_regex(sql: str) -> str:
     return sql
 
 
-def _brace_close(sql: str, mask: list[bool], i: int) -> int | None:
-    depth = 0
-    for k in range(i, len(sql)):
-        if not mask[k]:
-            continue
-        if sql[k] == "{":
-            depth += 1
-        elif sql[k] == "}":
-            depth -= 1
-            if depth == 0:
-                return k
-    return None
-
-
-def _split_entries(text: str) -> list[str]:
-    """Top-level comma split tracking (), [] and {} nesting."""
-    mask = _code_mask(text)
-    parts: list[str] = []
-    depth = 0
-    start = 0
-    for i, ch in enumerate(text):
-        if not mask[i]:
-            continue
-        if ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    return parts
-
-
 def _split_entry_colon(text: str) -> tuple[str, str] | None:
-    """Split ``k: v`` on the single top-level ``:`` (``::`` casts skipped)."""
-    mask = _code_mask(text)
-    depth = 0
-    for i, ch in enumerate(text):
-        if not mask[i]:
-            continue
-        if ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif (
-            ch == ":"
-            and depth == 0
-            and not (i + 1 < len(text) and text[i + 1] == ":")
-            and not (i > 0 and text[i - 1] == ":")
-        ):
-            return text[:i], text[i + 1 :]
-    return None
+    """Split ``k: v`` on the first top-level ``:`` (``::`` casts skipped)."""
+    cuts = _top_colons(text)
+    return (text[: cuts[0]], text[cuts[0] + 1 :]) if cuts else None
 
 
 _MAP_KW_TAIL = re.compile(r"\bMAP\s*$", re.IGNORECASE)
@@ -1044,7 +804,7 @@ def _rewrite_brace_literals(sql: str) -> str:
                 out.append(ch)
                 i += 1
                 continue
-            j = _brace_close(sql, mask, i)
+            j = _match(sql, i)
             if j is None or j >= end:
                 out.append(ch)
                 i += 1
@@ -1053,7 +813,7 @@ def _rewrite_brace_literals(sql: str) -> str:
             i = j + 1
             prefix = "".join(out)
             pairs = [
-                _split_entry_colon(e) for e in _split_entries(inner) if e.strip()
+                _split_entry_colon(e) for e in _split_top(inner) if e.strip()
             ]
             if not pairs or any(p is None for p in pairs):
                 out.append("{" + inner + "}")
@@ -1099,7 +859,7 @@ def _rewrite_series_tvf(sql: str) -> str:
         if m is None:
             return sql
         open_paren = sql.index("(", m.start(1))
-        parsed = _split_call_args(sql, mask, open_paren)
+        parsed = _split_call_args(sql, open_paren)
         if parsed is None:
             return sql
         args, close = parsed
@@ -1150,7 +910,7 @@ def _rewrite_dot_chain(sql: str) -> str:
         if hit is None:
             return sql
         m, base = hit
-        parsed = _split_call_args(sql, mask, m.end() - 1)
+        parsed = _split_call_args(sql, m.end() - 1)
         if parsed is None:
             return sql
         args, close = parsed
@@ -1175,24 +935,17 @@ _HOF_NAMES = frozenset(
 _JSON_ARROW = re.compile(r"->>?")
 
 
-def _enclosing_call_name(sql: str, mask: list[bool], pos: int) -> str:
-    depth = 0
-    for i in range(pos - 1, -1, -1):
-        if not mask[i]:
-            continue
-        if sql[i] == ")":
-            depth += 1
-        elif sql[i] == "(":
-            if depth == 0:
-                j = i - 1
-                while j >= 0 and sql[j].isspace():
-                    j -= 1
-                k = j
-                while k >= 0 and (sql[k].isalnum() or sql[k] in "_$"):
-                    k -= 1
-                return sql[k + 1 : j + 1].lower()
-            depth -= 1
-    return ""
+def _enclosing_call_name(sql: str, pos: int) -> str:
+    i = _enclosing(sql, pos)
+    if i is None or sql[i] != "(":
+        return ""
+    j = i - 1
+    while j >= 0 and sql[j].isspace():
+        j -= 1
+    k = j
+    while k >= 0 and (sql[k].isalnum() or sql[k] in "_$"):
+        k -= 1
+    return sql[k + 1 : j + 1].lower()
 
 
 def _rewrite_json_arrows(sql: str) -> str:
@@ -1218,7 +971,7 @@ def _rewrite_json_arrows(sql: str) -> str:
                 continue
             if (
                 m.group(0) == "->"
-                and _enclosing_call_name(sql, mask, m.start()) in _HOF_NAMES
+                and _enclosing_call_name(sql, m.start()) in _HOF_NAMES
             ):
                 continue
             ls = _left_operand_start(sql, mask, m.start(), absorb_sign=False)
@@ -1259,8 +1012,11 @@ def _rewrite_order_by_nulls(sql: str) -> str:
     ``ORDER BY ALL`` is skipped (Spark rejects ``ALL NULLS LAST``; its
     expansion keeps Spark defaults — documented residual)."""
     mask = _code_mask(sql)
-    cmask = _comment_mask(sql)
-    depths = _depths(sql, mask)
+    cmask = [False] * len(sql)
+    for kind, s, e in _lex(sql):
+        if kind == COMMENT:
+            cmask[s:e] = [True] * (e - s)
+    depths = _brackets(sql).depth
     inserts: list[int] = []
 
     def add_key(start: int, end: int) -> None:
@@ -1364,11 +1120,11 @@ def _full_left_operand(sql: str, mask: list[bool], pos: int) -> int | None:
         return start
 
 
-def _full_right_operand(sql: str, mask: list[bool], pos: int) -> int | None:
+def _full_right_operand(sql: str, pos: int) -> int | None:
     """``_right_operand_end`` plus absorption of a following
     ``OVER (...)`` / ``OVER w`` / ``FILTER (...)`` clause, so
     ``x / count(*) OVER ()`` captures the whole window expression."""
-    rend = _right_operand_end(sql, mask, pos)
+    rend = _right_operand_end(sql, pos)
     if rend is None:
         return None
     n = len(sql)
@@ -1383,19 +1139,9 @@ def _full_right_operand(sql: str, mask: list[bool], pos: int) -> int | None:
         while j2 < n and sql[j2].isspace():
             j2 += 1
         if j2 < n and sql[j2] == "(":
-            depth = 0
-            k = j2
-            while k < n:
-                if mask[k] and sql[k] == "(":
-                    depth += 1
-                elif mask[k] and sql[k] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k += 1
-            if k >= n:
+            rend = _match(sql, j2)
+            if rend is None:
                 return None
-            rend = k
         elif (
             m.group(1).lower() == "over"
             and j2 < n
@@ -1482,7 +1228,7 @@ def _rewrite_arrayish_pipe_concat(sql: str) -> str:
             # walk rightward across the chain
             right_pipe = m.start()
             while True:
-                rend = _right_operand_end(sql, mask, right_pipe + 2)
+                rend = _right_operand_end(sql, right_pipe + 2)
                 if rend is None:
                     ops = []
                     break
@@ -1520,7 +1266,7 @@ _INTS_LIST = "('tinyint','smallint','int','bigint')"
 def _strip_outer_parens(text: str) -> str:
     t = text.strip()
     while t.startswith("(") and t.endswith(")"):
-        if _paren_close(t, _code_mask(t), 0) == len(t) - 1:
+        if _match(t, 0) == len(t) - 1:
             t = t[1:-1].strip()
         else:
             break
@@ -1538,7 +1284,7 @@ def _case_parts(text: str) -> tuple[list[str], list[str]] | None:
     if not re.match(r"CASE\s+WHEN(?![\w$])", t, re.IGNORECASE):
         return None
     mask = _code_mask(t)
-    depth = 0
+    depth = _brackets(t).depth
     case_depth = 0
     marks: list[tuple[str, int, int]] = []
     i, n = 0, len(t)
@@ -1546,19 +1292,10 @@ def _case_parts(text: str) -> tuple[list[str], list[str]] | None:
         if not mask[i]:
             i += 1
             continue
-        ch = t[i]
-        if ch == "(":
-            depth += 1
-            i += 1
-            continue
-        if ch == ")":
-            depth -= 1
-            i += 1
-            continue
         m = _CASE_KW.match(t, i)
         if m and (i == 0 or not (t[i - 1].isalnum() or t[i - 1] in "_$")):
             kw = m.group(1).upper()
-            if depth == 0:
+            if depth[i] == 0:
                 if kw == "CASE":
                     case_depth += 1
                 elif kw == "END":
@@ -1599,8 +1336,8 @@ def _split_top_arith(t: str) -> list[str]:
     signs don't split).  Empty list = no confident split (caller falls
     back to a whole-expression typeof)."""
     mask = _code_mask(t)
+    depth = _brackets(t).depth
     parts: list[str] = []
-    depth = 0
     case_depth = 0
     last = 0
     i, n = 0, len(t)
@@ -1609,11 +1346,9 @@ def _split_top_arith(t: str) -> list[str]:
             i += 1
             continue
         ch = t[i]
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_"):
+        if depth[i] != 0:
+            pass
+        elif ch.isalpha() or ch == "_":
             m = re.match(r"[A-Za-z_][\w$]*", t[i:])
             tok = m.group(0).lower()
             if tok == "case":
@@ -1636,7 +1371,7 @@ def _split_top_arith(t: str) -> list[str]:
                 continue
             i += m.end()
             continue
-        elif depth == 0 and case_depth == 0 and ch in "+-*":
+        elif case_depth == 0 and ch in "+-*":
             j = i - 1
             while j >= last and t[j].isspace():
                 j -= 1
@@ -1666,7 +1401,7 @@ def _split_top_arith(t: str) -> list[str]:
             parts.append(t[last:i].strip())
             last = i + 1
         i += 1
-    if not parts or depth != 0 or case_depth != 0:
+    if not parts or depth[n] != 0 or case_depth != 0:
         return []
     parts.append(t[last:].strip())
     return parts if all(parts) else []
@@ -1756,19 +1491,7 @@ def _rewrite_ducktype_numerics(sql: str) -> str:
         for m in reversed(list(_DUCKTYPE_FN.finditer(sql))):
             if not all(mask[m.start() : m.end()]):
                 continue
-            # find the matching close paren
-            depth = 0
-            close = None
-            for k in range(m.end() - 1, len(sql)):
-                if not mask[k]:
-                    continue
-                if sql[k] == "(":
-                    depth += 1
-                elif sql[k] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = k
-                        break
+            close = _match(sql, m.end() - 1)
             if close is None:
                 continue
             target = _DUCKTYPE_CAST.get(m.group("fn").lower(), "DOUBLE")
@@ -1780,7 +1503,7 @@ def _rewrite_ducktype_numerics(sql: str) -> str:
             ):
                 continue
             if m.group("fn").lower() == "round":
-                parsed = _split_call_args(sql, mask, m.end() - 1)
+                parsed = _split_call_args(sql, m.end() - 1)
                 if parsed is not None and len(parsed[0]) in (1, 2):
                     args, _ = parsed
                     rep = _duckdb_round(
@@ -1810,29 +1533,21 @@ def _flatten_leading_mul_groups(sql: str) -> str:
     ``div`` operators."""
     for _ in range(64):
         mask = _code_mask(sql)
+        depth = _brackets(sql).depth
         changed = False
         for i, ch in enumerate(sql):
             if ch != "(" or not mask[i]:
                 continue
-            j = _paren_close(sql, mask, i)
+            j = _match(sql, i)
             if j is None:
                 continue
             inner = sql[i + 1 : j]
-            imask = _code_mask(inner)
-            depth = 0
             has_mul = False
             bad = False
-            k = 0
-            while k < len(inner):
-                if not imask[k]:
-                    k += 1
-                    continue
-                c = inner[k]
-                if c in "([{":
-                    depth += 1
-                elif c in ")]}":
-                    depth -= 1
-                elif depth == 0:
+            k = i + 1
+            while k < j:
+                c = sql[k]
+                if mask[k] and depth[k] == depth[i] + 1:
                     if c == "*":
                         has_mul = True
                     elif c in "+-/%<>=!|&^~,:":
@@ -1840,11 +1555,9 @@ def _flatten_leading_mul_groups(sql: str) -> str:
                         break
                     elif c.isalpha():
                         w = k
-                        while k + 1 < len(inner) and (
-                            inner[k + 1].isalnum() or inner[k + 1] in "_$"
-                        ):
+                        while k + 1 < j and (sql[k + 1].isalnum() or sql[k + 1] in "_$"):
                             k += 1
-                        word = inner[w : k + 1].lower()
+                        word = sql[w : k + 1].lower()
                         if word == "div":
                             has_mul = True
                         elif word in ("and", "or", "not", "case", "when",
@@ -1952,7 +1665,7 @@ def _rewrite_divmod_null(sql: str) -> str:
         if m is None:
             return sql
         ls = _full_left_operand(sql, mask, m.start())
-        rend = _full_right_operand(sql, mask, m.end())
+        rend = _full_right_operand(sql, m.end())
         if ls is None or rend is None:
             # can't capture safely — leave this occurrence untouched
             skipped.add((m.start(), m.group(0)))
@@ -2049,7 +1762,7 @@ def _rewrite_divmod_null(sql: str) -> str:
                     nxt = ("div", j + 3)
             if nxt is None:
                 break
-            r2 = _full_right_operand(sql, mask, nxt[1])
+            r2 = _full_right_operand(sql, nxt[1])
             if r2 is None:
                 break
             leaves.append((sql[nxt[1] : r2 + 1].strip(), nxt[0]))
@@ -2076,21 +1789,6 @@ def _rewrite_divmod_null(sql: str) -> str:
 _WINDOW_FILTER = re.compile(r"\bFILTER\s*\(\s*WHERE\b", re.IGNORECASE)
 
 
-def _has_top_comma(text: str) -> bool:
-    mask = _code_mask(text)
-    depth = 0
-    for i, ch in enumerate(text):
-        if not mask[i]:
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            return True
-    return False
-
-
 def _rewrite_window_filter(sql: str) -> str:
     """DuckDB allows ``agg(x) FILTER (WHERE p) OVER w``; Spark raises
     "Window aggregate function with filter predicate is not supported"
@@ -2109,7 +1807,7 @@ def _rewrite_window_filter(sql: str) -> str:
             if not all(mask[m.start() : m.end()]):
                 continue
             op = sql.index("(", m.start())
-            close = _paren_close(sql, mask, op)
+            close = _match(sql, op)
             if close is None:
                 continue
             j = close + 1
@@ -2126,18 +1824,7 @@ def _rewrite_window_filter(sql: str) -> str:
                 k -= 1
             if k < 0 or sql[k] != ")":
                 continue
-            depth = 0
-            open_i = None
-            for t in range(k, -1, -1):
-                if not mask[t]:
-                    continue
-                if sql[t] == ")":
-                    depth += 1
-                elif sql[t] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        open_i = t
-                        break
+            open_i = _match(sql, k)
             if open_i is None:
                 continue
             nm = re.search(r"([A-Za-z_][A-Za-z_0-9]*)\s*$", sql[:open_i])
@@ -2151,7 +1838,7 @@ def _rewrite_window_filter(sql: str) -> str:
             else:
                 dm = re.match(r"\s*DISTINCT\b", args, re.IGNORECASE)
                 rest = args[dm.end() :].strip() if dm else args
-                if not rest or _has_top_comma(rest):
+                if not rest or len(_split_top(rest)) > 1:
                     continue  # multi-arg aggregates don't rewrite soundly
                 new_args = f"CASE WHEN {pred} THEN {rest} END"
                 if dm:
@@ -2187,7 +1874,7 @@ def _rewrite_count_distinct_window(sql: str) -> str:
                 continue
             fn = m.group(1).lower()
             op = sql.index("(", m.end(1))
-            close = _paren_close(sql, mask, op)
+            close = _match(sql, op)
             if close is None:
                 continue
             j = close + 1
@@ -2198,7 +1885,7 @@ def _rewrite_count_distinct_window(sql: str) -> str:
             expr = re.sub(
                 r"^\s*DISTINCT\b", "", sql[op + 1 : close], flags=re.IGNORECASE
             ).strip()
-            if not expr or _has_top_comma(expr):
+            if not expr or len(_split_top(expr)) > 1:
                 continue
             if fn in ("min", "max"):  # DISTINCT is a no-op for min/max
                 sql = sql[: op + 1] + expr + sql[close:]
@@ -2209,7 +1896,7 @@ def _rewrite_count_distinct_window(sql: str) -> str:
             while t < len(sql) and (not mask[t] or sql[t].isspace()):
                 t += 1
             if t < len(sql) and sql[t] == "(":
-                oc = _paren_close(sql, mask, t)
+                oc = _match(sql, t)
                 if oc is None:
                     continue
                 over_end = oc + 1

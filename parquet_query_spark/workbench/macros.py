@@ -24,7 +24,13 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from parquet_query_spark.workbench.dialect_core import _code_mask, _split_call_args
+from parquet_query_spark.workbench.dialect_core import (
+    _brackets,
+    _code_mask,
+    _enclosing,
+    _match,
+    _split_call_args,
+)
 
 _CREATE_MACRO = re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?MACRO\s+"
@@ -78,8 +84,7 @@ def parse_create_macro(sql: str) -> Macro:
         raise ValueError("not a CREATE MACRO statement")
     or_replace = bool(m.group(1))
     name = m.group(2)
-    mask = _code_mask(sql)
-    parsed = _split_call_args(sql, mask, m.end())
+    parsed = _split_call_args(sql, m.end())
     if parsed is None:
         raise ValueError(f"CREATE MACRO {name}: unbalanced parameter list")
     raw_params, close = parsed
@@ -145,11 +150,12 @@ _ARROW = re.compile(r"->")
 def _lambda_shadow_spans(body: str, mask: list[bool]) -> list[tuple[str, int, int]]:
     """(lowercase var, start, end) scopes of lambda parameters in ``body``:
     from the parameter declaration through the lambda expression (which
-    ends at the first ``,`` or ``)`` at the arrow's paren level).  Used to
+    ends at the first ``,`` or closing bracket at the arrow's level).  Used to
     keep macro-parameter substitution out of scopes where a lambda
     variable shadows the parameter."""
     spans: list[tuple[str, int, int]] = []
     n = len(body)
+    depth = _brackets(body).depth
     for m in _ARROW.finditer(body):
         a = m.start()
         if not (mask[a] and (a + 1 < n and mask[a + 1])):
@@ -162,19 +168,10 @@ def _lambda_shadow_spans(body: str, mask: list[bool]) -> list[tuple[str, int, in
         names: list[str] = []
         decl_start = None
         if j >= 0 and body[j] == ")":
-            k = j - 1
-            depth = 0
-            while k >= 0:
-                if mask[k] and body[k] == ")":
-                    depth += 1
-                elif mask[k] and body[k] == "(":
-                    if depth == 0:
-                        break
-                    depth -= 1
-                k -= 1
-            inner = body[k + 1 : j]
+            k = _match(body, j)
+            inner = body[k + 1 : j] if k is not None else ""
             parts = [p.strip() for p in inner.split(",")]
-            if k >= 0 and parts and all(
+            if k is not None and parts and all(
                 re.fullmatch(r"[A-Za-z_]\w*", p) for p in parts
             ):
                 names = [p.lower() for p in parts]
@@ -189,19 +186,15 @@ def _lambda_shadow_spans(body: str, mask: list[bool]) -> list[tuple[str, int, in
                 decl_start = k + 1
         if not names or decl_start is None:
             continue
-        # lambda expression extent: first `,` or `)` at the arrow's level
-        d = 0
+        # lambda expression extent: first `,` or closer at the arrow's level
         e = m.end()
-        while e < n:
-            ch = body[e]
-            if mask[e] and ch == "(":
-                d += 1
-            elif mask[e] and ch == ")":
-                if d == 0:
-                    break
-                d -= 1
-            elif mask[e] and ch == "," and d == 0:
-                break
+        while e < n and not (
+            mask[e]
+            and (
+                (body[e] == "," and depth[e] == depth[a])
+                or (body[e] in ")]}" and depth[e] < depth[a])
+            )
+        ):
             e += 1
         for nm in names:
             spans.append((nm, decl_start, e))
@@ -212,47 +205,27 @@ def _lambda_shadow_spans(body: str, mask: list[bool]) -> list[tuple[str, int, in
         if not all(mask[i] for i in range(m.start(), m.end())):
             continue
         nm = m.group(1).lower()
-        # enclosing '[' backward
-        depth = 0
-        o = m.start() - 1
-        while o >= 0:
-            if mask[o] and body[o] == "]":
-                depth += 1
-            elif mask[o] and body[o] == "[":
-                if depth == 0:
-                    break
-                depth -= 1
-            o -= 1
-        if o < 0:
+        o = _enclosing(body, m.start())
+        close = _match(body, o) if o is not None and body[o] == "[" else None
+        if close is None:
             continue
-        # matching ']' forward, tracking an IF at this bracket level
-        depth = 0
-        c = m.end()
-        if_pos = None
-        while c < n:
-            ch = body[c]
-            if mask[c] and ch in "([":
-                depth += 1
-            elif mask[c] and ch == ")":
-                depth -= 1
-            elif mask[c] and ch == "]":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif (
-                mask[c]
-                and depth == 0
-                and if_pos is None
+        # an IF at this bracket level starts the predicate
+        if_pos = next(
+            (
+                c
+                for c in range(m.end(), close)
+                if mask[c]
+                and depth[c] == depth[m.start()]
                 and body[c : c + 2].upper() == "IF"
-                and (c + 2 >= n or not (body[c + 2].isalnum() or body[c + 2] == "_"))
+                and not (body[c + 2 : c + 3].isalnum() or body[c + 2 : c + 3] == "_")
                 and not (body[c - 1].isalnum() or body[c - 1] == "_")
-            ):
-                if_pos = c
-            c += 1
+            ),
+            None,
+        )
         spans.append((nm, o + 1, m.start()))  # expr before FOR
         spans.append((nm, m.start(), m.end()))  # the declaration itself
         if if_pos is not None:
-            spans.append((nm, if_pos, c))  # IF predicate
+            spans.append((nm, if_pos, close))  # IF predicate
     return spans
 
 
@@ -342,7 +315,7 @@ def expand_macros(sql: str, macros: dict[str, Macro]) -> str:
             break
         if hit is None:
             return sql
-        parsed = _split_call_args(sql, mask, hit.end() - 1)
+        parsed = _split_call_args(sql, hit.end() - 1)
         if parsed is None:
             return sql
         args, close = parsed

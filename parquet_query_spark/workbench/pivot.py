@@ -23,11 +23,12 @@ import re
 
 from parquet_query_spark.session import temp_view
 from parquet_query_spark.workbench.dialect_core import (
+    _brackets,
     _code_mask,
     _keyword_matches,
-    _paren_depth_at,
+    _match,
     _split_call_args,
-    _top_level_split,
+    _split_top,
 )
 
 _PIVOT = re.compile(r"^\s*PIVOT\b", re.IGNORECASE)
@@ -54,7 +55,7 @@ def parse_pivot(statement: str) -> dict:
         ms = [
             k
             for k in _keyword_matches(body, mask, pattern)
-            if _paren_depth_at(body, mask, k.start()) == 0
+            if _brackets(body).depth[k.start()] == 0
         ]
         return ms[0] if ms else None
 
@@ -81,9 +82,8 @@ def parse_pivot(statement: str) -> dict:
             x.start() for x in (group_kw, tail_kw) if x is not None and x.start() > using_kw.end()
         ) if any(x is not None and x.start() > using_kw.end() for x in (group_kw, tail_kw)) else len(body)
         using_text = body[using_kw.end() : using_end]
-        umask = _code_mask(using_text)
         using = []
-        for item in _top_level_split(using_text, umask):
+        for item in [i for i in _split_top(using_text) if i.strip()]:
             am = re.search(r"\s+AS\s+(" + _IDENT + r")\s*$", item, re.IGNORECASE)
             if am:
                 using.append((item[: am.start()].strip(), am.group(1)))
@@ -289,7 +289,7 @@ def _resolve_from_schema(engine, statement, mask, construct):
     Supports a single table, path literal, or parenthesized subquery."""
     fm = None
     for m in _keyword_matches(statement, mask, r"\bFROM\b"):
-        if _paren_depth_at(statement, mask, m.start()) == 0:
+        if _brackets(statement).depth[m.start()] == 0:
             fm = m
             break
     if fm is None:
@@ -298,18 +298,7 @@ def _resolve_from_schema(engine, statement, mask, construct):
     if after.startswith("("):
         # subquery source: take the balanced-paren body
         off = fm.end() + (len(statement[fm.end() :]) - len(after))
-        depth = 0
-        end = None
-        for i in range(off, len(statement)):
-            if not mask[i]:
-                continue
-            if statement[i] == "(":
-                depth += 1
-            elif statement[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    end = i
-                    break
+        end = _match(statement, off)
         if end is None:
             raise ValueError("unbalanced subquery after FROM")
         src = statement[off : end + 1]
@@ -353,7 +342,7 @@ def expand_star_replace(engine, statement: str) -> str:
     if m is None:
         return statement
     _, schema_cols, _types = _resolve_from_schema(engine, statement, mask, "* REPLACE")
-    parsed = _split_call_args(statement, mask, m.end() - 1)
+    parsed = _split_call_args(statement, m.end() - 1)
     if parsed is None:
         raise ValueError("unbalanced * REPLACE (...) list")
     args, close = parsed
@@ -390,16 +379,13 @@ def expand_columns(engine, statement: str) -> str:
     sel = [
         k
         for k in _keyword_matches(statement, mask, r"\bSELECT\b")
-        if _paren_depth_at(statement, mask, k.start()) == 0
+        if _brackets(statement).depth[k.start()] == 0
     ]
     if not sel:
         raise ValueError("COLUMNS(...) outside a SELECT list is unsupported")
     sel_start = sel[0].end()
     sel_end = fm.start()
-    select_list = statement[sel_start:sel_end]
-    smask = _code_mask(select_list)
-
-    items = _top_level_split(select_list, smask)
+    items = [i for i in _split_top(statement[sel_start:sel_end]) if i.strip()]
     out_items: list[str] = []
     for item in items:
         imask = _code_mask(item)
@@ -414,7 +400,7 @@ def expand_columns(engine, statement: str) -> str:
         if len(calls) > 1:
             raise ValueError("multiple COLUMNS(...) in one select item")
         call = calls[0]
-        parsed = _split_call_args(item, imask, call.end() - 1)
+        parsed = _split_call_args(item, call.end() - 1)
         if parsed is None:
             raise ValueError("unbalanced COLUMNS(...) call")
         args, close = parsed

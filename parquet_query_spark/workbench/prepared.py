@@ -33,34 +33,7 @@ from __future__ import annotations
 
 import re
 
-from parquet_query_spark.workbench.dialect_core import (
-    _DOLLAR_TAG,
-    _code_mask,
-    _split_call_args,
-)
-
-
-def _mask_with_dollar_quotes(sql: str) -> list[bool]:
-    """``_code_mask`` extended to treat dollar-quoted spans (``$$..$$``,
-    ``$tag$..$tag$``) as non-code, so a ``$word`` inside one is string
-    data rather than a named parameter (ADVICE r9).  A span only opens at
-    a position ``_code_mask`` already classes as code (never inside a
-    ``'...'`` literal, identifier quote, or comment)."""
-    mask = _code_mask(sql)
-    i, n = 0, len(sql)
-    while i < n:
-        if mask[i] and sql[i] == "$":
-            m = _DOLLAR_TAG.match(sql, i)
-            if m:
-                tag = m.group(0)
-                close = sql.find(tag, m.end())
-                end = (close + len(tag)) if close != -1 else n
-                for j in range(i, end):
-                    mask[j] = False
-                i = end
-                continue
-        i += 1
-    return mask
+from parquet_query_spark.workbench.dialect_core import _code_mask, _split_call_args
 
 _PREPARE = re.compile(
     r"^\s*PREPARE\s+([A-Za-z_][\w$]*)\s+AS\s+(.+)$", re.IGNORECASE | re.DOTALL
@@ -122,7 +95,8 @@ def _render_arg(text: str) -> str:
 def expand_execute(store: dict, stmt: str) -> str:
     """Expand ``EXECUTE name(args)`` into the stored statement with every
     parameter substituted textually (mask-aware: a ``$1`` inside a string
-    literal of the body is data, not a parameter)."""
+    literal of the body, dollar-quoted ones included, is data, not a
+    parameter)."""
     m = _EXECUTE.match(stmt)
     name = m.group(1).lower()
     if name not in store:
@@ -134,7 +108,7 @@ def expand_execute(store: dict, stmt: str) -> str:
         # zero-arg EXECUTE omits the parens entirely.
         raise ValueError('Parser Error: syntax error at or near ")"')
     if m.group(2):
-        parsed = _split_call_args(m.group(2), _mask_with_dollar_quotes(m.group(2)), 0)
+        parsed = _split_call_args(m.group(2), 0)
         if parsed is None:
             raise ValueError(f"cannot parse EXECUTE arguments: {m.group(2)}")
         args = [a for a in parsed[0] if a.strip()]
@@ -147,7 +121,7 @@ def expand_execute(store: dict, stmt: str) -> str:
         else:
             positional.append(_render_arg(a))
     body = store[name]
-    mask = _mask_with_dollar_quotes(body)
+    mask = _code_mask(body)
     out: list[str] = []
     last = 0
     qmark = 0  # next ?-parameter index

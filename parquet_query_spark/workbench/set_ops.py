@@ -34,7 +34,7 @@ import re
 from pyspark.sql import DataFrame
 
 from parquet_query_spark.session import temp_view
-from parquet_query_spark.workbench.dialect_core import _code_mask, _depths, _keyword_matches
+from parquet_query_spark.workbench.dialect_core import _brackets, _code_mask, _keyword_matches
 
 _UNION_BY_NAME = r"\bUNION\s+(ALL\s+)?BY\s+NAME\b"
 # Every separator at UNION's precedence level (INTERSECT binds tighter
@@ -67,7 +67,7 @@ def run_insert_by_name(engine, sql: str) -> DataFrame:
 
 def _top_level_matches(sql: str, pattern: str) -> list[re.Match]:
     mask = _code_mask(sql)
-    depths = _depths(sql, mask)
+    depths = _brackets(sql).depth
     return [
         m for m in _keyword_matches(sql, mask, pattern) if depths[m.start()] == 0
     ]

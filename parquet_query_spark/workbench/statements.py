@@ -9,9 +9,11 @@ is blank, the nearest non-empty statement before (then after) it runs.
 
 This module also owns the ``FROM 'path'`` table-literal rewrite (B4): DuckDB
 accepts a quoted file path as a table reference; Spark SQL's native spelling
-is ``format.`path```.  The rewrite uses the same lexer so paths inside
-comments or ordinary string literals are never touched (SURVEY §7 hard part
-(c)).
+is ``format.`path```.  The rewrite reads the text through the dialect shim's
+lexer (``dialect_core._lex``), which also knows backtick identifiers and
+dollar strings, so paths inside comments, identifiers or ordinary string
+literals are never touched (SURVEY §7 hard part (c)).  The splitter above
+keeps A6's own rules: the reference splits on ``;`` knowing neither.
 """
 
 from __future__ import annotations
@@ -20,6 +22,8 @@ import os
 import re
 from collections.abc import Callable
 from dataclasses import dataclass
+
+from parquet_query_spark.workbench.dialect_core import CODE, STRING, _lex
 
 
 @dataclass(frozen=True)
@@ -131,6 +135,7 @@ _FORMAT_BY_SUFFIX = {
 
 # a single-quoted literal in table position, i.e. right after FROM or JOIN
 _TABLE_REF_KEYWORD = re.compile(r"(?:\bfrom\b|\bjoin\b)\s*$", re.IGNORECASE)
+_CLOSED_LITERAL = re.compile(r"'(?:[^']|'')*'")
 
 
 def _spark_path_ref(
@@ -174,68 +179,14 @@ def rewrite_path_tables(
     it returns None.
     """
     out: list[str] = []
-    i = 0
-    n = len(sql)
-    in_double = in_line = in_block = False
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if in_line:
-            if ch == "\n":
-                in_line = False
-            out.append(ch)
-        elif in_block:
-            if ch == "*" and nxt == "/":
-                in_block = False
-                out.append("*/")
-                i += 1
-            else:
-                out.append(ch)
-        elif in_double:
-            if ch == '"' and nxt == '"':
-                out.append('""')
-                i += 1
-            elif ch == '"':
-                in_double = False
-                out.append(ch)
-            else:
-                out.append(ch)
-        elif ch == "-" and nxt == "-":
-            in_line = True
-            out.append("--")
-            i += 1
-        elif ch == "/" and nxt == "*":
-            in_block = True
-            out.append("/*")
-            i += 1
-        elif ch == '"':
-            in_double = True
-            out.append(ch)
-        elif ch == "'":
-            # scan the full single-quoted literal (with '' escapes)
-            j = i + 1
-            content: list[str] = []
-            while j < n:
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    content.append("'")
-                    j += 2
-                elif sql[j] == "'":
-                    break
-                else:
-                    content.append(sql[j])
-                    j += 1
-            literal = "".join(content)
-            ref = (
-                _spark_path_ref(literal, root, registered, path_view)
-                if _TABLE_REF_KEYWORD.search("".join(out))
-                else None
-            )
-            if ref is not None:
-                out.append(ref)
-            else:
-                out.append(sql[i : j + 1] if j < n else sql[i:])
-            i = j
-        else:
-            out.append(ch)
-        i += 1
+    code_before = ""
+    for kind, start, end in _lex(sql):
+        token = sql[start:end]
+        ref = None
+        if kind == STRING and _TABLE_REF_KEYWORD.search(code_before):
+            closed = _CLOSED_LITERAL.fullmatch(token)
+            body = token[1:-1] if closed else token[1:]
+            ref = _spark_path_ref(body.replace("''", "'"), root, registered, path_view)
+        out.append(token if ref is None else ref)
+        code_before = token if kind == CODE else ""
     return "".join(out)

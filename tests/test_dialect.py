@@ -2097,8 +2097,8 @@ def test_flatten_drops_null_sublists():
 
 def test_code_mask_memo_hands_out_copies():
     """The code mask is memoized by text, and each caller gets its own
-    copy: a caller that marks spans non-code (prepared.py's dollar quotes)
-    must not change the mask the next caller sees."""
+    copy: a caller that marks spans non-code must not change the mask
+    the next caller sees."""
     from parquet_query_spark.workbench.dialect_core import _code_mask
 
     sql = "SELECT 'a;b' AS s, x -- note\nFROM t"
@@ -2109,3 +2109,138 @@ def test_code_mask_memo_hands_out_copies():
     assert again == expected
     assert again is not first
     assert again[sql.index("x")] and not again[sql.index(";")]
+
+
+# ── the shared lexer (dialect_core._lex) and its bracket table ──────────
+
+
+def _spans(sql):
+    from parquet_query_spark.workbench.dialect_core import _lex
+
+    return [(kind, sql[s:e]) for kind, s, e in _lex(sql)]
+
+
+def test_lex_token_kinds():
+    sql = "SELECT 'a', \"b\", `c`, $$d$$ -- e\n/* f */ x"
+    assert _spans(sql) == [
+        ("code", "SELECT "),
+        ("'", "'a'"),
+        ("code", ", "),
+        ('"', '"b"'),
+        ("code", ", "),
+        ("`", "`c`"),
+        ("code", ", "),
+        ("$", "$$d$$"),
+        ("code", " "),
+        ("comment", "-- e"),
+        ("code", "\n"),  # a line comment's newline is code
+        ("comment", "/* f */"),
+        ("code", " x"),
+    ]
+
+
+def test_lex_doubled_delimiters_escape_in_every_quote_kind():
+    for token in ("'it''s'", '"a""b"', "`a``b`", "''", '""', "``"):
+        sql = f"x {token} y"
+        assert _spans(sql) == [("code", "x "), (token[0], token), ("code", " y")]
+    # a doubled quote at the very end is an escape, not a close
+    assert _spans("'a''b''") == [("'", "'a''b''")]
+
+
+def test_lex_dollar_strings_and_dollar_parameters():
+    from parquet_query_spark.workbench.dialect_core import _code_mask
+
+    sql = "SELECT $$it's -- x$$, $t$a $$ 'b$t$, $1, $name, $n$ + 1"
+    assert [t for t in _spans(sql) if t[0] != "code"] == [
+        ("$", "$$it's -- x$$"),
+        ("$", "$t$a $$ 'b$t$"),  # only its own tag closes it
+    ]
+    mask = _code_mask(sql)
+    for param in ("$1", "$name"):
+        i = sql.index(param)
+        assert all(mask[i : i + len(param)]), param
+    # an unclosed $tag$ is code, not a string to the end of the text
+    assert all(mask[sql.index("$n$") :])
+
+
+def test_lex_unterminated_forms_run_to_end():
+    for text in ("'abc", "'ab''", '"abc', "`abc", "/* abc", "-- abc"):
+        kind = "comment" if text[0] in "-/" else text[0]
+        assert _spans("x " + text) == [("code", "x "), (kind, text)], text
+    # except a dollar string: an unclosed $tag$ is code, so a quote after
+    # it opens a plain string
+    assert _spans("SELECT $$it's") == [("code", "SELECT $$it"), ("'", "'s")]
+
+
+def test_brackets_depth_and_matching():
+    from parquet_query_spark.workbench.dialect_core import _brackets
+
+    sql = "f(a[1], {'k': ')'})"
+    table = _brackets(sql)
+    assert table.match == {1: 18, 18: 1, 3: 5, 5: 3, 8: 17, 17: 8}
+    assert table.depth[sql.index("a")] == 1
+    assert table.depth[sql.index("1")] == 2
+    assert table.depth[sql.index("k")] == 2  # inside the string, no count
+    assert table.depth[1] == table.depth[18] == 0  # a closer carries its opener's
+    assert table.depth[len(sql)] == 0
+    # an unbalanced closer pairs with nothing and takes the depth below
+    # zero; a closer pairs with the innermost open bracket of any kind
+    sql = "a) (b] [c"
+    table = _brackets(sql)
+    assert table.match == {3: 5, 5: 3}
+    assert list(table.depth) == [0, -1, -1, -1, 0, -1, -1, -1, 0, 0]
+
+
+def test_lex_views():
+    from parquet_query_spark.workbench.dialect_core import (
+        _split_top,
+        _unquote_function_names,
+    )
+    from parquet_query_spark.workbench.dialect_typing import (
+        _rewrite_dollar_strings,
+        _rewrite_literal_backslashes,
+    )
+    from parquet_query_spark.workbench.statements import rewrite_path_tables
+
+    assert _rewrite_dollar_strings("SELECT $t$it's$t$, '$$'") == "SELECT 'it''s', '$$'"
+    assert _rewrite_literal_backslashes("SELECT '\\d', `\\x`") == "SELECT '\\\\d', `\\x`"
+    # an escaped identifier keeps its quotes; a plain lowercase one loses them
+    assert _unquote_function_names('SELECT "we""ird", "k"') == 'SELECT "we""ird", k'
+    assert _split_top("a, f(b, c), [d, e], {'f': g}, 'h,i'") == [
+        "a", " f(b, c)", " [d, e]", " {'f': g}", " 'h,i'"
+    ]
+    # the path rewrite reads a string only after FROM/JOIN code; a quote
+    # inside a backtick identifier or a dollar string does not hide it
+    for sql in (
+        "SELECT 1 AS `it's` FROM 'r.parquet'",
+        "SELECT $$it's$$ FROM 'r.parquet'",
+    ):
+        assert rewrite_path_tables(sql, "/d").endswith("FROM parquet.`/d/r.parquet`"), sql
+    assert rewrite_path_tables("SELECT 'r.parquet' FROM t", "/d") == "SELECT 'r.parquet' FROM t"
+
+
+def test_dollar_string_quote_keeps_order_by_all_tail(engine):
+    """A quote inside ``$$…$$`` read as an open string hid the trailing
+    ORDER BY ALL from ``Engine._order_by_all_tail``, so Spark's NULLS
+    FIRST applied: ``['', '1', '2']`` where DuckDB returns 1, 2, NULL."""
+    import duckdb
+
+    from parquet_query_spark.workbench.formatting import format_cell
+
+    con = duckdb.connect()
+    for lit in ("$$it's$$", "'it''s'"):
+        q = f"SELECT x FROM (VALUES (2), (NULL), (1)) t(x) WHERE {lit} <> '' ORDER BY ALL"
+        want = [[format_cell(v) for v in row] for row in con.execute(q).fetchall()]
+        assert want == [["1"], ["2"], [""]]
+        assert engine.run(q).rows == want, lit
+    con.close()
+
+
+def test_backtick_quote_keeps_path_literal(engine):
+    """The path rewrite read the quote of a backtick identifier as an
+    open string, so ``'region.parquet'`` after it stayed unrewritten and
+    Spark raised ParseException."""
+    for alias in ("`it's`", "`its`"):
+        r = engine.run(f"SELECT 1 AS {alias} FROM 'region.parquet'")
+        assert r.columns == [alias.strip("`")]
+        assert r.rows == [["1"]] * 5

@@ -1,5 +1,3 @@
-import os
-
 from parquet_query_spark.engine import Engine, filter_rows, sort_rows
 
 

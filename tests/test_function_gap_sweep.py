@@ -20,8 +20,6 @@ Pinned DuckDB semantics (each probed on the bundled build):
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pytest
 

@@ -6,7 +6,6 @@ import duckdb
 import pytest
 
 from parquet_query_spark.workbench.macros import (
-    Macro,
     expand_macros,
     parse_create_macro,
     register_macro,

@@ -298,8 +298,6 @@ def test_silhouette_clusters_match_kmeans(catalog, spark):
 def test_assign_cells_degenerate_centroid_loses(spark):
     """A zero-norm centroid yields NULL cosine; it must NOT win the argmax
     (the pre-r12-window semantics: desc sim NULLS LAST made it lose)."""
-    from pyspark.sql import functions as F
-
     from parquet_query_spark.operators.similarity import _assign_cells_scanside
 
     emb = spark.createDataFrame(

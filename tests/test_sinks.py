@@ -3,7 +3,6 @@ without exchange, round-trips preserve data."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from parquet_query_spark.sources import sinks

@@ -9,7 +9,6 @@ compare boundary (DuckDB date_trunc yields DATE, Spark yields TIMESTAMP).
 """
 
 import datetime as dt
-import os
 
 import numpy as np
 import pandas as pd
