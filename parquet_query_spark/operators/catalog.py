@@ -31,6 +31,13 @@ domain has one module (``temporal.py``, ``scale_patterns.py``,
 ``graph.py``, and the ``streaming`` package).  A name registers once:
 :func:`query` raises on a name already in the catalog.
 
+Sharing rule: a kernel or an oracle CTE that two operators share is
+written once, in its domain module, and imported everywhere else — the
+shingle expressions, the minhash chain, the hot-key tiled self-join and
+the near-duplicate graph CTEs live in ``dedup.py``; twin operators (a
+batch operator and its streaming or bucketed twin) pass the same
+module-level oracle constant.
+
 Determinism contract for oracle-checked queries (the driver hash-compares
 values): every floating-point aggregate is rounded; every LIMIT/top-k has a
 total order (unique tie-break key); column names are identical on both sides.

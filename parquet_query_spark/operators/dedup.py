@@ -96,6 +96,22 @@ def dedup_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# A document's 3-token shingles, as Spark SQL over ``toks`` (its
+# whitespace split): the distinct space-joined runs of three consecutive
+# tokens.  Every Spark site uses this text; _DUCKDB_SHINGLES below is the
+# oracles' spelling of the same set over ``text``.
+_SPARK_SHINGLES_SQL = """
+array_distinct(
+  transform(
+    sequence(1, greatest(size(toks) - 2, 1)),
+    i -> concat_ws(' ', try_element_at(toks, i),
+                   try_element_at(toks, i + 1),
+                   try_element_at(toks, i + 2))
+  )
+)
+"""
+
+
 def _with_shingles(df: DataFrame) -> DataFrame:
     """doc_id + 3-token shingles, builtin expressions only.
 
@@ -104,21 +120,7 @@ def _with_shingles(df: DataFrame) -> DataFrame:
     shingle (O(words²) work; measured 8× slower at sf0.1)."""
     return df.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    ).select(
-        "doc_id",
-        F.expr(
-            """
-            array_distinct(
-              transform(
-                sequence(1, greatest(size(toks) - 2, 1)),
-                i -> concat_ws(' ', try_element_at(toks, i),
-                               try_element_at(toks, i + 1),
-                               try_element_at(toks, i + 2))
-              )
-            )
-            """
-        ).alias("shingles"),
-    )
+    ).select("doc_id", F.expr(_SPARK_SHINGLES_SQL).alias("shingles"))
 
 
 _DUCKDB_SHINGLES = """
@@ -145,6 +147,15 @@ transform(shingles, x -> named_struct(
   'h2', CAST(conv(substr(md5(x), 17, 14), 16, 10) AS BIGINT) * 2 + 1))
 """
 
+# The production family: two seeded xxhash64s, masked to 56 bits so
+# h1 + k*(2*h2+1) stays inside int64 under ANSI arithmetic (the same range
+# as the md5 halves).
+_SPARK_XXH_H12 = """
+transform(shingles, x -> named_struct(
+  'h1', xxhash64(x) & 72057594037927935L,
+  'h2', (xxhash64(x, 1) & 72057594037927935L) * 2 + 1))
+"""
+
 _DUCKDB_H12 = """
 list_transform(shingles, x -> {
   'h1': CAST('0x' || substr(md5(x), 1, 14) AS BIGINT),
@@ -152,57 +163,11 @@ list_transform(shingles, x -> {
 """
 
 
-def _mh_expr(seed: int) -> str:
-    """The k-th minhash as a Spark SQL fragment over the h12 struct array —
-    the ONE source both the DataFrame builders and the one-shot SQL chain
-    wrap (r14, ADVICE: the fragments had drifted into two copies that could
-    silently desynchronize band values across operators)."""
-    return f"array_min(transform(h12, s -> s.h1 + {seed} * s.h2))"
-
-
-def _minhash_cols_spark() -> list[F.Column]:
-    return [F.expr(_mh_expr(seed)).alias(f"mh_{seed}") for seed in range(N_HASHES)]
-
-
 def _minhash_cols_duckdb() -> str:
     return ",\n       ".join(
         f"list_min(list_transform(h12, s -> s.h1 + {seed} * s.h2)) AS mh_{seed}"
         for seed in range(N_HASHES)
     )
-
-
-def _band_md5_expr(b: int) -> str:
-    """Band-b oracled md5-string key as a Spark SQL fragment (shared source
-    for the DataFrame builder and the one-shot SQL chain)."""
-    per_band = N_HASHES // N_BANDS
-    return (
-        "md5(concat_ws('|', "
-        + ", ".join(f"mh_{b * per_band + i}" for i in range(per_band))
-        + "))"
-    )
-
-
-def _band_key_expr(b: int) -> str:
-    """INTERNAL int64 band key for the candidate kernel (r12 shuffle-payload
-    rewrite): xxhash64 over the band's minhash components, seeded by the
-    band index so matches across different bands can never alias.  One
-    8-byte long replaces the (band_id varchar, band_val 32-char md5) pair
-    in the band self-join shuffle — ~5× slimmer rows on the hottest
-    exchange of the dedup pass.  Two docs collide on a band key iff their
-    band minhash vectors match (the LSH semantics) or xxhash64 collides
-    (2^-64 per bucket pair — and any such spurious candidate still faces
-    exact-Jaccard verification).  The ORACLED signature outputs
-    (_band_cols_spark md5 strings) are unchanged."""
-    per_band = N_HASHES // N_BANDS
-    return (
-        f"xxhash64({b}, "
-        + ", ".join(f"mh_{b * per_band + i}" for i in range(per_band))
-        + ")"
-    )
-
-
-def _band_cols_spark() -> list[F.Column]:
-    return [F.expr(_band_md5_expr(b)).alias(f"band_{b}") for b in range(N_BANDS)]
 
 
 def _band_cols_duckdb() -> str:
@@ -228,26 +193,15 @@ def _hashed_set(col) -> F.Column:
     return F.array_distinct(F.transform(col, lambda x: F.xxhash64(x)))
 
 
-# ── one-shot SQL builders for the minhash chain (r13) ────────────────────
+# ── the minhash chain, one SQL text (r13) ────────────────────────────────
 # Chaining 4-5 DataFrame selects re-runs full analysis over the wide
 # higher-order-function tree on EVERY call — measured 0.157 s to build
 # `banded` vs 0.040 s for one spark.sql() over the identical CTE chain
 # (rows verified identical, including the xxhash64 band keys).  The
 # text names the corpus as the `{documents}` placeholder; callers bind
-# their sf_dir's frame with spark.sql(text, **views(spark, sf_dir)).
-# Expressions are the same SQL fragments the column builders use; the
-# physical plan is unchanged.
-
-_SPARK_SHINGLES_SQL = """
-array_distinct(
-  transform(
-    sequence(1, greatest(size(toks) - 2, 1)),
-    i -> concat_ws(' ', try_element_at(toks, i),
-                   try_element_at(toks, i + 1),
-                   try_element_at(toks, i + 2))
-  )
-)
-"""
+# their frame with spark.sql(text, **views(spark, sf_dir)), or bind a
+# filtered one as ``documents=``.  Every minhash and band value in the
+# package comes from this chain.
 
 
 def _sh_cte() -> str:
@@ -262,48 +216,65 @@ sh AS (
 )"""
 
 
-def _mh_cte_body() -> str:
-    """The h → mh CTE pair shared by every SQL chain built here."""
+def _mh_cte_body(h12: str = _SPARK_H12) -> str:
+    """The h → mh CTE pair over ``sh``: the ``h12`` hash-pair array per
+    document, then its 16 minhashes ``mh_0``..``mh_15``."""
     mh_cols = ",\n       ".join(
-        f"{_mh_expr(seed)} AS mh_{seed}" for seed in range(N_HASHES)
+        f"array_min(transform(h12, s -> s.h1 + {seed} * s.h2)) AS mh_{seed}"
+        for seed in range(N_HASHES)
     )
     return f"""h AS (
-  SELECT doc_id, {_SPARK_H12} AS h12 FROM sh
+  SELECT doc_id, {h12} AS h12 FROM sh
 ),
 mh AS (
   SELECT doc_id, {mh_cols} FROM h
 )"""
 
 
-def _banded_sql(band_select: str) -> str:
-    """Full documents → shingles → h12 → 16 minhash → band SELECT, with
-    the band projection supplied (int64 xxhash64 keys for the internal
-    kernel, md5 strings for the oracled signatures op)."""
+def _minhash_sql(select: str, h12: str = _SPARK_H12) -> str:
+    """Full documents → shingles → h12 → 16 minhash chain, ending in
+    ``SELECT doc_id, {select} FROM mh``."""
     return f"""
 WITH {_sh_cte()},
-{_mh_cte_body()}
-SELECT doc_id, {band_select} FROM mh
+{_mh_cte_body(h12)}
+SELECT doc_id, {select} FROM mh
 """
 
 
 def _band_keys_select() -> str:
-    """Internal int64 band-key projection (see _band_key_expr)."""
+    """INTERNAL int64 band keys for the candidate kernel (r12 shuffle-payload
+    rewrite): xxhash64 over each band's minhash components, seeded by the
+    band index so matches across different bands can never alias.  One
+    8-byte long replaces the (band_id varchar, band_val 32-char md5) pair
+    in the band self-join shuffle — ~5× slimmer rows on the hottest
+    exchange of the dedup pass.  Two docs collide on a band key iff their
+    band minhash vectors match (the LSH semantics) or xxhash64 collides
+    (2^-64 per bucket pair — and any such spurious candidate still faces
+    exact-Jaccard verification).  The ORACLED signature outputs
+    (_band_md5_select strings) are unchanged."""
+    per_band = N_HASHES // N_BANDS
     return ",\n       ".join(
-        f"{_band_key_expr(b)} AS band_{b}" for b in range(N_BANDS)
+        f"xxhash64({b}, "
+        + ", ".join(f"mh_{b * per_band + i}" for i in range(per_band))
+        + f") AS band_{b}"
+        for b in range(N_BANDS)
     )
 
 
 def _band_md5_select() -> str:
-    """Oracled md5-string band projection (see _band_md5_expr)."""
+    """Oracled md5-string band projection: band b is the md5 of its four
+    minhashes joined by '|'."""
+    per_band = N_HASHES // N_BANDS
     return ",\n       ".join(
-        f"{_band_md5_expr(b)} AS band_{b}" for b in range(N_BANDS)
+        "md5(concat_ws('|', "
+        + ", ".join(f"mh_{b * per_band + i}" for i in range(per_band))
+        + f")) AS band_{b}"
+        for b in range(N_BANDS)
     )
 
 
-@query(
-    "dedup_minhash_signatures",
-    oracle=f"""
-WITH sh AS (
+# The oracles' minhash chain: sh → h → mh (16 minhashes per document).
+_DUCKDB_MINHASH_CTES = f"""sh AS (
   SELECT doc_id, {_DUCKDB_SHINGLES} AS shingles FROM documents
 ),
 h AS (
@@ -313,7 +284,13 @@ mh AS (
   SELECT doc_id,
        {_minhash_cols_duckdb()}
   FROM h
-)
+)"""
+
+
+@query(
+    "dedup_minhash_signatures",
+    oracle=f"""
+WITH {_DUCKDB_MINHASH_CTES}
 SELECT doc_id,
        {_band_cols_duckdb()}
 FROM mh
@@ -327,8 +304,8 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_min → band md5.  At 100 TB this is the map phase; only the
     (doc_id, 4×16-byte bands) tuples shuffle."""
     # one spark.sql analysis instead of four chained selects (r13 — see
-    # _banded_sql)
-    return spark.sql(_banded_sql(_band_md5_select()), **views(spark, sf_dir))
+    # _minhash_sql)
+    return spark.sql(_minhash_sql(_band_md5_select()), **views(spark, sf_dir))
 
 
 # Shared oracle CTE chain: documents → shingles → minhash → bands → LSH
@@ -362,6 +339,47 @@ pairs AS (
   FROM expl a JOIN expl b
     ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
 )"""
+
+# The near-duplicate graph the oracles share, one CTE each: the LSH pairs
+# that pass exact Jaccard >= 0.2 (``verified``), the graph's edges in both
+# directions (``edges``), its closure from every node (``reach``) and each
+# node's component, the least node it reaches (``comp``).
+_DUCKDB_VERIFIED = f"""{_DUCKDB_LSH_PAIR_CTES},
+verified AS (
+  SELECT doc_a, doc_b FROM pairs
+  WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
+        / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
+)"""
+
+
+def _duckdb_edges(pairs: str, a: str, b: str) -> str:
+    """The ``edges(src, dst)`` CTE: each (a, b) row of ``pairs`` in both
+    directions."""
+    return f"""edges AS (
+  SELECT {a} AS src, {b} AS dst FROM {pairs}
+  UNION ALL
+  SELECT {b} AS src, {a} AS dst FROM {pairs}
+)"""
+
+
+_DUCKDB_NEARDUP_GRAPH = f"{_DUCKDB_VERIFIED},\n{_duckdb_edges('verified', 'doc_a', 'doc_b')}"
+
+_DUCKDB_REACH = """reach(root, node) AS (
+  SELECT DISTINCT src, src FROM edges
+  UNION
+  SELECT r.root, e.dst FROM reach r JOIN edges e ON r.node = e.src
+)"""
+
+_DUCKDB_COMPONENTS = f"""{_DUCKDB_NEARDUP_GRAPH},
+{_DUCKDB_REACH},
+comp AS (
+  SELECT root AS doc_id, MIN(node) AS component_id FROM reach GROUP BY root
+)"""
+
+# (doc_id, component_id, component_size) from ``reach``
+_DUCKDB_CC_SELECT = """SELECT doc_id, component_id,
+       COUNT(*) OVER (PARTITION BY component_id) AS component_size
+FROM (SELECT root AS doc_id, MIN(node) AS component_id FROM reach GROUP BY root)"""
 
 
 @query(
@@ -401,6 +419,92 @@ def dedup_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _tiled_pair_ctes(
+    spark: SparkSession,
+    src: str,
+    key: str,
+    chunk_c: int,
+    payload: tuple[str, ...] = (),
+    pair_filter: str = "",
+) -> str:
+    """CTEs ``ranked`` … ``tiled``: every pair of rows of ``src(doc_id,
+    <key>, *payload)`` that share ``key``, once each, as ``tiled(doc_a,
+    doc_b, <p>_a, <p>_b …)`` with doc_a < doc_b — only the pairs that pass
+    ``pair_filter``, a predicate over ``a.<p>`` and ``b.<p>``, when one is
+    given.  The hot-key self-join shared by the LSH band join and the
+    rarest-token fuzzy join.
+
+    Chunk-tiled for HOT keys only (r10 skew rehearsal, VERDICT r9 #4).  A
+    hot key — one boilerplate paragraph shared by B documents — makes the
+    plain equi-join emit B²/2 pairs from ONE task: join-key skew by
+    OUTPUT, invisible to AQE's input-size skew split.  Shape: ONE exchange
+    hash-partitions the rows by key; two window functions attach the
+    in-key doc_id rank (rn), its ``chunk_c``-sized chunk, and the key's
+    max chunk.  Keys with ≤ ``chunk_c`` members — all of them, on a
+    deduplicated corpus — take the plain self-join on the key: both sides
+    read the SAME window output, so the exchange is built once and reused,
+    and no new shuffle is added.  Oversized keys fan out over (ca ≤ cb)
+    chunk tiles via an explicit fixed-count repartition on the tile key
+    (AQE's byte-based coalesce would fold the small tile INPUTS together
+    and re-serialize the pair explosion): every pair lands in exactly one
+    tile, every task emits ≤ chunk_c² pairs.  rn is the in-key doc_id
+    rank, so rn_a < rn_b ⟺ doc_a < doc_b.  The hot branch is EMPTY on
+    normal corpora.
+
+    The payload rides with its rows into both joins and ``pair_filter``
+    is part of each join's condition, so a pair that fails it is a
+    transient row of the join stage, never shuffle payload.  It is
+    written after the doc order test: Catalyst keeps a join condition's
+    conjunct order, and the order test halves the pairs the filter sees."""
+    n_part = spark.sparkContext.defaultParallelism * 2
+    cols = "".join(f", {p}" for p in payload)
+    pair_cols = "".join(f", a.{p} AS {p}_a, b.{p} AS {p}_b" for p in payload)
+    out_cols = "".join(f", {p}_a, {p}_b" for p in payload)
+    and_filter = f" AND {pair_filter}" if pair_filter else ""
+    return f"""ranked AS (
+  SELECT doc_id, {key}{cols},
+         row_number() OVER (PARTITION BY {key} ORDER BY doc_id) AS rn
+  FROM {src}
+),
+sized AS (
+  SELECT doc_id, {key}{cols}, rn,
+         (rn - 1) DIV {chunk_c} AS chunk,
+         max((rn - 1) DIV {chunk_c}) OVER (PARTITION BY {key}) AS kmax
+  FROM ranked
+),
+small AS (SELECT {key}, doc_id{cols} FROM sized WHERE kmax = 0),
+cand_small AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b{pair_cols}
+  FROM small a JOIN small b
+    ON a.{key} = b.{key} AND a.doc_id < b.doc_id{and_filter}
+),
+hot AS (SELECT * FROM sized WHERE kmax > 0),
+a_rep AS (
+  SELECT /*+ REPARTITION({n_part}, {key}, ca, cb) */ *
+  FROM (SELECT {key}, chunk AS ca, explode(sequence(chunk, kmax)) AS cb,
+               doc_id AS doc_a, rn AS rn_a{cols}
+        FROM hot)
+),
+b_rep AS (
+  SELECT /*+ REPARTITION({n_part}, {key}, ca, cb) */ *
+  FROM (SELECT {key}, explode(sequence(0, chunk)) AS ca, chunk AS cb,
+               doc_id AS doc_b, rn AS rn_b{cols}
+        FROM hot)
+),
+cand_hot AS (
+  SELECT doc_a, doc_b{pair_cols}
+  FROM a_rep a JOIN b_rep b
+    ON a.{key} = b.{key}
+   AND a.ca = b.ca AND a.cb = b.cb
+  WHERE rn_a < rn_b{and_filter}
+),
+tiled AS (
+  SELECT doc_a, doc_b{out_cols} FROM cand_small
+  UNION ALL
+  SELECT doc_a, doc_b{out_cols} FROM cand_hot
+)"""
+
+
 def _lsh_pair_ctes(spark: SparkSession) -> str:
     """CTE chain documents → banded → tiled band self-join → deduplicated
     candidate pairs → shingle re-attach: everything up to
@@ -418,31 +522,13 @@ def _lsh_pair_ctes(spark: SparkSession) -> str:
 
     INTERNAL band keys are single int64s (band index seeds the hash, so
     the exploded column alone identifies the band) — the r12 payload
-    rewrite; see _band_key_expr.  The oracled signature op still emits
-    md5 strings.
-
-    Chunk-tiled band self-join for HOT buckets only (r10 skew rehearsal,
-    VERDICT r9 #4).  A hot (band) bucket — one boilerplate paragraph
-    shared by B documents — makes the plain equi-join emit B²/2 pairs
-    from ONE task: join-key skew by OUTPUT, invisible to AQE's input-size
-    skew split.  Shape: ONE exchange hash-partitions the slim band rows
-    by bucket; two window functions attach the in-bucket doc_id rank
-    (rn), its C-sized chunk, and the bucket's max chunk.  Buckets with
-    ≤ C members — all of them, on a deduplicated corpus — take the plain
-    self-join on band_key: both sides read the SAME window output, so the
-    exchange is built once and reused, and no new shuffle is added.
-    Oversized buckets fan out over (ca ≤ cb) chunk tiles via an explicit
-    fixed-count repartition on the tile key (AQE's byte-based coalesce
-    would fold the small tile INPUTS together and re-serialize the pair
-    explosion): every pair lands in exactly one tile, every task emits
-    ≤ C² pairs.  rn is the in-bucket doc_id rank, so rn_a < rn_b ⟺
-    doc_a < doc_b.  The hot branch is EMPTY on normal corpora.
+    rewrite; see _band_keys_select.  The oracled signature op still emits
+    md5 strings.  The band self-join is _tiled_pair_ctes at chunk size
+    _BAND_CHUNK_C.
 
     Shingle sets re-attach HASHED to int64 (r12; see _hashed_set): the
     two doc_id-keyed joins are where the verify payload shuffles, and
     every consumer does set-cardinality arithmetic only."""
-    chunk_c = _BAND_CHUNK_C
-    n_part = spark.sparkContext.defaultParallelism * 2
     return f"""{_sh_cte()},
 {_mh_cte_body()},
 banded AS (
@@ -452,49 +538,8 @@ expl AS (
   SELECT doc_id, explode(array(band_0, band_1, band_2, band_3)) AS band_key
   FROM banded
 ),
-ranked AS (
-  SELECT doc_id, band_key,
-         row_number() OVER (PARTITION BY band_key ORDER BY doc_id) AS rn
-  FROM expl
-),
-sized AS (
-  SELECT doc_id, band_key, rn,
-         (rn - 1) DIV {chunk_c} AS chunk,
-         max((rn - 1) DIV {chunk_c}) OVER (PARTITION BY band_key) AS kmax
-  FROM ranked
-),
-small AS (SELECT band_key, doc_id FROM sized WHERE kmax = 0),
-cand_small AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM small a JOIN small b
-    ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
-hot AS (SELECT * FROM sized WHERE kmax > 0),
-a_rep AS (
-  SELECT /*+ REPARTITION({n_part}, band_key, ca, cb) */ *
-  FROM (SELECT band_key, chunk AS ca, explode(sequence(chunk, kmax)) AS cb,
-               doc_id AS doc_a, rn AS rn_a
-        FROM hot)
-),
-b_rep AS (
-  SELECT /*+ REPARTITION({n_part}, band_key, ca, cb) */ *
-  FROM (SELECT band_key, explode(sequence(0, chunk)) AS ca, chunk AS cb,
-               doc_id AS doc_b, rn AS rn_b
-        FROM hot)
-),
-cand_hot AS (
-  SELECT doc_a, doc_b
-  FROM a_rep JOIN b_rep
-    ON a_rep.band_key = b_rep.band_key
-   AND a_rep.ca = b_rep.ca AND a_rep.cb = b_rep.cb
-  WHERE rn_a < rn_b
-),
-cand AS (
-  SELECT DISTINCT doc_a, doc_b
-  FROM (SELECT doc_a, doc_b FROM cand_small
-        UNION ALL
-        SELECT doc_a, doc_b FROM cand_hot)
-),
+{_tiled_pair_ctes(spark, "expl", "band_key", _BAND_CHUNK_C)},
+cand AS (SELECT DISTINCT doc_a, doc_b FROM tiled),
 shh AS (
   SELECT doc_id, array_distinct(transform(shingles, x -> xxhash64(x))) AS shingles
   FROM sh
@@ -570,7 +615,15 @@ def dedup_ngram_jaccard_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth the LSH path approximates (bounded input ⇒ the O(n²) join is
     explicitly safe here; never run this shape unbounded)."""
     v = views(spark, sf_dir)
-    sh = _with_shingles(v["documents"].where(F.col("doc_id") < 20))
+    scored, jac = _all_pairs_jaccard(v["documents"].where(F.col("doc_id") < 20))
+    return scored.select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
+
+
+def _all_pairs_jaccard(docs: DataFrame) -> tuple[DataFrame, F.Column]:
+    """Every (doc_a < doc_b) pair of ``docs`` with both shingle sets and
+    their intersection size, and the exact Jaccard as a Column over them.
+    The join is O(n²): callers bound ``docs``."""
+    sh = _with_shingles(docs)
     a, b = sh.alias("a"), sh.alias("b")
     scored = (
         a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
@@ -583,8 +636,7 @@ def dedup_ngram_jaccard_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         # hoisted: one array_intersect per pair (Catalyst won't CSE it)
         .withColumn("inter_sz", F.size(F.array_intersect("sh_a", "sh_b")).cast("double"))
     )
-    jac = F.col("inter_sz") / (F.size("sh_a") + F.size("sh_b") - F.col("inter_sz"))
-    return scored.select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
+    return scored, F.col("inter_sz") / (F.size("sh_a") + F.size("sh_b") - F.col("inter_sz"))
 
 
 # SimHash signature definition (shared by the Spark worker and the DuckDB
@@ -846,19 +898,9 @@ pairs AS (
         / (len(a.shingles) + len(b.shingles)
            - len(list_intersect(a.shingles, b.shingles))) >= 0.15
 ),
-edges AS (
-  SELECT pa AS src, pb AS dst FROM pairs
-  UNION ALL
-  SELECT pb AS src, pa AS dst FROM pairs
-),
-reach(root, node) AS (
-  SELECT DISTINCT src, src FROM edges
-  UNION
-  SELECT r.root, e.dst FROM reach r JOIN edges e ON r.node = e.src
-)
-SELECT doc_id, component_id,
-       COUNT(*) OVER (PARTITION BY component_id) AS component_size
-FROM (SELECT root AS doc_id, MIN(node) AS component_id FROM reach GROUP BY root)
+{_duckdb_edges('pairs', 'pa', 'pb')},
+{_DUCKDB_REACH}
+{_DUCKDB_CC_SELECT}
 """,
     tags=("dedup", "iterative"),
 )
@@ -876,19 +918,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH candidate join (dedup_minhash_candidate_pairs) produces the edges —
     the component loop is unchanged."""
     v = views(spark, sf_dir)
-    sh = _with_shingles(v["documents"].where(F.col("doc_id") < 1000))
-    a, b = sh.alias("a"), sh.alias("b")
-    scored = (
-        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.shingles").alias("sh_a"),
-            F.col("b.shingles").alias("sh_b"),
-        )
-        .withColumn("inter_sz", F.size(F.array_intersect("sh_a", "sh_b")).cast("double"))
-    )
-    jac = F.col("inter_sz") / (F.size("sh_a") + F.size("sh_b") - F.col("inter_sz"))
+    scored, jac = _all_pairs_jaccard(v["documents"].where(F.col("doc_id") < 1000))
     pairs = scored.where(jac >= 0.15).select("doc_a", "doc_b")
     return _components_output(pairs)
 
@@ -896,25 +926,9 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_cluster_pipeline",
     oracle=f"""
-WITH RECURSIVE {_DUCKDB_LSH_PAIR_CTES},
-verified AS (
-  SELECT doc_a, doc_b FROM pairs
-  WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-        / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM verified
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM verified
-),
-reach(root, node) AS (
-  SELECT DISTINCT src, src FROM edges
-  UNION
-  SELECT r.root, e.dst FROM reach r JOIN edges e ON r.node = e.src
-)
-SELECT doc_id, component_id,
-       COUNT(*) OVER (PARTITION BY component_id) AS component_size
-FROM (SELECT root AS doc_id, MIN(node) AS component_id FROM reach GROUP BY root)
+WITH RECURSIVE {_DUCKDB_NEARDUP_GRAPH},
+{_DUCKDB_REACH}
+{_DUCKDB_CC_SELECT}
 """,
     tags=("dedup", "minhash", "iterative", "bench"),
 )
@@ -939,25 +953,7 @@ def dedup_cluster_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_cluster_survivors",
     oracle=f"""
-WITH RECURSIVE {_DUCKDB_LSH_PAIR_CTES},
-verified AS (
-  SELECT doc_a, doc_b FROM pairs
-  WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-        / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM verified
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM verified
-),
-reach(root, node) AS (
-  SELECT DISTINCT src, src FROM edges
-  UNION
-  SELECT r.root, e.dst FROM reach r JOIN edges e ON r.node = e.src
-),
-comp AS (
-  SELECT root AS doc_id, MIN(node) AS component_id FROM reach GROUP BY root
-)
+WITH RECURSIVE {_DUCKDB_COMPONENTS}
 SELECT d.doc_id, d.lang, d.source,
        (c.doc_id IS NOT NULL)::INTEGER AS was_clustered
 FROM documents d
@@ -976,8 +972,7 @@ def dedup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus.  The keeper rule generalizes (earliest crawl, highest quality
     score) by swapping the min() in the component labeling."""
     v = views(spark, sf_dir)
-    pairs = _lsh_verified_pairs(spark, sf_dir, threshold=0.2).select("doc_a", "doc_b")
-    labels = _min_label_components(_both_directions(pairs))
+    labels = _lsh_component_labels(spark, sf_dir)
     docs = v["documents"].select("doc_id", "lang", "source")
     lab = labels.select(
         F.col("node").alias("doc_id"), F.col("lbl").alias("component_id")
@@ -1125,6 +1120,13 @@ def _both_directions(pairs: DataFrame) -> DataFrame:
     ).select("e.src", "e.dst")
 
 
+def _lsh_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(node, lbl) — component labels of the verified LSH near-dup graph
+    (candidate pairs with exact Jaccard >= 0.2)."""
+    pairs = _lsh_verified_pairs(spark, sf_dir, threshold=0.2).select("doc_a", "doc_b")
+    return _min_label_components(_both_directions(pairs))
+
+
 def _components_output(pairs: DataFrame) -> DataFrame:
     """(doc_a, doc_b) undirected pair list → (doc_id, component_id,
     component_size), the dedup-cluster output shape."""
@@ -1140,25 +1142,7 @@ def _components_output(pairs: DataFrame) -> DataFrame:
 @query(
     "dedup_cluster_best_keeper",
     oracle=f"""
-WITH RECURSIVE {_DUCKDB_LSH_PAIR_CTES},
-verified AS (
-  SELECT doc_a, doc_b FROM pairs
-  WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-        / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM verified
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM verified
-),
-reach(root, node) AS (
-  SELECT DISTINCT src, src FROM edges
-  UNION
-  SELECT r.root, e.dst FROM reach r JOIN edges e ON r.node = e.src
-),
-comp AS (
-  SELECT root AS doc_id, MIN(node) AS component_id FROM reach GROUP BY root
-),
+WITH RECURSIVE {_DUCKDB_COMPONENTS},
 ranked AS (
   SELECT c.component_id, c.doc_id,
          len(string_split_regex(trim(d.text), '\\s+')) AS n_words,
@@ -1186,8 +1170,7 @@ def dedup_cluster_best_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     v = views(spark, sf_dir)
-    pairs = _lsh_verified_pairs(spark, sf_dir, threshold=0.2).select("doc_a", "doc_b")
-    labels = _min_label_components(_both_directions(pairs))
+    labels = _lsh_component_labels(spark, sf_dir)
     quality = v["documents"].select(
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_words"),
@@ -1392,31 +1375,15 @@ def dedup_minhash_signatures_fast(spark: SparkSession, sf_dir: str) -> DataFrame
     stripe loop via list_reduce) reproducing Spark's hash bit-for-bit;
     the previously-unverifiable fast path now hash-matches the driver
     check like every other catalog entry.  Use THIS variant at 100 TB."""
-    v = views(spark, sf_dir)
-    sh = _with_shingles(v["documents"])
-    h = sh.select(
-        "doc_id",
-        F.expr(
-            # mask to 56 bits so h1 + k*(2*h2+1) stays inside int64 under
-            # ANSI arithmetic (same range as the md5 variant's hex halves)
-            "transform(shingles, x -> named_struct("
-            "'h1', xxhash64(x) & 72057594037927935L, "
-            "'h2', (xxhash64(x, 1) & 72057594037927935L) * 2 + 1))"
-        ).alias("h12"),
+    return spark.sql(
+        _minhash_sql(_band_md5_select(), _SPARK_XXH_H12), **views(spark, sf_dir)
     )
-    mh = h.select("doc_id", *_minhash_cols_spark())
-    return mh.select("doc_id", *_band_cols_spark())
 
 
 @query(
     "neardup_graph_degrees",
     oracle=f"""
-WITH {_DUCKDB_LSH_PAIR_CTES},
-verified AS (
-  SELECT doc_a, doc_b FROM pairs
-  WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-        / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
-),
+WITH {_DUCKDB_VERIFIED},
 und AS (
   SELECT doc_a AS doc_id FROM verified
   UNION ALL
@@ -1510,18 +1477,6 @@ def fuzzy_join_rarest_token(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking key misses pairs whose rarest tokens differ) is the standard
     ER recall/cost dial — add the 2nd-rarest token as a second blocking
     pass to raise recall."""
-    from pyspark.sql import Window as W
-
-    v = views(spark, sf_dir)
-    pref = v["documents"].select(
-        "doc_id",
-        F.array_sort(
-            F.array_distinct(F.slice(F.split(F.trim("text"), " "), 1, 8))
-        ).alias("words"),
-    )
-    w = pref.select("doc_id", F.explode("words").alias("word"))
-    dfreq = w.groupBy("word").agg(F.count("*").alias("dfreq"))
-    w_rank = W.partitionBy("doc_id").orderBy("dfreq", "word")
     # dfreq is vocabulary-sized (one row per distinct prefix token) and
     # grows with the corpus — no broadcast hint; AQE picks broadcast only
     # while the vocabulary actually fits, and falls back to a shuffle join
@@ -1531,124 +1486,60 @@ def fuzzy_join_rarest_token(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition key downstream, and an 8-byte long beats a token string
     # through three shuffles (r12 payload rewrite; collision = 2^-64 per
     # token pair, and any merged block still faces Jaccard verification).
-    blocked = (
-        w.join(dfreq, "word")
-        .withColumn("rn", F.row_number().over(w_rank))
-        .where(F.col("rn") == 1)
-        .select("doc_id", F.xxhash64("word").alias("block_key"))
-    )
-    # Tiled self-join, unified with the band kernel's two-path design
-    # (r11; _lsh_candidate_pairs_with_shingles): a block's pairs grow
-    # quadratically in its size, and a plain equi-join on block_key puts
-    # the WHOLE hot block's pair explosion in one task (join-key skew by
-    # output, which AQE's input-size-based skew split never sees —
-    # observed at 8× scale: a 9,000-doc block = 40M pairs in a single
-    # task).  Blocks with ≤ C docs take the plain self-join; oversized
-    # blocks fan out over (ca ≤ cb) chunk tiles via explode(sequence) —
-    # every pair lands in exactly one tile, each task verifies ≤ C²
-    # pairs, and no vocabulary-sized tiles table is broadcast (the r10
-    # broadcast-tiles shape died at 100 TB vocabularies by construction).
+    # The word sets that ride into the tile join are xxhash64-hashed too
+    # (r12; see _hashed_set): Jaccard is set-cardinality arithmetic,
+    # value-identical on the hashes.
     #
-    # CRITICAL scale property (r11 512× post-mortem): the word sets ride
-    # INTO the tile join and the Jaccard threshold filters INSIDE the
-    # join stage, so raw candidate pairs — ~10⁹ at 512×, since block
-    # sizes are bounded only by the rarest token's df — are transient
-    # codegen rows, never shuffle payload.  The previous shape emitted
-    # slim raw pairs and re-attached words by TWO doc_id shuffle joins:
-    # ~150 GB through the exchange at 512×, which filled the disk with
-    # sort spill.  Verified output (the jac ≥ 0.5 survivors) is what
-    # shuffles afterward, and that is duplicate-mass-sized.
-    chunk_c = _FUZZY_CHUNK_C
-    w_chunk = W.partitionBy("block_key").orderBy("doc_id")
-    w_block = W.partitionBy("block_key")
-    # The word sets that ride into the tile join are xxhash64-hashed to
-    # arrays of longs (r12; see _hashed_set) — Jaccard is set-cardinality
-    # arithmetic, value-identical on the hashes, and the ≤8-token string
-    # arrays were the dominant payload of the block/tile shuffles.
-    prefh = pref.select("doc_id", _hashed_set("words").alias("words"))
-    sized = (
-        blocked.join(prefh, "doc_id")
-        .withColumn("rn", F.row_number().over(w_chunk))
-        .withColumn("chunk", F.expr(f"(rn - 1) DIV {chunk_c}"))
-        .withColumn("kmax", F.max("chunk").over(w_block))
+    # The block self-join is _tiled_pair_ctes (r11): a block's pairs grow
+    # quadratically in its size (observed at 8× scale: a 9,000-doc block =
+    # 40M pairs in a single task).  CRITICAL scale property (r11 512×
+    # post-mortem): the word sets ride INTO the tile join and the Jaccard
+    # threshold filters INSIDE the join stage, so raw candidate pairs —
+    # ~10⁹ at 512×, since block sizes are bounded only by the rarest
+    # token's df — are transient codegen rows, never shuffle payload.
+    # Re-attaching words to slim raw pairs by two doc_id shuffle joins
+    # moved ~150 GB through the exchange at 512× and filled the disk with
+    # sort spill.  Only the jac ≥ 0.5 survivors shuffle afterward.
+    return spark.sql(
+        f"""WITH pref AS (
+  SELECT doc_id,
+         array_sort(array_distinct(slice(split(trim(text), ' '), 1, 8))) AS words
+  FROM {{documents}}
+),
+w AS (SELECT doc_id, explode(words) AS word FROM pref),
+df AS (SELECT word, count(*) AS dfreq FROM w GROUP BY word),
+blocked AS (
+  SELECT doc_id, xxhash64(word) AS block_key FROM (
+    SELECT w.doc_id, w.word,
+           row_number() OVER (PARTITION BY w.doc_id ORDER BY df.dfreq, w.word) AS rn
+    FROM w JOIN df ON w.word = df.word
+  ) WHERE rn = 1
+),
+prefh AS (
+  SELECT doc_id, array_distinct(transform(words, x -> xxhash64(x))) AS words FROM pref
+),
+keyed AS (
+  SELECT b.doc_id, b.block_key, p.words FROM blocked b JOIN prefh p ON p.doc_id = b.doc_id
+),
+{_tiled_pair_ctes(spark, "keyed", "block_key", _FUZZY_CHUNK_C, ("words",),
+                  f"{_jaccard_sql('a.words', 'b.words')} >= 0.5")}
+SELECT doc_a, doc_b, round({_jaccard_sql("words_a", "words_b")}, 4) AS jaccard
+FROM tiled""",
+        **views(spark, sf_dir),
     )
 
-    def _jac_pairs(a, b):
-        inter = F.size(F.array_intersect("wa", "wb")).cast("double")
-        jac = inter / (F.size("wa") + F.size("wb") - inter)
-        return (
-            a.join(b, [c for c in a.columns if c in b.columns and c not in
-                       ("doc_a", "doc_b", "rn_a", "rn_b", "wa", "wb")])
-            .where(F.col("rn_a") < F.col("rn_b"))
-            .where(jac >= 0.5)
-            .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        )
 
-    small = sized.where(F.col("kmax") == 0)
-    pairs_small = _jac_pairs(
-        small.select(
-            "block_key",
-            F.col("doc_id").alias("doc_a"),
-            F.col("rn").alias("rn_a"),
-            F.col("words").alias("wa"),
-        ),
-        small.select(
-            "block_key",
-            F.col("doc_id").alias("doc_b"),
-            F.col("rn").alias("rn_b"),
-            F.col("words").alias("wb"),
-        ),
-    )
-    hot = sized.where(F.col("kmax") > 0)
-    a_rep = hot.select(
-        "block_key",
-        F.col("chunk").alias("ca"),
-        F.explode(F.sequence("chunk", "kmax")).alias("cb"),
-        F.col("doc_id").alias("doc_a"),
-        F.col("rn").alias("rn_a"),
-        F.col("words").alias("wa"),
-    )
-    b_rep = hot.select(
-        "block_key",
-        F.explode(F.sequence(F.lit(0), F.col("chunk"))).alias("ca"),
-        F.col("chunk").alias("cb"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("rn").alias("rn_b"),
-        F.col("words").alias("wb"),
-    )
-    # Explicit fixed-count repartition on the tile key: the tile INPUTS are
-    # a few MB, so AQE's input-size-based coalesce would fold every tile
-    # back into one post-shuffle partition — re-serializing the explosion
-    # it was built to avoid.  A user repartition with an explicit count is
-    # never coalesced, and the join reuses the partitioning (no extra
-    # exchange).  Only hot-block rows pay it; the hot branch is empty
-    # until some rarest token's df exceeds C.
-    n_part = spark.sparkContext.defaultParallelism * 2
-    a_rep = a_rep.repartition(n_part, "block_key", "ca", "cb")
-    b_rep = b_rep.repartition(n_part, "block_key", "ca", "cb")
-    pairs_hot = _jac_pairs(a_rep, b_rep)
-    return pairs_small.unionByName(pairs_hot)
+def _jaccard_sql(x: str, y: str) -> str:
+    """Spark SQL: the Jaccard similarity of the sets ``x`` and ``y``."""
+    inter = f"CAST(size(array_intersect({x}, {y})) AS DOUBLE)"
+    return f"{inter} / (size({x}) + size({y}) - {inter})"
 
 
 @query(
     "pipeline_dedup_report",
     oracle=f"""
-WITH RECURSIVE {_DUCKDB_LSH_PAIR_CTES},
-verified AS (
-  SELECT doc_a, doc_b FROM pairs
-  WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-        / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM verified
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM verified
-),
-reach(root, node) AS (
-  SELECT DISTINCT src, src FROM edges
-  UNION
-  SELECT r.root, e.dst FROM reach r JOIN edges e ON r.node = e.src
-),
+WITH RECURSIVE {_DUCKDB_NEARDUP_GRAPH},
+{_DUCKDB_REACH},
 comp AS (SELECT root AS doc_id, MIN(node) AS component_id FROM reach GROUP BY root)
 SELECT (SELECT COUNT(*) FROM documents)                     AS n_docs,
        (SELECT COUNT(*) FROM verified)                      AS n_pairs,
@@ -1713,12 +1604,7 @@ def pipeline_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_cross_source_matrix",
     oracle=f"""
-WITH {_DUCKDB_LSH_PAIR_CTES},
-verified AS (
-  SELECT doc_a, doc_b FROM pairs
-  WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-        / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
-)
+WITH {_DUCKDB_VERIFIED}
 SELECT least(da.source, db.source) AS source_a,
        greatest(da.source, db.source) AS source_b,
        CAST(COUNT(*) AS BIGINT) AS n_pairs
@@ -1881,25 +1767,7 @@ def dedup_lsh_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pipeline_dedup_bias_audit",
     oracle=f"""
-WITH RECURSIVE {_DUCKDB_LSH_PAIR_CTES},
-verified AS (
-  SELECT doc_a, doc_b FROM pairs
-  WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-        / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM verified
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM verified
-),
-reach(root, node) AS (
-  SELECT DISTINCT src, src FROM edges
-  UNION
-  SELECT r.root, e.dst FROM reach r JOIN edges e ON r.node = e.src
-),
-comp AS (
-  SELECT root AS doc_id, MIN(node) AS component_id FROM reach GROUP BY root
-),
+WITH RECURSIVE {_DUCKDB_COMPONENTS},
 classed AS (
   SELECT d.doc_id,
          CASE WHEN c.doc_id IS NULL THEN 'kept_unclustered'
@@ -1934,8 +1802,7 @@ def pipeline_dedup_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of the (small) component labels; all means are floor-divided
     exact integers."""
     v = views(spark, sf_dir)
-    pairs = _lsh_verified_pairs(spark, sf_dir, threshold=0.2).select("doc_a", "doc_b")
-    comp = _min_label_components(_both_directions(pairs))
+    comp = _lsh_component_labels(spark, sf_dir)
     d = v["documents"]
     n_words = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
     punct_pm = F.expr(
@@ -2143,17 +2010,7 @@ def text_contamination_hit_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "incremental_minhash_update",
     oracle=f"""
-WITH sh AS (
-  SELECT doc_id, {_DUCKDB_SHINGLES} AS shingles FROM documents
-),
-h AS (
-  SELECT doc_id, {_DUCKDB_H12} AS h12 FROM sh
-),
-mh AS (
-  SELECT doc_id,
-       {_minhash_cols_duckdb()}
-  FROM h
-)
+WITH {_DUCKDB_MINHASH_CTES}
 SELECT doc_id,
        {_band_cols_duckdb()},
        CASE WHEN doc_id % 13 = 0 THEN 'recomputed' ELSE 'carried' END AS provenance
@@ -2175,20 +2032,13 @@ def incremental_minhash_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     (filter pushed to the scan); the carried path is a signature-table
     scan with no text parsing at all.  Union is partition-local (no
     shuffle), so the plan has no exchange."""
-    v = views(spark, sf_dir)
-
-    def signatures(df):
-        sh = _with_shingles(df)
-        h = sh.select("doc_id", F.expr(_SPARK_H12).alias("h12"))
-        mh = h.select("doc_id", *_minhash_cols_spark())
-        return mh.select("doc_id", *_band_cols_spark())
-
-    docs = v["documents"]
+    docs = views(spark, sf_dir)["documents"]
     changed = F.col("doc_id") % 13 == 0
-    recomputed = signatures(docs.where(changed)).withColumn(
+    bands = _minhash_sql(_band_md5_select())
+    recomputed = spark.sql(bands, documents=docs.where(changed)).withColumn(
         "provenance", F.lit("recomputed")
     )
-    carried = signatures(docs.where(~changed)).withColumn(
+    carried = spark.sql(bands, documents=docs.where(~changed)).withColumn(
         "provenance", F.lit("carried")
     )
     return carried.unionByName(recomputed)
@@ -2233,11 +2083,11 @@ def dedup_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame
     signature re-attach joins are doc-keyed; the histogram is <=17 rows.
     Both the estimate (n/16) and the exact Jaccard are small rationals,
     so the error bucket is cross-engine exact."""
-    v = views(spark, sf_dir)
     pairs = _lsh_candidate_pairs_with_shingles(spark, sf_dir)
-    sh = _with_shingles(v["documents"])
-    h = sh.select("doc_id", F.expr(_SPARK_H12).alias("h12"))
-    mh = h.select("doc_id", *_minhash_cols_spark())
+    mh = spark.sql(
+        _minhash_sql(", ".join(f"mh_{i}" for i in range(N_HASHES))),
+        **views(spark, sf_dir),
+    )
     a = mh.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(N_HASHES)],
@@ -2363,25 +2213,7 @@ def dedup_modality_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_cluster_size_distribution",
     oracle=f"""
-WITH RECURSIVE {_DUCKDB_LSH_PAIR_CTES},
-verified AS (
-  SELECT doc_a, doc_b FROM pairs
-  WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-        / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM verified
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM verified
-),
-reach(root, node) AS (
-  SELECT DISTINCT src, src FROM edges
-  UNION
-  SELECT r.root, e.dst FROM reach r JOIN edges e ON r.node = e.src
-),
-comp AS (
-  SELECT root AS doc_id, MIN(node) AS component_id FROM reach GROUP BY root
-),
+WITH RECURSIVE {_DUCKDB_COMPONENTS},
 sizes AS (
   SELECT component_id, CAST(COUNT(*) AS BIGINT) AS component_size
   FROM comp GROUP BY component_id
@@ -2415,10 +2247,7 @@ def dedup_cluster_size_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     two map-side-combined rollups on |components| rows and one broadcast
     corpus count."""
     v = views(spark, sf_dir)
-    pairs = _lsh_verified_pairs(spark, sf_dir, threshold=0.2).select(
-        "doc_a", "doc_b"
-    )
-    labels = _min_label_components(_both_directions(pairs))
+    labels = _lsh_component_labels(spark, sf_dir)
     sizes = labels.groupBy("lbl").agg(
         F.count("*").cast("bigint").alias("component_size")
     )

@@ -645,9 +645,9 @@ def events_rate_limited_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "events_hourly_ohlc",
-    oracle="""
+# The oracle of events_hourly_ohlc and of its streaming twin,
+# streaming_hourly_ohlc.
+_OHLC_ORACLE = """
 SELECT event_type,
        date_trunc('hour', ts) AS bar_hour,
        CAST(COUNT(*) AS BIGINT) AS n,
@@ -660,7 +660,12 @@ SELECT event_type,
        CAST(SUM(CAST(ROUND(value * 10000) AS BIGINT)) AS BIGINT) AS volume_e4
 FROM events
 GROUP BY 1, 2
-""",
+"""
+
+
+@query(
+    "events_hourly_ohlc",
+    oracle=_OHLC_ORACLE,
     tags=("aggregate", "events"),
 )
 def events_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1364,9 +1369,9 @@ def events_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "events_bot_cadence",
-    oracle="""
+# The oracle of events_bot_cadence and of its streaming twin,
+# streaming_bot_cadence.
+_BOT_CADENCE_ORACLE = """
 WITH gaps AS (
   SELECT user_id,
          epoch_us(ts) // 1000000
@@ -1388,7 +1393,12 @@ SELECT user_id, n_gaps,
        CAST(sum_s // n_gaps AS BIGINT) AS mean_gap_s,
        CAST(100 * n_gaps * sumsq_s < 101 * sum_s * sum_s AS INTEGER) AS metronomic
 FROM s
-""",
+"""
+
+
+@query(
+    "events_bot_cadence",
+    oracle=_BOT_CADENCE_ORACLE,
     tags=("events", "window", "qa", "analytics"),
 )
 def events_bot_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:

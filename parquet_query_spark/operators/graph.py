@@ -36,31 +36,27 @@ from pyspark.sql import functions as F
 
 from parquet_query_spark.operators.catalog import query
 from parquet_query_spark.operators.dedup import (
-    _DUCKDB_LSH_PAIR_CTES,
+    _DUCKDB_NEARDUP_GRAPH,
     _lsh_verified_pairs,
 )
 
 _SCALE = 1_000_000_000  # rank nano-units
 _N_ITER = 5
 
-#: the verified near-dup pairs and their edges in both directions — the
-#: prefix every graph oracle starts from
-_EDGE_CTES = f"""{_DUCKDB_LSH_PAIR_CTES},
-verified AS (
-  SELECT doc_a, doc_b FROM pairs
-  WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
-        / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) >= 0.2
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM verified
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM verified
-)"""
-
-_GRAPH_CTES = f"""{_EDGE_CTES},
+#: the verified near-dup graph (dedup's ``verified`` and ``edges`` CTEs)
+#: and its node degrees — the prefix the graph oracles start from
+_GRAPH_CTES = f"""{_DUCKDB_NEARDUP_GRAPH},
 deg AS (
   SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY 1
 )"""
+
+
+def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst): the verified near-dup pairs in both directions."""
+    verified = _lsh_verified_pairs(spark, sf_dir, threshold=0.2)
+    return verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionAll(
+        verified.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    )
 
 
 def _pagerank_oracle() -> str:
@@ -97,11 +93,7 @@ def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     one dst aggregation over the edge list (corpus-independent size);
     degrees computed once.  The oracle unrolls the same five iterations
     as SQL CTEs."""
-    verified = _lsh_verified_pairs(spark, sf_dir, threshold=0.2)
-    edges = (
-        verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(verified.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    )
+    edges = _edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("doc_id")).agg(F.count("*").alias("deg"))
     # Materialize the (small, edge-bound) graph once: five iterations
     # re-derive edges/degrees otherwise, recomputing the LSH join per
@@ -249,12 +241,7 @@ def neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop.  The round count is fixed (5 — convergence is visible in the
     trace when consecutive rows equalize), so the oracle unrolls the same
     peels as SQL CTEs."""
-    verified = _lsh_verified_pairs(spark, sf_dir, threshold=0.2)
-    edges = (
-        verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(verified.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .localCheckpoint(eager=False)
-    )
+    edges = _edges(spark, sf_dir).localCheckpoint(eager=False)
     rounds = []
     e = edges
     for r in range(_KCORE_ROUNDS + 1):
@@ -289,7 +276,7 @@ _LPA_ROUNDS = 3
 
 
 def _lpa_oracle() -> str:
-    graph_ctes = f"""{_EDGE_CTES},
+    graph_ctes = f"""{_DUCKDB_NEARDUP_GRAPH},
 nodes AS (SELECT DISTINCT src AS doc_id FROM edges)"""
     rounds = ["l0 AS (SELECT doc_id, doc_id AS label FROM nodes)"]
     for i in range(1, _LPA_ROUNDS + 1):
@@ -331,14 +318,7 @@ def neardup_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup tier in BASELINE.md; dedup_cluster_pipeline runs 148-230 s on
     the same kernel at 64x).  Cost per edge-round is flat; real corpora
     have bounded duplicate rates."""
-    verified = _lsh_verified_pairs(spark, sf_dir, 0.2).select("doc_a", "doc_b")
-    edges = (
-        verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            verified.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .localCheckpoint()
-    )
+    edges = _edges(spark, sf_dir).localCheckpoint()
     labels = edges.select(F.col("src").alias("doc_id")).distinct().select(
         "doc_id", F.col("doc_id").alias("label")
     )

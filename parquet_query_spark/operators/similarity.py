@@ -20,6 +20,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from parquet_query_spark.operators.catalog import query, views
+from parquet_query_spark.operators.dedup import (
+    _DUCKDB_REACH,
+    _components_output,
+    _duckdb_edges,
+)
 
 _DIM = 64
 N_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -418,16 +423,8 @@ WITH RECURSIVE pairs AS (
 verified AS (
   SELECT id_a, id_b FROM pairs WHERE {_DUCKDB_COSINE} >= 0.3
 ),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM verified
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM verified
-),
-reach(root, node) AS (
-  SELECT DISTINCT src, src FROM edges
-  UNION
-  SELECT r.root, e.dst FROM reach r JOIN edges e ON r.node = e.src
-)
+{_duckdb_edges("verified", "id_a", "id_b")},
+{_DUCKDB_REACH}
 SELECT vec_id, component_id,
        COUNT(*) OVER (PARTITION BY component_id) AS component_size
 FROM (SELECT root AS vec_id, MIN(node) AS component_id FROM reach GROUP BY root)
@@ -446,8 +443,6 @@ def embedding_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged — exactly mirroring how `dedup_cluster_pipeline` swaps the
     bounded all-pairs edges of `dedup_connected_components` for LSH
     candidates."""
-    from parquet_query_spark.operators.dedup import _components_output
-
     pairs = embedding_neardup_pairs(spark, sf_dir).select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )

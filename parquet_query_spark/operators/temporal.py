@@ -79,9 +79,9 @@ def asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "range_join_errors_after_purchase",
-    oracle="""
+# The oracle of range_join_errors_after_purchase and of
+# range_join_bucketed_probes, the same query planned by time bucket.
+_RANGE_ERRORS_ORACLE = """
 WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
      e AS (SELECT user_id, ts FROM events WHERE event_type = 'error')
 SELECT p.event_id AS purchase_id, p.user_id,
@@ -90,7 +90,12 @@ FROM p LEFT JOIN e
   ON p.user_id = e.user_id
  AND e.ts > p.ts AND e.ts <= p.ts + INTERVAL '1' HOUR
 GROUP BY p.event_id, p.user_id
-""",
+"""
+
+
+@query(
+    "range_join_errors_after_purchase",
+    oracle=_RANGE_ERRORS_ORACLE,
     tags=("join", "range", "events"),
 )
 def range_join_errors_after_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -142,9 +147,9 @@ def _ewma_terms_sql() -> tuple[str, str]:
 _EWMA_NUM_SQL, _EWMA_DEN_SQL = _ewma_terms_sql()
 
 
-@query(
-    "events_ewma_hourly",
-    oracle=f"""
+# The oracle of events_ewma_hourly and of its streaming twin,
+# streaming_ewma_hourly.
+_EWMA_ORACLE = f"""
 WITH hourly AS (
   SELECT event_type, date_trunc('hour', ts) AS hour_ts,
          CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
@@ -161,7 +166,12 @@ smoothed AS (
 SELECT event_type, hour_ts, cents,
        CAST(num * 1000000 // den AS BIGINT) AS ewma_micro
 FROM smoothed
-""",
+"""
+
+
+@query(
+    "events_ewma_hourly",
+    oracle=_EWMA_ORACLE,
     tags=("temporal", "window", "aggregate"),
 )
 def events_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,16 +228,7 @@ def events_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "range_join_bucketed_probes",
-    oracle="""
-WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-     e AS (SELECT user_id, ts FROM events WHERE event_type = 'error')
-SELECT p.event_id AS purchase_id, p.user_id,
-       COUNT(e.ts) AS errors_within_1h
-FROM p LEFT JOIN e
-  ON p.user_id = e.user_id
- AND e.ts > p.ts AND e.ts <= p.ts + INTERVAL '1' HOUR
-GROUP BY p.event_id, p.user_id
-""",
+    oracle=_RANGE_ERRORS_ORACLE,
     tags=("join", "range", "events", "bucketed"),
 )
 def range_join_bucketed_probes(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1367,18 +1367,20 @@ def text_char_trigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Importing dedup registers its operators, so the import sits here, after
+# this module's bench operators: the catalog keeps its bench order.
+from parquet_query_spark.operators.dedup import (  # noqa: E402
+    _DUCKDB_SHINGLES,
+    _hashed_set,
+    _with_shingles,
+)
+
+
 @query(
     "text_ngram_novelty_curve",
-    oracle="""
+    oracle=f"""
 WITH sh AS (
-  SELECT doc_id,
-         list_distinct(
-           list_transform(
-             range(1, greatest(len(string_split_regex(trim(text), '\\s+')) - 2, 1) + 1),
-             i -> concat_ws(' ',
-                    list_extract(string_split_regex(trim(text), '\\s+'), i),
-                    list_extract(string_split_regex(trim(text), '\\s+'), i + 1),
-                    list_extract(string_split_regex(trim(text), '\\s+'), i + 2)))) AS shingles
+  SELECT doc_id, {_DUCKDB_SHINGLES} AS shingles
   FROM documents
 ),
 expl AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
@@ -1416,8 +1418,6 @@ def text_ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle; the novelty join is shingle-keyed; the decile rollup is 10
     rows.  Exact integer basis points."""
     v = views(spark, sf_dir)
-    from parquet_query_spark.operators.dedup import _hashed_set, _with_shingles
-
     # Shingles are min-per-key group keys only — int64 hashes (r12)
     # slim the corpus-wide first-seen shuffle; counts identical mod 2^-64.
     sh = _with_shingles(v["documents"]).select(

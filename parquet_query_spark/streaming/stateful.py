@@ -20,6 +20,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from parquet_query_spark.operators.catalog import query
+from parquet_query_spark.operators.events_ops import _BOT_CADENCE_ORACLE
+from parquet_query_spark.operators.temporal import _EWMA_ORACLE
 from parquet_query_spark.streaming.streaming_ops import _events_stream, _run_to_table
 
 _OUT_SCHEMA = T.StructType(
@@ -278,7 +280,7 @@ def _ewma_state_fn(key, pdf_iter, state: GroupState):
 
 @query(
     "streaming_ewma_hourly",
-    oracle=None,  # set below to the batch twin's SQL after import
+    oracle=_EWMA_ORACLE,
     tags=("streaming", "stateful", "temporal", "pandas-udf"),
 )
 def streaming_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -317,17 +319,6 @@ def streaming_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") == 1)
         .select("event_type", "hour_ts", "cents", "ewma_micro")
     )
-
-
-def _attach_ewma_oracle() -> None:
-    # Import the batch twin first so its registration order can't matter.
-    from parquet_query_spark.operators import temporal  # noqa: F401
-    from parquet_query_spark.operators.catalog import CATALOG
-
-    CATALOG["streaming_ewma_hourly"].oracle = CATALOG["events_ewma_hourly"].oracle
-
-
-_attach_ewma_oracle()
 
 
 _CADENCE_OUT_SCHEMA = T.StructType(
@@ -424,7 +415,7 @@ def _cadence_state_fn(key, pdf_iter, state: GroupState):
 
 @query(
     "streaming_bot_cadence",
-    oracle=None,  # attached below: identical to the batch twin
+    oracle=_BOT_CADENCE_ORACLE,
     tags=("streaming", "stateful", "qa", "pandas-udf"),
 )
 def streaming_bot_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -463,13 +454,3 @@ def streaming_bot_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") == 1)
         .select("user_id", "n_gaps", "mean_gap_s", "metronomic")
     )
-
-
-def _attach_cadence_oracle() -> None:
-    from parquet_query_spark.operators import events_ops  # noqa: F401
-    from parquet_query_spark.operators.catalog import CATALOG
-
-    CATALOG["streaming_bot_cadence"].oracle = CATALOG["events_bot_cadence"].oracle
-
-
-_attach_cadence_oracle()

@@ -25,6 +25,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from parquet_query_spark.operators.catalog import query
+from parquet_query_spark.operators.dedup import (
+    _DUCKDB_SHINGLES,
+    _SPARK_SHINGLES_SQL,
+    _with_shingles,
+)
+from parquet_query_spark.operators.events_ops import _OHLC_ORACLE
 from parquet_query_spark.sources.registry import load_table, read_parquet
 from parquet_query_spark.sources.registry import _merged_schema, _parquet_footer, _parquet_parts
 
@@ -411,20 +417,7 @@ def streaming_corpus_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "streaming_hourly_ohlc",
-    oracle="""
-SELECT event_type,
-       date_trunc('hour', ts) AS bar_hour,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       round(arg_min(value, lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-                            || '|' || lpad(CAST(event_id AS VARCHAR), 12, '0')), 4) AS open,
-       round(MAX(value), 4) AS high,
-       round(MIN(value), 4) AS low,
-       round(arg_max(value, lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-                            || '|' || lpad(CAST(event_id AS VARCHAR), 12, '0')), 4) AS close,
-       CAST(SUM(CAST(ROUND(value * 10000) AS BIGINT)) AS BIGINT) AS volume_e4
-FROM events
-GROUP BY 1, 2
-""",
+    oracle=_OHLC_ORACLE,
     tags=("streaming", "window", "aggregate"),
 )
 def streaming_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -468,16 +461,9 @@ def streaming_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_ingest_decontaminate",
-    oracle="""
+    oracle=f"""
 WITH sh AS (
-  SELECT doc_id, source,
-         list_distinct(
-           list_transform(
-             range(1, greatest(len(string_split_regex(trim(text), '\\s+')) - 2, 1) + 1),
-             i -> concat_ws(' ',
-                    list_extract(string_split_regex(trim(text), '\\s+'), i),
-                    list_extract(string_split_regex(trim(text), '\\s+'), i + 1),
-                    list_extract(string_split_regex(trim(text), '\\s+'), i + 2)))) AS shingles
+  SELECT doc_id, source, {_DUCKDB_SHINGLES} AS shingles
   FROM documents
 ),
 bench AS (
@@ -511,8 +497,6 @@ def streaming_ingest_decontaminate(spark: SparkSession, sf_dir: str) -> DataFram
     stateless scan-side shingling + arrays_overlap, so there is no state
     store at all — admission control at full scan speed.  The per-source
     admit/reject rollup here is the monitoring view a gate would emit."""
-    from parquet_query_spark.operators.dedup import _with_shingles
-
     batch = read_parquet(spark, [f"{sf_dir}/documents.parquet"])
     bench = (
         _with_shingles(batch.where(F.col("doc_id") < 20))
@@ -520,24 +504,12 @@ def streaming_ingest_decontaminate(spark: SparkSession, sf_dir: str) -> DataFram
         .agg(F.collect_set("shingle").alias("bench_shingles"))
     )
     stream, source_bytes = _file_stream(spark, sf_dir, "documents.parquet")
-    shingle_expr = F.expr(
-        """
-        array_distinct(
-          transform(
-            sequence(1, greatest(size(toks) - 2, 1)),
-            i -> concat_ws(' ', try_element_at(toks, i),
-                           try_element_at(toks, i + 1),
-                           try_element_at(toks, i + 2))
-          )
-        )
-        """
-    )
     screened = (
         stream.where(F.col("doc_id") >= 20)
         .select(
             "source", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
         )
-        .select("source", shingle_expr.alias("shingles"))
+        .select("source", F.expr(_SPARK_SHINGLES_SQL).alias("shingles"))
         .crossJoin(F.broadcast(bench))
         .select(
             "source",

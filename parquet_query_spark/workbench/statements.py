@@ -183,10 +183,14 @@ def rewrite_path_tables(
     for kind, start, end in _lex(sql):
         token = sql[start:end]
         ref = None
-        if kind == STRING and _TABLE_REF_KEYWORD.search(code_before):
-            closed = _CLOSED_LITERAL.fullmatch(token)
-            body = token[1:-1] if closed else token[1:]
-            ref = _spark_path_ref(body.replace("''", "'"), root, registered, path_view)
+        # an unclosed literal runs to the end of the text: it stays as it
+        # is, for the parser to reject
+        if (
+            kind == STRING
+            and _TABLE_REF_KEYWORD.search(code_before)
+            and _CLOSED_LITERAL.fullmatch(token)
+        ):
+            ref = _spark_path_ref(token[1:-1].replace("''", "'"), root, registered, path_view)
         out.append(token if ref is None else ref)
         code_before = token if kind == CODE else ""
     return "".join(out)

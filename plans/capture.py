@@ -1,10 +1,11 @@
 #!/usr/bin/env python
-"""Capture ``.explain('formatted')`` for every bench-tagged catalog operator.
+"""Capture ``.explain('formatted')`` for catalog operators.
 
 Usage: python plans/capture.py <out_dir> <suffix> [names...]
 
-Writes ``<out_dir>/<operator>_<suffix>.txt`` for each bench operator (or
-the named subset), built over ``$SPARK_GRAFT_SF_DIR`` (default sf0.1).
+Writes ``<out_dir>/<operator>_<suffix>.txt`` for each named operator, or
+for every bench-tagged one when none is named, built over
+``$SPARK_GRAFT_SF_DIR`` (default sf0.1).
 Run it once on each side of a change, with suffixes ``before`` and
 ``after``, to commit plan evidence next to the change.
 """
@@ -31,9 +32,8 @@ def main() -> None:
     catalog = load_all()
     os.makedirs(out_dir, exist_ok=True)
     for name, spec in catalog.items():
-        if "bench" not in spec.tags:
-            continue
-        if only and name not in only:
+        wanted = name in only if only else "bench" in spec.tags
+        if not wanted:
             continue
         df = spec.fn(spark, SF_DIR)
         buf = io.StringIO()

@@ -203,17 +203,26 @@ def test_band_join_tiling_preserves_pairs(spark, hot_band_dir, monkeypatch):
 
 
 def test_band_join_tiling_containment_and_pipeline_agree(spark, hot_band_dir, monkeypatch):
-    """The containment and cluster-pipeline operators share the tiled
-    kernel; forced multi-chunk tiling must not change their output."""
+    """The containment, cluster-pipeline and rarest-token fuzzy-join
+    operators share the tiled kernel; forced multi-chunk tiling must not
+    change their output.  The 30 hot copies also form one rarest-token
+    block, so the fuzzy join at chunk 7 runs its hot branch."""
     from parquet_query_spark.operators import dedup as dd
 
-    for name in ["dedup_minhash_containment", "dedup_cluster_pipeline"]:
+    for name, chunk_knob in [
+        ("dedup_minhash_containment", "_BAND_CHUNK_C"),
+        ("dedup_cluster_pipeline", "_BAND_CHUNK_C"),
+        ("fuzzy_join_rarest_token", "_FUZZY_CHUNK_C"),
+    ]:
         fn = CATALOG[name].fn
         base = sorted(map(tuple, fn(spark, hot_band_dir).collect()))
-        monkeypatch.setattr(dd, "_BAND_CHUNK_C", 7)
+        monkeypatch.setattr(dd, chunk_knob, 7)
         tiled = sorted(map(tuple, fn(spark, hot_band_dir).collect()))
         monkeypatch.undo()
         assert tiled == base, name
+    # the fuzzy join (the last input) pairs all 30 copies of its hot block
+    hot_pairs = [r for r in tiled if r[0] >= 100 and r[1] >= 100]
+    assert len(hot_pairs) == 30 * 29 // 2
 
 
 def test_containment_dominates_jaccard(catalog, spark, sf_dir):

@@ -1,3 +1,5 @@
+import pytest
+
 from parquet_query_spark.workbench.statements import (
     rewrite_path_tables,
     split_statements,
@@ -78,3 +80,18 @@ def test_rewrite_join_position_and_non_files():
     out = rewrite_path_tables("SELECT * FROM t JOIN 'x.ndjson' ON 1=1", root="/d")
     assert "json.`/d/x.ndjson`" in out
     assert rewrite_path_tables("SELECT * FROM 'notafile.txt'", root="/d").count("notafile.txt")
+
+
+def test_rewrite_leaves_an_unterminated_literal():
+    # DuckDB rejects this text ("unterminated quoted string"); closing the
+    # literal here would run a statement the reference refuses
+    sql = "SELECT * FROM 'x.parquet"
+    assert rewrite_path_tables(sql, root="/d") == sql
+
+
+def test_engine_rejects_an_unterminated_path_literal(engine):
+    from pyspark.errors import ParseException
+
+    # region.parquet exists in the folder, so only the missing quote is wrong
+    with pytest.raises(ParseException):
+        engine.run("SELECT * FROM 'region.parquet")

@@ -1,12 +1,13 @@
 """Regression guards for the round-5 scale fixes.
 
-1. The tiled block self-join inside ``fuzzy_join_rarest_token`` must
-   produce EXACTLY the naive equi-join's pair set — tiling is a physical
-   rewrite, never a semantic one.  The naive twin is built inline here
-   (plain block_key join + doc_a < doc_b) and compared set-to-set on the
-   real sf0.001 corpus and on a synthetic single-hot-block corpus shaped
+1. The tiled hot-key self-join (``dedup._tiled_pair_ctes``, under the LSH
+   band join and ``fuzzy_join_rarest_token``) must produce EXACTLY the
+   naive equi-join's pair set — tiling is a physical rewrite, never a
+   semantic one.  It runs over the operator's rarest-token blocks of the
+   real sf0.001 corpus and over a synthetic single-hot-block corpus shaped
    like the one that serialized at 8× (the AQE-invisible output-explosion
-   topology, BASELINE.md round-5 section).
+   topology, BASELINE.md round-5 section); the naive twin is built inline
+   here (plain block_key join + doc_a < doc_b) and compared set-to-set.
 
 2. ``bloom_prune_join``'s plan must keep the probe scan-side: the exact
    membership join broadcasts (no SortMergeJoin anywhere), so the only
@@ -41,49 +42,14 @@ def _blocked(spark, docs):
     )
 
 
-def _tiled_pairs(spark, blocked, chunk_c):
-    """The operator's tile decomposition (r11 two-path shape, mirroring
-    the band kernel: ≤C blocks take the plain self-join, oversized blocks
-    fan out over explode(sequence) chunk tiles — no broadcast tiles
-    table), parameterized chunk size."""
-    w_chunk = W.partitionBy("block_key").orderBy("doc_id")
-    w_block = W.partitionBy("block_key")
-    sized = (
-        blocked.withColumn("rn", F.row_number().over(w_chunk))
-        .withColumn("chunk", F.expr(f"(rn - 1) DIV {chunk_c}"))
-        .withColumn("kmax", F.max("chunk").over(w_block))
-    )
-    small = sized.where(F.col("kmax") == 0)
-    cand_small = (
-        small.select("block_key", F.col("doc_id").alias("doc_a"))
-        .join(small.select("block_key", F.col("doc_id").alias("doc_b")), "block_key")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    hot = sized.where(F.col("kmax") > 0)
-    a_rep = hot.select(
-        "block_key",
-        F.col("chunk").alias("ca"),
-        F.explode(F.sequence("chunk", "kmax")).alias("cb"),
-        F.col("doc_id").alias("doc_a"),
-        F.col("rn").alias("rn_a"),
-    )
-    b_rep = hot.select(
-        "block_key",
-        F.explode(F.sequence(F.lit(0), F.col("chunk"))).alias("ca"),
-        F.col("chunk").alias("cb"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("rn").alias("rn_b"),
-    )
-    n_part = spark.sparkContext.defaultParallelism * 2
-    a_rep = a_rep.repartition(n_part, "block_key", "ca", "cb")
-    b_rep = b_rep.repartition(n_part, "block_key", "ca", "cb")
-    cand_hot = (
-        a_rep.join(b_rep, ["block_key", "ca", "cb"])
-        .where(F.col("rn_a") < F.col("rn_b"))
-        .select("doc_a", "doc_b")
-    )
-    return cand_small.unionByName(cand_hot)
+def _tile_join(spark, blocked, chunk_c):
+    """The operators' hot-key self-join (``dedup._tiled_pair_ctes``, shared
+    by the LSH band join and ``fuzzy_join_rarest_token``) over ``blocked``
+    at chunk size ``chunk_c``."""
+    from parquet_query_spark.operators.dedup import _tiled_pair_ctes
+
+    ctes = _tiled_pair_ctes(spark, "{blocked}", "block_key", chunk_c)
+    return spark.sql(f"WITH {ctes}\nSELECT doc_a, doc_b FROM tiled", blocked=blocked)
 
 
 def _naive_pairs(blocked):
@@ -100,7 +66,7 @@ def test_tiled_equals_naive_on_corpus(spark, views, chunk_c):
     pairs (ca<cb), intra-tile pairs (ca=cb), and single-chunk blocks are
     all exercised; 2048 is the production setting."""
     blocked = _blocked(spark, views["documents"])
-    tiled = {(r.doc_a, r.doc_b) for r in _tiled_pairs(spark, blocked, chunk_c).collect()}
+    tiled = {(r.doc_a, r.doc_b) for r in _tile_join(spark, blocked, chunk_c).collect()}
     naive = {(r.doc_a, r.doc_b) for r in _naive_pairs(blocked).collect()}
     assert tiled == naive
     assert len(tiled) > 0
@@ -115,7 +81,7 @@ def test_tiled_equals_naive_on_hot_block(spark):
         + [(2000, "solo")]
     )
     blocked = spark.createDataFrame(rows, "doc_id long, block_key string")
-    tiled = _tiled_pairs(spark, blocked, 100).collect()
+    tiled = _tile_join(spark, blocked, 100).collect()
     pairs = {(r.doc_a, r.doc_b) for r in tiled}
     assert len(tiled) == len(pairs), "duplicate pairs emitted"
     assert len(pairs) == 403 * 402 // 2 + 5 * 4 // 2
