@@ -34,12 +34,16 @@ from __future__ import annotations
 import argparse
 import datetime as _dt
 import math
+import os
 import random
 import re
 import sys
 from decimal import Decimal
 
 SF_DIR = "/root/testdata/sf0.001"
+# the checkout this file sits in: its package and its fixtures are the ones
+# under test, wherever the checkout lives
+ROOT = os.path.dirname(os.path.abspath(__file__))
 
 # ── typed expression tree ────────────────────────────────────────────────
 
@@ -1839,15 +1843,16 @@ def main() -> int:
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from parquet_query_spark.engine import Engine
 
     engine = Engine.open(SF_DIR)
     con = duckdb.connect()
-    nulls_path = "/root/repo/tests/data/fuzz_nulls.parquet"
-    nested_path = "/root/repo/tests/data/fuzz_nested.parquet"
-    nested2_path = "/root/repo/tests/data/fuzz_nested2.parquet"
-    nested3_path = "/root/repo/tests/data/fuzz_nested3.parquet"
+    data = os.path.join(ROOT, "tests", "data")
+    nulls_path = os.path.join(data, "fuzz_nulls.parquet")
+    nested_path = os.path.join(data, "fuzz_nested.parquet")
+    nested2_path = os.path.join(data, "fuzz_nested2.parquet")
+    nested3_path = os.path.join(data, "fuzz_nested3.parquet")
     for t in TABLES:
         if t == "nulls_parquet":
             path = nulls_path

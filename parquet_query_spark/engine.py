@@ -20,7 +20,6 @@ import uuid
 from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JJavaError
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from parquet_query_spark.session import get_spark
@@ -31,10 +30,7 @@ from parquet_query_spark.sources.registry import (
     register_folder,
 )
 from parquet_query_spark.workbench.csv_sink import export_csv, write_csv_distributed
-from parquet_query_spark.workbench.dialect import (
-    rewrite_duckdb_dialect,
-    rewrite_duckdb_dialect_fallbacks,
-)
+from parquet_query_spark.workbench.dialect import analyze_dialect
 from parquet_query_spark.workbench.dialect_core import _brackets, _code_mask
 
 _ORDER_ALL_TAIL = re.compile(
@@ -211,8 +207,8 @@ class Engine:
         ``csv.`path``` scan lacks.  The view is registered once per distinct
         file set — keyed by each file's (path, mtime_ns, size), so a
         rewritten or added file gets a new view — and cached on this
-        engine, so a repeated statement, and each fallback variant of it,
-        pays no schema inference.  The name is a digest of that key: two
+        engine, so a repeated statement, and each retry of it, pays no
+        schema inference.  The name is a digest of that key: two
         engines on one session register the same files under the same name
         and never each other's."""
         if fmt == "parquet":
@@ -533,24 +529,12 @@ class Engine:
             return self.sql(expand_columns(self, statement))
         if has_star_replace(statement):
             return self.sql(expand_star_replace(self, statement))
-        primary = rewrite_duckdb_dialect(statement)
-        try:
-            return self.spark.sql(
-                rewrite_path_tables(primary, self.root, registered, self._path_view)
-            )
-        except AnalysisException:
-            # QUALIFY has two valid shapes (alias-visible vs base-column-
-            # visible predicates); retry the alternate before surfacing
-            # the original analysis error.  Depends on eager analysis at
-            # spark.sql() time — gated by session.assert_eager_analysis.
-            for alt in rewrite_duckdb_dialect_fallbacks(statement):
-                try:
-                    return self.spark.sql(
-                        rewrite_path_tables(alt, self.root, registered, self._path_view)
-                    )
-                except AnalysisException:
-                    pass
-            raise
+        return analyze_dialect(
+            statement,
+            lambda text: self.spark.sql(
+                rewrite_path_tables(text, self.root, registered, self._path_view)
+            ),
+        )
 
     # A6 + A7 + A10 + A14 — the full run path
     def run(

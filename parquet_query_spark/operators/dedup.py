@@ -1419,6 +1419,28 @@ def neardup_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rarest_token_ctes(docs: str) -> str:
+    """``fuzzy_join_rarest_token``'s blocking CTEs over the ``docs``
+    relation: ``pref`` (each document's distinct words of its 8-word
+    prefix, sorted), ``w`` (one row per prefix word), ``df`` (document
+    frequency per word) and ``blocked`` (each document's rarest prefix
+    word, ties by spelling, keyed by its xxhash64)."""
+    return f"""pref AS (
+  SELECT doc_id,
+         array_sort(array_distinct(slice(split(trim(text), ' '), 1, 8))) AS words
+  FROM {docs}
+),
+w AS (SELECT doc_id, explode(words) AS word FROM pref),
+df AS (SELECT word, count(*) AS dfreq FROM w GROUP BY word),
+blocked AS (
+  SELECT doc_id, xxhash64(word) AS block_key FROM (
+    SELECT w.doc_id, w.word,
+           row_number() OVER (PARTITION BY w.doc_id ORDER BY df.dfreq, w.word) AS rn
+    FROM w JOIN df ON w.word = df.word
+  ) WHERE rn = 1
+)"""
+
+
 @query(
     "fuzzy_join_rarest_token",
     oracle="""
@@ -1501,20 +1523,7 @@ def fuzzy_join_rarest_token(spark: SparkSession, sf_dir: str) -> DataFrame:
     # moved ~150 GB through the exchange at 512× and filled the disk with
     # sort spill.  Only the jac ≥ 0.5 survivors shuffle afterward.
     return spark.sql(
-        f"""WITH pref AS (
-  SELECT doc_id,
-         array_sort(array_distinct(slice(split(trim(text), ' '), 1, 8))) AS words
-  FROM {{documents}}
-),
-w AS (SELECT doc_id, explode(words) AS word FROM pref),
-df AS (SELECT word, count(*) AS dfreq FROM w GROUP BY word),
-blocked AS (
-  SELECT doc_id, xxhash64(word) AS block_key FROM (
-    SELECT w.doc_id, w.word,
-           row_number() OVER (PARTITION BY w.doc_id ORDER BY df.dfreq, w.word) AS rn
-    FROM w JOIN df ON w.word = df.word
-  ) WHERE rn = 1
-),
+        f"""WITH {_rarest_token_ctes("{documents}")},
 prefh AS (
   SELECT doc_id, array_distinct(transform(words, x -> xxhash64(x))) AS words FROM pref
 ),

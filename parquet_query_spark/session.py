@@ -80,12 +80,12 @@ def temp_view(df: DataFrame, prefix: str) -> Iterator[str]:
 
 
 def assert_eager_analysis(spark: SparkSession) -> None:
-    """Gate: the engine's retry pipelines (QUALIFY fallbacks, PIVOT USING
-    variant probe, engine.sql's AnalysisException retries) all assume
-    classic PySpark, where ``spark.sql()`` analyzes the plan eagerly and
-    raises AnalysisException at call time.  Under Spark Connect analysis
-    is deferred to action time, so every fallback would silently pass its
-    probe and the retry machinery would be bypassed — fail loudly at
+    """Gate: the dialect shim's retry loop (``dialect.analyze_dialect``,
+    under ``Engine.sql`` and PIVOT ``USING``) reads the type hints it
+    needs from the AnalysisException that ``spark.sql()`` raises at call
+    time, which assumes classic PySpark's eager analysis.  Under Spark
+    Connect analysis is deferred to action time, so the primary text would
+    silently pass and no hint would ever be read — fail loudly at
     bootstrap instead (r12, VERDICT #7)."""
     from pyspark.errors import AnalysisException
 
@@ -93,7 +93,7 @@ def assert_eager_analysis(spark: SparkSession) -> None:
     if "connect" in mod:
         raise RuntimeError(
             "parquet_query_spark requires a classic (non-Connect) "
-            "SparkSession: its analysis-retry pipelines depend on eager "
+            "SparkSession: its analysis-retry loop depends on eager "
             "analysis at spark.sql() time, which Spark Connect defers to "
             "action time."
         )
@@ -112,7 +112,7 @@ def assert_eager_analysis(spark: SparkSession) -> None:
     try:
         spark.sql("SELECT __pq_eager_probe_missing_col__")
     except AnalysisException:
-        return  # analyzed eagerly — the retry pipelines are sound
+        return  # analyzed eagerly — the retry loop is sound
     finally:
         try:
             spark.sparkContext.setLogLevel("WARN")
@@ -120,7 +120,7 @@ def assert_eager_analysis(spark: SparkSession) -> None:
             pass
     raise RuntimeError(
         "SparkSession did not analyze eagerly at spark.sql() time; "
-        "parquet_query_spark's fallback probes would silently pass. "
+        "parquet_query_spark's analysis-retry loop would never run. "
         "Use a classic local/cluster session."
     )
 

@@ -36,8 +36,10 @@ hits first:
 - Function chaining ``expr.fn(args)`` → ``fn(expr, args)`` (leftmost-
   first, subscript-aware; runs before the bracket pass so ``[i]`` stays
   glued to its base).  DuckDB's polymorphic ``len`` keeps its string
-  reading in the primary text and falls back to ``size`` (array/map)
-  when analysis fails.
+  reading in the primary text; when Spark's analyzer reports a ``len``
+  over an ARRAY or MAP, ``analyze_dialect`` retries with every ``len``
+  read as ``size``.  A subscript base Spark types STRING is retried with
+  DuckDB's string reading the same way (``analyze_dialect``).
 - ``INSERT INTO t BY NAME <query>`` (name-matched column list, NULL
   fill — ``workbench/set_ops.py``); ``USING SAMPLE`` method forms
   (``reservoir(100 ROWS)``, ``10% (system, seed)``) with DuckDB's
@@ -253,12 +255,15 @@ this list is the triage ground truth for fuzz_dialect.py divergences):
 from __future__ import annotations
 
 import re
+from typing import Callable, NamedTuple, TypeVar
+
+from pyspark.errors import AnalysisException
 
 # The shim's passes live in three sibling modules — dialect_core (lexing,
 # statement rewrites, bracket syntax), dialect_macros (function renames +
 # _FN_MACROS expression macros), dialect_typing (operator/literal pack +
 # numeric typing passes).  This module keeps the public pipeline
-# (rewrite_duckdb_dialect and its fallbacks) and imports only the names it
+# (rewrite_duckdb_dialect and its retry loop) and imports only the names it
 # uses; callers import every other name from its defining module.
 
 from parquet_query_spark.workbench.dialect_core import (
@@ -280,10 +285,10 @@ from parquet_query_spark.workbench.dialect_core import (
     _rewrite_unpivot,
     _rewrite_from_first,
     _rewrite_distinct_on,
-    _BRACKET_NONLITERAL_KEYWORDS,
-    _subscript_base_heads,
+    _SEEN_HEADS,
     _STRING_SUBSCRIPTS,
-    _ARRAYISH_BASE,
+    _base_head,
+    _split_call_args,
     _rewrite_array_type_suffix,
     _rewrite_brackets,
     _rewrite_using_sample,
@@ -353,88 +358,100 @@ _PASSES = (
 )
 
 
+T = TypeVar("T")
+
+
+class _Hints(NamedTuple):
+    """What the retry loop has learned about one statement: the subscript
+    heads Spark typed as STRING (their subscripts take the substr reading),
+    QUALIFY's inject shape, and the ``size`` reading of ``len``."""
+
+    heads: frozenset = frozenset()
+    inject: bool = False
+    size: bool = False
+
+
+def _rewrite(sql: str, hints: _Hints = _Hints(), seen: set | None = None) -> str:
+    """The pass pipeline under ``hints``; the bracket pass adds the heads
+    it classifies to ``seen``.  Contextvars, not module globals: a
+    concurrent Engine.sql on another thread must not see them."""
+    toks = _STRING_SUBSCRIPTS.set(hints.heads), _SEEN_HEADS.set(seen)
+    try:
+        sql = _unquote_function_names(strip_comments(sql))
+        sql = _rewrite_dynamic_interval(sql)
+        for p in _PASSES:
+            if hints.inject and p is _rewrite_qualify:
+                p = _rewrite_qualify_inject
+            sql = p(sql)
+    finally:
+        _STRING_SUBSCRIPTS.reset(toks[0])
+        _SEEN_HEADS.reset(toks[1])
+    return _swap_len_to_size(sql) if hints.size else sql
+
+
 def rewrite_duckdb_dialect(sql: str) -> str:
     """Apply every DuckDB-dialect rewrite (each pass re-lexes)."""
-    sql = _unquote_function_names(strip_comments(sql))
-    sql = _rewrite_dynamic_interval(sql)
-    for p in _PASSES:
-        sql = p(sql)
-    return sql
+    return _rewrite(sql)
 
 
-def rewrite_duckdb_dialect_fallbacks(sql: str) -> list[str]:
-    """Alternate rewrites to retry when the primary form fails analysis
-    (e.g. a QUALIFY window referencing a non-projected base column)."""
-    sql = _unquote_function_names(strip_comments(sql))
-    sql = _rewrite_dynamic_interval(sql)
-    # the primary pipeline with QUALIFY's alternate (base-column-visible)
-    # injection shape swapped in — every other pass identical by
-    # construction, so the two can never drift apart again
-    alt = sql
-    for p in _PASSES:
-        alt = _rewrite_qualify_inject(alt) if p is _rewrite_qualify else p(alt)
-    primary = rewrite_duckdb_dialect(sql)
-    out = [alt] if alt != primary else []
-    # DuckDB ``len`` is polymorphic (strings AND lists); Spark's ``len``
-    # alias is string-only.  The primary text keeps ``len`` (string case
-    # analyzes fine); when analysis fails, retry with ``size`` — the
-    # array/map reading.
-    for base in (primary, *out):
-        swapped = _swap_len_to_size(base)
-        if swapped != base and swapped not in out:
-            out.append(swapped)
-    # string-typed subscripts: retry with every x[i] / x[i:j] rendered via
-    # substr (DuckDB subscripts are polymorphic; element_at/slice are not)
-    if "[" in sql:
-        # contextvar, not a module global: a concurrent Engine.sql on
-        # another thread during this window must not see string-subscript
-        # mode (r9 ADVICE re-entrancy fix)
-        _tok = _STRING_SUBSCRIPTS.set(True)
+# The calls the bracket pass emits for a subscript (``size`` heads the
+# open slice's length, ``list_slice`` is left unexpanded when a bound is
+# not a literal), and ``len``, whose ``size`` reading a hint swaps in.
+_HINTED_CALL = re.compile(r"(try_element_at|slice|size|list_slice|len)\s*\(", re.IGNORECASE)
+
+
+def _retry(sql: str, err: AnalysisException, hints: _Hints, seen: set) -> tuple[_Hints, str]:
+    """``hints`` plus the one hint ``err`` names, and the text they render.
+
+    The failing expression is the query context's fragment, the text this
+    module emitted.  A ``len`` over an ARRAY or MAP names the ``size``
+    reading.  A subscript call whose first argument Spark typed STRING (or
+    an unresolved ``list_slice``, which only a string reading satisfies)
+    names a head: that argument's own head, or, when a later pass rewrote
+    it, the first head the bracket pass saw (``seen``) whose string reading
+    removes the fragment.  Any other error names QUALIFY's inject shape,
+    which leaves a statement without QUALIFY unchanged."""
+    ctx = err.getQueryContext()
+    frag = ctx[0].fragment() if ctx else ""
+    m = _HINTED_CALL.match(frag)
+    typ = (err.getMessageParameters() or {}).get("inputType", "")
+    if m and m.group(1).lower() == "len":
+        if typ.startswith(('"ARRAY', '"MAP')):
+            hints = hints._replace(size=True)
+            return hints, _rewrite(sql, hints)
+    elif m and (typ == '"STRING"' or err.getCondition() == "UNRESOLVED_ROUTINE"):
+        parsed = _split_call_args(frag, m.end() - 1)
+        own = _base_head(parsed[0][0]) if parsed else None
+        for head in (own, *sorted(seen - {own})):
+            if head and head not in hints.heads:
+                with_head = hints._replace(heads=hints.heads | {head})
+                text = _rewrite(sql, with_head)
+                if frag not in text:
+                    return with_head, text
+    hints = hints._replace(inject=True)
+    return hints, _rewrite(sql, hints)
+
+
+def analyze_dialect(sql: str, analyze: Callable[[str], T]) -> T:
+    """``analyze(rewrite_duckdb_dialect(sql))``, retried while Spark's
+    analyzer names a type the text alone could not tell.  DuckDB types
+    ``x[i]``, ``x[a:b]`` and ``len(x)`` for strings and lists alike; the
+    primary text reads them as lists.  Each AnalysisException adds the
+    hint it names (``_retry``) and the statement is analyzed again; when
+    the error names no new hint, the primary error is raised.
+    ``analyze`` must analyze eagerly (``session.assert_eager_analysis``)."""
+    hints, seen = _Hints(), set()
+    text = _rewrite(sql, hints, seen)
+    tried: set[str] = set()
+    first = None
+    while text not in tried:
+        tried.add(text)
         try:
-            strsub = rewrite_duckdb_dialect(sql)
-        finally:
-            _STRING_SUBSCRIPTS.reset(_tok)
-        if strsub != primary and strsub not in out:
-            out.append(strsub)
-            # a query can need BOTH variants at once — string subscripts
-            # and the array reading of ``len`` (fuzz r8 seed 1427)
-            swapped = _swap_len_to_size(strsub)
-            if swapped != strsub and swapped not in out:
-                out.append(swapped)
-        # one query can subscript a STRING column and a LIST column at
-        # once (fuzz r9 seed 171: us[2:5] vs ls[1]) — neither all-array
-        # nor all-string analyzes.  Enumerate per-base string-mode
-        # subsets over the distinct bare subscript bases (≤4 bases; the
-        # all-bases case is the True variant above).
-        bases = sorted(
-            h
-            for h in _subscript_base_heads(sql)
-            # 'case' is a keyword but a (CASE ... END)[i] base is a real
-            # expression whose reading must be enumerable (fuzz r9 seed
-            # 10319: string-typed CASE subscript next to len(ls))
-            if (h == "case" or h not in _BRACKET_NONLITERAL_KEYWORDS)
-            and not _ARRAYISH_BASE.match(h)
-            and not _ARRAYISH_BASE.match(h + "(")
-        )
-        if 2 <= len(bases) <= 4:
-            import itertools
-
-            for r in range(1, len(bases)):
-                for subset in itertools.combinations(bases, r):
-                    _tok = _STRING_SUBSCRIPTS.set(frozenset(subset))
-                    try:
-                        v = rewrite_duckdb_dialect(sql)
-                    finally:
-                        _STRING_SUBSCRIPTS.reset(_tok)
-                    if v != primary and v not in out:
-                        out.append(v)
-                        # compose with the array reading of ``len`` — a
-                        # query can need len(list), a string subscript
-                        # AND a list subscript at once (fuzz r9 seed 1681)
-                        swapped = _swap_len_to_size(v)
-                        if swapped != v and swapped not in out:
-                            out.append(swapped)
-    return out
+            return analyze(text)
+        except AnalysisException as e:
+            first = first or e
+            hints, text = _retry(sql, e, hints, seen)
+    raise first
 
 
 def _swap_len_to_size(sql: str) -> str:

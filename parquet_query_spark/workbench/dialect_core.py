@@ -557,8 +557,8 @@ def _rewrite_qualify(sql: str) -> str:
     forbids lateral alias references inside window expressions).  DuckDB
     additionally lets the predicate reference non-projected base columns;
     that variant needs the predicate INSIDE the original select list —
-    ``_rewrite_qualify_inject`` — which Engine.sql retries on analysis
-    failure."""
+    ``_rewrite_qualify_inject`` — which ``dialect.analyze_dialect``
+    retries on analysis failure."""
     parts = _qualify_parts(sql)
     if parts is None:
         return sql
@@ -1140,19 +1140,25 @@ def _rewrite_comprehension(inner: str) -> str | None:
     return f"transform({src}, {var} -> {expr})"
 
 
-# Flipped by the fallback pipeline: DuckDB subscripts are polymorphic
-# (lists AND strings) but Spark's element_at/slice are array-only, so the
-# primary text emits the array reading and a retry-on-AnalysisException
-# variant re-renders every subscript with DuckDB's string semantics
-# (probed: 'abc'[0] = '', 'abc'[-5] = '', 'abcdef'[-3:-1] = 'def',
+# The heads whose subscripts take DuckDB's string reading.  DuckDB
+# subscripts are polymorphic (lists AND strings) but Spark's
+# element_at/slice are array-only, so the primary text reads every
+# subscript as a list, and ``dialect.analyze_dialect`` adds a base's head
+# here when Spark types that base STRING.  The string reading follows
+# DuckDB (probed: 'abc'[0] = '', 'abc'[-5] = '', 'abcdef'[-3:-1] = 'def',
 # 'abcdef'[4:2] = '', bounds clamp — Spark substr alone matches none of
-# the 0/clamp cases).  Value: False (array reading), True (every
-# non-arrayish base takes the string reading), or a frozenset of base
-# spellings (ONLY those bases take the string reading — r9: one query
-# can subscript a string column AND a list column, so the fallback
-# enumerates per-base subsets; fuzz r9 seed 171).
-_STRING_SUBSCRIPTS: contextvars.ContextVar[bool | frozenset] = contextvars.ContextVar(
-    "_STRING_SUBSCRIPTS", default=False
+# the 0/clamp cases).  Per head, not all-or-nothing: one query can
+# subscript a string column AND a list column (fuzz r9 seed 171).
+_STRING_SUBSCRIPTS: contextvars.ContextVar[frozenset] = contextvars.ContextVar(
+    "_STRING_SUBSCRIPTS", default=frozenset()
+)
+# When a set is installed here, the bracket pass adds every head it
+# classifies to it.  A later pass can rewrite a base's head (a macro turns
+# ``array_to_string(..)`` into ``CASE …``), so the failing text Spark
+# quotes can name a head the bracket pass never saw; the retry loop then
+# picks among these.
+_SEEN_HEADS: contextvars.ContextVar[set | None] = contextvars.ContextVar(
+    "_SEEN_HEADS", default=None
 )
 
 
@@ -1160,87 +1166,51 @@ _STRING_LITERAL_BASE = re.compile(r"^\(*\s*'(?:[^']|'')*'\s*\)*$")
 
 
 def _string_subscript_base(base: str) -> bool:
-    """Does this subscript base take the string (substr) reading under
-    the current _STRING_SUBSCRIPTS mode?  A (possibly parenthesized)
-    string LITERAL base is statically known — it takes the string
-    reading in EVERY mode (fuzz r9 seed 7115: ``('Hello World')[1:2]``
-    next to ``ls[1]`` — no single mode could satisfy both otherwise).
-    Set-mode membership is by the base's HEAD identifier (``us`` for
-    ``us``, ``nullif`` for ``(nullif('abc', st.b))`` — fuzz r9 seed
-    4154 needed a string reading for a call base alongside an array
-    reading for a column)."""
+    """Does this subscript base take the string (substr) reading?  A
+    (possibly parenthesized) string LITERAL base is statically known —
+    it takes the string reading whatever the heads (fuzz r9 seed 7115:
+    ``('Hello World')[1:2]`` next to ``ls[1]``).  Any other base takes it
+    when its HEAD identifier (``_base_head``) is in _STRING_SUBSCRIPTS —
+    fuzz r9 seed 4154 needed a string reading for a call base alongside
+    an array reading for a column."""
     b = base.strip()
     if _STRING_LITERAL_BASE.match(b):
         return True
     # A paren group HEADED by a string literal — ``('BUILDING' ||
     # 'xy')[2:2]`` (fuzz v6 seed 96787) — is statically string too: a
     # leading VARCHAR operand keeps ``||`` chains VARCHAR in DuckDB
-    # (even against a list, which it stringifies), and the fallback's
-    # per-base head enumeration has no identifier to key such a base on,
-    # so it must classify statically or never get the string reading.
+    # (even against a list, which it stringifies), and a head set has no
+    # identifier to key such a base on, so it must classify statically
+    # or never get the string reading.
     # The literal must be followed by a string-PRESERVING continuation
     # (``||``, a subscript, a closer, or end) though: ``('a' = 'b')[2]``
     # is BOOLEAN (DuckDB: binder error, no array_extract(BOOLEAN, ...)),
-    # and that verdict is static in EVERY mode — returning False before
-    # the mode check keeps the all-string fallback variant from silently
+    # and that verdict is static whatever the heads — returning False
+    # before the head check keeps a string reading from silently
     # succeeding on Spark via an implicit bool→string cast where DuckDB
     # errors (r12, ADVICE).  (Comments are stripped before any rewrite
     # pass, so ``\s*`` is mask-safe here.)
     m_lit = re.match(r"^[\s(]*'(?:[^']|'')*'\s*", b)
     if m_lit:
         return bool(re.match(r"^(?:\|\||[\[)]|$)", b[m_lit.end():]))
-    mode = _STRING_SUBSCRIPTS.get()
-    if not mode:
-        return False
     if _ARRAYISH_BASE.match(b):
         return False
-    if mode is True:
-        return True
-    m = re.match(r"\(*\s*([A-Za-z_][\w$.]*)", b)
-    return bool(m) and m.group(1).lower() in mode
+    head = _base_head(b)
+    seen = _SEEN_HEADS.get()
+    if seen is not None and head:
+        seen.add(head)
+    return head in _STRING_SUBSCRIPTS.get()
 
 
-def _subscript_base_heads(sql: str) -> set[str]:
-    """Head identifiers of every subscripted base in ``sql`` — bare
-    columns (``us[``), call bases at any nesting depth
-    (``rpad(f(g(x)), 4)[`` → 'rpad'; fuzz r9 seed 4523), and
-    parenthesized chains (``(nullif(..))[`` → 'nullif').  Used by the
-    fallback pipeline to enumerate per-base string-subscript subsets;
-    over-approximation only adds retry variants."""
-    mask = _code_mask(sql)
-    heads: set[str] = set()
-    for i, ch in enumerate(sql):
-        if ch != "[" or not mask[i]:
-            continue
-        j = i - 1
-        while j >= 0 and sql[j].isspace():
-            j -= 1
-        if j < 0:
-            continue
-        if sql[j] == ")":
-            k = _match(sql, j)
-            if k is None:
-                continue
-            m = re.search(r"([A-Za-z_][\w$.]*)\s*\Z", sql[:k])
-            if m and m.group(1).lower() not in _BRACKET_NONLITERAL_KEYWORDS:
-                heads.add(m.group(1).lower())
-            else:
-                # pure paren group ``(expr)[`` — the head is the inner
-                # expression's leading call name ((nullif(..))[1:3] →
-                # 'nullif'), matching _string_subscript_base's view of
-                # the base text the bracket pass extracts
-                inner = re.match(r"\s*\(*\s*([A-Za-z_][\w$.]*)", sql[k + 1 : j])
-                if inner:
-                    heads.add(inner.group(1).lower())
-        elif sql[j].isalnum() or sql[j] in "_$":
-            m = re.search(r"([A-Za-z_][\w$.]*)\Z", sql[: j + 1])
-            if m:
-                heads.add(m.group(1).lower())
-    return heads
+def _base_head(base: str) -> str | None:
+    """A subscript base's head identifier, lowercased: ``us`` for ``us``,
+    ``nullif`` for ``(nullif('abc', st.b))``, ``case`` for ``(CASE …)``."""
+    m = re.match(r"\(*\s*([A-Za-z_][\w$.]*)", base.strip())
+    return m.group(1).lower() if m else None
 
-# In string mode, a base that is textually a list literal / list-producing
-# call keeps the array reading — so one query can mix string and array
-# subscripts as long as the array bases are recognizable (fuzz r8 seed 72).
+
+# A base that is textually a list literal / list-producing call keeps the
+# array reading even when its head is a string head (fuzz r8 seed 72).
 # Both DuckDB and already-rewritten Spark spellings appear here because
 # nested bracket groups are walked (and rewritten) before their outer base
 # is classified.

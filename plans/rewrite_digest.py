@@ -8,9 +8,8 @@ full ``gen_query`` query, its ``mutate`` variant under the fuzzer's own
 mutation seed, and each statement of ``gen_statement_seq``), followed by
 every string constant in ``tests/*.py`` that contains SELECT, FROM or WITH.
 Each text goes through ``strip_comments``, ``_code_mask``,
-``rewrite_duckdb_dialect``, ``rewrite_duckdb_dialect_fallbacks``,
-``rewrite_path_tables(text, "/data")`` and ``split_statements``; an
-exception is recorded by its type name.  The digest covers every result in
+``rewrite_duckdb_dialect``, ``rewrite_path_tables(text, "/data")`` and
+``split_statements``; an exception is recorded by its type name.  The digest covers every result in
 order, so two checkouts whose rewrite layer is byte-identical on the corpus
 print the same line.  No Spark session starts.  The text count and the wall
 time go to stderr.
@@ -66,10 +65,7 @@ def corpus(seeds: int, root: str = ROOT) -> list[str]:
 
 def record(text: str) -> list[str]:
     """One entry per rewrite function: its result, or ``!<ExceptionType>``."""
-    from parquet_query_spark.workbench.dialect import (
-        rewrite_duckdb_dialect,
-        rewrite_duckdb_dialect_fallbacks,
-    )
+    from parquet_query_spark.workbench.dialect import rewrite_duckdb_dialect
     from parquet_query_spark.workbench.dialect_core import _code_mask, strip_comments
     from parquet_query_spark.workbench.statements import (
         rewrite_path_tables,
@@ -80,7 +76,6 @@ def record(text: str) -> list[str]:
         strip_comments,
         lambda t: "".join("1" if c else "0" for c in _code_mask(t)),
         rewrite_duckdb_dialect,
-        rewrite_duckdb_dialect_fallbacks,
         lambda t: rewrite_path_tables(t, "/data"),
         split_statements,
     )

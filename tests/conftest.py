@@ -1,3 +1,4 @@
+import functools
 import os
 import sys
 
@@ -6,6 +7,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 @pytest.fixture(scope="session")
@@ -39,6 +41,31 @@ def catalog():
     from parquet_query_spark.operators.catalog import load_all
 
     return load_all()
+
+
+@pytest.fixture(scope="session")
+def oracle_con():
+    """One DuckDB connection over ORACLE_SF_DIR (the driver's scale)."""
+    from parquet_query_spark.oracle import duckdb_connection
+
+    con = duckdb_connection(ORACLE_SF_DIR)
+    yield con
+    con.close()
+
+
+@pytest.fixture(scope="session")
+def oracle_select(oracle_con, catalog):
+    """``name -> SQL`` reading an operator's oracle result on
+    ``oracle_con``.  The oracle runs once per session, into a temp table
+    that every read uses (the parity compare, the pandas dtype check)."""
+
+    @functools.cache
+    def select(name: str) -> str:
+        table = f"oracle_{name}"
+        oracle_con.execute(f"CREATE TEMP TABLE {table} AS {catalog[name].oracle}")
+        return f"SELECT * FROM {table}"
+
+    return select
 
 
 @pytest.fixture(scope="session")

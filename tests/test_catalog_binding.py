@@ -85,3 +85,43 @@ def test_sql_operators_interleave_sf_dirs_without_touching_the_session(
             con.close()
         for name, df in views.items():
             df.createOrReplaceTempView(name)
+
+
+# The pipeline_batch benchmark runs the bench-tagged operators in the
+# order a fresh process's load_all() registers them.
+BENCH_ORDER = [
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
+    "q6_forecast_revenue",
+    "text_stats",
+    "text_quality_score",
+    "dedup_exact_groups",
+    "dedup_minhash_signatures",
+    "dedup_minhash_candidate_pairs",
+    "dedup_simhash",
+    "dedup_simhash_buckets",
+    "dedup_cluster_pipeline",
+    "knn_bruteforce_cosine",
+    "embedding_pq_codes",
+]
+
+
+def test_bench_operators_register_in_a_fixed_order():
+    """Importing an operator module registers its operators at that moment,
+    so a new import can reorder the benchmark pass; a fresh interpreter
+    (not this test session, whose earlier imports already set the order)
+    must list the bench operators in ``BENCH_ORDER``."""
+    import subprocess
+    import sys
+
+    code = (
+        "from parquet_query_spark.operators.catalog import load_all\n"
+        "for n, s in load_all().items():\n"
+        "    if 'bench' in s.tags: print(n)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
+    ).stdout
+    assert out.split() == BENCH_ORDER

@@ -91,16 +91,47 @@ def test_qualify_basic():
 
 
 def test_qualify_fallback_injects_into_select_list():
-    from parquet_query_spark.workbench.dialect import rewrite_duckdb_dialect_fallbacks
+    """A QUALIFY statement whose primary shape fails analysis is retried
+    once, with the predicate injected into the select list."""
+    from pyspark.errors import AnalysisException
 
-    alts = rewrite_duckdb_dialect_fallbacks(
-        "SELECT k FROM t QUALIFY row_number() OVER (ORDER BY v) = 1"
-    )
-    assert alts == [
+    from parquet_query_spark.workbench.dialect import analyze_dialect
+
+    sql = "SELECT k FROM t QUALIFY row_number() OVER (ORDER BY v) = 1"
+    tried = []
+
+    def analyze(text):
+        tried.append(text)
+        if len(tried) == 1:
+            raise AnalysisException(message="v is not projected")
+        return text
+
+    assert analyze_dialect(sql, analyze) == (
         "SELECT * EXCEPT (__qualify) FROM (SELECT k, "
         "(row_number() OVER (ORDER BY v NULLS LAST) = 1) AS __qualify "
         "FROM t) __qualify_sub WHERE __qualify"
-    ]
+    )
+    assert tried[0] == rewrite_duckdb_dialect(sql)
+    assert len(tried) == 2
+
+
+def test_retry_loop_raises_primary_error_without_hint():
+    """An error that names no hint ends the loop after one analysis and
+    surfaces the primary error itself."""
+    from pyspark.errors import AnalysisException
+
+    from parquet_query_spark.workbench.dialect import analyze_dialect
+
+    tried, err = [], AnalysisException(message="no such column")
+
+    def analyze(text):
+        tried.append(text)
+        raise err
+
+    with pytest.raises(AnalysisException) as info:
+        analyze_dialect("SELECT us[1], len(ls) FROM t", analyze)
+    assert info.value is err
+    assert len(tried) == 1
 
 
 def test_qualify_preserves_order_by_and_limit():

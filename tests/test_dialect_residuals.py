@@ -477,8 +477,8 @@ def test_r9_order_by_all_skips_map_columns(engine):
 
 def test_r9_mixed_string_list_subscripts(engine):
     """One query subscripting a STRING column and a LIST column (and
-    len() over a list): neither the all-array nor the all-string variant
-    analyzes — the fallback enumerates per-base string-mode subsets
+    len() over a list): neither the all-array nor the all-string reading
+    analyzes — each analysis error names the base Spark typed STRING
     (fuzz r9 seeds 171 and 1681)."""
     import duckdb
 
@@ -488,10 +488,42 @@ def test_r9_mixed_string_list_subscripts(engine):
     for q in [
         "SELECT k, ls[1] AS a, us[2:5] AS b FROM nested_src ORDER BY k",
         "SELECT len(ls) AS a, us[2:5] AS b, ls[1] AS c FROM nested_src ORDER BY k",
+        # five subscript heads: each typed error adds its own head
+        "SELECT k, us[1:2] AS a, ls[1] AS b, sl.xs[1] AS c, "
+        "coalesce(ls, [])[2] AS d, nullif(ls, [])[1] AS e FROM nested_src ORDER BY k",
+        # an open slice fails on its size(us); a negative bound leaves
+        # list_slice unexpanded
+        "SELECT k, us[2:] AS a, us[-3:-1] AS b, ls[2:] AS c FROM nested_src ORDER BY k",
     ]:
         got = [tuple(r) for r in engine.sql(q).collect()]
         want = con.execute(q).fetchall()
         assert got == want, (q, got[:3], want[:3])
+    con.close()
+
+
+def test_subscript_types_cost_one_analysis_per_hint(engine, monkeypatch):
+    """Four string subscript heads and a list ``len``: the primary text
+    and one retry per hint Spark's errors name, five analyses in all."""
+    import duckdb
+
+    engine.spark.read.parquet(NESTED_PATH).createOrReplaceTempView("nested_src")
+    q = ("SELECT us[2] AS a, ls[1] AS b, us[2:3] AS c, len(ls) AS d, "
+         "(CASE WHEN k > 1 THEN us ELSE 'x' END)[1] AS e, "
+         "nullif(us, 'x')[1:2] AS f FROM nested_src ORDER BY k")
+    texts = []
+    sql = engine.spark.sql
+
+    def counting(text, *args, **kwargs):
+        texts.append(text)
+        return sql(text, *args, **kwargs)
+
+    monkeypatch.setattr(engine.spark, "sql", counting)
+    df = engine.sql(q)
+    monkeypatch.undo()
+    assert len(texts) <= 5, texts
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW nested_src AS SELECT * FROM '{NESTED_PATH}'")
+    assert [tuple(r) for r in df.collect()] == con.execute(q).fetchall()
     con.close()
 
 

@@ -15,9 +15,12 @@ Spark query:
 
 1. ``DESCRIBE`` every oracle — no result column may be HUGEINT/UHUGEINT
    (plan-only, catches the class at its source).
-2. Execute every oracle at sf0.001 through ``.df()`` — no column DuckDB
+2. Read every oracle's result through ``.df()`` — no column DuckDB
    declares integral may come back floating (catches e.g. NULL-induced
-   int→float64 promotion, the other way pandas degrades integers).
+   int→float64 promotion, the other way pandas degrades integers).  The
+   result is the one execution ``tests/test_oracle_parity.py`` compares
+   against Spark (``conftest.oracle_select``, at the driver's sf0.01), so
+   no oracle runs twice.
 
 The Spark-side dtype check (a column one engine declares integral and
 the other floating) runs in ``tests/test_oracle_parity.py`` on the
@@ -76,7 +79,7 @@ def test_oracle_declares_no_hugeint(described, name):
 
 
 @pytest.mark.parametrize("name", ORACLED)
-def test_oracle_df_keeps_integers_integral(con, described, name):
+def test_oracle_df_keeps_integers_integral(oracle_con, oracle_select, described, name):
     """Integral DuckDB columns must survive the pandas conversion intact.
 
     NULL-bearing integer columns are exempt: pandas promotes those to
@@ -87,9 +90,8 @@ def test_oracle_df_keeps_integers_integral(con, described, name):
     one-sided degradation — HUGEINT, which exists solely on the DuckDB
     side — mismatches, and the DESCRIBE test above catches it at the
     source."""
-    spec = CATALOG[name]
     types = described(name)
-    pdf = con.execute(spec.oracle).df()
+    pdf = oracle_con.execute(oracle_select(name)).df()
     bad = {
         c: (types[c], str(pdf[c].dtype))
         for c in pdf.columns

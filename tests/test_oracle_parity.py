@@ -10,7 +10,10 @@ exchange unless the operator is a ``template`` (the catalog's order rule:
 answers are multisets, so nothing else ends in a global sort), and no
 column Spark declares integral is declared floating by DuckDB's
 ``DESCRIBE`` of the oracle, or the reverse (``3`` and ``3.0``
-canonicalize differently, so such a pair can never hash-match).
+canonicalize differently, so such a pair can never hash-match).  Each
+oracle runs once per session into a DuckDB temp table
+(``conftest.oracle_select``); ``tests/test_oracle_dtypes.py`` reads the
+same result through pandas.
 """
 
 import os
@@ -18,7 +21,7 @@ import os
 import pytest
 
 from parquet_query_spark.operators.catalog import load_all
-from parquet_query_spark.oracle import compare, duckdb_connection
+from parquet_query_spark.oracle import compare
 from parquet_query_spark.plans import physical_plan
 
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -32,13 +35,6 @@ _DUCK_INTEGRAL = {
     "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT",
 }
 _SPARK_INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
-
-
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb_connection(ORACLE_SF_DIR)
-    yield c
-    c.close()
 
 
 def _assert_no_range_sort(spec, df):
@@ -65,13 +61,14 @@ def _dtype_conflicts(df, con, oracle_sql: str) -> dict[str, str]:
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_oracle_match(spark, con, name):
+def test_oracle_match(spark, oracle_con, oracle_select, name):
     spec = CATALOG[name]
     df = spec.fn(spark, ORACLE_SF_DIR)
     _assert_no_range_sort(spec, df)
-    bad = _dtype_conflicts(df, con, spec.oracle)
+    oracle = oracle_select(name)
+    bad = _dtype_conflicts(df, oracle_con, oracle)
     assert not bad, f"{name}: cross-engine integral/float dtype conflicts: {bad}"
-    report = compare(spark, ORACLE_SF_DIR, df, spec.oracle, con=con)
+    report = compare(spark, ORACLE_SF_DIR, df, oracle, con=oracle_con)
     assert report["match"], f"{name}: {report}"
 
 

@@ -17,28 +17,19 @@
 import os
 
 import pytest
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def _blocked(spark, docs):
-    """Reproduce the operator's rarest-token block assignment."""
-    pref = docs.select(
-        "doc_id",
-        F.array_sort(
-            F.array_distinct(F.slice(F.split(F.trim("text"), " "), 1, 8))
-        ).alias("words"),
-    )
-    w = pref.select("doc_id", F.explode("words").alias("word"))
-    dfreq = w.groupBy("word").agg(F.count("*").alias("dfreq"))
-    w_rank = W.partitionBy("doc_id").orderBy("dfreq", "word")
-    return (
-        w.join(dfreq, "word")
-        .withColumn("rn", F.row_number().over(w_rank))
-        .where(F.col("rn") == 1)
-        .select("doc_id", F.col("word").alias("block_key"))
+    """The operator's own rarest-token block assignment
+    (``dedup._rarest_token_ctes``) over ``docs``."""
+    from parquet_query_spark.operators.dedup import _rarest_token_ctes
+
+    return spark.sql(
+        f"WITH {_rarest_token_ctes('{docs}')}\nSELECT doc_id, block_key FROM blocked",
+        docs=docs,
     )
 
 
