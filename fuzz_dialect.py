@@ -1825,6 +1825,18 @@ INTENTIONAL = [
 ]
 
 
+# A Spark error of these types means the JVM is gone: every later seed
+# would read ``spark_error_only`` without saying anything about the shim.
+_JVM_GONE = re.compile(r"\b(?:Py4JNetworkError|ConnectionRefusedError)\b")
+
+
+def _stop_if_jvm_gone(seed: int, detail) -> bool:
+    if not (detail and _JVM_GONE.search(detail)):
+        return False
+    print(f"STOPPED at seed {seed}: the Spark JVM is unreachable ({detail[:120]})")
+    return True
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--seeds", type=int, default=200)
@@ -1875,6 +1887,7 @@ def main() -> int:
     counts = {"ok": 0, "both_error": 0, "duckdb_error_only": 0,
               "spark_error_only": 0, "value_mismatch": 0}
     failures = []
+    stopped = False
     for seed in seeds:
         rng = random.Random(seed)
         if args.statements:
@@ -1883,6 +1896,9 @@ def main() -> int:
                 mrng = random.Random(seed * 1000003 + 17)
                 stmts = [mutate(s, mrng) for s in stmts]
             cls, stmt, detail = run_statement_seq(differ, stmts)
+            if _stop_if_jvm_gone(seed, detail):
+                stopped = True
+                break
             if cls in ("value_mismatch", "spark_error_only"):
                 # intentional-difference triage over the comment-stripped
                 # sequence (macro bodies can host e.g. #9 UBIGINT negation)
@@ -1914,6 +1930,9 @@ def main() -> int:
 
         sql = render(exprs)
         cls, a, b = differ.run(sql)
+        if _stop_if_jvm_gone(seed, a):
+            stopped = True
+            break
         counts[cls] += 1
         if args.one is not None:
             print(f"seed {seed}: {cls}\n  {sql}\n  spark: {a}\n  duckdb: {b}")
@@ -1946,7 +1965,7 @@ def main() -> int:
     print(f"DONE {counts}")
     for seed, cls, mini, a, b in failures:
         print(f"FAIL seed={seed} class={cls}\n  {mini}\n  {a or b}")
-    return 1 if failures else 0
+    return 2 if stopped else 1 if failures else 0
 
 
 if __name__ == "__main__":

@@ -15,9 +15,10 @@ hits first:
   legal there, and Spark's lateral column aliases let the predicate
   reference select-list aliases like DuckDB does), the query is wrapped,
   and the outer query filters on it and drops it with ``* EXCEPT``.
-- ``strftime(ts, '%Y-%m-%d')`` — rewritten to
-  ``date_format(ts, 'yyyy-MM-dd')`` with a C-to-Java pattern translation
-  (letter literals quoted per Spark datetime-pattern rules).
+- ``strftime(ts, '%Y-%m-%d')`` / ``strptime(s, '%Y-%m-%d')`` — rewritten
+  to ``date_format(ts, 'yyyy-MM-dd')`` / ``to_timestamp(s, 'yyyy-MM-dd')``
+  with a C-to-Java pattern translation (letter literals quoted per Spark
+  datetime-pattern rules).
 - ``ASOF [LEFT] JOIN`` — rewritten to an equi-join against a LEAD/LAG
   validity window (strictly scoped; unsupported forms raise
   ``AsofRewriteError`` rather than risk wrong results).
@@ -90,6 +91,14 @@ identifiers (doubled-delimiter escapes), ``$tag$…$tag$`` strings and
 ``statements.rewrite_path_tables`` — reads its spans.  These are not the
 A6 splitter's rules (``statements._lex_segments`` knows neither backticks
 nor dollar strings, as in the reference).
+
+Every pass that rewrites calls by name (read functions, the ops pack's
+FROM-position series, macros, renames, strftime/strptime, the ducktype
+casts, ``concat``, and ``CREATE MACRO`` expansion in ``macros.py``) is a
+handler table for one walker, ``dialect_core._rewrite_calls``: one
+right-to-left pass over the unqualified code call sites, each call's
+arguments split from the current text so inner calls are rewritten
+first, and a handler's output never walked again.
 
 - Text normalization pack (r8, mutation-fuzz driven): comments are
   STRIPPED once at the ``Engine.sql`` funnel (``strip_comments`` —
@@ -254,10 +263,13 @@ this list is the triage ground truth for fuzz_dialect.py divergences):
 
 from __future__ import annotations
 
+import contextvars
+import logging
 import re
 from typing import Callable, NamedTuple, TypeVar
 
 from pyspark.errors import AnalysisException
+from pyspark.logger import PySparkLogger
 
 # The shim's passes live in three sibling modules — dialect_core (lexing,
 # statement rewrites, bracket syntax), dialect_macros (function renames +
@@ -273,8 +285,7 @@ from parquet_query_spark.workbench.dialect_core import (
     _rewrite_dynamic_interval,
     _rewrite_named_window_case,
     _rewrite_exclude,
-    _rewrite_strftime,
-    _rewrite_strptime,
+    _rewrite_datetime_formats,
     _rewrite_qualify,
     _rewrite_qualify_inject,
     _rewrite_asof_join,
@@ -322,7 +333,10 @@ from parquet_query_spark.workbench.dialect_typing import (
 # must already be calls when operands are captured); fn_macros before
 # function_names (a macro's arity guard must see the DuckDB spelling);
 # the numeric typing passes (ducktype → concat-skip-nulls → arrayish-||
-# → int-casts → divmod) run last so they see every emitted shape.
+# → int-casts → divmod) run last so they see every emitted shape.  The
+# read-function, macro, rename, datetime-format, ducktype and concat
+# passes (and the ops pack's series step) are each one `_rewrite_calls`
+# walk over a handler table.
 _PASSES = (
     _rewrite_dollar_strings,
     _rewrite_literal_backslashes,
@@ -344,8 +358,7 @@ _PASSES = (
     _rewrite_function_names,
     _rewrite_using_sample,
     _rewrite_exclude,
-    _rewrite_strftime,
-    _rewrite_strptime,
+    _rewrite_datetime_formats,
     _rewrite_qualify,
     _rewrite_window_filter,
     _rewrite_count_distinct_window,
@@ -432,6 +445,23 @@ def _retry(sql: str, err: AnalysisException, hints: _Hints, seen: set) -> tuple[
     return hints, _rewrite(sql, hints)
 
 
+# PySpark logs every AnalysisException it converts, with its JVM stack,
+# as an ERROR of this logger.  Inside the retry loop a failed analysis is
+# expected, so the loop's own thread drops those records; the error it
+# finally raises reaches the caller as the exception.  (Asking plain
+# ``logging`` for this logger before PySpark made it would create a
+# Logger that cannot take PySpark's ``errorClass`` keyword.)
+_RETRYING = contextvars.ContextVar("_RETRYING", default=False)
+
+
+class _QuietRetries(logging.Filter):
+    def filter(self, record: logging.LogRecord) -> bool:
+        return not _RETRYING.get()
+
+
+PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(_QuietRetries())
+
+
 def analyze_dialect(sql: str, analyze: Callable[[str], T]) -> T:
     """``analyze(rewrite_duckdb_dialect(sql))``, retried while Spark's
     analyzer names a type the text alone could not tell.  DuckDB types
@@ -444,13 +474,17 @@ def analyze_dialect(sql: str, analyze: Callable[[str], T]) -> T:
     text = _rewrite(sql, hints, seen)
     tried: set[str] = set()
     first = None
-    while text not in tried:
-        tried.add(text)
-        try:
-            return analyze(text)
-        except AnalysisException as e:
-            first = first or e
-            hints, text = _retry(sql, e, hints, seen)
+    quiet = _RETRYING.set(True)
+    try:
+        while text not in tried:
+            tried.add(text)
+            try:
+                return analyze(text)
+            except AnalysisException as e:
+                first = first or e
+                hints, text = _retry(sql, e, hints, seen)
+    finally:
+        _RETRYING.reset(quiet)
     raise first
 
 

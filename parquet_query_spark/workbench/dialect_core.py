@@ -1,13 +1,13 @@
-"""Dialect shim: shared lexing + statement-level rewrites + bracket
-syntax (split out of dialect.py in r9 — see dialect.py for the pass
-pipeline and the full design docstring)."""
+"""Dialect shim: shared lexing, the call-site walker, statement-level
+rewrites and bracket syntax (see dialect.py for the pass pipeline and
+the full design docstring)."""
 
 from __future__ import annotations
 
 import contextvars
 import functools
 import re
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 from types import MappingProxyType
 from typing import NamedTuple
 
@@ -20,8 +20,7 @@ from typing import NamedTuple
 # code mask, the comment stripper, the dollar-string and backslash passes,
 # the identifier unquoting and the path-literal rewrite are views over its
 # spans, and `_brackets` builds the one bracket table from them.  Both are
-# memoized by text: the passes ask again for text they have not changed
-# (a scan loop re-masks its text after every candidate).
+# memoized by text: the passes ask again for text they have not changed.
 
 CODE, STRING, QUOTED, BACKTICK, DOLLAR, COMMENT = "code", "'", '"', "`", "$", "comment"
 
@@ -182,6 +181,64 @@ def _split_call_args(sql: str, open_paren: int) -> tuple[list[str], int] | None:
         i = sql.find(",", i + 1, close)
     args.append(sql[start:close])
     return args, close
+
+
+# ── the call-site walker ─────────────────────────────────────────────────
+#
+# Every pass that rewrites calls by name is a table for `_rewrite_calls`:
+# lowercase function name -> handler.  A handler gets the call's
+# arguments and returns the text that replaces the whole call, or None to
+# leave the call as written.  The walker never walks a handler's output,
+# so a handler whose emission needs another handler calls it directly.
+
+_CALL_SITE = re.compile(r"(?<![\w$])([A-Za-z_]\w*)\s*\(")
+
+
+class _Args(list):
+    """A call's argument texts (split at top-level commas, not stripped),
+    and where the call sits: ``sql[start:close + 1]`` is the call, its
+    name spelled ``name``."""
+
+    def __init__(self, args: list[str], sql: str, start: int, close: int, name: str):
+        super().__init__(args)
+        self.sql, self.start, self.close, self.name = sql, start, close, name
+
+    @property
+    def call(self) -> str:
+        return self.sql[self.start : self.close + 1]
+
+    @property
+    def before(self) -> str:
+        return self.sql[: self.start]
+
+
+def _qualified(sql: str, start: int) -> bool:
+    """The name at ``start`` follows a ``.`` (a field or method name)."""
+    j = start - 1
+    while j >= 0 and sql[j].isspace():
+        j -= 1
+    return j >= 0 and sql[j] == "."
+
+
+def _rewrite_calls(sql: str, table: Mapping[str, Callable[[_Args], str | None]]) -> str:
+    """One right-to-left pass over the unqualified code call sites of the
+    names in ``table``.  Each call's arguments are split from the current
+    text, so a call sees the calls inside it already rewritten."""
+    code = _code_mask_of(sql)
+    sites = [
+        m
+        for m in _CALL_SITE.finditer(sql)
+        if m.group(1).lower() in table and code[m.start()] and not _qualified(sql, m.start())
+    ]
+    for m in reversed(sites):
+        parsed = _split_call_args(sql, m.end() - 1)
+        if parsed is None:
+            continue
+        args, close = parsed
+        out = table[m.group(1).lower()](_Args(args, sql, m.start(), close, m.group(1)))
+        if out is not None:
+            sql = sql[: m.start()] + out + sql[close + 1 :]
+    return sql
 
 
 def strip_comments(sql: str) -> str:
@@ -456,57 +513,37 @@ def strftime_format_to_java(fmt: str) -> str:
 _SQ_LITERAL = re.compile(r"^\s*'((?:[^']|'')*)'\s*$")
 
 
-def _rewrite_strftime(sql: str) -> str:
-    mask = _code_mask(sql)
-    out = sql
-    for m in reversed(_keyword_matches(sql, mask, r"\bstrftime\s*\(")):
-        open_paren = m.end() - 1
-        parsed = _split_call_args(sql, open_paren)
-        if parsed is None:
-            continue
-        args, close = parsed
-        if len(args) != 2:
-            continue
-        # DuckDB: strftime(timestamp, format); tolerate the swapped order
-        fmt_idx = next(
-            (i for i, a in enumerate(args) if _SQ_LITERAL.match(a)), None
-        )
-        if fmt_idx is None:
-            continue
-        ts_expr = args[1 - fmt_idx].strip()
-        fmt = _SQ_LITERAL.match(args[fmt_idx]).group(1).replace("''", "'")
-        java = strftime_format_to_java(fmt)
-        sql_lit = "'" + java.replace("'", "''") + "'"
-        out = out[: m.start()] + f"date_format({ts_expr}, {sql_lit})" + out[close + 1 :]
-    return out
+def _java_format_literal(literal: str) -> str:
+    """A quoted strftime pattern as a quoted Spark datetime pattern."""
+    fmt = _SQ_LITERAL.match(literal).group(1).replace("''", "'")
+    return "'" + strftime_format_to_java(fmt).replace("'", "''") + "'"
 
 
-def _rewrite_strptime(sql: str) -> str:
-    """DuckDB ``strptime(str, '%Y-%m-%d')`` → Spark
-    ``to_timestamp(str, 'yyyy-MM-dd')`` via the same %-code table as
-    strftime (unknown codes raise, never silently mis-parse)."""
-    mask = _code_mask(sql)
-    out = sql
-    for m in reversed(_keyword_matches(sql, mask, r"\bstrptime\s*\(")):
-        open_paren = m.end() - 1
-        parsed = _split_call_args(sql, open_paren)
-        if parsed is None:
-            continue
-        args, close = parsed
-        if len(args) != 2:
-            continue
-        fmt_m = _SQ_LITERAL.match(args[1])
-        if fmt_m is None:
-            continue
-        fmt = fmt_m.group(1).replace("''", "'")
-        java = strftime_format_to_java(fmt)
-        sql_lit = "'" + java.replace("'", "''") + "'"
-        out = (
-            out[: m.start()]
-            + f"to_timestamp({args[0].strip()}, {sql_lit})"
-            + out[close + 1 :]
-        )
-    return out
+def _strftime_call(args: list[str]) -> str | None:
+    # DuckDB: strftime(timestamp, format); tolerate the swapped order
+    if len(args) != 2:
+        return None
+    fmt_idx = next((i for i, a in enumerate(args) if _SQ_LITERAL.match(a)), None)
+    if fmt_idx is None:
+        return None
+    return f"date_format({args[1 - fmt_idx].strip()}, {_java_format_literal(args[fmt_idx])})"
+
+
+def _strptime_call(args: list[str]) -> str | None:
+    if len(args) != 2 or not _SQ_LITERAL.match(args[1]):
+        return None
+    return f"to_timestamp({args[0].strip()}, {_java_format_literal(args[1])})"
+
+
+_DATETIME_FORMAT_CALLS = {"strftime": _strftime_call, "strptime": _strptime_call}
+
+
+def _rewrite_datetime_formats(sql: str) -> str:
+    """DuckDB ``strftime(ts, '%Y-%m-%d')`` → ``date_format(ts,
+    'yyyy-MM-dd')`` and ``strptime(s, '%Y-%m-%d')`` → ``to_timestamp(s,
+    'yyyy-MM-dd')``, through one %-code table (unknown codes raise, never
+    silently mis-format)."""
+    return _rewrite_calls(sql, _DATETIME_FORMAT_CALLS)
 
 
 # ── QUALIFY ──────────────────────────────────────────────────────────────
@@ -784,30 +821,25 @@ def _rewrite_asof_join(sql: str) -> str:
 # or format.`abs path`).  Calls with extra arguments (options, globs as
 # lists) are left untouched so Spark's error names the construct.
 
-_READ_FN = re.compile(
-    r"\b(read_parquet|parquet_scan|read_csv_auto|read_csv|read_json_auto"
-    r"|read_json|read_ndjson_auto|read_ndjson)\s*\(",
-    re.IGNORECASE,
+_READ_ARG = re.compile(r"\s*('(?:[^']|'')+')\s*")
+
+
+def _read_call(args: list[str]) -> str | None:
+    m = _READ_ARG.fullmatch(args[0]) if len(args) == 1 else None
+    return m.group(1) if m else None  # options/globs: leave for Spark to name
+
+
+_READ_CALLS = dict.fromkeys(
+    (
+        "read_parquet parquet_scan read_csv_auto read_csv read_json_auto"
+        " read_json read_ndjson_auto read_ndjson"
+    ).split(),
+    _read_call,
 )
-_READ_ARG = re.compile(r"\s*('(?:[^']|'')+')\s*\)")
 
 
 def _rewrite_read_functions(sql: str) -> str:
-    mask = _code_mask(sql)
-    repls: list[tuple[int, int, str]] = []
-    for m in _READ_FN.finditer(sql):
-        if not all(mask[m.start() : m.start(1) + len(m.group(1))]):
-            continue
-        prev = sql[m.start() - 1] if m.start() > 0 else ""
-        if prev in ".@:":
-            continue
-        am = _READ_ARG.match(sql, m.end())
-        if not am:
-            continue  # options/globs — leave for Spark to name
-        repls.append((m.start(), am.end(), am.group(1)))
-    for s, e, lit in reversed(repls):
-        sql = sql[:s] + lit + sql[e:]
-    return sql
+    return _rewrite_calls(sql, _READ_CALLS)
 
 
 # ── DuckDB DESCRIBE SELECT → Spark DESCRIBE QUERY ───────────────────────

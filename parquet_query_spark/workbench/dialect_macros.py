@@ -1,5 +1,6 @@
 """Dialect shim: DuckDB function renames (_FN_MAP) and expression
-macros (_FN_MACROS) — split out of dialect.py in r9."""
+macros (_FN_MACROS), two handler tables for the call-site walker
+(``dialect_core._rewrite_calls``; see dialect.py for the pass pipeline)."""
 
 from __future__ import annotations
 
@@ -8,8 +9,8 @@ import re
 from parquet_query_spark.workbench.dialect_core import (
     _brackets,
     _code_mask,
+    _rewrite_calls,
     _series_body,
-    _split_call_args,
 )
 
 
@@ -91,29 +92,21 @@ _FN_MAP = {
     "sumkahan": "sum",
 }
 
-_FN_CALL = re.compile(
-    r"\b(" + "|".join(_FN_MAP) + r")\s*\(", re.IGNORECASE
-)
+
+def _rename(new: str):
+    """A handler that respells the called name and keeps the call's
+    arguments as written."""
+    return lambda args: new + args.call[len(args.name) :]
+
+
+_FN_RENAMES = {old: _rename(new) for old, new in _FN_MAP.items()}
 
 
 def _rewrite_function_names(sql: str) -> str:
     """Rename DuckDB-spelled function calls to their Spark equivalents.
-    Only bare identifiers immediately followed by ``(`` are touched —
-    qualified names (``schema.fn``) and quoted identifiers are left
-    alone, and the code mask skips strings/comments."""
-    mask = _code_mask(sql)
-    repls: list[tuple[int, int, str]] = []
-    for m in _FN_CALL.finditer(sql):
-        s, e = m.start(1), m.end(1)
-        if not all(mask[s:e]):
-            continue
-        prev = sql[s - 1] if s > 0 else ""
-        if prev in ".@:":  # qualified / parameter reference
-            continue
-        repls.append((s, e, _FN_MAP[m.group(1).lower()]))
-    for s, e, new in reversed(repls):
-        sql = sql[:s] + new + sql[e:]
-    return sql
+    Qualified names (``schema.fn``) and quoted identifiers are left
+    alone."""
+    return _rewrite_calls(sql, _FN_RENAMES)
 
 
 # ── DuckDB list/array macros with no 1:1 Spark rename ───────────────────
@@ -175,7 +168,7 @@ def _macro_distance(args: list[str]) -> str | None:
 def _macro_list_unique(args: list[str]) -> str | None:
     if len(args) != 1:
         return None
-    return f"size(array_distinct({args[0].strip()}))"
+    return f"size({_macro_list_distinct(args)})"
 
 
 def _macro_list_has_all(args: list[str]) -> str | None:
@@ -326,10 +319,8 @@ def _macro_trim2(args: list[str]) -> str | None:
 
 
 def _trim_side(side: str):
-    # DuckDB ltrim/rtrim(s, chars) — Spark's 2-arg spelling has the args
-    # swapped, and emitting ltrim(...) from the ltrim macro would
-    # re-match itself; the TRIM(LEADING/TRAILING x FROM s) form is
-    # equivalent and stable under re-scanning.
+    # DuckDB ltrim/rtrim(s, chars): Spark's 2-arg spelling has the args
+    # swapped; TRIM(LEADING/TRAILING x FROM s) names them
     def macro(args: list[str]) -> str | None:
         if len(args) != 2:
             return None
@@ -431,8 +422,7 @@ def _macro_least_greatest_double(name):
     Casting each top-level decimal-LITERAL argument to DOUBLE makes
     Spark's common type DOUBLE whenever the literal is what made
     DuckDB's; decimal COLUMNS without a literal stay a documented
-    residual (#3 class).  Returns None when no literal matches, which
-    also ends the fixpoint re-match."""
+    residual (#3 class).  Returns None when no literal matches."""
 
     def macro(args: list[str]) -> str | None:
         if len(args) < 2 or not any(
@@ -459,7 +449,7 @@ def _macro_ignore_nulls_inside(name):
     """DuckDB writes ``first_value(x IGNORE NULLS)`` INSIDE the call;
     Spark puts the modifier after it: ``first_value(x) IGNORE NULLS``
     (probed both).  Strips the tail from the last argument and re-emits
-    it post-call; re-match finds no tail and stops the fixpoint."""
+    it post-call."""
 
     def macro(args: list[str]) -> str | None:
         if not args:
@@ -556,10 +546,10 @@ def _macro_jaccard(args):
     if len(args) != 2:
         return None
     a, b = args[0].strip(), args[1].strip()
-    sa = f"array_distinct(split(({a}), ''))"
-    sb = f"array_distinct(split(({b}), ''))"
+    sa = _macro_list_distinct([f"split(({a}), '')"])
+    sb = _macro_list_distinct([f"split(({b}), '')"])
     return (
-        f"(CAST(size(array_intersect({sa}, {sb})) AS DOUBLE) "
+        f"(CAST(size({_macro_list_intersect([sa, sb])}) AS DOUBLE) "
         f"/ size(array_union({sa}, {sb})))"
     )
 
@@ -583,10 +573,8 @@ def _macro_parse_path(args):
     if a is None:
         return None
     rest = f"filter(split(({a}), '/'), x -> x <> '')"
-    return (
-        f"(CASE WHEN substr(({a}), 1, 1) = '/' "
-        f"THEN flatten(array(array('/'), {rest})) ELSE {rest} END)"
-    )
+    rooted = _macro_flatten([f"array(array('/'), {rest})"])
+    return f"(CASE WHEN substr(({a}), 1, 1) = '/' THEN {rooted} ELSE {rest} END)"
 
 
 def _macro_parse_dirname(args):
@@ -709,8 +697,7 @@ def _macro_list_sort(args: list[str]) -> str | None:
 
 
 def _macro_array_sort_direction(args: list[str]) -> str | None:
-    # Spark's own 1-arg array_sort already sorts NULLS LAST — rewriting
-    # it would re-trigger this macro every fixpoint pass (trap 27); only
+    # Spark's own 1-arg array_sort already sorts NULLS LAST; only
     # DuckDB's 2-arg direction form needs translating.
     if len(args) == 2:
         return _macro_list_sort(args)
@@ -809,8 +796,8 @@ def _macro_avg_double(args: list[str]) -> str | None:
     = DOUBLE) while Spark's decimal ``avg`` keeps decimal(p+4, s+4) —
     rounding the result at scale+4, a visible ~1e-5 divergence (fuzz seed
     1223).  Cast the ARGUMENT to DOUBLE so the whole accumulation runs in
-    double like DuckDB's.  Self-guarded against re-expansion (trap: a
-    macro whose output contains its own name must detect itself)."""
+    double like DuckDB's; an argument already cast to DOUBLE is left as
+    written."""
     if len(args) != 1:
         return None
     a = args[0].strip()
@@ -818,12 +805,12 @@ def _macro_avg_double(args: list[str]) -> str | None:
     if om and om.group(1).strip():
         # in-aggregate ORDER BY is a no-op for avg (DuckDB ignores it)
         a = om.group(1).strip()
-    up = a.upper()
-    if up.startswith("CAST(") and up.rstrip().endswith("AS DOUBLE)"):
+    distinct = a.upper().startswith("DISTINCT ")
+    x = a[9:] if distinct else a
+    up = x.strip().upper()
+    if up.startswith("CAST(") and up.endswith("AS DOUBLE)"):
         return None
-    if up.startswith("DISTINCT "):
-        return f"avg(DISTINCT CAST({a[9:]} AS DOUBLE))"
-    return f"avg(CAST({a} AS DOUBLE))"
+    return f"avg({'DISTINCT ' if distinct else ''}CAST({x} AS DOUBLE))"
 
 
 def _macro_quantile_disc(args: list[str]) -> str | None:
@@ -835,50 +822,16 @@ def _macro_quantile_disc(args: list[str]) -> str | None:
     )
 
 
-_SAMPLE_MOMENT = re.compile(r"\b(skewness|kurtosis)\s*\(", re.IGNORECASE)
-
-
-def _rewrite_sample_moments(sql: str) -> str:
-    """DuckDB reports SAMPLE skewness/kurtosis; Spark the population
-    forms.  One right-to-left pass (NOT the fixpoint macro table — the
-    corrections contain the same function name and would re-expand):
-    g1·√(n(n−1))/(n−2) and G2 = (n−1)/((n−2)(n−3))·((n+1)·g2+6), both
-    verified numerically on {1,2,9,3} against the two engines.  A call
-    followed by OVER keeps Spark's population reading (the correction
-    needs count() in the same aggregation context)."""
-    if not _SAMPLE_MOMENT.search(sql):
-        return sql
-    mask = _code_mask(sql)
-    repls: list[tuple[int, int, str]] = []
-    for m in _SAMPLE_MOMENT.finditer(sql):
-        if not all(mask[i] for i in range(m.start(), m.end())):
-            continue
-        prev = sql[m.start() - 1] if m.start() > 0 else ""
-        if prev in ".@:":
-            continue
-        parsed = _split_call_args(sql, m.end() - 1)
-        if parsed is None or len(parsed[0]) != 1:
-            continue
-        args, close = parsed
-        after = sql[close + 1 :].lstrip()
-        if re.match(r"OVER\b", after, re.IGNORECASE):
-            continue
-        fn = m.group(1).lower()
-        out = (
-            _macro_skewness(args) if fn == "skewness" else _macro_kurtosis(args)
-        )
-        if out is not None:
-            repls.append((m.start(), close + 1, out))
-    for s_, e_, rep in reversed(repls):
-        sql = sql[:s_] + rep + sql[e_:]
-    return sql
+_OVER = re.compile(r"\s*OVER\b", re.IGNORECASE)
 
 
 def _macro_skewness(args: list[str]) -> str | None:
     # DuckDB reports SAMPLE skewness; Spark the population g1.  The
     # correction g1·√(n(n−1))/(n−2) was verified numerically against
-    # both engines (0.9794 → 1.6964 on {1,2,9,3}).
-    if len(args) != 1:
+    # both engines (0.9794 → 1.6964 on {1,2,9,3}).  A call followed by
+    # OVER keeps Spark's population reading (the correction needs
+    # count() in the same aggregation context).
+    if len(args) != 1 or _OVER.match(args.sql, args.close + 1):
         return None
     a = args[0].strip()
     return (
@@ -890,8 +843,8 @@ def _macro_skewness(args: list[str]) -> str | None:
 def _macro_kurtosis(args: list[str]) -> str | None:
     # DuckDB: sample excess kurtosis G2 = (n−1)/((n−2)(n−3)) ·
     # ((n+1)·g2 + 6) over Spark's population excess g2 (verified:
-    # −0.7981 → 3.0144 on {1,2,9,3}).
-    if len(args) != 1:
+    # −0.7981 → 3.0144 on {1,2,9,3}).  OVER: as for skewness.
+    if len(args) != 1 or _OVER.match(args.sql, args.close + 1):
         return None
     a = args[0].strip()
     n = f"count(({a}))"
@@ -1124,11 +1077,11 @@ def _macro_list_intersect(args):
         return "CAST(NULL AS ARRAY<STRING>)"
     # coalesce types the untyped-literal corner on either side; the ELSE
     # branch only runs when a IS NOT NULL, where coalesce(a, b) ≡ a
-    return (
-        f"(CASE WHEN ({a}) IS NULL THEN NULL ELSE "
-        f"array_distinct(filter(coalesce(({b}), slice(coalesce(({a}), ({b})), 1, 0)), "
-        f"__li_x -> array_contains(coalesce(({a}), ({b})), __li_x))) END)"
+    kept = (
+        f"filter(coalesce(({b}), slice(coalesce(({a}), ({b})), 1, 0)), "
+        f"__li_x -> array_contains(coalesce(({a}), ({b})), __li_x))"
     )
+    return f"(CASE WHEN ({a}) IS NULL THEN NULL ELSE {_macro_list_distinct([kept])} END)"
 
 
 def _macro_xor(args):
@@ -1269,11 +1222,11 @@ def _macro_list_resize(args):
     )
     # flatten(array(..)) not concat(..): the skip-NULLs concat pass
     # would stringify the arrays (trap 31 / fixed bug #8)
+    padded = _macro_flatten([f"array(({l}), array_repeat({fill}, ({n}) - size(({l}))))"])
     return (
         f"(CASE WHEN ({n}) <= size(({l})) "
         f"THEN slice(({l}), 1, greatest(({n}), 0)) "
-        f"ELSE flatten(array(({l}), "
-        f"array_repeat({fill}, ({n}) - size(({l}))))) END)"
+        f"ELSE {padded} END)"
     )
 
 
@@ -1343,7 +1296,7 @@ def _histogram_sql(x: str) -> str:
     (``slice(L, 1, 0)``) so no element-type spelling is needed; fold
     lambdas touch only the accumulator and element, keeping aggregates
     out of lambda bodies (Spark rejects those)."""
-    L = f"array_sort(collect_list(({x})))"
+    L = f"array_sort({_collect_list(x)})"
     acc0 = (
         f"named_struct('ks', slice({L}, 1, 0), "
         f"'cs', CAST(array() AS ARRAY<BIGINT>), "
@@ -1351,25 +1304,28 @@ def _histogram_sql(x: str) -> str:
     )
     # flatten(array(..)), never concat(..): the skip-NULLs concat pass
     # would stringify the arrays (trap 31 / fixed bug #8)
+    ks = _macro_flatten(["array(a.ks, array(a.pv))"])
+    cs = _macro_flatten(["array(a.cs, array(a.ct))"])
     step = (
         "(a, e) -> CASE "
         "WHEN a.ct > 0 AND a.pv = e THEN "
         "named_struct('ks', a.ks, 'cs', a.cs, 'pv', a.pv, 'ct', a.ct + 1) "
         "WHEN a.ct > 0 THEN "
-        "named_struct('ks', flatten(array(a.ks, array(a.pv))), "
-        "'cs', flatten(array(a.cs, array(a.ct))), "
-        "'pv', e, 'ct', CAST(1 AS BIGINT)) "
+        f"named_struct('ks', {ks}, 'cs', {cs}, 'pv', e, 'ct', CAST(1 AS BIGINT)) "
         "ELSE named_struct('ks', a.ks, 'cs', a.cs, 'pv', e, "
         "'ct', CAST(1 AS BIGINT)) END"
     )
-    fin = (
-        "a -> map_from_arrays(flatten(array(a.ks, array(a.pv))), "
-        "flatten(array(a.cs, array(a.ct))))"
-    )
+    fin = f"a -> map_from_arrays({ks}, {cs})"
     return (
         f"(CASE WHEN size({L}) = 0 THEN NULL "
         f"ELSE aggregate({L}, {acc0}, {step}, {fin}) END)"
     )
+
+
+def _collect_list(x: str) -> str:
+    """``collect_list((x))``, read as DuckDB's ``list``: an in-call
+    ``ORDER BY`` sorts the list."""
+    return _macro_array_agg_ordered([f"({x})"]) or f"collect_list(({x}))"
 
 
 def _macro_histogram(args):
@@ -1384,7 +1340,7 @@ def _macro_entropy(args):
     if a is None:
         return None
     hist = _histogram_sql(a)
-    n = f"size(collect_list(({a})))"
+    n = f"size({_collect_list(a)})"
     return (
         f"(CASE WHEN {n} = 0 THEN 0.0d ELSE "
         f"aggregate(map_values({hist}), CAST(0 AS DOUBLE), "
@@ -1500,8 +1456,7 @@ def _inline_regex_flags(p: str, flags: set) -> str | None:
 def _macro_regexp_replace_flags(args: list[str]) -> str | None:
     # DuckDB: 3-arg replaces FIRST match only; 'g' flag = global; other
     # flags inline into a literal pattern.  Spark's native 4-arg
-    # position form (numeric 4th arg) passes through untouched — it is
-    # also what the first-only splice emits, ending the fixpoint.
+    # position form (numeric 4th arg) passes through untouched.
     if len(args) == 3:
         s, p, r = (a.strip() for a in args)
         return _replace_first_emit(s, p, r)
@@ -1670,9 +1625,8 @@ def _ordered_first_last(fn: str):
 def _macro_flatten(args: list[str]) -> str | None:
     # DuckDB's flatten DROPS NULL sub-lists (probed r10: flatten([NULL])
     # = [], flatten([[1], NULL]) = [1]); Spark returns NULL whenever any
-    # element is NULL.  The guard stops fixpoint reentry on our own
-    # emission (and on other macros' internal flatten(array(..)) forms,
-    # whose elements are non-NULL by construction the filter is a no-op).
+    # element is NULL.  An argument already in the emitted shape is left
+    # as is, so the rewrite of its own output is a no-op.
     if len(args) != 1:
         return None
     a = args[0].strip()
@@ -1738,10 +1692,9 @@ def _macro_array_to_string(args) -> str | None:
 def _macro_list_distinct(args) -> str | None:
     """DuckDB ``list_distinct`` DROPS NULL elements (probed:
     ``list_distinct([9, 2, NULL])`` → [2, 9]); Spark ``array_distinct``
-    keeps one NULL (fuzz r8 seed 1045).  ``array_union(f, f)`` is the
-    token-free dedup — emitting ``array_distinct`` would re-trigger this
-    macro every fixpoint pass until the cap (trap 27).  A literal NULL
-    argument fails filter() analysis, so it short-circuits."""
+    keeps one NULL (fuzz r8 seed 1045).  ``array_union(f, f)`` dedups
+    the NULL-free list.  A literal NULL argument fails filter()
+    analysis, so it short-circuits."""
     if len(args) != 1:
         return None
     l = args[0].strip()
@@ -1785,7 +1738,7 @@ def _macro_list_concat(args) -> str | None:
         return "NULL"  # untyped: flatten(array(NULL, NULL)) fails analysis
     return (
         f"(CASE WHEN ({a}) IS NULL THEN ({b}) WHEN ({b}) IS NULL THEN ({a}) "
-        f"ELSE flatten(array(({a}), ({b}))) END)"
+        f"ELSE {_macro_flatten([f'array(({a}), ({b}))'])} END)"
     )
 
 
@@ -1965,6 +1918,8 @@ _FN_MACROS_AGG_ORDER = {
 
 _FN_MACROS_REGEX_JSON = {
     "quantile_disc": _macro_quantile_disc,
+    "skewness": _macro_skewness,
+    "kurtosis": _macro_kurtosis,
     "struct_extract": _macro_struct_extract,
     "json_extract": _macro_json_extract,
     "json_extract_string": _macro_json_extract,
@@ -2004,39 +1959,9 @@ _FN_MACROS = _merge_macro_tables(
     _FN_MACROS_BASE, _FN_MACROS_AGG_ORDER, _FN_MACROS_REGEX_JSON
 )
 
-_MACRO_CALL = re.compile(
-    r"\b(" + "|".join(_FN_MACROS) + r")\s*\(", re.IGNORECASE
-)
-
-
 
 def _rewrite_fn_macros(sql: str) -> str:
-    """Expand DuckDB list/array macros into Spark expressions.  Iterates
-    because an expansion may contain another macro's argument text; each
-    pass re-lexes.  Unrewritable forms (wrong arity, non-literal slice
-    bounds) are left untouched so Spark's error names the construct."""
-    for _ in range(64):  # one macro spliced per pass; cap is a safety net
-        mask = _code_mask(sql)
-        changed = False
-        for m in reversed(list(_MACRO_CALL.finditer(sql))):
-            s, e = m.start(1), m.end(1)
-            if not all(mask[s:e]):
-                continue
-            prev = sql[s - 1] if s > 0 else ""
-            if prev in ".@:":
-                continue
-            parsed = _split_call_args(sql, m.end() - 1)
-            if parsed is None:
-                continue
-            args, close = parsed
-            out = _FN_MACROS[m.group(1).lower()](args)
-            if out is None:
-                continue
-            sql = sql[:s] + out + sql[close + 1 :]
-            changed = True
-            break  # offsets shifted; re-lex
-        if not changed:
-            return sql
-    return sql
-
-
+    """Expand DuckDB list/array macros into Spark expressions.
+    Unrewritable forms (wrong arity, non-literal slice bounds) are left
+    untouched so Spark's error names the construct."""
+    return _rewrite_calls(sql, _FN_MACROS)

@@ -1,6 +1,6 @@
 """Dialect shim: operator & literal pack + numeric typing passes
-(// and div dispatch, int-cast rounding, ducktype numerics) — split
-out of dialect.py in r9."""
+(// and div dispatch, int-cast rounding, ducktype numerics); see
+dialect.py for the pass pipeline."""
 
 from __future__ import annotations
 
@@ -20,13 +20,11 @@ from parquet_query_spark.workbench.dialect_core import (
     _lex,
     _map_tokens,
     _match,
+    _rewrite_calls,
     _series_body,
     _split_call_args,
     _split_top,
     _top_colons,
-)
-from parquet_query_spark.workbench.dialect_macros import (
-    _rewrite_sample_moments,
 )
 
 
@@ -838,38 +836,28 @@ def _rewrite_brace_literals(sql: str) -> str:
     return walk(0, len(sql))
 
 
-_SERIES_TVF = re.compile(
-    r"\b(?:FROM|JOIN)\s+(generate_series|range|unnest)\s*\(", re.IGNORECASE
-)
+_FROM_TAIL = re.compile(r"\b(?:FROM|JOIN)\s+\Z", re.IGNORECASE)
+
+
+def _series_table(fn: str):
+    def handler(args) -> str | None:
+        if not _FROM_TAIL.search(args.before):
+            return None
+        body = _series_body(fn, [a.strip() for a in args])
+        return None if body is None else f"(SELECT explode({body}) AS `{fn}`)"
+
+    return handler
+
+
+_SERIES_TABLES = {fn: _series_table(fn) for fn in ("generate_series", "range", "unnest")}
+
+
 def _rewrite_series_tvf(sql: str) -> str:
     """FROM-position ``generate_series``/``range`` table functions →
     exploded ``sequence`` subqueries keeping DuckDB's column name and
     bound/empty/error behavior.  Trailing aliases (``t(x)``) survive as
     subquery aliases."""
-    while True:
-        mask = _code_mask(sql)
-        m = next(
-            (
-                c
-                for c in _SERIES_TVF.finditer(sql)
-                if all(mask[i] for i in range(c.start(), c.end()))
-            ),
-            None,
-        )
-        if m is None:
-            return sql
-        open_paren = sql.index("(", m.start(1))
-        parsed = _split_call_args(sql, open_paren)
-        if parsed is None:
-            return sql
-        args, close = parsed
-        fn = m.group(1).lower()
-        body = _series_body(fn, [a.strip() for a in args])
-        if body is None:
-            return sql
-        rep = f"(SELECT explode({body}) AS `{fn}`)"
-        sql = sql[: m.start(1)] + rep + sql[close + 1 :]
-    return sql
+    return _rewrite_calls(sql, _SERIES_TABLES)
 
 
 _DOT_CALL = re.compile(r"\.\s*([A-Za-z_]\w*)\s*\(")
@@ -1157,9 +1145,6 @@ def _full_right_operand(sql: str, pos: int) -> int | None:
             return rend
 
 
-_CONCAT_CALL = re.compile(r"(?<![\w$])concat\s*\(", re.IGNORECASE)
-
-
 def _rewrite_concat_skip_nulls(sql: str) -> str:
     """DuckDB ``concat`` SKIPS NULL arguments (probed: ``concat('a',
     NULL)`` → 'a', ``concat(NULL, NULL)`` → '') and stringifies every
@@ -1169,20 +1154,10 @@ def _rewrite_concat_skip_nulls(sql: str) -> str:
     empty separator.  (``||`` is NULL-propagating in both engines and is
     left alone; DuckDB's list-argument stringification is a documented
     residual — Spark joins array elements instead.)"""
-    out = sql
-    while True:
-        mask = _code_mask(out)
-        m = next(
-            (
-                c
-                for c in _CONCAT_CALL.finditer(out)
-                if all(mask[i] for i in range(c.start(), c.end()))
-            ),
-            None,
-        )
-        if m is None:
-            return out
-        out = out[: m.start()] + "concat_ws('', " + out[m.end() :]
+    return _rewrite_calls(sql, _CONCAT_CALLS)
+
+
+_CONCAT_CALLS = {"concat": lambda args: "concat_ws('', " + ",".join(args) + ")"}
 
 
 _PIPE_CONCAT = re.compile(r"\|\|")
@@ -1453,10 +1428,6 @@ def _leaf_int_cond(text: str) -> str:
 # CAST.  The cast is OUTSIDE the call: round/ceil/floor on decimals stay
 # exact (half-up at decimal precision) and only the representation
 # converts, so trap-14 binary-rounding divergences can't be introduced.
-_DUCKTYPE_FN = re.compile(
-    r"(?<![\w$.])(?P<fn>round|ceil|ceiling|floor|sign)\s*\(", re.IGNORECASE
-)
-_DUCKTYPE_CAST = {"sign": "INT"}  # everything else casts to DOUBLE
 
 
 def _duckdb_round(x: str, d: str) -> str:
@@ -1468,13 +1439,15 @@ def _duckdb_round(x: str, d: str) -> str:
     multiply-floor formula computed in double like DuckDB does; DECIMAL
     inputs keep Spark's exact decimal rounding (identical to DuckDB's
     decimal path).  Guard: once ``|x·10^d| ≥ 2^53`` the formula (and
-    DuckDB) is the identity, and floor's BIGINT range must not overflow."""
+    DuckDB) is the identity, and floor's BIGINT range must not overflow.
+    Each emitted ``floor`` and ``round`` carries the DOUBLE cast this pass
+    gives every such call."""
     p = f"power(10, {d})"
     half = (
         f"(CASE WHEN isnan({x}) OR abs(({x}) * {p}) >= 9.007199254740992e15 "
         f"THEN CAST({x} AS DOUBLE) "
-        f"WHEN ({x}) < 0 THEN -floor((-({x})) * {p} + 0.5d) / {p} "
-        f"ELSE floor(({x}) * {p} + 0.5d) / {p} END)"
+        f"WHEN ({x}) < 0 THEN -CAST(floor((-({x})) * {p} + 0.5d) AS DOUBLE) / {p} "
+        f"ELSE CAST(floor(({x}) * {p} + 0.5d) AS DOUBLE) / {p} END)"
     )
     return (
         f"(CASE WHEN typeof({x}) IN ('double','float') THEN {half} "
@@ -1482,49 +1455,27 @@ def _duckdb_round(x: str, d: str) -> str:
     )
 
 
+def _ducktype_cast(target: str):
+    return lambda args: f"CAST({args.call} AS {target})"
+
+
+def _ducktype_round(args) -> str:
+    if len(args) not in (1, 2):
+        return f"CAST({args.call} AS DOUBLE)"
+    return _duckdb_round(args[0].strip(), args[1].strip() if len(args) == 2 else "0")
+
+
+_DUCKTYPE_CALLS = {
+    "round": _ducktype_round,
+    "ceil": _ducktype_cast("DOUBLE"),
+    "ceiling": _ducktype_cast("DOUBLE"),
+    "floor": _ducktype_cast("DOUBLE"),
+    "sign": _ducktype_cast("INT"),
+}
+
+
 def _rewrite_ducktype_numerics(sql: str) -> str:
-    if not _DUCKTYPE_FN.search(sql):
-        return sql
-    for _ in range(200):  # one wrap per pass; cap is a safety net
-        mask = _code_mask(sql)
-        changed = False
-        for m in reversed(list(_DUCKTYPE_FN.finditer(sql))):
-            if not all(mask[m.start() : m.end()]):
-                continue
-            close = _match(sql, m.end() - 1)
-            if close is None:
-                continue
-            target = _DUCKTYPE_CAST.get(m.group("fn").lower(), "DOUBLE")
-            # already wrapped (by this pass or the user) → skip
-            before = sql[: m.start()].rstrip()
-            after = sql[close + 1 :].lstrip()
-            if before.upper().endswith("CAST(") and re.match(
-                rf"AS\s+{target}\s*\)", after, re.IGNORECASE
-            ):
-                continue
-            if m.group("fn").lower() == "round":
-                parsed = _split_call_args(sql, m.end() - 1)
-                if parsed is not None and len(parsed[0]) in (1, 2):
-                    args, _ = parsed
-                    rep = _duckdb_round(
-                        args[0].strip(),
-                        args[1].strip() if len(args) == 2 else "0",
-                    )
-                    sql = sql[: m.start()] + rep + sql[close + 1 :]
-                    changed = True
-                    break
-            sql = (
-                sql[: m.start()]
-                + "CAST("
-                + sql[m.start() : close + 1]
-                + f" AS {target})"
-                + sql[close + 1 :]
-            )
-            changed = True
-            break  # offsets shifted; re-lex
-        if not changed:
-            return sql
-    return sql
+    return _rewrite_calls(sql, _DUCKTYPE_CALLS)
 
 
 def _flatten_leading_mul_groups(sql: str) -> str:
@@ -2002,7 +1953,7 @@ def _rewrite_ops_pack(sql: str) -> str:
                 _rewrite_caret_at(
                     _rewrite_intdiv(
                         _rewrite_json_arrows(
-                            _rewrite_sample_moments(_rewrite_bare_varchar(sql))
+                            _rewrite_bare_varchar(sql)
                         )
                     )
                 )

@@ -5,8 +5,8 @@ where macros are session catalog objects.  Here they live on the Engine
 instance; calls are expanded textually (lexer-aware, identifier-boundary-
 aware) before the dialect shim runs.  DuckDB performs parameter
 substitution on the parsed AST and rejects recursive macros at creation
-time, so a bounded textual fixpoint reproduces the semantics for the
-scope accepted here: positional parameters, ``name := default`` defaults
+time, so textual expansion reproduces the semantics for the scope
+accepted here: positional parameters, ``name := default`` defaults
 (overridable by name only), and ``AS TABLE`` table macros in FROM
 position.
 
@@ -29,6 +29,7 @@ from parquet_query_spark.workbench.dialect_core import (
     _code_mask,
     _enclosing,
     _match,
+    _rewrite_calls,
     _split_call_args,
 )
 
@@ -121,7 +122,7 @@ def register_macro(macros: dict[str, Macro], sql: str) -> Macro:
     if key in macros and not getattr(mac, "_or_replace", False):
         raise ValueError(f"Macro with name {mac.name} already exists")
     # DuckDB rejects recursive macros at creation ("does not exist"); the
-    # same check here keeps the expansion fixpoint finite.
+    # same check here keeps the expansion finite.
     body_mask = _code_mask(mac.body)
     for tok in _IDENT_TOKEN.finditer(mac.body):
         if tok.group(0).lower() == key and all(
@@ -291,35 +292,20 @@ def _substitute(mac: Macro, raw_args: list[str]) -> str:
 
 
 def expand_macros(sql: str, macros: dict[str, Macro]) -> str:
-    """Expand every registered macro call in ``sql`` (bounded fixpoint —
-    creation rejects recursion, so this terminates on any input that
-    doesn't re-introduce calls faster than the cap)."""
-    if not macros:
-        return sql
-    pattern = re.compile(
-        r"\b(" + "|".join(re.escape(n) for n in macros) + r")\s*\(",
-        re.IGNORECASE,
-    )
-    for _ in range(_MAX_EXPANSIONS):
-        mask = _code_mask(sql)
-        hit = None
-        for m in pattern.finditer(sql):
-            if not all(mask[i] for i in range(m.start(), m.end())):
-                continue
-            j = m.start() - 1
-            while j >= 0 and sql[j].isspace():
-                j -= 1
-            if j >= 0 and sql[j] == ".":
-                continue
-            hit = m
-            break
-        if hit is None:
-            return sql
-        parsed = _split_call_args(sql, hit.end() - 1)
-        if parsed is None:
-            return sql
-        args, close = parsed
-        mac = macros[hit.group(1).lower()]
-        sub = _substitute(mac, args)
-        sql = sql[: hit.start(1)] + sub + sql[close + 1 :]
-    raise ValueError("macro expansion did not terminate (depth cap hit)")
+    """Expand every registered macro call in ``sql``.  A call's expansion
+    is DuckDB text, so it is expanded in turn; creation rejects direct
+    recursion, and a cycle through ``CREATE OR REPLACE`` ends at the
+    depth cap."""
+
+    def expand(text: str, depth: int) -> str:
+        if depth == _MAX_EXPANSIONS:
+            raise ValueError("macro expansion did not terminate (depth cap hit)")
+        return _rewrite_calls(
+            text,
+            {
+                key: lambda args, mac=mac: expand(_substitute(mac, args), depth + 1)
+                for key, mac in macros.items()
+            },
+        )
+
+    return expand(sql, 0) if macros else sql

@@ -134,6 +134,36 @@ def test_retry_loop_raises_primary_error_without_hint():
     assert len(tried) == 1
 
 
+def test_retries_log_no_errors(engine):
+    """PySpark logs each AnalysisException it converts as an ERROR with
+    the JVM stack.  A statement that answers after two hints logged two;
+    the retry loop now drops the records of its own expected failures,
+    and an analysis outside the loop still logs."""
+    import logging
+
+    from pyspark.errors import AnalysisException
+    from pyspark.logger import PySparkLogger
+
+    records = []
+
+    class Collect(logging.Handler):
+        def emit(self, record):
+            records.append(record)
+
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    handler = Collect()
+    logger.addHandler(handler)
+    try:
+        q = "SELECT s[1] AS c, len(l) AS n FROM (VALUES ('abc', [1, 2])) t(s, l)"
+        assert [tuple(r) for r in engine.sql(q).collect()] == [("a", 2)]
+        assert records == []
+        with pytest.raises(AnalysisException):
+            engine.spark.sql("SELECT no_such_column")
+        assert len(records) == 1
+    finally:
+        logger.removeHandler(handler)
+
+
 def test_qualify_preserves_order_by_and_limit():
     out = rewrite_duckdb_dialect(
         "SELECT k, v FROM t QUALIFY rank() OVER (ORDER BY v) <= 2 ORDER BY k LIMIT 5"
@@ -209,18 +239,22 @@ def test_fuzz_pinned_r8_wave13_match_duckdb(engine):
         "SELECT regexp_replace('aaa', 'a+', 'X') AS c0",
     ]
     for q in battery:
-        got = [tuple(r) for r in engine.sql(q).collect()]
-        want = con.execute(q).fetchall()
-        assert len(got) == len(want), q
-        for gr, wr in zip(got, want):
-            for gv, wv in zip(gr, wr):
-                if gv is None or wv is None:
-                    assert gv is None and wv is None, (q, gv, wv)
-                elif isinstance(gv, (int, float)) and isinstance(wv, (int, float)):
-                    assert float(gv) == float(wv), (q, gv, wv)
-                else:
-                    assert str(gv) == str(wv), (q, gv, wv)
+        _assert_duckdb_rows(engine, con, q)
     con.close()
+
+
+def _assert_duckdb_rows(engine, con, q):
+    got = [tuple(r) for r in engine.sql(q).collect()]
+    want = con.execute(q).fetchall()
+    assert len(got) == len(want), q
+    for gr, wr in zip(got, want):
+        for gv, wv in zip(gr, wr):
+            if gv is None or wv is None:
+                assert gv is None and wv is None, (q, gv, wv)
+            elif isinstance(gv, (int, float)) and isinstance(wv, (int, float)):
+                assert float(gv) == float(wv), (q, gv, wv)
+            else:
+                assert str(gv) == str(wv), (q, gv, wv)
 
 
 def test_plain_sql_unchanged():
@@ -2116,13 +2150,13 @@ def test_create_view_maps_to_temporary_view():
 
 def test_flatten_drops_null_sublists():
     """DuckDB flatten drops NULL sub-lists (probed r10); Spark's returns
-    NULL on any NULL element, so the macro filters first — with a reentry
-    guard for the fixpoint loop."""
+    NULL on any NULL element, so the macro filters first, and leaves an
+    argument already in that shape alone."""
     out = rewrite_duckdb_dialect("SELECT flatten(ll) FROM t")
     assert out == (
         "SELECT flatten(filter((ll), __fl -> __fl IS NOT NULL)) FROM t"
     )
-    # fixpoint-stable: rewriting the output again is a no-op
+    # rewriting the output again is a no-op
     assert rewrite_duckdb_dialect(out) == out
 
 
@@ -2275,3 +2309,88 @@ def test_backtick_quote_keeps_path_literal(engine):
         r = engine.run(f"SELECT 1 AS {alias} FROM 'region.parquet'")
         assert r.columns == [alias.strip("`")]
         assert r.rows == [["1"]] * 5
+
+
+# ── the call-site walker (dialect_core._rewrite_calls) ──────────────────
+
+
+def test_nested_datetime_formats_match_duckdb(engine):
+    """An inner strftime/strptime is rewritten before the call around it
+    splits its arguments.  A pass that split the original text and
+    spliced into the rewritten one left ``…'dd/MM')/%m')``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for q in (
+        "SELECT strftime(CAST(strftime(DATE '2024-01-02', '%Y-%m-%d') AS DATE), '%d/%m') AS s",
+        "SELECT strptime(strptime('2024', '%Y')::VARCHAR, '%Y-%m-%d %H:%M:%S') AS t",
+    ):
+        _assert_duckdb_rows(engine, con, q)
+    con.close()
+
+
+def test_every_macro_call_expands(engine):
+    """65 macro calls in one statement all expand: a 64-splice cap left
+    the leftmost ``log(100)`` as Spark's natural log (4.605, DuckDB's
+    log10 is 2).  ``avg(DISTINCT x)`` re-expanded its own output until
+    that cap and starved the ``log`` beside it the same way."""
+    isinf = ", ".join(f"isinf({i}.0) AS c{i}" for i in range(64))
+    assert engine.sql(f"SELECT log(100) AS l, {isinf}").collect()[0]["l"] == 2.0
+    row = engine.sql(
+        "SELECT log(100) AS l, avg(DISTINCT x) AS a FROM (VALUES (1), (2), (2)) t(x)"
+    ).collect()[0]
+    assert (row["l"], row["a"]) == (2.0, 1.5)
+
+
+def test_round_inside_a_double_cast_matches_duckdb(engine):
+    """The ducktype pass read a call already inside ``CAST(… AS DOUBLE)``
+    as its own emission and skipped it, so ``avg``'s argument cast hid
+    ``round`` from DuckDB's binary rounding: 1023.205 where DuckDB
+    answers 1023.2.  A user-written cast hid it the same way."""
+    import duckdb
+
+    con = duckdb.connect()
+    for q in (
+        "SELECT avg(round(x, 2)) AS a FROM (VALUES (2045.395::DOUBLE), (1.005::DOUBLE)) t(x)",
+        "SELECT CAST(round(x, 2) AS DOUBLE) AS a FROM (VALUES (1.005::DOUBLE)) t(x)",
+        "SELECT CAST(round(2.5, 1) AS DOUBLE)::INT AS a",
+        "SELECT avg(floor(x)) AS a FROM (VALUES (1.5), (2.5)) t(x)",
+    ):
+        _assert_duckdb_rows(engine, con, q)
+    con.close()
+
+
+def test_macro_expansions_need_no_second_walk():
+    """A handler's output is never walked again, so a macro whose
+    expansion uses another macro's DuckDB reading (list_unique's
+    NULL-dropping distinct, list_concat's NULL-skipping flatten, ...)
+    calls that handler itself: walking an expansion once more changes
+    nothing.  The sample moments are the exception by design: their
+    correction wraps Spark's population function of the same name."""
+    from parquet_query_spark.workbench.dialect_macros import (
+        _FN_MACROS,
+        _rewrite_fn_macros,
+    )
+
+    shapes = ("a", "a, b", "a, b, c", "x ORDER BY y", "DISTINCT a", "NULL", "1.5, 2")
+    for name in _FN_MACROS.keys() - {"skewness", "kurtosis"}:
+        for shape in shapes:
+            once = _rewrite_fn_macros(f"SELECT {name}({shape})")
+            assert _rewrite_fn_macros(once) == once, (name, shape)
+
+
+def test_macros_that_call_macros_match_duckdb(engine):
+    """NULL inputs for the expansions that reuse another macro's reading,
+    and macros inside a lambda and a comprehension."""
+    import duckdb
+
+    con = duckdb.connect()
+    for q in (
+        "SELECT list_unique([1, 1, NULL]) AS u",
+        "SELECT parse_path('/a//b') AS p",
+        "SELECT list_concat([1, NULL], [2]) AS c",
+        "SELECT list_transform([1.0, 'inf'::DOUBLE], x -> isinf(x)) AS t",
+        "SELECT [isinf(x) FOR x IN [1.0, 'inf'::DOUBLE]] AS t",
+    ):
+        _assert_duckdb_rows(engine, con, q)
+    con.close()

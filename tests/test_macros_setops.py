@@ -60,6 +60,17 @@ def test_register_rejects_duplicate_and_recursion():
         register_macro(macros, "CREATE MACRO r(a) AS r(a - 1)")
 
 
+def test_expand_cycle_hits_the_depth_cap():
+    """Creation rejects only direct self-reference; a cycle built with
+    CREATE OR REPLACE ends at the expansion depth cap, not the stack."""
+    macros = {}
+    register_macro(macros, "CREATE MACRO a(x) AS x + 1")
+    register_macro(macros, "CREATE MACRO b(x) AS a(x) * 2")
+    register_macro(macros, "CREATE OR REPLACE MACRO a(x) AS b(x) - 1")
+    with pytest.raises(ValueError, match="did not terminate"):
+        expand_macros("SELECT a(1)", macros)
+
+
 def test_substitute_argument_errors_match_duckdb_wording():
     macros = {}
     register_macro(macros, "CREATE MACRO defarg(a, b := 5) AS a * b")
