@@ -100,6 +100,17 @@ right-to-left pass over the unqualified code call sites, each call's
 arguments split from the current text so inner calls are rewritten
 first, and a handler's output never walked again.
 
+Every pass that rewrites an infix or postfix operator (the dot-chain
+``.fn(args)``, the JSON arrows, ``^@``, ``^``/``**``, SIMILAR TO, ``~``,
+GLOB, list ``||`` chains, ``::<int>`` casts, and ``/``, ``%`` and the
+``//`` chain) is likewise a handler table for one walker,
+``dialect_core._rewrite_operators``: one forward parse that reads every
+operand by DuckDB's precedence (one table, ``dialect_core._BINARY``), so
+a window or FILTER tail, a ``CASE … END`` or a subquery is an operand
+for every pass alike.  Operands reach their handler already rewritten,
+a chain handler gets its whole same-level chain, and a handler's output
+is never walked again.
+
 - Text normalization pack (r8, mutation-fuzz driven): comments are
   STRIPPED once at the ``Engine.sql`` funnel (``strip_comments`` —
   string- and dollar-quote-aware), because the operand-matching passes
@@ -310,10 +321,12 @@ from parquet_query_spark.workbench.dialect_macros import (
 )
 from parquet_query_spark.workbench.dialect_typing import (
     _rewrite_arrayish_pipe_concat,
+    _rewrite_bare_varchar,
     _rewrite_dollar_strings,
     _rewrite_literal_backslashes,
     _rewrite_numeric_underscores,
     _rewrite_int_casts,
+    _rewrite_intdiv,
     _rewrite_brace_literals,
     _rewrite_dot_chain,
     _rewrite_concat_skip_nulls,
@@ -321,7 +334,9 @@ from parquet_query_spark.workbench.dialect_typing import (
     _rewrite_divmod_null,
     _rewrite_window_filter,
     _rewrite_count_distinct_window,
-    _rewrite_ops_pack,
+    _rewrite_operator_pack,
+    _rewrite_order_by_nulls,
+    _rewrite_series_tvf,
 )
 
 # The pass pipeline, in application order.  Ordering constraints that
@@ -329,14 +344,15 @@ from parquet_query_spark.workbench.dialect_typing import (
 # underscores run first, so every later pass sees Spark's spelling of
 # strings and numbers; brace literals before brackets (MAP {..}['k']
 # needs the call form); dot-chain before brackets (subscripts glue to
-# their chained base); brackets before the ops pack (subscript groups
-# must already be calls when operands are captured); fn_macros before
-# function_names (a macro's arity guard must see the DuckDB spelling);
-# the numeric typing passes (ducktype → concat-skip-nulls → arrayish-||
-# → int-casts → divmod) run last so they see every emitted shape.  The
-# read-function, macro, rename, datetime-format, ducktype and concat
-# passes (and the ops pack's series step) are each one `_rewrite_calls`
-# walk over a handler table.
+# their chained base); brackets before the operator pack (a subscript is
+# already a call when it is an operand); fn_macros before function_names
+# (a macro's arity guard must see the DuckDB spelling); the numeric typing
+# passes (ducktype → concat-skip-nulls → arrayish-|| → int-casts → divmod)
+# run last so they see every emitted shape.  The read-function, macro,
+# rename, datetime-format, ducktype, concat, window FILTER / DISTINCT and
+# CAST passes (and the series step) are each one `_rewrite_calls` walk
+# over a handler table; the dot-chain, operator-pack, arrayish-||, ``::``
+# and divmod passes are each one `_rewrite_operators` walk.
 _PASSES = (
     _rewrite_dollar_strings,
     _rewrite_literal_backslashes,
@@ -353,7 +369,11 @@ _PASSES = (
     _rewrite_dot_chain,
     _rewrite_array_type_suffix,
     _rewrite_brackets,
-    _rewrite_ops_pack,
+    _rewrite_bare_varchar,
+    _rewrite_intdiv,
+    _rewrite_operator_pack,
+    _rewrite_series_tvf,
+    _rewrite_order_by_nulls,
     _rewrite_fn_macros,
     _rewrite_function_names,
     _rewrite_using_sample,

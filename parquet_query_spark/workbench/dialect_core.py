@@ -220,10 +220,14 @@ def _qualified(sql: str, start: int) -> bool:
     return j >= 0 and sql[j] == "."
 
 
-def _rewrite_calls(sql: str, table: Mapping[str, Callable[[_Args], str | None]]) -> str:
+def _rewrite_calls(
+    sql: str, table: Mapping[str, Callable[[_Args], str | tuple[str, int] | None]]
+) -> str:
     """One right-to-left pass over the unqualified code call sites of the
     names in ``table``.  Each call's arguments are split from the current
-    text, so a call sees the calls inside it already rewritten."""
+    text, so a call sees the calls inside it already rewritten.  A handler
+    that also takes a tail after the call (an ``OVER`` clause) returns
+    ``(text, end)``, which replaces ``sql[start:end]``."""
     code = _code_mask_of(sql)
     sites = [
         m
@@ -237,8 +241,351 @@ def _rewrite_calls(sql: str, table: Mapping[str, Callable[[_Args], str | None]])
         args, close = parsed
         out = table[m.group(1).lower()](_Args(args, sql, m.start(), close, m.group(1)))
         if out is not None:
-            sql = sql[: m.start()] + out + sql[close + 1 :]
+            out, end = out if isinstance(out, tuple) else (out, close + 1)
+            sql = sql[: m.start()] + out + sql[end:]
     return sql
+
+
+# ── the operator walker ──────────────────────────────────────────────────
+#
+# Every pass that rewrites an infix or postfix operator is a table for
+# `_rewrite_operators`: operator -> handler.  One forward parse over the
+# code tokens reads every expression by DuckDB's precedence, so each pass
+# sees the same operands.  An operand is a literal, identifier, call,
+# ``(…)`` group or subquery, or ``CASE … END``, with its unary sign, its
+# ``[…]``, ``.field`` and ``::type`` postfixes and its ``OVER`` /
+# ``FILTER`` / ``WITHIN GROUP`` tails, together with every neighbour that
+# binds tighter than the operator at hand.  The walk is leftmost-first and
+# innermost-first: a handler gets its operands already rewritten by the
+# same table, and its output is never walked again.
+
+# DuckDB 1.0.0's binary operators, loosest first (each order probed).
+# ``->``, the lambda and JSON arrow, takes everything tighter on its right
+# except a following ``->>``: ``j -> 'a' || 'y'`` reads key 'ay', but
+# ``j -> 'a' ->> 'b'`` is ``(j -> 'a') ->> 'b'``.  Then GLOB / SIMILAR TO;
+# the generic operators, one left-associative level (``'a' ~ 'a' || 'b'``
+# is 'trueb', ``'ab' || 'c' GLOB 'ab*'`` is true); ``+ -`` (``'a' || 1 + 2``
+# is 'a3'); the multiplicative operators; ``^ **``, left-associative
+# (``2 ^ 3 ** 2`` is 64).  A unary sign binds tighter still (``-x ^ 2`` is
+# 9 for x = 3), and the postfixes tightest.  Comparisons, LIKE, IS, IN,
+# BETWEEN, AND, OR and NOT are looser than all of these: they end an
+# operand.
+_BINARY = {
+    "->": 0,
+    **dict.fromkeys(("glob", "not glob", "similar to", "not similar to"), 1),
+    **dict.fromkeys(("||", "~", "!~", "^@", "->>", "&", "|", "<<", ">>"), 2),
+    "+": 3,
+    "-": 3,
+    **dict.fromkeys(("*", "/", "%", "//", "div"), 4),
+    "^": 5,
+    "**": 5,
+}
+
+# Words that end an operand; the first group never names a call, even
+# before ``(``.
+_NOT_CALLS = frozenset(
+    "select from where having qualify window union intersect except all "
+    "distinct as on by using join and or not in is like ilike between when "
+    "then else end over within values with lateral".split()
+)
+_NOT_OPERANDS = _NOT_CALLS | frozenset(
+    "group order limit offset asc desc nulls partition preceding following "
+    "unbounded escape for if cross inner outer full natural anti semi asof "
+    "positional returning recursive similar glob collate tablesample "
+    "repeatable into".split()
+)
+
+
+class _Tok(NamedTuple):
+    kind: str  # "word", "quoted" (identifier), "lit" or "op"
+    start: int
+    end: int
+    key: str  # a word lowercased, an operator as written
+
+
+_OP_TOKEN = re.compile(
+    r"(?P<lit>(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?\w*|\$\w+|\?)"
+    r"|(?P<word>[^\W\d][\w$]*)"
+    r"|(?P<op>->>|->|\|\||\^@|!?~~?\*?|\*\*|//|::|:=|=>|<=|>=|<>|!=|==|<<|>>|[^\s\w])"
+)
+
+
+@functools.lru_cache(maxsize=256)
+def _tokens(sql: str) -> tuple[tuple[_Tok, ...], Mapping[int, int]]:
+    """The tokens of ``sql`` (strings and quoted identifiers whole, comments
+    dropped), and the token pairs: each matched opener to its closer and
+    each ``CASE`` to its ``END``."""
+    toks: list[_Tok] = []
+    for kind, s, e in _lex(sql):
+        if kind == CODE:
+            for m in _OP_TOKEN.finditer(sql, s, e):
+                word = m.lastgroup == "word"
+                toks.append(_Tok(m.lastgroup, m.start(), m.end(), m.group().lower() if word else m.group()))
+        elif kind != COMMENT:
+            toks.append(_Tok("quoted" if kind in (QUOTED, BACKTICK) else "lit", s, e, ""))
+    at = {t.start: i for i, t in enumerate(toks) if t.kind == "op"}
+    match = _brackets(sql).match
+    pairs: dict[int, int] = {}
+    cases: list[list[int]] = [[]]
+    for i, t in enumerate(toks):
+        if t.key in ("(", "[", "{"):
+            cases.append([])
+            if match.get(t.start, -1) > t.start:
+                pairs[i] = at[match[t.start]]
+        elif t.key in (")", "]", "}"):
+            if len(cases) > 1:
+                cases.pop()
+        elif i and toks[i - 1].key == ".":
+            continue  # a field named case or end
+        elif t.key == "case":
+            cases[-1].append(i)
+        elif t.key == "end" and cases[-1]:
+            pairs[cases[-1].pop()] = i
+    return tuple(toks), MappingProxyType(pairs)
+
+
+class _Site(NamedTuple):
+    """One operator occurrence, as its handler gets it: ``operands`` are the
+    rewritten operand texts and ``ops`` the operators between them (one for
+    a binary operator, all of them for a chain, the postfix itself for a
+    postfix entry).  ``sql[start:end]`` is the occurrence in the walked
+    text.  A postfix entry also gets ``name`` (the cast's type, the chained
+    function's name) and ``args`` (the chained call's arguments)."""
+
+    operands: list[str]
+    ops: list[str]
+    sql: str
+    start: int
+    end: int
+    name: str = ""
+    args: list[str] = []
+
+
+class _Chain(NamedTuple):
+    """A table entry that takes the whole same-level chain over ``ops``
+    (its own operator among them) in one call, when its own operator is in
+    the chain."""
+
+    ops: frozenset
+    fn: Callable[[_Site], str | None]
+
+
+class _Piece(NamedTuple):
+    start: int
+    end: int
+    text: str  # sql[start:end] rewritten
+    op: str | None = None  # the loosest operator, None for an operand
+
+
+class _OperatorWalk:
+    def __init__(self, sql: str, table: Mapping):
+        self.sql, self.table = sql, table
+        self.toks, self.pairs = _tokens(sql)
+        self.chains = {
+            op: (key, entry)
+            for key, entry in table.items()
+            if isinstance(entry, _Chain)
+            for op in entry.ops
+        }
+
+    def join(self, pieces: list[_Piece], op: str | None = None) -> _Piece:
+        first, last = pieces[0], pieces[-1]
+        text = [first.text]
+        for a, b in zip(pieces, pieces[1:]):
+            text += (self.sql[a.end : b.start], b.text)
+        return _Piece(first.start, last.end, "".join(text), op)
+
+    def replace(self, pieces: list[_Piece], out: str | None, op: str | None = None) -> _Piece:
+        if out is None:
+            return self.join(pieces, op)
+        return _Piece(pieces[0].start, pieces[-1].end, out, op)
+
+    def region(self, i: int, j: int, start: int, end: int) -> str:
+        """``sql[start:end]`` rewritten, its tokens being ``toks[i:j]``: a
+        run of expressions and the words and signs between them."""
+        out, pos = [], start
+        while i < j:
+            k, piece = self.expr(i, j, 0)
+            if piece is None:
+                i += 1
+                continue
+            out += (self.sql[pos : piece.start], piece.text)
+            pos, i = piece.end, k
+        out.append(self.sql[pos:end])
+        return "".join(out)
+
+    def enclosed(self, i: int, e: int) -> _Piece:
+        """Tokens ``i..e`` (a bracket pair, or CASE and its END) with what
+        lies between them rewritten."""
+        t, c = self.toks[i], self.toks[e]
+        inner = self.region(i + 1, e, t.end, c.start)
+        return _Piece(t.start, c.end, self.sql[t.start : t.end] + inner + self.sql[c.start : c.end])
+
+    def binary(self, k: int, j: int, arrow: bool) -> tuple[str, int] | None:
+        """The binary operator at token ``k`` and the token after it."""
+        if k >= j:
+            return None
+        t = self.toks[k]
+        if t.kind == "op":
+            return (t.key, k + 1) if t.key in _BINARY and not (arrow and t.key == "->>") else None
+        words = [u.key for u in self.toks[k : min(k + 3, j)]]
+        for n in (1, 2, 3):
+            key = " ".join(words[:n])
+            if key in _BINARY and (n > 1 or key in ("glob", "div")):
+                return key, k + n
+        return None
+
+    def expr(self, i: int, j: int, floor: int, arrow: bool = False) -> tuple[int, _Piece | None]:
+        """The expression at token ``i`` whose operators bind at ``floor``
+        or tighter (``arrow``: inside the right side of ``->``)."""
+        i, left = self.operand(i, j)
+        while left is not None:
+            found = self.binary(i, j, arrow)
+            if found is None or _BINARY[found[0]] < floor:
+                break
+            key, after = found
+            level = _BINARY[key]
+            arrow_right = arrow or key == "->"
+            k, right = self.expr(after, j, level + 1, arrow_right)
+            if right is None:
+                break
+            if key not in self.chains:
+                fn = self.table.get(key)
+                site = _Site([left.text, right.text], [key], self.sql, left.start, right.end)
+                left, i = self.replace([left, right], fn(site) if fn else None, key), k
+                continue
+            own, entry = self.chains[key]
+            pieces, ops = [left, right], [key]
+            while (found := self.binary(k, j, arrow)) and found[0] in entry.ops:
+                k2, more = self.expr(found[1], j, level + 1, arrow_right)
+                if more is None:
+                    break
+                pieces.append(more)
+                ops.append(found[0])
+                k = k2
+            site = _Site([p.text for p in pieces], ops, self.sql, left.start, pieces[-1].end)
+            left, i = self.replace(pieces, entry.fn(site) if own in ops else None, key), k
+        return i, left
+
+    def operand(self, i: int, j: int) -> tuple[int, _Piece | None]:
+        if i >= j:
+            return i, None
+        t = self.toks[i]
+        if t.key in ("+", "-", "~"):
+            k, inner = self.operand(i + 1, j)
+            if inner is None:
+                return i, None
+            return k, _Piece(t.start, inner.end, self.sql[t.start : inner.start] + inner.text)
+        k, piece = self.primary(i, j)
+        return (i, None) if piece is None else self.postfix(k, j, piece)
+
+    def pair(self, i: int, j: int) -> int | None:
+        e = self.pairs.get(i)
+        return e if e is not None and e < j else None
+
+    def primary(self, i: int, j: int) -> tuple[int, _Piece | None]:
+        t = self.toks[i]
+        verbatim = _Piece(t.start, t.end, self.sql[t.start : t.end])
+        if t.kind == "lit":
+            return i + 1, verbatim
+        if t.key in ("(", "[", "{", "case"):
+            e = self.pair(i, j)
+            return (i, None) if e is None else (e + 1, self.enclosed(i, e))
+        if t.kind == "op":
+            return i, None
+        if i + 1 < j and self.toks[i + 1].key == "(" and t.key not in _NOT_CALLS:
+            e = self.pair(i + 1, j)
+            if e is not None:
+                return e + 1, self.join([verbatim, self.enclosed(i + 1, e)])
+        return (i, None) if t.key in _NOT_OPERANDS else (i + 1, verbatim)
+
+    def postfix(self, k: int, j: int, piece: _Piece) -> tuple[int, _Piece]:
+        toks, sql = self.toks, self.sql
+        while k < j:
+            key = toks[k].key
+            called = sql[piece.end - 1] == ")"
+            if key == "[" and (e := self.pair(k, j)) is not None:
+                piece, k = self.join([piece, self.enclosed(k, e)]), e + 1
+            elif key == "." and k + 1 < j and toks[k + 1].kind in ("word", "quoted"):
+                name = toks[k + 1]
+                e = self.pair(k + 2, j) if name.kind == "word" and k + 2 < j else None
+                if e is None or toks[k + 2].key != "(":
+                    piece = self.join([piece, _Piece(name.start, name.end, sql[name.start : name.end])])
+                    k += 2
+                    continue
+                group = self.enclosed(k + 2, e)
+                fn = self.table.get(".")
+                site = _Site(
+                    [piece.text], ["."], sql, piece.start, group.end,
+                    sql[name.start : name.end], _split_top(group.text[1:-1]),
+                )
+                piece, k = self.replace([piece, group], fn(site) if fn else None), e + 1
+            elif key == "::" and (e := self.type_end(k + 1, j)) is not None:
+                end = toks[e - 1].end
+                fn = self.table.get("::")
+                site = _Site([piece.text], ["::"], sql, piece.start, end, sql[toks[k + 1].start : end])
+                tail = _Piece(toks[k].start, end, sql[toks[k].start : end])
+                piece, k = self.replace([piece, tail], fn(site) if fn else None), e
+            elif called and key in ("over", "filter", "within"):
+                g = k + 1
+                if key == "within" and g < j and toks[g].key == "group":
+                    g += 1
+                e = self.pair(g, j) if g < j and toks[g].key == "(" else None
+                if e is not None:
+                    tail = self.enclosed(g, e)
+                elif key == "over" and g < j and toks[g].kind == "word" and toks[g].key not in _NOT_OPERANDS:
+                    e, tail = g, _Piece(toks[g].start, toks[g].end, sql[toks[g].start : toks[g].end])
+                else:
+                    break
+                piece, k = self.join([piece, tail]), e + 1
+            else:
+                break
+        return k, piece
+
+    def type_end(self, k: int, j: int) -> int | None:
+        """The token after the type name that starts at ``k``: a name, its
+        ``(…)`` parameters, its ``<…>`` element types, its ``[]`` suffixes."""
+        toks = self.toks
+        if k >= j or toks[k].kind not in ("word", "quoted"):
+            return None
+        k += 1
+        if k < j and toks[k].key == "(" and (e := self.pair(k, j)) is not None:
+            k = e + 1
+        if k < j and toks[k].key == "<" and toks[k - 1].key in ("array", "map", "struct"):
+            depth = 0
+            while k < j and (depth := depth + {"<": 1, ">": -1, ">>": -2}.get(toks[k].key, 0)) > 0:
+                k += 1
+            k += 1
+        while k < j and toks[k].key == "[" and (e := self.pair(k, j)) is not None:
+            k = e + 1
+        return min(k, j)
+
+
+def _in_code(pattern: re.Pattern, sql: str) -> bool:
+    """Some match of ``pattern`` starts in code: the cheap test a pass
+    makes before it walks."""
+    code = _code_mask_of(sql)
+    return any(code[m.start()] for m in pattern.finditer(sql))
+
+
+def _rewrite_operators(sql: str, table: Mapping[str, Callable[[_Site], str | None] | _Chain]) -> str:
+    """One walk over the operator sites of ``table``, keyed by operator
+    (``"^"``, ``"not similar to"``, ``"div"``; ``"::"`` and ``"."`` for the
+    cast and chained-call postfixes).  A handler returns the text that
+    replaces the whole occurrence, or None to leave it as written."""
+    walk = _OperatorWalk(sql, table)
+    return walk.region(0, len(walk.toks), 0, len(sql))
+
+
+def _root_operator(sql: str) -> str | None:
+    """The loosest operator of ``sql`` when it is one expression, looking
+    inside any parentheses around the whole of it; None for an operand."""
+    walk = _OperatorWalk(sql, {})
+    i, j = 0, len(walk.toks)
+    while j - i > 2 and walk.toks[i].key == "(" and walk.pairs.get(i) == j - 1:
+        i, j = i + 1, j - 1
+    k, piece = walk.expr(i, j, 0)
+    return piece.op if piece is not None and k == j else None
 
 
 def strip_comments(sql: str) -> str:
@@ -1206,7 +1553,8 @@ def _string_subscript_base(base: str) -> bool:
     fuzz r9 seed 4154 needed a string reading for a call base alongside
     an array reading for a column."""
     b = base.strip()
-    if _STRING_LITERAL_BASE.match(b):
+    if _STRING_LITERAL_BASE.match(b) or _root_operator(b) == "->>":
+        # ``->>`` always yields VARCHAR
         return True
     # A paren group HEADED by a string literal — ``('BUILDING' ||
     # 'xy')[2:2]`` (fuzz v6 seed 96787) — is statically string too: a

@@ -1,6 +1,8 @@
 """Dialect shim: operator & literal pack + numeric typing passes
-(// and div dispatch, int-cast rounding, ducktype numerics); see
-dialect.py for the pass pipeline."""
+(// and div dispatch, int-cast rounding, ducktype numerics).  Every
+operator rewrite here is a handler table for
+``dialect_core._rewrite_operators``; see dialect.py for the pass
+pipeline."""
 
 from __future__ import annotations
 
@@ -13,22 +15,27 @@ from parquet_query_spark.workbench.dialect_core import (
     COMMENT,
     DOLLAR,
     STRING,
+    _Chain,
+    _SQ_LITERAL,
     _brackets,
     _code_mask,
+    _code_mask_of,
     _enclosing,
+    _in_code,
     _keyword_matches,
     _lex,
     _map_tokens,
     _match,
     _rewrite_calls,
+    _rewrite_operators,
     _series_body,
-    _split_call_args,
     _split_top,
+    _tokens,
     _top_colons,
 )
 
 
-# ── operator & literal dialect pack (round 7) ────────────────────────────
+# ── operator & literal dialect pack ───────────────────────────────────────
 #
 # DuckDB operator spellings whose Spark readings are missing or — worse —
 # silently different:
@@ -47,7 +54,9 @@ from parquet_query_spark.workbench.dialect_core import (
 #     unary minus binds tighter still (-2^2 = 4).  DuckDB spells XOR as
 #     the ``xor()`` function, which passes through untouched.
 #   - ``a ^@ b`` → ``startswith(a, b)``.
-#   - ``x [NOT] SIMILAR TO p`` → anchored RLIKE (DuckDB: full-match regex).
+#   - ``x [NOT] SIMILAR TO p``, ``x ~ p``, ``x [NOT] GLOB p`` → anchored
+#     RLIKE (DuckDB: full-match patterns).
+#   - ``j -> 'k'`` / ``j ->> 'k'`` → ``get_json_object``.
 #   - ``{'k': v, ...}`` struct literals → ``named_struct``; ``MAP {k: v}``
 #     → ``map(...)``.
 #   - FROM-position ``generate_series(...)`` / ``range(...)`` table
@@ -243,12 +252,6 @@ def _looks_like_cast(sql: str, pos: int) -> bool:
 _CAST_INT_TYPES = frozenset(
     "bigint integer int int1 int2 int4 int8 smallint tinyint signed".split()
 )
-_CAST_CALL_RE = re.compile(r"\b(TRY_CAST|CAST)\s*\(", re.IGNORECASE)
-_COLON_INT_RE = re.compile(
-    r"::\s*(BIGINT|INTEGER|INT[1248]?|SMALLINT|TINYINT|SIGNED)(?![\w$(])",
-    re.IGNORECASE,
-)
-
 
 def _split_top_as(text: str) -> tuple[str, str] | None:
     """Split ``operand AS type`` on the LAST top-level ``AS``."""
@@ -337,75 +340,41 @@ def _int_cast_emit(fn: str, x: str, T: str) -> str:
     )
 
 
+def _int_cast_call(args) -> str | None:
+    split = _split_top_as(",".join(args))
+    if split is None:
+        return None
+    x, T = split
+    if T.strip().lower() not in _CAST_INT_TYPES or x.strip().lower().startswith("try_divide"):
+        # the // pass (which runs earlier) emits CAST(try_divide(..) AS
+        # BIGINT) for its TRUNCATING integer branch — rounding it would
+        # break integer division
+        return None
+    return _int_cast_emit(args.name.upper(), _rewrite_colon_int_casts(x.strip()), T.strip())
+
+
+def _int_colon_cast(site) -> str | None:
+    x = site.operands[0]
+    if site.name.lower() not in _CAST_INT_TYPES or x.lower() in _BRACKET_NONLITERAL_KEYWORDS:
+        return None
+    return _int_cast_emit("CAST", x, site.name.upper())
+
+
+_INT_CAST_CALLS = {"cast": _int_cast_call, "try_cast": _int_cast_call}
+_INT_COLON_CASTS = {"::": _int_colon_cast}
+
+
 def _rewrite_int_casts(sql: str) -> str:
-    # CAST/TRY_CAST(x AS <int>) — innermost-first via recursion on the
-    # operand; the scan cursor jumps past each emission so the plain-cast
-    # ELSE branch is never re-captured (trap 31)
-    out = sql
-    pos = 0
-    for _ in range(400):  # safety cap
-        mask = _code_mask(out)
-        m = next(
-            (
-                c
-                for c in _CAST_CALL_RE.finditer(out, pos)
-                if all(mask[i] for i in range(c.start(), c.end()))
-            ),
-            None,
-        )
-        if m is None:
-            break
-        close = _match(out, m.end() - 1)
-        if close is None:
-            pos = m.end()
-            continue
-        split = _split_top_as(out[m.end() : close])
-        if split is None:
-            pos = m.end()
-            continue
-        x, T = split
-        if T.strip().lower() not in _CAST_INT_TYPES:
-            pos = m.end()
-            continue
-        if x.strip().lower().startswith("try_divide"):
-            # the // pass (which runs earlier) emits CAST(try_divide(..)
-            # AS BIGINT) for its TRUNCATING integer branch — rounding it
-            # would break integer division
-            pos = m.end()
-            continue
-        rep = _int_cast_emit(
-            m.group(1).upper(), _rewrite_int_casts(x.strip()), T.strip()
-        )
-        out = out[: m.start()] + rep + out[close + 1 :]
-        pos = m.start() + len(rep)
-    # x::<int> — the left operand (already cast-processed above) rounds
-    # the same way; chains fold left because the cursor resumes after
-    # each emission
-    pos = 0
-    for _ in range(400):
-        mask = _code_mask(out)
-        m = next(
-            (
-                c
-                for c in _COLON_INT_RE.finditer(out, pos)
-                if all(mask[i] for i in range(c.start(), c.start() + 2))
-            ),
-            None,
-        )
-        if m is None:
-            break
-        ls = _left_operand_start(out, mask, m.start())
-        if ls is None:
-            pos = m.end()
-            continue
-        x = out[ls : m.start()].strip()
-        if not x or x.lower() in _BRACKET_NONLITERAL_KEYWORDS:
-            pos = m.end()
-            continue
-        rep = _int_cast_emit("CAST", x, m.group(1).upper())
-        out = out[:ls] + rep + out[m.end() :]
-        pos = ls + len(rep)
-    return out
+    """CAST/TRY_CAST(x AS <int>) and x::<int>, innermost first; a chain
+    ``x::DOUBLE::INT`` casts its whole left side."""
+    return _rewrite_colon_int_casts(_rewrite_calls(sql, _INT_CAST_CALLS))
+
+
+def _rewrite_colon_int_casts(sql: str) -> str:
+    return _rewrite_operators(sql, _INT_COLON_CASTS) if _in_code(_COLON_INT, sql) else sql
+
+
+_COLON_INT = re.compile(r"::\s*(?:BIGINT|INTEGER|INT[1248]?|SMALLINT|TINYINT|SIGNED)\b", re.IGNORECASE)
 
 
 def _rewrite_intdiv(sql: str) -> str:
@@ -424,356 +393,50 @@ def _rewrite_intdiv(sql: str) -> str:
     return "".join(out)
 
 
-def _left_operand_start(
-    sql: str, mask: list[bool], pos: int, absorb_sign: bool = True
-) -> int | None:
-    """Start index of the tight operand ending just before ``pos``:
-    a ``(...)`` group with an optional call-name chain, or an
-    identifier/number token (exponent-aware), with a unary sign absorbed
-    when it is in unary position (DuckDB: -2^2 = 4)."""
-    i = pos - 1
-    while i >= 0 and sql[i].isspace():
-        i -= 1
-    if i < 0:
-        return None
-    end = i
-    if sql[i] == "'" and not mask[i]:
-        # string literal: the mask marks the whole literal (delimiters
-        # included) as non-code — the operand is that contiguous run
-        k = i
-        while k >= 0 and not mask[k]:
-            k -= 1
-        return k + 1
-    # postfix subscript groups (``x[1]``, ``f(x)[2]``) belong to the
-    # operand — walk back over each balanced [..] and keep capturing
-    while sql[i] == "]" and mask[i]:
-        i = _match(sql, i)
-        if i is None or i == 0:
-            return None
-        i -= 1
-        while i >= 0 and sql[i].isspace():
-            i -= 1
-        if i < 0:
-            return None
-    if sql[i] == ")":
-        i = _match(sql, i)
-        if i is None:
-            return None
-        k = i - 1
-        while k >= 0 and (sql[k].isalnum() or sql[k] in "_$."):
-            k -= 1
-        name = sql[k + 1 : i]
-        if (
-            name
-            and not name[0].isdigit()
-            and name.lower() not in _BRACKET_NEVER_CALL_KEYWORDS
-        ):
-            start = k + 1
-        else:
-            start = i
-    elif sql[i].isalnum() or sql[i] in "_$":
-        k = i
-        while k >= 0 and (sql[k].isalnum() or sql[k] in "_$."):
-            k -= 1
-        # exponent sign inside a float literal: 1.5e-3
-        if (
-            k >= 2
-            and sql[k] in "+-"
-            and sql[k - 1] in "eE"
-            and sql[k - 2].isdigit()
-        ):
-            k -= 2
-            while k >= 0 and (sql[k].isalnum() or sql[k] in "_$."):
-                k -= 1
-        start = k + 1
-        tok = sql[start : end + 1]
-        if not tok or tok.lower() in _BRACKET_NONLITERAL_KEYWORDS:
-            return None
-        if tok.startswith(".") and k >= 0 and sql[k] == ")":
-            # struct-field access on a parenthesized base —
-            # ``({'a': 1}).a % 2`` — absorb the (...) group (and any
-            # call-name chain) into the operand (fuzz r8 seed 198)
-            j = _match(sql, k)
-            if j is None:
-                return None
-            k2 = j - 1
-            while k2 >= 0 and (sql[k2].isalnum() or sql[k2] in "_$."):
-                k2 -= 1
-            name = sql[k2 + 1 : j]
-            if (
-                name
-                and not name[0].isdigit()
-                and name.lower() not in _BRACKET_NEVER_CALL_KEYWORDS
-            ):
-                start = k2 + 1
-            else:
-                start = j
+def _rlike(subject: str, pattern: str, negate: bool, translate=None) -> str | None:
+    """DuckDB's full-match pattern operators as an anchored RLIKE: a literal
+    pattern inline (``translate`` turns it into a regex), any other one
+    built at run time, which only a regex pattern can be."""
+    lit = _SQ_LITERAL.match(pattern)
+    if lit:
+        body = lit.group(1) if translate is None else translate(lit.group(1))
+        rep = f"{subject} RLIKE '^(?:{body})$'"
+    elif translate is None:
+        # `||` not concat(): the skip-NULLs pass would rewrite an emitted
+        # concat, and a NULL pattern must stay NULL
+        rep = f"rlike({subject}, '^(?:' || ({pattern}) || ')$')"
     else:
         return None
-    # a ``::type`` cast chain binds tighter than any operator here — keep
-    # walking left across each ``::`` to the underlying operand
-    while True:
-        j = start - 1
-        while j >= 0 and sql[j].isspace():
-            j -= 1
-        if j >= 1 and sql[j] == ":" and sql[j - 1] == ":" and mask[j]:
-            inner = _left_operand_start(sql, mask, j - 1, absorb_sign=False)
-            if inner is None:
-                break
-            start = inner
-        else:
-            break
-    # unary sign binds tighter than ^ — absorb it when no operand precedes
-    if not absorb_sign:
-        return start
-    j = start - 1
-    while j >= 0 and sql[j].isspace():
-        j -= 1
-    if j >= 0 and sql[j] in "+-":
-        k = j - 1
-        while k >= 0 and sql[k].isspace():
-            k -= 1
-        prev = sql[k] if k >= 0 else ""
-        if not (prev.isalnum() or prev in "_$.)'\""):
-            start = j
-        elif prev.isalpha() or prev == "_":
-            # the sign follows a word — unary when that word is a keyword
-            # (SELECT -1 ^ 2, WHEN -x ^ 2, ...), binary after an operand
-            w = k
-            while w >= 0 and (sql[w].isalnum() or sql[w] in "_$"):
-                w -= 1
-            if sql[w + 1 : k + 1].lower() in _BRACKET_NONLITERAL_KEYWORDS:
-                start = j
-    return start
+    return f"(NOT ({rep}))" if negate else f"({rep})"
 
 
-def _right_operand_end(sql: str, pos: int) -> int | None:
-    """End index (inclusive) of the tight operand starting at/after ``pos``:
-    optional unary sign, then a ``(...)`` group, a call, or an
-    identifier/number/string token."""
-    n = len(sql)
-    i = pos
-    while i < n and sql[i].isspace():
-        i += 1
-    while i < n and sql[i] in "+-":
-        i += 1
-        while i < n and sql[i].isspace():
-            i += 1
-    if i >= n:
-        return None
-    if sql[i] == "'":
-        m = re.match(r"'(?:[^']|'')*'", sql[i:])
-        return i + m.end() - 1 if m else None
-    if sql[i] == "(":
-        # struct-field access binds tighter than any operator:
-        # ``10 // ({'a': k}).a`` — absorb trailing ``.ident`` chains into
-        # the operand (fuzz r8 seed 349)
-        return _field_chain_end(sql, _match(sql, i))
-    if sql[i].isalnum() or sql[i] in "_$":
-        is_num = sql[i].isdigit()
-        k = i
-        while k < n and (sql[k].isalnum() or sql[k] in "_$."):
-            k += 1
-        if is_num and k < n and sql[k] in "+-" and sql[k - 1] in "eE":
-            k += 1
-            while k < n and sql[k].isdigit():
-                k += 1
-        j = k
-        while j < n and sql[j].isspace():
-            j += 1
-        if not is_num and j < n and sql[j] == "(":
-            # same struct-field absorption as the paren-group branch:
-            # ``k // map_extract(m, 'a')[1].p`` — by this pass the
-            # subscript is already a call, so the ``.p`` tail hangs off a
-            # CALL operand (fuzz r10 statement seed 8330)
-            return _field_chain_end(sql, _match(sql, j))
-        return k - 1
-    return None
+def _regex_match(site) -> str | None:
+    """``x [NOT] SIMILAR TO p`` and the Postgres-style ``x ~ p`` /
+    ``x !~ p`` (probed: DuckDB ``~`` is regexp_full_match — ``'abcd' ~
+    'b.'`` is false).  A ``~`` with no left operand is unary bitwise NOT
+    in both engines and never reaches here."""
+    return _rlike(*site.operands, site.ops[0] in ("!~", "not similar to"))
 
 
-def _field_chain_end(sql: str, close: int | None) -> int | None:
-    """End of the ``.ident`` chain that follows the group closing at
-    ``close`` (``close`` itself when none follows)."""
-    if close is None:
-        return None
-    i, n = close, len(sql)
-    while (
-        i + 2 < n
-        and sql[i + 1] == "."
-        and (sql[i + 2].isalpha() or sql[i + 2] in "_$")
-    ):
-        i += 2
-        while i + 1 < n and (sql[i + 1].isalnum() or sql[i + 1] in "_$"):
-            i += 1
-    return i
+def _glob(site) -> str | None:
+    """``x [NOT] GLOB 'pat'`` (a full-match filename-style pattern: ``*``
+    any run, ``?`` one char, ``[...]``/``[!...]`` classes), case-sensitive.
+    Only a literal pattern is rewritten; a dynamic one surfaces Spark's
+    parse error rather than risk a wrong translation.  The literal pass
+    doubled the pattern's backslashes; the translator re-escapes."""
+    return _rlike(
+        *site.operands,
+        site.ops[0] == "not glob",
+        lambda pat: _glob_to_regex(pat.replace("''", "'").replace("\\\\", "\\")),
+    )
 
 
-def _rewrite_caret_at(sql: str) -> str:
-    """DuckDB ``a ^@ b`` (starts-with) → ``startswith(a, b)``."""
-    while "^@" in sql:
-        mask = _code_mask(sql)
-        idx = next(
-            (
-                i
-                for i in range(len(sql) - 1)
-                if sql[i] == "^" and sql[i + 1] == "@" and mask[i] and mask[i + 1]
-            ),
-            None,
-        )
-        if idx is None:
-            return sql
-        ls = _left_operand_start(sql, mask, idx)
-        rend = _right_operand_end(sql, idx + 2)
-        if ls is None or rend is None:
-            return sql
-        left = sql[ls:idx].strip()
-        right = sql[idx + 2 : rend + 1].strip()
-        sql = sql[:ls] + f"startswith({left}, {right})" + sql[rend + 1 :]
-    return sql
+def _power(site) -> str:
+    return f"power({site.operands[0]}, {site.operands[1]})"
 
 
-_POW_OP = re.compile(r"\*\*|\^(?!@)")
-
-
-def _rewrite_power(sql: str) -> str:
-    """``a ^ b`` / ``a ** b`` → ``power(a, b)`` (leftmost-first, so chains
-    associate left like DuckDB: 2^3^2 → power(power(2, 3), 2) = 64)."""
-    while "^" in sql or "**" in sql:
-        mask = _code_mask(sql)
-        m = next(
-            (
-                c
-                for c in _POW_OP.finditer(sql)
-                if all(mask[i] for i in range(c.start(), c.end()))
-            ),
-            None,
-        )
-        if m is None:
-            return sql
-        ls = _left_operand_start(sql, mask, m.start())
-        rend = _right_operand_end(sql, m.end())
-        if ls is None or rend is None:
-            return sql
-        left = sql[ls : m.start()].strip()
-        right = sql[m.end() : rend + 1].strip()
-        sql = sql[:ls] + f"power({left}, {right})" + sql[rend + 1 :]
-    return sql
-
-
-_SIMILAR_TO = re.compile(r"\b(NOT\s+)?SIMILAR\s+TO\b", re.IGNORECASE)
-
-
-def _rewrite_similar_to(sql: str) -> str:
-    """``x [NOT] SIMILAR TO p`` → anchored RLIKE (DuckDB treats the
-    pattern as a full-match regex)."""
-    while True:
-        mask = _code_mask(sql)
-        m = next(
-            (
-                c
-                for c in _SIMILAR_TO.finditer(sql)
-                if all(mask[i] for i in range(c.start(), c.end()))
-            ),
-            None,
-        )
-        if m is None:
-            return sql
-        ls = _left_operand_start(sql, mask, m.start())
-        if ls is None:
-            return sql
-        # ``||`` binds tighter than SIMILAR TO — absorb concat chains
-        while True:
-            j = ls - 1
-            while j >= 0 and sql[j].isspace():
-                j -= 1
-            if j >= 1 and sql[j] == "|" and sql[j - 1] == "|" and mask[j]:
-                prev = _left_operand_start(sql, mask, j - 1)
-                if prev is None:
-                    break
-                ls = prev
-            else:
-                break
-        left = sql[ls : m.start()].strip()
-        lit = re.match(r"\s*'((?:[^']|'')*)'(?!\s*\|\|)", sql[m.end() :])
-        if lit:
-            rep = f"{left} RLIKE '^(?:{lit.group(1)})$'"
-            end = m.end() + lit.end()
-        else:
-            rend = _right_operand_end(sql, m.end())
-            if rend is None:
-                return sql
-            while True:
-                j = rend + 1
-                while j < len(sql) and sql[j].isspace():
-                    j += 1
-                if j + 1 < len(sql) and sql[j] == "|" and sql[j + 1] == "|" and mask[j]:
-                    nxt = _right_operand_end(sql, j + 2)
-                    if nxt is None:
-                        break
-                    rend = nxt
-                else:
-                    break
-            pat = sql[m.end() : rend + 1].strip()
-            # `||` not concat(): the skip-NULLs pass would re-capture the
-            # emitted concat and a NULL pattern must stay NULL (trap 31)
-            rep = f"rlike({left}, '^(?:' || ({pat}) || ')$')"
-            end = rend + 1
-        if m.group(1):
-            rep = f"NOT ({rep})"
-        sql = sql[:ls] + "(" + rep + ")" + sql[end:]
-    return sql
-
-
-_TILDE_OP = re.compile(r"(?<![~!<>=|^*/%+-])(!?~)(?![~*=])")
-
-
-def _rewrite_tilde_regex(sql: str) -> str:
-    """Postgres-style regex operators ``x ~ p`` / ``x !~ p`` → anchored
-    RLIKE (probed: DuckDB ``~`` is regexp_full_match — ``'abcd' ~ 'b.'``
-    is false).  A ``~`` with no left operand (or a keyword before it) is
-    unary bitwise NOT in both engines and is left alone."""
-    while True:
-        mask = _code_mask(sql)
-        hit = None
-        for c in _TILDE_OP.finditer(sql):
-            if not all(mask[i] for i in range(c.start(1), c.end(1))):
-                continue
-            ls = _left_operand_start(sql, mask, c.start(1))
-            if ls is None:
-                # the operand helper rejects keyword tokens, but a literal
-                # NULL left side is a valid regex operand (NULL ~ p → NULL)
-                nm = re.search(r"(?<![\w$])NULL\s*$", sql[: c.start(1)], re.IGNORECASE)
-                if nm is None:
-                    continue
-                ls = nm.start()
-            left = sql[ls : c.start(1)].strip()
-            if not left or (
-                left.lower() in _BRACKET_NONLITERAL_KEYWORDS
-                and left.lower() != "null"
-            ):
-                continue  # unary bitwise-NOT position
-            hit = (c, ls, left)
-            break
-        if hit is None:
-            return sql
-        m, ls, left = hit
-        lit = re.match(r"\s*'((?:[^']|'')*)'(?!\s*\|\|)", sql[m.end(1) :])
-        if lit:
-            rep = f"{left} RLIKE '^(?:{lit.group(1)})$'"
-            end = m.end(1) + lit.end()
-        else:
-            rend = _right_operand_end(sql, m.end(1))
-            if rend is None:
-                return sql
-            pat = sql[m.end(1) : rend + 1].strip()
-            # `||` not concat(): the skip-NULLs pass would re-capture the
-            # emitted concat and a NULL pattern must stay NULL (trap 31)
-            rep = f"rlike({left}, '^(?:' || ({pat}) || ')$')"
-            end = rend + 1
-        if m.group(1).startswith("!"):
-            rep = f"NOT ({rep})"
-        sql = sql[:ls] + "(" + rep + ")" + sql[end:]
-    return sql
+def _starts_with(site) -> str:
+    return f"startswith({site.operands[0]}, {site.operands[1]})"
 
 
 def _split_entry_colon(text: str) -> tuple[str, str] | None:
@@ -867,49 +530,28 @@ _DOT_CALL = re.compile(r"\.\s*([A-Za-z_]\w*)\s*\(")
 _DOT_CALL_SKIP = frozenset({"over", "filter", "within"})
 
 
+def _chained_call(site) -> str | None:
+    if site.name.lower() in _DOT_CALL_SKIP or not _code_mask_of(site.sql)[site.start]:
+        # a bare string-literal base is a parser error in DuckDB too
+        return None
+    arg_txt = ", ".join(a.strip() for a in site.args if a.strip())
+    base = site.operands[0]
+    return f"{site.name}({base}, {arg_txt})" if arg_txt else f"{site.name}({base})"
+
+
 def _rewrite_dot_chain(sql: str) -> str:
     """DuckDB function chaining: ``expr.fn(args)`` → ``fn(expr, args)``.
 
     Pinned by probes: works on identifiers (``s.string_split(' ')``),
-    paren groups and call results (``trim(x).len()``); a bare string
-    literal base is a parser error in DuckDB too, so it is left alone
-    here (the literal-left capture never fires — bases are code, the
-    literal chars are masked).  Chains flatten leftmost-first:
+    paren groups and call results (``trim(x).len()``); a string literal
+    base is left alone.  Chains flatten leftmost-first:
     ``a.substr(2, 3).upper()`` → ``upper(substr(a, 2, 3))``.  The
     ambiguity with catalog-qualified function names (``db.fn(x)``) is
     resolved the DuckDB way: the dot reading wins."""
-    for _ in range(_MAX_DOT_CHAIN):
-        mask = _code_mask(sql)
-        hit = None
-        for m in _DOT_CALL.finditer(sql):
-            if not all(mask[i] for i in range(m.start(), m.end())):
-                continue
-            if m.group(1).lower() in _DOT_CALL_SKIP:
-                continue
-            base = _left_operand_start(sql, mask, m.start(), absorb_sign=False)
-            if base is None or base == m.start():
-                continue
-            # the literal-left capture (masked run) is not a valid chain
-            # base — DuckDB rejects 'abc'.upper() as well
-            if not mask[base]:
-                continue
-            hit = (m, base)
-            break
-        if hit is None:
-            return sql
-        m, base = hit
-        parsed = _split_call_args(sql, m.end() - 1)
-        if parsed is None:
-            return sql
-        args, close = parsed
-        base_txt = sql[base : m.start()].strip()
-        arg_txt = ", ".join(a.strip() for a in args if a.strip())
-        inner = f"{base_txt}, {arg_txt}" if arg_txt else base_txt
-        sql = sql[:base] + f"{m.group(1)}({inner})" + sql[close + 1 :]
-    return sql
+    return _rewrite_operators(sql, _DOT_CALLS) if _in_code(_DOT_CALL, sql) else sql
 
 
-_MAX_DOT_CHAIN = 100
+_DOT_CALLS = {".": _chained_call}
 
 
 # lambda-taking builtins whose ``var -> expr`` arrows must never be read
@@ -919,9 +561,6 @@ _HOF_NAMES = frozenset(
     "map_zip_with array_sort transform_keys transform_values "
     "list_transform list_filter list_reduce list_aggregate".split()
 )
-
-_JSON_ARROW = re.compile(r"->>?")
-
 
 def _enclosing_call_name(sql: str, pos: int) -> str:
     i = _enclosing(sql, pos)
@@ -936,49 +575,26 @@ def _enclosing_call_name(sql: str, pos: int) -> str:
     return sql[k + 1 : j + 1].lower()
 
 
-def _rewrite_json_arrows(sql: str) -> str:
-    """DuckDB JSON operators ``j -> 'key'`` / ``j ->> 'key'`` / ``-> i``
-    → ``get_json_object`` with a ``$.key`` / ``$[i]`` path (leftmost-
-    first, so chains nest).  Only fires when the right side is a string
-    or integer literal AND the enclosing call is not a lambda-taking
-    higher-order function — ``transform(l, x -> 'a')`` keeps its arrow.
-    (Both arrows map to the text-returning form; DuckDB's ``->`` keeps
-    JSON quoting on strings, a documented divergence shared with
+def _json_arrow(site) -> str | None:
+    """DuckDB JSON operators ``j -> 'key'`` / ``j ->> 'key'`` / ``-> i`` →
+    ``get_json_object`` with a ``$.key`` / ``$[i]`` path (chains nest).
+    Only a string or integer literal key is rewritten, and a ``->`` inside
+    a lambda-taking call is its lambda arrow: ``transform(l, x -> 'a')``
+    keeps it.  (Both arrows map to the text-returning form; DuckDB's ``->``
+    keeps JSON quoting on strings, a documented divergence shared with
     ``json_extract``.)"""
-    while "->" in sql:
-        mask = _code_mask(sql)
-        hit = None
-        for m in _JSON_ARROW.finditer(sql):
-            if not all(mask[i] for i in range(m.start(), m.end())):
-                continue
-            after = sql[m.end() :]
-            rm = re.match(r"\s*'((?:[^']|'')*)'", after) or re.match(
-                r"\s*(\d+)(?![\w$.])", after
-            )
-            if rm is None:
-                continue
-            if (
-                m.group(0) == "->"
-                and _enclosing_call_name(sql, m.start()) in _HOF_NAMES
-            ):
-                continue
-            ls = _left_operand_start(sql, mask, m.start(), absorb_sign=False)
-            if ls is None:
-                continue
-            hit = (m, rm, ls)
-            break
-        if hit is None:
-            return sql
-        m, rm, ls = hit
-        base = sql[ls : m.start()].strip()
-        if rm.re.pattern.startswith(r"\s*'"):
-            key = rm.group(1)
-            path = "$." + key if re.fullmatch(r"\w+", key) else f"$['{key}']"
-        else:
-            path = f"$[{rm.group(1)}]"
-        rep = f"get_json_object({base}, '{path}')"
-        sql = sql[:ls] + rep + sql[m.end() + rm.end() :]
-    return sql
+    base, key = site.operands
+    lit = _SQ_LITERAL.match(key)
+    if lit:
+        key = lit.group(1)
+        path = "$." + key if re.fullmatch(r"\w+", key) else f"$['{key}']"
+    elif key.isdigit():
+        path = f"$[{key}]"
+    else:
+        return None
+    if site.ops[0] == "->" and _enclosing_call_name(site.sql, site.start) in _HOF_NAMES:
+        return None
+    return f"get_json_object({base}, '{path}')"
 
 
 _ORDER_TERMINATOR = re.compile(
@@ -1068,83 +684,6 @@ def _rewrite_order_by_nulls(sql: str) -> str:
     return sql
 
 
-_WINDOWISH = ("over", "filter")
-_CLAUSE_KEYWORDS = frozenset(
-    "from where group order having limit offset union intersect except "
-    "join on as and or when then else end window qualify using select "
-    "by asc desc nulls".split()
-)
-
-
-def _full_left_operand(sql: str, mask: list[bool], pos: int) -> int | None:
-    """``_left_operand_start`` plus absorption of trailing aggregate
-    clause chains: in ``count(*) FILTER (WHERE b) / 2`` the left operand
-    of ``/`` is the whole aggregate, but the tight capture stops at the
-    ``FILTER (...)`` group (reading FILTER as a call name).  Walk back
-    across OVER/FILTER links to the underlying call; bail (None) when
-    the context is ambiguous rather than risk mis-capture."""
-    start = _left_operand_start(sql, mask, pos)
-    if start is None:
-        return None
-    while True:
-        if re.match(r"(?:over|filter)\b", sql[start:], re.IGNORECASE):
-            prev = _left_operand_start(sql, mask, start)
-            if prev is None:
-                return None
-            start = prev
-            continue
-        j = start - 1
-        while j >= 0 and sql[j].isspace():
-            j -= 1
-        k = j
-        while k >= 0 and (sql[k].isalnum() or sql[k] in "_$"):
-            k -= 1
-        if j >= 0 and sql[k + 1 : j + 1].lower() in _WINDOWISH:
-            prev = _left_operand_start(sql, mask, k + 1)
-            if prev is None:
-                return None
-            start = prev
-            continue
-        return start
-
-
-def _full_right_operand(sql: str, pos: int) -> int | None:
-    """``_right_operand_end`` plus absorption of a following
-    ``OVER (...)`` / ``OVER w`` / ``FILTER (...)`` clause, so
-    ``x / count(*) OVER ()`` captures the whole window expression."""
-    rend = _right_operand_end(sql, pos)
-    if rend is None:
-        return None
-    n = len(sql)
-    while True:
-        j = rend + 1
-        while j < n and sql[j].isspace():
-            j += 1
-        m = re.match(r"(over|filter)\b", sql[j:], re.IGNORECASE)
-        if not m:
-            return rend
-        j2 = j + m.end()
-        while j2 < n and sql[j2].isspace():
-            j2 += 1
-        if j2 < n and sql[j2] == "(":
-            rend = _match(sql, j2)
-            if rend is None:
-                return None
-        elif (
-            m.group(1).lower() == "over"
-            and j2 < n
-            and (sql[j2].isalpha() or sql[j2] == "_")
-        ):
-            k = j2
-            while k < n and (sql[k].isalnum() or sql[k] in "_$"):
-                k += 1
-            if sql[j2:k].lower() in _CLAUSE_KEYWORDS:
-                return rend  # 'over' was an identifier, not a window link
-            rend = k - 1
-        else:
-            return rend
-
-
 def _rewrite_concat_skip_nulls(sql: str) -> str:
     """DuckDB ``concat`` SKIPS NULL arguments (probed: ``concat('a',
     NULL)`` → 'a', ``concat(NULL, NULL)`` → '') and stringifies every
@@ -1160,7 +699,16 @@ def _rewrite_concat_skip_nulls(sql: str) -> str:
 _CONCAT_CALLS = {"concat": lambda args: "concat_ws('', " + ",".join(args) + ")"}
 
 
-_PIPE_CONCAT = re.compile(r"\|\|")
+def _list_concat(site) -> str | None:
+    texts = site.operands
+    if not any(_ARRAYISH_BASE.match(t) for t in texts):
+        return None
+    all_null = " AND ".join(f"({t}) IS NULL" for t in texts)
+    arr = ", ".join(f"({t})" for t in texts)
+    return f"(CASE WHEN {all_null} THEN NULL ELSE flatten(array_compact(array({arr}))) END)"
+
+
+_LIST_CONCAT = {"||": _Chain(frozenset({"||"}), _list_concat)}
 
 
 def _rewrite_arrayish_pipe_concat(sql: str) -> str:
@@ -1168,69 +716,18 @@ def _rewrite_arrayish_pipe_concat(sql: str) -> str:
     (probed r9: NULL-valued BIGINT[] column ``|| [99]`` → [99]; all-NULL
     → NULL) while Spark's array ``||`` is concat, which NULL-propagates —
     a silent NULL on any nullable list column.  When any operand of a
-    top-level ``||`` chain is TEXTUALLY list-producing (the
-    _ARRAYISH_BASE classifier; the bracket pass has already rendered
-    ``[..]`` literals as array(..)), the whole chain is rewritten
-    atomically (playbook: emitted text must not re-trigger the pass) to
-    ``flatten(array_compact(array(ops…)))`` under an all-NULL guard.
-    String/unknown chains are left alone — ``||`` on strings
-    NULL-propagates identically in both engines.  Residual: an operand
-    that is a bare identifier of list type on BOTH sides (no textual
-    hint anywhere in the chain) keeps Spark's NULL-propagation."""
-    while True:
-        mask = _code_mask(sql)
-        done = True
-        for m in _PIPE_CONCAT.finditer(sql):
-            if not all(mask[m.start() : m.end()]):
-                continue
-            # walk to the leftmost || of this chain
-            ops: list[tuple[int, int]] = []  # (start, end+1) per operand
-            left_pipe = m.start()
-            while True:
-                ls = _left_operand_start(sql, mask, left_pipe, absorb_sign=False)
-                if ls is None:
-                    break
-                ops.insert(0, (ls, left_pipe))
-                j = ls - 1
-                while j >= 0 and sql[j].isspace():
-                    j -= 1
-                if j >= 1 and sql[j] == "|" and sql[j - 1] == "|" and mask[j]:
-                    left_pipe = j - 1
-                else:
-                    break
-            if not ops:
-                continue
-            # walk rightward across the chain
-            right_pipe = m.start()
-            while True:
-                rend = _right_operand_end(sql, right_pipe + 2)
-                if rend is None:
-                    ops = []
-                    break
-                ops.append((right_pipe + 2, rend + 1))
-                j = rend + 1
-                while j < len(sql) and sql[j].isspace():
-                    j += 1
-                if j + 1 < len(sql) and sql[j] == "|" and sql[j + 1] == "|" and mask[j]:
-                    right_pipe = j
-                else:
-                    break
-            if not ops:
-                continue
-            texts = [sql[a:b].strip() for a, b in ops]
-            if not any(_ARRAYISH_BASE.match(t) for t in texts):
-                continue
-            guard = " AND ".join(f"({t}) IS NULL" for t in texts)
-            arr = ", ".join(f"({t})" for t in texts)
-            new = (
-                f"(CASE WHEN {guard} THEN NULL "
-                f"ELSE flatten(array_compact(array({arr}))) END)"
-            )
-            sql = sql[: ops[0][0]] + new + sql[ops[-1][1] :]
-            done = False
-            break  # offsets shifted; re-lex
-        if done:
-            return sql
+    ``||`` chain is TEXTUALLY list-producing (the _ARRAYISH_BASE
+    classifier; the bracket pass has already rendered ``[..]`` literals as
+    array(..)), the whole chain becomes ``flatten(array_compact(array(ops…)))``
+    under an all-NULL guard.  String/unknown chains are left alone —
+    ``||`` on strings NULL-propagates identically in both engines.
+    Residual: an operand that is a bare identifier of list type on BOTH
+    sides (no textual hint anywhere in the chain) keeps Spark's
+    NULL-propagation."""
+    return _rewrite_operators(sql, _LIST_CONCAT) if _in_code(_PIPE, sql) else sql
+
+
+_PIPE = re.compile(r"\|\|")
 
 
 _DIVMOD_OP = re.compile(r"(?<![\w$])div(?![\w$])|/|%", re.IGNORECASE)
@@ -1416,7 +913,12 @@ def _leaf_int_cond(text: str) -> str:
         if not sub:  # all-NULL CASE: division yields NULL either way
             return "(1=1)"
         return "(" + " AND ".join(sub) + ")"
+    if _SUBQUERY.match(t):
+        t = f"({t})"  # a scalar subquery keeps its parentheses
     return f"typeof({t}) IN {_INTS_LIST}"
+
+
+_SUBQUERY = re.compile(r"(?:SELECT|WITH|FROM)(?![\w$])", re.IGNORECASE)
 
 
 # Functions whose DuckDB static type disagrees with Spark's (probed):
@@ -1478,82 +980,53 @@ def _rewrite_ducktype_numerics(sql: str) -> str:
     return _rewrite_calls(sql, _DUCKTYPE_CALLS)
 
 
+_GROUP_THEN_MUL = re.compile(r"\)\s*(?:\*|div(?![\w$]))", re.IGNORECASE)
+_GROUP_STOP_WORDS = frozenset(
+    "and or not case when then else end is in like between".split()
+)
+
+
+def _leading_mul_group(sql: str) -> tuple[int, int] | None:
+    """The first ``(…)`` group whose own operators are all ``*``/``div``
+    (at least one), that no call name, postfix or operator of its level
+    precedes, and that a ``*`` or ``div`` follows."""
+    if not _GROUP_THEN_MUL.search(sql):
+        return None
+    toks, pairs = _tokens(sql)
+    for a, t in enumerate(toks):
+        b = pairs.get(a)
+        if t.key != "(" or b is None:
+            continue
+        has_mul, k = False, a + 1
+        while k < b:
+            u = toks[k]
+            if u.key in ("(", "[", "{") and k in pairs:
+                k = pairs[k] + 1
+                continue
+            # the code characters: an operator, or a number's exponent sign
+            text = "" if u.kind in ("word", "quoted") or sql[u.start] == "'" else sql[u.start : u.end]
+            if u.key in _GROUP_STOP_WORDS or any(c in "+-/%<>=!|&^~,:" for c in text):
+                break
+            has_mul = has_mul or u.key == "div" or "*" in text
+            k += 1
+        if k < b or not has_mul:
+            continue
+        if a:
+            p = toks[a - 1]
+            last = sql[p.end - 1]
+            if last in "_$)]'\"*%/" or (p.kind != "op" and last.isalnum() and p.key not in _BRACKET_NEVER_CALL_KEYWORDS):
+                continue
+        if b + 1 < len(toks) and (toks[b + 1].key.startswith("*") or toks[b + 1].key == "div"):
+            return t.start, toks[b].start
+    return None
+
+
 def _flatten_leading_mul_groups(sql: str) -> str:
     """See _rewrite_divmod_null: unwrap ``(a * b div c)`` when the group
-    starts a multiplicative chain and contains only top-level ``*``/
-    ``div`` operators."""
-    for _ in range(64):
-        mask = _code_mask(sql)
-        depth = _brackets(sql).depth
-        changed = False
-        for i, ch in enumerate(sql):
-            if ch != "(" or not mask[i]:
-                continue
-            j = _match(sql, i)
-            if j is None:
-                continue
-            inner = sql[i + 1 : j]
-            has_mul = False
-            bad = False
-            k = i + 1
-            while k < j:
-                c = sql[k]
-                if mask[k] and depth[k] == depth[i] + 1:
-                    if c == "*":
-                        has_mul = True
-                    elif c in "+-/%<>=!|&^~,:":
-                        bad = True
-                        break
-                    elif c.isalpha():
-                        w = k
-                        while k + 1 < j and (sql[k + 1].isalnum() or sql[k + 1] in "_$"):
-                            k += 1
-                        word = sql[w : k + 1].lower()
-                        if word == "div":
-                            has_mul = True
-                        elif word in ("and", "or", "not", "case", "when",
-                                      "then", "else", "end", "is", "in",
-                                      "like", "between"):
-                            bad = True
-                            break
-                k += 1
-            if bad or not has_mul:
-                continue
-            # previous token must end a chain boundary (not a call name,
-            # postfix, or same-level operator)
-            p = i - 1
-            while p >= 0 and sql[p].isspace():
-                p -= 1
-            if p >= 0:
-                pc = sql[p]
-                if pc in "_$)]'\"" or pc in "*%/":
-                    continue
-                if pc.isalnum():
-                    w = p
-                    while w >= 0 and (sql[w].isalnum() or sql[w] in "_$"):
-                        w -= 1
-                    word = sql[w + 1 : p + 1].lower()
-                    # a statement keyword is a chain boundary; any other
-                    # identifier would make the group a call argument
-                    if word not in _BRACKET_NEVER_CALL_KEYWORDS:
-                        continue
-            # next token must continue the chain with div or *
-            q = j + 1
-            while q < len(sql) and sql[q].isspace():
-                q += 1
-            if not (
-                sql[q : q + 1] == "*"
-                or (
-                    re.match(r"div(?![\w$])", sql[q:], re.IGNORECASE)
-                    and all(mask[x] for x in range(q, min(q + 3, len(sql))))
-                )
-            ):
-                continue
-            sql = sql[:i] + " " + inner + " " + sql[j + 1 :]
-            changed = True
-            break
-        if not changed:
-            return sql
+    starts a multiplicative chain, until none is left."""
+    while (group := _leading_mul_group(sql)) is not None:
+        i, j = group
+        sql = sql[:i] + " " + sql[i + 1 : j] + " " + sql[j + 1 :]
     return sql
 
 
@@ -1581,14 +1054,8 @@ def _rewrite_divmod_null(sql: str) -> str:
     type (the outer ``//`` then divides plainly).
 
     Runs OUTERMOST (after USING SAMPLE/QUALIFY/function renames) so
-    ``10%`` percent spellings and macro expansions are already resolved.
-    Leftmost-first with restart (like the ``^`` pass): every replacement
-    removes exactly one ``/``/``%``/``div`` token and emits none, so the
-    loop terminates with every occurrence — including ones nested inside
-    captured operands — processed.  On an ambiguous capture the operator
-    is skipped (Spark's ANSI error then surfaces — never a silent
-    mis-capture)."""
-    if "/" not in sql and "%" not in sql and not re.search(_DIVMOD_OP, sql):
+    ``10%`` percent spellings and macro expansions are already resolved."""
+    if not _DIVMOD_OP.search(sql):
         return sql
     # ``(a // b) // c`` parses identically to ``a // b // c`` (same
     # precedence level, left-assoc), but the parens split the chain into
@@ -1599,145 +1066,105 @@ def _rewrite_divmod_null(sql: str) -> str:
     # change: ``2 * (a div b) div c`` ≠ ``2 * a div b div c``) and never
     # as a call/postfix argument.
     sql = _flatten_leading_mul_groups(sql)
-    skipped: set[tuple[int, str]] = set()
-    guard = 0
-    while guard < 500:
-        guard += 1
-        mask = _code_mask(sql)
-        m = next(
-            (
-                c
-                for c in _DIVMOD_OP.finditer(sql)
-                if all(mask[i] for i in range(c.start(), c.end()))
-                and (c.start(), c.group(0)) not in skipped
-            ),
-            None,
+    return _rewrite_operators(sql, _DIVMOD) if _in_code(_DIVMOD_OP, sql) else sql
+
+
+def _divide(site) -> str:
+    # DuckDB '/' ALWAYS divides as DOUBLE (probed: typeof(1.5/2.5) =
+    # DOUBLE) where Spark keeps decimal division — -2/3 at decimal scale 6
+    # (-0.666667) vs the double -0.666... is a visible value divergence.
+    # The dividend cast forces the double path BEFORE dividing (an outer
+    # cast would keep decimal's truncated scale).  '%' keeps its operand
+    # types in both engines.  (Interval division is a documented residual
+    # — the cast rejects it.)  The dividend is the whole left-hand
+    # multiplicative chain: ``a * b / c`` is ``try_divide(a * b, c)``.
+    return f"try_divide(CAST({site.operands[0]} AS DOUBLE), {site.operands[1]})"
+
+
+def _modulo(site) -> str:
+    return f"try_mod({site.operands[0]}, {site.operands[1]})"
+
+
+def _int_divide_chain(site) -> str:
+    """The ``*``/``div`` chain around a ``//``-emitted ``div``: DuckDB
+    truncates ONLY while EVERY leaf of the chain so far is integral (7//2
+    → 3 but 7.5//2 → 3.75 and 1//1//2 → 0, probed).  Fold left with a
+    per-div-stage CASE whose condition is prefix-leaf integrality — one
+    replacement per chain, so intermediate double typing can't poison
+    later stages."""
+    texts = site.operands
+    x = texts[0]
+    for k, (kind, leaf) in enumerate(zip(site.ops, texts[1:]), 1):
+        if kind == "*":
+            x = f"({x} * {leaf})"
+            continue
+        cond = " AND ".join(_leaf_int_cond(t) for t in texts[: k + 1])
+        x = (
+            f"(CASE WHEN {cond} "
+            f"THEN CAST(CAST(try_divide({x}, {leaf}) AS BIGINT) AS DOUBLE) "
+            f"ELSE try_divide(CAST({x} AS DOUBLE), {leaf}) END)"
         )
-        if m is None:
-            return sql
-        ls = _full_left_operand(sql, mask, m.start())
-        rend = _full_right_operand(sql, m.end())
-        if ls is None or rend is None:
-            # can't capture safely — leave this occurrence untouched
-            skipped.add((m.start(), m.group(0)))
-            continue
-        op = m.group(0).lower()
-        if op in ("/", "%"):
-            # absorb the left multiplicative chain as TEXT: '*' and 'div'
-            # bind at the same level, so (a * b) / c captures 'a * b'
-            while True:
-                j = ls - 1
-                while j >= 0 and sql[j].isspace():
-                    j -= 1
-                if j >= 0 and sql[j] == "*" and mask[j]:
-                    prev = _full_left_operand(sql, mask, j)
-                    if prev is None:
-                        break
-                    ls = prev
-                elif (
-                    j >= 2
-                    and mask[j]
-                    and sql[j - 2 : j + 1].lower() == "div"
-                    and (j - 3 < 0 or not (sql[j - 3].isalnum() or sql[j - 3] in "_$"))
-                ):
-                    prev = _full_left_operand(sql, mask, j - 2)
-                    if prev is None:
-                        break
-                    ls = prev
-                else:
-                    break
-            left = sql[ls : m.start()].strip()
-            right = sql[m.end() : rend + 1].strip()
-            if op == "/":
-                # DuckDB '/' ALWAYS divides as DOUBLE (probed:
-                # typeof(1.5/2.5) = DOUBLE) where Spark keeps decimal
-                # division — -2/3 at decimal scale 6 (-0.666667) vs the
-                # double -0.666... is a visible value divergence.  The
-                # dividend cast forces the double path BEFORE dividing
-                # (an outer cast would keep decimal's truncated scale).
-                # '%' keeps its operand types in both engines.  (Interval
-                # division is a documented residual — the cast rejects it.)
-                rep = f"try_divide(CAST({left} AS DOUBLE), {right})"
-            else:
-                rep = f"try_mod({left}, {right})"
-            sql = sql[:ls] + rep + sql[rend + 1 :]
-            continue
-        # '//'-emitted div: DuckDB truncates ONLY while EVERY leaf of the
-        # multiplicative chain so far is integral (7//2 → 3 but 7.5//2 →
-        # 3.75 and 1//1//2 → 0, probed).  Collect the whole */div chain
-        # around this div as LEAVES, then fold left with a per-div-stage
-        # CASE whose condition is prefix-leaf integrality — one atomic
-        # replacement per chain, so intermediate double typing can't
-        # poison later stages.
-        leaves = [(sql[ls : m.start()].strip(), None)]
-        leaves.append((sql[m.end() : rend + 1].strip(), "div"))
-        chain_start, chain_end = ls, rend
-        # absorb leftward
-        while True:
-            j = chain_start - 1
-            while j >= 0 and sql[j].isspace():
-                j -= 1
-            if j >= 0 and sql[j] == "*" and mask[j]:
-                prev = _full_left_operand(sql, mask, j)
-                if prev is None:
-                    break
-                leaves.insert(1, (leaves[0][0], "*"))
-                leaves[0] = (sql[prev:j].strip(), None)
-                chain_start = prev
-            elif (
-                j >= 2
-                and mask[j]
-                and sql[j - 2 : j + 1].lower() == "div"
-                and (j - 3 < 0 or not (sql[j - 3].isalnum() or sql[j - 3] in "_$"))
-            ):
-                prev = _full_left_operand(sql, mask, j - 2)
-                if prev is None:
-                    break
-                leaves.insert(1, (leaves[0][0], "div"))
-                leaves[0] = (sql[prev : j - 2].strip(), None)
-                chain_start = prev
-            else:
-                break
-        # absorb rightward
-        n = len(sql)
-        while True:
-            j = chain_end + 1
-            while j < n and sql[j].isspace():
-                j += 1
-            nxt = None
-            if j < n and sql[j] == "*" and mask[j]:
-                nxt = ("*", j + 1)
-            else:
-                dm = re.match(r"div(?![\w$])", sql[j:], re.IGNORECASE)
-                if dm and all(mask[i] for i in range(j, j + 3)):
-                    nxt = ("div", j + 3)
-            if nxt is None:
-                break
-            r2 = _full_right_operand(sql, nxt[1])
-            if r2 is None:
-                break
-            leaves.append((sql[nxt[1] : r2 + 1].strip(), nxt[0]))
-            chain_end = r2
-        texts = [t for t, _ in leaves]
-        x = texts[0]
-        for k in range(1, len(leaves)):
-            leaf, kind = leaves[k]
-            if kind == "*":
-                x = f"({x} * {leaf})"
-            else:
-                cond = " AND ".join(
-                    _leaf_int_cond(t) for t in texts[: k + 1]
-                )
-                x = (
-                    f"(CASE WHEN {cond} "
-                    f"THEN CAST(CAST(try_divide({x}, {leaf}) AS BIGINT) AS DOUBLE) "
-                    f"ELSE try_divide(CAST({x} AS DOUBLE), {leaf}) END)"
-                )
-        sql = sql[:chain_start] + x + sql[chain_end + 1 :]
-    return sql
+    return x
+
+
+_DIVMOD = {
+    "/": _divide,
+    "%": _modulo,
+    "div": _Chain(frozenset({"*", "div"}), _int_divide_chain),
+}
 
 
 _WINDOW_FILTER = re.compile(r"\bFILTER\s*\(\s*WHERE\b", re.IGNORECASE)
+_FILTER_TAIL = re.compile(r"\s*FILTER\s*\(\s*WHERE\b", re.IGNORECASE)
+_OVER_TAIL = re.compile(r"\s*(OVER\b)\s*", re.IGNORECASE)
+
+
+def _call_head(args) -> str:
+    """``name(`` as the call spells it."""
+    return args.sql[args.start : args.sql.index("(", args.start) + 1]
+
+
+def _window_filter(args):
+    # the aggregate's FILTER (WHERE p) clause, and the OVER after it
+    m = _FILTER_TAIL.match(args.sql, args.close + 1)
+    if m is None:
+        return None
+    close = _match(args.sql, args.sql.index("(", m.start()))
+    over = close and _OVER_TAIL.match(args.sql, close + 1)
+    if not over:
+        return None
+    pred = args.sql[m.end() : close].strip()
+    inner = ",".join(args).strip()
+    if inner == "*":
+        if args.name.lower() != "count":
+            return None
+        new_args = f"CASE WHEN {pred} THEN 1 END"
+    else:
+        dm = re.match(r"\s*DISTINCT\b", inner, re.IGNORECASE)
+        rest = inner[dm.end() :].strip() if dm else inner
+        if not rest or len(args) > 1:
+            return None  # multi-arg aggregates don't rewrite soundly
+        new_args = f"CASE WHEN {pred} THEN {rest} END"
+        if dm:
+            new_args = "DISTINCT " + new_args
+    return _call_head(args) + new_args + ") ", over.start(1)
+
+
+class _EveryName(dict):
+    """A call table whose one handler takes a call of any name."""
+
+    def __init__(self, fn):
+        super().__init__()
+        self.fn = fn
+
+    def __contains__(self, name) -> bool:
+        return True
+
+    def __getitem__(self, name):
+        return self.fn
+
+
+_WINDOW_FILTERS = _EveryName(_window_filter)
 
 
 def _rewrite_window_filter(sql: str) -> str:
@@ -1749,127 +1176,53 @@ def _rewrite_window_filter(sql: str) -> str:
     skips NULLs.  A ``DISTINCT`` argument keeps its keyword ahead of the
     CASE so the count-distinct window pass below can pick it up.
     GROUP-BY FILTER (no trailing OVER) is Spark-native and untouched."""
-    if not _WINDOW_FILTER.search(sql):
-        return sql
-    for _ in range(50):
-        mask = _code_mask(sql)
-        changed = False
-        for m in reversed(list(_WINDOW_FILTER.finditer(sql))):
-            if not all(mask[m.start() : m.end()]):
-                continue
-            op = sql.index("(", m.start())
-            close = _match(sql, op)
-            if close is None:
-                continue
-            j = close + 1
-            while j < len(sql) and (not mask[j] or sql[j].isspace()):
-                j += 1
-            if not re.match(r"OVER\b", sql[j:], re.IGNORECASE):
-                continue
-            pred = re.sub(
-                r"^\s*WHERE\b", "", sql[op + 1 : close], flags=re.IGNORECASE
-            ).strip()
-            # the aggregate call directly before FILTER
-            k = m.start() - 1
-            while k >= 0 and (not mask[k] or sql[k].isspace()):
-                k -= 1
-            if k < 0 or sql[k] != ")":
-                continue
-            open_i = _match(sql, k)
-            if open_i is None:
-                continue
-            nm = re.search(r"([A-Za-z_][A-Za-z_0-9]*)\s*$", sql[:open_i])
-            if not nm:
-                continue
-            args = sql[open_i + 1 : k].strip()
-            if args == "*":
-                if nm.group(1).lower() != "count":
-                    continue
-                new_args = f"CASE WHEN {pred} THEN 1 END"
-            else:
-                dm = re.match(r"\s*DISTINCT\b", args, re.IGNORECASE)
-                rest = args[dm.end() :].strip() if dm else args
-                if not rest or len(_split_top(rest)) > 1:
-                    continue  # multi-arg aggregates don't rewrite soundly
-                new_args = f"CASE WHEN {pred} THEN {rest} END"
-                if dm:
-                    new_args = "DISTINCT " + new_args
-            sql = sql[: open_i + 1] + new_args + ") " + sql[j:]
-            changed = True
-            break
-        if not changed:
-            break
-    return sql
+    return _rewrite_calls(sql, _WINDOW_FILTERS) if _WINDOW_FILTER.search(sql) else sql
 
 
 _DISTINCT_WIN = re.compile(
     r"\b(count|min|max)\s*\(\s*DISTINCT\b", re.IGNORECASE
 )
+_WINDOW_NAME = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
+
+
+def _distinct_window(args):
+    dm = re.match(r"\s*DISTINCT\b", args[0], re.IGNORECASE)
+    over = _OVER_TAIL.match(args.sql, args.close + 1)
+    if dm is None or over is None or len(args) > 1:
+        return None
+    expr = args[0][dm.end() :].strip()
+    if not expr:
+        return None
+    if args.name.lower() in ("min", "max"):  # DISTINCT is a no-op for min/max
+        return _call_head(args) + expr + ")"
+    # the end of the OVER target: (spec) or a window name
+    t = over.end()
+    if args.sql.startswith("(", t):
+        over_end = _match(args.sql, t)
+        if over_end is None:
+            return None
+        over_end += 1
+    else:
+        wm = _WINDOW_NAME.match(args.sql, t)
+        if not wm:
+            return None
+        over_end = wm.end()
+    over_txt = args.sql[over.start(1) : over_end]
+    return f"coalesce(size(collect_set({expr}) {over_txt}), 0)", over_end
+
+
+_DISTINCT_WINDOWS = dict.fromkeys(("count", "min", "max"), _distinct_window)
 
 
 def _rewrite_count_distinct_window(sql: str) -> str:
-    """DuckDB allows DISTINCT aggregates as window functions; Spark
-    raises DISTINCT_WINDOW_FUNCTION_UNSUPPORTED (probed).  Equivalences
-    that hold per-frame: ``count(DISTINCT x) OVER w`` →
+    """DuckDB allows DISTINCT aggregates as window functions; Spark raises
+    DISTINCT_WINDOW_FUNCTION_UNSUPPORTED (probed).  Equivalences that
+    hold per-frame: ``count(DISTINCT x) OVER w`` →
     ``coalesce(size(collect_set(x) OVER w), 0)`` (both skip NULLs; the
     coalesce covers an empty frame where DuckDB counts 0), and
     ``min/max(DISTINCT x)`` ≡ ``min/max(x)``.  ``sum/avg(DISTINCT)``
     have no lossless window rewrite and keep Spark's error."""
-    if not _DISTINCT_WIN.search(sql):
-        return sql
-    for _ in range(50):
-        mask = _code_mask(sql)
-        changed = False
-        for m in reversed(list(_DISTINCT_WIN.finditer(sql))):
-            if not all(mask[m.start() : m.end()]):
-                continue
-            fn = m.group(1).lower()
-            op = sql.index("(", m.end(1))
-            close = _match(sql, op)
-            if close is None:
-                continue
-            j = close + 1
-            while j < len(sql) and (not mask[j] or sql[j].isspace()):
-                j += 1
-            if not re.match(r"OVER\b", sql[j:], re.IGNORECASE):
-                continue
-            expr = re.sub(
-                r"^\s*DISTINCT\b", "", sql[op + 1 : close], flags=re.IGNORECASE
-            ).strip()
-            if not expr or len(_split_top(expr)) > 1:
-                continue
-            if fn in ("min", "max"):  # DISTINCT is a no-op for min/max
-                sql = sql[: op + 1] + expr + sql[close:]
-                changed = True
-                break
-            # locate the end of the OVER target: (spec) or a window name
-            t = j + 4
-            while t < len(sql) and (not mask[t] or sql[t].isspace()):
-                t += 1
-            if t < len(sql) and sql[t] == "(":
-                oc = _match(sql, t)
-                if oc is None:
-                    continue
-                over_end = oc + 1
-            else:
-                wm = re.match(r"[A-Za-z_][A-Za-z_0-9]*", sql[t:])
-                if not wm:
-                    continue
-                over_end = t + wm.end()
-            over_txt = sql[j:over_end]
-            sql = (
-                sql[: m.start()]
-                + f"coalesce(size(collect_set({expr}) {over_txt}), 0)"
-                + sql[over_end:]
-            )
-            changed = True
-            break
-        if not changed:
-            break
-    return sql
-
-
-_GLOB_OP = re.compile(r"\b(NOT\s+)?GLOB\b", re.IGNORECASE)
+    return _rewrite_calls(sql, _DISTINCT_WINDOWS) if _DISTINCT_WIN.search(sql) else sql
 
 
 def _glob_to_regex(pat: str) -> str:
@@ -1908,60 +1261,23 @@ def _glob_to_regex(pat: str) -> str:
     return "".join(out)
 
 
-def _rewrite_glob(sql: str) -> str:
-    """``x [NOT] GLOB 'pat'`` → anchored case-sensitive RLIKE (DuckDB
-    GLOB is a full-match filename-style pattern: ``*`` any run, ``?``
-    one char, ``[...]``/``[!...]`` classes).  Only literal patterns are
-    rewritten; a dynamic pattern surfaces Spark's parse error rather
-    than risking wrong translation."""
-    while True:
-        mask = _code_mask(sql)
-        m = next(
-            (
-                c
-                for c in _GLOB_OP.finditer(sql)
-                if all(mask[i] for i in range(c.start(), c.end()))
-            ),
-            None,
-        )
-        if m is None:
-            return sql
-        ls = _left_operand_start(sql, mask, m.start())
-        if ls is None:
-            return sql
-        lit = re.match(r"\s*'((?:[^']|'')*)'", sql[m.end() :])
-        if lit is None:
-            return sql
-        left = sql[ls : m.start()].strip()
-        # the pattern was backslash-doubled by the literal pass; undo for
-        # translation, the translator re-escapes for Spark's unescape
-        pat = lit.group(1).replace("''", "'").replace("\\\\", "\\")
-        rep = f"{left} RLIKE '^(?:{_glob_to_regex(pat)})$'"
-        if m.group(1):
-            rep = f"NOT ({rep})"
-        sql = sql[:ls] + "(" + rep + ")" + sql[m.end() + lit.end() :]
-    return sql
+_OPERATOR_PACK = {
+    "->": _json_arrow,
+    "->>": _json_arrow,
+    "^@": _starts_with,
+    "^": _power,
+    "**": _power,
+    "similar to": _regex_match,
+    "not similar to": _regex_match,
+    "~": _regex_match,
+    "!~": _regex_match,
+    "glob": _glob,
+    "not glob": _glob,
+}
+_PACK_HINT = re.compile(r"->|\^|\*\*|~|similar|glob", re.IGNORECASE)
 
 
-def _rewrite_ops_pack(sql: str) -> str:
-    return _rewrite_order_by_nulls(
-        _rewrite_series_tvf(
-        _rewrite_glob(
-        _rewrite_tilde_regex(
-        _rewrite_similar_to(
-            _rewrite_power(
-                _rewrite_caret_at(
-                    _rewrite_intdiv(
-                        _rewrite_json_arrows(
-                            _rewrite_bare_varchar(sql)
-                        )
-                    )
-                )
-            )
-        )
-        )
-        )
-        )
-    )
-
-
+def _rewrite_operator_pack(sql: str) -> str:
+    """The JSON arrows, ``^@``, ``^``/``**``, SIMILAR TO, ``~``/``!~`` and
+    GLOB in one operator walk."""
+    return _rewrite_operators(sql, _OPERATOR_PACK) if _in_code(_PACK_HINT, sql) else sql

@@ -2394,3 +2394,174 @@ def test_macros_that_call_macros_match_duckdb(engine):
     ):
         _assert_duckdb_rows(engine, con, q)
     con.close()
+
+
+# ── the operator walker (dialect_core._rewrite_operators) ───────────────
+
+
+def test_operands_with_window_filter_and_case_tails_match_duckdb(engine):
+    """Operands the operator passes could not read: a window or FILTER
+    tail on the left, a CASE or a subquery on either side.  Each raised a
+    parse error (``sum(x) OVER power((), 2)``; the ``||`` chain took the
+    bare word ``CASE``)."""
+    import duckdb
+
+    con = duckdb.connect()
+    t = " FROM (VALUES (1), (2)) t(x)"
+    for q in (
+        "SELECT sum(x) OVER () ^ 2 AS v" + t,
+        "SELECT count(*) FILTER (WHERE x > 1) ^ 2 AS v" + t,
+        "SELECT string_agg(x::VARCHAR, ',') OVER () SIMILAR TO '1,2' AS v" + t,
+        "SELECT 7 / CASE WHEN true THEN 2 END AS a, 7 % CASE WHEN true THEN 2 END AS b, "
+        "7 // CASE WHEN true THEN 2 END AS c",
+        "SELECT (SELECT 7) // 2 AS v",
+        """SELECT CASE WHEN true THEN '{"a":1}' END ->> 'a' AS v""",
+        "SELECT CASE WHEN true THEN 'ab' END ^@ 'a' AS v",
+        "SELECT [1] || [2] || CASE WHEN true THEN NULL::INT[] END AS v",
+    ):
+        _assert_duckdb_rows(engine, con, q)
+    con.close()
+
+
+def test_operator_precedence_silent_answers_match_duckdb(engine):
+    """A CASE operand was left outside the rewrite: ``^`` stayed Spark's
+    XOR (0 where DuckDB gives 4.0) and ``//`` truncated 7.5 // 2 to 3
+    (DuckDB 3.75).  A ``||`` chain before GLOB, ``~`` or ``^@`` is their
+    left operand in DuckDB; only SIMILAR TO took it, so each returned
+    the string 'abfalse'."""
+    import duckdb
+
+    con = duckdb.connect()
+    for q in (
+        "SELECT CASE WHEN true THEN 2 END ^ 2 AS v",
+        "SELECT CASE WHEN true THEN 7.5 END // 2 AS v",
+        "SELECT 'ab' || 'c' GLOB 'ab*' AS a, 'ab' || 'c' ~ 'abc' AS b, "
+        "'ab' || 'c' ^@ 'ab' AS c",
+    ):
+        _assert_duckdb_rows(engine, con, q)
+    con.close()
+
+
+def test_division_of_a_case_by_zero_is_null(engine):
+    """DuckDB's NULL on a zero divisor: a CASE dividend was left to
+    Spark's ANSI division, which raised DIVIDE_BY_ZERO and
+    REMAINDER_BY_ZERO."""
+    import duckdb
+
+    con = duckdb.connect()
+    case = "CASE WHEN true THEN 7 END"
+    _assert_duckdb_rows(
+        engine,
+        con,
+        f"SELECT {case} / 0 AS a, {case} % 0 AS b, {case} // 0 AS c, 2 * {case} / 0 AS d",
+    )
+    con.close()
+
+
+def test_no_operator_site_is_left_at_a_cap(engine):
+    """Every occurrence in one statement is rewritten: the 101st
+    ``x.upper()``, the 401st ``x::INT`` and ``CAST(x AS INT)`` (2 where
+    DuckDB rounds 2.5 to 3), the 501st ``x / 0``, and the 51st windowed
+    FILTER and DISTINCT aggregate each stopped at a loop's cap."""
+    import duckdb
+
+    con = duckdb.connect()
+    cols = lambda n, expr: ", ".join(f"{expr} AS c{i}" for i in range(n))  # noqa: E731
+    for q in (
+        f"SELECT {cols(101, 'x.upper()')} FROM (VALUES ('a')) t(x)",
+        f"SELECT {cols(401, 'x::INT')} FROM (VALUES (2.5)) t(x)",
+        f"SELECT {cols(401, 'CAST(x AS INT)')} FROM (VALUES (2.5)) t(x)",
+        f"SELECT {cols(501, 'x / 0')} FROM (VALUES (1)) t(x)",
+        f"SELECT {cols(51, 'count(*) FILTER (WHERE x > 1) OVER ()')} FROM (VALUES (1), (2)) t(x)",
+        f"SELECT {cols(51, 'count(DISTINCT x) OVER ()')} FROM (VALUES (1), (2), (2)) t(x)",
+    ):
+        _assert_duckdb_rows(engine, con, q)
+    con.close()
+
+
+_NUMERIC_OPS = ("^", "**", "*", "/", "%", "//", "+", "-")
+
+
+def test_numeric_operator_precedence_matches_duckdb(engine):
+    """The 64 expressions ``7 op1 3 op2 2``: the precedence table's
+    arithmetic levels, in one statement."""
+    import duckdb
+
+    con = duckdb.connect()
+    cols = [
+        f"7 {a} 3 {b} 2 AS c{i}"
+        for i, (a, b) in enumerate((a, b) for a in _NUMERIC_OPS for b in _NUMERIC_OPS)
+    ]
+    assert len(cols) == 64
+    _assert_duckdb_rows(engine, con, "SELECT " + ", ".join(cols))
+    con.close()
+
+
+# One left operand of each shape, and the relation it is read from.
+_OPERAND_SHAPES = {
+    "literal": ("7", ""),
+    "column": ("x", " FROM (VALUES (7)) t(x)"),
+    "call": ("abs(-7)", ""),
+    "group": ("(3 + 4)", ""),
+    "subquery": ("(SELECT 7)", ""),
+    "case": ("CASE WHEN x > 0 THEN 7 END", " FROM (VALUES (7)) t(x)"),
+    "window": ("sum(x) OVER ()", " FROM (VALUES (3), (4)) t(x)"),
+    "filter": ("count(*) FILTER (WHERE x > 0)", " FROM (VALUES (7), (-1)) t(x)"),
+    "cast": ("x::BIGINT", " FROM (VALUES (7)) t(x)"),
+    "subscript": ("[7, 8][1]", ""),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_OPERAND_SHAPES))
+def test_operand_shapes_match_duckdb(engine, shape):
+    """Each operand shape beside every arithmetic operator, on the left
+    and on the right."""
+    import duckdb
+
+    con = duckdb.connect()
+    operand, rel = _OPERAND_SHAPES[shape]
+    cols = [f"{operand} {op} 2 AS l{i}, 100 {op} {operand} AS r{i}" for i, op in enumerate(_NUMERIC_OPS)]
+    _assert_duckdb_rows(engine, con, "SELECT " + ", ".join(cols) + rel)
+    con.close()
+
+
+def test_string_operator_pairs_match_duckdb(engine):
+    """``|| ~ ^@ ->>`` share one level and bind tighter than GLOB and
+    SIMILAR TO."""
+    import duckdb
+
+    con = duckdb.connect()
+    j = """'{"a": "b"}'"""
+    exprs = [
+        "'ab' || 'c' GLOB 'ab*'",
+        "'ab' || 'c' SIMILAR TO 'ab.'",
+        "'ab' || 'c' ~ 'abc'",
+        "'ab' || 'c' ^@ 'ab'",
+        "'ab' || 'c' || 'd' ~ 'abcd'",
+        "'abc' SIMILAR TO 'a' || '.c'",
+        f"{j} ->> 'a' || 'y'",
+        f"{j} ->> 'a' GLOB 'b'",
+        f"{j} ->> 'a' SIMILAR TO 'b'",
+        f"{j} ->> 'a' ~ 'b'",
+        f"{j} ->> 'a' ^@ 'b'",
+        f"""'{{"a": {{"c": "d"}}}}' -> 'a' ->> 'c'""",
+    ]
+    cols = ", ".join(f"{e} AS c{i}" for i, e in enumerate(exprs))
+    _assert_duckdb_rows(engine, con, "SELECT " + cols)
+    con.close()
+
+
+def test_string_slice_of_a_json_arrow_matches_duckdb(engine):
+    """``->>`` always yields VARCHAR, so its subscript takes the string
+    reading in the primary text, with no retried analysis.  A literal
+    base raised UNEXPECTED_INPUT_TYPE on ``slice(get_json_object(..))``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for q in (
+        """SELECT ('{"a": "hello"}' ->> 'a')[2:3] AS v""",
+        """SELECT (j ->> 'a')[2:3] AS v FROM (VALUES ('{"a": "hello"}')) t(j)""",
+    ):
+        assert "substr(" in rewrite_duckdb_dialect(q), q
+        _assert_duckdb_rows(engine, con, q)
+    con.close()
